@@ -44,6 +44,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from end_to_end_etl_pipeline_spark.operators.scd import (
     prepare_scd_source,
@@ -52,6 +53,13 @@ from end_to_end_etl_pipeline_spark.operators.scd import (
 
 BUCKET_COL = "__bucket"
 _MANIFEST_FMT = "manifest-{:08d}.json"
+
+
+def _recorded_schema(manifest: dict) -> StructType | None:
+    """The version's recorded ``schema`` (see :class:`ManifestCatalog`),
+    or None when its readers must infer it from footers."""
+    s = manifest.get("schema")
+    return None if s is None else StructType.fromJson(json.loads(s))
 
 
 class HadoopFS:
@@ -184,7 +192,27 @@ class HadoopFS:
 class ManifestCatalog:
     """``zone.table`` → ``<root>/zone/table`` with versioned-manifest
     commits. Drop-in for ``ParquetCatalog`` (exists/read/replace_atomic/
-    append/drop) plus bucket-aware reads for pruned SCD2."""
+    append/drop) plus bucket-aware reads for pruned SCD2.
+
+    Manifest ``schema`` field (the Delta ``metaData.schemaString``
+    move): ``StructType.json()`` of the rows every listed dir holds.
+    ``replace_atomic`` writes it for an unpartitioned commit, and
+    ``optimize`` for an unbucketed compaction, both from the frame
+    they write. ``delete_where`` / ``delete_range`` keep it (their
+    rewrites are a subset of the same rows, read under it), and
+    ``shallow_clone`` copies it with the dirs. ``read`` of a version
+    that carries it, with no bucket selection, passes it to
+    ``spark.read.schema`` and so launches no Spark job; every other
+    version falls back to footer inference (mergeSchema over >1 dir).
+    Versions without it:
+
+    * manifests from older lakes;
+    * ``append`` — a wider batch evolves the schema, and the merged
+      footers are what NULL-fill the older dirs;
+    * ``update_where`` — a set expression may change a column's type;
+    * partitioned commits — Spark infers partition-column types from
+      the paths, which a recorded frame schema does not pin;
+    * bucketed tables — bucket subdir reads drop the bucket column."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -364,35 +392,39 @@ class ManifestCatalog:
                 if ds:
                     return self.spark.read.parquet(*ds).filter(F.lit(False))
             raise FileNotFoundError(f"table {name}: no data dirs")
+        schema = _recorded_schema(manifest) if buckets is None else None
+        return self._read_dirs(dirs, schema)
+
+    def _read_dirs(
+        self, dirs: Sequence[str], schema: StructType | None = None
+    ) -> DataFrame:
+        """Scan an explicit dir list. A recorded ``schema`` skips the
+        footer job; without one, footers are inferred, merged when >1
+        dir: append-path schema evolution (K9) — dirs committed before
+        a column existed read as NULL. The reference needs ALTER TABLE
+        ADD COLUMN for this (b2s_yfinance.py:46-61); merged footers
+        make it automatic. Single-dir reads skip the footer-merge
+        job."""
         reader = self.spark.read
-        if len(dirs) > 1:
-            # append-path schema evolution (K9): dirs committed before a
-            # column existed read as NULL — the reference needs ALTER
-            # TABLE ADD COLUMN for this (b2s_yfinance.py:46-61); merged
-            # footers make it automatic. Single-dir reads skip the
-            # footer-merge job.
+        if schema is not None:
+            reader = reader.schema(schema)
+        elif len(dirs) > 1:
             reader = reader.option("mergeSchema", "true")
         return reader.parquet(*dirs)
 
-    def _read_dirs(self, dirs: Sequence[str]) -> DataFrame:
-        """Scan an explicit dir list with the catalog's footer-merge
-        convention (mergeSchema only when >1 dir — single-dir reads
-        skip the footer-merge job)."""
-        reader = self.spark.read
-        if len(dirs) > 1:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*dirs)
-
-    def _dir_stats(self, data_dir: str, stats_cols: Sequence[str]) -> dict:
+    def _dir_stats(
+        self, data_dir: str, stats_cols: Sequence[str], schema: StructType
+    ) -> dict:
         """Per-data-dir min/max column stats for manifest-level data
         skipping (the file-stats half of Iceberg/Delta pruning,
         hoisted to dir granularity to match this catalog's commit
-        unit). One narrow scan of just-written files; JSON-native
+        unit). One narrow scan of just-written files, read under the
+        writing frame's ``schema`` (no footer job); JSON-native
         column types only (numbers, strings) — cast dates upstream."""
         aggs = []
         for c in stats_cols:
             aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
-        row = self.spark.read.parquet(data_dir).agg(*aggs).first()
+        row = self.spark.read.schema(schema).parquet(data_dir).agg(*aggs).first()
         return {c: [row[f"__min_{c}"], row[f"__max_{c}"]] for c in stats_cols}
 
     #: per-dir bloom parameters — fixed so every dir's bitmap and the
@@ -416,14 +448,17 @@ class ManifestCatalog:
     #: split exists to cut. 512 words = 32 KiB bitmap ≈ 3k keys.
     BLOOM_SIDECAR_MIN_WORDS = 512
 
-    def _dir_blooms(self, data_dir: str, bloom_cols: Sequence[str]) -> dict:
+    def _dir_blooms(
+        self, data_dir: str, bloom_cols: Sequence[str], schema: StructType
+    ) -> dict:
         """Per-data-dir Bloom bitmaps for point-lookup data skipping —
         the membership half of Iceberg/Delta file pruning. min/max
         stats can't prune equality probes on hash-like high-
         cardinality keys (every dir's range spans everything); a bloom
         per dir answers 'could this key be here?' with no false
-        negatives. One narrow scan of the just-written dir via the
-        shared ``operators/sketches`` builder.
+        negatives. One narrow scan of the just-written dir, read under
+        the writing frame's ``schema``, via the shared
+        ``operators/sketches.bloom_build``.
 
         SIZED TO THE DIR (r06): a fixed bitmap saturates as appends
         grow — at 10x data a 4096-bit bloom over ~190k keys/dir
@@ -458,7 +493,7 @@ class ManifestCatalog:
         dirs' sidecars, never the whole table's."""
         from end_to_end_etl_pipeline_spark.operators.sketches import bloom_build
 
-        df = self.spark.read.parquet(data_dir)
+        df = self.spark.read.schema(schema).parquet(data_dir)
         out: dict = {}
         n = df.count() if bloom_cols else 0  # footer-only job
         num_bits = self.BLOOM_BITS
@@ -802,12 +837,17 @@ class ManifestCatalog:
     def _column_type(self, name: str, col: str, manifest: dict):
         """Datatype of one column, without the full-table mergeSchema
         footer job ``read(name).schema`` pays (O(dirs) — measured
-        ~2 s at 240 dirs, ON EVERY point probe): read the NEWEST
-        dir's footer only (new columns land in new dirs, so it has
-        the evolved schema), fall back to the merged view if the
-        column is absent there. Cached per (table, col) — a committed
-        column's TYPE can never change (parquet schema-merge would
-        reject the dir), so the cache can't go stale."""
+        ~2 s at 240 dirs, ON EVERY point probe): the version's
+        recorded schema when it carries one (no job); else read the
+        NEWEST dir's footer only (new columns land in new dirs, so it
+        has the evolved schema), fall back to the merged view if the
+        column is absent there. Footer types are cached per (table,
+        col) — a committed column's TYPE can never change by append
+        (parquet schema-merge would reject the dir); replace_atomic
+        and drop, which can retype it, invalidate."""
+        schema = _recorded_schema(manifest)
+        if schema is not None:
+            return schema[col].dataType
         key = (name, col)
         t = self._col_types.get(key)
         if t is not None:
@@ -930,10 +970,7 @@ class ManifestCatalog:
         dirs = self.bloom_pruned_dirs(name, col, value)
         if not dirs:
             return self.read(name).filter(F.lit(False))
-        reader = self.spark.read
-        if len(dirs) > 1:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*dirs).filter(F.col(col) == F.lit(value))
+        return self._read_dirs(dirs).filter(F.col(col) == F.lit(value))
 
     def pruned_dirs(
         self, name: str, col: str, lo, hi, version: int | None = None
@@ -984,10 +1021,7 @@ class ManifestCatalog:
         dirs = self.pruned_dirs(name, col, lo, hi)
         if not dirs:  # every dir skipped: empty frame, full schema
             return self.read(name).filter(F.lit(False))
-        reader = self.spark.read
-        if len(dirs) > 1:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*dirs).filter(F.col(col).between(lo, hi))
+        return self._read_dirs(dirs).filter(F.col(col).between(lo, hi))
 
     def diff_versions(
         self,
@@ -1088,10 +1122,16 @@ class ManifestCatalog:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_dir)
         manifest = {"dirs": [data_dir], "bucket_dirs": None, "n_buckets": None}
+        if not partition_by:
+            manifest["schema"] = df.schema.json()
         if stats_cols:
-            manifest["stats"] = {data_dir: self._dir_stats(data_dir, stats_cols)}
+            manifest["stats"] = {
+                data_dir: self._dir_stats(data_dir, stats_cols, df.schema)
+            }
         if bloom_cols:
-            manifest["blooms"] = {data_dir: self._dir_blooms(data_dir, bloom_cols)}
+            manifest["blooms"] = {
+                data_dir: self._dir_blooms(data_dir, bloom_cols, df.schema)
+            }
         self._commit(name, manifest)
         # A wholesale rewrite can legally land a different type for an
         # existing column name (no schema-merge guard spans versions) —
@@ -1113,8 +1153,12 @@ class ManifestCatalog:
         immutable dirs mean they never go stale."""
         data_dir = self._new_data_dir(name)
         df.write.mode("overwrite").parquet(data_dir)
-        new_stats = self._dir_stats(data_dir, stats_cols) if stats_cols else None
-        new_blooms = self._dir_blooms(data_dir, bloom_cols) if bloom_cols else None
+        new_stats = (
+            self._dir_stats(data_dir, stats_cols, df.schema) if stats_cols else None
+        )
+        new_blooms = (
+            self._dir_blooms(data_dir, bloom_cols, df.schema) if bloom_cols else None
+        )
         # CAS loop: the manifest content derives from the latest
         # version, so rebase + retry on a concurrent commit instead of
         # silently dropping its dirs (lost update)
@@ -1240,7 +1284,8 @@ class ManifestCatalog:
             extras = {
                 k: v
                 for k, v in manifest.items()
-                if k not in ("version", "dirs", "bucket_dirs", "stats", "blooms")
+                if k not in ("version", "dirs", "bucket_dirs", "stats", "blooms",
+                             "schema")
             }
             if self._commit_if(
                 name,
@@ -1317,7 +1362,9 @@ class ManifestCatalog:
             if not affected:
                 return 0
             keep = [d for d in all_dirs if d not in affected_set]
-            df = self._read_dirs(affected)
+            # the rewrite holds a subset of the same rows: read (and so
+            # write) it under the recorded schema, which the commit keeps
+            df = self._read_dirs(affected, _recorded_schema(manifest))
             before = df.count()
             # NULL keys survive: DELETE WHERE col IN (...) is
             # three-valued — NULL IN (...) is NULL, not TRUE, so a
@@ -1349,9 +1396,13 @@ class ManifestCatalog:
                 kept_rows.write.mode("overwrite").parquet(data_dir)
                 new_dirs.append(data_dir)
                 if old_stat_cols:
-                    stats[data_dir] = self._dir_stats(data_dir, old_stat_cols)
+                    stats[data_dir] = self._dir_stats(
+                        data_dir, old_stat_cols, kept_rows.schema
+                    )
                 if old_bloom_cols:
-                    blooms[data_dir] = self._dir_blooms(data_dir, old_bloom_cols)
+                    blooms[data_dir] = self._dir_blooms(
+                        data_dir, old_bloom_cols, kept_rows.schema
+                    )
             extras = {
                 k: v
                 for k, v in manifest.items()
@@ -1450,7 +1501,7 @@ class ManifestCatalog:
             if not affected:
                 return 0
             keep = [d for d in all_dirs if d not in affected_set]
-            df = self._read_dirs(affected)
+            df = self._read_dirs(affected, _recorded_schema(manifest))
             match = F.col(col).isin(values)
             updated = df.filter(match).count()
             if updated == 0:
@@ -1480,14 +1531,17 @@ class ManifestCatalog:
             out.write.mode("overwrite").parquet(data_dir)
             new_dirs = keep + [data_dir]
             if old_stat_cols:
-                stats[data_dir] = self._dir_stats(data_dir, old_stat_cols)
+                stats[data_dir] = self._dir_stats(data_dir, old_stat_cols, out.schema)
             if old_bloom_cols:
-                blooms[data_dir] = self._dir_blooms(data_dir, old_bloom_cols)
+                blooms[data_dir] = self._dir_blooms(
+                    data_dir, old_bloom_cols, out.schema
+                )
             extras = {
                 k: v
                 for k, v in manifest.items()
+                # a set expression may retype a column: drop the schema
                 if k not in ("version", "dirs", "bucket_dirs", "stats",
-                             "blooms", "sealed", "segments")
+                             "blooms", "sealed", "segments", "schema")
             }
             if self._commit_if(
                 name,
@@ -1553,14 +1607,14 @@ class ManifestCatalog:
                 # can still hold NULL rows that must SURVIVE (BETWEEN
                 # is three-valued) — one column-pruned probe decides
                 # between pure unlink and demotion to the rewrite path
-                df_drop = self._read_dirs(drop)
+                df_drop = self._read_dirs(drop, _recorded_schema(manifest))
                 if df_drop.filter(F.col(col).isNull()).limit(1).count() > 0:
                     rewrite = rewrite + drop
                     drop = []
                 else:
                     deleted += df_drop.count()
             if rewrite:
-                df = self._read_dirs(rewrite)
+                df = self._read_dirs(rewrite, _recorded_schema(manifest))
                 before = df.count()
                 kept_rows = df.filter(
                     F.col(col).isNull() | ~F.col(col).between(lo, hi)
@@ -1593,9 +1647,13 @@ class ManifestCatalog:
                 kept_rows.write.mode("overwrite").parquet(data_dir)
                 new_dirs.append(data_dir)
                 if old_stat_cols:
-                    stats[data_dir] = self._dir_stats(data_dir, old_stat_cols)
+                    stats[data_dir] = self._dir_stats(
+                        data_dir, old_stat_cols, kept_rows.schema
+                    )
                 if old_bloom_cols:
-                    blooms[data_dir] = self._dir_blooms(data_dir, old_bloom_cols)
+                    blooms[data_dir] = self._dir_blooms(
+                        data_dir, old_bloom_cols, kept_rows.schema
+                    )
             if deleted == 0:
                 return 0  # nothing matched anywhere; state unchanged
             extras = {
@@ -1722,7 +1780,8 @@ class ManifestCatalog:
                 extras = {
                     k: v
                     for k, v in cur.items()
-                    if k not in ("version", "dirs", "bucket_dirs", "stats", "blooms")
+                    if k not in ("version", "dirs", "bucket_dirs", "stats",
+                                 "blooms", "schema")
                 }
                 if self._commit_if(
                     name,
@@ -1814,7 +1873,8 @@ class ManifestCatalog:
                 extras = {
                     k: v
                     for k, v in manifest.items()
-                    if k not in ("version", "dirs", "bucket_dirs", "stats", "blooms")
+                    if k not in ("version", "dirs", "bucket_dirs", "stats",
+                                 "blooms", "schema")
                 }
                 new = extras | {
                     "dirs": None, "bucket_dirs": bucket_dirs,
@@ -1833,12 +1893,15 @@ class ManifestCatalog:
                 }
                 new = extras | {
                     "dirs": [data_dir], "bucket_dirs": None, "n_buckets": None,
+                    "schema": df.schema.json(),
                 }
                 if stats_cols:
-                    new["stats"] = {data_dir: self._dir_stats(data_dir, stats_cols)}
+                    new["stats"] = {
+                        data_dir: self._dir_stats(data_dir, stats_cols, df.schema)
+                    }
                 if bloom_cols:
                     new["blooms"] = {
-                        data_dir: self._dir_blooms(data_dir, bloom_cols)
+                        data_dir: self._dir_blooms(data_dir, bloom_cols, df.schema)
                     }
             if self._commit_if(name, new, base):
                 return
@@ -1959,7 +2022,7 @@ class ManifestCatalog:
                 if p.rsplit("/", 1)[-1].startswith("__zb=")
             )
             scols = list(stats_cols or cols)
-            stats = {d: self._dir_stats(d, scols) for d in sub_dirs}
+            stats = {d: self._dir_stats(d, scols, df.schema) for d in sub_dirs}
             new = {
                 "dirs": sub_dirs, "bucket_dirs": None, "n_buckets": None,
                 "stats": stats,

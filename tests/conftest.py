@@ -71,3 +71,34 @@ def sf_correctness_dir():
 @pytest.fixture(scope="session")
 def sf_smoke_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def run_counted(spark):
+    """``run_counted(fn)`` runs ``fn()`` under a job group of its own
+    and returns ``(result, jobs, stages)``: the Spark jobs ``fn``
+    launched and the stages that ran tasks (a stage skipped because
+    its shuffle output already existed does not count). Waits for the
+    listener bus first, so every job of the group is recorded."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"counted-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        st = sc.statusTracker()
+        jobs = st.getJobIdsForGroup(group)
+        ids = {s for j in jobs for s in st.getJobInfo(j).stageIds}
+        stages = sum(
+            1 for s in ids
+            if (info := st.getStageInfo(s)) and info.numCompletedTasks > 0
+        )
+        return out, len(jobs), stages
+
+    return run

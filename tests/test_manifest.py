@@ -145,6 +145,10 @@ def test_append_schema_evolution(spark, cat):
     rows = {r.k: r for r in out.collect()}
     assert rows[1].score is None  # backfilled NULL on the old dir
     assert rows[2].score == 9.5
+    # the replace recorded its schema; the widening append must not
+    # carry it, or the new column would vanish from reads
+    assert "schema" in cat.manifest_at("t", 1)
+    assert "schema" not in cat.latest_manifest("t")
 
 
 def test_optimize_compacts_and_vacuum_collects(spark, cat):
@@ -1441,3 +1445,141 @@ def test_catalog_crud_on_jvm_branch_with_sealing(spark, jvm_cat):
     assert jvm_cat.delete_where("jvm.crud", "key", [23]) == 1
     assert jvm_cat.read_point("jvm.crud", "key", 23).count() == 0
     assert jvm_cat.read("jvm.crud").count() == 49
+
+
+# -- recorded schemas (the manifest ``schema`` field) ------------------------
+
+
+def test_recorded_schema_matches_footer_inference(spark, cat, run_counted):
+    """A replace_atomic version records its frame's schema, and a read
+    under it launches no Spark job yet equals footer inference, schema
+    and rows, for every type a commit can carry: non-null nested
+    types, decimal, date/timestamp/timestamp_ntz, binary, char/varchar
+    and field metadata."""
+    import datetime as dt
+    import decimal
+
+    from pyspark.sql.types import (
+        ArrayType, BinaryType, DateType, DecimalType, DoubleType,
+        IntegerType, LongType, MapType, StringType, StructField,
+        StructType, TimestampNTZType, TimestampType,
+    )
+
+    def cv(t):
+        return {"__CHAR_VARCHAR_TYPE_STRING": t}
+
+    schema = StructType([
+        StructField("id", LongType(), False),
+        StructField("arr", ArrayType(IntegerType(), False), False),
+        StructField("st", StructType([
+            StructField("a", StringType(), False),
+            StructField("b", DoubleType()),
+        ]), False),
+        StructField("mp", MapType(StringType(), LongType(), False), False),
+        StructField("dec", DecimalType(20, 8)),
+        StructField("d", DateType()),
+        StructField("ts", TimestampType()),
+        StructField("tsn", TimestampNTZType()),
+        StructField("bin", BinaryType()),
+        StructField("c", StringType(), True, cv("char(3)")),
+        StructField("vc", StringType(), True, cv("varchar(5)")),
+        StructField("doc", StringType(), True, {"comment": "kept", "n": 3}),
+    ])
+    t = dt.datetime(2026, 1, 2, 3, 4, 5)
+    rows = [
+        (1, [1, 2], ("x", 1.5), {"k": 7}, decimal.Decimal("123.45678901"),
+         t.date(), t, t, b"\x00\x01", "ab", "xyz", "m"),
+        (2, [], ("y", None), {}, None, None, None, None, None, None, None, None),
+    ]
+    cat.replace_atomic(spark.createDataFrame(rows, schema), "typed.t")
+    m = cat.latest_manifest("typed.t")
+    assert "schema" in m
+    df, jobs, _ = run_counted(lambda: cat.read("typed.t"))
+    assert jobs == 0
+    footer = spark.read.parquet(*m["dirs"])
+    assert df.schema == footer.schema
+    assert sorted(df.collect()) == sorted(footer.collect())
+
+
+def test_legacy_manifest_without_schema_reads_by_footer(spark, tmp_path):
+    """Manifests written before versions recorded a schema read the
+    same rows and schema through footer inference, latest and by
+    time travel, and a later commit on such a table records one."""
+    root = f"file://{tmp_path}/lake"
+    cat = ManifestCatalog(spark, root)
+    cat.replace_atomic(_df(spark, [(1, "a")]), "t")
+    cat.replace_atomic(_df(spark, [(2, "b"), (3, "c")]), "t")
+
+    def snapshot(c, v):
+        df = c.read("t", version=v)
+        return df.schema, sorted(df.collect())
+
+    expect = {v: snapshot(cat, v) for v in (1, 2)}
+    for p in (tmp_path / "lake" / "t" / "_manifests").glob("manifest-*.json"):
+        m = json.loads(p.read_text())
+        del m["schema"]
+        p.write_text(json.dumps(m))
+    legacy = ManifestCatalog(spark, root)  # no cached manifests
+    assert "schema" not in legacy.latest_manifest("t")
+    assert {v: snapshot(legacy, v) for v in (1, 2)} == expect
+    assert sorted(legacy.read("t").collect()) == expect[2][1]
+
+    legacy.replace_atomic(_df(spark, [(4, "d")]), "t")
+    assert "schema" in legacy.latest_manifest("t")
+    assert snapshot(legacy, 1) == expect[1]  # time travel to a legacy version
+
+
+def test_schema_kept_only_by_same_row_rewrites(spark, tmp_path, run_counted):
+    """Which commits carry the recorded schema: rewrites of the same
+    rows under it keep it (delete_where, delete_range, shallow_clone),
+    optimize records its compacted frame's, and update_where, append,
+    partitioned and bucketed commits fall back to footers. Every
+    schema-carrying version reads what its footers say."""
+    cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
+
+    def has(t):
+        m = cat.latest_manifest(t)
+        if "schema" in m:
+            footer = spark.read.option("mergeSchema", "true").parquet(*m["dirs"])
+            assert cat.read(t).schema == footer.schema
+        return "schema" in m
+
+    rows = [(i, f"v{i}") for i in range(20)]
+    cat.replace_atomic(
+        spark.createDataFrame(rows, "k bigint, v string"), "t",
+        stats_cols=["k"], bloom_cols=["k"],
+    )
+    assert has("t")
+    # a bloom probe takes the column type from the recorded schema
+    dirs, jobs, _ = run_counted(lambda: cat.bloom_pruned_dirs("t", "k", 5))
+    assert (len(dirs), jobs) == (1, 0)
+
+    assert cat.delete_where("t", "k", [3]) == 1
+    assert has("t")
+    assert cat.delete_range("t", "k", 15, 30) == 5
+    assert has("t")
+    assert cat.shallow_clone("t", "snap") == 1
+    assert has("snap")
+    assert cat.update_where("t", "k", [4], {"v": F.upper("v")}) == 1
+    assert not has("t")
+    cat.optimize("t", stats_cols=["k"])
+    assert has("t")
+    assert sorted(r.k for r in cat.read("t").collect()) == [
+        k for k in range(15) if k != 3
+    ]
+    assert cat.read_point("t", "k", 4).first().v == "V4"
+    cat.append(spark.createDataFrame([(99, "z")], "k bigint, v string"), "t")
+    assert not has("t")
+
+    cat.replace_atomic(spark.createDataFrame(rows, "k bigint, v string"), "part",
+                       partition_by=["v"])
+    assert not has("part")
+
+    scd = BucketedSCD2(cat, n_buckets=4)
+    scd.apply(_src(spark, [(1, "a"), (2, "b")]), "dim", ["k"], ["attr"],
+              "2026-01-01 00:00:00")
+    scd.apply(_src(spark, [(1, "a2"), (3, "c")]), "dim", ["k"], ["attr"],
+              "2026-02-01 00:00:00")
+    assert not has("dim")
+    cat.optimize("dim")
+    assert not has("dim")

@@ -92,6 +92,14 @@ def fixture_dirs(tmp_path):
     return {"overview": ov, "officers": off, "fundamentals": fund}
 
 
+def _write_second_batch(dirs):
+    with open(os.path.join(dirs["fundamentals"], "batch.csv"), "w") as f:
+        f.write("company_number,quarter_end_date,total_revenue,net_income,ingestion_date\n")
+        f.write("C001,2025-03-31,100.0,10.0,2026-02-01\n")   # unchanged tracked
+        f.write("C001,2025-06-30,115.0,12.0,2026-02-01\n")   # changed → expire+insert
+        f.write("C002,2026-03-31,60.0,6.0,2026-02-01\n")     # new key
+
+
 def _config(dirs, as_of):
     return {
         "bronze": [
@@ -209,11 +217,7 @@ def test_medallion_end_to_end(spark, tmp_path, fixture_dirs, pipe_factory):
     assert master["C004"].officer_count is None
 
     # -- second load: one changed quarter, one new quarter ------------
-    with open(os.path.join(fixture_dirs["fundamentals"], "batch.csv"), "w") as f:
-        f.write("company_number,quarter_end_date,total_revenue,net_income,ingestion_date\n")
-        f.write("C001,2025-03-31,100.0,10.0,2026-02-01\n")   # unchanged tracked
-        f.write("C001,2025-06-30,115.0,12.0,2026-02-01\n")   # changed → expire+insert
-        f.write("C002,2026-03-31,60.0,6.0,2026-02-01\n")     # new key
+    _write_second_batch(fixture_dirs)
     pipe.run(_config(fixture_dirs, "2026-02-01 00:00:00"))
 
     scd = pipe.catalog.read("silver.fundamentals")
@@ -242,6 +246,31 @@ def test_medallion_end_to_end(spark, tmp_path, fixture_dirs, pipe_factory):
     assert zero_rev.net_margin is None  # guarded division at revenue 0
     assert zero_rev.qoq_growth == pytest.approx((0.0 - 121.0) / 121.0)
     assert f1[("C001", "2025-03-31")].qoq_growth is None  # first quarter: no lag
+
+
+def test_manifest_batch_stage_budget(spark, tmp_path, fixture_dirs, run_counted):
+    """Pinned Spark stage budget of one changed batch through a
+    manifest-backed lake (ROADMAP aim 1: a speed claim rests on a
+    deterministic count). Every table here is an unpartitioned
+    ``replace_atomic`` commit, so its manifest records its schema and
+    ``cat.read`` launches no job: the batch's stages are its writes,
+    its source scans and the SCD2 uniqueness probe."""
+    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
+
+    cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"), catalog=cat)
+    pipe.run(_config(fixture_dirs, "2026-01-01 00:00:00"))
+    _write_second_batch(fixture_dirs)
+    cfg = _config(fixture_dirs, "2026-02-01 00:00:00")
+    _, _, stages = run_counted(lambda: pipe.run(cfg))
+    # 30 when every catalog read inferred its schema from parquet footers
+    assert stages == 17
+
+    tables = [spec["table"] for layer in cfg.values() for spec in layer]
+    for t in tables:
+        df, jobs, _ = run_counted(lambda t=t: cat.read(t))
+        assert jobs == 0, t
+        assert df.schema == spark.read.parquet(*cat.latest_manifest(t)["dirs"]).schema
 
 
 def test_silver_scd1_keeps_unmatched_keys(spark, tmp_path):
