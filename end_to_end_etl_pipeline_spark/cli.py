@@ -4,7 +4,7 @@ sequentially, fail-fast) rebuilt over the declarative engine:
 
     python -m end_to_end_etl_pipeline_spark path/to/pipeline.json
     python -m end_to_end_etl_pipeline_spark cfg.json --catalog-root /lake \\
-        --catalog manifest --layers bronze,silver
+        --layers bronze,silver
 
 One JSON document holds all three layers (the reference splits them
 across five files stitched by hardcoded imports; one config = one
@@ -26,22 +26,18 @@ import sys
 
 
 def _build_parser() -> argparse.ArgumentParser:
+    # no abbreviations: a stale ``--catalog <kind>`` (a removed
+    # option) must fail, not silently parse as ``--catalog-root``
     p = argparse.ArgumentParser(
         prog="end_to_end_etl_pipeline_spark",
         description="Run the config-driven bronze→silver→gold pipeline.",
+        allow_abbrev=False,
     )
     p.add_argument("config", help="pipeline JSON (bronze/silver/gold entry lists)")
     p.add_argument(
         "--catalog-root",
         default=None,
         help="table root; overrides config catalog_root",
-    )
-    p.add_argument(
-        "--catalog",
-        choices=("parquet", "manifest"),
-        default="manifest",
-        help="parquet = local-dev ParquetCatalog; manifest = "
-        "object-store-portable ManifestCatalog (default)",
     )
     p.add_argument(
         "--layers",
@@ -133,14 +129,7 @@ def main(argv: list[str] | None = None) -> int:
     from end_to_end_etl_pipeline_spark.session import create_spark_session
 
     spark = create_spark_session(app_name="medallion-cli", master=args.master)
-    if args.catalog == "manifest":
-        from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
-
-        scheme_root = root if "://" in root else f"file://{root}"
-        catalog = ManifestCatalog(spark, scheme_root)
-    else:
-        catalog = None  # MedallionPipeline defaults to ParquetCatalog
-    pipe = MedallionPipeline(spark, root, catalog=catalog)
+    pipe = MedallionPipeline(spark, root)
     try:
         pipe.run({layer: config.get(layer, ()) for layer in layers})
     except Exception as e:  # fail-fast, report, nonzero exit

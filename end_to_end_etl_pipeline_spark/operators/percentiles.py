@@ -55,10 +55,11 @@ Spark jobs (count+sketch, rank counts, bracket histogram) plus the
 caller's own later scan — the input must be deterministic across
 re-executions (plain table scans are; a ``sample()``/``rand()``
 -derived frame is NOT). The rank-count pass re-checks the non-null
-count and falls back to the built-in single-job aggregate on any
-mismatch, so a non-deterministic input degrades to the built-in
-answer instead of silently mixing statistics from different
-evaluations.
+count and falls back to the built-in single-job aggregate on a
+mismatch. That tripwire is best-effort: the histogram pass re-runs
+``df`` unchecked, so a non-deterministic input whose non-null counts
+happen to agree across the first two evaluations can still mix
+statistics from different evaluations and return a wrong value.
 """
 
 from __future__ import annotations
@@ -138,11 +139,11 @@ def exact_percentiles(
         )
 
     # one pass: exact rank below each bracket start. The non-null
-    # count rides along as the determinism tripwire (module
-    # docstring): if this evaluation of df disagrees with the sketch
-    # pass's n, the input is non-deterministic across jobs and the
-    # bracket arithmetic is meaningless — degrade to the built-in
-    # single-job aggregate instead of mixing statistics.
+    # count rides along as the best-effort determinism tripwire
+    # (module docstring): if this evaluation of df disagrees with the
+    # sketch pass's n, the input is non-deterministic across jobs and
+    # the bracket arithmetic is meaningless — degrade to the built-in
+    # single-job aggregate. The histogram pass below is not checked.
     counts = df.agg(
         F.count(F.col(col)).alias("__n2"),
         *[
@@ -194,137 +195,4 @@ def exact_percentiles(
         else:
             # EXACTLY Spark Percentile.getPercentile's expression
             out[i] = (higher - pos) * v_lo + (pos - lower) * v_hi
-    return out
-
-
-def grouped_exact_percentiles(
-    df: DataFrame,
-    group_col: str,
-    col: str,
-    ps: list[float],
-    accuracy: int = 100_000,
-    max_groups: int = 64,
-) -> dict | None:
-    """Per-group exact interpolated percentiles (VERDICT r12 #4): the
-    bracket algorithm of :func:`exact_percentiles` extended per group,
-    for BOUNDED group cardinality (each group's value map in the
-    built-in ``percentile()`` still merges through one reducer task —
-    a handful of priority classes over 100 TB of orders is exactly
-    the worst case).
-
-    Returns ``{group_value: [p0, p1, ...]}`` with every float
-    bit-identical to the built-in grouped aggregate, or ``None``
-    when the operator declines (more than ``max_groups`` groups, any
-    bracket/histogram miss, or a cross-job count mismatch — see the
-    determinism note in the module docstring). Callers fall back to
-    the built-in grouped ``percentile()`` on ``None``; like
-    :func:`exact_percentiles`, the result is exact in every path.
-
-    Same three distributed jobs as the ungrouped form — grouped
-    sketch pass, one conditional-count pass (G·|ps| mergeable sums),
-    one union-bracket histogram keyed on (group, value) — the group
-    dimension rides the aggregation keys, never a per-group job.
-    """
-    ps = list(ps)
-    eps = 2.0 / accuracy
-    bounds: list[float] = []
-    for p in ps:
-        bounds += [max(0.0, p - eps), min(1.0, p + eps)]
-    arr = ",".join(repr(b) + "D" for b in bounds)
-    first = (
-        df.groupBy(group_col)
-        .agg(
-            F.count(F.col(col)).alias("n"),
-            F.expr(
-                f"approx_percentile({col}, array({arr}), {accuracy})"
-            ).alias("b"),
-        )
-        .limit(max_groups + 1)
-        .collect()
-    )
-    if len(first) > max_groups:
-        return None
-    groups = []  # (gval, n, targets)
-    for row in first:
-        gv, n, br = row[group_col], row["n"], row["b"]
-        if n == 0 or n < accuracy or br is None:
-            # small groups thin the rank margin below one rank —
-            # decline wholesale; mixing exact-bracket groups with
-            # built-in groups would mean running BOTH aggregations
-            return None
-        targets = []
-        for i, p in enumerate(ps):
-            pos = p * (n - 1)
-            targets.append(
-                (i, pos, math.floor(pos), math.ceil(pos),
-                 br[2 * i], br[2 * i + 1])
-            )
-        groups.append((gv, n, targets))
-
-    # one pass: per-group exact rank below each bracket start plus the
-    # per-group n tripwire (same mergeable conditional sums as the
-    # ungrouped form, G·(|ps|+1) expressions over one scan)
-    g = F.col(group_col)
-    aggs = []
-    for gi, (gv, _n, targets) in enumerate(groups):
-        aggs.append(F.count(F.when(g == gv, F.col(col))).alias(f"n{gi}"))
-        for i, _pos, _lo, _hi, lo_v, _hi_v in targets:
-            aggs.append(
-                F.sum(
-                    F.when((g == gv) & (F.col(col) < lo_v), 1).otherwise(0)
-                ).alias(f"c{gi}_{i}")
-            )
-    counts = df.agg(*aggs).first()
-    for gi, (gv, n, _t) in enumerate(groups):
-        if counts[f"n{gi}"] != n:
-            return None
-
-    # one pass: per-group distinct-value counts inside that group's
-    # union of brackets, collected bounded
-    in_any = None
-    for gi, (gv, _n, targets) in enumerate(groups):
-        for _i, _pos, _lo, _hi, lo_v, hi_v in targets:
-            cond = (g == gv) & (F.col(col) >= lo_v) & (F.col(col) <= hi_v)
-            in_any = cond if in_any is None else (in_any | cond)
-    hist = (
-        df.filter(in_any)
-        .groupBy(group_col, col)
-        .count()
-        .orderBy(group_col, col)
-        .limit(_COLLECT_CAP + 1)
-        .collect()
-    )
-    if len(hist) > _COLLECT_CAP:
-        return None
-    by_group: dict = {}
-    for h in hist:
-        by_group.setdefault(h[group_col], []).append(h)
-
-    out: dict = {}
-    for gi, (gv, n, targets) in enumerate(groups):
-        res: list = [None] * len(ps)
-        rows = by_group.get(gv, [])
-        for i, pos, lower, higher, lo_v, hi_v in targets:
-            c = counts[f"c{gi}_{i}"] or 0
-            if c > lower:
-                return None
-            v_lo = v_hi = None
-            r = c
-            for h in rows:
-                v = h[col]
-                if v < lo_v or v > hi_v:
-                    continue
-                top = r + h["count"] - 1
-                if r <= lower <= top:
-                    v_lo = v
-                if r <= higher <= top:
-                    v_hi = v
-                r += h["count"]
-            if v_lo is None or v_hi is None:
-                return None
-            if lower == higher:
-                res[i] = v_lo
-            else:
-                res[i] = (higher - pos) * v_lo + (pos - lower) * v_hi
-        out[gv] = res
     return out

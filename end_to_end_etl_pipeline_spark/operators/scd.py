@@ -8,8 +8,9 @@ parquet lakehouse with the reference's observed defects fixed:
 * **Atomicity** (§2.11-5): the reference runs MERGE-expire then
   append as two transactions; a crash between them loses the new
   version. Here each SCD apply computes the complete next table state
-  as ONE DataFrame plan and publishes it with an atomic directory
-  swap — readers see old or new state, never between.
+  as ONE DataFrame plan and publishes it with one catalog commit
+  (``ManifestCatalog.replace_atomic``: a single manifest publish) —
+  readers see old or new state, never between.
 * **Zero-width versions** (§2.11-5): validity is timestamp-typed and
   the ``as_of`` is caller-supplied, so same-day re-runs don't produce
   ``effective_from == effective_to`` date collisions.
@@ -34,7 +35,6 @@ import datetime as _dt
 import functools
 import operator
 from collections.abc import Sequence
-from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -42,7 +42,6 @@ from pyspark.sql import functions as F
 from end_to_end_etl_pipeline_spark.operators.dedup import dedup_by_key
 from end_to_end_etl_pipeline_spark.operators.joins import anti_join
 from end_to_end_etl_pipeline_spark.operators.hashing import with_row_hash
-from end_to_end_etl_pipeline_spark.sinks.writers import ParquetCatalog
 
 SCD_COLS = ("row_hash", "effective_from", "effective_to", "is_current")
 
@@ -97,24 +96,13 @@ def prepare_scd_source(
     return src
 
 
-@dataclass
-class SCDConfig:
-    """Config-driven SCD binding (the reference drives this from JSON,
-    ``medallion/silver/config_yfinance.json:5-58``)."""
-
-    table: str
-    business_keys: Sequence[str]
-    tracked_columns: Sequence[str]
-    scd_type: int = 2
-
-
 class SCDEngine:
     """Catalog-agnostic SCD applier: ``catalog`` is anything with
-    exists/read/replace_atomic — the local-dev ``ParquetCatalog`` or
-    the object-store-portable ``sinks.manifest.ManifestCatalog``
-    (which also offers bucket-pruned SCD2 via ``BucketedSCD2``)."""
+    exists/read/replace_atomic — ``sinks.manifest.ManifestCatalog``
+    (which also offers bucket-pruned SCD2 via ``BucketedSCD2``) or
+    ``sinks.writers.MetastoreCatalog``."""
 
-    def __init__(self, catalog: ParquetCatalog):
+    def __init__(self, catalog):
         self.catalog = catalog
 
     # -- type 1 ---------------------------------------------------------

@@ -11,8 +11,9 @@ Design for 100 TB:
   short fixed-width keys; the exact-Jaccard verify runs on the small
   candidate set only.
 * **Deterministic hashing.** MinHash permutations are simulated with
-  ``md5(seed || ':' || shingle)`` and lexicographic ``min`` — fully
-  deterministic, identical across engines (this is what lets a DuckDB
+  one ``md5(shingle)`` split into two 32-bit ints and the K hashes
+  derived as ``(h1 + k·h2) mod 2^32`` — fully deterministic,
+  identical across engines (this is what lets a DuckDB
   oracle replicate the *exact* candidate set, and what makes re-runs
   reproducible on a cluster: no RNG, no partition-order dependence).
 * **JVM-side only.** Every expression is a built-in Spark function
@@ -82,23 +83,6 @@ def word_shingles(
     return df.select(F.col(id_col), F.expr(f"explode({arr}) AS shingle"))
 
 
-def minhash_signatures(
-    shingles: DataFrame, id_col: str, num_hashes: int = 16
-) -> DataFrame:
-    """One row per id with columns ``m0..m{K-1}``: the lexicographic
-    min of ``md5(k || ':' || shingle)`` per seed. One shuffle with
-    map-side partial ``min`` — signature width is K×32 bytes
-    regardless of document size. (Simple form: K md5s per shingle;
-    the hot path uses :func:`minhash_signatures_cw` /
-    :func:`band_hashes_arr` — one md5 per shingle, Carter-Wegman
-    derived family.)"""
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{k}:"), F.col("shingle")))).alias(f"m{k}")
-        for k in range(num_hashes)
-    ]
-    return shingles.groupBy(id_col).agg(*aggs)
-
-
 def shingle_array(
     df: DataFrame, id_col: str, text_col: str, n: int = 6
 ) -> DataFrame:
@@ -136,7 +120,7 @@ def minhash_signatures_cw(
     32-bit ints (h1 = hex[1:8], h2 = hex[9:16]) and derive the k-th
     hash as ``(h1 + k·h2) mod 2^32`` (Kirsch–Mitzenmacher double
     hashing — a pairwise family from two base hashes, the standard
-    Bloom/MinHash trick). K× fewer digests than the per-seed form.
+    Bloom/MinHash trick): one digest per shingle for any K.
 
     The base hashes are materialized as narrow columns in one
     projection *before* the aggregate (keeping the md5 evaluated once

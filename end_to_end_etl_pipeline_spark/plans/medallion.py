@@ -27,6 +27,7 @@ parallel; there is no cross-entry state.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Mapping, Sequence
 from typing import Any
 
@@ -48,7 +49,7 @@ from end_to_end_etl_pipeline_spark.operators.dq import (
 from end_to_end_etl_pipeline_spark.operators.joins import equi_join
 from end_to_end_etl_pipeline_spark.operators.scd import SCDEngine, current_snapshot
 from end_to_end_etl_pipeline_spark.operators.windows import lag_growth
-from end_to_end_etl_pipeline_spark.sinks.writers import ParquetCatalog
+from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 from end_to_end_etl_pipeline_spark.sources.readers import (
     read_csv,
     read_json,
@@ -72,14 +73,19 @@ def _order_expr(e: str):
 
 
 class MedallionPipeline:
-    """``catalog`` is pluggable: the local-dev ``ParquetCatalog``
-    (default) or ``sinks.manifest.ManifestCatalog`` for
-    object-store-portable manifest commits — every layer only uses
-    the shared exists/read/replace_atomic surface."""
+    """Every layer only uses the exists/read/replace_atomic catalog
+    surface. With no ``catalog``, tables are ``ManifestCatalog``
+    commits under ``catalog_root`` (a bare path is qualified as an
+    absolute ``file://`` URI); pass ``sinks.writers.MetastoreCatalog(spark)`` for
+    metastore-addressed tables instead."""
 
     def __init__(self, spark: SparkSession, catalog_root: str, catalog=None):
         self.spark = spark
-        self.catalog = catalog or ParquetCatalog(spark, catalog_root)
+        if catalog is None:
+            if "://" not in catalog_root:
+                catalog_root = f"file://{os.path.abspath(catalog_root)}"
+            catalog = ManifestCatalog(spark, catalog_root)
+        self.catalog = catalog
         self.scd = SCDEngine(self.catalog)
 
     # -- bronze ----------------------------------------------------------

@@ -1,6 +1,5 @@
+from end_to_end_etl_pipeline_spark.sinks.manifest import BucketedSCD2, ManifestCatalog
 from end_to_end_etl_pipeline_spark.sinks.writers import (
-    ParquetCatalog,
-    clustered_rewrite,
     write_append,
     write_csv,
     write_jsonl_sharded,
@@ -12,8 +11,6 @@ from end_to_end_etl_pipeline_spark.sinks.writers import (
 __all__ = [
     "BucketedSCD2",
     "ManifestCatalog",
-    "ParquetCatalog",
-    "clustered_rewrite",
     "write_append",
     "write_csv",
     "write_jsonl_sharded",
@@ -21,16 +18,3 @@ __all__ = [
     "write_overwrite",
     "write_sorted",
 ]
-
-_LAZY = ("ManifestCatalog", "BucketedSCD2")
-
-
-def __getattr__(name):
-    # PEP 562 lazy export: operators/scd.py imports sinks.writers,
-    # and sinks.manifest imports operators/scd — importing manifest
-    # eagerly here would close that loop into a circular import.
-    if name in _LAZY:
-        from end_to_end_etl_pipeline_spark.sinks import manifest
-
-        return getattr(manifest, name)
-    raise AttributeError(name)

@@ -1,11 +1,11 @@
 """Manifest-based table commits: object-store-portable, crash-safe,
 with bucket-pruned SCD2 rewrites.
 
-Round-1 review flagged the two scale-killers in this engine's storage
-layer: ``os.rename``-based swaps (local-FS only, torn window between
-the two renames) and full-table rewrites per SCD2 apply. This module
-replaces both with the standard lakehouse-lite design (the same shape
-Delta/Iceberg use, reduced to its core):
+The engine's one table catalog. It avoids the two scale-killers of a
+plain parquet lake — ``os.rename``-based directory swaps (local-FS
+only, torn window between the two renames) and full-table rewrites
+per SCD2 apply — with the standard lakehouse-lite design (the same
+shape Delta/Iceberg use, reduced to its core):
 
 * **Immutable data dirs.** Every commit writes parquet into a fresh
   ``data/<uuid>/`` directory — nothing is ever renamed or overwritten
@@ -191,8 +191,8 @@ class HadoopFS:
 
 class ManifestCatalog:
     """``zone.table`` → ``<root>/zone/table`` with versioned-manifest
-    commits. Drop-in for ``ParquetCatalog`` (exists/read/replace_atomic/
-    append/drop) plus bucket-aware reads for pruned SCD2.
+    commits: the exists/read/replace_atomic/append/drop surface every
+    pipeline layer uses, plus bucket-aware reads for pruned SCD2.
 
     Manifest ``schema`` field (the Delta ``metaData.schemaString``
     move): ``StructType.json()`` of the rows every listed dir holds.

@@ -1,26 +1,24 @@
-"""Sink / DDL / maintenance operators (SURVEY.md §2.2, K1-K10).
+"""Sink / DDL operators (SURVEY.md §2.2, K1-K10).
 
 The reference writes managed Delta tables on Databricks. Delta's jars
-are not on this classpath, so the engine's storage layer is a small
-path-based parquet "catalog" with the same operator surface:
+are not on this classpath, so table commits go through
+``sinks/manifest.py:ManifestCatalog`` (versioned-manifest commits,
+its ``optimize(cluster_by=…)`` is the K8 OPTIMIZE/ZORDER stand-in).
+This module holds the rest of the sink surface:
 
 * K1 overwrite (+schema overwrite — trivially true for parquet rewrite)
 * K2 append
 * K3 partitioned write (hive-style → static partition pruning)
-* K8 OPTIMIZE/ZORDER → sorted-rewrite emulation (``clustered_rewrite``)
-* K10 table-existence probe
+* K7 CSV / ORC / sharded-JSONL exports and globally sorted writes
+* ``MetastoreCatalog`` — the same catalog surface over Spark's
+  session catalog (the reference's 3-level table names)
 
-MERGE (K4-K6) lives in ``operators/scd.py`` as join+union+atomic-swap
-choreography — see there for the scale discussion. If Delta is on the
-classpath the same interfaces can bind to ``DeltaTable`` (import-try),
-but the parquet path is the tested default per SURVEY.md §7.1-4.
+MERGE (K4-K6) lives in ``operators/scd.py`` as a join+union plan
+published by one catalog commit — see there for the scale discussion.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -91,124 +89,6 @@ def write_orc(
     writer.format("orc").save(path)
 
 
-def clustered_rewrite(
-    spark: SparkSession,
-    path: str,
-    cluster_by: Sequence[str],
-    target_partitions: int | None = None,
-) -> None:
-    """K8 — OPTIMIZE … ZORDER emulation: compact + co-locate.
-
-    Reference calls Databricks ``OPTIMIZE … ZORDER BY (company_number)``
-    (``medallion/gold/s2g.py:98-101``). Open-source emulation:
-    repartition on the cluster keys (hash co-location → one file per
-    bucket of keys) then sortWithinPartitions so parquet row-group
-    min/max stats give data skipping on those keys. Atomic via
-    write-to-temp + directory swap.
-    """
-    df = spark.read.parquet(path)
-    n = target_partitions or max(df.rdd.getNumPartitions() // 4, 1)
-    tmp = f"{path.rstrip('/')}__optimize_{uuid.uuid4().hex[:8]}"
-    (
-        df.repartition(n, *cluster_by)
-        .sortWithinPartitions(*cluster_by)
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
-    _swap_dirs(tmp, path)
-
-
-def _swap_dirs(new: str, dest: str) -> None:
-    """Replace ``dest`` with ``new`` via two renames. A crash between
-    them leaves ``dest`` missing with a ``__trash_`` sibling present —
-    ``_recover_swap`` repairs that window; readers racing the swap on
-    a shared local FS should use :class:`ManifestCatalog` instead
-    (single-pointer commits, no window at all)."""
-    trash = f"{dest.rstrip('/')}__trash_{uuid.uuid4().hex[:8]}"
-    os.rename(dest, trash)
-    os.rename(new, dest)
-    shutil.rmtree(trash, ignore_errors=True)
-
-
-def _recover_swap(dest: str) -> None:
-    """Roll back a torn ``_swap_dirs``: if ``dest`` vanished but its
-    trash sibling survives, restore the trash (the old, complete
-    state). Idempotent; no-op in the healthy case."""
-    if os.path.isdir(dest):
-        return
-    parent, base = os.path.dirname(dest), os.path.basename(dest)
-    if not os.path.isdir(parent):
-        return
-    trash = sorted(d for d in os.listdir(parent) if d.startswith(f"{base}__trash_"))
-    if trash:
-        os.rename(os.path.join(parent, trash[-1]), dest)
-
-
-class ParquetCatalog:
-    """Minimal path-addressed catalog: ``zone.table`` → directory.
-
-    Stands in for the reference's Unity Catalog 3-level names
-    (`` `companies-data`.bronze.overview ``,
-    ``medallion/bronze/config_company_house.json:2-4``). Keeps the
-    engine's operator code catalog-agnostic: swap this class for a
-    metastore-backed one on a cluster.
-    """
-
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root.rstrip("/")
-
-    def path(self, name: str) -> str:
-        return os.path.join(self.root, *name.split("."))
-
-    def exists(self, name: str) -> bool:
-        """K10 — table-existence probe (reference branches create-vs-
-        merge on it, ``medallion/silver/b2s_yfinance.py:39-44``)."""
-        p = self.path(name)
-        _recover_swap(p)
-        if not os.path.isdir(p):
-            return False
-        # prune underscore/dot dirs (_temporary, checkpoint droppings):
-        # a crashed in-flight write leaves part files ONLY under
-        # _temporary, which Spark readers ignore — counting them would
-        # wedge the create-vs-merge branch on an unreadable "table"
-        for root_, dirs, files in os.walk(p):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            if any(
-                f.endswith(".parquet") or f.startswith("part-") or f == "_SUCCESS"
-                for f in files
-            ):
-                return True
-        return False
-
-    def read(self, name: str) -> DataFrame:
-        _recover_swap(self.path(name))
-        return self.spark.read.parquet(self.path(name))
-
-    def overwrite(self, df: DataFrame, name: str, partition_by=None) -> None:
-        write_overwrite(df, self.path(name), partition_by)
-
-    def append(self, df: DataFrame, name: str, partition_by=None) -> None:
-        write_append(df, self.path(name), partition_by)
-
-    def replace_atomic(self, df: DataFrame, name: str, partition_by=None) -> None:
-        """Overwrite via temp-dir + swap: readers never observe a
-        half-written table, and a crash mid-write leaves the old data
-        intact (fixes SURVEY.md §2.11-5's torn SCD2 two-transaction
-        window at the storage layer)."""
-        dest = self.path(name)
-        _recover_swap(dest)
-        if not os.path.isdir(dest):
-            write_overwrite(df, dest, partition_by)
-            return
-        tmp = f"{dest}__stage_{uuid.uuid4().hex[:8]}"
-        write_overwrite(df, tmp, partition_by)
-        _swap_dirs(tmp, dest)
-
-    def drop(self, name: str) -> None:
-        shutil.rmtree(self.path(name), ignore_errors=True)
-
-
 class MetastoreCatalog:
     """Metastore-addressed catalog: the reference's 3-level
     `` `companies-data`.bronze.overview `` naming
@@ -229,8 +109,8 @@ class MetastoreCatalog:
     collapses onto it (same tables, same 2-level addressing
     underneath). Dashes and other specials are backtick-safe.
 
-    Same operator surface as :class:`ParquetCatalog` (exists / read /
-    overwrite / append / replace_atomic / drop), so ``SCDEngine`` /
+    Same operator surface as ``sinks.manifest.ManifestCatalog``
+    (exists / read / overwrite / append / replace_atomic / drop), so ``SCDEngine`` /
     ``MedallionPipeline`` plug in unchanged. ``replace_atomic`` here
     is the metastore's CREATE-OR-REPLACE: the table pointer flips at
     commit (Delta/Iceberg make that transactional on a cluster; the
@@ -332,8 +212,8 @@ class MetastoreCatalog:
         DDL (``medallion/silver/b2s_yfinance.py:46-61``). Existing
         rows read the new columns as NULL; a metadata-only operation
         (no data rewrite) at any table size. ``columns`` maps name →
-        Spark SQL type string (``{"is_current": "boolean"}``). The
-        path-based catalogs cover the same capability with mergeSchema
+        Spark SQL type string (``{"is_current": "boolean"}``).
+        ``ManifestCatalog`` covers the same capability with mergeSchema
         appends; this is the DDL-statement surface for metastore
         deployments."""
         cols = ", ".join(f"`{c}` {t}" for c, t in columns.items())

@@ -4,6 +4,7 @@ argparse shell over MedallionPipeline."""
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.cli import main
@@ -41,7 +42,7 @@ def _write_config(tmp_path, spark):
 
 def test_cli_runs_pipeline_and_publishes(spark, tmp_path, capsys):
     cfg = _write_config(tmp_path, spark)
-    assert main([str(cfg), "--catalog", "manifest"]) == 0
+    assert main([str(cfg)]) == 0
     out = capsys.readouterr().out
     assert "published gold: gold.orders" in out
     cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
@@ -65,6 +66,10 @@ def test_cli_exit_codes(spark, tmp_path):
     assert main([str(bad)]) == 2  # unparsable
     cfg = _write_config(tmp_path, spark)
     assert main([str(cfg), "--layers", "platinum"]) == 2  # unknown layer
+    # the catalog kind is not an option; no prefix of --catalog-root
+    with pytest.raises(SystemExit) as e:
+        main([str(cfg), "--catalog", "manifest"])
+    assert e.value.code == 2
     # failing pipeline (silver references a table bronze never built)
     broken = json.loads(cfg.read_text())
     broken["silver"][0]["from"] = "bronze.missing"

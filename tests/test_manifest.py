@@ -13,7 +13,6 @@ from end_to_end_etl_pipeline_spark.sinks.manifest import (
     BucketedSCD2,
     ManifestCatalog,
 )
-from end_to_end_etl_pipeline_spark.sinks.writers import ParquetCatalog
 
 
 @pytest.fixture
@@ -121,16 +120,6 @@ def test_bucketed_scd2_invariants(spark, cat):
     assert sorted((r.k, r.attr) for r in cur.collect()) == [(1, "a2"), (2, "b"), (3, "c")]
     hist = eng.read_all("d").filter(~F.col("is_current"))
     assert [(r.k, r.attr) for r in hist.collect()] == [(1, "a")]
-
-
-def test_parquet_catalog_recovers_torn_swap(spark, tmp_path):
-    cat = ParquetCatalog(spark, str(tmp_path / "pq"))
-    df = _df(spark, [(1, "a")])
-    cat.replace_atomic(df, "t")
-    dest = cat.path("t")
-    os.rename(dest, dest + "__trash_deadbeef")  # simulate crash mid-swap
-    assert cat.exists("t")  # recovery restored the old state
-    assert sorted(r.k for r in cat.read("t").collect()) == [1]
 
 
 def test_append_schema_evolution(spark, cat):

@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.plans.medallion import MedallionPipeline
+from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
 OVERVIEW_SCHEMA = (
     "company_name string, company_status string, date_of_creation string, "
@@ -171,14 +172,9 @@ def _config(dirs, as_of):
     }
 
 
-@pytest.fixture(params=["parquet", "manifest", "metastore"])
+@pytest.fixture(params=["manifest", "metastore"])
 def pipe_factory(request, spark, tmp_path):
     def make():
-        if request.param == "manifest":
-            from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
-
-            cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
-            return MedallionPipeline(spark, str(tmp_path / "lake"), catalog=cat)
         if request.param == "metastore":
             # the reference's addressing: saveAsTable/spark.table
             # names through the session catalog (3-level names
@@ -190,7 +186,8 @@ def pipe_factory(request, spark, tmp_path):
             return MedallionPipeline(
                 spark, str(tmp_path / "lake"), catalog=MetastoreCatalog(spark)
             )
-        return MedallionPipeline(spark, str(tmp_path / "lake"))
+        cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
+        return MedallionPipeline(spark, str(tmp_path / "lake"), catalog=cat)
 
     return make
 
@@ -255,8 +252,6 @@ def test_manifest_batch_stage_budget(spark, tmp_path, fixture_dirs, run_counted)
     ``replace_atomic`` commit, so its manifest records its schema and
     ``cat.read`` launches no job: the batch's stages are its writes,
     its source scans and the SCD2 uniqueness probe."""
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
-
     cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
     pipe = MedallionPipeline(spark, str(tmp_path / "lake"), catalog=cat)
     pipe.run(_config(fixture_dirs, "2026-01-01 00:00:00"))
@@ -271,6 +266,48 @@ def test_manifest_batch_stage_budget(spark, tmp_path, fixture_dirs, run_counted)
         df, jobs, _ = run_counted(lambda t=t: cat.read(t))
         assert jobs == 0, t
         assert df.schema == spark.read.parquet(*cat.latest_manifest(t)["dirs"]).schema
+
+
+def _rows(cat, table):
+    return sorted(cat.read(table).collect(), key=repr)
+
+
+def test_default_catalog_commit_crash_converges(spark, tmp_path, fixture_dirs, monkeypatch):
+    """With no ``catalog=``, every layer is a ``ManifestCatalog``
+    commit under the bare root. A crash at the gold commit of the
+    second batch leaves gold at its version-1 rows, and an un-patched
+    re-run of that batch converges on an uninterrupted run (ROADMAP
+    item 3, first slice: one commit point)."""
+    gold = "gold.fact_fundamentals"
+    first = _config(fixture_dirs, "2026-01-01 00:00:00")
+    second = _config(fixture_dirs, "2026-02-01 00:00:00")
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"))
+    ref = MedallionPipeline(spark, str(tmp_path / "ref"))  # uninterrupted
+    pipe.run(first)
+    ref.run(first)
+    assert pipe.catalog.latest_manifest(gold)["version"] == 1
+    v1_rows = _rows(pipe.catalog, gold)
+
+    _write_second_batch(fixture_dirs)
+    commit = pipe.catalog.replace_atomic
+
+    def crash_at_gold(df, name, *args, **kwargs):
+        if name == gold:
+            raise RuntimeError("injected crash at the gold commit")
+        return commit(df, name, *args, **kwargs)
+
+    monkeypatch.setattr(pipe.catalog, "replace_atomic", crash_at_gold)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        pipe.run(second)
+    monkeypatch.undo()
+    assert pipe.catalog.latest_manifest(gold)["version"] == 1
+    assert _rows(pipe.catalog, gold) == v1_rows
+
+    pipe.run(second)
+    ref.run(second)
+    for table in (spec["table"] for spec in second["gold"]):
+        assert _rows(pipe.catalog, table) == _rows(ref.catalog, table), table
+    assert _rows(pipe.catalog, gold) != v1_rows
 
 
 def test_silver_scd1_keeps_unmatched_keys(spark, tmp_path):

@@ -1,7 +1,7 @@
 """Unit sweep over operators with no prior test/oracle exercise
 (round-1 verdict: "no §2 row left untested"): sanitize, array<struct>
 flatten, as-of join edges, running totals, quarantine split,
-clustered rewrite, partitioned append, rows source, SCD guards."""
+partitioned append, rows source, SCD guards."""
 
 import os
 
@@ -21,7 +21,6 @@ from end_to_end_etl_pipeline_spark.operators.joins import asof_join
 from end_to_end_etl_pipeline_spark.operators.scd import prepare_scd_source
 from end_to_end_etl_pipeline_spark.operators.windows import running_total
 from end_to_end_etl_pipeline_spark.sinks.writers import (
-    clustered_rewrite,
     write_append,
     write_overwrite,
 )
@@ -83,20 +82,6 @@ def test_quarantine_split(spark):
     assert [r.k for r in good.collect()] == [1]
     assert sorted(r.v for r in bad.collect()) == [-7.0, 3.0]
     assert good.count() + bad.count() == df.count()
-
-
-def test_clustered_rewrite_preserves_data(spark, tmp_path):
-    path = str(tmp_path / "t")
-    df = spark.range(0, 1000).select(
-        (F.col("id") % 7).alias("k"), F.col("id").alias("v")
-    )
-    write_overwrite(df, path)
-    before = sorted(r.v for r in spark.read.parquet(path).collect())
-    clustered_rewrite(spark, path, cluster_by=["k"], target_partitions=2)
-    after_df = spark.read.parquet(path)
-    assert sorted(r.v for r in after_df.collect()) == before
-    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert len(files) <= 2  # compacted
 
 
 def test_write_append_partitioned(spark, tmp_path):

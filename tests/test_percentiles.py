@@ -134,79 +134,3 @@ def test_winsorized_price_stats_still_oracle_green(spark):
         "/root/testdata/sf0.01",
     )
     assert not probs, probs
-
-
-def _builtin_grouped(df, gcol, col, ps):
-    arr = ",".join(repr(p) + "D" for p in ps)
-    rows = df.groupBy(gcol).agg(
-        F.expr(f"percentile({col}, array({arr}))").alias("p")
-    ).collect()
-    return {r[gcol]: list(r["p"]) for r in rows}
-
-
-def test_grouped_matches_builtin_on_orders(spark):
-    """r13 (VERDICT r12 #4): the grouped bracket extension must replay
-    the built-in grouped percentile() bit-identically whenever it
-    accepts the input (accuracy low enough that sf0.01/sf0.1 group
-    sizes clear the n >= accuracy gate)."""
-    from end_to_end_etl_pipeline_spark.operators.percentiles import (
-        grouped_exact_percentiles,
-    )
-
-    for sfd in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        o = load(spark, sfd, "orders")
-        ps = [0.25, 0.50, 0.75, 0.90, 0.99]
-        got = grouped_exact_percentiles(
-            o, "o_orderpriority", "o_totalprice", ps, accuracy=250
-        )
-        ref = _builtin_grouped(o, "o_orderpriority", "o_totalprice", ps)
-        assert got is not None, f"operator declined at {sfd}"
-        assert got == ref, (sfd, got, ref)
-
-
-def test_grouped_declines_cleanly(spark):
-    """Small groups (n < accuracy), too many groups, or an empty
-    group column must return None — never a wrong number."""
-    from end_to_end_etl_pipeline_spark.operators.percentiles import (
-        grouped_exact_percentiles,
-    )
-
-    o = load(spark, "/root/testdata/sf0.001", "orders")
-    # default accuracy 100k >> any sf0.001 group: decline
-    assert grouped_exact_percentiles(
-        o, "o_orderpriority", "o_totalprice", [0.5]
-    ) is None
-    # max_groups exceeded: o_orderkey is unique per row
-    assert grouped_exact_percentiles(
-        o.limit(200), "o_orderkey", "o_totalprice", [0.5], accuracy=1,
-        max_groups=8,
-    ) is None
-
-
-@pytest.mark.full_suite  # fuzz/sweep tier (r13, VERDICT r12 #1)
-def test_grouped_matches_builtin_fuzz(spark):
-    """Duplicate-heavy and skewed-group frames: wherever the grouped
-    operator accepts, it must equal the built-in bit-for-bit."""
-    from end_to_end_etl_pipeline_spark.operators.percentiles import (
-        grouped_exact_percentiles,
-    )
-
-    random.seed(13)
-    for trial in range(4):
-        ngroups = random.choice([2, 3, 5])
-        rows = []
-        for gi in range(ngroups):
-            size = random.choice([800, 2000, 5000])
-            dup = random.choice([1, 4, 40])
-            rows += [
-                (f"g{gi}",
-                 float(random.randint(0, max(1, size // dup))) / 8.0)
-                for _ in range(size)
-            ]
-        df = spark.createDataFrame(rows, "g string, v double")
-        ps = [0.05, 0.5, 0.95]
-        got = grouped_exact_percentiles(df, "g", "v", ps, accuracy=400)
-        if got is None:
-            continue  # decline is always allowed; never wrong
-        ref = _builtin_grouped(df, "g", "v", ps)
-        assert got == ref, (trial, got, ref)

@@ -17,14 +17,14 @@ from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.operators.hashing import row_hash_col
 from end_to_end_etl_pipeline_spark.operators.scd import SCDEngine, current_snapshot
-from end_to_end_etl_pipeline_spark.sinks.writers import ParquetCatalog
+from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
 SCHEMA = "company_number string, name string, status string, market_cap long"
 
 
 @pytest.fixture()
 def catalog(spark, tmp_path):
-    return ParquetCatalog(spark, str(tmp_path / "lake"))
+    return ManifestCatalog(spark, f"file://{tmp_path}/lake")
 
 
 def _batch(spark, rows):

@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from end_to_end_etl_pipeline_spark.sinks.writers import ParquetCatalog
+from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 from end_to_end_etl_pipeline_spark.streaming import (
     foreach_batch_scd1,
     read_stream_files,
@@ -82,7 +82,7 @@ def test_stream_dedup_drops_replays(spark, stream_dir, tmp_path):
 
 
 def test_foreach_batch_scd1_upsert(spark, stream_dir, tmp_path):
-    catalog = ParquetCatalog(spark, str(tmp_path / "lake"))
+    catalog = ManifestCatalog(spark, f"file://{tmp_path}/lake")
     stream = read_stream_files(spark, stream_dir, SCHEMA, max_files_per_trigger=1)
     q = foreach_batch_scd1(
         stream,
@@ -359,7 +359,6 @@ def test_windowed_counts_drops_late_events_in_append(spark, tmp_path):
 
 
 def test_foreach_batch_agg_maintenance_matches_batch(spark, stream_dir, tmp_path):
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
     from end_to_end_etl_pipeline_spark.streaming.jobs import (
         foreach_batch_agg_maintenance,
     )
@@ -397,7 +396,6 @@ def test_agg_maintenance_skips_replayed_batch(spark, tmp_path):
     but before the checkpoint's batch commit replays that batch with
     the same batch_id on restart. The _batch_id rider inside the
     atomically-committed state must detect it and not double-count."""
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
     from end_to_end_etl_pipeline_spark.streaming.jobs import apply_agg_batch
 
     catalog = ManifestCatalog(spark, f"file://{tmp_path}/lake")
@@ -427,7 +425,6 @@ def test_foreach_batch_dedup_ingest_spans_triggers(spark, tmp_path):
     that near-dups an EARLIER batch's survivor must be rejected — the
     store spans triggers, which per-trigger dropDuplicates cannot.
     A replayed file (at-least-once) must not duplicate signatures."""
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
     from end_to_end_etl_pipeline_spark.streaming import foreach_batch_dedup_ingest
 
     base = "the quick brown fox jumps over the lazy dog and runs far away " * 4
@@ -479,7 +476,6 @@ def test_foreach_batch_cms_maintenance_matches_batch_sketch(
         cms_build,
         cms_estimate,
     )
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
     from end_to_end_etl_pipeline_spark.streaming.jobs import (
         foreach_batch_cms_maintenance,
     )
@@ -516,7 +512,6 @@ def test_foreach_batch_cms_maintenance_matches_batch_sketch(
 
 
 def test_cms_maintenance_skips_replayed_batch(spark, tmp_path):
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
     from end_to_end_etl_pipeline_spark.streaming.jobs import apply_cms_batch
 
     catalog = ManifestCatalog(spark, f"file://{tmp_path}/lake")
@@ -542,7 +537,6 @@ def test_foreach_batch_scd2_history_and_replay_convergence(spark, tmp_path):
     bucketed dimension must hold both history legs with correct
     validity stamps, and re-applying the second batch (at-least-once
     replay) must leave the state byte-identical (zero new legs)."""
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
     from end_to_end_etl_pipeline_spark.streaming.jobs import foreach_batch_scd2
 
     d = str(tmp_path / "cdc")
@@ -601,7 +595,6 @@ def test_foreach_batch_scd2_equal_timestamp_tie_is_content_deterministic(
     constant within a window partition and cannot break a tie).
     Replay convergence depends on this — a nondeterministic winner
     would emit a spurious history leg on at-least-once redelivery."""
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
     from end_to_end_etl_pipeline_spark.streaming.jobs import foreach_batch_scd2
 
     rows = [
@@ -639,7 +632,6 @@ def test_foreach_batch_ann_ingest_appends_and_replay_guard(spark, tmp_path):
         write_ivfpq_store,
     )
     from end_to_end_etl_pipeline_spark.operators.pq import pq_train
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
     from end_to_end_etl_pipeline_spark.streaming.jobs import (
         foreach_batch_ann_ingest,
     )
@@ -716,7 +708,6 @@ def test_foreach_batch_text_index_ingest_appends_and_replay_guard(spark, tmp_pat
         text_index_search,
         write_text_index,
     )
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
     from end_to_end_etl_pipeline_spark.streaming.jobs import (
         foreach_batch_text_index_ingest,
     )
@@ -786,7 +777,6 @@ def test_foreach_batch_bitmap_uniques_exact_and_replay(spark, tmp_path):
     """Streamed per-day bitmap state must count EXACTLY the distinct
     users per day across micro-batches (recurring users never double-
     count), and a replayed batch id must be skipped."""
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
     from end_to_end_etl_pipeline_spark.streaming.jobs import (
         apply_bitmap_batch,
         foreach_batch_bitmap_uniques,
@@ -841,7 +831,6 @@ def test_foreach_batch_takedown_deletes_across_batches(spark, tmp_path):
         text_index_search,
         write_text_index,
     )
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
     from end_to_end_etl_pipeline_spark.streaming.jobs import (
         foreach_batch_takedown,
     )
@@ -905,7 +894,6 @@ def test_takedown_bridge_wired_to_scd2_member_deletion(spark, tmp_path):
         scd2_close_keys,
         scd2_next_state,
     )
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
     from end_to_end_etl_pipeline_spark.streaming.jobs import (
         foreach_batch_takedown,
     )
@@ -1033,7 +1021,6 @@ def test_index_ingest_bridges_survive_midstream_crash(spark, tmp_path):
         text_index_search,
         write_text_index,
     )
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
     from end_to_end_etl_pipeline_spark.streaming.jobs import (
         foreach_batch_dedup_ingest,
         foreach_batch_text_index_ingest,
