@@ -156,11 +156,9 @@ BENCH_QUERIES = [
     # query group in ONE cogrouped-Arrow job — the scale-right plan
     "hybrid_doc_retrieval",
     "mmr_diverse_rerank_grouped",
-    # its plan-flat twin (same oracle), retained as the A/B: k
-    # driver-coordinated steps x eager localCheckpoint barriers —
-    # quantifies what fixed per-job latency costs the iterative
-    # strategy (the pq_topk/ivfpq_store_topk pattern, applied to
-    # driver-coordinated iteration instead of index amortization)
+    # its JVM twin (same oracle), retained as the A/B: the greedy
+    # steps run as one higher-order aggregate per query row — one JVM
+    # aggregate against one cogrouped-Arrow job
     "mmr_diverse_rerank",
     # round 9 (additive): the compressed-codec path — JVM-side PNG
     # encode (filters/zlib/CRCs as one projection) -> stdlib-zlib

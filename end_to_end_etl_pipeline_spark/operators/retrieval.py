@@ -28,10 +28,10 @@ from __future__ import annotations
 from functools import reduce
 from typing import Iterable, Tuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from end_to_end_etl_pipeline_spark.operators.similarity import dot
+from end_to_end_etl_pipeline_spark.operators.similarity import cosine, dot
 
 
 def bm25_scores(
@@ -221,44 +221,33 @@ def rrf_fuse(
     )
 
 
-def _mmr_frames(
+def _mmr_base(
     candidates: DataFrame,
     query_col: str,
     id_col: str,
     vec_col: str,
     rel_col: str,
-) -> Tuple[DataFrame, DataFrame]:
-    """Shared prep for both MMR execution strategies: the normalized
-    candidate frame (``__q,__id,__rel,__v,__n``) and the per-query
-    pairwise cosine frame (``__q,__ida,__idb,__sim`` — 6dp-rounded,
-    self-pairs excluded).  One home for the similarity expressions so
-    the plan-flat and grouped-map paths are bit-identical by
-    construction."""
+) -> DataFrame:
+    """Shared prep for both MMR execution strategies: the candidates
+    as ``__q,__id,__rel`` plus the vector as ``array<double>`` (``__v``)
+    and its norm (``__n``)."""
     v = F.col(vec_col).cast("array<double>")
-    base = candidates.select(
+    return candidates.select(
         F.col(query_col).alias("__q"),
         F.col(id_col).alias("__id"),
         F.col(rel_col).alias("__rel"),
         v.alias("__v"),
         F.sqrt(dot(v, v)).alias("__n"),
     )
-    a = base.select("__q", F.col("__id").alias("__ida"),
-                    F.col("__v").alias("__va"), F.col("__n").alias("__na"))
-    b = base.select("__q", F.col("__id").alias("__idb"),
-                    F.col("__v").alias("__vb"), F.col("__n").alias("__nb"))
-    sim = (
-        a.join(b, "__q")
-        .filter(F.col("__ida") != F.col("__idb"))
-        .select(
-            "__q", "__ida", "__idb",
-            F.round(
-                dot(F.col("__va"), F.col("__vb"))
-                / (F.col("__na") * F.col("__nb")),
-                6,
-            ).alias("__sim"),
-        )
-    )
-    return base, sim
+
+
+def _mmr_sim(
+    a_vec: Column, b_vec: Column, a_norm: Column, b_norm: Column
+) -> Column:
+    """The 6dp pairwise cosine both MMR strategies select against —
+    one home for the expression, so the twins are bit-identical by
+    construction."""
+    return F.round(cosine(a_vec, b_vec, a_norm, b_norm), 6)
 
 
 def mmr_select(
@@ -277,73 +266,104 @@ def mmr_select(
     context builder (don't spend the context window on five copies of
     the same passage) and of eval-set mining.
 
-    ``candidates`` is a per-query frame (query, id, vec, rel) that is
-    ALREADY bounded (a retrieval arm's top-N) — MMR is quadratic in
-    the candidate count by definition, so the operator materializes
-    the per-query pairwise cosine matrix once (≤ n_queries · N² rows,
-    never corpus-scale) and runs ``k`` plan-flat greedy steps over
-    it.  Each step's pick and the shrinking remainder are
-    ``localCheckpoint``ed: candidate-scale frames, executor-side, so
-    plan depth stays O(1) per step instead of exponential in ``k``
-    (the iterative-lineage trap; same treatment as operators/bpe.py).
+    Contract: ``candidates`` is a per-query frame (query, id, vec,
+    rel) that is ALREADY bounded (a retrieval arm's top-N), with ids
+    unique per query and rel non-null — MMR is quadratic in the
+    candidate count by definition.  Each query's candidates are
+    collected into ONE row (sorted by id), and everything after that
+    runs in higher-order functions over the row: the N×N pairwise
+    6dp cosine matrix (N² doubles per row, never corpus-scale), then
+    the ``k`` greedy steps as one ``aggregate`` over a state of
+    per-candidate best-sim, a taken mask and the picks.  No driver
+    loop, no checkpoint, no window: the grouping on the query key is
+    the only exchange the operator can add, and none when the input
+    is already partitioned by query.
+    Picking stops when candidates run out (k may exceed N).
 
     Determinism: rel must arrive 6dp-rounded; pairwise sims and step
-    scores round to 6dp; ties break on lowest id.  ``best_sim`` is
+    scores round to 6dp; the argmax is a strict ``>`` over the
+    id-sorted list, so ties break on lowest id.  ``best_sim`` is
     seeded at −1.0 (below any cosine) so one uniform score formula
     covers step 1 — a constant per-query offset that cannot change
     the argmax — which lets a DuckDB unrolled-CTE oracle replay every
     pick exactly.  Returns (query, id, mmr_rank 1..k, rel)."""
-    base, sim = _mmr_frames(candidates, query_col, id_col, vec_col, rel_col)
-    # sim descends from the same base as rem; rename its join columns
-    # so the per-step condition below is attribute-unambiguous (the
-    # dataset-id disambiguation resolves df["c"] == df2["c"] self-join
-    # references correctly, but only after warning on every step).
-    sim = sim.select(
-        F.col("__q").alias("__sq"),
-        F.col("__ida").alias("__sida"),
-        F.col("__idb").alias("__sidb"),
-        "__sim",
-    ).localCheckpoint(eager=True)
+    if k < 1:
+        raise ValueError(f"mmr_select needs k >= 1, got {k}")
     om = 1.0 - lam
-    rem = base.select(
-        "__q", "__id", "__rel", F.lit(-1.0).alias("__bs")
-    ).localCheckpoint(eager=True)
-    picked = []
-    for i in range(1, k + 1):
-        w = Window.partitionBy("__q").orderBy(
-            F.col("__score").desc(), F.col("__id").asc()
+    cand = (
+        _mmr_base(candidates, query_col, id_col, vec_col, rel_col)
+        .groupBy("__q")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct("__id", "__rel", "__v", "__n"))
+            ).alias("__c")
         )
-        sel = (
-            rem.withColumn(
-                "__score",
-                F.round(F.lit(lam) * F.col("__rel") - F.lit(om) * F.col("__bs"), 6),
+    )
+    c = F.col("__c")
+    n = F.size(c)
+
+    def argmax(st: Column) -> Column:
+        """Index of the best untaken candidate, −1 once none is left."""
+        def better(best: Column, j: Column) -> Column:
+            s = F.round(
+                F.lit(lam) * c[j]["__rel"] - F.lit(om) * st["bs"][j], 6
             )
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("__q", "__id", "__rel", F.lit(i).alias("mmr_rank"))
-            .localCheckpoint(eager=True)
+            return F.when(
+                ~st["taken"][j] & ((best["i"] < 0) | (s > best["s"])),
+                F.struct(j.alias("i"), s.alias("s")),
+            ).otherwise(best)
+
+        none = F.struct(
+            F.lit(-1).alias("i"), F.lit(None).cast("double").alias("s")
         )
-        picked.append(sel)
-        if i < k:
-            rem = (
-                rem.join(
-                    sel.select("__q", F.col("__id").alias("__sel")), "__q"
-                )
-                .filter(F.col("__id") != F.col("__sel"))
-                .join(
-                    sim,
-                    (F.col("__sq") == F.col("__q"))
-                    & (F.col("__sida") == F.col("__id"))
-                    & (F.col("__sidb") == F.col("__sel")),
-                )
-                .select(
-                    "__q", "__id", "__rel",
-                    F.greatest(F.col("__bs"), F.col("__sim")).alias("__bs"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    out = reduce(DataFrame.unionByName, picked)
-    return out.select(
+        return F.aggregate(F.sequence(F.lit(0), n - 1), none, better)["i"]
+
+    def absorb(st: Column, p: Column) -> Column:
+        """The state after picking candidate ``p``."""
+        return F.struct(
+            st["sim"].alias("sim"),
+            F.transform(
+                st["bs"], lambda b, j: F.greatest(b, st["sim"][j][p])
+            ).alias("bs"),
+            F.transform(st["taken"], lambda t, j: t | (j == p)).alias("taken"),
+            F.concat(st["picks"], F.array(p)).alias("picks"),
+        )
+
+    # Higher-order functions run interpreted with no subexpression
+    # elimination, so the costly values are bound once: the sim
+    # matrix rides in the initial state (built once, not once per
+    # step), and one step folds its pick (if any) into the state, so
+    # the argmax runs once per step.  The whole greedy state is ONE
+    # struct expression exploded once — sibling select columns sharing
+    # nested-lambda subtrees trip Spark 4.1's codegen subexpression
+    # elimination (same fix as pairwise_ce_features).
+    init = F.struct(
+        F.transform(
+            c,
+            lambda a: F.transform(
+                c, lambda b: _mmr_sim(a["__v"], b["__v"], a["__n"], b["__n"])
+            ),
+        ).alias("sim"),
+        F.array_repeat(F.lit(-1.0), n).alias("bs"),
+        F.array_repeat(F.lit(False), n).alias("taken"),
+        F.array().cast("array<int>").alias("picks"),
+    )
+    picks = F.aggregate(
+        F.sequence(F.lit(1), F.lit(k)),
+        init,
+        lambda st, _: F.aggregate(
+            F.filter(F.array(argmax(st)), lambda p: p >= 0), st, absorb
+        ),
+    )["picks"]
+    ranked = F.transform(
+        picks,
+        lambda p, r: F.struct(
+            c[p]["__id"].alias("__id"),
+            (r + 1).alias("mmr_rank"),
+            c[p]["__rel"].alias("__rel"),
+        ),
+    )
+    return cand.select("__q", F.inline(ranked)).select(
         F.col("__q").alias(query_col),
         F.col("__id").alias(id_col),
         "mmr_rank",
@@ -362,20 +382,15 @@ def mmr_select_grouped(
 ) -> DataFrame:
     """``mmr_select`` with the greedy loop executed per query group in
     an Arrow cogrouped-map (``cogroup(...).applyInPandas``) instead of
-    ``k`` driver-coordinated plan-flat steps.
+    one JVM higher-order ``aggregate`` per query row.
 
-    Same semantics, different execution strategy — and the one that is
-    right at scale: MMR is embarrassingly parallel BY QUERY (each
-    query's greedy selection touches only its own bounded candidate
-    list), so with millions of in-flight queries the plan-flat path's
-    ``k`` global jobs — each an eager ``localCheckpoint`` barrier over
-    ALL queries — pay ``~2k`` fixed job latencies for no cross-query
-    benefit.  Here the candidate frame and the ONCE-materialized
-    pairwise-cosine frame (both produced by the exact expressions of
-    ``_mmr_frames`` — the heavy float math never leaves the JVM)
-    cogroup on the query key, and the per-query selection loop runs
-    in-process over the two small pandas frames: ONE shuffle, one job,
-    per-group memory bounded by the candidate cap (N + N² rows).
+    Same semantics, different execution strategy — the bench A/B twin
+    of ``mmr_select``.  The candidate frame and the pairwise-cosine
+    frame (a self-join on the query key, its sims from ``_mmr_sim`` —
+    the heavy float math never leaves the JVM) cogroup on the query
+    key, and the per-query selection loop runs in-process over the two
+    small pandas frames: ONE shuffle, one job, per-group memory bounded
+    by the candidate cap (N + N² rows).
 
     Bit-parity with ``mmr_select``: the inputs to the greedy loop (rel
     and 6dp-rounded sims) are the same JVM-computed doubles; the step
@@ -383,22 +398,33 @@ def mmr_select_grouped(
     ``java.math.BigDecimal.valueOf(double).setScale(6, HALF_UP)`` ≡
     ``Decimal(repr(x)).quantize(1e-6, ROUND_HALF_UP)`` (both round the
     SHORTEST decimal rendering of the double, not its exact binary
-    expansion), and IEEE evaluation order matches the plan-flat
-    expression tree.  Ties break on lowest id; ``best_sim`` seeds at
-    −1.0; picking stops when candidates run out (k may exceed N).
+    expansion), and IEEE evaluation order matches the JVM expression
+    tree.  Ties break on lowest id; ``best_sim`` seeds at −1.0;
+    picking stops when candidates run out (k may exceed N).
     Zero-norm vectors (NaN cosine) are outside the contract of both
     paths — candidates arrive from a cosine-scored arm.
-    Proven equivalent on real data by tests/test_retrieval.py's
-    differential sweep.  Returns (query, id, mmr_rank 1..k, rel)."""
+    Proven equivalent by tests/test_retrieval.py's differential
+    sweeps.  Returns (query, id, mmr_rank 1..k, rel)."""
     import pandas as pd
 
-    base, sim = _mmr_frames(candidates, query_col, id_col, vec_col, rel_col)
+    base = _mmr_base(candidates, query_col, id_col, vec_col, rel_col)
+    a = base.select("__q", F.col("__id").alias("__ida"),
+                    F.col("__v").alias("__va"), F.col("__n").alias("__na"))
+    b = base.select("__q", F.col("__id").alias("__idb"),
+                    F.col("__v").alias("__vb"), F.col("__n").alias("__nb"))
+    sim = (
+        a.join(b, "__q")
+        .filter(F.col("__ida") != F.col("__idb"))
+        .select("__q", "__ida", "__idb",
+                _mmr_sim(F.col("__va"), F.col("__vb"),
+                         F.col("__na"), F.col("__nb")).alias("__sim"))
+    )
     # LAZY lineage break (plan becomes a LogicalRDD, materialized
     # inside the same action): cand and sim share `candidates`'
     # attribute ids, which trips the ambiguous-self-join check when
-    # both sides cogroup on __q. No eager job — unlike the plan-flat
-    # path there is no iteration here, so lineage depth is not the
-    # concern, only attribute identity.
+    # both sides cogroup on __q. No eager job: there is no iteration
+    # here, so lineage depth is not the concern, only attribute
+    # identity.
     sim = sim.localCheckpoint(eager=False)
     cand = base.select("__q", "__id", "__rel")
     q_t = candidates.schema[query_col].dataType.simpleString()
@@ -445,9 +471,8 @@ def mmr_select_grouped(
             remaining.discard(pick)
             for i in remaining:
                 # .get, not []: an out-of-contract missing sim pair
-                # (duplicate ids upstream) degrades the same way the
-                # plan-flat path does (row's best_sim unchanged)
-                # instead of raising KeyError
+                # (duplicate ids upstream) leaves the row's best_sim
+                # unchanged instead of raising KeyError
                 s = simm.get((i, pick))
                 if s is not None and s > bs[i]:
                     bs[i] = s

@@ -1507,7 +1507,7 @@ def _mmr_ctes(k: int, lam: float) -> str:
     return ",\n    ".join(parts)
 
 
-#: shared by the plan-flat query and its grouped-map twin — ONE
+#: shared by the JVM-aggregate query and its grouped-map twin — ONE
 #: oracle, two execution strategies, so a result divergence between
 #: them cannot hide behind oracle drift.
 _MMR_ORACLE = f"""
@@ -1560,11 +1560,12 @@ def _mmr_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     "window diversification step of a RAG stack: from each query's "
     "exact-cosine top-20 candidates, greedily pick 5 by "
     "0.7*rel - 0.3*max_cosine_to_already_picked, so near-duplicate "
-    "passages don't crowd out coverage. Pure-DataFrame unrolled "
-    "greedy (k plan-flat steps, each pick localCheckpointed at "
-    "n_queries scale - the BPE/Lloyd's iterative pattern), pairwise "
-    "candidate sims materialized ONCE at candidate scale (<= q*N^2, "
-    "never corpus scale). Scores 6dp, ties to lowest doc_id, "
+    "passages don't crowd out coverage. Pure-JVM: each query's "
+    "id-sorted candidates collect into one row, the pairwise 6dp "
+    "cosine matrix is built in-row (<= N^2 doubles, never corpus "
+    "scale) and the 5 greedy steps run as ONE higher-order aggregate "
+    "- no driver loop, no checkpoint, no Python; the query runs only "
+    "the candidate build's stages. Scores 6dp, ties to lowest doc_id, "
     "best_sim seeded at -1.0 so one score formula covers step 1 "
     "(constant per-query offset, argmax unchanged) - the DuckDB "
     "oracle unrolls the identical 5 steps and replays every pick "
@@ -1588,17 +1589,16 @@ def mmr_diverse_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mmr_diverse_rerank_grouped",
     oracle=_MMR_ORACLE,
     doc="The SAME maximal-marginal-relevance re-rank as "
-    "mmr_diverse_rerank, executed by the scale-right strategy "
+    "mmr_diverse_rerank, executed by the other strategy "
     "(operators/retrieval.mmr_select_grouped): MMR is parallel BY "
     "QUERY — each query's greedy loop touches only its own bounded "
-    "top-20 — so instead of k global plan-flat steps (each an eager "
-    "localCheckpoint barrier over all queries, ~2k fixed job "
-    "latencies), the JVM-computed candidates and pairwise 6dp "
-    "cosines cogroup on the query key and the selection loop runs "
-    "in an Arrow cogrouped-map: ONE shuffle, one job, per-group "
-    "memory <= N + N^2. Both twins answer to the identical unrolled-"
-    "CTE DuckDB oracle, so the strategies are provably "
-    "interchangeable; the step-score replays Spark's "
+    "top-20 — so the JVM-computed candidates and pairwise 6dp cosines "
+    "(a self-join on the query key) cogroup on the query key and the "
+    "selection loop runs in an Arrow cogrouped-map: ONE shuffle, one "
+    "job, per-group memory <= N + N^2. The bench A/B twin of "
+    "mmr_diverse_rerank's one JVM aggregate; both answer to the "
+    "identical unrolled-CTE DuckDB oracle, so the strategies are "
+    "provably interchangeable; the step-score replays Spark's "
     "BigDecimal-HALF_UP rounding exactly.",
     tags=("vectors", "search"),
 )

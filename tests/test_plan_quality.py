@@ -150,6 +150,48 @@ def test_no_python_row_udfs_in_batch_queries(spark):
         assert "BatchEvalPython" not in _plan(spark, name), name
 
 
+def _noop_write(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def test_mmr_diverse_rerank_plan_is_jvm_only_no_checkpoint(spark):
+    """The greedy re-rank runs in higher-order functions over one
+    grouped row per query: no Python evaluator, no cogrouped-Arrow
+    map and no checkpointed step frame (Scan ExistingRDD)."""
+    plan = _plan(spark, "mmr_diverse_rerank")
+    for op in ("BatchEvalPython", "ArrowEvalPython",
+               "FlatMapCoGroupsInPandas", "Scan ExistingRDD"):
+        assert op not in plan, op
+
+
+def test_mmr_diverse_rerank_runs_no_stage_past_its_candidates(
+    spark, run_counted
+):
+    """Stage pin: the whole re-rank adds no stage to the candidate
+    build it consumes (5 and 5 at 4 cores; the k checkpointed greedy
+    steps it replaced ran 44)."""
+    from end_to_end_etl_pipeline_spark.queries.vectors import _mmr_candidates
+
+    _, _, cand = run_counted(lambda: _noop_write(_mmr_candidates(spark, SF)))
+    _, _, full = run_counted(
+        lambda: _noop_write(REGISTRY["mmr_diverse_rerank"].spark(spark, SF))
+    )
+    assert full <= cand, (full, cand)
+
+
+def test_mmr_diverse_rerank_leaves_no_persisted_rdds(spark):
+    """No state left in the session: an action on the query persists
+    no RDD (a checkpointed greedy step would stay persisted)."""
+    jsc = spark.sparkContext._jsc
+
+    def persisted() -> set:
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    before = persisted()
+    _noop_write(REGISTRY["mmr_diverse_rerank"].spark(spark, SF))
+    assert persisted() - before == set()
+
+
 def test_kanonymity_grouped_counts_no_windows(spark):
     """Class sizes must come from grouped (map-side-partial) counts,
     never a window over the QI partition — a window ships every fact

@@ -268,19 +268,11 @@ def test_retrieval_stack_invariants_randomized(spark):
     assert len(picks) == 3 * 4
 
 
-def test_mmr_grouped_differential_matches_plan_flat(spark):
-    """The grouped-map strategy must replay the plan-flat picks
-    EXACTLY — same ids, ranks, and rel doubles — on a randomized
-    fixed-seed candidate set big enough to exercise real greedy
-    interaction (3 queries x 25 candidates, k=6 > some tie room)."""
+def _mmr_random_candidates(spark, seed: int):
+    """3 queries x 25 candidates, 8-d vectors on a 3dp grid, 6dp rel."""
     import random
 
-    from end_to_end_etl_pipeline_spark.operators.retrieval import (
-        mmr_select,
-        mmr_select_grouped,
-    )
-
-    rng = random.Random(13)
+    rng = random.Random(seed)
     dim = 8
     rows = [
         (q, d, [round(rng.random(), 3) for _ in range(dim)],
@@ -288,17 +280,106 @@ def test_mmr_grouped_differential_matches_plan_flat(spark):
         for q in range(3)
         for d in rng.sample(range(200), 25)
     ]
-    cand = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "query_id bigint, doc_id bigint, v array<double>, rel double"
     )
-    flat = mmr_select(cand, "query_id", "doc_id", "v", "rel", k=6, lam=0.7)
-    grp = mmr_select_grouped(
-        cand, "query_id", "doc_id", "v", "rel", k=6, lam=0.7
+
+
+def _mmr_twins(cand, k: int, lam: float = 0.7):
+    """Both strategies' picks on the same candidates, sorted rows."""
+    from end_to_end_etl_pipeline_spark.operators.retrieval import (
+        mmr_select,
+        mmr_select_grouped,
     )
-    f = sorted(map(tuple, flat.collect()))
-    g = sorted(map(tuple, grp.collect()))
+
+    return [
+        sorted(map(tuple, fn(cand, "query_id", "doc_id", "v", "rel",
+                             k=k, lam=lam).collect()))
+        for fn in (mmr_select, mmr_select_grouped)
+    ]
+
+
+def test_mmr_grouped_differential_matches_plan_flat(spark):
+    """The grouped-map strategy must replay the JVM-aggregate picks
+    EXACTLY — same ids, ranks, and rel doubles — on a randomized
+    fixed-seed candidate set big enough to exercise real greedy
+    interaction (3 queries x 25 candidates, k=6 > some tie room)."""
+    f, g = _mmr_twins(_mmr_random_candidates(spark, 13), k=6)
     assert f == g
     assert len(f) == 3 * 6
+
+
+@pytest.mark.parametrize("seed", [7, 29])
+def test_mmr_twins_differential_more_seeds(spark, seed):
+    f, g = _mmr_twins(_mmr_random_candidates(spark, seed), k=6)
+    assert f == g
+    assert len(f) == 3 * 6
+
+
+_MMR_SCHEMA = "query_id bigint, doc_id bigint, v array<double>, rel double"
+
+#: (candidate rows, k, expected (query_id, doc_id, mmr_rank) picks)
+_MMR_EDGES = {
+    "empty": ([], 3, []),
+    # duplicate vectors and equal rel: every score tie breaks on the
+    # lowest id — 3 first, the orthogonal 4 next (its best_sim is 0,
+    # the duplicates' is 1), then the duplicates 5 and 9 in id order
+    "ties_to_lowest_id": (
+        [(0, 9, [1.0, 0.0], 0.5), (0, 5, [1.0, 0.0], 0.5),
+         (0, 3, [1.0, 0.0], 0.5), (0, 4, [0.0, 1.0], 0.5)],
+        4,
+        [(0, 3, 1), (0, 4, 2), (0, 5, 3), (0, 9, 4)],
+    ),
+    "single_candidate": (
+        [(0, 1, [0.6, 0.8], 0.4), (1, 2, [1.0, 0.0], 0.9),
+         (1, 3, [0.0, 1.0], 0.8)],
+        3,
+        [(0, 1, 1), (1, 2, 1), (1, 3, 2)],
+    ),
+    "k_1": (
+        [(0, 1, [1.0, 0.0], 0.2), (0, 2, [0.0, 1.0], 0.9),
+         (1, 5, [1.0, 0.0], 0.7), (1, 4, [0.0, 1.0], 0.7)],
+        1,
+        [(0, 2, 1), (1, 4, 1)],
+    ),
+    "k_past_n": (
+        [(0, 1, [1.0, 0.0], 0.9), (0, 2, [0.6, 0.8], 0.3)],
+        10,
+        [(0, 1, 1), (0, 2, 2)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_MMR_EDGES))
+def test_mmr_twins_edge_contract(spark, case):
+    """Edge inputs keep the documented contract on BOTH strategies,
+    and the two agree row for row (ids, ranks and rel doubles)."""
+    from end_to_end_etl_pipeline_spark.operators.retrieval import (
+        mmr_select,
+        mmr_select_grouped,
+    )
+
+    rows, k, want = _MMR_EDGES[case]
+    cand = spark.createDataFrame(rows, _MMR_SCHEMA)
+    f, g = _mmr_twins(cand, k=k)
+    assert f == g
+    assert [r[:3] for r in f] == sorted(want)
+    rel = {(q, d): r for q, d, _, r in rows}
+    assert all(r == rel[(q, d)] for q, d, _, r in f)
+    for fn in (mmr_select, mmr_select_grouped):
+        out = fn(cand, "query_id", "doc_id", "v", "rel", k=k)
+        assert [(x.name, x.dataType.simpleString()) for x in out.schema] == [
+            ("query_id", "bigint"), ("doc_id", "bigint"),
+            ("mmr_rank", "int"), ("rel", "double"),
+        ]
+
+
+def test_mmr_select_rejects_k_below_one(spark):
+    from end_to_end_etl_pipeline_spark.operators.retrieval import mmr_select
+
+    cand = spark.createDataFrame([(0, 1, [1.0, 0.0], 0.5)], _MMR_SCHEMA)
+    with pytest.raises(ValueError, match="k >= 1"):
+        mmr_select(cand, "query_id", "doc_id", "v", "rel", k=0)
 
 
 def test_mmr_grouped_handles_k_past_candidates_and_plan(spark):
@@ -318,7 +399,7 @@ def test_mmr_grouped_handles_k_past_candidates_and_plan(spark):
     )
     out = mmr_select_grouped(cand, "query_id", "doc_id", "v", "rel", k=5, lam=0.5)
     rows = out.collect()
-    # query 0: same hand-computed order as the plan-flat unit test;
+    # query 0: same hand-computed order as the mmr_select unit test;
     # query 1: a single candidate, no sim pairs at all
     order = [r["doc_id"] for r in sorted(
         (r for r in rows if r["query_id"] == 0), key=lambda r: r["mmr_rank"])]
@@ -400,7 +481,7 @@ def test_mmr_grouped_preserves_non_double_rel_type(spark):
     flat = mmr_select(cand, "query_id", "doc_id", "v", "rel", k=2)
     grp = mmr_select_grouped(cand, "query_id", "doc_id", "v", "rel", k=2)
     # dtype parity (nullability differs benignly: Arrow-map output
-    # columns are always nullable, row_number's is not)
+    # columns are always nullable, the JVM aggregate's rank is not)
     assert [(f.name, f.dataType) for f in grp.schema.fields] == [
         (f.name, f.dataType) for f in flat.schema.fields
     ]
