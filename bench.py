@@ -313,8 +313,8 @@ def _build_dedup_store(spark, sf_dir: str):
 
     tmpdir = tempfile.mkdtemp(prefix="bench_dedup_")
     cat = ManifestCatalog(spark, f"file://{tmpdir}/lake")
-    # plain (unbucketed) mode: the r07 crossover study (SCALE.md,
-    # scripts/dedup_crossover_study.py) measured plain vs
+    # plain (unbucketed) mode: the r07 crossover study (SCALE.md
+    # "Dedup-store crossover") measured plain vs
     # band_buckets=16 at 4.7k/47k/142k signature rows — plain wins
     # at every point through 30x (1.25/1.13/1.89s vs
     # 1.46/2.10/2.11s warm): the probe is stage-overhead-dominated
@@ -471,8 +471,8 @@ def emit(
         # normalization is drift-LOCAL — mid-pass tenant noise during
         # query X inflates X's own canary too and divides out. This
         # is the primary per-query regression signal; the fleet-pass
-        # warm-min stays for totals. (scripts/bench_isolation.py
-        # remains the fresh-session adjudication tool.)
+        # warm-min stays for totals. (Fresh-session adjudication:
+        # the sidecar's isolation_warm_min, OPTIMIZATION_r12.md.)
         details["queries_paired_sec"] = {
             n: round(v["sec"], 3) for n, v in paired.items()
         }

@@ -43,8 +43,6 @@ from end_to_end_etl_pipeline_spark.operators.dedup import dedup_by_key
 from end_to_end_etl_pipeline_spark.operators.joins import anti_join
 from end_to_end_etl_pipeline_spark.operators.hashing import with_row_hash
 
-SCD_COLS = ("row_hash", "effective_from", "effective_to", "is_current")
-
 # Open-ended validity sentinel for current SCD2 rows.  Deliberately within
 # pandas' ns-timestamp range (max 2262-04-11): downstream conformance
 # harnesses round-trip results through pandas, and the conventional
@@ -56,7 +54,6 @@ def prepare_scd_source(
     src: DataFrame,
     keys: Sequence[str],
     dedup_order_by: Sequence[Column | str] | None = None,
-    check_unique: bool = True,
 ) -> DataFrame:
     """Guard a merge source batch before any SCD apply.
 
@@ -69,9 +66,7 @@ def prepare_scd_source(
       current⟕source join and breaks the one-current-row-per-key
       invariant — the reference's Delta MERGE raises on multi-match
       (``utils/scd/scd.py:55``); a silent engine must not do worse.
-      The uniqueness probe is one narrow agg job over (keys) — set
-      ``check_unique=False`` to skip it when the source is known-unique
-      (e.g. output of an aggregation on the keys).
+      The uniqueness probe is one narrow agg job over (keys).
     """
     keys = list(keys)
     src = src.filter(
@@ -79,20 +74,19 @@ def prepare_scd_source(
     )
     if dedup_order_by is not None:
         return dedup_by_key(src, keys, dedup_order_by)
-    if check_unique:
-        dup = (
-            src.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(1)
-            .count()
+    dup = (
+        src.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") > 1)
+        .limit(1)
+        .count()
+    )
+    if dup:
+        raise ValueError(
+            f"SCD source batch has duplicate business keys {keys}; "
+            "pass dedup_order_by= for a deterministic keep-policy "
+            "or dedup upstream"
         )
-        if dup:
-            raise ValueError(
-                f"SCD source batch has duplicate business keys {keys}; "
-                "pass dedup_order_by= for a deterministic keep-policy "
-                "or dedup upstream"
-            )
     return src
 
 
@@ -112,12 +106,11 @@ class SCDEngine:
         table: str,
         keys: Sequence[str],
         dedup_order_by=None,
-        check_unique: bool = True,
     ) -> None:
         """K4 — upsert: matched rows take the source's full row (fixes
         §2.11-8), unmatched target rows survive, new keys insert."""
         keys = list(keys)
-        source = prepare_scd_source(source, keys, dedup_order_by, check_unique)
+        source = prepare_scd_source(source, keys, dedup_order_by)
         if not self.catalog.exists(table):
             self.catalog.replace_atomic(source, table)
             return
@@ -134,11 +127,10 @@ class SCDEngine:
         tracked: Sequence[str],
         as_of: _dt.datetime | str | None = None,
         dedup_order_by=None,
-        check_unique: bool = True,
     ) -> None:
         """K5+K2+J2 — expire changed current rows, insert new versions,
         as one atomic publish (merge logic: :func:`scd2_next_state`)."""
-        source = prepare_scd_source(source, keys, dedup_order_by, check_unique)
+        source = prepare_scd_source(source, keys, dedup_order_by)
         target = self.catalog.read(table) if self.catalog.exists(table) else None
         self.catalog.replace_atomic(
             scd2_next_state(target, source, keys, tracked, as_of), table
@@ -152,13 +144,12 @@ class SCDEngine:
         keys: Sequence[str],
         tracked: Sequence[str],
         dedup_order_by=None,
-        check_unique: bool = True,
     ) -> None:
         """K6 — previous-value columns: on change, ``previous_<c>`` ←
         old current value; inserts get NULL previous
         (reference ``utils/scd/scd.py:114-143``)."""
         keys = list(keys)
-        source = prepare_scd_source(source, keys, dedup_order_by, check_unique)
+        source = prepare_scd_source(source, keys, dedup_order_by)
         src = with_row_hash(source, tracked)
         if not self.catalog.exists(table):
             init = src

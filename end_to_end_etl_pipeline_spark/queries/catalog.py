@@ -28,8 +28,8 @@ Determinism rules for oracle-matched queries:
   DECIMAL(18,0) — long-fast-path adds, no overflow cliff (the
   decimal(28,0) buffer absorbs >9.2e18 via BigDecimal) — divided
   back by the scale in exact decimal once per group; see
-  queries/core.py _rev/_charge/_sum_rev and
-  scripts/decimal_tax_study.py for the measured alternatives;
+  queries/core.py _rev/_charge/_sum_rev and SCALE.md "Exact-money
+  tax" for the measured alternatives;
 * never use current_date/now in matched queries — anchor literals;
 * deterministic tie-breaks on every window ordering.
 """

@@ -32,18 +32,14 @@ from end_to_end_etl_pipeline_spark.queries.catalog import load, register
 
 ANCHOR = "1998-12-01"  # fixed anchor instead of current_date: deterministic
 
-# --- exact-money arithmetic (r09 migration; r10 fast path + A/B seam)
+# --- exact-money arithmetic (r09 migration; r10 fast path)
 #: The 13 product-sum money queries route their revenue expressions
-#: through the helpers below. MONEY_EXACT=True (the ONLY shipped and
-#: verified form — see the determinism rules in queries/catalog.py)
-#: computes order-free EXACT money sums; False restores the pre-r09
-#: double pipeline and exists ONLY so scripts/decimal_tax_study.py
-#: can price the exactness tax in one session with zero code
-#: duplication. Tests and the driver always run with True; the double
-#: form can land a cent off at scale (proven at the r09 sf1 sweep)
-#: and must never ship.
+#: through the helpers below, which compute order-free EXACT money
+#: sums (see the determinism rules in queries/catalog.py). A double
+#: pipeline can land a cent off at scale (proven at the r09 sf1
+#: sweep) and must never ship.
 #:
-#: r10 FAST PATH (scripts/decimal_tax_study.py kernels): the r09 form
+#: r10 FAST PATH (SCALE.md "Exact-money tax" kernels): the r09 form
 #: multiplied decimal(12,2) x decimal(3,2) per row and summed the
 #: decimal(16,4)/(20,6) products — every multiply on Spark's
 #: BigDecimal path and every add against a >18-digit (non-compact)
@@ -65,7 +61,6 @@ ANCHOR = "1998-12-01"  # fixed anchor instead of current_date: deterministic
 #: pay <=1.10x vs double (revenue_by_nation 1.72->1.10 abs
 #: 1.56->0.99s); the agg-dominated pair (pricing_summary 1.63,
 #: promo_revenue_ratio 1.38) sits at the exact-sum floor.
-MONEY_EXACT = True
 
 
 def _cents(col, digits: int = 2):
@@ -95,26 +90,21 @@ def _cents(col, digits: int = 2):
 
 def _rev(price: str = "l_extendedprice", disc: str = "l_discount"):
     """Per-row revenue term price*(1-discount) — a LONG at 1e4 scale
-    (exact: 2dp x 2dp has exactly 4dp) on the shipped path, a plain
-    double product on the study twin. Always aggregate through
+    (exact: 2dp x 2dp has exactly 4dp). Always aggregate through
     :func:`_sum_rev` / :func:`_sum_rev_raw` (scale=10000)."""
-    if MONEY_EXACT:
-        return _cents(F.col(price)) * (100 - _cents(F.col(disc)))
-    return F.col(price) * (F.lit(1.0) - F.col(disc))
+    return _cents(F.col(price)) * (100 - _cents(F.col(disc)))
 
 
 def _charge(tax: str = "l_tax"):
     """Per-row charge term price*(1-disc)*(1+tax) — LONG at 1e6 scale
-    (exact 6dp; <= ~1.1e11 per row at the TPC-H price cap) or the
-    double twin. Aggregate with scale=1000000."""
-    if MONEY_EXACT:
-        return _rev() * (100 + _cents(F.col(tax)))
-    return _rev() * (F.lit(1.0) + F.col(tax))
+    (exact 6dp; <= ~1.1e11 per row at the TPC-H price cap). Aggregate
+    with scale=1000000."""
+    return _rev() * (100 + _cents(F.col(tax)))
 
 
 def _rev_zero():
     """Typed zero for when/otherwise branches over _rev()/_charge()."""
-    return F.lit(0).cast("long") if MONEY_EXACT else F.lit(0.0)
+    return F.lit(0).cast("long")
 
 
 def _overflow_guard(colname: str):
@@ -136,31 +126,29 @@ def _overflow_guard(colname: str):
     )
 
 
+def _merge_exact(colname: str, scale: int):
+    """Level-2 merge of the two-level exact-money form: the guarded
+    long partials summed as decimal(28,0), divided back by ``scale``
+    in exact decimal."""
+    return F.sum(_overflow_guard(colname).cast("decimal(28,0)")) / scale
+
+
 def _sum_rev(expr, dp: int = 2, scale: int = 10000):
     """Order-free exact money sum, rounded to ``dp`` and returned as
     DOUBLE (the oracle-matched output type): sums the scaled-long
     rows as compact decimal(18,0) — long-fast-path adds, overflow-
     safe to 1e28 via the buffer's BigDecimal fallback — then divides
-    the one result row back by ``scale`` in exact decimal. The study
-    twin is the plain double sum."""
-    if MONEY_EXACT:
-        return (
-            F.round(
-                (F.sum(expr.cast("decimal(18,0)")) / scale).cast(
-                    "decimal(38,6)"
-                ),
-                dp,
-            ).cast("double")
-        )
-    return F.round(F.sum(expr), dp).cast("double")
+    the one result row back by ``scale`` in exact decimal."""
+    return F.round(
+        (F.sum(expr.cast("decimal(18,0)")) / scale).cast("decimal(38,6)"),
+        dp,
+    ).cast("double")
 
 
 def _sum_rev_raw(expr, scale: int = 10000):
     """Unrounded exact money sum as DOUBLE — for ratios of sums
     (divide once, in double, after both sums are exact)."""
-    if MONEY_EXACT:
-        return (F.sum(expr.cast("decimal(18,0)")) / scale).cast("double")
-    return F.sum(expr).cast("double")
+    return (F.sum(expr.cast("decimal(18,0)")) / scale).cast("double")
 
 
 @register(
@@ -259,23 +247,8 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
     )
-    if not MONEY_EXACT:  # study twin only (scripts/decimal_tax_study.py)
-        return li.groupBy("l_returnflag", "l_linestatus").agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).cast("double").alias(
-                "sum_base_price"
-            ),
-            F.round(F.sum(_rev()), 2).cast("double").alias(
-                "sum_disc_price"
-            ),
-            F.round(F.sum(_charge()), 2).cast("double").alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
     # TWO-LEVEL exact aggregation (r11, adopted from the measured
-    # money-floor study, scripts/money_floor_study.py): long partial
+    # money-floor study, SCALE.md "Money floor closed"): long partial
     # sums keyed by (group, spark_partition_id()) — map-side complete,
     # the 6M-row work stays on the long fast path; each partial is
     # bounded by rows-per-partition x max-charge (4M x 1.1e11 =
@@ -305,23 +278,20 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
     )
 
-    def dec(colname: str, scale: int):
-        return F.sum(_overflow_guard(colname).cast("decimal(28,0)")) / scale
-
     n = F.sum("n")
     return part.groupBy("l_returnflag", "l_linestatus").agg(
         F.round(F.sum("qty").cast("double"), 2).alias("sum_qty"),
-        F.round(dec("price2", 100).cast("decimal(38,6)"), 2)
+        F.round(_merge_exact("price2", 100).cast("decimal(38,6)"), 2)
         .cast("double").alias("sum_base_price"),
-        F.round(dec("rev4", 10000).cast("decimal(38,6)"), 2)
+        F.round(_merge_exact("rev4", 10000).cast("decimal(38,6)"), 2)
         .cast("double").alias("sum_disc_price"),
-        F.round(dec("charge6", 1000000).cast("decimal(38,6)"), 2)
+        F.round(_merge_exact("charge6", 1000000).cast("decimal(38,6)"), 2)
         .cast("double").alias("sum_charge"),
         F.round(F.sum("qty") / n, 4).alias("avg_qty"),
-        F.round((dec("price2", 100) / n).cast("double"), 4).alias(
+        F.round((_merge_exact("price2", 100) / n).cast("double"), 4).alias(
             "avg_price"
         ),
-        F.round((dec("disc2", 100) / n).cast("double"), 6).alias(
+        F.round((_merge_exact("disc2", 100) / n).cast("double"), 6).alias(
             "avg_disc"
         ),
         n.alias("count_order"),
@@ -1539,13 +1509,6 @@ def promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     month = F.date_trunc("month", "l_shipdate").cast("date").alias(
         "ship_month"
     )
-    if not MONEY_EXACT:  # study twin only
-        return joined.groupBy(month).agg(
-            F.round(
-                F.lit(100.0) * _sum_rev_raw(promo) / _sum_rev_raw(rev),
-                6,
-            ).alias("promo_pct")
-        )
     # TWO-LEVEL exact aggregation (r11; see pricing_summary): long
     # partial rev sums per (month, join-output partition), decimal
     # merge of the tiny partial set, ONE double division. Measured
@@ -1558,15 +1521,13 @@ def promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         month, F.spark_partition_id().alias("__pid")
     ).agg(F.try_sum(promo).alias("promo4"), F.try_sum(rev).alias("rev4"))
 
-    def dec(colname: str):
-        return (
-            F.sum(_overflow_guard(colname).cast("decimal(28,0)")) / 10000
-        ).cast("double")
-
     return partial.groupBy("ship_month").agg(
-        F.round(F.lit(100.0) * dec("promo4") / dec("rev4"), 6).alias(
-            "promo_pct"
-        )
+        F.round(
+            F.lit(100.0)
+            * _merge_exact("promo4", 10000).cast("double")
+            / _merge_exact("rev4", 10000).cast("double"),
+            6,
+        ).alias("promo_pct")
     )
 
 
@@ -1689,19 +1650,13 @@ def product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load(spark, sf_dir, "part").filter(F.col("p_name").like("%red%")).select(
         "p_partkey", "p_retailprice"
     )
-    # exact path: 0.6*retailprice*quantity at 1e4 scale is
-    # 60 * retail_cents * qty (quantities are integer-valued by
-    # TPC-H construction; the decimal cast would truncate a
-    # fractional feed loudly in parity, not silently)
-    profit = (
-        _rev()
-        - F.lit(60)
-        * _cents(F.col("p_retailprice"))
-        * F.col("l_quantity").cast("long")
-        if MONEY_EXACT
-        else _rev()
-        - F.lit(0.6) * F.col("p_retailprice") * F.col("l_quantity")
-    )
+    # 0.6*retailprice*quantity at 1e4 scale is 60 * retail_cents *
+    # qty (quantities are integer-valued by TPC-H construction; the
+    # long cast would truncate a fractional feed loudly in parity,
+    # not silently)
+    profit = _rev() - F.lit(60) * _cents(F.col("p_retailprice")) * F.col(
+        "l_quantity"
+    ).cast("long")
     joined = (
         li.join(part, li.l_partkey == part.p_partkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)

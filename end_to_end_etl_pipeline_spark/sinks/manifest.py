@@ -2121,12 +2121,11 @@ class BucketedSCD2:
         tracked: Sequence[str],
         as_of=None,
         dedup_order_by=None,
-        check_unique: bool = True,
     ) -> dict:
         """Returns {"changed_buckets": [...], "version": N} for
         observability (BENCH asserts apply cost tracks bucket count)."""
         cat, fs = self.catalog, self.catalog.fs
-        source = prepare_scd_source(source, keys, dedup_order_by, check_unique)
+        source = prepare_scd_source(source, keys, dedup_order_by)
         src = self._bucketed(source, keys)
 
         manifest = cat.latest_manifest(table)

@@ -2,7 +2,7 @@
 stats + bloom bitmaps) for SEALED dirs, stored columnar and loaded
 vectorized — the Iceberg manifest-file / Delta checkpoint move.
 
-Why (measured, scripts/manifest_readplan_study.py, r08): with per-dir
+Why (measured, SCALE.md "Manifest read-planning", r08): with per-dir
 planning metadata inline in the manifest JSON plus one bloom sidecar
 file per dir, a 100k-dir table (≈100 TB at 1 GB/dir) pays per READ:
 8.3 s manifest parse, 197 s cold bloom probe (100k file opens),

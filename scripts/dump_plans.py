@@ -1,7 +1,9 @@
 """Dump `.explain("formatted")` for bench/registry queries to files —
-the r12 optimization round's plan evidence (plans/r12/<q>_{before,after}.txt).
+an optimization round's plan evidence (<out>/<q>_{before,after}.txt).
+The default output directory is gitignored: dumps are regenerable, so
+they are not committed.
 
-Usage: python scripts/dump_plans.py --suffix before [--out plans/r12] [q1 q2 ...]
+Usage: python scripts/dump_plans.py --suffix before [--out .scratch/plans] [q1 q2 ...]
 Default query set: every BENCH_QUERIES entry that is registry-backed,
 plus the bench's three store-backed entries (built untimed, exactly as
 bench.py does).
@@ -34,7 +36,7 @@ def formatted_plan(spark, df) -> str:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--suffix", required=True)
-    ap.add_argument("--out", default="plans/r12")
+    ap.add_argument("--out", default=".scratch/plans")
     ap.add_argument("--sf-dir",
                     default=os.environ.get("SPARK_GRAFT_SF_DIR",
                                            "/root/testdata/sf0.1"))

@@ -9,7 +9,7 @@ slice at factor 100 (60M lineitem / 571k corpus docs — "sf10") with
 two modes, each documented per query in the output:
 
 * ``full`` — the driver-faithful compare (tests/oracle semantics,
-  scale_parity_study.parity_one) where DuckDB's replay is still
+  :func:`parity_one`) where DuckDB's replay is still
   affordable at 100x: TPC-H aggregates/joins, exact dedup, text
   stats, brute-force ANN, BM25.
 
@@ -65,7 +65,6 @@ from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.queries.catalog import REGISTRY, load
 from end_to_end_etl_pipeline_spark.session import create_spark_session
-from scripts.scale_parity_study import parity_one
 from scripts.scale_study import build_scaled
 from tests.oracle import _df_norm, run_oracle
 
@@ -124,6 +123,75 @@ STORE_QUERIES = ["ivfpq_store_topk", "dedup_store_probe"]
 
 _K, _B, _R = 15, 3, 5  # mirrors queries/textdata.py banding params
 _HEX = "0123456789abcdef"
+
+
+def parity_one(spark, name: str, sf_dir: str) -> dict:
+    """The driver's compare, with per-side timing."""
+    q = REGISTRY[name]
+    t0 = time.perf_counter()
+    try:
+        s_df = q.spark(spark, sf_dir).toPandas()
+    except Exception as exc:
+        return {
+            "ok": False,
+            "spark_sec": round(time.perf_counter() - t0, 1),
+            "problems": [f"spark failed: {exc!r}"[:400]],
+        }
+    t1 = time.perf_counter()
+    try:
+        # scale studies only: an in-memory DuckDB cannot spill without
+        # a temp dir, and the sf30 lakes push several oracles (list
+        # explodes over 1.7M docs) past RAM — opt in via env so the
+        # driver-faithful default (no spill) is unchanged.
+        o_df = run_oracle(
+            q.oracle,
+            sf_dir,
+            temp_directory=os.environ.get("SPARK_GRAFT_ORACLE_SPILL"),
+        )
+    except Exception as exc:
+        return {
+            "ok": False,
+            "spark_sec": round(t1 - t0, 1),
+            "oracle_sec": round(time.perf_counter() - t1, 1),
+            "problems": [f"oracle failed: {exc!r}"[:400]],
+        }
+    t2 = time.perf_counter()
+    problems: list[str] = []
+    if sorted(s_df.columns) != sorted(o_df.columns):
+        problems.append(
+            f"columns differ: spark={sorted(s_df.columns)} "
+            f"oracle={sorted(o_df.columns)}"
+        )
+    else:
+        if len(s_df) != len(o_df):
+            problems.append(
+                f"row count differs: spark={len(s_df)} oracle={len(o_df)}"
+            )
+        order = sorted(s_df.columns)
+        s_norm = _df_norm(s_df, order)
+        o_norm = _df_norm(o_df, order)
+        if s_norm != o_norm:
+            diff_i = next(
+                (
+                    i
+                    for i, (a, b) in enumerate(zip(s_norm, o_norm))
+                    if a != b
+                ),
+                min(len(s_norm), len(o_norm)),
+            )
+            s_at = s_norm[diff_i] if diff_i < len(s_norm) else "<missing>"
+            o_at = o_norm[diff_i] if diff_i < len(o_norm) else "<missing>"
+            problems.append(
+                f"values differ at sorted row {diff_i}: "
+                f"spark={s_at} oracle={o_at}"[:400]
+            )
+    return {
+        "ok": not problems,
+        "spark_sec": round(t1 - t0, 1),
+        "oracle_sec": round(t2 - t1, 1),
+        "rows": len(s_df),
+        "problems": problems,
+    }
 
 
 def _nibble(col: str, start: int, width: int = 8) -> str:

@@ -101,15 +101,6 @@ def test_driver_contract_shapes():
     assert set(os_) <= set(qs)
 
 
-def test_money_exact_is_the_shipped_form():
-    """MONEY_EXACT=False exists ONLY as scripts/decimal_tax_study.py's
-    in-session A/B twin — the double pipeline can land a cent off at
-    scale (r09 sf1 sweep). Imports must always see True."""
-    from end_to_end_etl_pipeline_spark.queries import core
-
-    assert core.MONEY_EXACT is True
-
-
 def test_cents_scaling_is_sign_exact(spark):
     """_cents must round-trip SIGNED 2dp doubles exactly (r10 VERDICT
     #4: the +0.5-only form floored negatives — a refund/net-income
