@@ -52,6 +52,7 @@ from end_to_end_etl_pipeline_spark.operators.text_dedup import (
     minhash_signatures_arr,
     shingle_array,
 )
+from end_to_end_etl_pipeline_spark.sinks.manifest import bucket_id
 
 
 class MinHashDedupStore:
@@ -235,9 +236,6 @@ class MinHashDedupStore:
             self.catalog.append_bucketed(
                 accepted_bands,
                 self.bands_table,
-                bucket_expr=F.pmod(
-                    F.hash("band_hash"), F.lit(self.band_buckets)
-                ),
                 n_buckets=self.band_buckets,
                 bucket_keys=["band_hash"],
             )
@@ -306,9 +304,7 @@ class MinHashDedupStore:
                 touched = sorted(
                     r.b
                     for r in bands_new.select(
-                        F.pmod(F.hash("band_hash"), F.lit(self.band_buckets))
-                        .cast("int")
-                        .alias("b")
+                        bucket_id(["band_hash"], self.band_buckets).alias("b")
                     )
                     .distinct()
                     .collect()

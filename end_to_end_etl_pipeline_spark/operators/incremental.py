@@ -14,10 +14,8 @@ feed emits).
 
 Scope: sum / count / avg (avg is derived from maintained sum+count,
 never averaged directly). min/max are NOT delta-maintainable under
-deletes (the new extreme may be any surviving row); maintain those by
-re-aggregating only the changed groups against the base table
-(semi-join on the delta's keys — still proportional to the change
-set, not the base).
+deletes (the new extreme may be any surviving row), so they are out
+of scope here.
 """
 
 from __future__ import annotations
@@ -113,50 +111,3 @@ def apply_agg_delta(
             F.when(untouched, F.col(f"nn_{c}")).otherwise(nn).alias(f"nn_{c}")
         )
     return joined.select(*key_cols, n.alias("n"), *out_cols).filter(F.col("n") > 0)
-
-
-def refresh_extremes_for_changed_groups(
-    state: DataFrame,
-    base: DataFrame,
-    changes: DataFrame,
-    keys: Sequence[str],
-    minmax_cols: Sequence[str],
-) -> DataFrame:
-    """min/max upkeep: re-aggregate ONLY the groups present in the
-    CDC batch (left-semi join of base on the delta's distinct keys —
-    cost tracks the change set, not the base) and union with the
-    untouched groups' stored extremes (anti join on the same key
-    set). The key set carries no broadcast hint: it is
-    delta-proportional, and a backfill-sized delta would OOM a forced
-    broadcast — AQE promotes both joins to broadcast at runtime
-    whenever the set is actually small (the steady-state case).
-
-    ``state`` is the previous extremes table ``(keys, min_*, max_*)``.
-    New groups appear via the fresh side; fully-deleted groups vanish
-    because the base no longer has their rows; untouched groups never
-    leave the anti-join's map side."""
-    keys = list(keys)
-    out_cols = [f"{m}_{c}" for c in minmax_cols for m in ("min", "max")]
-    touched = changes.select(*keys).distinct().alias("t")
-    # null-safe key equality: NULL-keyed groups are real groups here
-    # (GROUP BY treats NULLs as one group) and must semi/anti-match
-    b, s = base.alias("b"), state.alias("s")
-    fresh = (
-        b.join(
-            touched,
-            [b[k].eqNullSafe(touched[k]) for k in keys],
-            "left_semi",
-        )
-        .groupBy(*keys)
-        .agg(
-            *[F.min(c).alias(f"min_{c}") for c in minmax_cols],
-            *[F.max(c).alias(f"max_{c}") for c in minmax_cols],
-        )
-        .select(*keys, *out_cols)
-    )
-    untouched = s.join(
-        touched,
-        [s[k].eqNullSafe(touched[k]) for k in keys],
-        "left_anti",
-    ).select(*keys, *out_cols)
-    return fresh.unionByName(untouched)

@@ -6,11 +6,14 @@ the scan reduction stops being a plan-level filter and becomes
 storage-level partition pruning, which is what makes IVF pay off at
 100 TB (nprobe/cells of the bytes, not just of the rows).
 
-Index build = one partitioned write + one tiny centroids table
-(cells × dim rows, `replace_atomic`). Query = rank cells against the
-broadcast centroids, collect the probed cell ids (queries × nprobe
-ints — model-parameter scale, like the PQ codebooks), manifest-read
-exactly those bucket dirs, exact-score, WindowGroupLimit top-k.
+Index build = one identity-bucketed write (rows with their PQ codes;
+the codebook rides the manifest) + one tiny centroids table (cells ×
+dim rows, `replace_atomic`). Query = rank cells against the stored
+centroids, collect the probed cell ids (queries × nprobe ints —
+model-parameter scale, like the PQ codebooks), manifest-read exactly
+those bucket dirs, ADC on the stored codes, exact re-rank. Append,
+delete, compaction and rebalance keep the layout through the
+catalog's bucket helpers.
 """
 
 from __future__ import annotations
@@ -18,60 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from end_to_end_etl_pipeline_spark.operators.similarity import (
-    cosine,
-    label_centroids_array,
-)
-from end_to_end_etl_pipeline_spark.sinks.manifest import BUCKET_COL, ManifestCatalog
-
-
-def write_ivf_store(
-    catalog: ManifestCatalog,
-    corpus: DataFrame,
-    corpus_id: str,
-    vec_col: str,
-    cell_col: str,
-    table: str,
-    dim: int | None = None,
-) -> None:
-    """Persist ``corpus`` cell-partitioned (manifest bucket dirs keyed
-    by the cell id) plus a ``<table>__centroids`` side table. The cell
-    column is duplicated into the data so bucket-scoped reads keep it
-    (partition columns vanish on subdir scans)."""
-    df = corpus.select(
-        F.col(corpus_id),
-        F.col(vec_col),
-        F.col(cell_col).cast("int").alias("cell"),
-    ).withColumn(BUCKET_COL, F.col("cell"))
-    data_dir = catalog._new_data_dir(table)
-    df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(data_dir)
-    bucket_dirs: dict[str, list[str]] = {}
-    for p in catalog.fs.listdir(data_dir):
-        base = p.rsplit("/", 1)[-1]
-        if base.startswith(f"{BUCKET_COL}="):
-            bucket_dirs[base.split("=", 1)[1]] = [p]
-    catalog._commit(
-        table,
-        {
-            "dirs": None,
-            "bucket_dirs": bucket_dirs,
-            "n_buckets": len(bucket_dirs),
-            "bucket_keys": ["cell"],
-            # NOT the catalog's default pmod(hash(keys)) bucketing —
-            # bucket id IS the cell value. optimize()/BucketedSCD2
-            # check this marker and refuse to rewrite with the hash fn.
-            "bucket_fn": "identity",
-            "ivf_id_col": corpus_id,
-            "ivf_vec_col": vec_col,
-        },
-    )
-    cent = label_centroids_array(
-        corpus.select(F.col(cell_col).alias("label"), F.col(vec_col)),
-        "label",
-        vec_col,
-        dim=dim,
-    )
-    catalog.replace_atomic(cent, f"{table}__centroids")
+from end_to_end_etl_pipeline_spark.operators.similarity import label_centroids_array
+from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
 
 def _centroid_literals(rows):
@@ -205,86 +156,12 @@ def _adaptive_cut(
     return out
 
 
-def ivf_store_topk(
-    catalog: ManifestCatalog,
-    table: str,
-    queries: DataFrame,
-    query_id: str,
-    vec_col: str,
-    k: int = 5,
-    nprobe: int = 2,
-    exclude_self: bool = True,
-) -> tuple[DataFrame, list[int]]:
-    """Top-k cosine over the stored corpus, scanning only the probed
-    cells' bucket dirs. Returns ``(result, probed_cells)`` so callers
-    (and tests) can assert the physical scan set; result columns are
-    (query_id, match_id, cosine), 6dp-rounded, ties to lowest id —
-    identical to ``cosine_topk_ivf`` whenever the probe sets agree."""
-    cent = _routing_centroids(catalog, table)
-    probed_rows = _collect_probe(cent, queries, query_id, vec_col, nprobe)
-    spark = queries.sparkSession
-    # derive the probe schema from the actual query-id DataType: a
-    # hardcoded 'query_id long' would reject string/decimal doc ids
-    # that the rest of the operator (ivf_id_col) handles fine
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    qid_type = queries.schema[query_id].dataType
-    probed_schema = StructType(
-        [
-            StructField("query_id", qid_type, True),
-            StructField("cell", IntegerType(), True),
-        ]
-    )
-    probed = spark.createDataFrame(probed_rows, probed_schema)
-    cells = sorted({c for _, c in probed_rows})
-
-    manifest = catalog.latest_manifest(table)
-    id_col = manifest["ivf_id_col"]  # persisted at write time: never
-    # inferred from column order, which rewrites could change
-    stored = catalog.read(table, buckets=cells)
-    c = stored.select(
-        F.col(id_col).alias("match_id"),
-        F.col(vec_col).cast("array<double>").alias("__cv"),
-        "cell",
-    ).withColumn(
-        "__cv_norm",
-        F.sqrt(F.aggregate(
-            F.transform("__cv", lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )),
-    )
-    q = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-    ).withColumn(
-        "__qv_norm",
-        F.sqrt(F.aggregate(
-            F.transform("__qv", lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )),
-    )
-    scored = c.join(F.broadcast(probed.join(q, "query_id")), "cell")
-    if exclude_self:
-        scored = scored.filter(F.col("match_id") != F.col("query_id"))
-    # zero-norm vectors make the cosine NULL (x/0.0 in double) and
-    # would otherwise occupy top-k slots when a query has < k real
-    # matches — same guard as cosine_topk / cosine_topk_ivf, keeping
-    # the documented 'identical whenever probe sets agree' contract
-    scored = scored.filter((F.col("__qv_norm") > 0) & (F.col("__cv_norm") > 0))
-    scored = scored.withColumn(
-        "cosine",
-        F.round(
-            cosine(F.col("__qv"), F.col("__cv"), F.col("__qv_norm"), F.col("__cv_norm")),
-            6,
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id").asc()
-    )
-    result = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "match_id", "cosine")
-    )
-    return result, cells
+def _written(catalog: ManifestCatalog, bucket_dirs: dict) -> DataFrame:
+    """The rows one bucketed write just landed, read back from the
+    data dir its subdirs share: a columnar scan of committed bytes is
+    far cheaper than re-running the projection that produced them."""
+    some = next(iter(bucket_dirs.values()))[0]
+    return catalog.spark.read.parquet(some.rsplit("/", 1)[0])
 
 
 def write_ivfpq_store(
@@ -298,7 +175,8 @@ def write_ivfpq_store(
     dim: int | None = None,
 ) -> None:
     """Persist the full IVFADC index: rows cell-partitioned (identity
-    bucket = cell id, like :func:`write_ivf_store`) with their PQ
+    bucket = cell id; the cell column stays in the data, since bucket
+    subdir reads drop the partition column) with their PQ
     codes PRE-COMPUTED alongside the raw vectors, the coarse centroids
     as a side table, and the codebook in the manifest (model
     parameters — a few KB of floats, exactly what a production index
@@ -315,9 +193,8 @@ def write_ivfpq_store(
         ),
         vec_col,
         cb,
-    ).withColumn(BUCKET_COL, F.col("cell"))
-    data_dir = catalog._new_data_dir(table)
-    df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(data_dir)
+    )
+    bucket_dirs = catalog._write_buckets(df, table, ["cell"], fn="identity")
     # per-cell row counts ride the manifest (cells-scale metadata):
     # the adaptive probe's candidate-count floor is then a pure
     # driver-side arithmetic over the manifest — no corpus touch at
@@ -327,14 +204,9 @@ def write_ivfpq_store(
     # re-running the PQ-encode projection over the corpus.
     cell_counts = {
         str(int(r["cell"])): int(r["n"])
-        for r in catalog.spark.read.parquet(data_dir)
+        for r in _written(catalog, bucket_dirs)
         .groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    bucket_dirs: dict[str, list[str]] = {}
-    for p in catalog.fs.listdir(data_dir):
-        base = p.rsplit("/", 1)[-1]
-        if base.startswith(f"{BUCKET_COL}="):
-            bucket_dirs[base.split("=", 1)[1]] = [p]
     catalog._commit(
         table,
         {
@@ -508,7 +380,6 @@ def append_ivfpq_store(
         catalog.append_bucketed(
             df,
             table,
-            F.col("cell"),
             manifest["n_buckets"],
             ["cell"],
             bucket_fn="identity",
@@ -684,14 +555,13 @@ def rebalance_ivfpq_store(
             return {}
         id_col = manifest["ivf_id_col"]
         vec_col = manifest["ivf_vec_col"]
-        bucket_dirs = {int(k): v for k, v in manifest["bucket_dirs"].items()}
+        bucket_dirs = dict(manifest["bucket_dirs"])
         next_id = max(counts) + 1
-        new_bucket_dirs = dict(bucket_dirs)
         new_counts = dict(counts)
         split_map: dict[int, list[int]] = {}
         patch_new: dict[str, list[float]] = {}  # sub-cell exact means
         for cell in hot:
-            rows = catalog._read_dirs(bucket_dirs[cell])
+            rows = catalog._read_dirs(manifest["bucket_dirs"][str(cell)])
             # 2-means over this cell only; assignment via the same
             # pq_encode machinery (M=1 → code IS the sub-cell), with
             # the store's real codes stashed aside
@@ -726,17 +596,10 @@ def rebalance_ivfpq_store(
                 )
                 .drop("pq_codes")
                 .withColumnRenamed("__store_codes", "pq_codes")
-                .withColumn(BUCKET_COL, F.col("cell"))
             )
-            data_dir = catalog._new_data_dir(table)
-            assigned.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
-                data_dir
+            sub_dirs = catalog._write_buckets(
+                assigned, table, ["cell"], fn="identity"
             )
-            sub_dirs = {
-                int(p.rsplit("/", 1)[-1].split("=", 1)[1]): [p]
-                for p in catalog.fs.listdir(data_dir)
-                if p.rsplit("/", 1)[-1].startswith(f"{BUCKET_COL}=")
-            }
             if len(sub_dirs) < 2:
                 # unsplittable (all rows on one centroid): leave the
                 # cell as it was; the orphan dir is vacuum's problem
@@ -750,7 +613,7 @@ def rebalance_ivfpq_store(
             # ``label_centroids_array`` so the router stays
             # bit-identical with the write path's quantizer
             stat_rows = (
-                catalog.spark.read.parquet(data_dir)
+                _written(catalog, sub_dirs)
                 .select(
                     "cell",
                     F.posexplode(
@@ -771,9 +634,7 @@ def rebalance_ivfpq_store(
                 sub_means.setdefault(c, {})[int(r["pos"])] = float(r["cv"])
                 if int(r["pos"]) == 1:
                     sub_counts[c] = int(r["n"])
-            del new_bucket_dirs[cell]
-            new_bucket_dirs[cell] = sub_dirs[cell]
-            new_bucket_dirs[new_id] = sub_dirs[new_id]
+            bucket_dirs.update(sub_dirs)
             new_counts[cell] = sub_counts[cell]
             new_counts[new_id] = sub_counts[new_id]
             split_map[cell] = [cell, new_id]
@@ -782,19 +643,13 @@ def rebalance_ivfpq_store(
             next_id += 1
         if not split_map:
             return {}
-        extras = {
-            k: v
-            for k, v in manifest.items()
-            if k not in ("version", "dirs", "bucket_dirs", "n_buckets",
-                         "cell_counts")
-        }
         committed = catalog._commit_if(
             table,
-            {
-                **extras,
+            catalog._carried(manifest, keep_schema=False)
+            | {
                 "dirs": None,
-                "bucket_dirs": {str(k): v for k, v in new_bucket_dirs.items()},
-                "n_buckets": len(new_bucket_dirs),
+                "bucket_dirs": bucket_dirs,
+                "n_buckets": len(bucket_dirs),
                 "cell_counts": {str(k): n for k, n in new_counts.items()},
                 # the sub-cell means ride the SAME commit as the data:
                 # routers overlay this patch until the __centroids

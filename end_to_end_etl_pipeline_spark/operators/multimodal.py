@@ -819,76 +819,3 @@ def sample_frames(
             yield pd.DataFrame({id_col: ids, "frame_idx": idxs, "frame": frames})
 
     return df.select(id_col, bin_col).mapInPandas(gen, schema)
-
-
-def resize_payloads(
-    df: DataFrame,
-    id_col: str,
-    bin_col: str,
-    target_bytes: int = 32,
-    backend: str = "fake",
-) -> DataFrame:
-    """Resize/downscale binary payloads 1:1 via Arrow-batched
-    ``mapInPandas`` — the thumbnailing pass an image corpus runs
-    before feature extraction (smaller bytes through every downstream
-    shuffle).
-
-    ``backend="fake"``: deterministic nearest-neighbor resampling —
-    the payload is resampled to exactly ``target_bytes`` by picking
-    evenly-spaced bytes (``(i·n) // target_bytes``; payloads shorter
-    than the target repeat bytes, exactly like a nearest-neighbor
-    upscale), a stand-in with the same contract as a real
-    `PIL Image.resize`: output is a binary column of bounded size
-    regardless of input size. NULL payloads pass through as
-    ``resized=NULL`` / ``orig_bytes=NULL`` — the map is strictly 1:1,
-    never row-dropping. Any other backend raises
-    ``NotImplementedError`` at the codec seam.
-
-    Scale shape: pure 1:1 Arrow-batched map, output partition size
-    bounded by rows x target_bytes — the operator that turns a
-    multi-TB raw-image scan into a bounded-width table.
-    """
-    if backend != "fake":
-        raise NotImplementedError(
-            f"resize backend {backend!r}: no image codecs in this "
-            "environment; only the deterministic 'fake' resampler is wired"
-        )
-    id_type = df.schema[id_col].dataType
-    schema = StructType(
-        [
-            StructField(id_col, id_type),
-            StructField("orig_bytes", LongType()),
-            StructField("resized", BinaryType()),
-        ]
-    )
-
-    def resize(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            ids, origs, outs = [], [], []
-            for rid, b in zip(pdf[id_col], pdf[bin_col]):
-                if b is None:
-                    # 1:1 contract: NULL payload → NULL output row,
-                    # never a dropped row (downstream joins on id_col
-                    # must not lose cardinality)
-                    ids.append(rid)
-                    origs.append(None)
-                    outs.append(None)
-                    continue
-                n = len(b)
-                if n == 0:
-                    out = bytes(target_bytes)
-                else:
-                    # evenly-spaced nearest-neighbor byte picks; the
-                    # index (i·n)//target_bytes is provably < n, so
-                    # short payloads repeat bytes (upscale), no pad
-                    out = bytes(
-                        b[(i * n) // target_bytes] for i in range(target_bytes)
-                    )
-                ids.append(rid)
-                origs.append(n)
-                outs.append(out)
-            yield pd.DataFrame({id_col: ids, "orig_bytes": origs, "resized": outs})
-
-    return df.select(id_col, bin_col).mapInPandas(resize, schema)

@@ -1,4 +1,4 @@
-"""k-anonymity auditing and enforcement over quasi-identifier (QI)
+"""k-anonymity enforcement over quasi-identifier (QI)
 columns — the re-identification-risk half of privacy prep for
 training data (the direct-identifier half is
 ``text_analysis.redact_pii``).  No reference counterpart; part of the
@@ -142,29 +142,3 @@ def kanonymity_generalize(
         *[F.lit(MASK).alias(n) for n in qi_names],
     )
     return reduce(DataFrame.unionByName, published + [suppressed])
-
-
-def kanonymity_audit(
-    df: DataFrame,
-    qi: Mapping[str, Column],
-    k: int,
-) -> DataFrame:
-    """Re-identification risk report per equivalence class: the QI
-    tuple (as strings), its ``class_size``, ``at_risk`` (size < k),
-    and ``reident_risk`` = 1/size rounded to 6dp (the prosecutor-model
-    re-identification probability).  One grouped aggregation — the
-    audit you run BEFORE choosing a ladder."""
-    _reject_reserved(
-        list(qi.keys()), (), extra=("class_size", "at_risk", "reident_risk")
-    )
-    keyed = df.select(*[c.cast("string").alias(n) for n, c in qi.items()])
-    return (
-        keyed.groupBy(*qi.keys())
-        .agg(F.count("*").alias("class_size"))
-        .select(
-            *qi.keys(),
-            "class_size",
-            (F.col("class_size") < k).alias("at_risk"),
-            F.round(F.lit(1.0) / F.col("class_size"), 6).alias("reident_risk"),
-        )
-    )

@@ -262,56 +262,6 @@ def lsh_candidate_pairs(bands_df: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def jaccard_on_pairs(
-    pairs: DataFrame,
-    shingle_sets: DataFrame,
-    id_col: str,
-    n_pairs: int | None = None,
-    max_broadcast_pairs: int = 1_000_000,
-) -> DataFrame:
-    """Exact Jaccard for each candidate pair via the inverted index:
-    intersection = count of shared shingles, union = |A|+|B|−∩.
-    Shingle sets are pruned to docs that appear in some pair before
-    the intersection join.
-
-    The candidate set is usually small (the LSH promise) and then
-    broadcast-joined — but on a dup-heavy corpus (exactly the corpus a
-    dedup pass exists for) it is unbounded, so the broadcast is
-    size-guarded: pass ``n_pairs`` (a known candidate count) and pairs
-    above ``max_broadcast_pairs`` fall back to shuffle hash joins
-    keyed on id instead of OOM-ing the driver."""
-    small = n_pairs is None or n_pairs <= max_broadcast_pairs
-    maybe_bc = F.broadcast if small else (lambda d: d)
-    sizes = shingle_sets.groupBy(id_col).agg(F.count("*").alias("n"))
-    docs_in_pairs = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    pruned = shingle_sets.join(maybe_bc(docs_in_pairs), id_col, "left_semi")
-    sa = pruned.select(F.col(id_col).alias("id_a"), "shingle")
-    sb = pruned.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        sa.join(maybe_bc(pairs), "id_a")
-        .join(sb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("ci"))
-    )
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("nb"))
-    return (
-        inter.join(na, "id_a")
-        .join(nb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (F.col("ci").cast("double") / (F.col("na") + F.col("nb") - F.col("ci"))).alias(
-                "jaccard"
-            ),
-        )
-    )
-
-
 def minhash_near_dup_pairs(
     df: DataFrame,
     id_col: str,

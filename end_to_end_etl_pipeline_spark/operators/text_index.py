@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
+from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog, bucket_id
 
 K1 = 1.2
 B = 0.75
@@ -81,7 +81,6 @@ def write_text_index(
     catalog.append_bucketed(
         post,
         table,
-        F.pmod(F.hash(F.col("word")), F.lit(n_buckets)),
         n_buckets,
         ["word"],
         extras_update={
@@ -136,7 +135,6 @@ def append_text_index(
     catalog.append_bucketed(
         post,
         table,
-        F.pmod(F.hash(F.col("word")), F.lit(n_buckets)),
         n_buckets,
         ["word"],
         extras_update=extras,
@@ -174,9 +172,7 @@ def text_index_search(
     uniq = qterms.select("word").distinct()
     buckets = sorted(
         r["b"]
-        for r in uniq.select(
-            F.pmod(F.hash(F.col("word")), F.lit(n_buckets)).alias("b")
-        )
+        for r in uniq.select(bucket_id(["word"], n_buckets).alias("b"))
         .distinct()
         .collect()
     )

@@ -42,7 +42,7 @@ import json
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -60,6 +60,32 @@ def _recorded_schema(manifest: dict) -> StructType | None:
     or None when its readers must infer it from footers."""
     s = manifest.get("schema")
     return None if s is None else StructType.fromJson(json.loads(s))
+
+
+def bucket_id(
+    keys: Sequence[str], n_buckets: int | None = None, fn: str = "hash_pmod"
+) -> Column:
+    """The bucket contract: the bucket a row belongs to under a
+    manifest's ``bucket_fn`` — ``hash_pmod`` is
+    ``pmod(hash(keys), n_buckets)``, ``identity`` is the first key's
+    value as an int (an IVF cell id is its own bucket). Writers and
+    probe-side routers all derive bucket ids here, so a reader prunes
+    to exactly the buckets a writer filled."""
+    if fn == "identity":
+        return F.col(keys[0]).cast("int")
+    if fn == "hash_pmod":
+        return F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
+    raise ValueError(f"unknown bucket_fn {fn!r}")
+
+
+def _layout(manifest: dict) -> tuple[list[str], int, str]:
+    """A bucketed manifest's recorded contract, as the
+    :func:`bucket_id` arguments ``(keys, n_buckets, fn)``."""
+    return (
+        manifest["bucket_keys"],
+        manifest["n_buckets"],
+        manifest.get("bucket_fn", "hash_pmod"),
+    )
 
 
 class HadoopFS:
@@ -193,6 +219,16 @@ class ManifestCatalog:
     """``zone.table`` → ``<root>/zone/table`` with versioned-manifest
     commits: the exists/read/replace_atomic/append/drop surface every
     pipeline layer uses, plus bucket-aware reads for pruned SCD2.
+
+    Carry-forward rule (:meth:`_carried`): a commit derived from the
+    previous version re-derives the dir layout (``dirs`` /
+    ``bucket_dirs``) and the per-dir metadata keyed by it (``stats``,
+    ``blooms``, ``sealed``, ``segments``), and keeps every other key
+    verbatim — bucket contract, ``cloned_from``, store extras
+    (``cell_counts``, ``ti_*``, replay markers, ...). ``schema``
+    survives only a rewrite that cannot retype a column.
+    ``replace_atomic``, ``optimize_zorder`` and ``BucketedSCD2`` write
+    their manifest whole; ``shallow_clone`` copies its source's.
 
     Manifest ``schema`` field (the Delta ``metaData.schemaString``
     move): ``StructType.json()`` of the rows every listed dir holds.
@@ -344,6 +380,57 @@ class ManifestCatalog:
         self.fs.delete(tmp)
         return False
 
+    def _require_manifest(self, name: str, version: int | None = None) -> dict:
+        """``version``'s manifest (default: latest); FileNotFoundError
+        when the table has none."""
+        manifest = (
+            self.manifest_at(name, version)
+            if version is not None
+            else self.latest_manifest(name)
+        )
+        if manifest is None:
+            raise FileNotFoundError(f"table {name} has no committed manifest")
+        return manifest
+
+    #: keys every derived commit re-derives (see the class docstring)
+    _REDERIVED = ("version", "dirs", "bucket_dirs", "stats", "blooms",
+                  "sealed", "segments")
+
+    @classmethod
+    def _carried(cls, manifest: dict, keep_schema: bool) -> dict:
+        """The keys a commit derived from ``manifest`` carries forward.
+        ``keep_schema`` only when the rewrite holds the same rows under
+        the same types; a bucketed layout never records one (bucket
+        subdir reads drop the bucket column)."""
+        drop = cls._REDERIVED if keep_schema else (*cls._REDERIVED, "schema")
+        return {k: v for k, v in manifest.items() if k not in drop}
+
+    def _write_buckets(
+        self,
+        df: DataFrame,
+        name: str,
+        keys: Sequence[str],
+        n_buckets: int | None = None,
+        fn: str = "hash_pmod",
+    ) -> dict[str, list[str]]:
+        """Write ``df`` into one fresh data dir, one ``__bucket=<b>``
+        subdir per bucket under the :func:`bucket_id` contract, and
+        return the ``bucket_dirs`` map of what landed (``{bucket:
+        [subdir]}``; buckets with no rows are absent)."""
+        data_dir = self._new_data_dir(name)
+        (
+            df.withColumn(BUCKET_COL, bucket_id(keys, n_buckets, fn))
+            .write.mode("overwrite")
+            .partitionBy(BUCKET_COL)
+            .parquet(data_dir)
+        )
+        prefix = f"{BUCKET_COL}="
+        return {
+            base[len(prefix):]: [p]
+            for p in self.fs.listdir(data_dir)
+            if (base := p.rsplit("/", 1)[-1]).startswith(prefix)
+        }
+
     # -- catalog surface ------------------------------------------------
     def exists(self, name: str) -> bool:
         """K10 — a table exists iff it has a committed manifest."""
@@ -371,13 +458,7 @@ class ManifestCatalog:
         a bucketed table to the named buckets' subdirectories —
         partition pruning by manifest, no listing of unrelated
         data."""
-        manifest = (
-            self.manifest_at(name, version)
-            if version is not None
-            else self.latest_manifest(name)
-        )
-        if manifest is None:
-            raise FileNotFoundError(f"table {name} has no committed manifest")
+        manifest = self._require_manifest(name, version)
         dirs = self._dirs(manifest, buckets)
         if not dirs:
             # a legitimately empty selection (a bucket whose rows were
@@ -824,13 +905,7 @@ class ManifestCatalog:
         Dirs without a bloom are kept — skipping is an IO optimization
         and must never change results. NULL probes keep every dir
         (equality on NULL matches nothing anyway)."""
-        manifest = (
-            self.manifest_at(name, version)
-            if version is not None
-            else self.latest_manifest(name)
-        )
-        if manifest is None:
-            raise FileNotFoundError(f"table {name} has no committed manifest")
+        manifest = self._require_manifest(name, version)
         col_type = self._column_type(name, col, manifest)
         return self._bloom_pruned_dirs_resolved(manifest, col, value, col_type)
 
@@ -979,13 +1054,7 @@ class ManifestCatalog:
         [lo, hi]. Dirs without stats (or with an all-NULL column) are
         kept — skipping is an IO optimization and must never change
         results; the caller still applies the row filter."""
-        manifest = (
-            self.manifest_at(name, version)
-            if version is not None
-            else self.latest_manifest(name)
-        )
-        if manifest is None:
-            raise FileNotFoundError(f"table {name} has no committed manifest")
+        manifest = self._require_manifest(name, version)
         stats = manifest.get("stats") or {}
         sealed = manifest.get("sealed") or {}
         all_dirs = self._dirs(manifest)
@@ -1199,7 +1268,6 @@ class ManifestCatalog:
         self,
         df: DataFrame,
         name: str,
-        bucket_expr,
         n_buckets: int,
         bucket_keys: Sequence[str],
         bucket_fn: str = "hash_pmod",
@@ -1212,11 +1280,9 @@ class ManifestCatalog:
         existing dir lists verbatim, so bucket-pruned readers never
         pay for appends elsewhere. First call creates the table with
         the given layout; later calls must match it (changing the
-        bucket contract silently would corrupt pruning).
-
-        ``bucket_expr`` is a Column producing the bucket id (callers
-        own the contract — e.g. ``pmod(hash(cols), n)`` or an identity
-        cell id, mirroring ``bucket_fn``).
+        bucket contract silently would corrupt pruning). Rows land in
+        buckets by :func:`bucket_id` over ``bucket_keys`` under
+        ``bucket_fn``.
 
         ``extras_update`` merges extra keys into the committed
         manifest ATOMICALLY with the dir merge — the hook streaming
@@ -1231,27 +1297,15 @@ class ManifestCatalog:
         (e.g. merging per-cell row counts) stay correct under
         concurrent appends — a dict computed outside would go stale
         on CAS retry.  Applied after ``extras_update``."""
-        data_dir = self._new_data_dir(name)
-        (
-            df.withColumn(BUCKET_COL, bucket_expr.cast("int"))
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(data_dir)
-        )
-        new_subdirs: dict[str, str] = {}
-        for p in self.fs.listdir(data_dir):
-            base = p.rsplit("/", 1)[-1]
-            if base.startswith(f"{BUCKET_COL}="):
-                new_subdirs[base.split("=", 1)[1]] = p
+        written = self._write_buckets(df, name, bucket_keys, n_buckets, bucket_fn)
         while True:
             manifest = self.latest_manifest(name)
             if manifest is None:
-                bucket_dirs = {b: [d] for b, d in new_subdirs.items()}
                 committed = self._commit_if(
                     name,
                     {
                         "dirs": None,
-                        "bucket_dirs": bucket_dirs,
+                        "bucket_dirs": written,
                         "n_buckets": n_buckets,
                         "bucket_keys": list(bucket_keys),
                         "bucket_fn": bucket_fn,
@@ -1279,17 +1333,11 @@ class ManifestCatalog:
                     f"fn={manifest.get('bucket_fn', 'hash_pmod')!r})"
                 )
             bucket_dirs = {b: list(ds) for b, ds in manifest["bucket_dirs"].items()}
-            for b, d in new_subdirs.items():
-                bucket_dirs.setdefault(b, []).append(d)
-            extras = {
-                k: v
-                for k, v in manifest.items()
-                if k not in ("version", "dirs", "bucket_dirs", "stats", "blooms",
-                             "schema")
-            }
+            for b, ds in written.items():
+                bucket_dirs.setdefault(b, []).extend(ds)
             if self._commit_if(
                 name,
-                extras
+                self._carried(manifest, keep_schema=False)
                 | {"dirs": None, "bucket_dirs": bucket_dirs}
                 | (extras_update or {})
                 | (extras_fn(manifest) if extras_fn else {}),
@@ -1340,28 +1388,15 @@ class ManifestCatalog:
         if not values:
             return 0
         while True:
-            manifest = self.latest_manifest(name)
-            if manifest is None:
-                raise FileNotFoundError(f"table {name} has no committed manifest")
+            manifest = self._require_manifest(name)
             if manifest.get("bucket_dirs") is not None:
                 raise ValueError(
                     f"table {name} is bucketed — delete via a bucket "
                     "rewrite is not implemented"
                 )
-            # resolve the column type ONCE for the whole key batch —
-            # a per-value bloom_pruned_dirs call would re-read the
-            # manifest and re-resolve the parquet schema per key
-            col_type = self._column_type(name, col, manifest)
-            affected_set: set[str] = set()
-            for v in values:
-                affected_set |= set(
-                    self._bloom_pruned_dirs_resolved(manifest, col, v, col_type)
-                )
-            all_dirs = self._dirs(manifest)
-            affected = [d for d in all_dirs if d in affected_set]
+            affected, keep = self._bloom_split(name, manifest, col, values)
             if not affected:
                 return 0
-            keep = [d for d in all_dirs if d not in affected_set]
             # the rewrite holds a subset of the same rows: read (and so
             # write) it under the recorded schema, which the commit keeps
             df = self._read_dirs(affected, _recorded_schema(manifest))
@@ -1375,54 +1410,89 @@ class ManifestCatalog:
             after = kept_rows.count()
             if after == before:
                 return 0  # blooms overapproved; nothing actually matched
-            new_dirs = list(keep)
-            stats = dict(manifest.get("stats") or {})
-            blooms = dict(manifest.get("blooms") or {})
-            sealed = dict(manifest.get("sealed") or {})
-            segments = dict(manifest.get("segments") or {})
-            old_stat_cols = sorted(
-                {c for d in affected for c in self._stats_for(manifest, d)}
-            )
-            old_bloom_cols = sorted(
-                {c for d in affected for c in self._bloom_cols_for(manifest, d)}
-            )
-            for d in affected:
-                stats.pop(d, None)
-                blooms.pop(d, None)
-                sealed.pop(d, None)
-            self._prune_segments(sealed, segments)
-            if after > 0:
-                data_dir = self._new_data_dir(name)
-                kept_rows.write.mode("overwrite").parquet(data_dir)
-                new_dirs.append(data_dir)
-                if old_stat_cols:
-                    stats[data_dir] = self._dir_stats(
-                        data_dir, old_stat_cols, kept_rows.schema
-                    )
-                if old_bloom_cols:
-                    blooms[data_dir] = self._dir_blooms(
-                        data_dir, old_bloom_cols, kept_rows.schema
-                    )
-            extras = {
-                k: v
-                for k, v in manifest.items()
-                if k not in ("version", "dirs", "bucket_dirs", "stats",
-                             "blooms", "sealed", "segments")
-            }
-            if self._commit_if(
-                name,
-                extras
-                | {
-                    "dirs": new_dirs,
-                    "bucket_dirs": None,
-                    "stats": stats or None,
-                    "blooms": blooms or None,
-                    "sealed": sealed or None,
-                    "segments": segments or None,
-                },
-                manifest["version"],
+            if self._commit_rewrite(
+                name, manifest, keep, affected,
+                kept_rows if after > 0 else None, keep_schema=True,
             ):
                 return before - after
+
+    def _bloom_split(
+        self, name: str, manifest: dict, col: str, values: Sequence
+    ) -> tuple[list[str], list[str]]:
+        """(affected, keep): the dirs whose blooms might hold any of
+        ``values`` and the rest, both in manifest order. The column
+        type resolves ONCE for the whole key batch — a per-value
+        :meth:`bloom_pruned_dirs` would re-read the manifest and
+        re-resolve the parquet schema per key."""
+        col_type = self._column_type(name, col, manifest)
+        hit: set[str] = set()
+        for v in values:
+            hit.update(
+                self._bloom_pruned_dirs_resolved(manifest, col, v, col_type)
+            )
+        all_dirs = self._dirs(manifest)
+        return (
+            [d for d in all_dirs if d in hit],
+            [d for d in all_dirs if d not in hit],
+        )
+
+    def _commit_rewrite(
+        self,
+        name: str,
+        manifest: dict,
+        keep: Sequence[str],
+        replaced: Sequence[str],
+        rows: DataFrame | None,
+        keep_schema: bool,
+    ) -> bool:
+        """The plain-table row-rewrite commit (:meth:`delete_where`,
+        :meth:`update_where`, :meth:`delete_range`): the ``replaced``
+        dirs leave the manifest with their stats, blooms and sealed
+        entries; ``rows`` (None = nothing survives) land in one fresh
+        dir with stats and blooms over the column sets the replaced
+        dirs had; the new version lists ``keep`` + that dir. CAS on
+        ``manifest``'s version — False means a concurrent commit won
+        and the caller re-plans against the new latest (the written
+        dir is an orphan :meth:`vacuum` collects)."""
+        stat_cols = sorted(
+            {c for d in replaced for c in self._stats_for(manifest, d)}
+        )
+        bloom_cols = sorted(
+            {c for d in replaced for c in self._bloom_cols_for(manifest, d)}
+        )
+        stats = dict(manifest.get("stats") or {})
+        blooms = dict(manifest.get("blooms") or {})
+        sealed = dict(manifest.get("sealed") or {})
+        segments = dict(manifest.get("segments") or {})
+        for d in replaced:
+            stats.pop(d, None)
+            blooms.pop(d, None)
+            sealed.pop(d, None)
+        self._prune_segments(sealed, segments)
+        dirs = list(keep)
+        if rows is not None:
+            data_dir = self._new_data_dir(name)
+            rows.write.mode("overwrite").parquet(data_dir)
+            dirs.append(data_dir)
+            if stat_cols:
+                stats[data_dir] = self._dir_stats(data_dir, stat_cols, rows.schema)
+            if bloom_cols:
+                blooms[data_dir] = self._dir_blooms(
+                    data_dir, bloom_cols, rows.schema
+                )
+        return self._commit_if(
+            name,
+            self._carried(manifest, keep_schema)
+            | {
+                "dirs": dirs,
+                "bucket_dirs": None,
+                "stats": stats or None,
+                "blooms": blooms or None,
+                "sealed": sealed or None,
+                "segments": segments or None,
+            },
+            manifest["version"],
+        ) is not None
 
     def shallow_clone(
         self, src: str, dst: str, version: int | None = None
@@ -1442,13 +1512,7 @@ class ManifestCatalog:
         clones, or re-materialize (``replace_atomic(read(clone),
         ...)``) to sever the dependency — the deep-clone equivalent.
         Returns the committed clone version (always 1)."""
-        manifest = (
-            self.manifest_at(src, version)
-            if version is not None
-            else self.latest_manifest(src)
-        )
-        if manifest is None:
-            raise FileNotFoundError(f"table {src} has no committed manifest")
+        manifest = self._require_manifest(src, version)
         if self.latest_manifest(dst) is not None:
             raise ValueError(f"table {dst} already exists")
         clone = {k: v for k, v in manifest.items() if k != "version"}
@@ -1482,25 +1546,15 @@ class ManifestCatalog:
                 "without ambiguity"
             )
         while True:
-            manifest = self.latest_manifest(name)
-            if manifest is None:
-                raise FileNotFoundError(f"table {name} has no committed manifest")
+            manifest = self._require_manifest(name)
             if manifest.get("bucket_dirs") is not None:
                 raise ValueError(
                     f"table {name} is bucketed — update via the bucketed "
                     "MERGE (BucketedSCD2) instead"
                 )
-            col_type = self._column_type(name, col, manifest)
-            affected_set: set[str] = set()
-            for v in values:
-                affected_set |= set(
-                    self._bloom_pruned_dirs_resolved(manifest, col, v, col_type)
-                )
-            all_dirs = self._dirs(manifest)
-            affected = [d for d in all_dirs if d in affected_set]
+            affected, keep = self._bloom_split(name, manifest, col, values)
             if not affected:
                 return 0
-            keep = [d for d in all_dirs if d not in affected_set]
             df = self._read_dirs(affected, _recorded_schema(manifest))
             match = F.col(col).isin(values)
             updated = df.filter(match).count()
@@ -1512,49 +1566,9 @@ class ManifestCatalog:
                     for c, expr in set_exprs.items()
                 }
             )
-            stats = dict(manifest.get("stats") or {})
-            blooms = dict(manifest.get("blooms") or {})
-            sealed = dict(manifest.get("sealed") or {})
-            segments = dict(manifest.get("segments") or {})
-            old_stat_cols = sorted(
-                {c for d in affected for c in self._stats_for(manifest, d)}
-            )
-            old_bloom_cols = sorted(
-                {c for d in affected for c in self._bloom_cols_for(manifest, d)}
-            )
-            for d in affected:
-                stats.pop(d, None)
-                blooms.pop(d, None)
-                sealed.pop(d, None)
-            self._prune_segments(sealed, segments)
-            data_dir = self._new_data_dir(name)
-            out.write.mode("overwrite").parquet(data_dir)
-            new_dirs = keep + [data_dir]
-            if old_stat_cols:
-                stats[data_dir] = self._dir_stats(data_dir, old_stat_cols, out.schema)
-            if old_bloom_cols:
-                blooms[data_dir] = self._dir_blooms(
-                    data_dir, old_bloom_cols, out.schema
-                )
-            extras = {
-                k: v
-                for k, v in manifest.items()
-                # a set expression may retype a column: drop the schema
-                if k not in ("version", "dirs", "bucket_dirs", "stats",
-                             "blooms", "sealed", "segments", "schema")
-            }
-            if self._commit_if(
-                name,
-                extras
-                | {
-                    "dirs": new_dirs,
-                    "bucket_dirs": None,
-                    "stats": stats or None,
-                    "blooms": blooms or None,
-                    "sealed": sealed or None,
-                    "segments": segments or None,
-                },
-                manifest["version"],
+            # a set expression may retype a column: drop the schema
+            if self._commit_rewrite(
+                name, manifest, keep, affected, out, keep_schema=False
             ):
                 return updated
 
@@ -1571,21 +1585,14 @@ class ManifestCatalog:
         survive (BETWEEN is three-valued).  Prior versions stay
         time-travelable until vacuum.  Returns rows deleted."""
         while True:
-            manifest = self.latest_manifest(name)
-            if manifest is None:
-                raise FileNotFoundError(f"table {name} has no committed manifest")
+            manifest = self._require_manifest(name)
             if manifest.get("bucket_dirs") is not None:
                 raise ValueError(
                     f"table {name} is bucketed — range delete is for "
                     "plain (dir-listed) tables"
                 )
-            stats = dict(manifest.get("stats") or {})
-            blooms = dict(manifest.get("blooms") or {})
-            sealed = dict(manifest.get("sealed") or {})
-            segments = dict(manifest.get("segments") or {})
-            all_dirs = self._dirs(manifest)
             drop, rewrite, keep = [], [], []
-            for d in all_dirs:
+            for d in self._dirs(manifest):
                 # tail-or-segment: sealed dirs' stats live in their
                 # segment file — without the lookup every sealed dir
                 # would demote to the rewrite path
@@ -1600,8 +1607,7 @@ class ManifestCatalog:
                     rewrite.append(d)  # straddles a boundary
             if not drop and not rewrite:
                 return 0
-            deleted = 0
-            new_dirs = list(keep)
+            deleted, rows = 0, None
             if drop:
                 # min/max stats ignore NULLs, so a "wholly inside" dir
                 # can still hold NULL rows that must SURVIVE (BETWEEN
@@ -1626,54 +1632,15 @@ class ManifestCatalog:
                     # dirs are byte-identical — keep them, write
                     # NOTHING (an unconditional rewrite would orphan a
                     # full copy of the table on every no-op call)
-                    new_dirs.extend(rewrite)
+                    keep.extend(rewrite)
                     rewrite = []
                 else:
                     deleted += before - after
-            old_stat_cols = sorted(
-                {c for d in drop + rewrite for c in self._stats_for(manifest, d)}
-            )
-            old_bloom_cols = sorted(
-                {c for d in drop + rewrite
-                 for c in self._bloom_cols_for(manifest, d)}
-            )
-            for d in drop + rewrite:
-                stats.pop(d, None)
-                blooms.pop(d, None)
-                sealed.pop(d, None)
-            self._prune_segments(sealed, segments)
-            if rewrite and after > 0:
-                data_dir = self._new_data_dir(name)
-                kept_rows.write.mode("overwrite").parquet(data_dir)
-                new_dirs.append(data_dir)
-                if old_stat_cols:
-                    stats[data_dir] = self._dir_stats(
-                        data_dir, old_stat_cols, kept_rows.schema
-                    )
-                if old_bloom_cols:
-                    blooms[data_dir] = self._dir_blooms(
-                        data_dir, old_bloom_cols, kept_rows.schema
-                    )
+                    rows = kept_rows if after > 0 else None
             if deleted == 0:
                 return 0  # nothing matched anywhere; state unchanged
-            extras = {
-                k: v
-                for k, v in manifest.items()
-                if k not in ("version", "dirs", "bucket_dirs", "stats",
-                             "blooms", "sealed", "segments")
-            }
-            if self._commit_if(
-                name,
-                extras
-                | {
-                    "dirs": new_dirs,
-                    "bucket_dirs": None,
-                    "stats": stats or None,
-                    "blooms": blooms or None,
-                    "sealed": sealed or None,
-                    "segments": segments or None,
-                },
-                manifest["version"],
+            if self._commit_rewrite(
+                name, manifest, keep, drop + rewrite, rows, keep_schema=True
             ):
                 return deleted
 
@@ -1714,28 +1681,15 @@ class ManifestCatalog:
         if not values:
             return 0
         while True:
-            manifest = self.latest_manifest(name)
-            if manifest is None:
-                raise FileNotFoundError(f"table {name} has no committed manifest")
+            manifest = self._require_manifest(name)
             if manifest.get("bucket_dirs") is None:
                 raise ValueError(
                     f"table {name} is unbucketed — use delete_where"
                 )
-            n = manifest["n_buckets"]
-            keys = list(manifest.get("bucket_keys") or [])
-            fn = manifest.get("bucket_fn", "hash_pmod")
-            if fn == "identity":
-                bucket_expr = F.col(keys[0]).cast("int")
-            elif fn == "hash_pmod":
-                bucket_expr = F.pmod(
-                    F.hash(*[F.col(k) for k in keys]), F.lit(n)
-                ).cast("int")
-            else:
-                raise ValueError(f"unknown bucket_fn {fn!r}")
             matches = self.read(name).filter(F.col(col).isin(values))
             per_bucket = {
                 int(r["b"]): int(r["c"])
-                for r in matches.groupBy(bucket_expr.alias("b"))
+                for r in matches.groupBy(bucket_id(*_layout(manifest)).alias("b"))
                 .agg(F.count(F.lit(1)).alias("c"))
                 .collect()
             }
@@ -1749,50 +1703,25 @@ class ManifestCatalog:
             kept = self.read(name, buckets=affected).filter(
                 F.col(col).isNull() | ~F.col(col).isin(values)
             )
-            data_dir = self._new_data_dir(name)
-            (
-                kept.withColumn(BUCKET_COL, bucket_expr)
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(data_dir)
-            )
-            new_subdirs: dict[str, str] = {}
-            for p in self.fs.listdir(data_dir):
-                base = p.rsplit("/", 1)[-1]
-                if base.startswith(f"{BUCKET_COL}="):
-                    new_subdirs[base.split("=", 1)[1]] = p
-            restart = False
+            written = self._write_buckets(kept, name, *_layout(manifest))
             while True:
                 cur = self.latest_manifest(name)
-                stale = any(
+                if any(
                     list(cur["bucket_dirs"].get(b, [])) != ds
                     for b, ds in base_lists.items()
-                )
-                if stale:
-                    restart = True  # an affected bucket moved under us
-                    break
-                bucket_dirs = {
-                    b: list(ds) for b, ds in cur["bucket_dirs"].items()
-                }
-                for b in affected:
-                    sub = new_subdirs.get(str(b))
-                    bucket_dirs[str(b)] = [sub] if sub else []
-                extras = {
-                    k: v
-                    for k, v in cur.items()
-                    if k not in ("version", "dirs", "bucket_dirs", "stats",
-                                 "blooms", "schema")
+                ):
+                    break  # an affected bucket moved under us: restart
+                bucket_dirs = cur["bucket_dirs"] | {
+                    b: written.get(b, []) for b in base_lists
                 }
                 if self._commit_if(
                     name,
-                    extras
+                    self._carried(cur, keep_schema=False)
                     | {"dirs": None, "bucket_dirs": bucket_dirs}
                     | (extras_fn(cur, per_bucket) if extras_fn else {}),
                     cur["version"],
                 ):
                     return sum(per_bucket.values())
-            if restart:
-                continue
 
     # -- maintenance ----------------------------------------------------
     def optimize(
@@ -1822,9 +1751,7 @@ class ManifestCatalog:
         the concurrent commit's dirs). Orphaned rewrite dirs from
         lost races are collected by :meth:`vacuum`."""
         while True:
-            manifest = self.latest_manifest(name)
-            if manifest is None:
-                raise FileNotFoundError(f"table {name} has no committed manifest")
+            manifest = self._require_manifest(name)
             base = manifest["version"]
             bucketed = manifest.get("bucket_dirs") is not None
             if bucketed and (stats_cols or bloom_cols):
@@ -1844,54 +1771,20 @@ class ManifestCatalog:
                 df = df.repartition(n, *cluster_by).sortWithinPartitions(*cluster_by)
             elif target_partitions:
                 df = df.coalesce(target_partitions)
-            data_dir = self._new_data_dir(name)
+            # the carried bucket contract (bucket_fn, keys) is what
+            # re-buckets the rows: bucket subdir reads drop the bucket
+            # column, and an identity-bucketed store must not revert
+            # to the default hash contract
+            new = self._carried(manifest, keep_schema=False)
             if bucketed:
-                # bucket subdir reads drop the partition column; recompute
-                # it from the manifest's recorded business keys
-                keys = manifest["bucket_keys"]
-                if manifest.get("bucket_fn", "hash_pmod") == "identity":
-                    # identity-bucketed stores (IVF cell partitioning):
-                    # the bucket id IS the key value, never hash(key)
-                    df = df.withColumn(BUCKET_COL, F.col(keys[0]).cast("int"))
-                else:
-                    df = df.withColumn(
-                        BUCKET_COL,
-                        F.pmod(
-                            F.hash(*[F.col(k) for k in keys]),
-                            F.lit(manifest["n_buckets"]),
-                        ),
-                    )
-                df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(data_dir)
-                bucket_dirs = {}
-                for p in self.fs.listdir(data_dir):
-                    base_name = p.rsplit("/", 1)[-1]
-                    if base_name.startswith(f"{BUCKET_COL}="):
-                        bucket_dirs[base_name.split("=", 1)[1]] = [p]
-                # carry forward custom metadata (bucket_fn, ivf_* ...) —
-                # dropping it would silently revert an identity-bucketed
-                # store to the default hash contract
-                extras = {
-                    k: v
-                    for k, v in manifest.items()
-                    if k not in ("version", "dirs", "bucket_dirs", "stats",
-                                 "blooms", "schema")
-                }
-                new = extras | {
-                    "dirs": None, "bucket_dirs": bucket_dirs,
-                    "n_buckets": manifest["n_buckets"],
-                    "bucket_keys": list(keys),
-                }
+                new["dirs"] = None
+                new["bucket_dirs"] = self._write_buckets(
+                    df, name, *_layout(manifest)
+                )
             else:
+                data_dir = self._new_data_dir(name)
                 df.write.mode("overwrite").parquet(data_dir)
-                extras = {
-                    k: v
-                    for k, v in manifest.items()
-                    # a full rewrite starts metadata fresh: carrying
-                    # sealed/segments would pin dead segment files
-                    if k not in ("version", "dirs", "bucket_dirs", "stats",
-                                 "blooms", "sealed", "segments")
-                }
-                new = extras | {
+                new |= {
                     "dirs": [data_dir], "bucket_dirs": None, "n_buckets": None,
                     "schema": df.schema.json(),
                 }
@@ -1957,9 +1850,7 @@ class ManifestCatalog:
         optimize refuses them on bucketed tables, whose skipping is
         bucket pruning). Returns True iff a rewrite ran.
         Concurrency-safe: the underlying optimize CAS-rebases."""
-        manifest = self.latest_manifest(name)
-        if manifest is None:
-            raise FileNotFoundError(f"table {name} has no committed manifest")
+        manifest = self._require_manifest(name)
         bucket_dirs = manifest.get("bucket_dirs")
         if bucket_dirs:
             frag = max((len(ds) for ds in bucket_dirs.values()), default=0)
@@ -1993,9 +1884,7 @@ class ManifestCatalog:
         # content IS the base version's rows, so a concurrent append
         # must force a rebase, not be silently dropped
         while True:
-            manifest = self.latest_manifest(name)
-            if manifest is None:
-                raise FileNotFoundError(f"table {name} has no committed manifest")
+            manifest = self._require_manifest(name)
             if manifest.get("bucket_dirs") is not None:
                 raise ValueError(
                     f"table {name} is bucketed; zorder would break its layout"
@@ -2108,10 +1997,9 @@ class BucketedSCD2:
         self.catalog = catalog
         self.n_buckets = n_buckets
 
-    def _bucketed(self, df: DataFrame, keys: Sequence[str]) -> DataFrame:
-        return df.withColumn(
-            BUCKET_COL, F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(self.n_buckets))
-        )
+    def _manifest(self, bucket_dirs: dict, keys: Sequence[str]) -> dict:
+        return {"dirs": None, "bucket_dirs": bucket_dirs,
+                "n_buckets": self.n_buckets, "bucket_keys": list(keys)}
 
     def apply(
         self,
@@ -2124,27 +2012,23 @@ class BucketedSCD2:
     ) -> dict:
         """Returns {"changed_buckets": [...], "version": N} for
         observability (BENCH asserts apply cost tracks bucket count)."""
-        cat, fs = self.catalog, self.catalog.fs
+        cat = self.catalog
         source = prepare_scd_source(source, keys, dedup_order_by)
-        src = self._bucketed(source, keys)
 
         manifest = cat.latest_manifest(table)
         if manifest is None:
-            data_dir = cat._new_data_dir(table)
-            state = self._bucketed(
-                scd2_next_state(None, source, keys, tracked, as_of), keys
+            written = cat._write_buckets(
+                scd2_next_state(None, source, keys, tracked, as_of),
+                table, keys, self.n_buckets,
             )
-            state.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(data_dir)
-            bucket_dirs = {
-                str(b): [f"{data_dir}/{BUCKET_COL}={b}"]
-                for b in self._buckets_in_dir(data_dir)
-            }
-            version = cat._commit(
-                table,
-                {"dirs": None, "bucket_dirs": bucket_dirs, "n_buckets": self.n_buckets,
-                 "bucket_keys": list(keys)},
-            )
-            return {"changed_buckets": sorted(int(b) for b in bucket_dirs), "version": version}
+            # CAS on "no table yet": a concurrent first apply that
+            # landed v1 must not be replaced wholesale — on a lost race
+            # this batch applies incrementally on top of it instead
+            version = cat._commit_if(table, self._manifest(written, keys), 0)
+            if version:
+                return {"changed_buckets": sorted(int(b) for b in written),
+                        "version": version}
+            manifest = cat.latest_manifest(table)
 
         if manifest.get("bucket_fn", "hash_pmod") != "hash_pmod":
             raise ValueError(
@@ -2159,7 +2043,10 @@ class BucketedSCD2:
             )
         # buckets touched by this batch: distinct over small ints (≤ N)
         changed = sorted(
-            r[0] for r in src.select(BUCKET_COL).distinct().collect()
+            r[0]
+            for r in source.select(
+                bucket_id(keys, self.n_buckets).alias(BUCKET_COL)
+            ).distinct().collect()
         )
         if not changed:
             return {"changed_buckets": [], "version": manifest["version"]}
@@ -2169,16 +2056,9 @@ class BucketedSCD2:
             cat.read(table, buckets=changed) if have_dirs else None
         )  # all-new buckets → first-load semantics for this slice
         next_state = scd2_next_state(current_state, source, keys, tracked, as_of)
-        data_dir = cat._new_data_dir(table)
-        self._bucketed(next_state, keys).write.mode("overwrite").partitionBy(
-            BUCKET_COL
-        ).parquet(data_dir)
-
-        written = self._buckets_in_dir(data_dir)
-        ours = {
-            str(b): ([f"{data_dir}/{BUCKET_COL}={b}"] if b in written else [])
-            for b in changed
-        }  # bucket emptied (all rows filtered) → no dirs
+        written = cat._write_buckets(next_state, table, keys, self.n_buckets)
+        # a bucket emptied (all rows filtered) gets no dirs
+        ours = {str(b): written.get(str(b), []) for b in changed}
         # CAS + rebase: a concurrent apply touching OTHER buckets is
         # merged (its bucket dirs survive); one touching the SAME
         # bucket invalidated the state this rewrite was computed from
@@ -2197,21 +2077,10 @@ class BucketedSCD2:
                     )
             bucket_dirs = dict(latest["bucket_dirs"]) | ours
             version = cat._commit_if(
-                table,
-                {"dirs": None, "bucket_dirs": bucket_dirs,
-                 "n_buckets": self.n_buckets, "bucket_keys": list(keys)},
-                latest["version"],
+                table, self._manifest(bucket_dirs, keys), latest["version"]
             )
             if version:
                 return {"changed_buckets": changed, "version": version}
-
-    def _buckets_in_dir(self, data_dir: str) -> set[int]:
-        out = set()
-        for p in self.catalog.fs.listdir(data_dir):
-            base = p.rsplit("/", 1)[-1]
-            if base.startswith(f"{BUCKET_COL}="):
-                out.add(int(base.split("=", 1)[1]))
-        return out
 
     def read_current(self, table: str) -> DataFrame:
         return self.catalog.read(table).filter(F.col("is_current")).drop(BUCKET_COL)

@@ -819,61 +819,3 @@ def apply_bitmap_batch(
         merged.withColumn("_batch_id", F.lit(batch_id).cast("long")), table
     )
     return True
-
-
-def foreach_batch_takedown(
-    stream_df: DataFrame,
-    checkpoint_dir: str,
-    apply_delete,
-    id_col: str = "doc_id",
-    available_now: bool = True,
-    max_ids_per_batch: int = 100_000,
-):
-    """Continuous takedown processing — the delete leg of the
-    streaming maintenance bridges (ANN/lexical/dedup-store ingest
-    above): each micro-batch of deletion requests (a frame carrying
-    ``id_col`` — takedown notices, re-licensing, GDPR erasure) is
-    applied via ``apply_delete(ids) -> int``.  Wire it to
-    ``operators/ivf_store.delete_from_ivfpq_store``,
-    ``operators/text_index.delete_from_text_index``,
-    ``MinHashDedupStore.delete``, or a
-    ``ManifestCatalog.delete_where`` closure — every one of those is
-    IDEMPOTENT (re-deleting an absent or already-deleted id is a
-    no-op), so at-least-once replays converge with no batch-id
-    marker needed, unlike the ADDITIVE ingest bridges.
-
-    The batch's ids are collected to the driver: takedown feeds are
-    request-scale (legal/ops events), not corpus-scale — the
-    ``max_ids_per_batch`` guard fails LOUDLY if a mis-wired feed
-    pipes a data stream in here, rather than letting an unbounded
-    collect OOM the driver.  Returns the started ``StreamingQuery``
-    (caller awaits)."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        # a malformed request with a NULL id must not reach the
-        # delete APIs (deletes strip NULLs defensively too, but the
-        # feed is where the malformation is diagnosable)
-        rows = (
-            batch_df.select(F.col(id_col))
-            .filter(F.col(id_col).isNotNull())
-            .distinct()
-            .limit(max_ids_per_batch + 1).collect()
-        )
-        if not rows:
-            return
-        if len(rows) > max_ids_per_batch:
-            raise ValueError(
-                f"takedown batch exceeds {max_ids_per_batch} ids — this "
-                "bridge is for request-scale feeds; route bulk deletes "
-                "through the batch delete APIs directly"
-            )
-        apply_delete([r[id_col] for r in rows])
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -235,20 +235,18 @@ def test_probe_and_ingest_agree_on_shingleless_docs(spark, cat):
 
 
 def test_append_bucketed_layout_guard(spark, tmp_path):
-    from pyspark.sql import functions as F
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
     cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
     df = spark.createDataFrame([(1, "h1"), (2, "h2")], "id int, band_hash string")
-    be = F.pmod(F.hash("band_hash"), F.lit(8))
-    cat.append_bucketed(df, "t.bands", be, n_buckets=8, bucket_keys=["band_hash"])
-    cat.append_bucketed(df, "t.bands", be, n_buckets=8, bucket_keys=["band_hash"])
+    cat.append_bucketed(df, "t.bands", n_buckets=8, bucket_keys=["band_hash"])
+    cat.append_bucketed(df, "t.bands", n_buckets=8, bucket_keys=["band_hash"])
     # two appends: every populated bucket lists its dirs cumulatively
     m = cat.latest_manifest("t.bands")
     assert sum(len(ds) for ds in m["bucket_dirs"].values()) == 4  # 2 rows x 2 appends
     assert cat.read("t.bands").count() == 4
     with pytest.raises(ValueError, match="layout mismatch"):
-        cat.append_bucketed(df, "t.bands", be, n_buckets=16, bucket_keys=["band_hash"])
+        cat.append_bucketed(df, "t.bands", n_buckets=16, bucket_keys=["band_hash"])
     with pytest.raises(ValueError, match="unbucketed"):
         cat.replace_atomic(df, "t.plain")
-        cat.append_bucketed(df, "t.plain", be, n_buckets=8, bucket_keys=["band_hash"])
+        cat.append_bucketed(df, "t.plain", n_buckets=8, bucket_keys=["band_hash"])

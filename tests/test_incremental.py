@@ -1,15 +1,13 @@
 """Incremental aggregate maintenance: applying a CDC batch to the
-grouped state must equal a full recompute over the new base — for
-sum/count (delta math) and min/max (changed-group re-aggregation).
+grouped state must equal a full recompute over the new base (sum/count
+delta math).
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.operators.incremental import (
     apply_agg_delta,
     grouped_agg_state,
-    refresh_extremes_for_changed_groups,
 )
 from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
@@ -38,13 +36,6 @@ def _rows(df):
     )
 
 
-def _ext_rows(df):
-    return sorted(
-        ((r.g, r["min_x"], r["max_x"]) for r in df.collect()),
-        key=lambda t: (t[0] is None, t[0]),
-    )
-
-
 def test_delta_update_equals_full_recompute(spark, cat):
     cat.replace_atomic(spark.createDataFrame(V1, SCHEMA), "ivm.t")
     cat.replace_atomic(spark.createDataFrame(V2, SCHEMA), "ivm.t")
@@ -67,25 +58,6 @@ def test_delta_update_is_change_proportional(spark, cat):
     changes = cat.diff_versions("ivm.p", 1, 2, keys=["id"])
     # 1 delete + 2 inserts + update pre/post pair = 5 change images
     assert changes.count() == 5
-
-
-def test_extremes_refresh_changed_groups_only(spark, cat):
-    cat.replace_atomic(spark.createDataFrame(V1, SCHEMA), "ivm.e")
-    cat.replace_atomic(spark.createDataFrame(V2, SCHEMA), "ivm.e")
-    changes = cat.diff_versions("ivm.e", 1, 2, keys=["id"])
-
-    base_v1 = cat.read("ivm.e", version=1)
-    ext_v1 = base_v1.groupBy("g").agg(
-        F.min("x").alias("min_x"), F.max("x").alias("max_x")
-    )
-    base_v2 = cat.read("ivm.e", version=2)
-    refreshed = refresh_extremes_for_changed_groups(
-        ext_v1, base_v2, changes, ["g"], ["x"]
-    )
-    full = base_v2.groupBy("g").agg(
-        F.min("x").alias("min_x"), F.max("x").alias("max_x")
-    )
-    assert _ext_rows(refreshed) == _ext_rows(full)
 
 
 def test_noop_change_batch_leaves_state_intact(spark, cat):

@@ -9,9 +9,9 @@ from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.operators.scd import scd2_next_state
 from end_to_end_etl_pipeline_spark.sinks.manifest import (
-    BUCKET_COL,
     BucketedSCD2,
     ManifestCatalog,
+    bucket_id,
 )
 
 
@@ -94,7 +94,7 @@ def test_bucketed_scd2_matches_unbucketed(spark, cat):
     # pruning: second apply touched only the buckets of keys 5, 7, 25
     touched = {
         r[0]
-        for r in eng._bucketed(b2, ["k"]).select(BUCKET_COL).distinct().collect()
+        for r in b2.select(bucket_id(["k"], 8)).distinct().collect()
     }
     assert set(r2["changed_buckets"]) == touched
     assert len(r2["changed_buckets"]) < len(r1["changed_buckets"])
@@ -871,9 +871,8 @@ def test_maybe_optimize_policy_triggers_on_fragmentation(spark, cat):
 
     # bucketed: two appends touching the same bucket → worst bucket 2
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-    be = F.pmod(F.hash("k"), F.lit(4))
     for _ in range(2):
-        cat.append_bucketed(df, "mo.b", be, n_buckets=4, bucket_keys=["k"])
+        cat.append_bucketed(df, "mo.b", n_buckets=4, bucket_keys=["k"])
     assert cat.maybe_optimize("mo.b", max_dirs=2) is False
     assert cat.maybe_optimize("mo.b", max_dirs=1) is True
     m = cat.latest_manifest("mo.b")
@@ -914,7 +913,7 @@ def test_append_bucketed_cas_rebase_keeps_concurrent_commit(spark, cat):
         return spark.createDataFrame(rows, "cell int, v string")
 
     cat.append_bucketed(
-        bdf([(0, "a"), (1, "b")]), "cas.t", F.col("cell"), 4, ["cell"],
+        bdf([(0, "a"), (1, "b")]), "cas.t", 4, ["cell"],
         bucket_fn="identity",
     )
     orig = cat._commit_if
@@ -926,7 +925,7 @@ def test_append_bucketed_cas_rebase_keeps_concurrent_commit(spark, cat):
             cat._commit_if = orig
             # concurrent writer lands AFTER this append pinned its base
             cat.append_bucketed(
-                bdf([(2, "c")]), "cas.t", F.col("cell"), 4, ["cell"],
+                bdf([(2, "c")]), "cas.t", 4, ["cell"],
                 bucket_fn="identity",
                 extras_update={"ann_last_batch_id": 7},
             )
@@ -938,7 +937,7 @@ def test_append_bucketed_cas_rebase_keeps_concurrent_commit(spark, cat):
     cat._commit_if = racy
     try:
         cat.append_bucketed(
-            bdf([(3, "d")]), "cas.t", F.col("cell"), 4, ["cell"],
+            bdf([(3, "d")]), "cas.t", 4, ["cell"],
             bucket_fn="identity",
         )
     finally:
@@ -1088,7 +1087,7 @@ def test_delete_bucketed_null_value_stripped(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, f"v{i}") for i in range(10)], "k bigint, v string"
     )
-    cat.append_bucketed(df, "t", F.pmod(F.hash("k"), F.lit(4)), 4, ["k"])
+    cat.append_bucketed(df, "t", 4, ["k"])
     assert cat.delete_bucketed_where("t", "k", [2, None]) == 1
     assert cat.read("t").count() == 9
 
@@ -1549,6 +1548,16 @@ def test_schema_kept_only_by_same_row_rewrites(spark, tmp_path, run_counted):
     assert has("t")
     assert cat.shallow_clone("t", "snap") == 1
     assert has("snap")
+    # the clone's lineage marker rides every derived commit
+    origin = cat.latest_manifest("snap")["cloned_from"]
+    for rewrite in (
+        lambda: cat.delete_where("snap", "k", [5]),
+        lambda: cat.delete_range("snap", "k", 6, 6),
+        lambda: cat.update_where("snap", "k", [7], {"v": F.upper("v")}),
+        lambda: cat.optimize("snap"),
+    ):
+        rewrite()
+        assert cat.latest_manifest("snap")["cloned_from"] == origin
     assert cat.update_where("t", "k", [4], {"v": F.upper("v")}) == 1
     assert not has("t")
     cat.optimize("t", stats_cols=["k"])
@@ -1572,3 +1581,93 @@ def test_schema_kept_only_by_same_row_rewrites(spark, tmp_path, run_counted):
     assert not has("dim")
     cat.optimize("dim")
     assert not has("dim")
+
+    # a bucketed store's extras survive every derived commit
+    bdf = spark.createDataFrame(rows, "k bigint, v string")
+    cat.append_bucketed(bdf, "bk", 4, ["k"], extras_update={"marker": 7})
+    for rewrite in (
+        lambda: cat.append_bucketed(bdf, "bk", 4, ["k"]),
+        lambda: cat.delete_bucketed_where("bk", "k", [1]),
+        lambda: cat.optimize("bk"),
+    ):
+        rewrite()
+        assert cat.latest_manifest("bk")["marker"] == 7
+        assert not has("bk")
+
+
+def test_bucketed_scd2_first_load_keeps_concurrent_first_load(spark, cat):
+    """Two first applies race on a table with no manifest yet: the one
+    that loses the v1 slot must apply on top of the winner, not
+    replace it wholesale (a last-writer-wins publish silently dropped
+    every bucket the winner wrote)."""
+    other = ManifestCatalog(spark, cat.root)
+    orig = cat._new_data_dir
+    fired = {"done": False}
+
+    def racy(name):
+        if not fired["done"]:
+            fired["done"] = True
+            # the concurrent first apply lands v1 after this apply saw
+            # no table and before it publishes
+            BucketedSCD2(other, n_buckets=4).apply(
+                _src(spark, [(10, "x"), (11, "y")]), "dim", ["k"], ["attr"],
+                "2026-01-01 00:00:00",
+            )
+        return orig(name)
+
+    cat._new_data_dir = racy
+    eng = BucketedSCD2(cat, n_buckets=4)
+    try:
+        r = eng.apply(_src(spark, [(1, "a"), (2, "b")]), "dim", ["k"],
+                      ["attr"], "2026-01-01 00:00:00")
+    finally:
+        del cat._new_data_dir
+    assert r["version"] == 2
+    got = sorted((row.k, row.attr) for row in eng.read_current("dim").collect())
+    assert got == [(1, "a"), (2, "b"), (10, "x"), (11, "y")]
+
+
+@pytest.mark.parametrize("op", ["delete_where", "update_where", "delete_range"])
+def test_plain_rewrite_rebases_on_concurrent_append(spark, cat, op):
+    """An append landing between a row rewrite's data write and its
+    publish fails the rewrite's CAS; the retry re-plans against the new
+    latest, so the appended rows survive and the rewrite applies to
+    them too."""
+    schema = "k bigint, v string"
+    cat.replace_atomic(
+        spark.createDataFrame([(i, f"v{i}") for i in range(6)], schema), "rw",
+        stats_cols=["k"], bloom_cols=["k"],
+    )
+    orig = cat._commit_if
+    fired = {"done": False}
+
+    def racy(name, manifest, expected_base):
+        if not fired["done"]:
+            fired["done"] = True
+            cat._commit_if = orig
+            cat.append(
+                spark.createDataFrame([(3, "late"), (99, "z")], schema), "rw",
+                stats_cols=["k"], bloom_cols=["k"],
+            )
+            cat._commit_if = racy
+            assert orig(name, manifest, expected_base) is None  # stale CAS
+            return None
+        return orig(name, manifest, expected_base)
+
+    run = {
+        "delete_where": lambda: cat.delete_where("rw", "k", [3]),
+        "update_where": lambda: cat.update_where(
+            "rw", "k", [3], {"v": F.upper("v")}
+        ),
+        "delete_range": lambda: cat.delete_range("rw", "k", 3, 3),
+    }[op]
+    cat._commit_if = racy
+    try:
+        assert run() == 2  # the base row and the concurrent one
+    finally:
+        cat._commit_if = orig
+    assert fired["done"]
+    want = [(k, f"v{k}") for k in range(6) if k != 3] + [(99, "z")]
+    if op == "update_where":
+        want += [(3, "LATE"), (3, "V3")]
+    assert sorted((r.k, r.v) for r in cat.read("rw").collect()) == sorted(want)

@@ -273,9 +273,7 @@ def _run_bucketed_sequence(spark, cat: ManifestCatalog, tbl: str, seed: int):
     def bappend():
         nonlocal next_id, model
         df, rows, next_id = _mk_bucketed_batch(spark, rng, next_id)
-        cat.append_bucketed(
-            df, tbl, F.col("cell"), N_CELLS, ["cell"], bucket_fn="identity"
-        )
+        cat.append_bucketed(df, tbl, N_CELLS, ["cell"], bucket_fn="identity")
         model.extend(rows)
         oplog.append(f"bappend({len(rows)})")
 
@@ -483,8 +481,7 @@ def test_two_writer_bucketed_cas_fuzz(spark, tmp_path_factory, shard):
 
                     cats[w].append_bucketed(
                         spark.createDataFrame(pdf).coalesce(1), tbl,
-                        F.col("cell"), N_CELLS, ["cell"],
-                        bucket_fn="identity", extras_fn=merge,
+                        N_CELLS, ["cell"], bucket_fn="identity", extras_fn=merge,
                     )
             except Exception as e:
                 errors.append((w, e))
@@ -678,7 +675,7 @@ def test_maintenance_race_bucketed_fuzz(spark, tmp_path_factory, shard):
             )
             cats[0].append_bucketed(
                 spark.createDataFrame(pdf).coalesce(1), tbl,
-                F.col("cell"), N_CELLS, ["cell"], bucket_fn="identity",
+                N_CELLS, ["cell"], bucket_fn="identity",
             )
 
         bappend(batches[0])

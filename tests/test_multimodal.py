@@ -71,43 +71,6 @@ def test_sample_frames_real_backend_not_wired(spark):
         sample_frames(df, "id", "payload", backend="ffmpeg")
 
 
-def test_resize_payloads_bounded_output(spark):
-    from end_to_end_etl_pipeline_spark.operators.multimodal import (
-        resize_payloads,
-        with_binary_payload,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "x" * 100), (2, "ab"), (3, "")], "doc_id long, text string"
-    )
-    with_null = with_binary_payload(docs, "text").unionByName(
-        spark.createDataFrame(
-            [(4, None, None)], "doc_id long, text string, payload binary"
-        )
-    )
-    out = resize_payloads(with_null, "doc_id", "payload", target_bytes=16).collect()
-    by_id = {r.doc_id: r for r in out}
-    # strictly 1:1 — NULL payloads pass through, never drop
-    assert len(out) == 4
-    assert by_id[4].resized is None and by_id[4].orig_bytes is None
-    # every non-null output exactly target_bytes regardless of input size
-    assert all(len(r.resized) == 16 for r in out if r.resized is not None)
-    assert by_id[1].orig_bytes == 100 and bytes(by_id[1].resized) == b"x" * 16
-    # short payload repeats bytes nearest-neighbor style (2→16: each
-    # source byte repeated 8×), never zero-pads
-    assert by_id[2].orig_bytes == 2 and bytes(by_id[2].resized) == b"a" * 8 + b"b" * 8
-    assert bytes(by_id[3].resized) == bytes(16)
-    # deterministic: same input -> same bytes on rerun
-    out2 = resize_payloads(with_null, "doc_id", "payload", target_bytes=16).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
-    import pytest as _pytest
-
-    with _pytest.raises(NotImplementedError, match="resize backend"):
-        resize_payloads(
-            with_binary_payload(docs, "text"), "doc_id", "payload", backend="pil"
-        )
-
-
 def test_wav_blob_is_spec_exact_and_decoder_rejects_malformed(spark):
     """The JVM-side encoder must produce byte-exact canonical WAV
     (checked against a hand-built reference blob), and the numpy

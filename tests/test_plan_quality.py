@@ -392,35 +392,6 @@ def _explain_str(spark, df) -> str:
     )
 
 
-def test_jaccard_verify_broadcast_guard_switches_strategy(spark):
-    """jaccard_on_pairs broadcasts the candidate set only under the
-    size threshold; above it the verify legs must plan as non-broadcast
-    joins (the dup-heavy-corpus OOM guard, asserted at plan level)."""
-    from end_to_end_etl_pipeline_spark.operators.text_dedup import (
-        char_shingles,
-        jaccard_on_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "abcdefghij" * 3) for i in range(6)], "doc_id int, text string"
-    )
-    sets_ = char_shingles(docs, "doc_id", "text", n=6, distinct=True)
-    pairs = spark.createDataFrame(
-        [(a, b) for a in range(6) for b in range(a + 1, 6)], "id_a int, id_b int"
-    )
-    small = jaccard_on_pairs(pairs, sets_, "doc_id", n_pairs=15)
-    big = jaccard_on_pairs(
-        pairs, sets_, "doc_id", n_pairs=15, max_broadcast_pairs=10
-    )
-    assert "BroadcastHashJoin" in _explain_str(spark, small)
-    # over-threshold: no explicit broadcast hint anywhere in the plan
-    # (AQE may still pick broadcast at runtime from actual sizes —
-    # that is the desired executor-side decision, not a driver OOM)
-    assert "ResolvedHint" not in big._jdf.queryExecution().logical().toString()
-    # results identical either way
-    assert sorted(map(tuple, small.collect())) == sorted(map(tuple, big.collect()))
-
-
 def test_gopher_filter_single_pass_no_shuffle(spark):
     """Every Gopher signal is a higher-order-function projection —
     the plan must contain no Exchange, no Join, no Generate

@@ -1,4 +1,4 @@
-"""kanonymity_generalize / kanonymity_audit contracts on
+"""kanonymity_generalize contracts on
 hand-computable frames: residual-class counting (the guarantee the
 naive full-table count silently breaks), suppression, NULL-QI
 null-safe classing, ladder validation, and the published-output
@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.operators.privacy import (
     MASK,
-    kanonymity_audit,
     kanonymity_generalize,
 )
 
@@ -111,30 +110,10 @@ def test_ladder_validation():
 def test_reserved_temp_name_collision_rejected(spark):
     """Input columns in the operator's temp namespace (__qi_*/__sz_*/
     __class_n) must fail fast, not silently corrupt the class-size
-    join; same for the audit's fixed output names."""
+    join."""
     df = _rows(spark, [(1, "X", "30")]).withColumn("__class_n", F.lit(1))
     with pytest.raises(ValueError, match="reserved"):
         kanonymity_generalize(df, ["id"], _ladder(), k=2)
     df2 = _rows(spark, [(1, "X", "30")]).withColumn("__qi_city", F.lit("x"))
     with pytest.raises(ValueError, match="reserved"):
         kanonymity_generalize(df2, ["id"], _ladder(), k=2)
-    with pytest.raises(ValueError, match="reserved"):
-        kanonymity_audit(
-            _rows(spark, [(1, "X", "30")]),
-            {"class_size": F.col("city")},
-            k=2,
-        )
-
-
-def test_audit_counts_and_risk(spark):
-    rows = [(1, "X", "30"), (2, "X", "30"), (3, "Y", "30")]
-    out = {
-        (r["city"], r["age"]): (r["class_size"], r["at_risk"], r["reident_risk"])
-        for r in kanonymity_audit(
-            _rows(spark, rows),
-            {"city": F.col("city"), "age": F.col("age_band")},
-            k=2,
-        ).collect()
-    }
-    assert out[("X", "30")] == (2, False, 0.5)
-    assert out[("Y", "30")] == (1, True, 1.0)

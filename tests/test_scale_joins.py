@@ -1,38 +1,10 @@
-"""Scale-path join strategies: bucketed co-location (exchange-free
-plans) and deterministic skew salting."""
+"""Scale paths: deterministic skew salting, AQE skew splits, and the
+bucket-pruned stores (IVF-PQ ANN index, inverted text index)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.operators.joins import salted_join
-from end_to_end_etl_pipeline_spark.sinks.bucketing import (
-    co_located_join,
-    write_bucketed_table,
-)
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    left = spark.range(0, 2000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("lv")
-    )
-    right = spark.range(0, 500).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("rv")
-    )
-    try:
-        write_bucketed_table(left, "bk_left", ["k"], n_buckets=8)
-        write_bucketed_table(right, "bk_right", ["k"], n_buckets=8)
-        joined = co_located_join(
-            spark, "bk_left", "bk_right", ["k"], force_sort_merge=True
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan  # bucket co-location: no shuffle
-        assert "SortMergeJoin" in plan and "Bucketed: true" in plan
-        assert joined.count() == 500
-        row = joined.filter(F.col("k") == 7).collect()[0]
-        assert (row.lv, row.rv) == (14, 21)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bk_left")
-        spark.sql("DROP TABLE IF EXISTS bk_right")
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -60,54 +32,27 @@ def test_salted_join_matches_plain_join(spark):
     assert spread == 8
 
 
-def test_ivf_store_prunes_buckets_and_matches_in_plan_ivf(spark, tmp_path):
-    from end_to_end_etl_pipeline_spark.operators.ivf_store import (
-        ivf_store_topk,
-        write_ivf_store,
-    )
-    from end_to_end_etl_pipeline_spark.operators.similarity import cosine_topk_ivf
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
-
-    cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    dim = len(emb.first().embedding)
-    write_ivf_store(cat, emb, "vec_id", "embedding", "label", "ann.emb", dim=dim)
-    n_cells = cat.latest_manifest("ann.emb")["n_buckets"]
-    assert n_cells == emb.select("label").distinct().count()
-
-    queries = emb.orderBy("vec_id").limit(4)
-    got, probed = ivf_store_topk(
-        cat, "ann.emb", queries, "vec_id", "embedding", k=3, nprobe=2
-    )
-    # physical pruning: the scan touches <= queries x nprobe cells
-    assert 0 < len(probed) <= 8 < n_cells
-    # identical results to the in-plan IVF over the full corpus
-    want = cosine_topk_ivf(
-        queries, emb, "vec_id", "vec_id", "embedding", "label",
-        k=3, nprobe=2, dim=dim,
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
 def test_ivf_store_survives_optimize_and_refuses_hash_appliers(spark, tmp_path):
-    from end_to_end_etl_pipeline_spark.operators.ivf_store import (
-        ivf_store_topk,
-        write_ivf_store,
-    )
+    from end_to_end_etl_pipeline_spark.operators.ivf_store import write_ivfpq_store
     from end_to_end_etl_pipeline_spark.sinks.manifest import BucketedSCD2, ManifestCatalog
 
     cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     dim = len(emb.first().embedding)
-    write_ivf_store(cat, emb, "vec_id", "embedding", "label", "ann.e", dim=dim)
-    queries = emb.orderBy("vec_id").limit(3)
-    before, _ = ivf_store_topk(cat, "ann.e", queries, "vec_id", "embedding", k=3)
-    before_rows = sorted(map(tuple, before.collect()))
+    cb = [[(0, [0.0] * dim), (1, [1.0] * dim)]]  # M=1, K=2: codes unused here
+    write_ivfpq_store(cat, emb, "vec_id", "embedding", "label", cb, "ann.e", dim=dim)
 
+    def cells():
+        return {
+            b: sorted(r.vec_id for r in cat.read("ann.e", buckets=[b]).collect())
+            for b in sorted(int(c) for c in cat.latest_manifest("ann.e")["bucket_dirs"])
+        }
+
+    before = cells()
     # routine compaction must keep the identity cell->bucket mapping
     cat.optimize("ann.e")
-    after, _ = ivf_store_topk(cat, "ann.e", queries, "vec_id", "embedding", k=3)
-    assert sorted(map(tuple, after.collect())) == before_rows
+    assert cat.latest_manifest("ann.e")["bucket_fn"] == "identity"
+    assert cells() == before
 
     # hash-bucketed SCD2 would scramble the identity layout: refuse
     n_cells = cat.latest_manifest("ann.e")["n_buckets"]
@@ -163,14 +108,14 @@ def test_aqe_splits_skewed_join_partitions(spark):
                 spark.conf.set(k, v)
 
 
-def test_ivf_store_string_ids_and_zero_norm_guard(spark, tmp_path):
+def test_ivfpq_store_string_ids_and_zero_norm_vectors(spark, tmp_path):
     """The probe frame schema derives from the query id DataType (a
-    string doc id must work, not just bigint), and zero-norm vectors
-    never occupy top-k slots (NULL cosine would sort into results when
-    a query has < k real matches)."""
+    string doc id must work, not just bigint), and a zero-norm stored
+    vector is an ordinary candidate: squared L2 is defined at zero
+    norm, so it ranks by its real distance, never as NULL."""
     from end_to_end_etl_pipeline_spark.operators.ivf_store import (
-        ivf_store_topk,
-        write_ivf_store,
+        ivfpq_store_topk,
+        write_ivfpq_store,
     )
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
@@ -184,16 +129,16 @@ def test_ivf_store_string_ids_and_zero_norm_guard(spark, tmp_path):
     emb = spark.createDataFrame(
         rows, "doc string, embedding array<double>, label int"
     )
-    write_ivf_store(cat, emb, "doc", "embedding", "label", "ann.s", dim=2)
+    cb = [[(0, [1.0, 0.0]), (1, [0.0, 1.0])]]  # M=1, K=2 codebook
+    write_ivfpq_store(cat, emb, "doc", "embedding", "label", cb, "ann.s", dim=2)
     queries = emb.filter(F.col("doc") == "a")
-    got, probed = ivf_store_topk(
+    got, probed = ivfpq_store_topk(
         cat, "ann.s", queries, "doc", "embedding", k=10, nprobe=2
     )
-    out = got.collect()
-    ids = {r.match_id for r in out}
-    assert "zero" not in ids  # zero-norm vector filtered, not NULL-ranked
-    assert ids == {"b", "c"}  # string ids flow through probe + join
-    assert all(r.cosine is not None for r in out)
+    out = {r.match_id: r.l2sq for r in got.collect()}
+    # string ids flow through probe + join; every distance is real
+    assert out == {"b": 0.02, "zero": 1.0, "c": 2.0}
+    assert probed == [0, 1]
 
 
 def test_ivfpq_store_matches_in_plan_ivfpq_and_prunes(spark, tmp_path):

@@ -817,125 +817,6 @@ def test_foreach_batch_bitmap_uniques_exact_and_replay(spark, tmp_path):
     assert sorted(map(tuple, cat.read("g.bm").collect())) == before
 
 
-def test_foreach_batch_takedown_deletes_across_batches(spark, tmp_path):
-    """A streamed feed of takedown requests tombstones the docs in the
-    text index batch by batch; results afterwards equal an index built
-    without them, and the bounded-collect guard fails loudly on a
-    corpus-scale mis-wire."""
-    import json as _json
-
-    import pytest as _pytest
-
-    from end_to_end_etl_pipeline_spark.operators.text_index import (
-        delete_from_text_index,
-        text_index_search,
-        write_text_index,
-    )
-    from end_to_end_etl_pipeline_spark.streaming.jobs import (
-        foreach_batch_takedown,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"tok{i} spark shared words") for i in range(8)],
-        "doc_id bigint, text string",
-    )
-    cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
-    write_text_index(cat, docs, "doc_id", "text", "idx.t", n_buckets=4)
-
-    d = str(tmp_path / "feed")
-    os.makedirs(d)
-    for fname, ids in (("b1.json", [1, 2]), ("b2.json", [2, 5])):
-        with open(os.path.join(d, fname), "w") as f:
-            f.write("\n".join(_json.dumps({"doc_id": i}) for i in ids))
-    stream = read_stream_files(
-        spark, d, "doc_id bigint", max_files_per_trigger=1
-    )
-    q = foreach_batch_takedown(
-        stream, str(tmp_path / "ck"),
-        apply_delete=lambda ids: delete_from_text_index(cat, "idx.t", ids),
-    )
-    q.awaitTermination(120)
-
-    m = cat.latest_manifest("idx.t")
-    assert m["ti_deleted_ids"] == [1, 2, 5]  # overlap converged (idempotent)
-    assert m["ti_n_docs"] == 5
-    queries = spark.createDataFrame([(0, "spark")], "query_id bigint, word string")
-    got, _ = text_index_search(cat, "idx.t", queries, k=10)
-    fresh = ManifestCatalog(spark, f"file://{tmp_path}/fresh")
-    write_text_index(fresh, docs.filter(~F.col("doc_id").isin(1, 2, 5)),
-                     "doc_id", "text", "idx.t", n_buckets=4)
-    want, _ = text_index_search(fresh, "idx.t", queries, k=10)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    # corpus-scale mis-wire fails loudly, not silently truncated
-    big = str(tmp_path / "big")
-    os.makedirs(big)
-    with open(os.path.join(big, "b.json"), "w") as f:
-        f.write("\n".join(_json.dumps({"doc_id": i}) for i in range(50)))
-    stream2 = read_stream_files(spark, big, "doc_id bigint")
-    q2 = foreach_batch_takedown(
-        stream2, str(tmp_path / "ck2"),
-        apply_delete=lambda ids: 0, max_ids_per_batch=10,
-    )
-    with _pytest.raises(Exception, match="request-scale"):
-        q2.awaitTermination(120)
-        q2.processAllAvailable()
-
-
-def test_takedown_bridge_wired_to_scd2_member_deletion(spark, tmp_path):
-    """The generic takedown bridge composes with the SCD2 dimension:
-    each streamed batch of member-deletion requests closes the keys'
-    current rows through scd2_close_keys + an atomic state replace —
-    point-in-time history preserved, replays convergent (closing a
-    closed key is a no-op)."""
-    import json as _json
-
-    from end_to_end_etl_pipeline_spark.operators.scd import (
-        scd2_close_keys,
-        scd2_next_state,
-    )
-    from end_to_end_etl_pipeline_spark.streaming.jobs import (
-        foreach_batch_takedown,
-    )
-
-    cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
-    src = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(6)], "k bigint, attr string"
-    )
-    cat.replace_atomic(
-        scd2_next_state(None, src, ["k"], ["attr"], "2026-01-01 00:00:00"),
-        "dim.k",
-    )
-
-    def _close(ids):
-        state = cat.read("dim.k")
-        keys_df = spark.createDataFrame([(int(i),) for i in ids], "k bigint")
-        cat.replace_atomic(
-            scd2_close_keys(state, keys_df, ["k"], "2026-02-01 00:00:00"),
-            "dim.k",
-        )
-        return len(ids)
-
-    d = str(tmp_path / "feed")
-    os.makedirs(d)
-    for fname, ids in (("b1.json", [1, 3]), ("b2.json", [3, 5])):
-        with open(os.path.join(d, fname), "w") as f:
-            f.write("\n".join(_json.dumps({"k": i}) for i in ids))
-    stream = read_stream_files(spark, d, "k bigint", max_files_per_trigger=1)
-    q = foreach_batch_takedown(
-        stream, str(tmp_path / "ck"), apply_delete=_close, id_col="k"
-    )
-    q.awaitTermination(120)
-
-    rows = {r["k"]: (r["is_current"], str(r["effective_to"]))
-            for r in cat.read("dim.k").collect()}
-    for k in (1, 3, 5):
-        assert rows[k] == (False, "2026-02-01 00:00:00")
-    for k in (0, 2, 4):
-        assert rows[k][0] is True
-    assert len(rows) == 6  # no rows lost, none duplicated
-
-
 def test_file_source_batching_contract(spark, tmp_path):
     """The driver-gated streaming queries (late-data, stream-stream
     join, stateful sessions) all assume: maxFilesPerTrigger=1 is
