@@ -42,7 +42,8 @@ def _build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--layers",
         default="bronze,silver,gold",
-        help="comma list of layers to run, in this order",
+        help="comma list of layers to run (always in bronze, silver, "
+        "gold order)",
     )
     p.add_argument("--master", default=None, help="Spark master override")
     return p
@@ -114,6 +115,13 @@ def main(argv: list[str] | None = None) -> int:
             config = json.load(f)
     except (OSError, json.JSONDecodeError) as e:
         print(f"bad config {args.config}: {e}", file=sys.stderr)
+        return 2
+    if not isinstance(config, dict):
+        print(
+            f"bad config {args.config}: expected a JSON object, got "
+            f"{type(config).__name__}",
+            file=sys.stderr,
+        )
         return 2
     root = args.catalog_root or config.get("catalog_root")
     if not root:

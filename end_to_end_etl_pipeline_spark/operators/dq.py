@@ -52,17 +52,6 @@ def apply_rules(df: DataFrame, *rules: Column) -> DataFrame:
     return df.filter(pred)
 
 
-def quarantine_split(df: DataFrame, *rules: Column) -> tuple[DataFrame, DataFrame]:
-    """Pass/fail split for DQ auditing — the "data quality metrics
-    table" the reference's README lists as a future enhancement.
-    Two filters over one cached-by-AQE scan beats a driver-side loop.
-    """
-    pred = F.lit(True)
-    for r in rules:
-        pred = pred & r
-    return df.filter(pred), df.filter(~pred)
-
-
 def profile_columns(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """Per-column data profile in ONE aggregation pass over the table:
     (column, n_rows, n_nulls, null_frac, n_distinct) — the schema-

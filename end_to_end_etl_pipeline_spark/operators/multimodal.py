@@ -32,9 +32,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    DoubleType,
     LongType,
     StructField,
     StructType,
@@ -63,59 +61,6 @@ def binary_stats(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:
         # a string 2x a multi-MB payload just to keep 8 chars
         F.hex(F.substring(b, 1, 4)).alias("magic_hex"),
     )
-
-
-def decode_features(
-    df: DataFrame,
-    id_col: str,
-    bin_col: str,
-    dim: int = 8,
-    backend: str = "fake",
-) -> DataFrame:
-    """Decode binary payloads to fixed-width feature vectors via
-    Arrow-batched ``mapInPandas``.
-
-    ``backend="fake"``: deterministic features — byte i of the
-    payload scaled to [0,1], zero-padded to ``dim`` (schema/batching
-    identical to a real decoder). Any other backend raises
-    ``NotImplementedError``: that seam is where a codec (PIL decode →
-    resize → channel means; ffmpeg frame-sample) plugs in unchanged.
-    """
-    if backend != "fake":
-        raise NotImplementedError(
-            f"decode backend {backend!r}: real codecs (PIL/ffmpeg/torchaudio) "
-            "are not available in this environment; only the deterministic "
-            "'fake' backend is wired"
-        )
-    id_type = df.schema[id_col].dataType
-    schema = StructType(
-        [
-            StructField(id_col, id_type),
-            StructField("n_bytes", LongType()),
-            StructField("features", ArrayType(DoubleType())),
-        ]
-    )
-
-    def decode(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = pdf[bin_col]
-            feats = [
-                [(b[i] / 255.0) if i < len(b) else 0.0 for i in range(dim)]
-                if b is not None
-                else None
-                for b in payloads
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_bytes": [len(b) if b is not None else 0 for b in payloads],
-                    "features": feats,
-                }
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(decode, schema)
 
 
 def _le_hex(col, nbytes: int):
@@ -775,7 +720,7 @@ def sample_frames(
 ) -> DataFrame:
     """Frame sampling for container payloads (video/audio): one input
     row fans out to one output row per SAMPLED frame — the
-    row-multiplying half of the multimodal family (``decode_features``
+    row-multiplying half of the multimodal family (``binary_stats``
     is 1:1).
 
     ``backend="fake"``: the payload is treated as a flat concatenation

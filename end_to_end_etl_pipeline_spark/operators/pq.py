@@ -450,43 +450,3 @@ def ivfpq_topk(
     return _exact_rerank(
         short, queries, corpus, query_id, corpus_id, vec_col, k, round_dp
     )
-
-
-def pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_id: str,
-    corpus_id: str,
-    vec_col: str,
-    num_subspaces: int = 16,
-    num_centroids: int = 16,
-    iters: int = 1,
-    k: int = 5,
-    round_dp: int = 6,
-    exclude_self: bool = True,
-    sample_mod: int | None = None,
-) -> DataFrame:
-    """train → encode → ADC top-k in one call (production callers
-    train once, persist codes, and reuse)."""
-    cb = pq_train(
-        corpus,
-        corpus_id,
-        vec_col,
-        num_subspaces=num_subspaces,
-        num_centroids=num_centroids,
-        iters=iters,
-        round_dp=round_dp,
-        sample_mod=sample_mod,
-    )
-    encoded = pq_encode(corpus, vec_col, cb, round_dp=round_dp)
-    return pq_topk_adc(
-        queries,
-        encoded,
-        query_id,
-        corpus_id,
-        vec_col,
-        cb,
-        k=k,
-        round_dp=round_dp,
-        exclude_self=exclude_self,
-    )

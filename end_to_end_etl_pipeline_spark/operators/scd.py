@@ -59,8 +59,9 @@ def prepare_scd_source(
 
     * **Null business keys are dropped.** They can never equi-match a
       target row, so each apply would re-insert them as fresh "current"
-      rows forever (ADVICE r1). Callers wanting them must quarantine
-      upstream (``operators/dq.quarantine_split``).
+      rows forever (ADVICE r1). Callers wanting them must split them
+      off upstream; no pipeline config lands them in a quarantine
+      table yet.
     * **Duplicate business keys fail fast** (or deterministically dedup
       when ``dedup_order_by`` is given). A dup-key batch multiplies the
       current⟕source join and breaks the one-current-row-per-key
@@ -91,10 +92,9 @@ def prepare_scd_source(
 
 
 class SCDEngine:
-    """Catalog-agnostic SCD applier: ``catalog`` is anything with
-    exists/read/replace_atomic — ``sinks.manifest.ManifestCatalog``
-    (which also offers bucket-pruned SCD2 via ``BucketedSCD2``) or
-    ``sinks.writers.MetastoreCatalog``."""
+    """SCD applier over the exists/read/replace_atomic catalog
+    surface — in the engine, ``sinks.manifest.ManifestCatalog``
+    (which also offers bucket-pruned SCD2 via ``BucketedSCD2``)."""
 
     def __init__(self, catalog):
         self.catalog = catalog

@@ -76,17 +76,6 @@ def cms_build(
     )
 
 
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Bucket-wise sum of two sketches built with the same
-    (depth, width) — the rollup path: per-day/per-partition sketches
-    combine without re-reading data."""
-    return (
-        a.unionByName(b)
-        .groupBy("row", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
 def cms_estimate(
     sketch: DataFrame,
     keys: DataFrame,

@@ -53,22 +53,6 @@ def top_k_per_group(
     )
 
 
-def running_total(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: str,
-    value_col: str,
-    out_col: str = "running_total",
-) -> DataFrame:
-    """Cumulative sum frame (unbounded-preceding → current row)."""
-    w = (
-        Window.partitionBy(*partition_by)
-        .orderBy(F.col(order_by))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return df.withColumn(out_col, F.sum(value_col).over(w))
-
-
 def funnel_stages(
     df: DataFrame,
     user_col: str,

@@ -76,8 +76,8 @@ class MedallionPipeline:
     """Every layer only uses the exists/read/replace_atomic catalog
     surface. With no ``catalog``, tables are ``ManifestCatalog``
     commits under ``catalog_root`` (a bare path is qualified as an
-    absolute ``file://`` URI); pass ``sinks.writers.MetastoreCatalog(spark)`` for
-    metastore-addressed tables instead."""
+    absolute ``file://`` URI); ``catalog`` takes an already-built
+    ``ManifestCatalog``."""
 
     def __init__(self, spark: SparkSession, catalog_root: str, catalog=None):
         self.spark = spark

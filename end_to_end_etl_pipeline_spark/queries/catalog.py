@@ -36,6 +36,10 @@ Determinism rules for oracle-matched queries:
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -85,6 +89,27 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         if isinstance(df.schema[c].dataType, LongType):
             df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
     return df
+
+
+def scratch_root(tag: str) -> str:
+    """A fresh scratch lake dir for one run of a query that builds its
+    own tables, under ``/tmp/spark_graft_<tag>``. A fresh dir per run
+    means a re-run never wipes the files behind a DataFrame an earlier
+    run returned. Siblings are reaped only once they are an hour old:
+    two sessions (a benchmark and a test run, say) may run the same
+    query at once, and wiping a younger sibling would delete the other
+    run's lake mid-query."""
+    parent = f"/tmp/spark_graft_{tag}"
+    os.makedirs(parent, exist_ok=True)
+    cutoff = time.time() - 3600
+    for name in os.listdir(parent):
+        path = os.path.join(parent, name)
+        try:
+            if os.path.getmtime(path) < cutoff:
+                shutil.rmtree(path, ignore_errors=True)
+        except OSError:
+            pass  # a concurrent run reaped it first
+    return tempfile.mkdtemp(dir=parent)
 
 
 # Import side-effect modules that populate REGISTRY.

@@ -28,7 +28,7 @@ from end_to_end_etl_pipeline_spark.operators.dedup import dedup_by_key
 from end_to_end_etl_pipeline_spark.operators.dq import apply_rules, bounds_rule, not_null_rule
 from end_to_end_etl_pipeline_spark.operators.joins import equi_join
 from end_to_end_etl_pipeline_spark.operators.windows import lag_growth, top_k_per_group
-from end_to_end_etl_pipeline_spark.queries.catalog import load, register
+from end_to_end_etl_pipeline_spark.queries.catalog import load, register, scratch_root
 
 ANCHOR = "1998-12-01"  # fixed anchor instead of current_date: deterministic
 
@@ -2713,20 +2713,12 @@ def incremental_priority_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("parity", "streaming", "incremental", "north-star"),
 )
 def streaming_priority_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
     from end_to_end_etl_pipeline_spark.streaming.jobs import (
         foreach_batch_agg_maintenance,
     )
 
-    scratch_parent = "/tmp/spark_graft_streaming_rev"
-    os.makedirs(scratch_parent, exist_ok=True)
-    for stale in os.listdir(scratch_parent):
-        shutil.rmtree(os.path.join(scratch_parent, stale), ignore_errors=True)
-    root = tempfile.mkdtemp(dir=scratch_parent)
+    root = scratch_root("streaming_rev")
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_totalprice"
@@ -2783,7 +2775,7 @@ def streaming_priority_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Watermark / late-data contract under the oracle — the "
     "conformance gate for event-time windowed aggregation "
-    "(streaming/jobs.windowed_counts shape) fed an OUT-OF-ORDER "
+    "(tumbling-window sums under a watermark) fed an OUT-OF-ORDER "
     "file stream: three parquet files with pinned modification "
     "times replay oldest-mtime-first one per trigger — batch 1 = "
     "the 1995 orders, batch 2 = the 1993 orders (now 2+ years "
@@ -2807,26 +2799,8 @@ def streaming_priority_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_late_data_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
-    scratch_parent = "/tmp/spark_graft_streaming_late"
-    os.makedirs(scratch_parent, exist_ok=True)
-    # reclaim only entries old enough that no live run can own them —
-    # the driver and a pytest session may run this query concurrently,
-    # and an unconditional wipe would delete the other's landing dirs
-    # mid-stream
-    import time
-
-    cutoff = time.time() - 3600
-    for stale in os.listdir(scratch_parent):
-        p = os.path.join(scratch_parent, stale)
-        try:
-            if os.path.getmtime(p) < cutoff:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            pass
-    root = tempfile.mkdtemp(dir=scratch_parent)
+    root = scratch_root("streaming_late")
 
     orders = load(spark, sf_dir, "orders").select(
         F.col("o_orderdate").cast("timestamp").alias("wts"), "o_totalprice"
@@ -2942,23 +2916,10 @@ def streaming_late_data_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_join_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
-    import time
 
     from end_to_end_etl_pipeline_spark.streaming.jobs import stream_stream_join
 
-    scratch_parent = "/tmp/spark_graft_streaming_ssjoin"
-    os.makedirs(scratch_parent, exist_ok=True)
-    cutoff = time.time() - 3600  # never reap a concurrent session's run
-    for stale in os.listdir(scratch_parent):
-        p = os.path.join(scratch_parent, stale)
-        try:
-            if os.path.getmtime(p) < cutoff:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            pass
-    root = tempfile.mkdtemp(dir=scratch_parent)
+    root = scratch_root("streaming_ssjoin")
 
     events = load(spark, sf_dir, "events")
     views = events.filter(F.col("event_type") == "view").select(
@@ -3112,23 +3073,10 @@ def streaming_join_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_view_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
-    import time
 
     from end_to_end_etl_pipeline_spark.streaming.jobs import sessionize
 
-    scratch_parent = "/tmp/spark_graft_streaming_sessions"
-    os.makedirs(scratch_parent, exist_ok=True)
-    cutoff = time.time() - 3600
-    for stale in os.listdir(scratch_parent):
-        p = os.path.join(scratch_parent, stale)
-        try:
-            if os.path.getmtime(p) < cutoff:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            pass
-    root = tempfile.mkdtemp(dir=scratch_parent)
+    root = scratch_root("streaming_sessions")
 
     views = load(spark, sf_dir, "events").filter(
         F.col("event_type") == "view"
@@ -4063,17 +4011,9 @@ def frequent_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("parity", "storage", "north-star"),
 )
 def bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
-    scratch_parent = "/tmp/spark_graft_bloom_lookup"
-    os.makedirs(scratch_parent, exist_ok=True)
-    for stale in os.listdir(scratch_parent):
-        shutil.rmtree(os.path.join(scratch_parent, stale), ignore_errors=True)
-    root = tempfile.mkdtemp(dir=scratch_parent)
+    root = scratch_root("bloom_lookup")
 
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_shipdate"
@@ -4136,17 +4076,9 @@ def bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("parity", "storage", "north-star"),
 )
 def orders_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
-    scratch_parent = "/tmp/spark_graft_cdf"
-    os.makedirs(scratch_parent, exist_ok=True)
-    for stale in os.listdir(scratch_parent):
-        shutil.rmtree(os.path.join(scratch_parent, stale), ignore_errors=True)
-    root = tempfile.mkdtemp(dir=scratch_parent)
+    root = scratch_root("cdf")
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -4196,17 +4128,9 @@ def orders_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("parity", "storage", "north-star"),
 )
 def zorder_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
-    scratch_parent = "/tmp/spark_graft_zorder"
-    os.makedirs(scratch_parent, exist_ok=True)
-    for stale in os.listdir(scratch_parent):
-        shutil.rmtree(os.path.join(scratch_parent, stale), ignore_errors=True)
-    root = tempfile.mkdtemp(dir=scratch_parent)
+    root = scratch_root("zorder")
 
     li = load(spark, sf_dir, "lineitem").select("l_quantity", "l_extendedprice")
     cat = ManifestCatalog(spark, f"file://{root}")
@@ -4254,17 +4178,9 @@ def zorder_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("parity", "storage", "north-star"),
 )
 def orders_time_travel_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
-    scratch_parent = "/tmp/spark_graft_timetravel"
-    os.makedirs(scratch_parent, exist_ok=True)
-    for stale in os.listdir(scratch_parent):
-        shutil.rmtree(os.path.join(scratch_parent, stale), ignore_errors=True)
-    root = tempfile.mkdtemp(dir=scratch_parent)
+    root = scratch_root("timetravel")
 
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     k = F.col("o_orderkey")
@@ -4380,17 +4296,9 @@ def priority_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("parity", "storage", "north-star"),
 )
 def orders_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
-    scratch_parent = "/tmp/spark_graft_targeted_delete"
-    os.makedirs(scratch_parent, exist_ok=True)
-    for stale in os.listdir(scratch_parent):
-        shutil.rmtree(os.path.join(scratch_parent, stale), ignore_errors=True)
-    root = tempfile.mkdtemp(dir=scratch_parent)
+    root = scratch_root("targeted_delete")
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate"
@@ -4459,17 +4367,9 @@ def orders_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("parity", "storage", "north-star"),
 )
 def orders_retention_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
-    scratch_parent = "/tmp/spark_graft_retention"
-    os.makedirs(scratch_parent, exist_ok=True)
-    for stale in os.listdir(scratch_parent):
-        shutil.rmtree(os.path.join(scratch_parent, stale), ignore_errors=True)
-    root = tempfile.mkdtemp(dir=scratch_parent)
+    root = scratch_root("retention")
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", F.month("o_orderdate").cast("int").alias("mo")
@@ -4533,17 +4433,9 @@ def orders_retention_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("parity", "storage", "north-star"),
 )
 def orders_targeted_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
-    scratch_parent = "/tmp/spark_graft_targeted_update"
-    os.makedirs(scratch_parent, exist_ok=True)
-    for stale in os.listdir(scratch_parent):
-        shutil.rmtree(os.path.join(scratch_parent, stale), ignore_errors=True)
-    root = tempfile.mkdtemp(dir=scratch_parent)
+    root = scratch_root("targeted_update")
 
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"

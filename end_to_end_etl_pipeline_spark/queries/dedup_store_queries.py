@@ -24,19 +24,14 @@ were refused and whom they duplicate.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from end_to_end_etl_pipeline_spark.queries.catalog import load, register
+from end_to_end_etl_pipeline_spark.queries.catalog import load, register, scratch_root
 from end_to_end_etl_pipeline_spark.queries.textdata import _nibble_int
 
 _SK, _SB, _SR = 16, 4, 4  # store defaults: 16 hashes, 4 bands x 4 rows
 _THRESH = 0.6
-_SCRATCH_PARENT = "/tmp/spark_graft_dedup_store"
 
 
 def _dedup_store_oracle() -> str:
@@ -156,10 +151,7 @@ def incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from end_to_end_etl_pipeline_spark.operators.dedup_store import MinHashDedupStore
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
-    os.makedirs(_SCRATCH_PARENT, exist_ok=True)
-    for stale in os.listdir(_SCRATCH_PARENT):
-        shutil.rmtree(os.path.join(_SCRATCH_PARENT, stale), ignore_errors=True)
-    root = tempfile.mkdtemp(dir=_SCRATCH_PARENT)
+    root = scratch_root("dedup_store")
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # id shift derived from the corpus (one max agg, metadata-scale),
@@ -215,11 +207,7 @@ def incremental_dedup_ingest_bucketed(
     from end_to_end_etl_pipeline_spark.operators.dedup_store import MinHashDedupStore
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
-    parent = "/tmp/spark_graft_dedup_store_bucketed"
-    os.makedirs(parent, exist_ok=True)
-    for stale in os.listdir(parent):
-        shutil.rmtree(os.path.join(parent, stale), ignore_errors=True)
-    root = tempfile.mkdtemp(dir=parent)
+    root = scratch_root("dedup_store_bucketed")
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # id shift derived from the corpus (one max agg, metadata-scale),

@@ -13,27 +13,9 @@ decimal-routed rounding — so a wrong layer anywhere breaks the hash.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
-from end_to_end_etl_pipeline_spark.queries.catalog import register
-
-_SCRATCH_PARENT = "/tmp/spark_graft_medallion"
-
-
-def _scratch_root() -> str:
-    """Fresh scratch lake per invocation (race-proof: a re-run can
-    never wipe the files backing a previously returned DataFrame).
-    Prior invocations' dirs are reaped here — the one place that
-    knows they're disposable — rather than leaking per call."""
-    os.makedirs(_SCRATCH_PARENT, exist_ok=True)
-    for stale in os.listdir(_SCRATCH_PARENT):
-        shutil.rmtree(os.path.join(_SCRATCH_PARENT, stale), ignore_errors=True)
-    return tempfile.mkdtemp(dir=_SCRATCH_PARENT)
-
+from end_to_end_etl_pipeline_spark.queries.catalog import register, scratch_root
 
 def _pipeline_config(sf_dir: str) -> dict:
     return {
@@ -156,7 +138,7 @@ def medallion_gold_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from end_to_end_etl_pipeline_spark.plans.medallion import MedallionPipeline
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
-    root = _scratch_root()
+    root = scratch_root("medallion")
     cat = ManifestCatalog(spark, f"file://{root}")
     pipe = MedallionPipeline(spark, root, catalog=cat)
     pipe.run(_pipeline_config(sf_dir))

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.operators.scd import MAX_TS, scd2_next_state
-from end_to_end_etl_pipeline_spark.queries.catalog import load, register
+from end_to_end_etl_pipeline_spark.queries.catalog import load, register, scratch_root
 
 _W1 = ("1995-01-01", "1996-01-01")
 _W2 = ("1996-01-01", "1997-01-01")
@@ -283,8 +283,6 @@ def scd2_member_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
     from end_to_end_etl_pipeline_spark.sinks.manifest import (
         BucketedSCD2,
@@ -292,11 +290,7 @@ def streaming_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from end_to_end_etl_pipeline_spark.streaming.jobs import foreach_batch_scd2
 
-    scratch_parent = "/tmp/spark_graft_streaming_scd2"
-    os.makedirs(scratch_parent, exist_ok=True)
-    for stale in os.listdir(scratch_parent):
-        shutil.rmtree(os.path.join(scratch_parent, stale), ignore_errors=True)
-    root = tempfile.mkdtemp(dir=scratch_parent)
+    root = scratch_root("streaming_scd2")
 
     orders = load(spark, sf_dir, "orders")
     landing = os.path.join(root, "landing")

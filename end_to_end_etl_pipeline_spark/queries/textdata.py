@@ -23,7 +23,12 @@ from end_to_end_etl_pipeline_spark.operators.text_dedup import (
     simhash_near_dup_pairs,
     word_shingles,
 )
-from end_to_end_etl_pipeline_spark.queries.catalog import REGISTRY, load, register
+from end_to_end_etl_pipeline_spark.queries.catalog import (
+    REGISTRY,
+    load,
+    register,
+    scratch_root,
+)
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -3651,10 +3656,6 @@ def _bm25_oracle_sql() -> str:
     tags=("north-star", "text", "search", "incremental"),
 )
 def bm25_store_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from end_to_end_etl_pipeline_spark.operators.text_index import (
         append_text_index,
         text_index_search,
@@ -3662,11 +3663,7 @@ def bm25_store_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
-    scratch_parent = "/tmp/spark_graft_text_index"
-    os.makedirs(scratch_parent, exist_ok=True)
-    for stale in os.listdir(scratch_parent):
-        shutil.rmtree(os.path.join(scratch_parent, stale), ignore_errors=True)
-    root = tempfile.mkdtemp(dir=scratch_parent)
+    root = scratch_root("text_index")
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     planted = docs.unionByName(

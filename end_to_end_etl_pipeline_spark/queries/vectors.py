@@ -23,7 +23,7 @@ from end_to_end_etl_pipeline_spark.operators.similarity import (
     cosine_topk_ivf,
     sign_lsh_near_dup_pairs,
 )
-from end_to_end_etl_pipeline_spark.queries.catalog import load, register
+from end_to_end_etl_pipeline_spark.queries.catalog import load, register, scratch_root
 
 _COS = (
     "round(list_dot_product({a}, {b}) / "
@@ -657,10 +657,6 @@ def ivfpq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("north-star", "vectors", "incremental"),
 )
 def ann_store_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from end_to_end_etl_pipeline_spark.operators.ivf_store import (
         append_ivfpq_store,
         ivfpq_store_topk,
@@ -672,11 +668,7 @@ def ann_store_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
-    scratch_parent = "/tmp/spark_graft_ann_store"
-    os.makedirs(scratch_parent, exist_ok=True)
-    for stale in os.listdir(scratch_parent):
-        shutil.rmtree(os.path.join(scratch_parent, stale), ignore_errors=True)
-    root = tempfile.mkdtemp(dir=scratch_parent)
+    root = scratch_root("ann_store")
 
     emb = load(spark, sf_dir, "embeddings")
     dim = _dim(emb)
@@ -742,33 +734,16 @@ def ann_store_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("north-star", "vectors", "incremental", "streaming"),
 )
 def streaming_ann_ingest_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
-    import tempfile
-    import time
 
-    scratch_parent = "/tmp/spark_graft_ann_restart"
-    os.makedirs(scratch_parent, exist_ok=True)
-    # time-based reap only: the driver and a pytest session may run
-    # this concurrently, and an unconditional wipe would delete the
-    # other's landing/checkpoint dirs mid-stream
-    cutoff = time.time() - 3600
-    for stale in os.listdir(scratch_parent):
-        p = os.path.join(scratch_parent, stale)
-        try:
-            if os.path.getmtime(p) < cutoff:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            pass
-    root = tempfile.mkdtemp(dir=scratch_parent)
+    root = scratch_root("ann_restart")
     try:
         return _streaming_ann_ingest_restart_body(spark, sf_dir, root)
     finally:
         # r10 ADVICE: remove our own scratch on the way out (the
-        # result is eagerly localCheckpoint'ed before this runs); the
-        # 1-hour mtime reap above stays as the crashed-run backstop —
-        # and no longer risks reaping a >1h CONCURRENT session's live
-        # dir, because every healthy run now deletes its own
+        # result is eagerly localCheckpoint'ed before this runs);
+        # scratch_root's 1-hour mtime reap stays as the crashed-run
+        # backstop
         shutil.rmtree(root, ignore_errors=True)
 
 
@@ -926,10 +901,6 @@ def _streaming_ann_ingest_restart_body(
     tags=("north-star", "vectors", "storage", "incremental"),
 )
 def ann_store_rebalanced_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from end_to_end_etl_pipeline_spark.operators.ivf_store import (
         ivfpq_store_topk,
         rebalance_ivfpq_store,
@@ -938,11 +909,7 @@ def ann_store_rebalanced_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from end_to_end_etl_pipeline_spark.operators.pq import pq_train
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
-    scratch_parent = "/tmp/spark_graft_ann_rebalance"
-    os.makedirs(scratch_parent, exist_ok=True)
-    for stale in os.listdir(scratch_parent):
-        shutil.rmtree(os.path.join(scratch_parent, stale), ignore_errors=True)
-    root = tempfile.mkdtemp(dir=scratch_parent)
+    root = scratch_root("ann_rebalance")
 
     emb = load(spark, sf_dir, "embeddings")
     dim = _dim(emb)

@@ -11,7 +11,10 @@ defects fixed (SURVEY.md §2.11-1):
   the scale — we default it to the local core count and let AQE
   coalesce, and make it configurable for cluster deployments;
 * session timezone pinned to UTC so timestamp semantics are stable
-  across engines (Spark is session-TZ, most oracles are UTC-naive).
+  across engines (Spark is session-TZ, most oracles are UTC-naive);
+* no ``enableHiveSupport`` (the reference's ``utils/sparksession.py:9``
+  turns it on for its 3-level metastore table names): engine tables
+  are path-addressed ``ManifestCatalog`` commits.
 
 On a real cluster the same factory is used with ``master=None`` (defer
 to spark-submit) and a larger ``shuffle_partitions`` (rule of thumb:
@@ -34,8 +37,6 @@ def create_spark_session(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    enable_hive_support: bool = False,
-    warehouse_dir: str | None = None,
 ) -> SparkSession:
     """Create (or get) a SparkSession tuned for this engine.
 
@@ -43,17 +44,11 @@ def create_spark_session(
     partition count and skew that static planning can't know; Arrow is
     enabled for the pandas-UDF operators (similarity/multimodal).
 
-    ``enable_hive_support`` turns on the Hive metastore so
-    ``saveAsTable``/``spark.table`` names persist ACROSS sessions —
-    the reference's 3-level catalog addressing
-    (``utils/sparksession.py:9`` ``enableHiveSupport``,
-    ``ds2b_company_house.py:96``) via ``sinks.writers.MetastoreCatalog``.
-    Without it the session catalog is in-memory: identical addressing
-    within one session, nothing persisted at exit (the right default
-    for tests and the sandbox — no Derby ``metastore_db`` droppings).
-    ``warehouse_dir`` locates managed-table storage either way. Note
-    ``getOrCreate`` reuses any live session; hive support must be
-    chosen before the first session of the process.
+    No Hive support: every engine table is a path-addressed
+    ``ManifestCatalog`` commit, so the session catalog stays in-memory
+    and nothing lands a Derby ``metastore_db``. Any other Spark
+    setting goes through ``extra_conf``. Note ``getOrCreate`` reuses
+    any live session.
     """
     cores = _local_cores()
     builder = (
@@ -71,17 +66,6 @@ def create_spark_session(
         builder = builder.master(master)
     elif not os.environ.get("SPARK_GRAFT_NO_MASTER"):
         builder = builder.master(f"local[{cores}]")
-    if warehouse_dir:
-        builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)
-    if enable_hive_support:
-        if warehouse_dir:
-            # keep Derby's metastore next to the warehouse, not in cwd
-            builder = builder.config(
-                "javax.jdo.option.ConnectionURL",
-                f"jdbc:derby:;databaseName={warehouse_dir.rstrip('/')}"
-                "/metastore_db;create=true",
-            )
-        builder = builder.enableHiveSupport()
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

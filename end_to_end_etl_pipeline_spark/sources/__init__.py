@@ -1,9 +1,3 @@
-from end_to_end_etl_pipeline_spark.sources.rest import (
-    RestError,
-    RestExtractor,
-    extract_distributed,
-    urllib_transport,
-)
 from end_to_end_etl_pipeline_spark.sources.readers import (
     read_csv,
     read_json,
@@ -11,23 +5,17 @@ from end_to_end_etl_pipeline_spark.sources.readers import (
     read_parquet,
     read_table,
     read_text_lines,
-    rows_source,
     with_file_metadata,
     with_path_key,
 )
 
 __all__ = [
-    "RestError",
-    "RestExtractor",
-    "extract_distributed",
-    "urllib_transport",
     "read_csv",
     "read_json",
     "read_orc",
     "read_parquet",
     "read_text_lines",
     "read_table",
-    "rows_source",
     "with_file_metadata",
     "with_path_key",
 ]

@@ -11,19 +11,13 @@ Scan operators return lazy DataFrames; Catalyst pushes filters and
 prunes columns into the file scan (verify with
 ``df.explain("formatted")`` → ``PushedFilters`` / ``ReadSchema``).
 
-S8 (pre-Spark REST extractor): the reference's AWS Glue pythonshell
-job (``aws/ ch_ingest_company_overview_raw.py:49-74``) fetches a REST
-API and lands raw JSON on S3 *before* Spark ever runs. That lives in
-:mod:`end_to_end_etl_pipeline_spark.sources.rest` — an
-injectable-transport extractor (retry/backoff, pagination, raw-first
-landing at the reference's partitioned layout) whose output these
-scans then read (S1/S2), plus a ``mapInPandas`` distributed-fetch
-variant for cluster-scale pulls.
+The reference's pre-Spark REST extract (S8, an AWS Glue pythonshell
+job that lands raw JSON on S3 before Spark runs) has no counterpart
+here: no pipeline config reaches an HTTP source, so these scans read
+whatever has already landed.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -114,31 +108,6 @@ def with_path_key(
     """S5 — derive a business key from the directory layout
     (reference ``medallion/bronze/ds2b_company_house.py:64-67``)."""
     return df.withColumn(key_name, F.regexp_extract(F.col(path_col), pattern, 1))
-
-
-def rows_source(
-    spark: SparkSession,
-    rows: Iterable,
-    schema: StructType | str,
-) -> DataFrame:
-    """S6/S7 — local-rows source (API-harvested data, seed/reference
-    tables; reference ``aws/y_finance_raw_ingestion.ipynb`` cells 3-7).
-
-    Driver-side only by design: seed tables are small. Anything large
-    must land as files first.
-    """
-    return spark.createDataFrame(list(rows), schema=schema)
-
-
-def values_source(spark: SparkSession, sql_values: str, columns: str) -> DataFrame:
-    """S7 — SQL ``VALUES`` literal table: the in-query seed-table
-    idiom (``SELECT * FROM VALUES ... AS t(cols)``). Same produce as
-    :func:`rows_source`, but addressable from pure SQL — pipelines
-    that inline lookup tables in a statement use this path.
-
-    ``values_source(spark, "(1, 'EUR'), (2, 'USD')", "id, code")``
-    """
-    return spark.sql(f"SELECT * FROM VALUES {sql_values} AS t({columns})")
 
 
 def read_text_lines(

@@ -1,35 +1,15 @@
 from end_to_end_etl_pipeline_spark.streaming.jobs import (
     foreach_batch_agg_maintenance,
     foreach_batch_ann_ingest,
-    foreach_batch_bitmap_uniques,
-    foreach_batch_cms_maintenance,
-    foreach_batch_dedup_ingest,
-    foreach_batch_scd1,
     foreach_batch_scd2,
-    foreach_batch_text_index_ingest,
-    read_stream_files,
-    running_profile,
     sessionize,
-    stream_dedup,
-    stream_static_join,
     stream_stream_join,
-    windowed_counts,
 )
 
 __all__ = [
     "foreach_batch_agg_maintenance",
     "foreach_batch_ann_ingest",
-    "foreach_batch_bitmap_uniques",
-    "foreach_batch_cms_maintenance",
-    "foreach_batch_dedup_ingest",
-    "foreach_batch_scd1",
     "foreach_batch_scd2",
-    "foreach_batch_text_index_ingest",
-    "read_stream_files",
-    "running_profile",
     "sessionize",
-    "stream_dedup",
-    "stream_static_join",
     "stream_stream_join",
-    "windowed_counts",
 ]

@@ -2,21 +2,20 @@
 
 The reference has NO streaming code — its architecture diagram shows
 a streaming icon and the README claims "incremental where required"
-(SURVEY.md §2.9), but incrementality is batch SCD2. This module is
-the honest Spark-native version of that promise: the same engine
-operators driven by ``readStream``/``writeStream``.
+(SURVEY.md §2.9), but incrementality is batch SCD2. This module
+holds the streaming operators the registered streaming queries use
+(each query builds its own ``spark.readStream`` source with an
+explicit schema):
 
-Design stance for scale:
-
-* File-source streams with **explicit schemas** (same rule as batch
-  scans — no inference over an unbounded directory).
-* **Watermarks bound state.** Every stateful op (windowed agg,
-  dedup) declares how late data may arrive; Spark evicts state past
-  the watermark, so state size tracks the lateness budget, not the
-  stream length.
-* **foreachBatch bridges to the lakehouse.** Each micro-batch is a
-  normal DataFrame handed to the same SCD merge + manifest-commit
-  machinery as batch loads — one code path for semantics, streaming
+* **Stateful operators** — ``sessionize`` (event-time session
+  state) and ``stream_stream_join`` (a time-bounded interval join).
+  Both declare a watermark, so Spark evicts state past it and state
+  size tracks the lateness budget, not the stream length.
+* **foreachBatch bridges to the lakehouse** —
+  ``foreach_batch_agg_maintenance``, ``foreach_batch_scd2`` and
+  ``foreach_batch_ann_ingest``. Each micro-batch is a normal
+  DataFrame handed to the same SCD merge + manifest-commit machinery
+  as batch loads — one code path for semantics, streaming
   only changes the trigger. This mirrors what the reference's Delta
   MERGE-per-load would become under ``availableNow``/continuous
   triggers.
@@ -26,217 +25,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
-
-
-def read_stream_files(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str,
-    fmt: str = "json",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """S1/S2 streaming twin: incremental file-source scan with an
-    explicit schema. ``maxFilesPerTrigger`` caps micro-batch size so
-    a backlog replay can't produce one giant batch."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.format(fmt).load(path)
-
-
-def windowed_counts(
-    df: DataFrame,
-    ts_col: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    group_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Tumbling-window counts with a lateness watermark — the
-    canonical streaming aggregation. State per (window, group) is one
-    count; windows older than the watermark are finalized and
-    evicted."""
-    return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("win"), *group_cols)
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            *group_cols,
-            "n",
-        )
-    )
-
-
-def stream_dedup(
-    df: DataFrame,
-    keys: Sequence[str],
-    ts_col: str,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exact dedup on the KEYS alone: first arrival per key
-    wins, including re-deliveries that were re-stamped with a
-    different event time (the at-least-once norm); key state drops
-    once the watermark passes (bounded memory — the streaming twin of
-    ``operators/dedup.dedup_by_key``). Plain
-    ``dropDuplicates([*keys, ts])`` would keep a re-stamped replay."""
-    return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(keys)
-    )
-
-
-def stream_static_join(
-    stream: DataFrame,
-    static_dim: DataFrame,
-    keys: Sequence[str],
-    how: str = "left",
-    broadcast_dim: bool = True,
-) -> DataFrame:
-    """Stream-static enrichment join: every micro-batch of ``stream``
-    joins against the (batch) ``static_dim`` — the standard pattern
-    for stamping events with dimension attributes in flight.
-
-    The static side is re-evaluated per micro-batch (so a dimension
-    backed by a catalog table picks up new versions between
-    triggers), and ``broadcast_dim=True`` pins a broadcast-hash
-    plan: the stream side never shuffles, which is the property that
-    keeps per-trigger latency flat as the stream scales. Stateless —
-    no watermark needed.
-
-    ``how`` must be stream-side-preserving (``inner``/``left``/
-    ``left_semi``/``left_anti``): Spark cannot emit unmatched static
-    rows without scanning the unbounded stream.
-    """
-    if how not in ("inner", "left", "left_outer", "left_semi", "left_anti"):
-        raise ValueError(
-            f"stream-static join must preserve the stream side, got how={how!r}"
-        )
-    dim = F.broadcast(static_dim) if broadcast_dim else static_dim
-    return stream.join(dim, list(keys), how)
-
-
-def foreach_batch_scd1(
-    stream_df: DataFrame,
-    catalog,
-    table: str,
-    keys: Sequence[str],
-    dedup_order_by,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Continuous upsert: each micro-batch is deterministically
-    deduped to one row per key and SCD1-merged into the catalog table
-    — identical semantics to a batch ``apply_scd1`` per trigger, with
-    exactly-once table state via the checkpoint + atomic manifest
-    commit pair.
-
-    Returns the started ``StreamingQuery`` (caller awaits)."""
-    from end_to_end_etl_pipeline_spark.operators.scd import SCDEngine
-
-    engine = SCDEngine(catalog)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        engine.apply_scd1(
-            batch_df, table, keys, dedup_order_by=dedup_order_by
-        )
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def running_profile(
-    events: DataFrame,
-    key_col: str,
-    ts_col: str,
-    value_col: str | None = None,
-    watermark: str = "2 hours",
-    state_ttl_minutes: int | None = None,
-) -> DataFrame:
-    """Per-key running profile (event count, first/last seen,
-    optional value sum) via ``transformWithStateInPandas`` — the
-    Spark 4.x typed-state successor to ``applyInPandasWithState``
-    (:func:`sessionize` keeps the older API as the portability path).
-
-    What the new API buys at scale: named state variables with
-    per-state TTL (``state_ttl_minutes`` evicts profiles for keys
-    gone quiet without a watermark dance — unbounded key spaces stay
-    bounded), and an operator contract (init/handleInputRows/close)
-    that composes with value/list/map state and timers instead of one
-    tuple per key. Emits one updated profile row per key per
-    micro-batch (Update mode); state is one fixed-width tuple per
-    key. Arrow-batched: each group's rows arrive as pandas frames,
-    aggregated vectorized — no per-row Python.
-
-    Runtime note: executing this operator needs the ``protobuf``
-    package (the transformWithState Python worker speaks protobuf to
-    the JVM state server). Plan construction and schema analysis do
-    not — environments without protobuf can still build and inspect
-    the query (the e2e test skips itself there).
-
-    Emits (key, n_events, first_seen, last_seen[, value_sum]).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor
-
-    key_type = events.schema[key_col].dataType.simpleString()
-    has_val = value_col is not None
-    out_schema = (
-        f"{key_col} {key_type}, n_events bigint, "
-        "first_seen timestamp, last_seen timestamp"
-        + (", value_sum double" if has_val else "")
-    )
-    ttl_ms = state_ttl_minutes * 60 * 1000 if state_ttl_minutes else None
-
-    class _Profile(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._state = handle.getValueState(
-                "profile",
-                "n bigint, first_ms bigint, last_ms bigint, vsum double",
-                ttlDurationMs=ttl_ms,
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            prev = self._state.get() if self._state.exists() else None
-            n, first_ms, last_ms, vsum = prev or (0, None, None, 0.0)
-            for pdf in rows:
-                ms = pdf[ts_col].astype("int64") // 1_000_000
-                n += len(pdf)
-                first_ms = ms.min() if first_ms is None else min(first_ms, ms.min())
-                last_ms = ms.max() if last_ms is None else max(last_ms, ms.max())
-                if has_val:
-                    vsum += float(pdf[value_col].fillna(0.0).sum())
-            self._state.update((int(n), int(first_ms), int(last_ms), float(vsum)))
-            out = {
-                key_col: [key[0]],
-                "n_events": [int(n)],
-                "first_seen": [pd.to_datetime(first_ms, unit="ms")],
-                "last_seen": [pd.to_datetime(last_ms, unit="ms")],
-            }
-            if has_val:
-                out["value_sum"] = [float(vsum)]
-            yield pd.DataFrame(out)
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            _Profile(), out_schema, "Update", "EventTime"
-        )
-    )
 
 
 def sessionize(
@@ -438,139 +228,6 @@ def apply_agg_batch(
     return True
 
 
-def foreach_batch_dedup_ingest(
-    stream_df: DataFrame,
-    catalog,
-    table: str,
-    text_col: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    threshold: float = 0.6,
-    available_now: bool = True,
-    auto_compact_max_dirs: int | None = None,
-):
-    """Continuous corpus dedup: every micro-batch of documents is
-    near-dup-checked against the persisted MinHash signature store
-    (``operators/dedup_store.MinHashDedupStore``) and only survivors'
-    signatures are appended — the streaming form of incremental
-    corpus curation, where "have we seen this before?" spans every
-    batch ever ingested, not just the current trigger (which is all
-    ``dropDuplicates`` + watermark can bound).
-
-    At-least-once safety is structural rather than batch-id-tracked:
-    a replayed batch's documents find their OWN previous signatures
-    in the store, estimate Jaccard 1.0 against them, and are rejected
-    — the store converges to the same state, so crash-replays don't
-    duplicate signatures (unlike additive agg maintenance, which
-    needs the explicit ``_batch_id`` guard).
-
-    ``auto_compact_max_dirs``: as in
-    :func:`foreach_batch_ann_ingest` — each trigger appends one
-    signature dir, so when set, the trigger ends with
-    ``catalog.maybe_optimize(table, ...)`` and per-ingest store scans
-    stay bounded. Returns the started ``StreamingQuery`` (caller
-    awaits)."""
-    from end_to_end_etl_pipeline_spark.operators.dedup_store import (
-        MinHashDedupStore,
-    )
-
-    store = MinHashDedupStore(catalog, table, id_col=id_col, threshold=threshold)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        store.ingest(batch_df, text_col)
-        if auto_compact_max_dirs is not None:
-            catalog.maybe_optimize(table, max_dirs=auto_compact_max_dirs)
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def foreach_batch_cms_maintenance(
-    stream_df: DataFrame,
-    catalog,
-    table: str,
-    key_col: str,
-    checkpoint_dir: str,
-    depth: int = 4,
-    width: int = 256,
-    available_now: bool = True,
-):
-    """Streaming heavy-hitter state: keep a count-min sketch
-    (``operators/sketches``) current over an unbounded key stream.
-    Each micro-batch builds its own depth × width sketch (one
-    map-side-partial agg over the batch) and merges bucket-wise into
-    the persisted grid — the state is depth × width integers FOREVER,
-    regardless of stream length or key cardinality, which is the whole
-    reason to sketch: exact streaming ``groupBy(key).count()`` state
-    grows with distinct keys and eventually cannot fit anywhere.
-
-    Like additive agg maintenance (and unlike the dedup-store bridge),
-    bucket increments are NOT idempotent under at-least-once replay,
-    so the committed grid carries the last applied ``_batch_id``; a
-    replayed batch is detected and skipped.
-
-    Returns the started ``StreamingQuery`` (caller awaits). Query the
-    sketch any time with ``operators/sketches.cms_estimate`` over
-    ``catalog.read(table).drop('_batch_id')``."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_cms_batch(
-            catalog, table, key_col, batch_df, batch_id, depth=depth, width=width
-        )
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def apply_cms_batch(
-    catalog,
-    table: str,
-    key_col: str,
-    batch_df: DataFrame,
-    batch_id: int,
-    depth: int = 4,
-    width: int = 256,
-) -> bool:
-    """One micro-batch of :func:`foreach_batch_cms_maintenance`,
-    exposed for direct replay testing. Returns False when the batch
-    was skipped (empty, or already applied under at-least-once
-    replay)."""
-    from end_to_end_etl_pipeline_spark.operators.sketches import (
-        cms_build,
-        cms_merge,
-    )
-
-    if batch_df.isEmpty():
-        return False
-    delta = cms_build(batch_df, key_col, depth=depth, width=width)
-    if catalog.exists(table):
-        stored = catalog.read(table)
-        first = stored.select("_batch_id").first()
-        if first is not None and first["_batch_id"] >= batch_id:
-            return False
-        merged = cms_merge(stored.drop("_batch_id"), delta)
-    else:
-        merged = delta
-    catalog.replace_atomic(
-        merged.withColumn("_batch_id", F.lit(batch_id).cast("long")), table
-    )
-    return True
-
-
 def foreach_batch_scd2(
     stream_df: DataFrame,
     catalog,
@@ -687,135 +344,3 @@ def foreach_batch_ann_ingest(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def foreach_batch_text_index_ingest(
-    stream_df: DataFrame,
-    catalog,
-    table: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    available_now: bool = True,
-    auto_compact_max_dirs: int | None = None,
-):
-    """Continuous lexical-index maintenance: every micro-batch of
-    documents folds into the persisted inverted index
-    (``operators/text_index.append_text_index``) — new postings
-    CAS-append into their terms' hash buckets and the one-row corpus
-    stats combine exactly, so BM25 queries see each batch as soon as
-    its manifest commit lands. Postings appends are ADDITIVE, so the
-    bridge passes the micro-batch id and the append is skipped when
-    the manifest's ``text_last_batch_id`` marker says it was already
-    applied (the marker rides the SAME commit as the posting dirs —
-    no data-without-marker window; same contract as the ANN bridge).
-
-    The index must exist (``write_text_index``) before the stream
-    starts. ``auto_compact_max_dirs``: as in
-    :func:`foreach_batch_ann_ingest` — bound posting-bucket
-    fragmentation by compacting once the worst term bucket exceeds
-    the threshold. Returns the started ``StreamingQuery`` (caller
-    awaits)."""
-    from end_to_end_etl_pipeline_spark.operators.text_index import (
-        append_text_index,
-    )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_text_index(
-            catalog, batch_df, id_col, text_col, table, batch_id=batch_id
-        )
-        if auto_compact_max_dirs is not None:
-            catalog.maybe_optimize(table, max_dirs=auto_compact_max_dirs)
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def foreach_batch_bitmap_uniques(
-    stream_df: DataFrame,
-    catalog,
-    table: str,
-    key_col: str,
-    ts_col: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Streaming EXACT distinct counting: keep per-(day, bucket)
-    bitmaps of seen keys current over an unbounded event stream — the
-    exact counterpart of the count-min/HLL bridges for id spaces
-    dense enough to bitmap. Each micro-batch builds its own bitmaps
-    (one map-side-partial ``bitmap_construct_agg``) and ORs them into
-    the persisted state; exact DAU at any time is
-    ``groupBy(day).sum(bitmap_count(bm))`` over
-    ``catalog.read(table).drop('_batch_id')``. State is 4 KB per
-    (day, bucket) FOREVER, regardless of how many times a user
-    recurs — the property exact ``dropDuplicates`` streaming state
-    (one row per distinct key) cannot offer.
-
-    Bitmap ORs ARE idempotent, but a replayed batch may interleave
-    with later state only under exactly-once assumptions the
-    foreachBatch sink doesn't give; the ``_batch_id`` guard (same as
-    the agg/CMS bridges) keeps replays out regardless. Keys shift +1
-    before bucketing (bitmap positions are 1-based; ids may be 0).
-
-    Returns the started ``StreamingQuery`` (caller awaits)."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_bitmap_batch(catalog, table, key_col, ts_col, batch_df, batch_id)
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def apply_bitmap_batch(
-    catalog,
-    table: str,
-    key_col: str,
-    ts_col: str,
-    batch_df: DataFrame,
-    batch_id: int,
-) -> bool:
-    """One micro-batch of :func:`foreach_batch_bitmap_uniques`,
-    exposed for direct replay testing. Returns False when the batch
-    was skipped (empty, or already applied under at-least-once
-    replay)."""
-    if batch_df.isEmpty():
-        return False
-    ev = batch_df.select(
-        F.to_date(ts_col).alias("day"),
-        (F.col(key_col) + 1).alias("__uid"),
-    )
-    delta = ev.groupBy(
-        "day", F.bitmap_bucket_number("__uid").alias("bucket")
-    ).agg(F.bitmap_construct_agg(F.bitmap_bit_position("__uid")).alias("bm"))
-    if catalog.exists(table):
-        stored = catalog.read(table)
-        first = stored.select("_batch_id").first()
-        if first is not None and first["_batch_id"] >= batch_id:
-            return False
-        merged = (
-            stored.drop("_batch_id")
-            .unionByName(delta)
-            .groupBy("day", "bucket")
-            .agg(F.bitmap_or_agg("bm").alias("bm"))
-        )
-    else:
-        merged = delta
-    catalog.replace_atomic(
-        merged.withColumn("_batch_id", F.lit(batch_id).cast("long")), table
-    )
-    return True

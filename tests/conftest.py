@@ -47,15 +47,7 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    import tempfile
-
-    # managed tables (MetastoreCatalog / bucketing tests) go to a
-    # throwaway warehouse, not cwd/spark-warehouse
-    s = create_spark_session(
-        app_name="tests",
-        warehouse_dir=tempfile.mkdtemp(prefix="spark_warehouse_"),
-    )
-    yield s
+    yield create_spark_session(app_name="tests")
 
 
 @pytest.fixture(scope="session")

@@ -64,6 +64,8 @@ def test_cli_exit_codes(spark, tmp_path):
     assert main([str(bad)]) == 2  # missing file
     bad.write_text("{not json")
     assert main([str(bad)]) == 2  # unparsable
+    bad.write_text("[]")
+    assert main([str(bad)]) == 2  # valid JSON, not an object
     cfg = _write_config(tmp_path, spark)
     assert main([str(cfg), "--layers", "platinum"]) == 2  # unknown layer
     # the catalog kind is not an option; no prefix of --catalog-root

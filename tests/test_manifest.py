@@ -230,6 +230,30 @@ def test_diff_versions_rowwise(spark, cat):
     ]
 
 
+def test_scratch_root_reaps_only_stale_siblings(spark, sf_dir):
+    """A lake-building query's run must leave a concurrent run's fresh
+    scratch lake alone, and reap one older than the hour cutoff."""
+    import shutil
+    import tempfile
+    import time
+
+    from end_to_end_etl_pipeline_spark.queries.catalog import REGISTRY
+
+    parent = "/tmp/spark_graft_cdf"  # orders_change_data_feed's parent
+    os.makedirs(parent, exist_ok=True)
+    fresh = tempfile.mkdtemp(dir=parent)
+    stale = tempfile.mkdtemp(dir=parent)
+    two_hours_ago = time.time() - 7200
+    os.utime(stale, (two_hours_ago, two_hours_ago))
+    try:
+        REGISTRY["orders_change_data_feed"].spark(spark, sf_dir).count()
+        assert os.path.isdir(fresh)
+        assert not os.path.exists(stale)
+    finally:
+        shutil.rmtree(fresh, ignore_errors=True)
+        shutil.rmtree(stale, ignore_errors=True)
+
+
 def test_diff_versions_keyed_cdc(spark, cat):
     v1 = spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0), (None, "nk", 1.0)],
@@ -503,32 +527,6 @@ def test_read_all_empty_bucketed_manifest(spark, cat):
     assert cat.read("d", buckets=[0]).count() == 0
 
 
-def test_write_jsonl_sharded_content_addressed(spark, tmp_path):
-    from end_to_end_etl_pipeline_spark.operators.sampling import hash_bucket
-    from end_to_end_etl_pipeline_spark.sinks.writers import write_jsonl_sharded
-    from pyspark.sql import functions as F
-    import pytest
-
-    docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(40)], ["doc_id", "text"]
-    )
-    out = str(tmp_path / "corpus_jsonl")
-    write_jsonl_sharded(docs, out, n_shards=4, id_col="doc_id", compression=None)
-    back = spark.read.json(out)
-    assert back.count() == 40
-    # shard derivation is the content-addressed hash, not round-robin
-    expect = {
-        r.doc_id: r.shard
-        for r in docs.select(
-            "doc_id", hash_bucket(F.col("doc_id"), 4).alias("shard")
-        ).collect()
-    }
-    got = {r.doc_id: int(r.shard) for r in back.collect()}
-    assert got == expect
-    with pytest.raises(ValueError, match="id_col"):
-        write_jsonl_sharded(docs, out, n_shards=4)
-
-
 def test_optimize_rebases_on_concurrent_append(spark, cat):
     """The compaction lost-update race: an append committing between
     optimize's base read and its publish must fail the CAS, force a
@@ -559,102 +557,6 @@ def test_optimize_rebases_on_concurrent_append(spark, cat):
     latest = cat.latest_manifest("t8")
     # the retry compacted base+append into one dir
     assert len(latest["dirs"]) == 1
-
-
-def test_metastore_catalog_roundtrip_and_three_level_names(spark):
-    """MetastoreCatalog: saveAsTable/spark.table addressing with the
-    reference's 3-level names — an unregistered workspace catalog
-    level collapses onto the session catalog, dashed names stay
-    backtick-safe, replace_atomic survives reading its own target."""
-    from end_to_end_etl_pipeline_spark.sinks.writers import MetastoreCatalog
-
-    cat = MetastoreCatalog(spark)
-    name = "`companies-data`.bronze_t.overview"
-    try:
-        assert cat.exists(name) is False
-        cat.overwrite(_df(spark, [(1, "a"), (2, "b")]), name)
-        assert cat.exists(name) is True
-        # same table reachable by the collapsed 2-level name
-        assert spark.table("`bronze_t`.`overview`").count() == 2
-        cat.append(_df(spark, [(3, "c")]), name)
-        assert cat.read(name).count() == 3
-        # replace from a plan that reads the target (the SCD shape)
-        newstate = cat.read(name).filter(F.col("k") >= 2)
-        cat.replace_atomic(newstate, name)
-        assert sorted(r.k for r in cat.read(name).collect()) == [2, 3]
-        assert not spark.catalog.tableExists("bronze_t.overview__stage")
-    finally:
-        cat.drop(name)
-    assert cat.exists(name) is False
-
-
-def test_metastore_quoted_identifier_with_literal_dot(spark):
-    """A backtick-quoted identifier containing a literal dot must not
-    be sheared by name splitting: `` `my.catalog`.bronze_q.t `` is a
-    3-level name whose first part is 'my.catalog' (unregistered →
-    collapses onto the session catalog), not a 4-level mis-split."""
-    from end_to_end_etl_pipeline_spark.sinks.writers import MetastoreCatalog
-
-    cat = MetastoreCatalog(spark)
-    assert cat._split_name("`my.catalog`.bronze_q.t") == [
-        "my.catalog", "bronze_q", "t"
-    ]
-    assert cat._split_name("`companies-data`.bronze.t") == [
-        "companies-data", "bronze", "t"
-    ]
-    name = "`my.catalog`.bronze_q.t"
-    try:
-        assert cat.exists(name) is False
-        cat.overwrite(_df(spark, [(1, "a")]), name)
-        assert cat.exists(name) is True
-        assert cat.read(name).count() == 1
-        # collapsed 2-level address reaches the same table
-        assert spark.table("`bronze_q`.`t`").count() == 1
-    finally:
-        cat.drop(name)
-
-    # dotted part in the DB/TABLE position: exists() re-quotes the
-    # parts it hands tableExists, so the probe parses as the intended
-    # 2-part name (db bronze_q, table 'my.table') and answers a
-    # CORRECT False — not the pre-fix mis-split into a bogus 3-part
-    # name. The session catalog itself can't hold such an identifier
-    # (INVALID_SCHEMA_OR_RELATION_NAME), so the create path then
-    # fails loudly at saveAsTable rather than clobbering anything.
-    import pytest as _pytest
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    assert cat.exists("bronze_q.`my.table`") is False
-    with _pytest.raises(AnalysisException):
-        cat.overwrite(_df(spark, [(5, "e")]), "bronze_q.`my.table`")
-
-
-def test_metastore_alter_table_add_columns_ddl(spark):
-    """K9 literal DDL: ALTER TABLE ADD COLUMNS backfills SCD columns
-    onto an existing table (reference b2s_yfinance.py:46-61) —
-    existing rows read NULL, appends may fill the new columns, no
-    data rewrite."""
-    from end_to_end_etl_pipeline_spark.sinks.writers import MetastoreCatalog
-
-    cat = MetastoreCatalog(spark)
-    name = "ddl_t.scd_backfill"
-    try:
-        cat.overwrite(_df(spark, [(1, "a")]), name)
-        cat.add_columns(
-            name, {"is_current": "boolean", "effective_from": "timestamp"}
-        )
-        got = cat.read(name)
-        assert {"is_current", "effective_from"} <= set(got.columns)
-        row = got.first()
-        assert row.is_current is None and row.effective_from is None
-        newer = _df(spark, [(2, "b")]).selectExpr(
-            "k", "v", "true AS is_current",
-            "timestamp'2026-01-01 00:00:00' AS effective_from",
-        )
-        cat.append(newer, name)
-        rows = {r.k: r for r in cat.read(name).collect()}
-        assert rows[1].is_current is None and rows[2].is_current is True
-    finally:
-        cat.drop(name)
 
 
 def test_bloom_point_lookup_prunes_dirs_never_false_negative(spark, cat):

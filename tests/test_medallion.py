@@ -172,28 +172,9 @@ def _config(dirs, as_of):
     }
 
 
-@pytest.fixture(params=["manifest", "metastore"])
-def pipe_factory(request, spark, tmp_path):
-    def make():
-        if request.param == "metastore":
-            # the reference's addressing: saveAsTable/spark.table
-            # names through the session catalog (3-level names
-            # collapse onto it — see MetastoreCatalog docstring)
-            from end_to_end_etl_pipeline_spark.sinks.writers import (
-                MetastoreCatalog,
-            )
-
-            return MedallionPipeline(
-                spark, str(tmp_path / "lake"), catalog=MetastoreCatalog(spark)
-            )
-        cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
-        return MedallionPipeline(spark, str(tmp_path / "lake"), catalog=cat)
-
-    return make
-
-
-def test_medallion_end_to_end(spark, tmp_path, fixture_dirs, pipe_factory):
-    pipe = pipe_factory()
+def test_medallion_end_to_end(spark, tmp_path, fixture_dirs):
+    cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"), catalog=cat)
     pipe.run(_config(fixture_dirs, "2026-01-01 00:00:00"))
 
     # -- silver company_master ---------------------------------------

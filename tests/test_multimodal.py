@@ -1,12 +1,11 @@
-"""Multimodal binary-column plumbing: stats built-ins and the
-Arrow-batched decode stub (schema, batching, determinism)."""
+"""Multimodal binary-column plumbing: stats built-ins, frame
+sampling and the PNG/BMP/WAV codecs."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.operators.multimodal import (
     binary_stats,
-    decode_features,
     with_binary_payload,
 )
 
@@ -27,28 +26,6 @@ def test_binary_stats_matches_text_derivation(spark):
         assert got.magic_hex == b[:4].hex().upper()
 
 
-def test_decode_features_fake_backend_deterministic(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(20)
-    payload = with_binary_payload(docs, "text")
-    feats = decode_features(payload, "doc_id", "payload", dim=8)
-    assert [f.name for f in feats.schema.fields] == ["doc_id", "n_bytes", "features"]
-    assert feats.schema["features"].dataType.simpleString() == "array<double>"
-    rows = {r.doc_id: r for r in feats.collect()}
-    assert len(rows) == 20
-    for r in docs.select("doc_id", "text").collect():
-        b = r.text.encode("utf-8")
-        expect = [(b[i] / 255.0) if i < len(b) else 0.0 for i in range(8)]
-        assert rows[r.doc_id].features == pytest.approx(expect)
-        assert rows[r.doc_id].n_bytes == len(b)
-
-
-def test_decode_features_real_backend_is_explicit_stub(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(1)
-    payload = with_binary_payload(docs, "text")
-    with pytest.raises(NotImplementedError):
-        decode_features(payload, "doc_id", "payload", backend="pil")
-
-
 def test_sample_frames_chunking_and_stride(spark):
     from end_to_end_etl_pipeline_spark.operators.multimodal import sample_frames
 
@@ -63,11 +40,10 @@ def test_sample_frames_chunking_and_stride(spark):
 
 
 def test_sample_frames_real_backend_not_wired(spark):
-    import pytest as _pytest
     from end_to_end_etl_pipeline_spark.operators.multimodal import sample_frames
 
     df = spark.createDataFrame([(1, b"x")], "id long, payload binary")
-    with _pytest.raises(NotImplementedError, match="ffmpeg|codecs"):
+    with pytest.raises(NotImplementedError, match="ffmpeg|codecs"):
         sample_frames(df, "id", "payload", backend="ffmpeg")
 
 

@@ -279,11 +279,10 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     # (directory pruning — zero IO for excluded partitions), not a
     # post-scan Filter over all data
     from end_to_end_etl_pipeline_spark.queries.catalog import load
-    from end_to_end_etl_pipeline_spark.sinks.writers import write_overwrite
 
     orders = load(spark, SF, "orders").withColumn("o_year", F.year("o_orderdate"))
     dest = str(tmp_path / "orders_by_year")
-    write_overwrite(orders, dest, partition_by=["o_year"])
+    orders.write.partitionBy("o_year").parquet(dest)
     got = spark.read.parquet(dest).filter("o_year = 1995")
     plan = got._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -328,11 +327,10 @@ def test_dynamic_partition_pruning_on_fact_dim_join(spark, tmp_path):
     # partitions and scanning the whole fact table. The plan shows a
     # dynamicpruning subquery inside the scan's PartitionFilters.
     from end_to_end_etl_pipeline_spark.queries.catalog import load
-    from end_to_end_etl_pipeline_spark.sinks.writers import write_overwrite
 
     cust = load(spark, SF, "customer")
     dest = str(tmp_path / "cust_by_nation")
-    write_overwrite(cust, dest, partition_by=["c_nationkey"])
+    cust.write.partitionBy("c_nationkey").parquet(dest)
     fact = spark.read.parquet(dest)
     dim = (
         load(spark, SF, "nation")

@@ -1,12 +1,14 @@
 """Repository hygiene: the kept scripts byte-compile, no code, test
 or doc cites a ``scripts/<name>.py`` (or imports a ``scripts.<name>``
-module) that does not exist, and no new package code exists only for
-its tests. Deleted study scripts live in git history; their verdicts
+module) that does not exist, no doc recipe cites a missing
+``tests/<name>.py``, and every package def is reachable from an entry
+point. Deleted study scripts live in git history; their verdicts
 live in SCALE.md and OPTIMIZATION_r12/13.md."""
 
 from __future__ import annotations
 
 import ast
+import glob
 import os
 import re
 
@@ -29,6 +31,10 @@ CITING = [
 CITE = re.compile(
     r"scripts/([A-Za-z0-9_]+)\.py|(?:from|import) scripts\.([A-Za-z0-9_]+)"
 )
+#: the doc recipes, which also cite test files: ``tests/<name>.py``,
+#: or a glob such as ``tests/test_scd*.py`` that must match a file
+RECIPES = ["README.md", ".claude/skills/verify/SKILL.md"]
+TEST_CITE = re.compile(r"(?<![\w/])tests/([A-Za-z0-9_*?]+)\.py")
 
 
 def _citing_files():
@@ -53,38 +59,53 @@ def test_script_byte_compiles(name):
 def test_cited_scripts_exist():
     dangling = []
     for path in _citing_files():
+        rel = os.path.relpath(path, ROOT)
         with open(path, encoding="utf-8") as f:
             for lineno, line in enumerate(f, 1):
                 for m in CITE.finditer(line):
                     name = f"{m.group(1) or m.group(2)}.py"
                     if name not in SCRIPTS:
-                        rel = os.path.relpath(path, ROOT)
                         dangling.append(f"{rel}:{lineno}: scripts/{name}")
-    assert not dangling, "cited scripts that do not exist:\n" + "\n".join(
+                if rel not in RECIPES:
+                    continue
+                for m in TEST_CITE.finditer(line):
+                    cited = f"tests/{m.group(1)}.py"
+                    if not glob.glob(os.path.join(ROOT, cited)):
+                        dangling.append(f"{rel}:{lineno}: {cited}")
+    assert not dangling, "cited files that do not exist:\n" + "\n".join(
         dangling
     )
 
 
 # -- no test-only code ----------------------------------------------------
 PACKAGE = "end_to_end_etl_pipeline_spark"
-#: where a reference keeps a package def alive: everything that ships
-#: or measures the engine — never ``tests/``
-REFERENCING = [PACKAGE, "bench.py", "__spark_entry__.py", "scripts", "perfbench"]
-#: public defs that only tests reference today. This list may only
-#: shrink: give each one a caller outside ``tests/`` or delete it (git
-#: keeps it), and never add a name here.
-TEST_ONLY = {
-    "MetastoreCatalog",
-    "decode_features",
-    "delete_from_ivfpq_store",
-    "delete_from_text_index",
-    "maybe_purge_text_index",
-    "maybe_rebalance",
-    "png_rgb8_blob",
-    "pq_topk",
-    "quarantine_split",
-    "running_total",
-    "values_source",
+#: the entry points: code that ships or measures the engine. Every
+#: name such a file mentions is a root (a ``tests`` dir under one of
+#: them is not — a test never keeps code alive).
+ENTRY_POINTS = [
+    f"{PACKAGE}/cli.py",
+    f"{PACKAGE}/__main__.py",
+    "bench.py",
+    "__spark_entry__.py",
+    "scripts",
+    "perfbench",
+]
+#: package defs that no entry point reaches, each with why it stays.
+#: This may only shrink: give a def a caller reachable from an entry
+#: point, or delete it (git keeps it); never add a name here.
+KEPT = {
+    "png_rgb8_blob": "reference encoder that encode_png_rgb8's tests "
+    "compare against",
+    "maybe_rebalance": "IVF-PQ store maintenance; folds into the "
+    "key-delete commit (ROADMAP item 2)",
+    "delete_from_ivfpq_store": "IVF-PQ store delete; folds into the "
+    "key-delete commit (ROADMAP item 2)",
+    "delete_from_text_index": "text-index delete; folds into the "
+    "key-delete commit (ROADMAP item 2)",
+    "purge_text_index_tombstones": "text-index maintenance; folds into "
+    "the key-delete commit (ROADMAP item 2)",
+    "maybe_purge_text_index": "text-index maintenance; folds into the "
+    "key-delete commit (ROADMAP item 2)",
 }
 
 
@@ -93,7 +114,8 @@ def _py_files(rel):
     if os.path.isfile(path):
         yield path
         return
-    for dirpath, _dirs, files in os.walk(path):
+    for dirpath, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if d != "tests"]
         for f in files:
             if f.endswith(".py"):
                 yield os.path.join(dirpath, f)
@@ -104,47 +126,67 @@ def _parse(path):
         return ast.parse(f.read(), path)
 
 
+def _names(node) -> set[str]:
+    """Every name ``node`` mentions in code: a Name, an attribute, or
+    an imported name (strings and docstrings do not count)."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.ImportFrom):
+            out.update(a.name for a in n.names)
+    return out
+
+
 def _is_register(dec) -> bool:
     target = dec.func if isinstance(dec, ast.Call) else dec
     return getattr(target, "id", getattr(target, "attr", None)) == "register"
 
 
-def _unreferenced_public_defs() -> set[str]:
-    """Public top-level defs and classes of the package that no code
-    outside ``tests/`` names (a Name, an attribute, or an import —
-    so ``__init__`` re-exports count, docstring mentions do not),
-    other than ``@register``-ed queries (the registry is their
-    caller)."""
-    defs = set()
+def _unreachable_defs() -> set[str]:
+    """Top-level package defs and classes, public or private, that no
+    entry point reaches. Roots: ``@register``-ed queries (the registry
+    calls them), module-level package code other than imports (so an
+    ``__init__`` re-export keeps nothing alive), and every name in an
+    ``ENTRY_POINTS`` file. A reached def reaches every name its body
+    mentions. Names are matched by spelling, so two defs that share
+    a name live or die together."""
+    defs: dict[str, list[ast.AST]] = {}
+    roots: set[str] = set()
     for path in _py_files(PACKAGE):
         for node in _parse(path).body:
-            if (
-                isinstance(node, (ast.FunctionDef, ast.ClassDef))
-                and not node.name.startswith("_")
-                and not any(_is_register(d) for d in node.decorator_list)
-            ):
-                defs.add(node.name)
-    used = set()
-    for rel in REFERENCING:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(node.name, []).append(node)
+                if any(_is_register(d) for d in node.decorator_list):
+                    roots.add(node.name)
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                roots |= _names(node)
+    for rel in ENTRY_POINTS:
         for path in _py_files(rel):
-            for node in ast.walk(_parse(path)):
-                if isinstance(node, ast.Name):
-                    used.add(node.id)
-                elif isinstance(node, ast.Attribute):
-                    used.add(node.attr)
-                elif isinstance(node, ast.ImportFrom):
-                    used.update(a.name for a in node.names)
-    return defs - used
+            roots |= _names(_parse(path))
+    reached: set[str] = set()
+    todo = list(roots)
+    while todo:
+        name = todo.pop()
+        if name in reached:
+            continue
+        reached.add(name)
+        for node in defs.get(name, ()):
+            todo.extend(_names(node) - reached)
+    return set(defs) - reached
 
 
 def test_no_new_test_only_code():
-    unreferenced = _unreferenced_public_defs()
-    new = sorted(unreferenced - TEST_ONLY)
+    unreachable = _unreachable_defs()
+    new = sorted(unreachable - set(KEPT))
     assert not new, (
-        "public defs with no caller outside tests/ (give each a caller "
-        "or delete it): " + ", ".join(new)
+        "package defs no entry point reaches (give each a caller from "
+        "a query, the CLI, bench.py, a script or perfbench/, or delete "
+        "it): " + ", ".join(new)
     )
-    gone = sorted(TEST_ONLY - unreferenced)
-    assert not gone, (
-        "now referenced or deleted — drop from TEST_ONLY: " + ", ".join(gone)
+    gone = sorted(set(KEPT) - unreachable)
+    assert not gone, "now reached or deleted — drop from KEPT: " + ", ".join(
+        gone
     )
