@@ -301,8 +301,8 @@ def _build_png_blobs(spark, sf_dir: str):
 
 def _build_dedup_store(spark, sf_dir: str):
     """Untimed setup: bulk-ingest the base documents corpus into a
-    band-bucketed MinHash signature store once — how a production
-    corpus amortizes dedup — so the timed entry is the per-batch
+    MinHash signature store once — how a production corpus
+    amortizes dedup — so the timed entry is the per-batch
     marginal cost only. Returns (catalog, probe_query_fn, tmpdir)."""
     from pyspark.sql import functions as F
 
@@ -313,17 +313,7 @@ def _build_dedup_store(spark, sf_dir: str):
 
     tmpdir = tempfile.mkdtemp(prefix="bench_dedup_")
     cat = ManifestCatalog(spark, f"file://{tmpdir}/lake")
-    # plain (unbucketed) mode: the r07 crossover study (SCALE.md
-    # "Dedup-store crossover") measured plain vs
-    # band_buckets=16 at 4.7k/47k/142k signature rows — plain wins
-    # at every point through 30x (1.25/1.13/1.89s vs
-    # 1.46/2.10/2.11s warm): the probe is stage-overhead-dominated
-    # and one columnar scan beats the touched-bucket collect +
-    # multi-dir listing until the store's BYTES dominate (GB-scale,
-    # the >>RAM corpus band_buckets exists for). Decisions are
-    # bit-identical across modes (fuzzed + driver-gated via
-    # incremental_dedup_ingest_bucketed), so the bench times the
-    # same semantics either way.
+    # one columnar signature scan (SCALE.md "Dedup-store crossover")
     store = MinHashDedupStore(
         cat, "dedup.sigs", num_hashes=16, bands=4, shingle_len=6,
         threshold=0.6,

@@ -27,15 +27,12 @@ O(batch + collisions):
   (:meth:`ManifestCatalog.append`), so concurrent ingests don't lose
   updates, and the decision + append are reproducible.
 
-Two storage modes. Default: each ingest scans the full signature
-store to derive band hashes (signature-width, so a billion-doc store
-is ~100 GB — one cheap columnar scan, not a corpus scan).
-``band_buckets=N``: the store additionally maintains a band table
-bucketed by ``pmod(hash(band_hash), N)`` in the manifest
-(``ManifestCatalog.append_bucketed``) and each ingest reads ONLY the
-buckets the batch's own band hashes fall in — lossless storage-level
-pruning (equal band_hash ⇒ equal bucket), the same trick as the IVF
-store's cell layout. Decisions are bit-identical across modes.
+Each ingest scans the full signature store to derive band hashes
+(signature-width, so a billion-doc store is ~100 GB — one cheap
+columnar scan, not a corpus scan). A band table bucketed by band
+hash, read only in the batch's touched buckets, lost every
+measurement up to 571k signatures (SCALE.md, "Dedup-store
+crossover"), so the store keeps this one layout.
 
 No reference counterpart (the reference dedups by business key only,
 ``medallion/silver/b2s_company_house.py:70``); this is the
@@ -52,7 +49,6 @@ from end_to_end_etl_pipeline_spark.operators.text_dedup import (
     minhash_signatures_arr,
     shingle_array,
 )
-from end_to_end_etl_pipeline_spark.sinks.manifest import bucket_id
 
 
 class MinHashDedupStore:
@@ -69,17 +65,7 @@ class MinHashDedupStore:
         bands: int = 4,
         shingle_len: int = 6,
         threshold: float = 0.6,
-        band_buckets: int | None = None,
     ):
-        """``band_buckets``: when set, the store ALSO maintains
-        ``<table>__bands`` — the (id, band, band_hash) rows bucketed
-        by ``pmod(hash(band_hash), band_buckets)`` in the manifest —
-        and each ingest reads ONLY the buckets the batch's own band
-        hashes fall in (equal band_hash ⇒ equal bucket, so pruning is
-        lossless). That turns the per-ingest store read from
-        O(store) into O(store × touched_buckets / band_buckets) of
-        IO — the storage-level pruning scale path; decisions are
-        bit-identical to the unbucketed mode."""
         if num_hashes % bands:
             raise ValueError("num_hashes must be divisible by bands")
         self.catalog = catalog
@@ -90,8 +76,6 @@ class MinHashDedupStore:
         self.rows = num_hashes // bands
         self.shingle_len = shingle_len
         self.threshold = threshold
-        self.band_buckets = band_buckets
-        self.bands_table = f"{table}__bands"
 
     # -- internals -------------------------------------------------------
     def _signatures(self, docs: DataFrame, text_col: str) -> DataFrame:
@@ -123,9 +107,8 @@ class MinHashDedupStore:
         (and re-derived the un-persisted probe signatures once per
         join); this one pays ``bands`` copies of a 16-long array per
         doc, a few hundred bytes. Built ON ``lsh_bands`` (its
-        ``carry`` hook), so band_hash is the same expression object
-        that wrote the stored band rows and feeds the
-        pmod(hash(band_hash)) routing — they cannot desynchronize."""
+        ``carry`` hook), so band_hash is the same expression on the
+        batch and store sides — they cannot desynchronize."""
         return lsh_bands(
             sigs, self.id_col, self.bands, self.rows,
             carry=[
@@ -168,8 +151,8 @@ class MinHashDedupStore:
         This is the query-time half of incremental dedup ("would we
         keep this batch?" — dry-run admission control, backfill
         auditing) and the idempotent shape a benchmark can re-run:
-        all the amortization wins (persisted signatures, band-bucket
-        dir pruning, O(batch + collisions) work) with none of the
+        all the amortization wins (persisted signatures,
+        O(batch + collisions) work) with none of the
         state mutation. Returns ``(accepted_ids, rejected)`` with the
         same schemas and the same deterministic decision rule as
         :meth:`ingest`.
@@ -229,16 +212,6 @@ class MinHashDedupStore:
             self.catalog.append(accepted_sigs, self.table)
         else:
             self.catalog.replace_atomic(accepted_sigs, self.table)
-        if self.band_buckets is not None:
-            accepted_bands = lsh_bands(
-                accepted_sigs, self.id_col, self.bands, self.rows
-            )
-            self.catalog.append_bucketed(
-                accepted_bands,
-                self.bands_table,
-                n_buckets=self.band_buckets,
-                bucket_keys=["band_hash"],
-            )
         accepted = accepted_sigs.select(self.id_col)
         # decision frames must survive sig_new's unpersist
         accepted = accepted.localCheckpoint(eager=True)
@@ -248,26 +221,17 @@ class MinHashDedupStore:
 
     def delete(self, ids) -> int:
         """Un-ingest documents (takedowns, re-licensing, GDPR): remove
-        their signature rows — and, in bucketed mode, their band rows
-        (change-proportional: one doc touches ≤ ``bands`` buckets) —
-        so the store no longer remembers them and a future near-dup
-        of a deleted doc is ACCEPTED again.  The signature table
-        holds no raw text (the sketch is one-way), but erasure
-        removes even the sketch.  Rides the catalog's targeted-delete
-        CAS commits (`delete_where` / `delete_bucketed_where`), so
+        their signature rows, so the store no longer remembers them
+        and a future near-dup of a deleted doc is ACCEPTED again.
+        The signature table holds no raw text (the sketch is
+        one-way), but erasure removes even the sketch.  Rides the
+        catalog's targeted-delete CAS commit (``delete_where``), so
         prior versions stay time-travelable until vacuum.  Returns
         signatures removed."""
         ids = list(ids)
         if not ids or not self.catalog.exists(self.table):
             return 0
-        n = self.catalog.delete_where(self.table, self.id_col, ids)
-        if self.band_buckets is not None and self.catalog.exists(
-            self.bands_table
-        ):
-            self.catalog.delete_bucketed_where(
-                self.bands_table, self.id_col, ids
-            )
-        return n
+        return self.catalog.delete_where(self.table, self.id_col, ids)
 
     def _decide(
         self,
@@ -285,8 +249,8 @@ class MinHashDedupStore:
         sig_new = self._signatures(docs, text_col)
         if cache:
             # persisted, not eagerly counted: the first consumer (the
-            # touched-bucket collect, or the append) fills the cache;
-            # every later join reads it — one fewer Spark job per call
+            # append) fills the cache; every later join reads it — one
+            # fewer Spark job per call
             sig_new = sig_new.persist()
         elif checkpoint:
             # one job computes the batch MinHash once; the four
@@ -297,34 +261,7 @@ class MinHashDedupStore:
 
         rejected_vs_store = None
         if self.catalog.exists(self.table):
-            sig_old = self.catalog.read(self.table)
-            if self.band_buckets is not None:
-                # storage-level pruning: only read band buckets the
-                # batch can collide with (batch-bounded id list)
-                touched = sorted(
-                    r.b
-                    for r in bands_new.select(
-                        bucket_id(["band_hash"], self.band_buckets).alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                )
-                # the stored band rows carry no signatures — graft the
-                # store's signature arrays on (the ONE store-side join
-                # left in the plan)
-                bands_old = self.catalog.read(
-                    self.bands_table, buckets=touched
-                ).join(
-                    sig_old.select(
-                        self.id_col,
-                        F.array(
-                            *[F.col(f"m{k}") for k in range(self.num_hashes)]
-                        ).alias("__sig"),
-                    ),
-                    self.id_col,
-                )
-            else:
-                bands_old = self._bands_with_sig(sig_old)
+            bands_old = self._bands_with_sig(self.catalog.read(self.table))
             est = self._est_collisions(bands_new, bands_old)
             rejected_vs_store = (
                 est.filter(F.col("est_jaccard") >= self.threshold)

@@ -10,7 +10,9 @@ parquet lakehouse with the reference's observed defects fixed:
   version. Here each SCD apply computes the complete next table state
   as ONE DataFrame plan and publishes it with one catalog commit
   (``ManifestCatalog.replace_atomic``: a single manifest publish) —
-  readers see old or new state, never between.
+  readers see old or new state, never between. The publish is a
+  compare-and-swap on the version the apply read, so a concurrent
+  commit is recomputed over, never lost (:class:`SCDEngine`).
 * **Zero-width versions** (§2.11-5): validity is timestamp-typed and
   the ``as_of`` is caller-supplied, so same-day re-runs don't produce
   ``effective_from == effective_to`` date collisions.
@@ -21,9 +23,9 @@ parquet lakehouse with the reference's observed defects fixed:
 
 Scale notes. The parquet path rewrites the table per apply — at
 100 TB bind these same plans to a MERGE-capable format (Delta/Iceberg,
-interface kept identical) or partition the dimension by a stable key
-bucket so the rewrite is partition-pruned to buckets containing
-changes. The *plan* itself scales either way: one shuffle on the
+interface kept identical). Key-bucketing the dimension does not help
+at a ~1% restatement rate: nearly every bucket holds a changed key.
+The *plan* itself scales either way: one shuffle on the
 business key (source ⋈ current), map-side hash compare, union of
 disjoint legs — no collects, no driver loops, no second pass over the
 source (the reference reads the source twice: MERGE + anti-join).
@@ -36,10 +38,9 @@ import functools
 import operator
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from end_to_end_etl_pipeline_spark.operators.dedup import dedup_by_key
 from end_to_end_etl_pipeline_spark.operators.joins import anti_join
 from end_to_end_etl_pipeline_spark.operators.hashing import with_row_hash
 
@@ -50,11 +51,7 @@ from end_to_end_etl_pipeline_spark.operators.hashing import with_row_hash
 MAX_TS = "2200-12-31 23:59:59"
 
 
-def prepare_scd_source(
-    src: DataFrame,
-    keys: Sequence[str],
-    dedup_order_by: Sequence[Column | str] | None = None,
-) -> DataFrame:
+def prepare_scd_source(src: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Guard a merge source batch before any SCD apply.
 
     * **Null business keys are dropped.** They can never equi-match a
@@ -62,19 +59,17 @@ def prepare_scd_source(
       rows forever (ADVICE r1). Callers wanting them must split them
       off upstream; no pipeline config lands them in a quarantine
       table yet.
-    * **Duplicate business keys fail fast** (or deterministically dedup
-      when ``dedup_order_by`` is given). A dup-key batch multiplies the
-      current⟕source join and breaks the one-current-row-per-key
-      invariant — the reference's Delta MERGE raises on multi-match
-      (``utils/scd/scd.py:55``); a silent engine must not do worse.
-      The uniqueness probe is one narrow agg job over (keys).
+    * **Duplicate business keys fail fast.** A dup-key batch
+      multiplies the current⟕source join and breaks the
+      one-current-row-per-key invariant — the reference's Delta MERGE
+      raises on multi-match (``utils/scd/scd.py:55``); a silent engine
+      must not do worse. The uniqueness probe is one narrow agg job
+      over (keys).
     """
     keys = list(keys)
     src = src.filter(
         functools.reduce(operator.and_, [F.col(k).isNotNull() for k in keys])
     )
-    if dedup_order_by is not None:
-        return dedup_by_key(src, keys, dedup_order_by)
     dup = (
         src.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -85,38 +80,52 @@ def prepare_scd_source(
     if dup:
         raise ValueError(
             f"SCD source batch has duplicate business keys {keys}; "
-            "pass dedup_order_by= for a deterministic keep-policy "
-            "or dedup upstream"
+            "dedup it upstream (the medallion's dedup: spec keeps one "
+            "row per key)"
         )
     return src
 
 
 class SCDEngine:
-    """SCD applier over the exists/read/replace_atomic catalog
-    surface — in the engine, ``sinks.manifest.ManifestCatalog``
-    (which also offers bucket-pruned SCD2 via ``BucketedSCD2``)."""
+    """SCD applier over a :class:`~sinks.manifest.ManifestCatalog`.
+
+    Every apply reads the table at one pinned version ``v`` and
+    publishes its next state with ``replace_atomic(...,
+    base_version=v)``, a compare-and-swap on version ``v + 1``. If
+    another writer committed first, the apply re-reads the new latest
+    version and recomputes, so a concurrent commit is never silently
+    replaced (Delta's commit protocol likewise refuses a commit whose
+    read version went stale). A first load uses base 0; if it loses
+    that race it applies on top of the winner."""
 
     def __init__(self, catalog):
         self.catalog = catalog
 
+    def _publish(self, table: str, next_state) -> None:
+        """Commit ``next_state(target)`` — ``target`` is the table at
+        the latest version, or None before the first load — and
+        recompute on a lost compare-and-swap."""
+        cat = self.catalog
+        while True:
+            manifest = cat.latest_manifest(table)
+            base = 0 if manifest is None else manifest["version"]
+            target = None if manifest is None else cat.read(table, version=base)
+            if cat.replace_atomic(next_state(target), table, base_version=base):
+                return
+
     # -- type 1 ---------------------------------------------------------
-    def apply_scd1(
-        self,
-        source: DataFrame,
-        table: str,
-        keys: Sequence[str],
-        dedup_order_by=None,
-    ) -> None:
+    def apply_scd1(self, source: DataFrame, table: str, keys: Sequence[str]) -> None:
         """K4 — upsert: matched rows take the source's full row (fixes
         §2.11-8), unmatched target rows survive, new keys insert."""
         keys = list(keys)
-        source = prepare_scd_source(source, keys, dedup_order_by)
-        if not self.catalog.exists(table):
-            self.catalog.replace_atomic(source, table)
-            return
-        target = self.catalog.read(table)
-        kept = anti_join(target, source, keys)
-        self.catalog.replace_atomic(kept.unionByName(source), table)
+        source = prepare_scd_source(source, keys)
+
+        def next_state(target: DataFrame | None) -> DataFrame:
+            if target is None:
+                return source
+            return anti_join(target, source, keys).unionByName(source)
+
+        self._publish(table, next_state)
 
     # -- type 2 ---------------------------------------------------------
     def apply_scd2(
@@ -126,14 +135,13 @@ class SCDEngine:
         keys: Sequence[str],
         tracked: Sequence[str],
         as_of: _dt.datetime | str | None = None,
-        dedup_order_by=None,
     ) -> None:
         """K5+K2+J2 — expire changed current rows, insert new versions,
         as one atomic publish (merge logic: :func:`scd2_next_state`)."""
-        source = prepare_scd_source(source, keys, dedup_order_by)
-        target = self.catalog.read(table) if self.catalog.exists(table) else None
-        self.catalog.replace_atomic(
-            scd2_next_state(target, source, keys, tracked, as_of), table
+        source = prepare_scd_source(source, keys)
+        self._publish(
+            table,
+            lambda target: scd2_next_state(target, source, keys, tracked, as_of),
         )
 
     # -- type 3 ---------------------------------------------------------
@@ -143,52 +151,53 @@ class SCDEngine:
         table: str,
         keys: Sequence[str],
         tracked: Sequence[str],
-        dedup_order_by=None,
     ) -> None:
         """K6 — previous-value columns: on change, ``previous_<c>`` ←
         old current value; inserts get NULL previous
         (reference ``utils/scd/scd.py:114-143``)."""
         keys = list(keys)
-        source = prepare_scd_source(source, keys, dedup_order_by)
+        source = prepare_scd_source(source, keys)
         src = with_row_hash(source, tracked)
-        if not self.catalog.exists(table):
-            init = src
-            for c in tracked:
-                init = init.withColumn(
-                    f"previous_{c}", F.lit(None).cast(source.schema[c].dataType)
-                )
-            self.catalog.replace_atomic(init, table)
-            return
-        target = self.catalog.read(table)
-        tgt_sel = target.select(
-            *keys,
-            F.col("row_hash").alias("__t_hash"),
-            *[F.col(c).alias(f"__t_{c}") for c in tracked],
-            *[F.col(f"previous_{c}").alias(f"__t_prev_{c}") for c in tracked],
-        )
-        merged = src.join(tgt_sel, keys, "left")
-        changed = F.col("__t_hash").isNotNull() & (
-            F.col("__t_hash") != F.col("row_hash")
-        )
-        out = merged
-        for c in tracked:
-            out = out.withColumn(
-                f"previous_{c}",
-                F.when(changed, F.col(f"__t_{c}")).otherwise(
-                    F.when(
-                        F.col("__t_hash").isNotNull(), F.col(f"__t_prev_{c}")
-                    ).otherwise(F.lit(None).cast(source.schema[c].dataType))
-                ),
+
+        def next_state(target: DataFrame | None) -> DataFrame:
+            if target is None:
+                init = src
+                for c in tracked:
+                    init = init.withColumn(
+                        f"previous_{c}", F.lit(None).cast(source.schema[c].dataType)
+                    )
+                return init
+            tgt_sel = target.select(
+                *keys,
+                F.col("row_hash").alias("__t_hash"),
+                *[F.col(c).alias(f"__t_{c}") for c in tracked],
+                *[F.col(f"previous_{c}").alias(f"__t_prev_{c}") for c in tracked],
             )
-        drop_cols = (
-            ["__t_hash"]
-            + [f"__t_{c}" for c in tracked]
-            + [f"__t_prev_{c}" for c in tracked]
-        )
-        out = out.drop(*drop_cols)
-        # keys that vanished from the source keep their last state
-        kept = anti_join(target, src, keys)
-        self.catalog.replace_atomic(kept.unionByName(out), table)
+            merged = src.join(tgt_sel, keys, "left")
+            changed = F.col("__t_hash").isNotNull() & (
+                F.col("__t_hash") != F.col("row_hash")
+            )
+            out = merged
+            for c in tracked:
+                out = out.withColumn(
+                    f"previous_{c}",
+                    F.when(changed, F.col(f"__t_{c}")).otherwise(
+                        F.when(
+                            F.col("__t_hash").isNotNull(), F.col(f"__t_prev_{c}")
+                        ).otherwise(F.lit(None).cast(source.schema[c].dataType))
+                    ),
+                )
+            drop_cols = (
+                ["__t_hash"]
+                + [f"__t_{c}" for c in tracked]
+                + [f"__t_prev_{c}" for c in tracked]
+            )
+            out = out.drop(*drop_cols)
+            # keys that vanished from the source keep their last state
+            kept = anti_join(target, src, keys)
+            return kept.unionByName(out)
+
+        self._publish(table, next_state)
 
 
 def scd2_next_state(

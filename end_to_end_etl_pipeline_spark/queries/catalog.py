@@ -112,6 +112,20 @@ def scratch_root(tag: str) -> str:
     return tempfile.mkdtemp(dir=parent)
 
 
+def land_pinned(df: DataFrame, landing: str, mtime: int) -> None:
+    """Append ``df`` to the local dir ``landing`` as one parquet file
+    and pin the new files' modification time to ``mtime``. A file
+    stream source replays new files in (modTime, path) order, so
+    increasing pins replay batches in landing order even when two
+    writes share a millisecond — the streaming queries' order-
+    sensitive claims (late-data drops, SCD2 history) depend on it."""
+    before = set(os.listdir(landing)) if os.path.isdir(landing) else set()
+    df.coalesce(1).write.mode("append").parquet(f"file://{landing}")
+    for f in set(os.listdir(landing)) - before:
+        if not f.startswith(("_", ".")):
+            os.utime(os.path.join(landing, f), (mtime, mtime))
+
+
 # Import side-effect modules that populate REGISTRY.
 from end_to_end_etl_pipeline_spark.queries import core  # noqa: E402,F401
 from end_to_end_etl_pipeline_spark.queries import scans  # noqa: E402,F401

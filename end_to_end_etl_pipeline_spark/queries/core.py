@@ -28,7 +28,12 @@ from end_to_end_etl_pipeline_spark.operators.dedup import dedup_by_key
 from end_to_end_etl_pipeline_spark.operators.dq import apply_rules, bounds_rule, not_null_rule
 from end_to_end_etl_pipeline_spark.operators.joins import equi_join
 from end_to_end_etl_pipeline_spark.operators.windows import lag_growth, top_k_per_group
-from end_to_end_etl_pipeline_spark.queries.catalog import load, register, scratch_root
+from end_to_end_etl_pipeline_spark.queries.catalog import (
+    land_pinned,
+    load,
+    register,
+    scratch_root,
+)
 
 ANCHOR = "1998-12-01"  # fixed anchor instead of current_date: deterministic
 
@@ -2808,16 +2813,9 @@ def streaming_late_data_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = os.path.join(root, "landing")
 
     def land(year: int, mtime: int) -> None:
-        before = set(os.listdir(landing)) if os.path.isdir(landing) else set()
-        orders.filter(F.year("wts") == year).coalesce(1).write.mode(
-            "append"
-        ).parquet(f"file://{landing}")
-        # pin modification times: the file source orders new files by
-        # (modTime, path); the late-drop claim is ORDER-sensitive —
-        # the 1993 file must replay after the 1995 one
-        for f in set(os.listdir(landing)) - before:
-            if not f.startswith(("_", ".")):
-                os.utime(os.path.join(landing, f), (mtime, mtime))
+        # the late-drop claim is ORDER-sensitive: the 1993 file must
+        # replay after the 1995 one
+        land_pinned(orders.filter(F.year("wts") == year), landing, mtime)
 
     land(1995, 1_000_000)  # batch 1: establishes the watermark
     land(1993, 2_000_000)  # batch 2: every row behind it → dropped
@@ -2932,16 +2930,8 @@ def streaming_join_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def land(df, sub: str, cond, mtime: int) -> None:
-        landing = os.path.join(root, sub)
-        before = set(os.listdir(landing)) if os.path.isdir(landing) else set()
-        df.filter(cond).coalesce(1).write.mode("append").parquet(
-            f"file://{landing}"
-        )
-        # pin modification times: the file source orders files by
-        # (modTime, path), and the late-drop claim is ORDER-sensitive
-        for f in set(os.listdir(landing)) - before:
-            if not f.startswith(("_", ".")):
-                os.utime(os.path.join(landing, f), (mtime, mtime))
+        # the late-drop claim is ORDER-sensitive
+        land_pinned(df.filter(cond), os.path.join(root, sub), mtime)
 
     # batch 1: the bulk of each side (advances both watermarks)
     land(views, "views",
@@ -3083,17 +3073,8 @@ def streaming_view_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("user_id", "ts")
     landing = os.path.join(root, "landing")
 
-    def land(cond, mtime: int) -> None:
-        before = set(os.listdir(landing)) if os.path.isdir(landing) else set()
-        views.filter(cond).coalesce(1).write.mode("append").parquet(
-            f"file://{landing}"
-        )
-        for f in set(os.listdir(landing)) - before:
-            if not f.startswith(("_", ".")):
-                os.utime(os.path.join(landing, f), (mtime, mtime))
-
-    land(F.dayofmonth("ts") <= 15, 1_000_000)
-    land(F.dayofmonth("ts") >= 16, 2_000_000)
+    land_pinned(views.filter(F.dayofmonth("ts") <= 15), landing, 1_000_000)
+    land_pinned(views.filter(F.dayofmonth("ts") >= 16), landing, 2_000_000)
 
     stream = (
         spark.readStream.schema("user_id long, ts timestamp")

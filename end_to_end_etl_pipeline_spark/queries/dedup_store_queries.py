@@ -185,58 +185,3 @@ def incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rejected is already eagerly checkpointed — scratch-reap safe
     return rejected.select("doc_id", "dup_of", "est_jaccard")
 
-
-@register(
-    "incremental_dedup_ingest_bucketed",
-    oracle=_dedup_store_oracle(),
-    doc="The SAME incremental dedup ingest under the band-bucketed "
-    "storage mode (band_buckets=16): signatures additionally persist "
-    "a band table bucketed by pmod(hash(band_hash), 16), so a batch's "
-    "collision probe reads only its bands' touched bucket dirs - the "
-    ">>RAM-scale execution strategy, where the plain mode's one "
-    "columnar signature scan stops fitting. Decisions are "
-    "bit-identical across modes by contract (pytest-pinned), so this "
-    "twin answers the IDENTICAL oracle as incremental_dedup_ingest - "
-    "the conformance row that turns the scale path's equivalence "
-    "claim into a value-hash fact.",
-    tags=("north-star", "dedup", "incremental"),
-)
-def incremental_dedup_ingest_bucketed(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from end_to_end_etl_pipeline_spark.operators.dedup_store import MinHashDedupStore
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
-
-    root = scratch_root("dedup_store_bucketed")
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    # id shift derived from the corpus (one max agg, metadata-scale),
-    # mirroring the oracle's mx CTE — see _dedup_store_oracle
-    # `or 0` keeps an empty corpus from raising int(None) — the
-    # query then degrades to empty batches instead of a TypeError
-    shift = int(docs.agg(F.max("doc_id")).first()[0] or 0) + 1000000
-    b2 = (
-        docs.filter(F.col("doc_id") % 5 == 0)
-        .select(
-            (F.col("doc_id") + shift).alias("doc_id"),
-            F.expr("substring(text, 8)").alias("text"),
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") % 9 == 0).select(
-                (F.col("doc_id") + 2 * shift).alias("doc_id"),
-                F.reverse("text").alias("text"),
-            )
-        )
-    )
-    cat = ManifestCatalog(spark, f"file://{root}")
-    store = MinHashDedupStore(
-        cat,
-        "dedup.sigs",
-        num_hashes=_SK,
-        bands=_SB,
-        threshold=_THRESH,
-        band_buckets=16,
-    )
-    store.ingest(docs, "text")
-    _accepted, rejected = store.ingest(b2, "text")
-    return rejected.select("doc_id", "dup_of", "est_jaccard")

@@ -21,7 +21,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.operators.scd import MAX_TS, scd2_next_state
-from end_to_end_etl_pipeline_spark.queries.catalog import load, register, scratch_root
+from end_to_end_etl_pipeline_spark.queries.catalog import (
+    land_pinned,
+    load,
+    register,
+    scratch_root,
+)
 
 _W1 = ("1995-01-01", "1996-01-01")
 _W2 = ("1996-01-01", "1997-01-01")
@@ -270,13 +275,13 @@ def scd2_member_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     "order-window batches land as two parquet files whose "
     "modification times are PINNED so the file source replays them "
     "oldest-first one per trigger (trigger availableNow), each "
-    "micro-batch SCD2-merges into a bucketed catalog table "
-    "(BucketedSCD2 - only buckets holding changed keys rewrite), "
-    "the effective-from timestamp derives from batch CONTENT "
+    "micro-batch SCD2-merges into a catalog table through "
+    "SCDEngine.apply_scd2 (the medallion's SCD2 applier), the "
+    "effective-from timestamp derives from batch CONTENT "
     "(max of the batch's as-of column), and the final full history "
     "must equal the batch scd2_transition oracle exactly. What the "
     "hash proves: the streaming bridge's batch-boundary handling, "
-    "within-batch latest-wins dedup, and bucketed merge produce the "
+    "within-batch latest-wins dedup, and per-batch merge produce the "
     "SAME versioned state as the one-plan batch merge - the "
     "replay-convergence contract a CDC feed depends on.",
     tags=("parity", "scd", "streaming", "north-star"),
@@ -284,10 +289,7 @@ def scd2_member_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from end_to_end_etl_pipeline_spark.sinks.manifest import (
-        BucketedSCD2,
-        ManifestCatalog,
-    )
+    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
     from end_to_end_etl_pipeline_spark.streaming.jobs import foreach_batch_scd2
 
     root = scratch_root("streaming_scd2")
@@ -296,16 +298,11 @@ def streaming_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = os.path.join(root, "landing")
 
     def land(batch: DataFrame, as_of: str, mtime: int) -> None:
-        before = set(os.listdir(landing)) if os.path.isdir(landing) else set()
-        batch.withColumn(
-            "__as_of", F.lit(as_of).cast("timestamp")
-        ).coalesce(1).write.mode("append").parquet(f"file://{landing}")
-        # pin modification times: the file source orders new files by
-        # (modTime, path), and SCD2 is order-sensitive — without the
-        # pin, same-millisecond writes could replay T2 before T1
-        for f in set(os.listdir(landing)) - before:
-            if not f.startswith(("_", ".")):
-                os.utime(os.path.join(landing, f), (mtime, mtime))
+        # SCD2 is order-sensitive: T1 must replay before T2
+        land_pinned(
+            batch.withColumn("__as_of", F.lit(as_of).cast("timestamp")),
+            landing, mtime,
+        )
 
     land(_batch(orders, *_W1), _T1, 1_000_000)
     land(_batch(orders, *_W2), _T2, 2_000_000)
@@ -329,11 +326,10 @@ def streaming_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
         tracked=["order_cnt", "total_spent"],
         as_of_col="__as_of",
         checkpoint_dir=f"file://{root}/ckpt",
-        n_buckets=8,
         available_now=True,
     )
     q.awaitTermination()
-    out = BucketedSCD2(cat, n_buckets=8).read_all("dim.cust").select(
+    out = cat.read("dim.cust").select(
         "custkey", "order_cnt", "total_spent",
         "effective_from", "effective_to", "is_current",
     )

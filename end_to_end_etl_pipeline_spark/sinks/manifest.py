@@ -1,11 +1,11 @@
 """Manifest-based table commits: object-store-portable, crash-safe,
-with bucket-pruned SCD2 rewrites.
+compare-and-swap versioned.
 
-The engine's one table catalog. It avoids the two scale-killers of a
+The engine's one table catalog. It avoids the scale-killer of a
 plain parquet lake — ``os.rename``-based directory swaps (local-FS
-only, torn window between the two renames) and full-table rewrites
-per SCD2 apply — with the standard lakehouse-lite design (the same
-shape Delta/Iceberg use, reduced to its core):
+only, torn window between the two renames) — with the standard
+lakehouse-lite design (the same shape Delta/Iceberg use, reduced to
+its core):
 
 * **Immutable data dirs.** Every commit writes parquet into a fresh
   ``data/<uuid>/`` directory — nothing is ever renamed or overwritten
@@ -18,17 +18,18 @@ shape Delta/Iceberg use, reduced to its core):
   half-state. Publication is a single ``FileSystem.rename`` of the
   manifest tmp file — atomic on HDFS/local; on S3 bind this one call
   to a conditional PUT. Rename-onto-existing fails → the writer
-  re-reads the log and retries at N+1 (optimistic concurrency).
+  re-reads the log and retries at N+1 (optimistic concurrency). A
+  commit derived from version N (append, row rewrites, compaction,
+  ``replace_atomic(..., base_version=N)`` — every SCD apply) claims
+  exactly N+1 and rebases on a lost race, so it never drops a
+  concurrent commit.
 * **Hadoop FileSystem API only** (via ``spark._jvm``): the same code
   drives ``file:``, ``hdfs:``, ``s3a:``, ``abfss:`` URIs. No
   ``os.path`` / ``os.walk`` on the data path.
-* **Bucketed dimensions.** A dimension committed with ``n_buckets``
-  is hash-partitioned on its business key (``pmod(hash(keys), N)``).
-  An SCD2 apply computes which buckets the source touches (a distinct
-  over ≤ N small ints), reads and rewrites *only those buckets*, and
-  re-points untouched buckets at their existing dirs in the new
-  manifest. A daily trickle touching 1% of keys rewrites ≈ the
-  touched buckets, not 100 TB.
+* **Bucketed stores.** A table committed through
+  :meth:`ManifestCatalog.append_bucketed` lists one dir set per
+  :func:`bucket_id` bucket, so a reader prunes to the buckets it
+  names (the text index and the IVF-PQ store).
 
 Capability parity: reference commits via Delta managed tables
 (``medallion/bronze/ds2b_company_house.py:91-97``) and two-transaction
@@ -45,11 +46,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-from end_to_end_etl_pipeline_spark.operators.scd import (
-    prepare_scd_source,
-    scd2_next_state,
-)
 
 BUCKET_COL = "__bucket"
 _MANIFEST_FMT = "manifest-{:08d}.json"
@@ -173,9 +169,6 @@ class HadoopFS:
         finally:
             stream.close()
 
-    def rename(self, src: str, dst: str) -> bool:
-        return bool(self.fs.rename(self.path(src), self.path(dst)))
-
     def rename_exclusive(self, src: str, dst: str) -> bool:
         """Atomically claim ``dst`` with ``src``'s content; False if
         ``dst`` already exists. This is THE commit primitive — a
@@ -218,7 +211,7 @@ class HadoopFS:
 class ManifestCatalog:
     """``zone.table`` → ``<root>/zone/table`` with versioned-manifest
     commits: the exists/read/replace_atomic/append/drop surface every
-    pipeline layer uses, plus bucket-aware reads for pruned SCD2.
+    pipeline layer uses, plus bucket-aware reads for the stores.
 
     Carry-forward rule (:meth:`_carried`): a commit derived from the
     previous version re-derives the dir layout (``dirs`` /
@@ -227,8 +220,8 @@ class ManifestCatalog:
     verbatim — bucket contract, ``cloned_from``, store extras
     (``cell_counts``, ``ti_*``, replay markers, ...). ``schema``
     survives only a rewrite that cannot retype a column.
-    ``replace_atomic``, ``optimize_zorder`` and ``BucketedSCD2`` write
-    their manifest whole; ``shallow_clone`` copies its source's.
+    ``replace_atomic`` and ``optimize_zorder`` write their manifest
+    whole; ``shallow_clone`` copies its source's.
 
     Manifest ``schema`` field (the Delta ``metaData.schemaString``
     move): ``StructType.json()`` of the rows every listed dir holds.
@@ -338,12 +331,12 @@ class ManifestCatalog:
     def _commit(self, name: str, manifest: dict) -> int:
         """Last-writer-wins publish: write tmp, rename to the next
         version slot; on collision retry at a later slot. ONLY safe
-        for full-replacement content (replace_atomic) whose manifest
-        does not depend on the previous version. Content derived FROM
-        a previous manifest (append, bucketed SCD, optimize /
-        optimize_zorder — compaction rows ARE the prior version) must
-        go through :meth:`_commit_if` + rebase, or a concurrent
-        commit's dirs would be silently dropped."""
+        for full-replacement content (replace_atomic with no base
+        version) whose manifest does not depend on the previous
+        version. Content derived FROM a previous manifest (append, SCD
+        applies, optimize / optimize_zorder — compaction rows ARE the
+        prior version) must go through :meth:`_commit_if` + rebase, or
+        a concurrent commit's dirs would be silently dropped."""
         mdir = self._manifest_dir(name)
         self.fs.mkdirs(mdir)
         while True:
@@ -1167,23 +1160,28 @@ class ManifestCatalog:
 
     def replace_atomic(
         self, df: DataFrame, name: str, partition_by=None, stats_cols=None,
-        allow_unbucket: bool = False, bloom_cols=None,
-    ) -> None:
+        base_version: int | None = None, bloom_cols=None,
+    ) -> int | None:
         """K1 — full refresh as one manifest commit (readers see old or
         new, never between; crash leaves old manifest current).
-        Refuses to overwrite a bucketed table (that would silently
-        discard its bucket layout and metadata — IVF stores, SCD2
-        bucket maps) unless ``allow_unbucket=True``."""
+        Returns the committed version.
+
+        Without ``base_version`` the publish is last-writer-wins, right
+        for content that does not depend on the table's prior state
+        (bronze, gold). ``df`` computed FROM version ``base_version``
+        (0: no table yet) claims exactly ``base_version + 1`` and
+        returns None when another writer got there first — the caller
+        re-reads the new latest and recomputes (``operators.scd.SCDEngine``).
+
+        Refuses to overwrite a bucketed table: that would silently
+        discard its bucket layout and metadata (IVF-PQ store, text
+        index); ``drop`` it first."""
         prior = self.latest_manifest(name)
-        if (
-            prior is not None
-            and prior.get("bucket_dirs") is not None
-            and not allow_unbucket
-        ):
+        if prior is not None and prior.get("bucket_dirs") is not None:
             raise ValueError(
                 f"table {name} is bucketed (bucket_fn="
                 f"{prior.get('bucket_fn', 'hash_pmod')!r}); overwriting would "
-                "discard its layout — pass allow_unbucket=True if intended"
+                "discard its layout"
             )
         data_dir = self._new_data_dir(name)
         writer = df.write.mode("overwrite")
@@ -1201,7 +1199,10 @@ class ManifestCatalog:
             manifest["blooms"] = {
                 data_dir: self._dir_blooms(data_dir, bloom_cols, df.schema)
             }
-        self._commit(name, manifest)
+        if base_version is None:
+            version = self._commit(name, manifest)
+        else:
+            version = self._commit_if(name, manifest, base_version)
         # A wholesale rewrite can legally land a different type for an
         # existing column name (no schema-merge guard spans versions) —
         # a stale cached type would hash bloom probes wrongly and
@@ -1210,14 +1211,12 @@ class ManifestCatalog:
         # fresh dirs re-read naturally.
         for key in [k for k in self._col_types if k[0] == name]:
             del self._col_types[key]
-
-    # reference-surface aliases (K1/K2)
-    overwrite = replace_atomic
+        return version
 
     def append(self, df: DataFrame, name: str, stats_cols=None, bloom_cols=None) -> None:
         """K2 — append = new data dir + manifest listing old dirs + new.
         Bucketed tables reject plain appends (they would break the
-        bucket→dir mapping): route changes through ``BucketedSCD2``.
+        bucket→dir mapping): use :meth:`append_bucketed`.
         Existing dirs' stats and blooms carry forward untouched —
         immutable dirs mean they never go stale."""
         data_dir = self._new_data_dir(name)
@@ -1235,8 +1234,8 @@ class ManifestCatalog:
             manifest = self.latest_manifest(name)
             if manifest is not None and manifest.get("bucket_dirs") is not None:
                 raise ValueError(
-                    f"table {name} is bucketed; append via BucketedSCD2.apply, "
-                    "not ManifestCatalog.append"
+                    f"table {name} is bucketed; use append_bucketed, "
+                    "not append"
                 )
             dirs = (manifest["dirs"] if manifest else []) + [data_dir]
             stats = dict((manifest or {}).get("stats") or {})
@@ -1549,8 +1548,8 @@ class ManifestCatalog:
             manifest = self._require_manifest(name)
             if manifest.get("bucket_dirs") is not None:
                 raise ValueError(
-                    f"table {name} is bucketed — update via the bucketed "
-                    "MERGE (BucketedSCD2) instead"
+                    f"table {name} is bucketed; update_where rewrites "
+                    "plain tables only"
                 )
             affected, keep = self._bloom_split(name, manifest, col, values)
             if not affected:
@@ -1799,32 +1798,6 @@ class ManifestCatalog:
             if self._commit_if(name, new, base):
                 return
 
-    def maybe_vacuum(
-        self,
-        name: str,
-        max_versions: int = 32,
-        keep_versions: int = 4,
-        min_age_seconds: int = 3600,
-    ) -> list[str]:
-        """Garbage-collection POLICY, completing the maintenance-
-        policy family (:meth:`maybe_optimize`, the text index's
-        ``maybe_purge_text_index``): run :meth:`vacuum` only once the
-        manifest log exceeds ``max_versions`` — every commit
-        (append, delete, optimize, streaming trigger) adds a version,
-        so a long-running table's log and its superseded data dirs
-        grow without bound unless something GCs, while an
-        every-commit vacuum would pay listing cost and shrink the
-        time-travel window needlessly.  Call at the same cadence as
-        ``maybe_optimize`` (e.g. from a streaming bridge).  Returns
-        the deleted dirs ([] = below threshold); ``keep_versions`` /
-        ``min_age_seconds`` pass through with vacuum's usual
-        reader/writer-safety semantics."""
-        if len(self._versions(name)) <= max_versions:
-            return []
-        return self.vacuum(
-            name, keep_versions=keep_versions, min_age_seconds=min_age_seconds
-        )
-
     def maybe_optimize(
         self,
         name: str,
@@ -1986,104 +1959,3 @@ class ManifestCatalog:
                 # manifest_at() succeed while the data dirs are gone
                 self._manifest_cache.pop((name, v), None)
         return deleted
-
-
-class BucketedSCD2:
-    """SCD Type-2 maintenance over a bucketed dimension in a
-    :class:`ManifestCatalog` — apply cost ∝ buckets containing
-    changed keys, with single-manifest atomicity."""
-
-    def __init__(self, catalog: ManifestCatalog, n_buckets: int = 64):
-        self.catalog = catalog
-        self.n_buckets = n_buckets
-
-    def _manifest(self, bucket_dirs: dict, keys: Sequence[str]) -> dict:
-        return {"dirs": None, "bucket_dirs": bucket_dirs,
-                "n_buckets": self.n_buckets, "bucket_keys": list(keys)}
-
-    def apply(
-        self,
-        source: DataFrame,
-        table: str,
-        keys: Sequence[str],
-        tracked: Sequence[str],
-        as_of=None,
-        dedup_order_by=None,
-    ) -> dict:
-        """Returns {"changed_buckets": [...], "version": N} for
-        observability (BENCH asserts apply cost tracks bucket count)."""
-        cat = self.catalog
-        source = prepare_scd_source(source, keys, dedup_order_by)
-
-        manifest = cat.latest_manifest(table)
-        if manifest is None:
-            written = cat._write_buckets(
-                scd2_next_state(None, source, keys, tracked, as_of),
-                table, keys, self.n_buckets,
-            )
-            # CAS on "no table yet": a concurrent first apply that
-            # landed v1 must not be replaced wholesale — on a lost race
-            # this batch applies incrementally on top of it instead
-            version = cat._commit_if(table, self._manifest(written, keys), 0)
-            if version:
-                return {"changed_buckets": sorted(int(b) for b in written),
-                        "version": version}
-            manifest = cat.latest_manifest(table)
-
-        if manifest.get("bucket_fn", "hash_pmod") != "hash_pmod":
-            raise ValueError(
-                f"table {table} uses bucket_fn={manifest['bucket_fn']!r} "
-                "(identity-partitioned store); BucketedSCD2's hash bucketing "
-                "would scramble its layout"
-            )
-        if manifest.get("n_buckets") != self.n_buckets:
-            raise ValueError(
-                f"table {table} committed with n_buckets={manifest.get('n_buckets')}, "
-                f"applier configured with {self.n_buckets}"
-            )
-        # buckets touched by this batch: distinct over small ints (≤ N)
-        changed = sorted(
-            r[0]
-            for r in source.select(
-                bucket_id(keys, self.n_buckets).alias(BUCKET_COL)
-            ).distinct().collect()
-        )
-        if not changed:
-            return {"changed_buckets": [], "version": manifest["version"]}
-
-        have_dirs = cat._dirs(manifest, changed)
-        current_state = (
-            cat.read(table, buckets=changed) if have_dirs else None
-        )  # all-new buckets → first-load semantics for this slice
-        next_state = scd2_next_state(current_state, source, keys, tracked, as_of)
-        written = cat._write_buckets(next_state, table, keys, self.n_buckets)
-        # a bucket emptied (all rows filtered) gets no dirs
-        ours = {str(b): written.get(str(b), []) for b in changed}
-        # CAS + rebase: a concurrent apply touching OTHER buckets is
-        # merged (its bucket dirs survive); one touching the SAME
-        # bucket invalidated the state this rewrite was computed from
-        # — fail loudly rather than silently dropping either write.
-        snapshot = manifest
-        while True:
-            latest = cat.latest_manifest(table)
-            for b in changed:
-                if latest["bucket_dirs"].get(str(b)) != snapshot["bucket_dirs"].get(
-                    str(b)
-                ):
-                    raise RuntimeError(
-                        f"concurrent SCD2 apply modified bucket {b} of {table} "
-                        f"(snapshot v{snapshot['version']}, latest "
-                        f"v{latest['version']}); re-run this apply"
-                    )
-            bucket_dirs = dict(latest["bucket_dirs"]) | ours
-            version = cat._commit_if(
-                table, self._manifest(bucket_dirs, keys), latest["version"]
-            )
-            if version:
-                return {"changed_buckets": changed, "version": version}
-
-    def read_current(self, table: str) -> DataFrame:
-        return self.catalog.read(table).filter(F.col("is_current")).drop(BUCKET_COL)
-
-    def read_all(self, table: str) -> DataFrame:
-        return self.catalog.read(table).drop(BUCKET_COL)

@@ -236,25 +236,24 @@ def foreach_batch_scd2(
     tracked: Sequence[str],
     as_of_col: str,
     checkpoint_dir: str,
-    n_buckets: int = 64,
     available_now: bool = True,
 ):
     """Streaming dimension history: each micro-batch SCD2-merges into
-    a bucketed catalog table (``sinks/manifest.BucketedSCD2`` — only
-    buckets containing changed keys rewrite, the rest re-point), so a
-    slowly-changing dimension stays current AND fully historized
-    under a continuous CDC feed. The effective-from timestamp is the
-    batch's max ``as_of_col`` — derived from batch CONTENT, so an
-    at-least-once replay of the same batch recomputes the same
-    timestamp, finds every tracked column unchanged (hash-diff), and
-    emits zero new legs: replay-convergent without a batch-id guard,
-    like the dedup-store bridge and unlike additive aggregates.
+    a catalog table through ``operators/scd.SCDEngine.apply_scd2``,
+    so a slowly-changing dimension stays current AND fully historized
+    under a continuous CDC feed.
+    The effective-from timestamp is the batch's max ``as_of_col`` —
+    derived from batch CONTENT, so an at-least-once replay of the
+    same batch recomputes the same timestamp, finds every tracked
+    column unchanged (hash-diff), and emits zero new legs:
+    replay-convergent without a batch-id guard, like the dedup-store
+    bridge and unlike additive aggregates.
 
     Returns the started ``StreamingQuery`` (caller awaits)."""
     from end_to_end_etl_pipeline_spark.operators.dedup import dedup_by_key
-    from end_to_end_etl_pipeline_spark.sinks.manifest import BucketedSCD2
+    from end_to_end_etl_pipeline_spark.operators.scd import SCDEngine
 
-    engine = BucketedSCD2(catalog, n_buckets=n_buckets)
+    engine = SCDEngine(catalog)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -271,7 +270,9 @@ def foreach_batch_scd2(
             keys,
             order_by=[F.col(as_of_col).desc(), *[F.col(c) for c in tracked]],
         )
-        engine.apply(latest.drop(as_of_col), table, keys, tracked, as_of=as_of)
+        engine.apply_scd2(
+            latest.drop(as_of_col), table, keys, tracked, as_of=as_of
+        )
 
     writer = (
         stream_df.writeStream.foreachBatch(_apply)

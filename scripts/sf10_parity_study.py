@@ -113,12 +113,10 @@ SAMPLED_QUERIES = ["near_dup_pairs"]
 #:   answer EXACTLY like the in-query ivfpq_topk twin (same codebook
 #:   seed, same routing) — different code path, same math;
 #: * dedup_store_probe: the store's probe decisions (fused-array
-#:   signature pipeline + persisted state + optional bucket-dir
-#:   pruning) must match a FULL independent recompute through the
-#:   explode-route operators (minhash_signatures_cw over
-#:   char_shingles) with the decision rule replicated in plain
-#:   DataFrame ops, plus a bucketed-store twin (band_buckets=16)
-#:   whose decisions must be bit-identical to plain mode.
+#:   signature pipeline + persisted state) must match a FULL
+#:   independent recompute through the explode-route operators
+#:   (minhash_signatures_cw over char_shingles) with the decision
+#:   rule replicated in plain DataFrame ops.
 STORE_QUERIES = ["ivfpq_store_topk", "dedup_store_probe"]
 
 _K, _B, _R = 15, 3, 5  # mirrors queries/textdata.py banding params
@@ -462,7 +460,7 @@ def store_dedup_conformance(spark, sf_dir: str) -> dict:
     """dedup_store_probe at factor 100: bulk-ingest the full corpus
     into the MinHash signature store once (untimed amortization),
     time the marginal probe of a corpus/50 near-dup batch, then
-    verify the probe's decisions THREE ways:
+    verify the probe's decisions two ways:
 
     1. FULL independent recompute: signatures via the explode-route
        operators (char_shingles -> minhash_signatures_cw — a
@@ -471,30 +469,22 @@ def store_dedup_conformance(spark, sf_dir: str) -> dict:
        rule (vs-store min-id/max-est, one-hop within-batch, smallest
        dup_of on union) replicated in plain DataFrame ops. Every
        (doc_id, dup_of, est_jaccard) row must match exactly.
-    2. Bucketed twin: a second store with band_buckets=16 (the
-       touched-bucket dir-pruning read path) over the same corpus
-       must produce bit-identical decisions.
-    3. Invariants: est_jaccard >= threshold, batch ids only in
+    2. Invariants: est_jaccard >= threshold, batch ids only in
        doc_id, store ids only in dup_of."""
     import shutil
 
     from pyspark.sql import functions as F
 
     import bench
-    from end_to_end_etl_pipeline_spark.operators.dedup_store import (
-        MinHashDedupStore,
-    )
     from end_to_end_etl_pipeline_spark.operators.text_dedup import (
         char_shingles,
         lsh_bands,
         minhash_signatures_cw,
     )
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
     t0 = time.perf_counter()
     _cat, probe, tmpdir = bench._build_dedup_store(spark, sf_dir)
     t_build = time.perf_counter() - t0
-    bucketed_dir = tempfile.mkdtemp(prefix="sf10_dedup_bucketed_")
     try:
         t0 = time.perf_counter()
         rej = probe(spark, sf_dir)
@@ -529,28 +519,6 @@ def store_dedup_conformance(spark, sf_dir: str) -> dict:
                 F.expr("substring(text, 8)").alias("text"),
             )
         )
-
-        # (2) bucketed twin — same params, dir-pruned read path
-        t0 = time.perf_counter()
-        cat2 = ManifestCatalog(spark, f"file://{bucketed_dir}/lake")
-        store2 = MinHashDedupStore(
-            cat2, "dedup.sigs", num_hashes=16, bands=4, shingle_len=6,
-            threshold=0.6, band_buckets=16,
-        )
-        store2.ingest(
-            docs.repartition(spark.sparkContext.defaultParallelism),
-            "text",
-        )
-        t_build_bucketed = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        _acc2, rej2 = store2.probe(batch.repartition(8), "text")
-        bucketed_rows = _rows(rej2)
-        t_bucketed_probe = time.perf_counter() - t0
-        if bucketed_rows != probe_rows:
-            problems.append(
-                f"bucketed twin decisions differ ({len(bucketed_rows)}"
-                f" vs {len(probe_rows)} rows)"
-            )
 
         # (1) full independent recompute via the explode route
         t0 = time.perf_counter()
@@ -651,7 +619,6 @@ def store_dedup_conformance(spark, sf_dir: str) -> dict:
             )
     finally:
         shutil.rmtree(tmpdir, ignore_errors=True)
-        shutil.rmtree(bucketed_dir, ignore_errors=True)
     return {
         "ok": not problems,
         "mode": "engine-conformance-full",
@@ -659,8 +626,6 @@ def store_dedup_conformance(spark, sf_dir: str) -> dict:
         "build_sec": round(t_build, 1),
         "probe_cold_sec": round(t_cold, 1),
         "probe_warm_sec": round(t_warm, 1),
-        "bucketed_build_sec": round(t_build_bucketed, 1),
-        "bucketed_probe_sec": round(t_bucketed_probe, 1),
         "recompute_oracle_sec": round(t_recompute, 1),
         "problems": problems,
     }

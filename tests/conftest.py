@@ -15,7 +15,7 @@ SF_CORRECTNESS = f"{TESTDATA}/sf0.01"
 
 #: r13 (VERDICT r12 #1): the full suite outgrew the driver's pytest
 #: budget (r12 shipped tests_ok:false on a timeout at ~60% with zero
-#: failures). The heavy exhaustive sweeps — the 179-query DuckDB
+#: failures). The heavy exhaustive sweeps — the full-registry DuckDB
 #: parity/dtype sweeps beyond the 50-query driver window, the
 #: scaled-lake studies, the manifest fuzz shards — now run only with
 #: SPARK_GRAFT_FULL_SUITE=1 (the in-round pre-commit gate), so the

@@ -260,8 +260,7 @@ def test_text_index_tombstone_delete_and_purge(spark, tmp_path):
 
 def test_dedup_store_delete_unremembers_docs(spark, tmp_path):
     """Deleting a doc's signatures makes the store accept its
-    near-dups again (the un-ingest contract), in both storage modes;
-    bucketed mode leaves untouched band buckets' dirs verbatim."""
+    near-dups again (the un-ingest contract)."""
     from end_to_end_etl_pipeline_spark.operators.dedup_store import (
         MinHashDedupStore,
     )
@@ -274,29 +273,19 @@ def test_dedup_store_delete_unremembers_docs(spark, tmp_path):
     )
     dup = spark.createDataFrame([(10, text)], "doc_id bigint, text string")
 
-    for mode, buckets in (("plain", None), ("bucketed", 8)):
-        cat = ManifestCatalog(spark, f"file://{tmp_path}/{mode}")
-        store = MinHashDedupStore(cat, "sig", band_buckets=buckets)
-        acc, rej = store.ingest(docs, "text")
-        assert acc.count() == 2
-        # exact dup of doc 1 is rejected while remembered
-        acc2, rej2 = store.ingest(dup, "text")
-        assert acc2.count() == 0 and rej2.count() == 1
-        if buckets:
-            m0 = cat.latest_manifest("sig__bands")
-        n = store.delete([1])
-        assert n == 1
-        if buckets:
-            m1 = cat.latest_manifest("sig__bands")
-            changed = [b for b, ds in m0["bucket_dirs"].items()
-                       if m1["bucket_dirs"].get(b) != ds]
-            # doc 1 touches at most `bands` buckets
-            assert 0 < len(changed) <= store.bands
-        # forgotten: the same dup is now accepted
-        acc3, rej3 = store.ingest(dup, "text")
-        assert acc3.count() == 1 and rej3.count() == 0
-        # absent id delete is a no-op
-        assert store.delete([999]) == 0
+    cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
+    store = MinHashDedupStore(cat, "sig")
+    acc, rej = store.ingest(docs, "text")
+    assert acc.count() == 2
+    # exact dup of doc 1 is rejected while remembered
+    acc2, rej2 = store.ingest(dup, "text")
+    assert acc2.count() == 0 and rej2.count() == 1
+    assert store.delete([1]) == 1
+    # forgotten: the same dup is now accepted
+    acc3, rej3 = store.ingest(dup, "text")
+    assert acc3.count() == 1 and rej3.count() == 0
+    # absent id delete is a no-op
+    assert store.delete([999]) == 0
 
 
 def test_maybe_purge_text_index_threshold(spark, tmp_path):

@@ -2,7 +2,6 @@
 store growth, estimator sanity, and CAS-append concurrency safety."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.operators.dedup_store import MinHashDedupStore
 from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
@@ -141,53 +140,11 @@ def test_dedup_store_invariants_fuzzed(spark, tmp_path_factory, b1, b2):
     assert {r.doc_id for r in cat.read("z.sigs").collect()} == seen_store
 
 
-def test_bucketed_band_store_matches_unbucketed_and_prunes(spark, tmp_path):
-    """band_buckets mode: identical accept/reject decisions to the
-    unbucketed store (band-hash bucket pruning is lossless), while a
-    small second batch touches a strict subset of band buckets —
-    the storage-level pruning scale path."""
-    from pyspark.sql import functions as F
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
-
-    b1 = _docs(spark, [(1, BASE + "x"), (2, BASE + "y"), (3, OTHER)])
-    b2 = _docs(spark, [(10, BASE + "z"), (11, OTHER[5:] + "qq" * 20)])
-
-    results = {}
-    for mode, kw in (("plain", {}), ("bucketed", {"band_buckets": 16})):
-        cat = ManifestCatalog(spark, f"file://{tmp_path}/{mode}")
-        store = MinHashDedupStore(cat, "s.sigs", threshold=0.6, **kw)
-        store.ingest(b1, "text")
-        acc, rej = store.ingest(b2, "text")
-        results[mode] = (
-            sorted(r.doc_id for r in acc.collect()),
-            sorted((r.doc_id, r.dup_of, r.est_jaccard) for r in rej.collect()),
-        )
-    assert results["plain"] == results["bucketed"]
-
-    # pruning check: batch 2's band hashes touch < all populated buckets
-    cat = ManifestCatalog(spark, f"file://{tmp_path}/bucketed")
-    m = cat.latest_manifest("s.sigs__bands")
-    populated = {b for b, ds in m["bucket_dirs"].items() if ds}
-    assert len(populated) >= 2  # the layout actually spreads
-    from end_to_end_etl_pipeline_spark.operators.text_dedup import lsh_bands
-
-    store = MinHashDedupStore(cat, "s.sigs", threshold=0.6, band_buckets=16)
-    sig2 = store._signatures(b2, "text")
-    touched = {
-        str(r.b)
-        for r in lsh_bands(sig2, "doc_id", 4, 4)
-        .select(F.pmod(F.hash("band_hash"), F.lit(16)).cast("int").alias("b"))
-        .distinct()
-        .collect()
-    }
-    assert len(touched) <= 8  # 2 docs x 4 bands: bounded probe set
-
-
 def test_probe_matches_ingest_and_leaves_store_unchanged(spark, cat):
     """probe() must return exactly the decisions ingest() would make
     on the same batch, without mutating the store (version, rows) —
     the idempotent read-only shape the bench re-runs."""
-    store = MinHashDedupStore(cat, "dedup.probe", threshold=0.6, band_buckets=8)
+    store = MinHashDedupStore(cat, "dedup.probe", threshold=0.6)
     store.ingest(_docs(spark, [(1, BASE + "x"), (3, OTHER)]), "text")
     v0 = cat.latest_manifest("dedup.probe")["version"]
 

@@ -1,5 +1,5 @@
 """Manifest catalog: versioned commits, crash windows, optimistic
-concurrency, and bucket-pruned SCD2 equivalence."""
+concurrency, and bucketed-store layouts."""
 
 import json
 import os
@@ -7,12 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from end_to_end_etl_pipeline_spark.operators.scd import scd2_next_state
-from end_to_end_etl_pipeline_spark.sinks.manifest import (
-    BucketedSCD2,
-    ManifestCatalog,
-    bucket_id,
-)
+from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
 
 @pytest.fixture
@@ -64,64 +59,6 @@ def test_commit_retries_on_version_collision(spark, cat, tmp_path):
     assert sorted(r.k for r in cat.read("t").collect()) == [3]
 
 
-def _src(spark, rows):
-    return spark.createDataFrame(rows, "k int, attr string")
-
-
-def test_bucketed_scd2_matches_unbucketed(spark, cat):
-    b1 = _src(spark, [(i, f"v{i}") for i in range(20)])
-    b2 = _src(
-        spark,
-        [(5, "changed5"), (7, "changed7"), (25, "new25")],
-    )
-    eng = BucketedSCD2(cat, n_buckets=8)
-    r1 = eng.apply(b1, "dim.k", ["k"], ["attr"], as_of="2026-01-01 00:00:00")
-    r2 = eng.apply(b2, "dim.k", ["k"], ["attr"], as_of="2026-02-01 00:00:00")
-
-    # reference result: pure merges, no storage
-    s1 = scd2_next_state(None, b1, ["k"], ["attr"], "2026-01-01 00:00:00")
-    s2 = scd2_next_state(s1, b2, ["k"], ["attr"], "2026-02-01 00:00:00")
-    expect = sorted(
-        (r.k, r.attr, str(r.effective_from), str(r.effective_to), r.is_current)
-        for r in s2.collect()
-    )
-    got = sorted(
-        (r.k, r.attr, str(r.effective_from), str(r.effective_to), r.is_current)
-        for r in eng.read_all("dim.k").collect()
-    )
-    assert got == expect
-
-    # pruning: second apply touched only the buckets of keys 5, 7, 25
-    touched = {
-        r[0]
-        for r in b2.select(bucket_id(["k"], 8)).distinct().collect()
-    }
-    assert set(r2["changed_buckets"]) == touched
-    assert len(r2["changed_buckets"]) < len(r1["changed_buckets"])
-
-    # unchanged buckets still point at their version-1 data dirs
-    m1_dirs = {}  # bucket -> dirs at v1
-    m2 = cat.latest_manifest("dim.k")
-    v1 = json.loads(
-        cat.fs.read_text(cat._manifest_dir("dim.k") + "/manifest-00000001.json")
-    )
-    for b, dirs in v1["bucket_dirs"].items():
-        if int(b) not in touched:
-            assert m2["bucket_dirs"][b] == dirs
-
-
-def test_bucketed_scd2_invariants(spark, cat):
-    eng = BucketedSCD2(cat, n_buckets=4)
-    eng.apply(_src(spark, [(1, "a"), (2, "b")]), "d", ["k"], ["attr"], "2026-01-01 00:00:00")
-    eng.apply(_src(spark, [(1, "a2"), (3, "c")]), "d", ["k"], ["attr"], "2026-02-01 00:00:00")
-    cur = eng.read_current("d")
-    # exactly one current row per key
-    assert cur.groupBy("k").count().filter("count > 1").count() == 0
-    assert sorted((r.k, r.attr) for r in cur.collect()) == [(1, "a2"), (2, "b"), (3, "c")]
-    hist = eng.read_all("d").filter(~F.col("is_current"))
-    assert [(r.k, r.attr) for r in hist.collect()] == [(1, "a")]
-
-
 def test_append_schema_evolution(spark, cat):
     """K9: a column added in a later append reads as NULL for older
     data dirs (the reference needs ALTER TABLE ADD COLUMN for this,
@@ -162,21 +99,22 @@ def test_optimize_compacts_and_vacuum_collects(spark, cat):
     assert len(data_dirs) == 1
 
 
+def _rows(cat, name):
+    return sorted((r.k, r.v) for r in cat.read(name).collect())
+
+
 def test_optimize_preserves_buckets(spark, cat):
-    eng = BucketedSCD2(cat, n_buckets=4)
-    eng.apply(_src(spark, [(i, f"v{i}") for i in range(12)]), "d", ["k"], ["attr"],
-              "2026-01-01 00:00:00")
-    eng.apply(_src(spark, [(1, "x")]), "d", ["k"], ["attr"], "2026-02-01 00:00:00")
-    before = sorted((r.k, r.attr, r.is_current) for r in eng.read_all("d").collect())
+    cat.append_bucketed(_df(spark, [(i, f"v{i}") for i in range(12)]), "d", 4, ["k"])
+    cat.append_bucketed(_df(spark, [(1, "x")]), "d", 4, ["k"])
+    before = _rows(cat, "d")
     cat.optimize("d")
-    after = sorted((r.k, r.attr, r.is_current) for r in eng.read_all("d").collect())
-    assert after == before
+    assert _rows(cat, "d") == before
     m = cat.latest_manifest("d")
     assert m["n_buckets"] == 4
     # every bucket now points at exactly one (compacted) dir
     assert all(len(ds) == 1 for ds in m["bucket_dirs"].values())
     cat.vacuum("d", keep_versions=1, min_age_seconds=0)
-    assert sorted((r.k, r.attr, r.is_current) for r in eng.read_all("d").collect()) == before
+    assert _rows(cat, "d") == before
 
 
 def test_vacuum_safe_on_schemeless_root_and_young_dirs(spark, tmp_path):
@@ -403,11 +341,7 @@ def test_zorder_rewrite_prunes_both_dimensions(spark, cat):
     )
     assert got == sorted((x, y) for x in range(32) for y in range(4))
     # bucketed tables refuse zorder
-    cat2 = BucketedSCD2(cat, n_buckets=4)
-    cat2.apply(
-        spark.createDataFrame([(1, "a")], "k int, v string"),
-        "z.bkt", keys=["k"], tracked=["v"], as_of="2024-01-01",
-    )
+    cat.append_bucketed(_df(spark, [(1, "a")]), "z.bkt", 4, ["k"])
     with pytest.raises(ValueError, match="bucketed"):
         cat.optimize_zorder("z.bkt", ["k"])
 
@@ -444,17 +378,14 @@ def test_append_rebases_on_concurrent_commit(spark, cat, tmp_path):
 
 
 def test_replace_atomic_refuses_bucketed(spark, cat):
-    eng = BucketedSCD2(cat, n_buckets=4)
-    eng.apply(_src(spark, [(1, "a")]), "d2", ["k"], ["attr"], "2026-01-01 00:00:00")
+    cat.append_bucketed(_df(spark, [(1, "a")]), "d2", 4, ["k"])
     with pytest.raises(ValueError, match="bucketed"):
         cat.replace_atomic(_df(spark, [(9, "z")]), "d2")
-    cat.replace_atomic(_df(spark, [(9, "z")]), "d2", allow_unbucket=True)
-    assert sorted(r.k for r in cat.read("d2").collect()) == [9]
+    assert _rows(cat, "d2") == [(1, "a")]
 
 
 def test_read_empty_bucket_selection_is_empty_frame(spark, cat):
-    eng = BucketedSCD2(cat, n_buckets=4)
-    eng.apply(_src(spark, [(1, "a")]), "d3", ["k"], ["attr"], "2026-01-01 00:00:00")
+    cat.append_bucketed(_df(spark, [(1, "a")]), "d3", 4, ["k"])
     used = {
         int(b) for b, ds in cat.latest_manifest("d3")["bucket_dirs"].items() if ds
     }
@@ -514,15 +445,14 @@ def test_read_all_empty_bucketed_manifest(spark, cat):
     """A bucketed manifest whose buckets are ALL empty reads as an
     empty frame with the table's schema (from the newest version with
     data), never FileNotFoundError."""
-    eng = BucketedSCD2(cat, n_buckets=4)
-    eng.apply(_src(spark, [(1, "a"), (2, "b")]), "d", ["k"], ["attr"])
+    cat.append_bucketed(_df(spark, [(1, "a"), (2, "b")]), "d", 4, ["k"])
     m = cat.latest_manifest("d")
     empty = m | {"bucket_dirs": {b: [] for b in m["bucket_dirs"]}}
     cat._commit("d", {k: v for k, v in empty.items() if k != "version"})
 
     out = cat.read("d")
     assert out.count() == 0
-    assert "k" in out.columns and "attr" in out.columns
+    assert "k" in out.columns and "v" in out.columns
     # single-empty-bucket selection still returns the empty frame too
     assert cat.read("d", buckets=[0]).count() == 0
 
@@ -1113,34 +1043,6 @@ def test_shallow_clone_zero_copy_and_divergence(spark, tmp_path):
     assert sorted(r.k for r in cat.read("snap_v1").collect()) == [1, 2]
 
 
-def test_maybe_vacuum_version_pressure_policy(spark, tmp_path):
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
-
-    cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
-    for i in range(6):
-        cat.append(_df(spark, [(i, f"v{i}")]), "t")
-    # below threshold: nothing happens, full log retained
-    assert cat.maybe_vacuum("t", max_versions=10, min_age_seconds=0) == []
-    assert len(cat._versions("t")) == 6
-    # over threshold: GC runs with the given retention
-    deleted = cat.maybe_vacuum(
-        "t", max_versions=5, keep_versions=2, min_age_seconds=0
-    )
-    assert deleted == []  # appends share no superseded dirs...
-    assert len(cat._versions("t")) == 2  # ...but the log is trimmed
-    # data intact
-    assert cat.read("t").count() == 6
-    # compaction then delete leaves superseded dirs for the GC
-    cat.optimize("t", target_partitions=1)
-    for i in range(6, 10):
-        cat.append(_df(spark, [(i, f"v{i}")]), "t")
-    deleted = cat.maybe_vacuum(
-        "t", max_versions=3, keep_versions=1, min_age_seconds=0
-    )
-    assert deleted  # pre-compaction dirs reclaimed
-    assert cat.read("t").count() == 10
-
-
 def test_latest_manifest_hint_is_advisory(spark, cat):
     """The _latest hint is O(1)-read sugar, never truth: a STALE hint
     (lost overwrite race / external writer) forward-scans to the real
@@ -1475,18 +1377,11 @@ def test_schema_kept_only_by_same_row_rewrites(spark, tmp_path, run_counted):
                        partition_by=["v"])
     assert not has("part")
 
-    scd = BucketedSCD2(cat, n_buckets=4)
-    scd.apply(_src(spark, [(1, "a"), (2, "b")]), "dim", ["k"], ["attr"],
-              "2026-01-01 00:00:00")
-    scd.apply(_src(spark, [(1, "a2"), (3, "c")]), "dim", ["k"], ["attr"],
-              "2026-02-01 00:00:00")
-    assert not has("dim")
-    cat.optimize("dim")
-    assert not has("dim")
-
-    # a bucketed store's extras survive every derived commit
+    # a bucketed store records no schema, and its extras survive
+    # every derived commit
     bdf = spark.createDataFrame(rows, "k bigint, v string")
     cat.append_bucketed(bdf, "bk", 4, ["k"], extras_update={"marker": 7})
+    assert not has("bk")
     for rewrite in (
         lambda: cat.append_bucketed(bdf, "bk", 4, ["k"]),
         lambda: cat.delete_bucketed_where("bk", "k", [1]),
@@ -1495,38 +1390,6 @@ def test_schema_kept_only_by_same_row_rewrites(spark, tmp_path, run_counted):
         rewrite()
         assert cat.latest_manifest("bk")["marker"] == 7
         assert not has("bk")
-
-
-def test_bucketed_scd2_first_load_keeps_concurrent_first_load(spark, cat):
-    """Two first applies race on a table with no manifest yet: the one
-    that loses the v1 slot must apply on top of the winner, not
-    replace it wholesale (a last-writer-wins publish silently dropped
-    every bucket the winner wrote)."""
-    other = ManifestCatalog(spark, cat.root)
-    orig = cat._new_data_dir
-    fired = {"done": False}
-
-    def racy(name):
-        if not fired["done"]:
-            fired["done"] = True
-            # the concurrent first apply lands v1 after this apply saw
-            # no table and before it publishes
-            BucketedSCD2(other, n_buckets=4).apply(
-                _src(spark, [(10, "x"), (11, "y")]), "dim", ["k"], ["attr"],
-                "2026-01-01 00:00:00",
-            )
-        return orig(name)
-
-    cat._new_data_dir = racy
-    eng = BucketedSCD2(cat, n_buckets=4)
-    try:
-        r = eng.apply(_src(spark, [(1, "a"), (2, "b")]), "dim", ["k"],
-                      ["attr"], "2026-01-01 00:00:00")
-    finally:
-        del cat._new_data_dir
-    assert r["version"] == 2
-    got = sorted((row.k, row.attr) for row in eng.read_current("dim").collect())
-    assert got == [(1, "a"), (2, "b"), (10, "x"), (11, "y")]
 
 
 @pytest.mark.parametrize("op", ["delete_where", "update_where", "delete_range"])

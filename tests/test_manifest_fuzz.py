@@ -563,7 +563,7 @@ def test_maintenance_race_fuzz(spark, tmp_path_factory, shard):
         )
         maint_ops = [
             rng.choice(["optimize", "optimize_meta", "maybe_optimize",
-                        "vacuum", "maybe_vacuum"])
+                        "vacuum"])
             for _ in range(rng.randint(3, 5))
         ]
         errors: list = []
@@ -598,12 +598,8 @@ def test_maintenance_race_fuzz(spark, tmp_path_factory, shard):
                         )
                     elif op == "maybe_optimize":
                         cats[1].maybe_optimize(tbl, max_dirs=1)
-                    elif op == "vacuum":
-                        cats[1].vacuum(tbl, keep_versions=2)
                     else:
-                        cats[1].maybe_vacuum(
-                            tbl, max_versions=2, keep_versions=2
-                        )
+                        cats[1].vacuum(tbl, keep_versions=2)
             except Exception as e:
                 errors.append(("maint", e))
 

@@ -54,11 +54,11 @@ def test_prepare_scd_source_guards(spark):
     src = spark.createDataFrame(
         [(1, "a"), (1, "b"), (None, "c")], "k int, v string"
     )
-    # duplicate keys fail fast by default
+    # duplicate keys fail fast
     with pytest.raises(ValueError, match="duplicate business keys"):
         prepare_scd_source(src, ["k"])
-    # a deterministic keep-policy resolves them; null keys always drop
-    out = prepare_scd_source(src, ["k"], dedup_order_by=[F.col("v").asc()])
+    # null keys always drop
+    out = prepare_scd_source(src.filter(F.col("v") != "b"), ["k"])
     assert [(r.k, r.v) for r in out.collect()] == [(1, "a")]
 
 

@@ -236,8 +236,7 @@ def test_driver_window_contract():
         },
         "semantic-dedup": {"semantic_pruned_corpus",
                            "semantic_split_contamination"},
-        "incremental-dedup": {"incremental_dedup_ingest",
-                              "incremental_dedup_ingest_bucketed"},
+        "incremental-dedup": {"incremental_dedup_ingest"},
         "ann": {
             "cosine_topk", "ivfpq_topk", "pq_topk", "cosine_topk_ivf",
             "ann_recall_trained_cells", "ann_recall_at_k",

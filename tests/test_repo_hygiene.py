@@ -90,8 +90,8 @@ ENTRY_POINTS = [
     "scripts",
     "perfbench",
 ]
-#: package defs that no entry point reaches, each with why it stays.
-#: This may only shrink: give a def a caller reachable from an entry
+#: package defs that no entry point reaches, each with why it stays
+#: (a kept def keeps the code only it calls). This may only shrink: give a def a caller reachable from an entry
 #: point, or delete it (git keeps it); never add a name here.
 KEPT = {
     "png_rgb8_blob": "reference encoder that encode_png_rgb8's tests "
@@ -145,22 +145,50 @@ def _is_register(dec) -> bool:
     return getattr(target, "id", getattr(target, "attr", None)) == "register"
 
 
-def _unreachable_defs() -> set[str]:
+def _is_method(node) -> bool:
+    return isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and not (
+        node.name.startswith("__") and node.name.endswith("__")
+    )
+
+
+def _class_names(cls: ast.ClassDef) -> set[str]:
+    """The names a class mentions outside its non-dunder methods: its
+    decorators, bases, class-level statements and dunder methods."""
+    out = set()
+    for part in (*cls.decorator_list, *cls.bases, *cls.keywords):
+        out |= _names(part)
+    for stmt in cls.body:
+        if not _is_method(stmt):
+            out |= _names(stmt)
+    return out
+
+
+def _unreachable_defs(extra_roots=()) -> set[str]:
     """Top-level package defs and classes, public or private, that no
-    entry point reaches. Roots: ``@register``-ed queries (the registry
-    calls them), module-level package code other than imports (so an
-    ``__init__`` re-export keeps nothing alive), and every name in an
-    ``ENTRY_POINTS`` file. A reached def reaches every name its body
-    mentions. Names are matched by spelling, so two defs that share
-    a name live or die together."""
+    entry point reaches, and the methods (``Class.method``) of reached
+    classes that nothing reached calls. Roots: ``@register``-ed queries
+    (the registry calls them), module-level package code other than
+    imports (so an ``__init__`` re-export keeps nothing alive), and
+    every name in an ``ENTRY_POINTS`` file. A reached def reaches every
+    name its body mentions. A reached class reaches what its body
+    mentions outside its methods and in its dunder methods; any other
+    method is reached once reached code mentions its name. Names are
+    matched by spelling, so two defs that share a name live or die
+    together. ``extra_roots`` are reached too (a ``KEPT`` def keeps
+    the code only it calls)."""
     defs: dict[str, list[ast.AST]] = {}
-    roots: set[str] = set()
+    #: method name -> (class name, method node)
+    methods: dict[str, list[tuple[str, ast.AST]]] = {}
+    roots: set[str] = set(extra_roots)
     for path in _py_files(PACKAGE):
         for node in _parse(path).body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 defs.setdefault(node.name, []).append(node)
                 if any(_is_register(d) for d in node.decorator_list):
                     roots.add(node.name)
+                if isinstance(node, ast.ClassDef):
+                    for m in filter(_is_method, node.body):
+                        methods.setdefault(m.name, []).append((node.name, m))
             elif not isinstance(node, (ast.Import, ast.ImportFrom)):
                 roots |= _names(node)
     for rel in ENTRY_POINTS:
@@ -174,13 +202,29 @@ def _unreachable_defs() -> set[str]:
             continue
         reached.add(name)
         for node in defs.get(name, ()):
-            todo.extend(_names(node) - reached)
-    return set(defs) - reached
+            if isinstance(node, ast.ClassDef):
+                todo.extend(_class_names(node))
+                todo.extend(
+                    n for m in filter(_is_method, node.body)
+                    if m.name in reached for n in _names(m)
+                )
+            else:
+                todo.extend(_names(node))
+        for cls, m in methods.get(name, ()):
+            if cls in reached:
+                todo.extend(_names(m))
+    dead_methods = {
+        f"{cls}.{name}"
+        for name, ms in methods.items()
+        for cls, _m in ms
+        if cls in reached and name not in reached
+    }
+    return (set(defs) - reached) | dead_methods
 
 
 def test_no_new_test_only_code():
     unreachable = _unreachable_defs()
-    new = sorted(unreachable - set(KEPT))
+    new = sorted(_unreachable_defs(extra_roots=KEPT))
     assert not new, (
         "package defs no entry point reaches (give each a caller from "
         "a query, the CLI, bench.py, a script or perfbench/, or delete "

@@ -34,7 +34,7 @@ def test_salted_join_matches_plain_join(spark):
 
 def test_ivf_store_survives_optimize_and_refuses_hash_appliers(spark, tmp_path):
     from end_to_end_etl_pipeline_spark.operators.ivf_store import write_ivfpq_store
-    from end_to_end_etl_pipeline_spark.sinks.manifest import BucketedSCD2, ManifestCatalog
+    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
     cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -54,14 +54,14 @@ def test_ivf_store_survives_optimize_and_refuses_hash_appliers(spark, tmp_path):
     assert cat.latest_manifest("ann.e")["bucket_fn"] == "identity"
     assert cells() == before
 
-    # hash-bucketed SCD2 would scramble the identity layout: refuse
-    n_cells = cat.latest_manifest("ann.e")["n_buckets"]
-    eng = BucketedSCD2(cat, n_buckets=n_cells)
+    # a hash-bucketed append would scramble the identity layout: refuse
+    m = cat.latest_manifest("ann.e")
     with pytest.raises(ValueError, match="identity"):
-        eng.apply(
-            spark.createDataFrame([(1, "x")], "cell int, v string"),
-            "ann.e", ["cell"], ["v"], "2026-01-01 00:00:00",
+        cat.append_bucketed(
+            cat.read("ann.e").limit(1), "ann.e", m["n_buckets"],
+            m["bucket_keys"], bucket_fn="hash_pmod",
         )
+    assert cells() == before
 
 
 def test_aqe_splits_skewed_join_partitions(spark):

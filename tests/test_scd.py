@@ -8,6 +8,8 @@ an explicit, documented choice:
 * null-sentinel hash distinguishes ("a", NULL) from (NULL, "a")
 * SCD1 full-row merge keeps untracked columns
 * SCD3 previous-value carry
+* a concurrent commit between an apply's read and its publish is
+  recomputed over, never lost (compare-and-swap publish)
 """
 
 from __future__ import annotations
@@ -143,6 +145,98 @@ def test_scd3_previous_value_carry(spark, catalog):
     row = catalog.read("silver.s3").collect()[0]
     assert row["status"] == "dormant"
     assert row["previous_status"] == "active"
+
+
+def _apply(eng, scd_type, src, table, as_of):
+    if scd_type == 1:
+        eng.apply_scd1(src, table, KEYS)
+    elif scd_type == 2:
+        eng.apply_scd2(src, table, KEYS, TRACKED, as_of=as_of)
+    else:
+        eng.apply_scd3(src, table, KEYS, TRACKED)
+
+
+def _state(catalog, table):
+    return sorted(map(tuple, catalog.read(table).collect()))
+
+
+@pytest.mark.parametrize("scd_type", [1, 2, 3])
+def test_scd_apply_rebases_on_concurrent_commit(spark, catalog, tmp_path, scd_type):
+    """A second apply committing between an apply's read and its
+    publish must survive: the publish's compare-and-swap fails, and the
+    apply recomputes over the new latest version. (A last-writer-wins
+    publish put the first apply's state, computed from v1, on top of
+    v2, and the second writer's key vanished without an error.)"""
+    first = [("C1", "Acme", "active", 100), ("C2", "Beta", "live", 5)]
+    ours = [("C1", "Acme", "active", 150)]
+    theirs = [("C3", "Gamma", "live", 7)]
+    t1, t2, t3 = "2024-01-01 00:00:00", "2024-02-01 00:00:00", "2024-03-01 00:00:00"
+    _apply(SCDEngine(catalog), scd_type, _batch(spark, first), "silver.dim", t1)
+
+    other = SCDEngine(ManifestCatalog(spark, catalog.root))
+    fired = []
+
+    def racy(publish):
+        def wrapped(*args):
+            if not fired:
+                fired.append(True)
+                _apply(other, scd_type, _batch(spark, theirs), "silver.dim", t2)
+            return publish(*args)
+
+        return wrapped
+
+    # wrap both publish primitives on the instance: whichever one
+    # replace_atomic calls, the other writer lands first
+    catalog._commit = racy(catalog._commit)
+    catalog._commit_if = racy(catalog._commit_if)
+    try:
+        _apply(SCDEngine(catalog), scd_type, _batch(spark, ours), "silver.dim", t3)
+    finally:
+        del catalog._commit, catalog._commit_if
+    assert fired
+
+    serial = ManifestCatalog(spark, f"file://{tmp_path}/serial")
+    for rows, as_of in ((first, t1), (theirs, t2), (ours, t3)):
+        _apply(SCDEngine(serial), scd_type, _batch(spark, rows), "silver.dim", as_of)
+    got = _state(catalog, "silver.dim")
+    assert {r[0] for r in got} == {"C1", "C2", "C3"}
+    assert got == _state(serial, "silver.dim")
+    assert catalog.latest_manifest("silver.dim")["version"] == 3
+
+
+@pytest.mark.parametrize("scd_type", [1, 2, 3])
+def test_scd_first_load_keeps_concurrent_first_load(spark, catalog, scd_type):
+    """Two first loads race on a table with no manifest yet: the one
+    that loses the v1 slot must apply on top of the winner, not
+    replace it wholesale."""
+    as_of = "2024-01-01 00:00:00"
+    other = SCDEngine(ManifestCatalog(spark, catalog.root))
+    orig = catalog._new_data_dir
+    fired = []
+
+    def racy(name):
+        if not fired:
+            fired.append(True)
+            # the concurrent first load lands v1 after this apply saw
+            # no table and before it publishes
+            _apply(other, scd_type, _batch(spark, [("C10", "X", "live", 1),
+                                                   ("C11", "Y", "live", 2)]),
+                   "silver.dim", as_of)
+        return orig(name)
+
+    catalog._new_data_dir = racy
+    try:
+        _apply(SCDEngine(catalog), scd_type,
+               _batch(spark, [("C1", "Acme", "active", 100),
+                              ("C2", "Beta", "live", 5)]),
+               "silver.dim", as_of)
+    finally:
+        del catalog._new_data_dir
+    assert catalog.latest_manifest("silver.dim")["version"] == 2
+    cur = current_snapshot(catalog.read("silver.dim"))
+    assert sorted(r["company_number"] for r in cur.collect()) == [
+        "C1", "C10", "C11", "C2"
+    ]
 
 
 def test_current_snapshot_guarded(spark):

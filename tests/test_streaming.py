@@ -283,7 +283,7 @@ def test_agg_maintenance_skips_replayed_batch(spark, tmp_path):
 
 def test_foreach_batch_scd2_history_and_replay_convergence(spark, tmp_path):
     """Two micro-batches where a tracked attribute changes: the
-    bucketed dimension must hold both history legs with correct
+    dimension must hold both history legs with correct
     validity stamps, and re-applying the second batch (at-least-once
     replay) must leave the state byte-identical (zero new legs)."""
     from end_to_end_etl_pipeline_spark.streaming.jobs import foreach_batch_scd2
@@ -307,7 +307,7 @@ def test_foreach_batch_scd2_history_and_replay_convergence(spark, tmp_path):
     q = foreach_batch_scd2(
         stream, catalog, "dim.cust", ["cust_id"], ["tier"],
         as_of_col="changed_at",
-        checkpoint_dir=str(tmp_path / "ck_scd2"), n_buckets=4,
+        checkpoint_dir=str(tmp_path / "ck_scd2"),
     )
     q.awaitTermination(120)
 
@@ -325,11 +325,11 @@ def test_foreach_batch_scd2_history_and_replay_convergence(spark, tmp_path):
     before = sorted(map(tuple, catalog.read("dim.cust").collect()))
     b2 = spark.read.schema(schema).json(os.path.join(d, "b2.json"))
     from end_to_end_etl_pipeline_spark.operators.dedup import dedup_by_key
-    from end_to_end_etl_pipeline_spark.sinks.manifest import BucketedSCD2
+    from end_to_end_etl_pipeline_spark.operators.scd import SCDEngine
     latest = dedup_by_key(
         b2, ["cust_id"], order_by=[F.col("changed_at").desc(), "cust_id"]
     )
-    BucketedSCD2(catalog, n_buckets=4).apply(
+    SCDEngine(catalog).apply_scd2(
         latest.drop("changed_at"), "dim.cust", ["cust_id"], ["tier"],
         as_of=b2.agg(F.max("changed_at")).first()[0],
     )
@@ -364,7 +364,7 @@ def test_foreach_batch_scd2_equal_timestamp_tie_is_content_deterministic(
         q = foreach_batch_scd2(
             stream, catalog, "dim.cust", ["cust_id"], ["tier"],
             as_of_col="changed_at",
-            checkpoint_dir=str(tmp_path / f"ck_{tag}"), n_buckets=4,
+            checkpoint_dir=str(tmp_path / f"ck_{tag}"),
         )
         q.awaitTermination(120)
         got = catalog.read("dim.cust").collect()
