@@ -216,10 +216,10 @@ class ManifestCatalog:
     Carry-forward rule (:meth:`_carried`): a commit derived from the
     previous version re-derives the dir layout (``dirs`` /
     ``bucket_dirs``) and the per-dir metadata keyed by it (``stats``,
-    ``blooms``, ``sealed``, ``segments``), and keeps every other key
-    verbatim — bucket contract, ``cloned_from``, store extras
-    (``cell_counts``, ``ti_*``, replay markers, ...). ``schema``
-    survives only a rewrite that cannot retype a column.
+    ``blooms``), and keeps every other key verbatim — bucket contract,
+    ``cloned_from``, store extras (``cell_counts``, ``ti_*``, replay
+    markers, ...). ``schema`` survives only a rewrite that cannot
+    retype a column.
     ``replace_atomic`` and ``optimize_zorder`` write their manifest
     whole; ``shallow_clone`` copies its source's.
 
@@ -261,9 +261,6 @@ class ManifestCatalog:
         # returned dict is shared — treat it as read-only; commit
         # paths copy the maps they modify (they all do).
         self._manifest_cache: dict[tuple[str, int], dict] = {}
-        # segment path -> loaded Segment (immutable files; see
-        # sinks/segments.py)
-        self._segment_cache: dict[str, object] = {}
 
     # -- layout ---------------------------------------------------------
     def table_dir(self, name: str) -> str:
@@ -386,8 +383,7 @@ class ManifestCatalog:
         return manifest
 
     #: keys every derived commit re-derives (see the class docstring)
-    _REDERIVED = ("version", "dirs", "bucket_dirs", "stats", "blooms",
-                  "sealed", "segments")
+    _REDERIVED = ("version", "dirs", "bucket_dirs", "stats", "blooms")
 
     @classmethod
     def _carried(cls, manifest: dict, keep_schema: bool) -> dict:
@@ -504,15 +500,9 @@ class ManifestCatalog:
     #: per-dir bloom parameters — fixed so every dir's bitmap and the
     #: probe compute identical positions (same md5 derivation as
     #: operators/sketches, replayed driver-side for probing)
-    BLOOM_BITS = 4096  # floor (and the legacy fixed size)
+    BLOOM_BITS = 4096  # floor
     BLOOM_MAX_BITS = 1 << 21  # 2M bits = 256 KiB/dir/col ceiling
     BLOOM_HASHES = 3
-    # dirs per manifest segment checkpoint (sinks/segments.py). Once
-    # a table accumulates this many unsealed metadata-bearing dirs,
-    # append seals them into one immutable columnar file: planning
-    # cost drops from O(dirs) file opens + dict walks to O(dirs/1024)
-    # reads + numpy gathers (measured 240→100k-dir curve in SCALE.md)
-    SEGMENT_SIZE = 1024
     #: bitmaps whose total words (across the dir's bloom columns)
     #: reach this move to a per-dir SIDECAR file; smaller ones stay
     #: inline in the manifest JSON. The r07 metadata study: inline
@@ -543,7 +533,6 @@ class ManifestCatalog:
         with the bitmap ({col: {"num_bits": m, "words": {word:
         bits}}}) because probe positions are modulo m — a probe
         against the wrong modulus would be a silent false negative.
-        Legacy bitmaps ({col: {word: bits}}) read as BLOOM_BITS.
 
         Sizing key count = the dir's ROW count (r07): count(*) on
         just-written parquet answers from footer metadata — no data
@@ -596,204 +585,57 @@ class ManifestCatalog:
             }
         return out
 
-    @staticmethod
-    def _bloom_parse(bm) -> tuple[int, dict] | None:
-        """(num_bits, words) from either INLINE bitmap format: sized
-        (r06, {"num_bits": m, "words": {...}}) or legacy fixed-size
-        ({word: bits} under BLOOM_BITS). Sidecar markers resolve via
-        :meth:`_bloom_resolve` (needs the dir path)."""
-        if bm is None:
-            return None
-        if "words" in bm and isinstance(bm.get("words"), dict):
-            return int(bm["num_bits"]), bm["words"]
-        return ManifestCatalog.BLOOM_BITS, bm
-
     def _bloom_resolve(self, data_dir: str, col: str, bm) -> tuple[int, dict] | None:
-        """(num_bits, words) for one dir/column, resolving a sidecar
-        marker through the per-dir cache. An unreadable or incomplete
-        sidecar returns None — the caller keeps the dir (pruning is
+        """(num_bits, words) for one dir/column: the inline sized
+        bitmap ({"num_bits": m, "words": {...}}), or a sidecar marker
+        resolved through the per-dir cache. Anything else — no bloom,
+        an unreadable or incomplete sidecar, a bitmap not in the sized
+        form — returns None and the caller keeps the dir (pruning is
         an IO optimization; a guess would risk a false negative)."""
-        if bm is None:
+        if not isinstance(bm, dict) or "num_bits" not in bm:
             return None
-        if isinstance(bm, dict) and bm.get("sidecar"):
+        words = bm.get("words")
+        if bm.get("sidecar"):
             side = self._bloom_sidecars.get(data_dir)
             if side is None:
                 self._load_sidecars([data_dir])
                 side = self._bloom_sidecars[data_dir]
-            entry = side.get(col)
-            if not entry or not isinstance(entry.get("words"), dict):
-                return None
-            return int(bm["num_bits"]), entry["words"]
-        return self._bloom_parse(bm)
-
-    # -- manifest segments (sinks/segments.py) ---------------------------
-    def _segment(self, manifest: dict, seg_id: str):
-        """Loaded (cached) Segment for one sealed-map id. Segment
-        files are immutable, so cache entries never go stale."""
-        path = (manifest.get("segments") or {})[seg_id]
-        seg = self._segment_cache.get(path)
-        if seg is None:
-            from end_to_end_etl_pipeline_spark.sinks.segments import load_segment
-
-            seg = load_segment(self, path)
-            self._cache_segment(path, seg)
-        return seg
-
-    #: max cached segments (~8 MB numpy each at 1024 dirs x 32k-bit
-    #: blooms): 512 ≈ 4 GB ceiling — covers a 500k-dir working set
-    #: before FIFO eviction, vs unbounded growth across many tables
-    SEGMENT_CACHE_MAX = 512
-
-    def _cache_segment(self, path: str, seg) -> None:
-        if len(self._segment_cache) >= self.SEGMENT_CACHE_MAX:
-            self._segment_cache.pop(next(iter(self._segment_cache)))
-        self._segment_cache[path] = seg
-
-    def _prefetch_segments(self, manifest: dict, seg_ids) -> None:
-        """Bulk-load missing segments concurrently (pyarrow releases
-        the GIL on file IO; an object store serves parallel GETs) —
-        a 100k-dir table has ~100 segments and loading them serially
-        would put a multi-second cold stall on the first plan."""
-        paths = {
-            (manifest.get("segments") or {}).get(s)
-            for s in seg_ids
-        } - {None}
-        missing = [p for p in paths if p not in self._segment_cache]
-        if len(missing) <= 1:
-            return  # single load: no pool overhead
-        from concurrent.futures import ThreadPoolExecutor
-
-        from end_to_end_etl_pipeline_spark.sinks.segments import load_segment
-
-        def one(p):
-            try:
-                return p, load_segment(self, p)
-            except Exception:
-                return p, None  # resolver keeps the dirs conservatively
-
-        with ThreadPoolExecutor(max_workers=8) as ex:
-            for p, seg in ex.map(one, missing):
-                if seg is not None:
-                    self._cache_segment(p, seg)
-
-    def _stats_for(self, manifest: dict, d: str) -> dict:
-        """Per-dir {col: [lo, hi]} stats, tail-or-segment resolved."""
-        s = (manifest.get("stats") or {}).get(d)
-        if s is not None:
-            return s
-        seg_id = (manifest.get("sealed") or {}).get(d)
-        if seg_id is None:
-            return {}
-        try:
-            return self._segment(manifest, seg_id).stats_of(d)
-        except Exception:
-            return {}  # unreadable segment: planning keeps the dir
-
-    def _bloom_cols_for(self, manifest: dict, d: str) -> list[str]:
-        """Column names with a bloom for one dir, tail-or-segment."""
-        bm = (manifest.get("blooms") or {}).get(d)
-        if bm is not None:
-            return sorted(bm)
-        seg_id = (manifest.get("sealed") or {}).get(d)
-        if seg_id is None:
-            return []
-        try:
-            return sorted(self._segment(manifest, seg_id).bloom_cols_of(d))
-        except Exception:
-            return []
-
-    def _maybe_seal(
-        self, name: str, dirs, stats: dict, blooms: dict,
-        sealed: dict, segments: dict,
-    ) -> None:
-        """Seal the oldest SEGMENT_SIZE unsealed metadata-bearing dirs
-        into one segment file, moving their stats/bloom entries out of
-        the manifest JSON (mutates the four maps in place; called
-        inside append's CAS loop — a lost race re-derives, and the
-        orphaned segment file is vacuum-collected). The segment is
-        written BEFORE the manifest references it."""
-        from end_to_end_etl_pipeline_spark.sinks.segments import write_segment
-
-        while True:
-            candidates = [
-                d for d in dirs
-                if (d in stats or d in blooms) and d not in sealed
-            ]
-            if len(candidates) < self.SEGMENT_SIZE:
-                return
-            pick = candidates[: self.SEGMENT_SIZE]
-            # bulk-load the picks' sidecars first: _bloom_resolve
-            # would otherwise read them one file at a time (1024
-            # serial round trips on an object store)
-            self._load_sidecars(
-                [
-                    d for d in pick
-                    if any(
-                        isinstance(bm, dict) and bm.get("sidecar")
-                        for bm in (blooms.get(d) or {}).values()
-                    )
-                ]
-            )
-            rows = []
-            for d in pick:
-                rb = {}
-                for col, bm in (blooms.get(d) or {}).items():
-                    parsed = self._bloom_resolve(d, col, bm)
-                    if parsed is not None:  # unreadable sidecar →
-                        rb[col] = parsed    # seal stats-only (conservative)
-                rows.append((d, stats.get(d) or {}, rb))
-            seg_id, path = write_segment(self, name, rows)
-            segments[seg_id] = path
-            for d in pick:
-                stats.pop(d, None)
-                blooms.pop(d, None)
-                sealed[d] = seg_id
-
-    @staticmethod
-    def _prune_segments(sealed: dict, segments: dict) -> None:
-        """Drop segment registry entries no sealed dir references
-        (after rewrites removed their last dirs) — in place."""
-        live = set(sealed.values())
-        for sid in [s for s in segments if s not in live]:
-            del segments[sid]
+            words = (side.get(col) or {}).get("words")
+        if not isinstance(words, dict):
+            return None
+        return int(bm["num_bits"]), words
 
     def _load_sidecars(self, dirs: Sequence[str]) -> None:
         """Bulk-load bloom sidecars into the per-dir cache. A probe
         over a big table may need hundreds of sidecars cold; one
         py4j/object-store round trip EACH would put an O(dirs) stall
         back on the driver — exactly what the sidecar split removed
-        from commits. ``file:`` dirs read directly (local IO,
-        ~0.1 ms); anything else fetches every missing file in ONE
-        ``spark.read.text(wholetext)`` job (an object store serves
-        the GETs in parallel). Unreadable sidecars cache as {} — the
-        probe keeps those dirs."""
+        from commits. Sidecars on the catalog's local filesystem
+        (:meth:`HadoopFS._local`, whatever the dir's spelling) read
+        directly (~0.1 ms); anything else fetches every missing file
+        in ONE ``spark.read.text(wholetext)`` job (an object store
+        serves the GETs in parallel). Unreadable sidecars cache as
+        {} — the probe keeps those dirs."""
         missing = [d for d in dict.fromkeys(dirs) if d not in self._bloom_sidecars]
         if not missing:
             return
+        paths = {d: f"{d}/_sidecar/blooms.json" for d in missing}
         remote = []
-        for d in missing:
-            if d.startswith("file:"):
-                import pathlib
-                import urllib.parse
-
-                p = pathlib.Path(
-                    urllib.parse.urlparse(d).path
-                ) / "_sidecar" / "blooms.json"
-                try:
-                    self._bloom_sidecars[d] = json.loads(p.read_text())
-                except Exception:
-                    self._bloom_sidecars[d] = {}
-            else:
+        for d, path in paths.items():
+            if self.fs._local(path) is None:
                 remote.append(d)
+                continue
+            try:
+                self._bloom_sidecars[d] = json.loads(self.fs.read_text(path))
+            except Exception:
+                self._bloom_sidecars[d] = {}
         if not remote:
             return
         try:
             import urllib.parse
 
             rows = (
-                self.spark.read.text(
-                    [f"{d}/_sidecar/blooms.json" for d in remote], wholetext=True
-                )
+                self.spark.read.text([paths[d] for d in remote], wholetext=True)
                 .select(
                     F.input_file_name().alias("path"), F.col("value")
                 )
@@ -808,9 +650,7 @@ class ManifestCatalog:
 
             by_path = {_pathkey(r["path"]): r["value"] for r in rows}
             for d in remote:
-                text = by_path.get(
-                    _pathkey(self.fs.qualified(f"{d}/_sidecar/blooms.json"))
-                )
+                text = by_path.get(_pathkey(self.fs.qualified(paths[d])))
                 try:
                     self._bloom_sidecars[d] = json.loads(text) if text else {}
                 except Exception:
@@ -821,15 +661,16 @@ class ManifestCatalog:
             for d in remote:
                 try:
                     self._bloom_sidecars[d] = json.loads(
-                        self.fs.read_text(f"{d}/_sidecar/blooms.json")
+                        self.fs.read_text(paths[d])
                     )
                 except Exception:
                     self._bloom_sidecars[d] = {}
 
     def _bloom_positions(
-        self, value, spark_type=None, num_bits: int | None = None
+        self, value, m: int, spark_type=None
     ) -> list[tuple[int, int]]:
-        """Probe positions for one value: [(word, bit)] per hash row.
+        """Probe positions for one value in an ``m``-bit bitmap:
+        [(word, bit)] per hash row.
         Must match the JVM build bit-for-bit, or the probe silently
         skips the dir that holds the key (a false NEGATIVE — the one
         thing a bloom must never do).
@@ -853,7 +694,6 @@ class ManifestCatalog:
         hashed decimal(10,4) ('3.1400')."""
         import hashlib
 
-        m = num_bits or self.BLOOM_BITS
         if spark_type is None:
             out = []
             for h in range(self.BLOOM_HASHES):
@@ -962,16 +802,26 @@ class ManifestCatalog:
                 col_type, (ByteType, ShortType, IntegerType, LongType)
             )
         )
-        # dirs may carry differently-sized bitmaps (adaptive sizing,
-        # legacy 4096): probe positions are modulo the bitmap size, so
-        # compute (and cache) one probe per distinct size
+        # dirs may carry differently-sized bitmaps (adaptive sizing):
+        # probe positions are modulo the bitmap size, so compute (and
+        # cache) one probe per distinct size
         probes: dict[int, list[tuple[int, int]] | None] = {}
-
-        def probe_for(m: int):
+        all_dirs = self._dirs(manifest)
+        bms = {d: (blooms.get(d) or {}).get(col) for d in all_dirs}
+        self._load_sidecars(
+            [d for d, bm in bms.items() if isinstance(bm, dict) and bm.get("sidecar")]
+        )
+        kept = []
+        for d in all_dirs:
+            parsed = self._bloom_resolve(d, col, bms[d])
+            if parsed is None:
+                kept.append(d)
+                continue
+            m, words = parsed
             if m not in probes:
                 try:
                     probes[m] = self._bloom_positions(
-                        value, None if fast else col_type, num_bits=m
+                        value, m, None if fast else col_type
                     )
                 except Exception:
                     # a probe value the column's type can't hold (e.g.
@@ -980,47 +830,7 @@ class ManifestCatalog:
                     # than guessing a rendering and risking a false
                     # negative
                     probes[m] = None
-            return probes[m]
-
-        all_dirs = self._dirs(manifest)
-        sealed = manifest.get("sealed") or {}
-        tail = [d for d in all_dirs if d not in sealed]
-        self._load_sidecars(
-            [
-                d
-                for d in tail
-                if isinstance((blooms.get(d) or {}).get(col), dict)
-                and (blooms.get(d) or {}).get(col, {}).get("sidecar")
-            ]
-        )
-        # sealed dirs: one vectorized probe per segment, then restore
-        # manifest dir order (segments are immutable and cached)
-        kept_sealed: set[str] = set()
-        seg_ids = dict.fromkeys(sealed[d] for d in all_dirs if d in sealed)
-        self._prefetch_segments(manifest, seg_ids)
-        for sid in seg_ids:
-            try:
-                seg = self._segment(manifest, sid)
-                kept_sealed.update(seg.bloom_kept(col, probe_for))
-            except Exception:
-                # unreadable segment: pruning is an IO optimization —
-                # keep every dir it covers rather than risk a false
-                # negative
-                kept_sealed.update(
-                    d for d in all_dirs if sealed.get(d) == sid
-                )
-        kept = []
-        for d in all_dirs:
-            if d in sealed:
-                if d in kept_sealed:
-                    kept.append(d)
-                continue
-            parsed = self._bloom_resolve(d, col, (blooms.get(d) or {}).get(col))
-            if parsed is None:
-                kept.append(d)
-                continue
-            m, words = parsed
-            probe = probe_for(m)
+            probe = probes[m]
             if probe is None or all(
                 (int(words.get(str(w), 0)) >> b) & 1 for w, b in probe
             ):
@@ -1049,24 +859,8 @@ class ManifestCatalog:
         results; the caller still applies the row filter."""
         manifest = self._require_manifest(name, version)
         stats = manifest.get("stats") or {}
-        sealed = manifest.get("sealed") or {}
-        all_dirs = self._dirs(manifest)
-        # sealed dirs: vectorized range check per segment
-        kept_sealed: set[str] = set()
-        seg_ids = dict.fromkeys(sealed[d] for d in all_dirs if d in sealed)
-        self._prefetch_segments(manifest, seg_ids)
-        for sid in seg_ids:
-            try:
-                seg = self._segment(manifest, sid)
-                kept_sealed.update(seg.range_kept(col, lo, hi))
-            except Exception:
-                kept_sealed.update(d for d in all_dirs if sealed.get(d) == sid)
         kept = []
-        for d in all_dirs:
-            if d in sealed:
-                if d in kept_sealed:
-                    kept.append(d)
-                continue
+        for d in self._dirs(manifest):
             rng = (stats.get(d) or {}).get(col)
             if rng is None or rng[0] is None or rng[1] is None:
                 kept.append(d)
@@ -1244,9 +1038,6 @@ class ManifestCatalog:
             blooms = dict((manifest or {}).get("blooms") or {})
             if new_blooms is not None:
                 blooms[data_dir] = new_blooms
-            sealed = dict((manifest or {}).get("sealed") or {})
-            segments = dict((manifest or {}).get("segments") or {})
-            self._maybe_seal(name, dirs, stats, blooms, sealed, segments)
             base = manifest["version"] if manifest else 0
             if self._commit_if(
                 name,
@@ -1256,8 +1047,6 @@ class ManifestCatalog:
                     "n_buckets": None,
                     "stats": stats or None,
                     "blooms": blooms or None,
-                    "sealed": sealed or None,
-                    "segments": segments or None,
                 },
                 base,
             ):
@@ -1446,28 +1235,20 @@ class ManifestCatalog:
     ) -> bool:
         """The plain-table row-rewrite commit (:meth:`delete_where`,
         :meth:`update_where`, :meth:`delete_range`): the ``replaced``
-        dirs leave the manifest with their stats, blooms and sealed
-        entries; ``rows`` (None = nothing survives) land in one fresh
+        dirs leave the manifest with their stats and blooms;
+        ``rows`` (None = nothing survives) land in one fresh
         dir with stats and blooms over the column sets the replaced
         dirs had; the new version lists ``keep`` + that dir. CAS on
         ``manifest``'s version — False means a concurrent commit won
         and the caller re-plans against the new latest (the written
         dir is an orphan :meth:`vacuum` collects)."""
-        stat_cols = sorted(
-            {c for d in replaced for c in self._stats_for(manifest, d)}
-        )
-        bloom_cols = sorted(
-            {c for d in replaced for c in self._bloom_cols_for(manifest, d)}
-        )
         stats = dict(manifest.get("stats") or {})
         blooms = dict(manifest.get("blooms") or {})
-        sealed = dict(manifest.get("sealed") or {})
-        segments = dict(manifest.get("segments") or {})
+        stat_cols = sorted({c for d in replaced for c in stats.get(d) or {}})
+        bloom_cols = sorted({c for d in replaced for c in blooms.get(d) or {}})
         for d in replaced:
             stats.pop(d, None)
             blooms.pop(d, None)
-            sealed.pop(d, None)
-        self._prune_segments(sealed, segments)
         dirs = list(keep)
         if rows is not None:
             data_dir = self._new_data_dir(name)
@@ -1487,8 +1268,6 @@ class ManifestCatalog:
                 "bucket_dirs": None,
                 "stats": stats or None,
                 "blooms": blooms or None,
-                "sealed": sealed or None,
-                "segments": segments or None,
             },
             manifest["version"],
         ) is not None
@@ -1590,12 +1369,10 @@ class ManifestCatalog:
                     f"table {name} is bucketed — range delete is for "
                     "plain (dir-listed) tables"
                 )
+            stats = manifest.get("stats") or {}
             drop, rewrite, keep = [], [], []
             for d in self._dirs(manifest):
-                # tail-or-segment: sealed dirs' stats live in their
-                # segment file — without the lookup every sealed dir
-                # would demote to the rewrite path
-                rng = self._stats_for(manifest, d).get(col)
+                rng = (stats.get(d) or {}).get(col)
                 if rng is None or rng[0] is None or rng[1] is None:
                     rewrite.append(d)  # unknown range: must look
                 elif rng[1] < lo or rng[0] > hi:
@@ -1915,7 +1692,6 @@ class ManifestCatalog:
             return []
         retained = versions[-keep_versions:]
         referenced: set[str] = set()
-        referenced_segs: set[str] = set()
         for v in retained:
             m = json.loads(
                 self.fs.read_text(f"{self._manifest_dir(name)}/{_MANIFEST_FMT.format(v)}")
@@ -1931,8 +1707,6 @@ class ManifestCatalog:
                 while len(parts) > 1 and parts[-2] != "data":
                     parts.pop()
                 referenced.add(self.fs.qualified("/".join(parts)))
-            for p in (m.get("segments") or {}).values():
-                referenced_segs.add(self.fs.qualified(p))
         now_ms = int(_time.time() * 1000)
         deleted = []
         for p in self.fs.listdir(f"{self.table_dir(name)}/data"):
@@ -1940,16 +1714,6 @@ class ManifestCatalog:
                 continue
             if now_ms - self.fs.mtime_ms(p) < min_age_seconds * 1000:
                 continue  # possibly an in-flight writer's dir
-            self.fs.delete(p)
-            deleted.append(p)
-        # segment checkpoints referenced by no retained manifest
-        # (rewrites dropped their last sealed dir, or a lost CAS race
-        # orphaned the file) — same age floor protects in-flight seals
-        for p in self.fs.listdir(f"{self.table_dir(name)}/_segments"):
-            if self.fs.qualified(p) in referenced_segs:
-                continue
-            if now_ms - self.fs.mtime_ms(p) < min_age_seconds * 1000:
-                continue
             self.fs.delete(p)
             deleted.append(p)
         for v in versions:

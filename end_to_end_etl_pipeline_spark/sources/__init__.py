@@ -3,7 +3,6 @@ from end_to_end_etl_pipeline_spark.sources.readers import (
     read_json,
     read_orc,
     read_parquet,
-    read_table,
     read_text_lines,
     with_file_metadata,
     with_path_key,
@@ -15,7 +14,6 @@ __all__ = [
     "read_orc",
     "read_parquet",
     "read_text_lines",
-    "read_table",
     "with_file_metadata",
     "with_path_key",
 ]

@@ -83,12 +83,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def read_table(spark: SparkSession, name: str) -> DataFrame:
-    """S3 — catalog table scan by (possibly multi-part) name
-    (reference ``medallion/silver/b2s_company_house.py:55-57``)."""
-    return spark.table(name)
-
-
 def with_file_metadata(df: DataFrame, col_name: str = "file_path") -> DataFrame:
     """S4 — file-metadata virtual column: source path per row.
 

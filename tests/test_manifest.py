@@ -533,9 +533,9 @@ def test_bloom_adaptive_sizing_and_legacy_bitmap_compat(spark, cat):
     floored at BLOOM_BITS) so a big append's bloom doesn't saturate —
     the r05 fixed 4096-bit bitmap approved ~41% of absent-key probes
     at just 1.9k keys/dir and would approve everything at 10x.  Probes
-    must honor EACH dir's own modulus, including a legacy fixed-size
-    bitmap left by an older writer (no false negatives across mixed
-    sizes)."""
+    must honor EACH dir's own modulus (no false negatives across mixed
+    sizes), and a bitmap not in the sized form (the unsized
+    ``{word: bits}`` shape) keeps its dir — it is never probed."""
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
     small = spark.range(0, 50).select(F.col("id").alias("key"))
@@ -569,55 +569,82 @@ def test_bloom_adaptive_sizing_and_legacy_bitmap_compat(spark, cat):
               (999_999_007, 999_999_011, 999_999_013)]
     assert absent == [0, 0, 0]
 
-    # legacy format: hand-rewrite one dir's bitmap to the pre-r06
-    # shape ({word: bits} at BLOOM_BITS) — probes must still find keys
-    import json as _json
-
+    # unsized bitmap: hand-rewrite one dir's bitmap to the bare
+    # {word: bits} shape — with no modulus to probe against, the dir
+    # is kept for every probe, absent keys included
     d0 = next(d for d in m["dirs"] if sizes[d] == 4096)
-    legacy = dict(m["blooms"][d0]["key"]["words"])
-    m["blooms"][d0]["key"] = legacy
+    assert d0 not in cat.bloom_pruned_dirs("bla.t", "key", 999_999_007)
+    m["blooms"][d0]["key"] = dict(m["blooms"][d0]["key"]["words"])
     ver = cat._commit("bla.t", {k: v for k, v in m.items() if k != "version"})
     assert ver > 0
+    for absent in (999_999_007, 999_999_011, 999_999_013):
+        assert d0 in cat.bloom_pruned_dirs("bla.t", "key", absent)
     assert cat.read_point("bla.t", "key", 7).count() == 1
     assert cat.read_point("bla.t", "key", 102_500).count() == 1
 
 
-def test_bloom_sidecar_batch_load_prunes_on_scheme_less_root(spark, tmp_path):
-    """The non-``file:`` sidecar branch (one wholetext Spark job for
-    all missing sidecars — the object-store path) must actually PRUNE,
-    not silently keep every dir. Two past silent degradations this
-    pins: (a) ``input_file_name`` renders file:///x while
-    makeQualified says file:/x, so keying the lookup on full URIs
-    matches nothing; (b) an underscore-prefixed sidecar FILE is
-    invisible even to an explicit spark.read.text — the sidecar must
-    live in an underscore DIRECTORY (``_sidecar/blooms.json``) so
-    parquet scans filter it but explicit reads still work. A
-    scheme-less catalog root routes every sidecar through the batch
-    branch locally."""
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
-
-    cat2 = ManifestCatalog(spark, str(tmp_path / "bare_lake"))
-    cat2.BLOOM_SIDECAR_MIN_WORDS = 0  # force every bloom to sidecar
-    cat2.append(
-        spark.range(0, 50).select(F.col("id").alias("key")),
-        "s.t", bloom_cols=["key"],
-    )
-    cat2.append(
-        spark.range(100, 150).select(F.col("id").alias("key")),
-        "s.t", bloom_cols=["key"],
-    )
-    m = cat2.latest_manifest("s.t")
+def _sidecar_table(spark, cat) -> dict:
+    """Table ``s.t``: two appends of 50 disjoint keys, every bloom
+    forced into its dir's sidecar; returns the latest manifest."""
+    cat.BLOOM_SIDECAR_MIN_WORDS = 0
+    for lo in (0, 100):
+        cat.append(
+            spark.range(lo, lo + 50).select(F.col("id").alias("key")),
+            "s.t", bloom_cols=["key"],
+        )
+    m = cat.latest_manifest("s.t")
     assert all(
         bm["key"].get("sidecar") == 1 for bm in m["blooms"].values()
     )
-    assert not next(iter(m["dirs"])).startswith("file:")  # batch branch
-    # pruning works: one dir per present key, zero for an absent key
-    assert len(cat2.bloom_pruned_dirs("s.t", "key", 7)) == 1
-    assert len(cat2.bloom_pruned_dirs("s.t", "key", 120)) == 1
-    assert len(cat2.bloom_pruned_dirs("s.t", "key", 999_999_007)) == 0
-    # and never a false negative
-    assert cat2.read_point("s.t", "key", 7).count() == 1
-    assert cat2.read_point("s.t", "key", 120).count() == 1
+    return m
+
+
+def test_bloom_sidecar_batch_load_prunes_on_scheme_less_root(
+    spark, tmp_path, jvm_cat
+):
+    """Sidecar loading must actually PRUNE, not silently keep every
+    dir, on both of its branches: the direct local read, here under a
+    scheme-less root (dirs spelled without ``file:``), and the batch
+    read of every missing sidecar in one wholetext Spark job (the
+    object-store path, taken here through the forced JVM IO branch).
+    Two past silent degradations of the batch read this pins: (a)
+    ``input_file_name`` renders file:///x while makeQualified says
+    file:/x, so keying the lookup on full URIs matches nothing; (b) an
+    underscore-prefixed sidecar FILE is invisible even to an explicit
+    spark.read.text — the sidecar must live in an underscore DIRECTORY
+    (``_sidecar/blooms.json``) so parquet scans filter it but explicit
+    reads still work."""
+    bare = ManifestCatalog(spark, str(tmp_path / "bare_lake"))
+    for cat in (bare, jvm_cat):
+        m = _sidecar_table(spark, cat)
+        # pruning works: one dir per present key, zero for an absent key
+        assert len(cat.bloom_pruned_dirs("s.t", "key", 7)) == 1
+        assert len(cat.bloom_pruned_dirs("s.t", "key", 120)) == 1
+        assert len(cat.bloom_pruned_dirs("s.t", "key", 999_999_007)) == 0
+        # and never a false negative
+        assert cat.read_point("s.t", "key", 7).count() == 1
+        assert cat.read_point("s.t", "key", 120).count() == 1
+        if cat is bare:
+            assert not m["dirs"][0].startswith("file:")
+
+
+def test_cold_sidecar_probe_same_jobs_on_bare_and_file_root(
+    spark, tmp_path, run_counted
+):
+    """A bare root and a ``file://`` root name the same local
+    filesystem, so a cold bloom probe (fresh catalog, empty sidecar
+    cache) reads the sidecars directly under both and launches the
+    same Spark jobs — a bare root must not pay the batch sidecar
+    read, whose one job exists for remote filesystems."""
+    jobs = {}
+    for root in (str(tmp_path / "bare"), f"file://{tmp_path}/qualified"):
+        _sidecar_table(spark, ManifestCatalog(spark, root))
+        cold = ManifestCatalog(spark, root)
+        kept, jobs[root], _ = run_counted(
+            lambda: cold.bloom_pruned_dirs("s.t", "key", 7)
+        )
+        assert len(kept) == 1
+    assert len(set(jobs.values())) == 1, jobs
 
 
 def test_bloom_probe_exotic_types_never_false_negative(spark, cat):
@@ -812,6 +839,12 @@ def test_delete_where_rewrites_only_bloomed_dirs(spark, tmp_path):
     # their stats/bloom entries carried too
     for d in untouched:
         assert d in (m1.get("blooms") or {})
+    # the replacement dir gets a bloom over the replaced dir's columns,
+    # so its survivors still prune to it alone
+    (new_dir,) = [d for d in dirs1 if d not in dirs0]
+    assert "k" in m1["blooms"][new_dir]
+    assert cat.bloom_pruned_dirs("t", "k", 106) == [new_dir]
+    assert [r.k for r in cat.read_point("t", "k", 106).collect()] == [106]
     # rows: 31 - 2 deleted, NULL row intact
     rows = cat.read("t").collect()
     assert len(rows) == 29
@@ -860,6 +893,11 @@ def test_delete_range_retention_unlinks_whole_dirs(spark, tmp_path):
     assert dirs0[1] in dirs1          # disjoint dir untouched
     assert dirs0[0] not in dirs1      # expired dir unlinked
     assert dirs0[2] not in dirs1      # straddler replaced
+    # one replacement dir (the straddler's survivors): the expired dir
+    # leaves none, and it carries stats over the same column
+    assert len(dirs1) == 2
+    (new_dir,) = [d for d in dirs1 if d not in dirs0]
+    assert m1["stats"][new_dir] == {"day": [11, 15]}
     rows = cat.read("t").collect()
     assert len(rows) == total0 - 16
     assert sum(1 for r in rows if r["day"] is None) == 1
@@ -1011,6 +1049,9 @@ def test_delete_then_vacuum_completes_erasure(spark, tmp_path):
     assert cat._versions("t") == [cat.latest_manifest("t")["version"]]
     assert cat.read("t").filter("k in (101, 103)").count() == 0
     assert cat.read("t").count() == 8
+    # what the latest version references survives, blooms included
+    assert [r.k for r in cat.read_point("t", "k", 102).collect()] == [102]
+    assert [r.k for r in cat.read_point("t", "k", 3).collect()] == [3]
 
 
 def test_shallow_clone_zero_copy_and_divergence(spark, tmp_path):
@@ -1142,7 +1183,7 @@ def test_rename_exclusive_is_an_atomic_claim(spark, cat, tmp_path):
 def jvm_cat(spark, tmp_path):
     """Catalog forced onto the JVM IO branch (what a real cluster FS
     takes): _fs_is_local=False disables the python fast path, so
-    write_text/read_text/rename_exclusive and segment IO all route
+    write_text/read_text/rename_exclusive and sidecar loads all route
     through org.apache.hadoop.fs against the SAME local dir — the
     branch the r08 local-IO gating fix made unreachable in local
     tests, and the one whose divergence from the python path is
@@ -1178,50 +1219,10 @@ def test_hadoopfs_jvm_branch_matches_python_contract(jvm_cat, tmp_path):
     assert not fs.exists(p)
 
 
-def test_segment_roundtrip_nonlocal_path(spark, jvm_cat):
-    """write_segment/load_segment on the non-local branch (Spark job
-    write, toPandas + pinned-schema read) must answer probes exactly
-    like the local pyarrow branch — including an ALL-STATS segment
-    whose empty bloom_cols lists give pandas nothing to infer
-    element types from (the r08 review's inference-failure case)."""
-    from end_to_end_etl_pipeline_spark.sinks.segments import (
-        load_segment,
-        write_segment,
-    )
-
-    rows = []
-    for i in range(6):
-        words = {"0": i + 1}  # word 0 bit pattern = i+1
-        rows.append(
-            (f"file:///jd/{i:02d}", {"ts": [i * 10, i * 10 + 9]},
-             {"key": (4096, words)} if i % 2 == 0 else {})
-        )
-    seg_id, path = write_segment(jvm_cat, "jvm.t", rows)
-    seg = load_segment(jvm_cat, path)
-    assert seg.range_kept("ts", 25, 34) == ["file:///jd/02", "file:///jd/03"]
-    # bloomless odd dirs kept conservatively; even dirs by bit 1 of
-    # i+1 (set only for i=2) — an i-dependent, non-trivial keep set
-    kept = seg.bloom_kept("key", lambda nb: [(0, 1)])
-    assert kept == ["file:///jd/01", "file:///jd/02", "file:///jd/03",
-                    "file:///jd/05"]
-    # all-stats segment (no blooms anywhere)
-    seg_id2, path2 = write_segment(
-        jvm_cat, "jvm.t2",
-        [(f"file:///jd2/{i}", {"ts": [i, i]}, {}) for i in range(3)],
-    )
-    seg2 = load_segment(jvm_cat, path2)
-    assert seg2.range_kept("ts", 1, 1) == ["file:///jd2/1"]
-    assert seg2.bloom_kept("key", lambda nb: [(0, 0)]) == [
-        f"file:///jd2/{i}" for i in range(3)
-    ]
-
-
-def test_catalog_crud_on_jvm_branch_with_sealing(spark, jvm_cat):
-    """End-to-end CRUD through forced JVM IO with sealing engaged
-    (SEGMENT_SIZE=2): manifests, _latest hints, sidecars, segment
-    files, and point lookups must all work on the branch a real
-    cluster filesystem takes."""
-    jvm_cat.SEGMENT_SIZE = 2
+def test_catalog_crud_on_jvm_branch(spark, jvm_cat):
+    """End-to-end CRUD through forced JVM IO: manifests, _latest
+    hints, stats, blooms and point lookups must all work on the
+    branch a real cluster filesystem takes."""
     for i in range(5):
         jvm_cat.append(
             spark.range(i * 10, i * 10 + 10).select(
@@ -1230,7 +1231,8 @@ def test_catalog_crud_on_jvm_branch_with_sealing(spark, jvm_cat):
             "jvm.crud", stats_cols=["key"], bloom_cols=["key"],
         )
     m = jvm_cat.latest_manifest("jvm.crud")
-    assert m is not None and len(m.get("sealed") or {}) >= 2
+    assert m is not None and len(m["dirs"]) == 5
+    assert set(m["stats"]) == set(m["blooms"]) == set(m["dirs"])
     assert jvm_cat.read("jvm.crud").count() == 50
     assert [r.key for r in jvm_cat.read_point("jvm.crud", "key", 23).collect()] == [23]
     assert jvm_cat.read_range("jvm.crud", "key", 10, 19).count() == 10

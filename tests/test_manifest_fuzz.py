@@ -220,13 +220,6 @@ def test_manifest_crud_fuzz(spark, tmp_path_factory, shard):
         # per-dir sidecar path (write, probe, rewrite-recompute,
         # vacuum) while even shards keep the inline path covered
         cat.BLOOM_SIDECAR_MIN_WORDS = 0
-    if shard >= 2:
-        # upper shards force the r08 segment-checkpoint path: with
-        # 3+ metadata-bearing dirs, appends SEAL them into columnar
-        # segments, so every mutation also runs segment-resolved
-        # pruning, sealed-dir rewrites, and segment vacuuming
-        # (shard 3 = segments OVER sidecars, shard 2 = over inline)
-        cat.SEGMENT_SIZE = 3
     for i in range(per_shard):
         seq = shard * per_shard + i
         _run_sequence(spark, cat, f"fz.t{seq:03d}", MASTER_SEED + seq)
@@ -349,8 +342,8 @@ def test_manifest_bucketed_fuzz(spark, tmp_path_factory, shard):
 # ranges and only delete keys they appended earlier in their own
 # program order, so the final content is interleaving-independent —
 # what the fuzz actually checks is that no CAS rebase ever LOSES the
-# other writer's dirs (lost update), that the version chain stays
-# dense, and that sealing (tiny SEGMENT_SIZE) survives races.
+# other writer's dirs (lost update) and that the version chain stays
+# dense.
 # ---------------------------------------------------------------------------
 
 N_TWO_WRITER_SEQUENCES = int(os.environ.get("SPARK_GRAFT_FUZZ_2W", "24"))
@@ -385,9 +378,6 @@ def test_two_writer_cas_fuzz(spark, tmp_path_factory, shard):
         rng = random.Random(seed)
         tbl = f"tw.t{shard}_{i:03d}"
         cats = [ManifestCatalog(spark, f"file://{root}") for _ in range(2)]
-        if i % 2:
-            for c in cats:
-                c.SEGMENT_SIZE = 3  # force sealing to race with commits
         progs = [_writer_program(rng, 0), _writer_program(rng, 10_000)]
         errors: list = []
 
@@ -427,7 +417,7 @@ def test_two_writer_cas_fuzz(spark, tmp_path_factory, shard):
         # every op that changed state committed exactly one version;
         # deletes that matched nothing may skip a commit
         assert len(vs) <= n_commits, f"seed={seed}"
-        # point reads still exact through blooms/segments after racing
+        # point reads still exact through blooms after racing
         probe = next(iter(progs[0][1] | progs[1][1]), None)
         if probe is not None:
             got_p = [r["id"] for r in
@@ -523,13 +513,12 @@ def test_two_writer_bucketed_cas_fuzz(spark, tmp_path_factory, shard):
 # (= A's program result) under ANY serialization consistent with
 # commit order; what can break is optimize basing its rewrite on a
 # version a concurrent delete replaced (resurrecting deleted rows),
-# a compaction dropping a racing append's dirs on CAS rebase, vacuum
-# collecting a dir the winning manifest references, or segment
-# sealing desyncing mid-race. Vacuum runs with the writer-safe age
-# floor DURING the race (min_age_seconds=0 is single-writer-only by
-# documented contract — it would collect in-flight writers' dirs),
-# then once more with age 0 after quiescence to prove the surviving
-# state is GC-clean.
+# a compaction dropping a racing append's dirs on CAS rebase, or
+# vacuum collecting a dir the winning manifest references. Vacuum
+# runs with the writer-safe age floor DURING the race
+# (min_age_seconds=0 is single-writer-only by documented contract —
+# it would collect in-flight writers' dirs), then once more with age
+# 0 after quiescence to prove the surviving state is GC-clean.
 # ---------------------------------------------------------------------------
 
 N_MAINT_SEQUENCES = int(os.environ.get("SPARK_GRAFT_FUZZ_MAINT", "12"))
@@ -546,9 +535,6 @@ def test_maintenance_race_fuzz(spark, tmp_path_factory, shard):
         rng = random.Random(seed)
         tbl = f"mr.t{shard}_{i:03d}"
         cats = [ManifestCatalog(spark, f"file://{root}") for _ in range(2)]
-        if i % 2:
-            for c in cats:
-                c.SEGMENT_SIZE = 3  # race sealing with compaction/GC
         prog, live = _writer_program(rng, 0)
         # seed one committed version so B's first maintenance call
         # has a table to operate on
@@ -625,7 +611,7 @@ def test_maintenance_race_fuzz(spark, tmp_path_factory, shard):
         assert vs == sorted(vs) and len(vs) == len(set(vs)), (
             f"seed={seed} versions={vs}"
         )
-        # point reads still exact through stats/blooms/segments after
+        # point reads still exact through stats/blooms after
         # compaction raced the commits
         probe = want[0] if want else None
         if probe is not None:

@@ -1,9 +1,10 @@
 """Repository hygiene: the kept scripts byte-compile, no code, test
 or doc cites a ``scripts/<name>.py`` (or imports a ``scripts.<name>``
 module) that does not exist, no doc recipe cites a missing
-``tests/<name>.py``, and every package def is reachable from an entry
-point. Deleted study scripts live in git history; their verdicts
-live in SCALE.md and OPTIMIZATION_r12/13.md."""
+``tests/<name>.py`` or package module (``sinks/<name>.py``), and
+every package def is reachable from an entry point. Deleted study
+scripts live in git history; their verdicts live in SCALE.md and
+OPTIMIZATION_r12/13.md."""
 
 from __future__ import annotations
 
@@ -15,6 +16,7 @@ import re
 import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = "end_to_end_etl_pipeline_spark"
 SCRIPTS = sorted(
     f for f in os.listdir(os.path.join(ROOT, "scripts")) if f.endswith(".py")
 )
@@ -35,6 +37,17 @@ CITE = re.compile(
 #: or a glob such as ``tests/test_scd*.py`` that must match a file
 RECIPES = ["README.md", ".claude/skills/verify/SKILL.md"]
 TEST_CITE = re.compile(r"(?<![\w/])tests/([A-Za-z0-9_*?]+)\.py")
+#: the package's subpackages; the recipes cite their modules either
+#: package-relative (``sinks/manifest.py``) or in full
+#: (``end_to_end_etl_pipeline_spark/session.py``)
+SUBPACKAGES = sorted(
+    d for d in os.listdir(os.path.join(ROOT, PACKAGE))
+    if os.path.isfile(os.path.join(ROOT, PACKAGE, d, "__init__.py"))
+)
+MODULE_CITE = re.compile(
+    rf"(?<![\w/])(?:{PACKAGE}/([\w/]+\.py)"
+    rf"|((?:{'|'.join(SUBPACKAGES)})/\w+\.py))"
+)
 
 
 def _citing_files():
@@ -72,13 +85,16 @@ def test_cited_scripts_exist():
                     cited = f"tests/{m.group(1)}.py"
                     if not glob.glob(os.path.join(ROOT, cited)):
                         dangling.append(f"{rel}:{lineno}: {cited}")
+                for m in MODULE_CITE.finditer(line):
+                    cited = f"{PACKAGE}/{m.group(1) or m.group(2)}"
+                    if not os.path.isfile(os.path.join(ROOT, cited)):
+                        dangling.append(f"{rel}:{lineno}: {cited}")
     assert not dangling, "cited files that do not exist:\n" + "\n".join(
         dangling
     )
 
 
 # -- no test-only code ----------------------------------------------------
-PACKAGE = "end_to_end_etl_pipeline_spark"
 #: the entry points: code that ships or measures the engine. Every
 #: name such a file mentions is a root (a ``tests`` dir under one of
 #: them is not — a test never keeps code alive).
