@@ -235,7 +235,7 @@ def _build_ann_store(spark, sf_dir: str):
     dim = len(emb.first()["embedding"])
     cb = pq_train(
         emb, "vec_id", "embedding",
-        num_subspaces=_PQ_M, num_centroids=_PQ_K, iters=1,
+        num_subspaces=_PQ_M, num_centroids=_PQ_K,
     )
     write_ivfpq_store(
         cat, emb, "vec_id", "embedding", "label", cb, "ann.emb", dim=dim
@@ -244,8 +244,7 @@ def _build_ann_store(spark, sf_dir: str):
     def store_topk(spark, sf_dir):
         queries = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 10)
         res, _probed = ivfpq_store_topk(
-            cat, "ann.emb", queries, "vec_id", "embedding",
-            k=5, nprobe=2, shortlist_factor=5,
+            cat, "ann.emb", queries, "vec_id", "embedding", nprobe=2,
         )
         return res
 
@@ -353,14 +352,14 @@ def _build_dedup_store(spark, sf_dir: str):
     return cat, probe, tmpdir
 
 
-def canary(spark, sf_dir: str, reps: int = 3) -> float:
+def canary(spark, sf_dir: str) -> float:
     """The fixed calibration step: a full lineitem parquet
     scan-count — trivial, plan-stable across rounds, and sensitive to
     the same CPU/IO machine state as the real queries. Its time
     normalizes per-query numbers so environment drift divides out of
     round-over-round comparisons (r05's uniform ~1.25x inflation).
 
-    MIN OF ``reps`` BACK-TO-BACK SCANS (r11): a single ~0.15 s scan
+    MIN OF 3 BACK-TO-BACK SCANS (r11): a single ~0.15 s scan
     carries 50-80 ms scheduler/GC blips, so the old single-sample
     form made the intra-pass max/min drift stat measure its own
     sampling noise — a quiet-box r11 run read 1.3-2.1 per pass with
@@ -373,7 +372,7 @@ def canary(spark, sf_dir: str, reps: int = 3) -> float:
     the blip component (~10%); the r11 sidecar is the first with
     this form."""
     best = float("inf")
-    for _ in range(reps):
+    for _ in range(3):
         t0 = time.perf_counter()
         spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
         best = min(best, time.perf_counter() - t0)
@@ -800,9 +799,12 @@ def main() -> None:
         # shipped sidecar meets the bar it is graded by instead of
         # recording whatever the newest (possibly noisy) run said.
         # The cold pass re-runs in fresh subprocesses (r12) — see
-        # _run_cold_attempts.
+        # _run_cold_attempts. Each warm pass starts with an empty
+        # cache (like perfbench's per-unit clear): a persist left by
+        # the previous pass must not serve this one's scans.
         warm_passes: list[tuple[str, dict[str, float], float]] = []
         while True:
+            spark.catalog.clearCache()
             tag = f"warm{len(warm_passes)}"
             sink: dict[str, float] = {}
             traced_pass(tag, sink, None)

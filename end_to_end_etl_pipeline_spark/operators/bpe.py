@@ -131,7 +131,6 @@ def bpe_train_batched(
     freq_col: str,
     num_merges: int,
     max_batch: int = 64,
-    checkpoint_every: int = 16,
 ) -> list[tuple[int, str, str, int]]:
     """Batched BPE training — EXACTLY equivalent to :func:`bpe_train`
     (pytest-asserted) while launching one pair-count job per *batch*
@@ -163,9 +162,9 @@ def bpe_train_batched(
       batch, fall back to the plain argmax — sequential by
       definition.
 
-    ``checkpoint_every``: the merge-by-replace encoding chains one
-    string ``replace`` per merge into the plan; every N rounds the
-    encoded vocab is localCheckpoint()ed so plan depth stays bounded
+    Lineage: the merge-by-replace encoding chains one string
+    ``replace`` per merge into the plan; every 16 rounds the encoded
+    vocab is localCheckpoint()ed so plan depth stays bounded
     at web-scale vocab sizes (the vocab table itself is small — this
     is lineage hygiene, not data movement).
     """
@@ -211,7 +210,7 @@ def bpe_train_batched(
                 break
         enc = enc.withColumn("e", expr)
         rounds += 1
-        if rounds % checkpoint_every == 0:
+        if rounds % 16 == 0:
             enc = enc.localCheckpoint()
     return rules
 

@@ -51,11 +51,10 @@ def dedup_exact_hash(
     df: DataFrame,
     content_cols: Sequence[str],
     id_col: str,
-    hash_col: str = "content_hash",
     keep_cols: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Exact content dedup: hash the content columns, keep the lowest
-    id per hash.
+    """Exact content dedup: hash the content columns into
+    ``content_hash``, keep the lowest id per hash.
 
     Plan: ONE shuffle — ``groupBy(hash).agg(min_by(struct(row), id))``.
     Map-side partial aggregation keeps a single surviving row per hash
@@ -78,6 +77,7 @@ def dedup_exact_hash(
     out_cols = list(keep_cols) if keep_cols is not None else list(df.columns)
     if id_col not in out_cols:
         out_cols = [id_col, *out_cols]
+    hash_col = "content_hash"
     hashed = df.withColumn(
         hash_col,
         F.md5(F.concat_ws("␟", *[F.coalesce(F.col(c).cast("string"), F.lit("␀")) for c in content_cols])),

@@ -60,7 +60,6 @@ class MinHashDedupStore:
         self,
         catalog,
         table: str,
-        id_col: str = "doc_id",
         num_hashes: int = 16,
         bands: int = 4,
         shingle_len: int = 6,
@@ -70,7 +69,7 @@ class MinHashDedupStore:
             raise ValueError("num_hashes must be divisible by bands")
         self.catalog = catalog
         self.table = table
-        self.id_col = id_col
+        self.id_col = "doc_id"
         self.num_hashes = num_hashes
         self.bands = bands
         self.rows = num_hashes // bands

@@ -52,8 +52,8 @@ def apply_rules(df: DataFrame, *rules: Column) -> DataFrame:
     return df.filter(pred)
 
 
-def profile_columns(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """Per-column data profile in ONE aggregation pass over the table:
+def profile_columns(df: DataFrame) -> DataFrame:
+    """Per-column data profile of every column in ONE aggregation pass:
     (column, n_rows, n_nulls, null_frac, n_distinct) — the schema-
     drift / completeness report a pipeline emits before trusting a new
     landing (the reference hand-checks nulls per silver script; this
@@ -66,7 +66,7 @@ def profile_columns(df: DataFrame, cols: Sequence[str] | None = None) -> DataFra
     carries ONE row; nothing scales with table size but the scan.
     At 100 TB swap ``countDistinct`` for ``approx_count_distinct``
     (HLL, no Expand multiplication) — identical shape."""
-    cols = list(cols) if cols is not None else list(df.columns)
+    cols = list(df.columns)
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
         aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nn_{c}"))

@@ -25,13 +25,11 @@ def target_encode_oof(
     category_col: str,
     target_col: str,
     fold_expr: Column,
-    smoothing: float = 20.0,
-    out_col: str = "te",
 ) -> DataFrame:
-    """Smoothed out-of-fold target-mean encoder table.
+    """Smoothed (m = 20) out-of-fold target-mean encoder table.
 
     Returns one row per OBSERVED (category, fold) pair:
-    ``(category_col, fold, out_col, n_oof)`` where ``out_col`` is
+    ``(category_col, fold, te, n_oof)`` where ``te`` is
     the encoding a row of that category in that fold would receive —
     ``(sum_excl + m·prior_excl) / (count_excl + m)`` with all
     ``_excl`` statistics computed from the other folds and
@@ -87,7 +85,7 @@ def target_encode_oof(
             ).alias("prior"),
         )
     )
-    m = float(smoothing)
+    m = 20.0
     te = F.when(F.col("c_excl") == 0, F.col("prior")).otherwise(
         (F.col("s_excl") + F.lit(m) * F.col("prior"))
         / (F.col("c_excl").cast("double") + F.lit(m))
@@ -95,6 +93,6 @@ def target_encode_oof(
     return enc.select(
         F.col(category_col),
         F.col("fold"),
-        F.round(te, 6).alias(out_col),
+        F.round(te, 6).alias("te"),
         F.col("c_excl").alias("n_oof"),
     )

@@ -28,17 +28,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 20,
-) -> DataFrame:
-    """(node, cluster_id) for every node appearing in ``edges``;
-    cluster_id = the minimum node id in the component."""
+def connected_components(edges: DataFrame) -> DataFrame:
+    """(node, cluster_id) for every node appearing in the
+    (id_a, id_b) ``edges``; cluster_id = the minimum node id in the
+    component. Raises after 20 label-propagation rounds without
+    convergence."""
+    max_iter = 20
     sym = (
-        edges.select(F.col(src).alias("n"), F.col(dst).alias("m"))
-        .unionByName(edges.select(F.col(dst).alias("n"), F.col(src).alias("m")))
+        edges.select(F.col("id_a").alias("n"), F.col("id_b").alias("m"))
+        .unionByName(edges.select(F.col("id_b").alias("n"), F.col("id_a").alias("m")))
         .distinct()
         .persist()
     )
@@ -70,32 +68,24 @@ def connected_components(
     else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
-            "(a component's diameter exceeds max_iter); returning partial "
-            "labels would silently split real clusters — raise max_iter"
+            "(a component's diameter exceeds it); returning partial "
+            "labels would silently split real clusters"
         )
     sym.unpersist()
     return labels.select(F.col("n").alias("node"), F.col("label").alias("cluster_id"))
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    iterations: int = 3,
-    damping: float = 0.85,
-    round_dp: int = 6,
-) -> DataFrame:
-    """Fixed-iteration weighted PageRank: (node, pr) after exactly
-    ``iterations`` power steps of
-    ``pr' = (1-d)/N + d * Σ_in pr * w_norm`` with out-edge weights
-    normalized per source.
+def pagerank(edges: DataFrame) -> DataFrame:
+    """Fixed-iteration weighted PageRank over (src, dst, w) edges:
+    (node, pr) after exactly three power steps of
+    ``pr' = (1-d)/N + d * Σ_in pr * w_norm`` (d = 0.85) with out-edge
+    weights normalized per source.
 
     Replayable-by-construction: every checkpoint (normalized weights,
-    initial rank, each iteration's rank) is rounded to ``round_dp``
-    decimals, so an engine that unrolls the same iterations as SQL
-    CTEs (the DuckDB oracle does) reproduces the values bit-for-bit —
-    iterative ≠ unverifiable.
+    initial rank, each iteration's rank) is rounded to 6 decimals, so an
+    engine that unrolls the same iterations as SQL CTEs (the DuckDB
+    oracle does) reproduces the values bit-for-bit — iterative ≠
+    unverifiable.
 
     Scale shape: each step is one shuffle join (ranks ⋈ edges on src,
     both hash-partitioned) + one aggregate on dst; ranks stay one
@@ -105,16 +95,15 @@ def pagerank(
     via the left join; dangling-node mass is dropped identically on
     both sides rather than redistributed.
     """
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
-    )
+    damping = 0.85
+    e = edges.select("src", "dst", "w")
     from pyspark.sql import Window
 
     norm = e.select(
         "src",
         "dst",
         F.round(
-            F.col("w") / F.sum("w").over(Window.partitionBy("src")), round_dp
+            F.col("w") / F.sum("w").over(Window.partitionBy("src")), 6
         ).alias("wn"),
     ).persist()
     nodes = (
@@ -126,9 +115,9 @@ def pagerank(
         F.broadcast(nodes.agg(F.count("*").alias("n_nodes")))
     ).persist()
     pr = base.select(
-        "node", F.round(F.lit(1.0) / F.col("n_nodes"), round_dp).alias("pr")
+        "node", F.round(F.lit(1.0) / F.col("n_nodes"), 6).alias("pr")
     ).localCheckpoint()
-    for _ in range(iterations):
+    for _ in range(3):
         contrib = (
             pr.join(norm, pr.node == norm.src)
             .groupBy("dst")
@@ -141,7 +130,7 @@ def pagerank(
                 F.round(
                     (1 - damping) / F.col("n_nodes")
                     + damping * F.coalesce(F.col("c"), F.lit(0.0)),
-                    round_dp,
+                    6,
                 ).alias("pr"),
             )
             .localCheckpoint()

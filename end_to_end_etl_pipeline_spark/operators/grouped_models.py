@@ -29,7 +29,6 @@ def grouped_linefit(
     group_cols: Sequence[str],
     x_col: str,
     y_col: str,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Per-group ordinary-least-squares line fit: returns one row per
     group with ``(group_cols..., n, slope, intercept)``.
@@ -39,7 +38,7 @@ def grouped_linefit(
     across shuffles — sorting first makes the accumulation
     reproducible), the slope/intercept come from centered two-pass
     sums (numerically stable at any x magnitude), and results round
-    to ``round_dp`` before leaving the worker.
+    to 6dp before leaving the worker.
     """
     import pandas as pd
 
@@ -61,9 +60,9 @@ def grouped_linefit(
         intercept = yb - slope * xb if slope is not None else None
         row = {c: [pdf[c].iloc[0]] for c in group_cols}
         row["n"] = [n]
-        row["slope"] = [round(slope, round_dp) if slope is not None else None]
+        row["slope"] = [round(slope, 6) if slope is not None else None]
         row["intercept"] = [
-            round(intercept, round_dp) if intercept is not None else None
+            round(intercept, 6) if intercept is not None else None
         ]
         return pd.DataFrame(row)
 

@@ -21,17 +21,13 @@ NULL_SENTINEL = "␀"  # ␀ SYMBOL FOR NULL — can't appear in real data
 SEPARATOR = "␟"  # ␟ SYMBOL FOR UNIT SEPARATOR
 
 
-def row_hash_col(cols: Sequence[str], algo: int = 256) -> Column:
-    """Null-safe, order-sensitive row hash over ``cols``."""
+def row_hash_col(cols: Sequence[str]) -> Column:
+    """Null-safe, order-sensitive SHA-256 row hash over ``cols``."""
     parts = [
         F.coalesce(F.col(c).cast("string"), F.lit(NULL_SENTINEL)) for c in cols
     ]
-    return F.sha2(F.concat_ws(SEPARATOR, *parts), algo)
+    return F.sha2(F.concat_ws(SEPARATOR, *parts), 256)
 
 
-def with_row_hash(
-    df: DataFrame,
-    cols: Sequence[str],
-    hash_col: str = "row_hash",
-) -> DataFrame:
-    return df.withColumn(hash_col, row_hash_col(cols))
+def with_row_hash(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    return df.withColumn("row_hash", row_hash_col(cols))

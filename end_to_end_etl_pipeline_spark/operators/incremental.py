@@ -50,9 +50,9 @@ def apply_agg_delta(
     changes: DataFrame,
     keys: Sequence[str],
     sum_cols: Sequence[str],
-    change_col: str = "_change_type",
 ) -> DataFrame:
-    """Merge a CDC batch into the aggregate state.
+    """Merge a CDC batch (change type in ``_change_type``) into the
+    aggregate state.
 
     One aggregation over the changes (signed: +row for
     insert/update_post, -row for delete/update_pre), then one
@@ -63,8 +63,8 @@ def apply_agg_delta(
     itself at scale."""
     keys = list(keys)
     sign = (
-        F.when(F.col(change_col).isin(*_ADD_TYPES), F.lit(1))
-        .when(F.col(change_col).isin(*_SUB_TYPES), F.lit(-1))
+        F.when(F.col("_change_type").isin(*_ADD_TYPES), F.lit(1))
+        .when(F.col("_change_type").isin(*_SUB_TYPES), F.lit(-1))
         .otherwise(F.lit(0))
     )
     d_aggs = [F.sum("__sign").alias("__d_n")]

@@ -127,33 +127,9 @@ def _collect_probe(
         (r["query_id"], int(r["label"]))
         for r in qcent.withColumn("__rn", F.row_number().over(wp))
         .filter(F.col("__rn") <= nprobe)
-        # rank-ordered per query, like the literal path — the
-        # adaptive cut consumes pairs in probe-rank order
-        .orderBy("query_id", "__rn")
-        .select("query_id", "label", "__rn")
+        .select("query_id", "label")
         .collect()
     ]
-
-
-def _adaptive_cut(
-    probe_pairs: list[tuple], cell_counts: dict, min_candidates: int
-) -> list[tuple]:
-    """Trim per-query RANK-ORDERED (query, cell) pairs at the
-    candidate-count floor: keep a cell while the cumulative stored
-    count of the query's strictly-preceding cells is < the floor
-    (the crossing cell is included) — the same selection rule as
-    operators/similarity.ivf_probe_adaptive, applied driver-side
-    over the manifest's cell_counts.  Pure metadata arithmetic:
-    probe-pairs and counts are both model-parameter scale, the
-    corpus is never touched."""
-    out: list[tuple] = []
-    cum: dict = {}
-    for qid, cell in probe_pairs:
-        prev = cum.get(qid, 0)
-        if prev < min_candidates:
-            out.append((qid, cell))
-            cum[qid] = prev + int(cell_counts.get(str(cell), 0))
-    return out
 
 
 def _written(catalog: ManifestCatalog, bucket_dirs: dict) -> DataFrame:
@@ -241,11 +217,10 @@ def ivf_assign_cells(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    out_col: str = "cell",
     max_literal_rows: int = 1 << 16,
 ) -> DataFrame:
     """Nearest-stored-centroid cell assignment, fully IN-PLAN: append
-    ``out_col`` (int) to every row of ``df`` without collecting any
+    ``cell`` (int) to every row of ``df`` without collecting any
     assignment to the driver — the ingest-side counterpart of the
     query router (same cosine/6dp/label-asc contract, so a vector
     routes to the cell it was stored in).
@@ -260,7 +235,7 @@ def ivf_assign_cells(
     if len(rows) <= max_literal_rows:
         CL, LBL = _centroid_literals(rows)
         top1 = _probe_cells_expr(CL, LBL, vec_col, nprobe=1)
-        return df.withColumn(out_col, F.element_at(top1, 1).cast("int"))
+        return df.withColumn("cell", F.element_at(top1, 1).cast("int"))
     ex = df.select(
         F.col(id_col).alias("__aid"),
         F.posexplode(F.col(vec_col).cast("array<double>")).alias("pos0", "v"),
@@ -287,7 +262,7 @@ def ivf_assign_cells(
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select(
-            F.col("__aid").alias(id_col), F.col("label").cast("int").alias(out_col)
+            F.col("__aid").alias(id_col), F.col("label").cast("int").alias("cell")
         )
     )
     return df.join(assign, id_col)
@@ -345,7 +320,7 @@ def append_ivfpq_store(
     batch = batch.withColumn(vec_col, F.col(vec_col).cast(stored_vec_type))
     if cell_col is None:
         cent = _routing_centroids(catalog, table, manifest)
-        batch = ivf_assign_cells(cent, batch, id_col, vec_col, out_col="cell")
+        batch = ivf_assign_cells(cent, batch, id_col, vec_col)
         cell_col = "cell"
     df = pq_encode(
         batch.select(
@@ -492,14 +467,13 @@ def rebalance_ivfpq_store(
     catalog: ManifestCatalog,
     table: str,
     max_cell_rows: int,
-    iters: int = 1,
 ) -> dict[int, list[int]]:
     """Split hot cells — the maintenance leg that keeps probed-cell
     pruning effective as appends concentrate (write → append → compact
     → delete → REBALANCE): every cell whose manifest ``cell_counts``
     exceeds ``max_cell_rows`` is 2-means-split
     (``pq_train(num_subspaces=1, num_centroids=2)`` over JUST that
-    cell's rows — deterministic id%2 init + ``iters`` Lloyd steps,
+    cell's rows — deterministic id%2 init + one Lloyd step,
     the engine's standard fixed-iteration playbook) and rewritten as
     two cells; the lower sub-cell keeps the old cell id so routing
     against a stale centroid snapshot still finds it.
@@ -578,7 +552,7 @@ def rebalance_ivfpq_store(
             )
             cb2 = pq_train(
                 rows, "__split_sid", vec_col,
-                num_subspaces=1, num_centroids=2, iters=iters,
+                num_subspaces=1, num_centroids=2,
             )
             rows = rows.drop("__split_sid")
             new_id = next_id
@@ -673,15 +647,13 @@ def maybe_rebalance(
     catalog: ManifestCatalog,
     table: str,
     max_cell_rows: int,
-    max_passes: int = 4,
-    iters: int = 1,
 ) -> dict[int, list[int]]:
     """Rebalance POLICY (the :meth:`ManifestCatalog.maybe_optimize`
     of cell balance): call after ingest (or from a foreachBatch) and
-    hot cells split until none exceeds ``max_cell_rows`` or
-    ``max_passes`` passes ran — each pass at most halves the worst
-    cell, so the pass cap bounds the rewrite budget per ingest while
-    quiet stores never pay anything (the check is one manifest read).
+    hot cells split until none exceeds ``max_cell_rows`` or four
+    passes ran — each pass at most halves the worst cell, so the pass
+    cap bounds the rewrite budget per ingest while quiet stores never
+    pay anything (the check is one manifest read).
     Unsplittable cells (duplicate vectors) stop looping via the empty
     split map. Returns the union of all passes' split maps: a cell
     that splits in several passes accumulates every id it shed
@@ -693,10 +665,8 @@ def maybe_rebalance(
     manifest read when there is nothing pending)."""
     _apply_centroid_patch(catalog, table)
     out: dict[int, list[int]] = {}
-    for _ in range(max_passes):
-        split = rebalance_ivfpq_store(
-            catalog, table, max_cell_rows, iters=iters
-        )
+    for _ in range(4):
+        split = rebalance_ivfpq_store(catalog, table, max_cell_rows)
         if not split:
             break
         for c, ids in split.items():
@@ -718,29 +688,16 @@ def ivfpq_store_topk(
     queries: DataFrame,
     query_id: str,
     vec_col: str,
-    k: int = 5,
     nprobe: int = 2,
-    shortlist_factor: int = 5,
-    round_dp: int = 6,
-    exclude_self: bool = True,
-    min_candidates: int | None = None,
 ) -> tuple[DataFrame, list[int]]:
-    """IVFADC over the persisted index: coarse-route against the
+    """IVFADC top-5 over the persisted index (each query's own id
+    excluded): coarse-route against the
     stored centroids, read ONLY the probed cells' bucket dirs, ADC on
     the STORED codes (no training or encoding at query time), exact
     squared-L2 re-rank on the same probed rows' raw vectors. Returns
     ``(result, probed_cells)`` — result is (query_id, match_id, l2sq)
     like `operators/pq.ivfpq_topk`, and matches it exactly whenever
     the probe sets agree (same codebook, same rounding).
-
-    With ``min_candidates`` set, ``nprobe`` is ignored and each query
-    probes its best-ranked cells until they together hold at least
-    that many stored vectors (same selection rule as operators/
-    similarity.ivf_probe_adaptive).  The counts come from the
-    manifest's ``cell_counts`` — maintained exactly by write and by
-    every CAS append — so the probe decision is METADATA-ONLY: no
-    corpus scan, no count query, just driver arithmetic over
-    kilobytes.
 
     The 100 TB shape this proves: the candidate scan is a
     storage-level dir prune (nprobe/cells of the BYTES), the scanned
@@ -758,20 +715,7 @@ def ivfpq_store_topk(
     cb = _codebook_from_manifest(manifest)
     id_col = manifest["ivf_id_col"]
     cent = _routing_centroids(catalog, table, manifest)
-    if min_candidates is not None:
-        counts = manifest.get("cell_counts")
-        if not counts:
-            raise ValueError(
-                f"table {table} has no cell_counts in its manifest "
-                "(written before adaptive probing existed) — rewrite "
-                "the store or query with a fixed nprobe"
-            )
-        ranked = _collect_probe(
-            cent, queries, query_id, vec_col, nprobe=manifest["n_buckets"]
-        )
-        probed_rows = _adaptive_cut(ranked, counts, min_candidates)
-    else:
-        probed_rows = _collect_probe(cent, queries, query_id, vec_col, nprobe)
+    probed_rows = _collect_probe(cent, queries, query_id, vec_col, nprobe)
     spark = queries.sparkSession
     from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -792,12 +736,12 @@ def ivfpq_store_topk(
     # raw vector through the shortlist window, so the exact squared-L2
     # runs on the surviving rows in place — no second read of the
     # probed dirs, no shortlist join. WindowGroupLimit turns the
-    # rank<=k*shortlist filter into partial per-partition top-k, so
-    # the exchange carries at most k*shortlist rows per query per map
+    # rank<=25 shortlist filter into partial per-partition top-k, so
+    # the exchange carries at most 25 rows per query per map
     # partition (each +dim doubles wide — far cheaper than a second
     # scan + broadcast join at any probe fraction). Both windows
     # partition on query_id, so the re-rank reuses the same exchange.
-    dtable = _query_dtable(vec_col, cb, round_dp)
+    dtable = _query_dtable(vec_col, cb)
     q = queries.select(
         F.col(query_id).alias("query_id"),
         dtable.alias("__dt"),
@@ -809,24 +753,25 @@ def ivfpq_store_topk(
         "cell",
         F.col(vec_col).cast("array<double>").alias("__cv"),
     )
-    scored = c.join(F.broadcast(probed.join(q, "query_id")), "cell")
-    if exclude_self:
-        scored = scored.filter(F.col("match_id") != F.col("query_id"))
-    scored = scored.withColumn("adc_dist", F.round(_adc_dist(), round_dp))
+    scored = (
+        c.join(F.broadcast(probed.join(q, "query_id")), "cell")
+        .filter(F.col("match_id") != F.col("query_id"))
+        .withColumn("adc_dist", F.round(_adc_dist(), 6))
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_dist").asc(), F.col("match_id").asc()
     )
     short = (
         scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k * shortlist_factor)
-        .withColumn("l2sq", _fold_l2sq(F.col("__qv"), F.col("__cv"), round_dp))
+        .filter(F.col("__rn") <= 25)
+        .withColumn("l2sq", _fold_l2sq(F.col("__qv"), F.col("__cv")))
     )
     w2 = Window.partitionBy("query_id").orderBy(
         F.col("l2sq").asc(), F.col("match_id").asc()
     )
     result = (
         short.withColumn("__rn2", F.row_number().over(w2))
-        .filter(F.col("__rn2") <= k)
+        .filter(F.col("__rn2") <= 5)
         .select("query_id", "match_id", "l2sq")
     )
     return result, cells

@@ -25,12 +25,10 @@ def equi_join(
     right: DataFrame,
     on: Sequence[str] | str,
     how: str = "left",
-    broadcast_right: bool = False,
 ) -> DataFrame:
     """J1 — USING-style equi-join (reference
     ``medallion/silver/b2s_company_house.py:107-110``)."""
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, on, how)
+    return left.join(right, on, how)
 
 
 def anti_join(
@@ -55,20 +53,12 @@ def asof_join(
     right_time: str,
     right_cols: Sequence[str],
     direction: str = "backward",
-    tolerance_seconds: float | None = None,
 ) -> DataFrame:
     """As-of join: for each left row, the latest right row with
     ``right_time <= left_time`` (direction="backward"), or the
     EARLIEST right row with ``right_time >= left_time``
     (direction="forward" — the next-quote/next-observation lookup,
     e.g. order → first subsequent fill), per ``on`` key.
-
-    ``tolerance_seconds`` bounds the match gap (pandas
-    ``merge_asof(tolerance=...)`` semantics): a carried match whose
-    timestamp is further than the tolerance from the left row's is
-    nulled out — a quote from last week should not fill today's
-    order. Row-local post-filter on the carried match time; the plan
-    shape (one key shuffle, one window) is unchanged.
 
     Implemented union-sort style: tag sides, union, single window
     ordered by time, ``last(value, ignorenulls)`` carries the most
@@ -142,15 +132,6 @@ def asof_join(
         "__m", F.when(F.col("__side") == 0, F.struct(*m_fields))
     )
     carried = carried.withColumn("__m", pick("__m"))
-    if tolerance_seconds is not None:
-        gap_ok = (
-            F.abs(
-                F.col("__t").cast("double")
-                - F.col("__m.__mt").cast("double")
-            )
-            <= F.lit(float(tolerance_seconds))
-        )
-        carried = carried.withColumn("__m", F.when(gap_ok, F.col("__m")))
     out = carried.filter(F.col("__side") == 1)
     for c in right_cols:
         out = out.withColumn(f"__r_{c}", F.col(f"__m.{c}"))
@@ -165,28 +146,19 @@ def salted_join(
     right: DataFrame,
     keys: Sequence[str],
     salt_col: str,
-    n_salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-mitigated equi-join: the left side spreads each hot key
-    over ``n_salt`` sub-keys (deterministic salt from ``salt_col``,
-    no RNG — reruns shuffle identically), the right side replicates
-    each row ``n_salt`` times. One key's rows land on ``n_salt``
-    reducers instead of one, at the cost of an ``n_salt``× copy of
-    the (small) right side. Same result set as the unsalted join.
+    """Skew-mitigated inner equi-join: the left side spreads each hot
+    key over 8 sub-keys (deterministic salt from ``salt_col``, no RNG
+    — reruns shuffle identically), the right side replicates each row
+    8 times. One key's rows land on 8 reducers instead of one, at the
+    cost of an 8× copy of the (small) right side. Same result set as
+    the unsalted join.
 
     Use when one side has heavy key skew AND the right side is too
     big to broadcast; otherwise AQE's skew-join split (enabled in the
     session factory) usually suffices.
-
-    Only left-preserving join types are valid: a right/full outer
-    would surface each unmatched right row once per salt replica.
     """
-    if how not in ("inner", "left", "left_outer", "left_semi", "left_anti"):
-        raise ValueError(
-            f"salted_join supports left-preserving joins only, got how={how!r} "
-            "(an unmatched right row would appear once per salt replica)"
-        )
+    n_salt = 8
     keys = list(keys)
     if salt_col in keys:
         raise ValueError(
@@ -201,7 +173,7 @@ def salted_join(
     salted_right = right.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
     )
-    return salted_left.join(salted_right, [*keys, "__salt"], how).drop("__salt")
+    return salted_left.join(salted_right, [*keys, "__salt"], "inner").drop("__salt")
 
 
 def range_join(
@@ -211,26 +183,22 @@ def range_join(
     left_time: str,
     right_time: str,
     before_seconds: int = 0,
-    after_seconds: int = 0,
-    bucket_seconds: int | None = None,
     how: str = "inner",
 ) -> DataFrame:
     """Time-range (interval) join: pair each left row with the right
     rows of the same key whose ``right_time`` falls in
-    ``[left_time − before, left_time + after]``.
+    ``[left_time − before, left_time]``.
 
     Spark OSS has no range-join optimization — a plain non-equi
     condition degrades to a per-key cross join with a post-filter,
     which explodes on hot keys. This implements the standard
     **bucketed range join**: the left row is stamped with its time
-    bucket (``floor(epoch / bucket_seconds)``), the right row is
-    replicated to every bucket its match window can overlap
-    (``⌈(before+after)/bucket⌉ + 1`` copies — bounded, independent of
-    row counts), and the join becomes an equi-join on
-    ``(keys…, bucket)`` with the exact range predicate as a residual.
-    Shuffle is on (key, bucket) — hot keys spread over time buckets;
-    replication cost is the dial (default bucket = window span → ≤ 2
-    copies).
+    bucket (``floor(epoch / bucket)``, bucket = the window span), the
+    right row is replicated to every bucket its match window can
+    overlap (≤ 2 copies — bounded, independent of row counts), and
+    the join becomes an equi-join on ``(keys…, bucket)`` with the
+    exact range predicate as a residual. Shuffle is on (key, bucket)
+    — hot keys spread over time buckets.
 
     Right-side non-key columns must not collide with left column
     names (pre-alias them) — both sides' payloads survive unrenamed.
@@ -239,8 +207,7 @@ def range_join(
     """
     if how not in ("inner", "left", "left_outer"):
         raise ValueError(f"range_join supports inner/left only, got {how!r}")
-    if bucket_seconds is None:
-        bucket_seconds = max(before_seconds + after_seconds, 1)
+    bucket_seconds = max(before_seconds, 1)
     on = list(on)
     lt = F.col(left_time).cast("timestamp").cast("long")
     rt = F.col(right_time).cast("timestamp").cast("long")
@@ -249,7 +216,7 @@ def range_join(
         "__bucket",
         F.explode(
             F.sequence(
-                F.floor((rt - after_seconds) / bucket_seconds),
+                F.floor(rt / bucket_seconds),
                 F.floor((rt + before_seconds) / bucket_seconds),
             )
         ),
@@ -265,7 +232,7 @@ def range_join(
     cond = (
         cond
         & (rts >= lts - F.lit(before_seconds))
-        & (rts <= lts + F.lit(after_seconds))
+        & (rts <= lts)
     )
     joined = l.join(r, cond, "inner" if how == "inner" else "left_outer")
     return joined.select(*lcols, *rcols)

@@ -17,12 +17,9 @@ and COMPRESSED non-interlaced 8-bit RGB/RGBA PNG
 (:func:`png_rgb8_blob` / :func:`decode_png_stats` — stdlib zlib
 inflate, all five scanline filters, mandatory chunk CRCs), each
 encoding JVM-side and decoding with numpy, driver-gated against
-blob-free oracles. DCT/entropy-coded formats (JPEG/MP4/...) remain
-behind
-``NotImplementedError`` seams with deterministic ``fake`` stand-ins
-(this container ships no PIL/ffmpeg); the Spark plumbing — schema,
-Arrow batching, UDF signatures, 1:1 null contracts — is identical
-either way.
+blob-free oracles. DCT/entropy-coded formats (JPEG/MP4/...) are not
+decoded (no PIL/ffmpeg); :func:`sample_frames` chunks payloads
+deterministically instead.
 """
 
 from __future__ import annotations
@@ -39,12 +36,10 @@ from pyspark.sql.types import (
 )
 
 
-def with_binary_payload(
-    df: DataFrame, text_col: str, out_col: str = "payload"
-) -> DataFrame:
-    """Synthesize a binary payload column from text (UTF-8 bytes) —
+def with_binary_payload(df: DataFrame, text_col: str) -> DataFrame:
+    """Synthesize a binary ``payload`` column from text (UTF-8 bytes) —
     the fixture path standing in for real image/audio bytes."""
-    return df.withColumn(out_col, F.encode(F.col(text_col), "utf-8"))
+    return df.withColumn("payload", F.encode(F.col(text_col), "utf-8"))
 
 
 def binary_stats(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:
@@ -77,8 +72,8 @@ def _le_hex(col, nbytes: int):
     return F.concat(*parts)
 
 
-def pcm16_wav_blob(samples, sample_rate: int = 8000):
-    """Canonical 44-byte-header mono PCM16 WAV blob from an
+def pcm16_wav_blob(samples):
+    """Canonical 44-byte-header mono 8 kHz PCM16 WAV blob from an
     ``array<int>`` Column of samples — encoded ENTIRELY JVM-side
     (hex assembly + one ``unhex``), so building a million audio
     payloads is a projection, not a Python pass. Samples are taken
@@ -94,6 +89,7 @@ def pcm16_wav_blob(samples, sample_rate: int = 8000):
         "",
     )
     data_size = (F.size(samples) * 2).cast("long")
+    sample_rate = 8000
     byte_rate = sample_rate * 2  # mono, 2 bytes/sample
     header_hex = F.concat(
         F.lit("52494646"),            # "RIFF"
@@ -125,9 +121,7 @@ def decode_wav_stats(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:
     ``peak_abs`` (max |sample|), ``sum_amp`` (exact int64 — callers
     derive means JVM-side so float rounding stays in ONE engine).
 
-    Unlike the ``fake`` feature backend this is a real codec for a
-    real public format; JPEG/MP4 remain behind the
-    ``NotImplementedError`` seam (no codecs in this container)."""
+    A real codec for a real public format."""
     id_type = df.schema[id_col].dataType
     schema = StructType(
         [
@@ -515,9 +509,7 @@ def png_rgb8_blob(width, height, pixel):
     return _png_assemble(width, height, idat_hex, n)
 
 
-def encode_png_rgb8(
-    df: DataFrame, width, height, pixel, out_col: str = "png"
-) -> DataFrame:
+def encode_png_rgb8(df: DataFrame, width, height, pixel) -> DataFrame:
     """Bulk PNG encode: same bytes as :func:`png_rgb8_blob`
     (test-pinned), staged so each expensive intermediate — the
     filtered scanline array, its hex rendering, the adler32, the
@@ -527,7 +519,7 @@ def encode_png_rgb8(
     repeated subtrees inside one projection; staging across projects
     is the reliable fix, and CollapseProject keeps the stages apart
     because each alias is non-cheap and multiply-referenced.
-    Appends ``out_col`` (binary) and preserves every input column."""
+    Appends ``png`` (binary) and preserves every input column."""
     tmp = "__png_"
     s = df.withColumn(f"{tmp}raw", _png_raw_arr(width, height, pixel))
     raw = F.col(f"{tmp}raw")
@@ -542,7 +534,7 @@ def encode_png_rgb8(
         _png_idat_hex(F.col(f"{tmp}hex"), F.col(f"{tmp}ad"), F.col(f"{tmp}n")),
     )
     s = s.withColumn(
-        out_col,
+        "png",
         _png_assemble(width, height, F.col(f"{tmp}idat"), F.col(f"{tmp}n")),
     )
     return s.drop(f"{tmp}raw", f"{tmp}hex", f"{tmp}ad", f"{tmp}n", f"{tmp}idat")
@@ -714,31 +706,22 @@ def sample_frames(
     df: DataFrame,
     id_col: str,
     bin_col: str,
-    frame_bytes: int = 64,
-    stride: int = 4,
-    backend: str = "fake",
 ) -> DataFrame:
     """Frame sampling for container payloads (video/audio): one input
     row fans out to one output row per SAMPLED frame — the
     row-multiplying half of the multimodal family (``binary_stats``
     is 1:1).
 
-    ``backend="fake"``: the payload is treated as a flat concatenation
-    of ``frame_bytes``-sized chunks and every ``stride``-th chunk is
-    emitted with its frame index (the last chunk may be short). A real
-    backend (ffmpeg keyframe demux) plugs in at the same seam with the
-    same output contract: (id, frame_idx, frame).
+    The payload is treated as a flat concatenation of 64-byte chunks
+    and every 4th chunk is emitted with its frame index (the last
+    chunk may be short): (id, frame_idx, frame).
 
     Scale shape: Arrow-batched ``mapInPandas``, output size ≈ input
-    bytes / stride per partition — stride is the memory dial; the
-    downstream per-frame ops (dedup by frame hash, feature extract)
-    shuffle the SAMPLED set only, never the full container bytes.
+    bytes / 4 per partition; the downstream per-frame ops (dedup by
+    frame hash, feature extract) shuffle the SAMPLED set only, never
+    the full container bytes.
     """
-    if backend != "fake":
-        raise NotImplementedError(
-            f"frame-sample backend {backend!r}: no media codecs in this "
-            "environment; only the deterministic 'fake' chunker is wired"
-        )
+    frame_bytes, stride = 64, 4
     id_type = df.schema[id_col].dataType
     schema = StructType(
         [

@@ -83,13 +83,13 @@ def exact_percentiles(
     df: DataFrame,
     col: str,
     ps: list[float],
-    accuracy: int = 100_000,
 ) -> list[float | None]:
     """Exact interpolated percentiles of ``df[col]`` (Spark
     ``percentile()`` semantics, nulls ignored), returned as driver
     floats — intended to be re-injected as literals, which also
     removes the bounds broadcast-join the aggregate form needed."""
     ps = list(ps)
+    accuracy = 100_000
 
     def _sketch(acc: int):
         # bracket half-width in quantile space: the sketch's own rank

@@ -27,13 +27,12 @@ Why this is the 100-TB tier:
   makes Catalyst analysis/codegen the bottleneck (measured: ~20 s of
   plan time at M=16, K=16 before this formulation). Training cost
   per iteration is one corpus projection + one tiny
-  (M·K·subdim)-buffer aggregation; train on a sample at scale
-  (``sample_mod``).
+  (M·K·subdim)-buffer aggregation.
 
 Determinism (what lets a DuckDB oracle replay this exactly, unrolled
 iteration by iteration): init assigns row ``id % K`` (no RNG), every
-centroid component and every distance is rounded to ``round_dp``
-before it is compared or reused, argmin ties break on the lowest
+centroid component and every distance is rounded to ``ROUND_DP``
+decimals before it is compared or reused, argmin ties break on the lowest
 code, and a cluster that loses all its members is dropped (exactly
 what a GROUP BY produces — surviving codes keep their original
 labels). No partition-order dependence anywhere.
@@ -53,6 +52,9 @@ from end_to_end_etl_pipeline_spark.operators.similarity import (
 # Codes are stable labels (init cluster ids), not list positions —
 # a cluster emptied by a Lloyd step just disappears from the list.
 Codebook = list[list[tuple[int, list[float]]]]
+
+#: decimals every centroid component and distance is rounded to
+ROUND_DP = 6
 
 
 def _cb_literals(cb: Codebook) -> tuple[Column, Column]:
@@ -81,7 +83,7 @@ def _cb_literals(cb: Codebook) -> tuple[Column, Column]:
     return F.expr(cb_sql), F.expr(lb_sql)
 
 
-def _fold_l2sq(a: Column, b: Column, round_dp: int) -> Column:
+def _fold_l2sq(a: Column, b: Column) -> Column:
     """Rounded squared L2 between two array<double> columns — a
     sequential JVM fold (deterministic summation order)."""
     return F.round(
@@ -90,7 +92,7 @@ def _fold_l2sq(a: Column, b: Column, round_dp: int) -> Column:
             F.lit(0.0),
             lambda acc, x: acc + x,
         ),
-        round_dp,
+        ROUND_DP,
     )
 
 
@@ -98,7 +100,7 @@ def _subdim(cb: Codebook) -> int:
     return len(cb[0][0][1])
 
 
-def _codes_expr(v: Column, cb: Codebook, round_dp: int) -> Column:
+def _codes_expr(v: Column, cb: Codebook) -> Column:
     """``array<int>`` of M nearest-centroid code labels for vector
     ``v`` — one per-row expression, no window, no shuffle. Per
     subspace: argmin via ``array_min`` over (dist, position) structs
@@ -120,7 +122,7 @@ def _codes_expr(v: Column, cb: Codebook, round_dp: int) -> Column:
             cands = F.transform(
                 F.element_at(CB, m + 1),
                 lambda c, j: F.struct(
-                    _fold_l2sq(sub, c, round_dp).alias("d"), j.alias("j")
+                    _fold_l2sq(sub, c).alias("d"), j.alias("j")
                 ),
             )
             best_j = F.array_min(cands)["j"]
@@ -139,22 +141,15 @@ def pq_train(
     vec_col: str,
     num_subspaces: int = 16,
     num_centroids: int = 16,
-    iters: int = 1,
-    round_dp: int = 6,
-    sample_mod: int | None = None,
 ) -> Codebook:
-    """Train M per-subspace codebooks with ``iters`` Lloyd steps.
+    """Train M per-subspace codebooks with one Lloyd step.
 
     Init: row ``id % K`` seeds cluster k (deterministic, RNG-free).
     Each step: per-row nearest-code expression against the current
     literal codebook, then one groupBy(m, code) with subdim scalar
     ``avg`` buffers (map-side partial agg; the exchange carries
-    M·K·subdim doubles). Centroids are rounded to ``round_dp`` so
-    re-runs and cross-engine replays are bit-identical.
-
-    ``sample_mod``: train on the deterministic ``id % sample_mod == 0``
-    slice — the 100-TB knob; codebook quality needs a sample, not the
-    corpus."""
+    M·K·subdim doubles). Centroids are rounded to ``ROUND_DP`` so
+    re-runs and cross-engine replays are bit-identical."""
     dim = corpus.select(F.size(F.col(vec_col)).alias("d")).first()["d"]
     if dim % num_subspaces:
         raise ValueError(f"dim {dim} not divisible by M={num_subspaces}")
@@ -164,8 +159,6 @@ def pq_train(
     df = corpus.select(
         F.col(id_col).alias("__id"), F.col(vec_col).cast("array<double>").alias("__v")
     )
-    if sample_mod:
-        df = df.filter(F.col("__id") % sample_mod == 0)
     v = F.col("__v")
     M = num_subspaces
 
@@ -174,7 +167,7 @@ def pq_train(
         # element-wise means; empty groups simply don't appear.
         agg = assigned.groupBy("__m", "__code").agg(
             *[
-                F.round(F.avg(F.col("__sub")[i]), round_dp).alias(f"__a{i}")
+                F.round(F.avg(F.col("__sub")[i]), ROUND_DP).alias(f"__a{i}")
                 for i in range(subdim)
             ]
         )
@@ -214,20 +207,18 @@ def pq_train(
         F.pmod(F.col("__id"), F.lit(num_centroids)).cast("int"), M
     )
     cb = centroids_for(explode_subs(init_codes))
-    for _ in range(iters):
-        cb = centroids_for(explode_subs(_codes_expr(v, cb, round_dp)))
-    return cb
+    return centroids_for(explode_subs(_codes_expr(v, cb)))
 
 
-def pq_encode(df: DataFrame, vec_col: str, cb: Codebook, round_dp: int = 6) -> DataFrame:
+def pq_encode(df: DataFrame, vec_col: str, cb: Codebook) -> DataFrame:
     """Append ``pq_codes array<int>`` — M per-subspace nearest-centroid
     codes, computed in one per-row projection (this is the column a
     production table persists instead of the raw vectors)."""
     v = F.col(vec_col).cast("array<double>")
-    return df.withColumn("pq_codes", _codes_expr(v, cb, round_dp))
+    return df.withColumn("pq_codes", _codes_expr(v, cb))
 
 
-def _query_dtable(vec_col: str, cb: Codebook, round_dp: int) -> Column:
+def _query_dtable(vec_col: str, cb: Codebook) -> Column:
     """A query row's M×K ADC distance table as one nested-array
     column: exact subspace squared-L2 to every codebook centroid,
     rounded. Tables are dense over code labels 0..K-1; a dropped
@@ -247,7 +238,6 @@ def _query_dtable(vec_col: str, cb: Codebook, round_dp: int) -> Column:
                 _fold_l2sq(
                     sub,
                     F.element_at(cbm, F.array_position(lbm, code).cast("int")),
-                    round_dp,
                 )
             ),
         )
@@ -276,11 +266,9 @@ def _exact_rerank(
     query_id: str,
     corpus_id: str,
     vec_col: str,
-    k: int,
-    round_dp: int,
 ) -> DataFrame:
-    """Exact squared-L2 re-rank of an ADC shortlist against the raw
-    vectors. ``short`` is (query_id, match_id) — candidate-keyed, so
+    """Exact squared-L2 top-5 re-rank of an ADC shortlist against the
+    raw vectors. ``short`` is (query_id, match_id) — candidate-keyed, so
     the raw-vector side is touched for shortlist rows only."""
     q = queries.select(
         F.col(query_id).alias("query_id"),
@@ -294,14 +282,14 @@ def _exact_rerank(
         F.broadcast(short)
         .join(q, "query_id")
         .join(c, "match_id")
-        .withColumn("l2sq", _fold_l2sq(F.col("__qv"), F.col("__cv"), round_dp))
+        .withColumn("l2sq", _fold_l2sq(F.col("__qv"), F.col("__cv")))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("l2sq").asc(), F.col("match_id").asc()
     )
     return (
         exact.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
+        .filter(F.col("__rn") <= 5)
         .select("query_id", "match_id", "l2sq")
     )
 
@@ -313,12 +301,11 @@ def pq_topk_adc(
     corpus_id: str,
     vec_col: str,
     cb: Codebook,
-    k: int = 5,
-    round_dp: int = 6,
-    exclude_self: bool = True,
+    k: int,
 ) -> DataFrame:
     """Asymmetric-distance top-k: (query_id, match_id, adc_dist),
-    smallest approximate squared-L2 first, ties to the lowest id.
+    smallest approximate squared-L2 first, ties to the lowest id, each
+    query's own id excluded.
 
     Each query row precomputes its M×K distance table as a nested
     array column (exact subspace distances, rounded; tables are dense
@@ -329,13 +316,14 @@ def pq_topk_adc(
     per-query top-k is a ``row_number`` window; Spark's
     WindowGroupLimit turns the rank filter into partial per-partition
     top-k, so the exchange carries ≤ k rows per partition per query."""
-    dtable = _query_dtable(vec_col, cb, round_dp)
+    dtable = _query_dtable(vec_col, cb)
     q = queries.select(F.col(query_id).alias("query_id"), dtable.alias("__dt"))
     c = encoded.select(F.col(corpus_id).alias("match_id"), "pq_codes")
-    scored = c.join(F.broadcast(q), F.lit(True))
-    if exclude_self:
-        scored = scored.filter(F.col("match_id") != F.col("query_id"))
-    scored = scored.withColumn("adc_dist", F.round(_adc_dist(), round_dp))
+    scored = (
+        c.join(F.broadcast(q), F.lit(True))
+        .filter(F.col("match_id") != F.col("query_id"))
+        .withColumn("adc_dist", F.round(_adc_dist(), ROUND_DP))
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_dist").asc(), F.col("match_id").asc()
     )
@@ -354,38 +342,25 @@ def pq_topk_rerank(
     corpus_id: str,
     vec_col: str,
     cb: Codebook,
-    k: int = 5,
-    shortlist_factor: int = 5,
-    round_dp: int = 6,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """ADC shortlist → exact re-rank (the IVFADC+R pattern): the
-    compressed scan keeps only ``k × shortlist_factor`` candidates per
-    query, then exact squared-L2 re-scores just those against the raw
+    compressed scan keeps only 25 candidates per query (5 × the
+    top-5), then exact squared-L2 re-scores just those against the raw
     vectors. Returns (query_id, match_id, l2sq) — exact distances,
-    smallest first, ties to the lowest id.
+    smallest first, ties to the lowest id, each query's own id
+    excluded.
 
     This is the shape that makes PQ usable on distance-concentrated
     embeddings: ADC ordering is noisy at the top-k boundary but very
     likely to retain the true neighbors in a modest shortlist, and the
-    re-rank touches raw vectors for only ``k·factor·|Q|`` rows — the
+    re-rank touches raw vectors for only ``25·|Q|`` rows — the
     100-TB scan still reads codes, not vectors (the re-rank side is a
     candidate-keyed semi-join, not a second corpus scan, when the
     vector table is keyed storage)."""
     short = pq_topk_adc(
-        queries,
-        encoded,
-        query_id,
-        corpus_id,
-        vec_col,
-        cb,
-        k=k * shortlist_factor,
-        round_dp=round_dp,
-        exclude_self=exclude_self,
+        queries, encoded, query_id, corpus_id, vec_col, cb, k=25
     ).select("query_id", "match_id")
-    return _exact_rerank(
-        short, queries, corpus, query_id, corpus_id, vec_col, k, round_dp
-    )
+    return _exact_rerank(short, queries, corpus, query_id, corpus_id, vec_col)
 
 
 def ivfpq_topk(
@@ -397,18 +372,14 @@ def ivfpq_topk(
     vec_col: str,
     cell_col: str,
     cb: Codebook,
-    k: int = 5,
-    nprobe: int = 2,
-    shortlist_factor: int = 5,
-    round_dp: int = 6,
-    exclude_self: bool = True,
     dim: int | None = None,
 ) -> DataFrame:
     """IVFADC — the full production ANN retrieval stack in one plan:
-    coarse IVF routing picks ``nprobe`` cells per query, the ADC pass
-    scores ONLY the probed cells' PQ codes, and exact squared-L2
-    re-ranks the shortlist against raw vectors. Returns
-    (query_id, match_id, l2sq), smallest first, ties to lowest id.
+    coarse IVF routing picks 2 cells per query, the ADC pass scores
+    ONLY the probed cells' PQ codes, and exact squared-L2 re-ranks the
+    25-row shortlist against raw vectors. Returns the top-5
+    (query_id, match_id, l2sq), smallest first, ties to lowest id,
+    each query's own id excluded.
 
     This composes the two scale levers the tiers provide separately:
 
@@ -422,12 +393,12 @@ def ivfpq_topk(
     At 100 TB: the probe is centroid-model-sized, the per-cell join is
     an equi-join on the cell key (broadcast side = queries × nprobe ×
     (M×K table) — model-parameter scale), and the re-rank touches raw
-    vectors for k·factor·|Q| rows only. ``encoded`` must carry
+    vectors for 25·|Q| rows only. ``encoded`` must carry
     ``cell_col`` (encode once, store codes + cell together)."""
     probed = ivf_probe_fn(
-        queries, corpus, query_id, vec_col, cell_col, nprobe=nprobe, dim=dim
+        queries, corpus, query_id, vec_col, cell_col, dim=dim
     )
-    dtable = _query_dtable(vec_col, cb, round_dp)
+    dtable = _query_dtable(vec_col, cb)
     q = queries.select(F.col(query_id).alias("query_id"), dtable.alias("__dt"))
     qp = probed.join(q, "query_id").withColumnRenamed("label", "__cell")
     c = encoded.select(
@@ -435,18 +406,17 @@ def ivfpq_topk(
         "pq_codes",
         F.col(cell_col).alias("__cell"),
     )
-    scored = c.join(F.broadcast(qp), "__cell")
-    if exclude_self:
-        scored = scored.filter(F.col("match_id") != F.col("query_id"))
-    scored = scored.withColumn("adc_dist", F.round(_adc_dist(), round_dp))
+    scored = (
+        c.join(F.broadcast(qp), "__cell")
+        .filter(F.col("match_id") != F.col("query_id"))
+        .withColumn("adc_dist", F.round(_adc_dist(), ROUND_DP))
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_dist").asc(), F.col("match_id").asc()
     )
     short = (
         scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k * shortlist_factor)
+        .filter(F.col("__rn") <= 25)
         .select("query_id", "match_id")
     )
-    return _exact_rerank(
-        short, queries, corpus, query_id, corpus_id, vec_col, k, round_dp
-    )
+    return _exact_rerank(short, queries, corpus, query_id, corpus_id, vec_col)

@@ -70,7 +70,6 @@ def kanonymity_generalize(
     id_cols: Sequence[str],
     ladder: Sequence[Mapping[str, Column]],
     k: int,
-    level_col: str = "anon_level",
 ) -> DataFrame:
     """Publish each row at the first ladder rung where its residual
     equivalence class reaches ``k``; suppress rows that exhaust the
@@ -79,7 +78,7 @@ def kanonymity_generalize(
     ``ladder`` is ordered most-specific-first; every rung maps the
     SAME output column names to that rung's (progressively coarser)
     QI expressions — a fully generalized column is ``F.lit(MASK)``.
-    Returns ``id_cols`` + ``level_col`` (0-based rung index;
+    Returns ``id_cols`` + ``anon_level`` (0-based rung index;
     ``len(ladder)`` = suppressed, all QI columns masked) + the QI
     columns as strings.  NULL QI values form classes of their own
     (null-safe counting), matching SQL window-count semantics.
@@ -130,7 +129,7 @@ def kanonymity_generalize(
         published.append(
             joined.filter(F.col("__class_n") >= k).select(
                 *id_cols,
-                F.lit(lvl).cast("int").alias(level_col),
+                F.lit(lvl).cast("int").alias("anon_level"),
                 *[F.col(f"__qi_{n}").alias(n) for n in qi_names],
             )
         )
@@ -138,7 +137,7 @@ def kanonymity_generalize(
 
     suppressed = remaining.select(
         *id_cols,
-        F.lit(len(ladder)).cast("int").alias(level_col),
+        F.lit(len(ladder)).cast("int").alias("anon_level"),
         *[F.lit(MASK).alias(n) for n in qi_names],
     )
     return reduce(DataFrame.unionByName, published + [suppressed])

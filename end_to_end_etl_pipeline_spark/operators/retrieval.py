@@ -37,11 +37,6 @@ from end_to_end_etl_pipeline_spark.operators.similarity import cosine, dot
 def bm25_scores(
     docs_words: DataFrame,
     qterms: DataFrame,
-    doc_col: str = "doc_id",
-    words_col: str = "words",
-    k1: float = 1.2,
-    b: float = 0.75,
-    max_df_frac: float = 0.5,
 ) -> DataFrame:
     """Lucene-form BM25 (idf = ln((N−df+0.5)/(df+0.5)+1)) over an
     in-plan inverted index — the single home of the scoring math
@@ -49,7 +44,7 @@ def bm25_scores(
     persisted-index path in operators/text_index.py reuses the same
     constants against stored postings).
 
-    ``docs_words`` is (doc_col, words_col array<string>); ``qterms``
+    ``docs_words`` is (doc_id, words array<string>); ``qterms``
     is (query_id, word).  Scale shape: postings are built ONLY for
     query terms (the per-row ``filter`` against the broadcast term
     set runs BEFORE the explode — the index never materializes for
@@ -58,9 +53,9 @@ def bm25_scores(
     doc-keyed join), df is a window over the already-reduced
     postings (NOT a broadcast-joined aggregate, which would re-run
     the corpus tokenization through its own job), and terms with
-    df > ``max_df_frac``·N are dropped before scoring (the stopword
-    cap that bounds every posting list).  Returns
-    (query_id, doc_col, bm25) rounded to 6dp.
+    df > 0.5·N are dropped before scoring (the stopword cap that
+    bounds every posting list).  Returns (query_id, doc_id, bm25)
+    rounded to 6dp.
 
     ONE tokenization pass (r13, VERDICT r12 #2): the corpus used to
     be tokenized TWICE — once for the dl/N/avgdl statistics (whose
@@ -89,9 +84,11 @@ def bm25_scores(
     persisted text_index path).
 
     Float-parity note: ``k1 + 1.0`` and ``1 − b`` are computed in
-    Python and injected as literals; for the defaults they are
-    EXACTLY the doubles 2.2 and 0.25 the DuckDB oracles spell out,
-    so scores replay bit-identically."""
+    Python and injected as literals; they are EXACTLY the doubles 2.2
+    and 0.25 the DuckDB oracles spell out, so scores replay
+    bit-identically."""
+    doc_col, words_col = "doc_id", "words"
+    k1, b = 1.2, 0.75
     uniq = qterms.select("word").distinct()
     qw = uniq.agg(F.collect_set("word").alias("__qws"))
     base = docs_words.crossJoin(F.broadcast(qw)).select(
@@ -121,7 +118,7 @@ def bm25_scores(
     scored = (
         tf.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("word")))
         .crossJoin(F.broadcast(stats))
-        .filter(F.col("df") <= F.lit(max_df_frac) * F.col("n"))
+        .filter(F.col("df") <= F.lit(0.5) * F.col("n"))
         .join(F.broadcast(qterms), "word")
         .withColumn(
             "w",
@@ -161,30 +158,16 @@ def topk_ranks(
     )
 
 
-def rrf_fuse(
-    arms: Iterable[Tuple[DataFrame, str]],
-    query_col: str = "query_id",
-    id_col: str = "doc_id",
-    k: int = 60,
-    arm_topk: int = 20,
-    topk: int = 10,
-    out_col: str = "rrf",
-    weights: Iterable[float] | None = None,
-) -> DataFrame:
-    """Fuse retrieval arms with reciprocal-rank fusion.
+def rrf_fuse(arms: Iterable[Tuple[DataFrame, str]]) -> DataFrame:
+    """Fuse retrieval arms with reciprocal-rank fusion (k = 60).
 
     ``arms`` is a sequence of ``(scored_frame, score_col)`` pairs;
-    each frame must carry ``query_col`` and ``id_col``.  Returns
-    ``(query_col, id_col, out_col, n_arms)`` — the fused score
-    (6dp) and how many arms retrieved the document — limited to the
-    per-query fused top-``topk`` (ties to lowest id).
+    each frame must carry ``query_id`` and ``doc_id``.  Returns
+    ``(query_id, doc_id, rrf, n_arms)`` — the fused score (6dp) and
+    how many arms retrieved the document — limited to the per-query
+    fused top-10 (ties to lowest id).
 
-    ``weights`` (optional, one per arm, default all 1.0) scales each
-    arm's contribution to ``w_i / (k + rank)`` — the conventional
-    weighted-RRF dial for boosting a trusted arm without score
-    calibration.
-
-    A document missing from an arm's top-``arm_topk`` simply
+    A document missing from an arm's top-20 simply
     contributes nothing for that arm (the conventional RRF treatment
     of truncated rankings) — no outer join, no sentinel ranks.
 
@@ -197,28 +180,29 @@ def rrf_fuse(
     arms = list(arms)
     if not arms:
         raise ValueError("rrf_fuse needs at least one arm")
-    ws = [1.0] * len(arms) if weights is None else [float(w) for w in weights]
-    if len(ws) != len(arms):
-        raise ValueError(f"{len(ws)} weights for {len(arms)} arms")
     ranked = [
-        topk_ranks(df, query_col, id_col, score_col, arm_topk).withColumn(
-            "__w", F.lit(w)
+        topk_ranks(df, "query_id", "doc_id", score_col, 20).withColumn(
+            "__w", F.lit(1.0)
         )
-        for (df, score_col), w in zip(arms, ws)
+        for df, score_col in arms
     ]
     allranks = reduce(DataFrame.unionByName, ranked)
-    fused = allranks.groupBy(query_col, id_col).agg(
-        F.round(F.sum(F.col("__w") / (F.lit(k) + F.col("__rnk"))), 6).alias(out_col),
+    fused = allranks.groupBy("query_id", "doc_id").agg(
+        F.round(F.sum(F.col("__w") / (F.lit(60) + F.col("__rnk"))), 6).alias("rrf"),
         F.count(F.lit(1)).alias("n_arms"),
     )
-    w = Window.partitionBy(query_col).orderBy(
-        F.col(out_col).desc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("rrf").desc(), F.col("doc_id").asc()
     )
     return (
         fused.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= topk)
-        .select(query_col, id_col, out_col, "n_arms")
+        .filter(F.col("__rn") <= 10)
+        .select("query_id", "doc_id", "rrf", "n_arms")
     )
+
+
+#: the MMR twins' pick count and relevance weight
+MMR_K, MMR_LAM = 5, 0.7
 
 
 def _mmr_base(
@@ -256,15 +240,14 @@ def mmr_select(
     id_col: str,
     vec_col: str,
     rel_col: str,
-    k: int = 5,
-    lam: float = 0.7,
 ) -> DataFrame:
     """Maximal-marginal-relevance re-rank (Carbonell/Goldstein 1998):
-    greedily select ``k`` documents per query trading relevance
+    greedily select ``MMR_K`` documents per query trading relevance
     against redundancy — step score is ``lam·rel − (1−lam)·max
-    cosine-to-already-selected``.  The diversification step of a RAG
-    context builder (don't spend the context window on five copies of
-    the same passage) and of eval-set mining.
+    cosine-to-already-selected`` with ``lam = MMR_LAM``.  The
+    diversification step of a RAG context builder (don't spend the
+    context window on five copies of the same passage) and of eval-set
+    mining.
 
     Contract: ``candidates`` is a per-query frame (query, id, vec,
     rel) that is ALREADY bounded (a retrieval arm's top-N), with ids
@@ -273,12 +256,12 @@ def mmr_select(
     collected into ONE row (sorted by id), and everything after that
     runs in higher-order functions over the row: the N×N pairwise
     6dp cosine matrix (N² doubles per row, never corpus-scale), then
-    the ``k`` greedy steps as one ``aggregate`` over a state of
+    the ``MMR_K`` greedy steps as one ``aggregate`` over a state of
     per-candidate best-sim, a taken mask and the picks.  No driver
     loop, no checkpoint, no window: the grouping on the query key is
     the only exchange the operator can add, and none when the input
     is already partitioned by query.
-    Picking stops when candidates run out (k may exceed N).
+    Picking stops when candidates run out (``MMR_K`` may exceed N).
 
     Determinism: rel must arrive 6dp-rounded; pairwise sims and step
     scores round to 6dp; the argmax is a strict ``>`` over the
@@ -286,9 +269,8 @@ def mmr_select(
     seeded at −1.0 (below any cosine) so one uniform score formula
     covers step 1 — a constant per-query offset that cannot change
     the argmax — which lets a DuckDB unrolled-CTE oracle replay every
-    pick exactly.  Returns (query, id, mmr_rank 1..k, rel)."""
-    if k < 1:
-        raise ValueError(f"mmr_select needs k >= 1, got {k}")
+    pick exactly.  Returns (query, id, mmr_rank 1..MMR_K, rel)."""
+    k, lam = MMR_K, MMR_LAM
     om = 1.0 - lam
     cand = (
         _mmr_base(candidates, query_col, id_col, vec_col, rel_col)
@@ -377,8 +359,6 @@ def mmr_select_grouped(
     id_col: str,
     vec_col: str,
     rel_col: str,
-    k: int = 5,
-    lam: float = 0.7,
 ) -> DataFrame:
     """``mmr_select`` with the greedy loop executed per query group in
     an Arrow cogrouped-map (``cogroup(...).applyInPandas``) instead of
@@ -400,13 +380,14 @@ def mmr_select_grouped(
     SHORTEST decimal rendering of the double, not its exact binary
     expansion), and IEEE evaluation order matches the JVM expression
     tree.  Ties break on lowest id; ``best_sim`` seeds at −1.0;
-    picking stops when candidates run out (k may exceed N).
+    picking stops when candidates run out (``MMR_K`` may exceed N).
     Zero-norm vectors (NaN cosine) are outside the contract of both
     paths — candidates arrive from a cosine-scored arm.
     Proven equivalent by tests/test_retrieval.py's differential
-    sweeps.  Returns (query, id, mmr_rank 1..k, rel)."""
+    sweeps.  Returns (query, id, mmr_rank 1..MMR_K, rel)."""
     import pandas as pd
 
+    k, lam = MMR_K, MMR_LAM
     base = _mmr_base(candidates, query_col, id_col, vec_col, rel_col)
     a = base.select("__q", F.col("__id").alias("__ida"),
                     F.col("__v").alias("__va"), F.col("__n").alias("__na"))
@@ -589,13 +570,11 @@ def _ce_z(weights: list[float]):
 def train_pairwise_logreg(
     feats: DataFrame,
     label_col: str,
-    iters: int = 3,
-    lr: float = 2.0,
     weight_col: str | None = None,
 ) -> list[float]:
     """IN-ENGINE pairwise logistic regression over the fixed
     :data:`CE_FEATURES` space — full-batch gradient descent as
-    ``iters`` aggregation rounds (the train_logreg_hashed /
+    three aggregation rounds at learning rate 2.0 (the train_logreg_hashed /
     Lloyd's / BPE fixed-iteration playbook, but DENSE: the feature
     dim is a compile-time constant, so each step needs no weight
     join at all — the current weights enter the plan as literals and
@@ -612,12 +591,12 @@ def train_pairwise_logreg(
     negative and the 'trained' ranking inverts). Returns
     [bias, w_f1, w_jac, w_ld]. Driver state is those 4 floats;
     nothing scales with the pair count but the one scan per step, so
-    100 TB of candidate pairs trains at scan speed × iters. The
+    100 TB of candidate pairs trains at scan speed × 3. The
     caller should localCheckpoint/cache ``feats`` — every step
     re-scans it."""
     denom = None if weight_col is not None else float(feats.count())
     w = [0.0] * (1 + len(CE_FEATURES))
-    for _ in range(iters):
+    for _ in range(3):
         err = F.lit(1.0) / (F.lit(1.0) + F.exp(-_ce_z(w))) - F.col(label_col)
         if weight_col is not None:
             err = err * F.col(weight_col)
@@ -635,7 +614,7 @@ def train_pairwise_logreg(
                 "train_pairwise_logreg: empty training set (no pairs)"
             )
         for j in range(len(w)):
-            w[j] -= lr * float(row[f"g{j}"])
+            w[j] -= 2.0 * float(row[f"g{j}"])
     return w
 
 
@@ -683,8 +662,6 @@ def cross_encoder_rerank(
     qtext_col: str,
     dtext_col: str,
     scorer=None,
-    topk: int = 10,
-    out_col: str = "ce_score",
 ) -> DataFrame:
     """Model-inference rerank seam — the final stage of a retrieval
     stack (retrieve → fuse → diversify → cross-encoder rerank).
@@ -704,7 +681,7 @@ def cross_encoder_rerank(
     conformance use :func:`overlap_f1_scorer` — the PLUMBING (Arrow
     batching, schema, per-query top-k) is real and oracle-gated.
 
-    Returns (query, id, out_col 6dp, rank) — per-query top-``topk``,
+    Returns (query, id, ce_score 6dp, rank) — per-query top-10,
     score desc, ties to lowest id."""
     if scorer is None:
         raise NotImplementedError(
@@ -715,7 +692,7 @@ def cross_encoder_rerank(
             "batch per call. overlap_f1_scorer is the deterministic "
             "test stand-in."
         )
-    qc, ic = query_col, id_col
+    qc, ic, out_col = query_col, id_col, "ce_score"
     schema = ", ".join(
         [
             f"`{qc}` {pairs.schema[qc].dataType.simpleString()}",
@@ -736,7 +713,7 @@ def cross_encoder_rerank(
     w = Window.partitionBy(qc).orderBy(F.col(out_col).desc(), F.col(ic).asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
+        .filter(F.col("rank") <= 10)
         .select(qc, ic, out_col, "rank")
     )
 
@@ -745,23 +722,21 @@ def ndcg_at_k(
     ranked: DataFrame,
     relevant: DataFrame,
     k: int,
-    query_col: str = "query_id",
-    id_col: str = "doc_id",
     rank_col: str = "rank",
 ) -> DataFrame:
     """Retrieval-quality evaluation: per-query nDCG@k (binary
     relevance) — the metric step that closes the retrieval stack
     (retrieve → fuse → diversify → rerank → EVALUATE).
 
-    ``ranked`` is a per-query ranking (query_col, id_col, rank_col
+    ``ranked`` is a per-query ranking (query_id, doc_id, rank_col
     with rank 1-based; rows past ``k`` are ignored); ``relevant`` is
-    the ground-truth set (query_col, id_col), one row per relevant
+    the ground-truth set (query_id, doc_id), one row per relevant
     doc.  DCG = Σ hit/log2(rank+1) over the retrieved list; IDCG
     normalizes by the ideal list — min(|relevant|, k) hits packed at
     the top — so nDCG is comparable across queries with different
     ground-truth sizes.  Queries with empty ground truth score 0.
 
-    Returns (query_col, n_rel, n_rel_retrieved, ndcg) with ndcg
+    Returns (query_id, n_rel, n_rel_retrieved, ndcg) with ndcg
     rounded to 6dp.  The discount sums have ≤ k irrational terms, so
     engine summation-order ulps sit ~1e-15 below the rounding grid —
     a SQL oracle replays them exactly.  The dcg↔ideal join is FULL
@@ -776,6 +751,7 @@ def ndcg_at_k(
     and the per-query rollup is a bounded aggregation.  The ideal
     discount is an in-row ``aggregate`` fold over ``sequence(1,
     min(n_rel, k))`` — no join against a numbers table."""
+    query_col, id_col = "query_id", "doc_id"
     rel = (
         relevant.select(
             F.col(query_col), F.col(id_col), F.lit(1).alias("__hit")

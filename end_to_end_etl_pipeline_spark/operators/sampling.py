@@ -36,36 +36,33 @@ def hash_bucket(col: Column, modulus: int) -> Column:
     )
 
 
-def hash_shard(
-    df: DataFrame, id_col: str, n_shards: int, out_col: str = "shard"
-) -> DataFrame:
-    """Stamp each row with its deterministic shard in ``[0, n_shards)``.
+def hash_shard(df: DataFrame, id_col: str, n_shards: int) -> DataFrame:
+    """Stamp each row with its deterministic ``shard`` in
+    ``[0, n_shards)``.
 
     Shards are the unit of downstream parallelism (packing, per-shard
     file writes, distributed tokenizer jobs): hash-based so adding
     data never reassigns existing rows, unlike round-robin."""
-    return df.withColumn(out_col, hash_bucket(F.col(id_col), n_shards))
+    return df.withColumn("shard", hash_bucket(F.col(id_col), n_shards))
 
 
 def split_assign(
     df: DataFrame,
     id_col: str,
     splits: Sequence[tuple[str, int]],
-    denom: int = 10_000,
-    out_col: str = "split",
 ) -> DataFrame:
-    """Deterministic train/val/test assignment: ``splits`` is
-    ``[(name, weight), ...]`` with weights summing to ``denom``; a
-    row lands in the split whose cumulative weight range contains
-    ``hash_bucket(id, denom)``.
+    """Deterministic train/val/test assignment into ``split``:
+    ``splits`` is ``[(name, weight), ...]`` with weights summing to
+    10,000; a row lands in the split whose cumulative weight range
+    contains ``hash_bucket(id, 10000)``.
 
     Content-addressed, so the split is stable under re-runs,
     appends, and repartitioning — the property that prevents
     train/test leakage when the corpus is rebuilt."""
     total = sum(w for _, w in splits)
-    if total != denom:
-        raise ValueError(f"split weights sum to {total}, expected denom={denom}")
-    b = hash_bucket(F.col(id_col), denom)
+    if total != 10_000:
+        raise ValueError(f"split weights sum to {total}, expected 10000")
+    b = hash_bucket(F.col(id_col), 10_000)
     expr = None
     upper = 0
     for name, w in splits[:-1]:
@@ -74,7 +71,7 @@ def split_assign(
             b < upper, F.lit(name)
         )
     last = F.lit(splits[-1][0])
-    return df.withColumn(out_col, last if expr is None else expr.otherwise(last))
+    return df.withColumn("split", last if expr is None else expr.otherwise(last))
 
 
 def pack_sequences(
@@ -83,9 +80,8 @@ def pack_sequences(
     token_col: str,
     budget: int,
     shard_col: str | None = None,
-    bin_col: str = "bin",
 ) -> DataFrame:
-    """Greedy contiguous sequence packing: within each shard, rows
+    """Greedy contiguous sequence packing into ``bin``: within each shard, rows
     ordered by id are laid end-to-end and cut into bins of
     ``budget`` tokens — ``bin = floor(exclusive_prefix_sum /
     budget)``. A document straddling a boundary stays in the bin its
@@ -104,7 +100,7 @@ def pack_sequences(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     prefix = F.sum(F.col(token_col)).over(w) - F.col(token_col)
-    return df.withColumn(bin_col, F.floor(prefix / budget).cast("bigint"))
+    return df.withColumn("bin", F.floor(prefix / budget).cast("bigint"))
 
 
 def stratified_sample(
@@ -112,19 +108,19 @@ def stratified_sample(
     id_col: str,
     strata_col: str,
     rates: dict[str, float],
-    denom: int = 10_000,
-    default_rate: float = 1.0,
 ) -> DataFrame:
     """Deterministic per-stratum downsampling: a row survives iff
-    ``hash_bucket(id, denom) < rate[stratum] · denom`` — the language/
+    ``hash_bucket(id, 10000) < rate[stratum] · 10000`` — the language/
     source rebalancing pass (downsample the dominant stratum, keep
-    the rest), with all of :func:`hash_bucket`'s reproducibility
-    guarantees. Unlike ``DataFrame.sampleBy`` the kept SET is stable
-    across reruns, partitionings, and engines — so the sampled corpus
-    is itself content-addressed.
+    every row of a stratum without a rate), with all of
+    :func:`hash_bucket`'s reproducibility guarantees. Unlike
+    ``DataFrame.sampleBy`` the kept SET is stable across reruns,
+    partitionings, and engines — so the sampled corpus is itself
+    content-addressed.
 
     Pure filter projection: zero shuffles, combines with its
     neighbors into one codegen stage."""
+    denom = 10_000
     b = hash_bucket(F.col(id_col), denom)
     thr = None
     for name, r in rates.items():
@@ -134,7 +130,7 @@ def stratified_sample(
             if thr is None
             else thr.when(F.col(strata_col) == name, t)
         )
-    default = F.lit(int(round(default_rate * denom)))
+    default = F.lit(denom)
     thr = default if thr is None else thr.otherwise(default)
     return df.filter(b < thr)
 
@@ -172,8 +168,6 @@ def dsir_logratio_scores(
     id_col: str,
     text_col: str,
     target: Column,
-    dim: int = 1024,
-    round_dp: int = 4,
 ) -> DataFrame:
     """DSIR-style importance scoring for data selection (Xie et al.
     2023, "Data Selection for Language Models via Importance
@@ -186,10 +180,10 @@ def dsir_logratio_scores(
     Efraimidis–Spirakis draw in :func:`weighted_doc_sample`'s shape)
     tilts a raw crawl toward the target distribution.
 
-    Features are unigrams + word bigrams hashed into ``dim`` buckets
+    Features are unigrams + word bigrams hashed into 1,024 buckets
     (md5, deterministic — any engine replays the bucketing), each
-    model is add-one smoothed over the ``dim``-bucket space, and the
-    two models collapse into ONE ``dim``-row table holding
+    model is add-one smoothed over the bucket space, and the
+    two models collapse into ONE 1,024-row table holding
     (bucket, raw_count, target_count): a single map-side-partial
     aggregation over the feature stream, then the log-ratio table —
     model-parameter scale, like the PQ codebooks — broadcasts back
@@ -198,9 +192,10 @@ def dsir_logratio_scores(
     grows with vocabulary, no Python rows.
 
     Returns (id, n_feats, dsir_avg_logratio, keep) — the per-feature
-    MEAN ratio (decimal-routed, ``round_dp``) so long documents don't
+    MEAN ratio (decimal-routed, 4dp) so long documents don't
     dominate by length alone; ``keep`` is the sign. Documents with no
     tokens have no features and are absent."""
+    dim = 1024
     words = F.filter(F.split(F.col(text_col), " "), lambda w: F.length(w) > 0)
     n = F.size(words)
     bigrams = F.when(
@@ -249,7 +244,7 @@ def dsir_logratio_scores(
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_feats"),
-            F.round(F.avg("__lr").cast("decimal(20,10)"), round_dp)
+            F.round(F.avg("__lr").cast("decimal(20,10)"), 4)
             .cast("double")
             .alias("dsir_avg_logratio"),
         )

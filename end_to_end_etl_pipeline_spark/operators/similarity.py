@@ -118,10 +118,9 @@ def hard_negatives(
     corpus_id: str,
     vec_col: str,
     label_col: str,
-    k: int = 5,
 ) -> DataFrame:
     """Hard-negative mining for contrastive/embedding training: per
-    anchor, the ``k`` nearest corpus vectors (cosine, 6dp, ties to
+    anchor, the 5 nearest corpus vectors (cosine, 6dp, ties to
     lowest id) whose ``label_col`` DIFFERS from the anchor's — the
     near-miss negatives that carry the gradient signal random
     negatives don't (in-batch negatives are mostly easy; hard ones
@@ -141,7 +140,7 @@ def hard_negatives(
     scored = _scored_pairs(a, c).filter(
         F.col("neg_label") != F.col("__albl")
     )
-    return _topk_by_cosine(scored, k, extra=("neg_label",))
+    return _topk_by_cosine(scored, 5, extra=("neg_label",))
 
 
 def ensure_codegen_fields(spark, n: int) -> None:
@@ -164,11 +163,10 @@ def label_centroids_array(
     corpus: DataFrame,
     label_col: str,
     vec_col: str,
-    round_dp: int = 6,
     dim: int | None = None,
 ) -> DataFrame:
-    """(label, pos, cv): per-cell centroid components, rounded so the
-    quantizer is bit-identical across engines/runs.
+    """(label, pos, cv): per-cell centroid components, rounded to 6dp
+    so the quantizer is bit-identical across engines/runs.
 
     With ``dim`` given (fixed-width embeddings — the normal case) the
     element-wise average runs as ``dim`` scalar ``avg`` buffers in ONE
@@ -190,7 +188,7 @@ def label_centroids_array(
         return agg.select(
             "label",
             F.posexplode(
-                F.array(*[F.round(F.col(f"__a{i}"), round_dp) for i in range(dim)])
+                F.array(*[F.round(F.col(f"__a{i}"), 6) for i in range(dim)])
             ).alias("pos0", "cv"),
         ).select("label", (F.col("pos0") + 1).alias("pos"), "cv")
     exploded = corpus.select(
@@ -199,7 +197,7 @@ def label_centroids_array(
     )
     return (
         exploded.groupBy("label", (F.col("pos0") + 1).alias("pos"))
-        .agg(F.round(F.avg("v"), round_dp).alias("cv"))
+        .agg(F.round(F.avg("v"), 6).alias("cv"))
     )
 
 
@@ -209,24 +207,23 @@ def ivf_probe(
     query_id: str,
     vec_col: str,
     label_col: str,
-    nprobe: int = 2,
     dim: int | None = None,
 ) -> DataFrame:
     """The coarse-quantizer routing step shared by every IVF-tier
     search (:func:`cosine_topk_ivf`, `operators/pq.ivfpq_topk`,
     `operators/ivf_store`): rank the per-cell centroids against each
-    query by cosine (rounded 6dp, tie → label asc) and keep the
-    ``nprobe`` best. Returns (query_id, label) — queries × nprobe
-    rows, model-parameter scale. The centroid frame is cells × dim
-    (broadcast); the ranking itself never touches the corpus beyond
-    the one centroid-training aggregation."""
+    query by cosine (rounded 6dp, tie → label asc) and keep the 2
+    best. Returns (query_id, label) — queries × 2 rows, model-parameter
+    scale. The centroid frame is cells × dim (broadcast); the ranking
+    itself never touches the corpus beyond the one centroid-training
+    aggregation."""
     qcent = _ivf_cell_scores(queries, corpus, query_id, vec_col, label_col, dim)
     wp = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("label").asc()
     )
     return (
         qcent.withColumn("__rn", F.row_number().over(wp))
-        .filter(F.col("__rn") <= nprobe)
+        .filter(F.col("__rn") <= 2)
         .select("query_id", "label")
     )
 
@@ -310,21 +307,18 @@ def cosine_topk_ivf(
     corpus_id: str,
     vec_col: str,
     label_col: str,
-    k: int = 5,
-    nprobe: int = 2,
-    exclude_self: bool = True,
     dim: int | None = None,
     min_candidates: int | None = None,
 ) -> DataFrame:
     """IVF probe: rank cells by query↔centroid cosine (rounded 6dp,
-    tie → label asc), exact-score the ``nprobe`` nearest cells only.
-    Returns (query_id, match_id, cosine) like :func:`cosine_topk` —
-    identical results whenever the true top-k lives in the probed
-    cells (the recall/cost dial is ``nprobe``). Pass ``dim`` (the
+    tie → label asc), exact-score the 2 nearest cells only. Returns
+    the top-5 (query_id, match_id, cosine), each query's own id
+    excluded, like :func:`cosine_topk` — identical results whenever
+    the true top-5 lives in the probed cells. Pass ``dim`` (the
     fixed embedding width) so the quantizer build avoids the
     posexplode row inflation — see :func:`label_centroids_array`.
 
-    With ``min_candidates`` set, ``nprobe`` is ignored and the probe
+    With ``min_candidates`` set, the fixed 2-cell probe gives way and the probe
     is query-adaptive (:func:`ivf_probe_adaptive`): each query scans
     exactly the cells needed to guarantee that many candidates."""
     if min_candidates is not None:
@@ -333,10 +327,7 @@ def cosine_topk_ivf(
             min_candidates=min_candidates, dim=dim,
         )
     else:
-        probed = ivf_probe(
-            queries, corpus, query_id, vec_col, label_col,
-            nprobe=nprobe, dim=dim,
-        )
+        probed = ivf_probe(queries, corpus, query_id, vec_col, label_col, dim=dim)
     q = _prep(queries, query_id, vec_col, "query_id", "__qv")
     # carry the label in the same projection — joining the corpus back
     # to itself on match_id just to re-attach it would be a second
@@ -348,11 +339,10 @@ def cosine_topk_ivf(
         F.sqrt(dot(v, v)).alias("__cv_norm"),
         F.col(label_col).alias("label"),
     )
-    scored = c.join(F.broadcast(probed.join(q, "query_id")), "label")
-    if exclude_self:
-        scored = scored.filter(F.col("match_id") != F.col("query_id"))
-    scored = scored.filter(
-        (F.col("__qv_norm") > 0) & (F.col("__cv_norm") > 0)
+    scored = (
+        c.join(F.broadcast(probed.join(q, "query_id")), "label")
+        .filter(F.col("match_id") != F.col("query_id"))
+        .filter((F.col("__qv_norm") > 0) & (F.col("__cv_norm") > 0))
     )
     scored = scored.withColumn(
         "cosine",
@@ -363,7 +353,7 @@ def cosine_topk_ivf(
     )
     return (
         scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
+        .filter(F.col("__rn") <= 5)
         .select("query_id", "match_id", "cosine")
     )
 
@@ -371,8 +361,9 @@ def cosine_topk_ivf(
 HEX = "0123456789abcdef"
 
 
-def sign_lsh_bucket(vec_col: str, num_planes: int = 8) -> Column:
-    """Random-hyperplane sign bucket for an array<double> column.
+def sign_lsh_bucket(vec_col: str) -> Column:
+    """Random-hyperplane sign bucket (8 planes) for an array<double>
+    column.
 
     Plane ``p``'s component at position ``pos`` is derived from
     ``md5(p || ':' || pos)`` (first hex nibble − 7.5) — deterministic,
@@ -382,7 +373,7 @@ def sign_lsh_bucket(vec_col: str, num_planes: int = 8) -> Column:
     md5 cost is planes × dim cheap JVM hashes, traded for zero
     broadcast state."""
     return F.expr(
-        f"array_join(transform(sequence(0, {num_planes - 1}), p -> "
+        "array_join(transform(sequence(0, 7), p -> "
         f"CASE WHEN aggregate(zip_with({vec_col}, "
         f"transform(sequence(1, size({vec_col})), pos -> "
         f"CAST(instr('{HEX}', substring(md5(concat(p, ':', pos)), 1, 1)) - 1 AS DOUBLE) - 7.5D), "
@@ -394,15 +385,13 @@ def sign_lsh_near_dup_pairs(
     corpus: DataFrame,
     corpus_id: str,
     vec_col: str,
-    num_planes: int = 8,
-    threshold: float = 0.9999,
 ) -> DataFrame:
     """Embedding near-dup: candidates meet only inside a sign-LSH
-    bucket (2^planes cells), verified by exact cosine ≥ threshold.
+    bucket (2^8 cells), verified by exact cosine ≥ 0.9999.
     One shuffle on the bucket string; never all-pairs. Returns
     (id_a, id_b, cosine), id_a < id_b."""
     c = _prep(corpus, corpus_id, vec_col, "vid", "__v").withColumn(
-        "__bucket", sign_lsh_bucket("__v", num_planes)
+        "__bucket", sign_lsh_bucket("__v")
     )
     a = c.select(
         F.col("__bucket"),
@@ -423,22 +412,21 @@ def sign_lsh_near_dup_pairs(
             "cosine",
             F.round(cosine(F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")), 6),
         )
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= 0.9999)
         .select("id_a", "id_b", "cosine")
     )
 
 
-def downsample_vector(
-    vec_col: str, factor: int = 2, round_dp: int = 6
-) -> Column:
-    """Array "resize": shrink a vector by averaging adjacent blocks of
-    ``factor`` elements (the pooling half of the multimodal
+def downsample_vector(vec_col: str) -> Column:
+    """Array "resize": halve a vector by averaging adjacent pairs of
+    elements, rounded to 6dp (the pooling half of the multimodal
     decode/resize family, and a cheap dimensionality reduction ahead
     of LSH/PQ). Pure higher-order-function expression — JVM-side,
     zero shuffles, one codegen'd pass per row; the expression tree is
     O(1) in the output width (a ``transform`` over an index
     ``sequence``, not an unrolled per-element forest)."""
     v = F.col(vec_col)
+    factor = 2
     pooled = F.transform(
         F.sequence(F.lit(0), F.floor((F.size(v) - 1) / factor).cast("int")),
         lambda i: F.round(
@@ -448,7 +436,7 @@ def downsample_vector(
                 lambda acc, x: acc + x.cast("double"),
             )
             / F.size(F.slice(v, i * factor + 1, factor)),
-            round_dp,
+            6,
         ),
     )
     # guard the empty vector: sequence(0, floor(-1/factor)) =
@@ -459,7 +447,7 @@ def downsample_vector(
     ).otherwise(pooled)
 
 
-def hadamard_rotate(vec_col: str, dim: int, round_dp: int = 6) -> Column:
+def hadamard_rotate(vec_col: str, dim: int) -> Column:
     """Deterministic orthogonal rotation: the normalized Walsh-
     Hadamard transform ``y[j] = Σ_i v[i]·(−1)^popcount(i&j) / √dim``
     — the RNG-free stand-in for OPQ's learned rotation. Rotating
@@ -473,7 +461,8 @@ def hadamard_rotate(vec_col: str, dim: int, round_dp: int = 6) -> Column:
     work per row — right up to a few hundred dims (the butterfly
     O(dim·log dim) factorization needs log-dim chained projections;
     not worth it below dim≈1k). ``bit_count`` keeps the sign rule
-    replayable in any engine with integer popcount.
+    replayable in any engine with integer popcount. Components are
+    rounded to 6dp.
     """
     if dim & (dim - 1):
         raise ValueError(f"Hadamard rotation needs power-of-two dim, got {dim}")
@@ -492,7 +481,7 @@ def hadamard_rotate(vec_col: str, dim: int, round_dp: int = 6) -> Column:
                 + F.element_at(v, (i + 1).cast("int")).cast("double") * sign(i, j),
             )
             / scale,
-            round_dp,
+            6,
         ),
     )
 
@@ -502,11 +491,10 @@ def semantic_dedup_prune(
     corpus_id: str,
     vec_col: str,
     cluster_col: str,
-    threshold: float = 0.995,
 ) -> DataFrame:
     """SemDeDup-shape semantic dedup (Abbas et al. 2023): embeddings
     are compared only WITHIN their cluster, and a vector is pruned iff
-    some lower-id cluster-mate sits at cosine ≥ threshold (greedy
+    some lower-id cluster-mate sits at cosine ≥ 0.995 (greedy
     keep-lowest — deterministic, order-free). Returns the surviving
     rows (id, cluster).
 
@@ -546,7 +534,7 @@ def semantic_dedup_prune(
                 cosine(F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")), 6
             ),
         )
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= 0.995)
         .select(F.col("id_b").alias("vid"))
         .distinct()
     )

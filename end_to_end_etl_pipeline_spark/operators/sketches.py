@@ -35,6 +35,9 @@ from pyspark.sql import functions as F
 #: estimates 0 — violating the never-underestimate guarantee.
 _NULL_KEY = "\x00__null__"
 
+#: the count-min grid: hash rows × buckets per row
+CMS_DEPTH, CMS_WIDTH = 4, 256
+
 
 def _keystr(key: Column) -> Column:
     return F.coalesce(key.cast("string"), F.lit(_NULL_KEY))
@@ -49,53 +52,39 @@ def _bucket(row: Column, key: Column, width: int) -> Column:
     return (F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % width).cast("int")
 
 
-def cms_build(
-    df: DataFrame,
-    key_col: str,
-    depth: int = 4,
-    width: int = 256,
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Build the sketch: (row, bucket, cnt), depth × width rows max.
+def cms_build(df: DataFrame, key_col: str) -> DataFrame:
+    """Build the sketch: (row, bucket, cnt), CMS_DEPTH × CMS_WIDTH
+    rows max, one count per occurrence.
 
-    One projection (explode over ``depth`` — bounded constant fanout)
+    One projection (explode over the depth — bounded constant fanout)
     + one aggregation; map-side partials cap the exchange at
     depth × width rows per task no matter how many occurrences or
-    distinct keys flow in. ``weight_col`` counts weighted occurrences
-    (e.g. token counts per doc) instead of rows."""
-    w = F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
+    distinct keys flow in."""
     rows = df.select(
         F.col(key_col).alias("__key"),
-        w.alias("__w"),
-        F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row"),
+        F.lit(1).cast("long").alias("__w"),
+        F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("row"),
     )
     return (
-        rows.withColumn("bucket", _bucket(F.col("row"), F.col("__key"), width))
+        rows.withColumn("bucket", _bucket(F.col("row"), F.col("__key"), CMS_WIDTH))
         .groupBy("row", "bucket")
         .agg(F.sum("__w").alias("cnt"))
     )
 
 
-def cms_estimate(
-    sketch: DataFrame,
-    keys: DataFrame,
-    key_col: str,
-    depth: int = 4,
-    width: int = 256,
-    out_col: str = "cms_est",
-) -> DataFrame:
-    """Point-estimate each key in ``keys``: min over the key's
-    ``depth`` bucket counts. The sketch side is ≤ depth × width rows —
+def cms_estimate(sketch: DataFrame, keys: DataFrame, key_col: str) -> DataFrame:
+    """Point-estimate each key in ``keys`` as ``cms_est``: min over the
+    key's CMS_DEPTH bucket counts. The sketch side is ≤ depth × width rows —
     broadcast; the probe is a projection + one small-key aggregation.
     A key the sketch never saw estimates 0 (all its buckets may still
     collide upward — CMS never underestimates)."""
     probes = keys.select(
         F.col(key_col),
-        F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row"),
-    ).withColumn("bucket", _bucket(F.col("row"), F.col(key_col), width))
+        F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("row"),
+    ).withColumn("bucket", _bucket(F.col("row"), F.col(key_col), CMS_WIDTH))
     joined = probes.join(F.broadcast(sketch), ["row", "bucket"], "left")
     return joined.groupBy(key_col).agg(
-        F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias(out_col)
+        F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("cms_est")
     )
 
 
@@ -146,13 +135,14 @@ def bloom_probe(
     bloom: DataFrame,
     df: DataFrame,
     key_col: str,
-    num_bits: int = 2048,
-    num_hashes: int = 3,
+    num_bits: int,
+    num_hashes: int,
     out_col: str = "might_contain",
 ) -> DataFrame:
     """Return one row per DISTINCT key in ``df``: (``key_col``,
     ``out_col``) where ``out_col`` (boolean) is True iff every one of
-    the key's ``num_hashes`` bits is set — i.e. the key MIGHT be in
+    the key's ``num_hashes`` bits is set (probe with the
+    ``num_bits``/``num_hashes`` the filter was built with) — i.e. the key MIGHT be in
     the built set (false positives possible, false negatives never).
 
     Note this is a per-key verdict table, NOT a pass-through column

@@ -38,18 +38,16 @@ def lang_id(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    lexicon: dict[str, tuple[str, ...]] | None = None,
 ) -> DataFrame:
-    """Predict language by stopword-hit count (tie → lexicographic
-    language). Returns (id, pred_lang, score) where score = hits /
-    tokens, 6dp; docs with no lexicon hit are absent (caller
-    left-joins). The lexicon join is a broadcast of a few dozen rows
-    against the exploded token stream — no shuffle grows with
+    """Predict language by :data:`STOPWORD_LEXICON` stopword-hit count
+    (tie → lexicographic language). Returns (id, pred_lang, score) where
+    score = hits / tokens, 6dp; docs with no lexicon hit are absent
+    (caller left-joins). The lexicon join is a broadcast of a few dozen
+    rows against the exploded token stream — no shuffle grows with
     vocabulary."""
-    lexicon = lexicon or STOPWORD_LEXICON
     spark = SparkSession.getActiveSession()
     lex = spark.createDataFrame(
-        [(lang, w) for lang, words in lexicon.items() for w in words],
+        [(lang, w) for lang, words in STOPWORD_LEXICON.items() for w in words],
         ["cand_lang", "word"],
     )
     tok = _tokens(df, id_col, text_col)
@@ -100,28 +98,30 @@ def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+#: winnowing k-gram length and window size
+KGRAM, WINDOW = 8, 4
+
+
 def winnow_fingerprint_array(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    kgram: int = 8,
-    window: int = 4,
-    out_col: str = "fps",
 ) -> DataFrame:
-    """Winnowing (Schleimer/Wilkerson/Aiken) fingerprint sets: hash
-    every ``kgram``-char shingle, slide a ``window`` over consecutive
-    hashes, keep each window's min, dedup. Guarantees any shared
-    substring ≥ kgram+window−1 chars yields a shared fingerprint.
+    """Winnowing (Schleimer/Wilkerson/Aiken) fingerprint sets in
+    ``fps``: hash every ``KGRAM``-char shingle, slide a ``WINDOW`` over
+    consecutive hashes, keep each window's min, dedup. Guarantees any
+    shared substring ≥ KGRAM+WINDOW−1 chars yields a shared
+    fingerprint.
 
     Entirely per-row array algebra — the k-gram hashes are bound to a
     column once (no per-window recompute) and the window minima are
     ``array_min`` over slices, so fingerprinting is a shuffle-free
     projection that scales with executors linearly. Documents too
     short for one full window get an empty array."""
-    return df.withColumn(out_col, F.expr(_fps_expr(text_col, kgram, window)))
+    return df.withColumn("fps", F.expr(_fps_expr(text_col)))
 
 
-def _fps_expr(text_col: str, kgram: int, window: int) -> str:
+def _fps_expr(text_col: str) -> str:
     """SQL for the distinct winnowing-fingerprint array of one row.
 
     The k-gram hash array is let-bound via a 1-element transform: the
@@ -131,6 +131,7 @@ def _fps_expr(text_col: str, kgram: int, window: int) -> str:
     slower. Window minima are ``least`` over ``element_at`` probes
     (O(1) each, no per-window slice allocation — ~2× faster than
     slice+array_min)."""
+    kgram, window = KGRAM, WINDOW
     kh = (
         f"CASE WHEN length({text_col}) >= {kgram} THEN "
         f"transform(sequence(1, length({text_col}) - {kgram} + 1), "
@@ -152,8 +153,6 @@ def winnow_fingerprint_stats(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    kgram: int = 8,
-    window: int = 4,
 ) -> DataFrame:
     """Per-document fingerprint summary (n_fingerprints, min_fp,
     max_fp) computed entirely per-row — docs with no fingerprints are
@@ -169,7 +168,7 @@ def winnow_fingerprint_stats(
     single-evaluation barrier the optimizer cannot collapse — no
     shuffle, no cache."""
     stats = (
-        f"transform(array(({_fps_expr(text_col, kgram, window)})), a -> named_struct("
+        f"transform(array(({_fps_expr(text_col)})), a -> named_struct("
         "'n_fingerprints', CAST(size(a) AS BIGINT), "
         "'min_fp', array_min(a), 'max_fp', array_max(a)))[0]"
     )
@@ -184,25 +183,20 @@ def winnow_fingerprints(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    kgram: int = 8,
-    window: int = 4,
 ) -> DataFrame:
     """Row form of :func:`winnow_fingerprint_array` — one row per
     (id, fingerprint), for inverted-index joins (plagiarism/overlap
     pair detection)."""
-    arr = winnow_fingerprint_array(df, id_col, text_col, kgram, window)
+    arr = winnow_fingerprint_array(df, id_col, text_col)
     return arr.select(F.col(id_col), F.explode("fps").alias("fp"))
 
 
-def normalize_text(
-    df: DataFrame,
-    text_col: str,
-    out_col: str = "norm_text",
-) -> DataFrame:
-    """Canonical text normalization for dedup/tokenization pipelines:
-    lowercase, non-alphanumerics → space, whitespace collapsed, ends
-    trimmed. The output is the canonical form fed to shingling /
-    MinHash so that case and punctuation variants dedup together.
+def normalize_text(df: DataFrame, text_col: str) -> DataFrame:
+    """Canonical text normalization for dedup/tokenization pipelines,
+    into ``norm_text``: lowercase, non-alphanumerics → space, whitespace
+    collapsed, ends trimmed. The output is the canonical form fed to
+    shingling / MinHash so that case and punctuation variants dedup
+    together.
 
     Pure codegen projection — zero shuffles, scales linearly. The
     regexes are restricted to constructs with identical semantics in
@@ -214,7 +208,7 @@ def normalize_text(
     x = F.lower(F.col(text_col))
     x = F.regexp_replace(x, r"[^a-z0-9\s]", " ")
     x = F.trim(F.regexp_replace(x, r"\s+", " "))
-    return df.withColumn(out_col, x)
+    return df.withColumn("norm_text", x)
 
 
 # PII patterns restricted to constructs with identical semantics in
@@ -227,41 +221,33 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def redact_pii(
-    df: DataFrame,
-    text_col: str,
-    out_col: str = "redacted",
-    count_cols: bool = True,
-) -> DataFrame:
+def redact_pii(df: DataFrame, text_col: str) -> DataFrame:
     """Scrub URLs, emails, and international-format phone numbers
-    from a text column, replacing each with a typed placeholder —
-    the standard pre-training privacy pass. Match counts (against
-    the ORIGINAL text) are emitted per category so downstream can
-    filter/audit PII-dense documents.
+    from a text column into ``redacted``, replacing each with a typed
+    placeholder — the standard pre-training privacy pass. Match counts
+    (``n_url``/``n_email``/``n_phone``, against the ORIGINAL text) are
+    emitted per category so downstream can filter/audit PII-dense
+    documents.
 
     URL runs first so an address inside a URL is consumed as one
     token. Pure codegen projection: N regex passes, zero shuffles,
     linear scan — the shape that survives 100 TB.
     """
     out = df
-    if count_cols:
-        for name, pat, _ in PII_PATTERNS:
-            out = out.withColumn(f"n_{name}", F.regexp_count(F.col(text_col), F.lit(pat)))
+    for name, pat, _ in PII_PATTERNS:
+        out = out.withColumn(f"n_{name}", F.regexp_count(F.col(text_col), F.lit(pat)))
     red = F.col(text_col)
     for _, pat, repl in PII_PATTERNS:
         red = F.regexp_replace(red, pat, repl)
-    return out.withColumn(out_col, red)
+    return out.withColumn("redacted", red)
 
 
-def sliding_chunks(
-    text_col: str, chunk_words: int = 30, overlap_words: int = 5
-) -> Column:
+def sliding_chunks(text_col: str) -> Column:
     """Overlapping sliding-window chunking — the standard prep step
     for embedding/RAG indexing and LLM context packing. Splits on
-    whitespace and emits word windows of ``chunk_words`` advancing by
-    ``chunk_words - overlap_words``, so consecutive chunks share
-    ``overlap_words`` words. Start positions stop at
-    ``max(n_words - overlap_words, 1)``: the tail is always covered
+    whitespace and emits 30-word windows advancing by 25, so
+    consecutive chunks share 5 words. Start positions stop at
+    ``max(n_words - 5, 1)``: the tail is always covered
     and no final chunk is fully contained in its predecessor.
 
     Returns ``array<struct<start int, toks array<string>>>`` rather
@@ -272,10 +258,7 @@ def sliding_chunks(
     Pure codegen'd per-row work — no shuffle, no UDF; at 100 TB this
     runs map-side inside whatever stage consumes it.
     """
-    if overlap_words >= chunk_words:
-        raise ValueError(
-            f"overlap_words ({overlap_words}) must be < chunk_words ({chunk_words})"
-        )
+    chunk_words, overlap_words = 30, 5
     stride = chunk_words - overlap_words
     words = F.split(F.trim(F.col(text_col)), r"\s+")
     starts = F.sequence(
@@ -290,18 +273,16 @@ def sliding_chunks(
     )
 
 
-def hashed_feature_weights(
-    spark: SparkSession, dim: int, seed: str = "w"
-) -> DataFrame:
+def hashed_feature_weights(spark: SparkSession, dim: int) -> DataFrame:
     """The model-parameter table for :func:`hashed_linear_score`:
     (bucket int, weight double) for buckets 0..dim-1, with weights
     derived deterministically from md5 (no RNG — any engine replays
-    them): w(b) = first-8-hex-chars(md5(seed:b)) / 2^32 - 0.5, i.e.
+    them): w(b) = first-8-hex-chars(md5("w:" || b)) / 2^32 - 0.5, i.e.
     uniform in [-0.5, 0.5). In production this frame is the trained
     classifier's weight vector loaded from storage; its shape (dim
     rows, broadcast into the scoring join) is identical."""
     b = F.col("id").cast("int")
-    h = F.md5(F.concat(F.lit(f"{seed}:"), b.cast("string")))
+    h = F.md5(F.concat(F.lit("w:"), b.cast("string")))
     w = (
         F.conv(F.substring(h, 1, 8), 16, 10).cast("double") / F.lit(4294967296.0)
         - 0.5
@@ -315,7 +296,6 @@ def hashed_linear_score(
     text_col: str,
     weights: DataFrame,
     dim: int,
-    round_dp: int = 6,
 ) -> DataFrame:
     """fastText-shape linear quality-classifier inference: hash each
     token into one of ``dim`` feature buckets (md5, deterministic),
@@ -338,7 +318,7 @@ def hashed_linear_score(
     return scored.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.round(
-            (F.sum("weight") / F.count(F.lit(1))).cast("decimal(20,10)"), round_dp
+            (F.sum("weight") / F.count(F.lit(1))).cast("decimal(20,10)"), 6
         )
         .cast("double")
         .alias("margin"),

@@ -34,51 +34,38 @@ from pyspark.sql import functions as F
 HEX = "0123456789abcdef"
 
 
-def char_shingles(
-    df: DataFrame, id_col: str, text_col: str, n: int = 6, distinct: bool = False
-) -> DataFrame:
-    """(id, shingle) — all overlapping character n-grams. Documents
-    shorter than ``n`` produce no rows (and so never pair). MinHash
-    doesn't need DISTINCT (min is identical over multiset and set);
-    Jaccard sizing does — pass ``distinct=True`` there.
-
-    ``distinct=True`` precondition (ADVICE r12): ``id_col`` must
-    identify ONE input row — the r12 ``array_distinct``-before-explode
-    form dedups within each row only, so duplicate (id, text) rows
-    would each re-emit their shingle set where the pre-r12 global
-    ``.distinct()`` collapsed them (double-counted Jaccard sizes).
-    Every in-repo caller feeds one row per document id; dedup
-    upstream (``dropDuplicates(id_col)``) before handing this
-    operator a multiply-keyed frame."""
+def char_shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, shingle) — all overlapping 6-character n-grams, repeats
+    kept (SimHash and MinHash minima need no DISTINCT). Documents
+    shorter than 6 characters produce no rows (and so never pair)."""
+    n = 6
     arr = (
         f"CASE WHEN length({text_col}) >= {n} THEN "
         f"transform(sequence(1, length({text_col}) - {n} + 1), "
         f"i -> substring({text_col}, i, {n})) ELSE array() END"
     )
-    if distinct:
-        # r12: per-doc distinct via array_distinct BEFORE the explode —
-        # (id, shingle) is distinct iff the doc's own shingle array is,
-        # so the old post-explode global .distinct() shuffle of every
-        # shingle occurrence buys nothing
-        arr = f"array_distinct({arr})"
     return df.select(F.col(id_col), F.expr(f"explode({arr}) AS shingle"))
 
 
 def word_shingles(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, distinct: bool = False
+    df: DataFrame, id_col: str, text_col: str, distinct: bool = False
 ) -> DataFrame:
-    """(id, shingle) — n-word shingles over whitespace tokens.
-    ``distinct=True`` requires one input row per ``id_col`` — see
-    :func:`char_shingles`."""
+    """(id, shingle) — 3-word shingles over whitespace tokens.
+
+    ``distinct=True`` dedups each row's shingles (``array_distinct``
+    before the explode, not a post-explode global shuffle), so
+    ``id_col`` must identify ONE input row: duplicate (id, text) rows
+    would each re-emit their shingle set. Every in-repo caller feeds
+    one row per document id; dedup upstream
+    (``dropDuplicates(id_col)``) before handing this operator a
+    multiply-keyed frame."""
     words = f"filter(split({text_col}, ' '), w -> length(w) > 0)"
     arr = (
-        f"CASE WHEN size({words}) >= {n} THEN "
-        f"transform(sequence(1, size({words}) - {n} + 1), "
-        f"i -> array_join(slice({words}, i, {n}), ' ')) ELSE array() END"
+        f"CASE WHEN size({words}) >= 3 THEN "
+        f"transform(sequence(1, size({words}) - 3 + 1), "
+        f"i -> array_join(slice({words}, i, 3), ' ')) ELSE array() END"
     )
     if distinct:
-        # per-doc array_distinct instead of a post-explode global
-        # shuffle — see char_shingles (r12)
         arr = f"array_distinct({arr})"
     return df.select(F.col(id_col), F.expr(f"explode({arr}) AS shingle"))
 
@@ -266,14 +253,12 @@ def minhash_near_dup_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_len: int = 6,
     num_hashes: int = 16,
     bands: int = 4,
-    threshold: float = 0.6,
     max_broadcast_pairs: int = 1_000_000,
 ) -> DataFrame:
-    """shingle → MinHash → LSH band-bucket → exact-Jaccard verify.
-    Returns (id_a, id_b, jaccard) with jaccard ≥ threshold, id_a <
+    """6-char shingle → MinHash → LSH band-bucket → exact-Jaccard
+    verify. Returns (id_a, id_b, jaccard) with jaccard ≥ 0.6, id_a <
     id_b. Never materializes the all-pairs space: candidate bands are
     computed per-row (:func:`band_hashes_arr` — no shingle-level
     explode or shuffle), and the exact-Jaccard pass is
@@ -287,7 +272,7 @@ def minhash_near_dup_pairs(
     pass exists for — can make the candidate set arbitrarily large,
     and an unconditional broadcast would OOM the driver there."""
     rows = num_hashes // bands
-    sarr = shingle_array(df, id_col, text_col, n=shingle_len)
+    sarr = shingle_array(df, id_col, text_col)
     # candidates are consumed by three joins below — persist them
     # (candidate-scale, small by the LSH promise) so the fused
     # shingle+band pipeline runs once, not once per consuming branch.
@@ -328,7 +313,7 @@ def minhash_near_dup_pairs(
             ).alias("jaccard"),
         )
     )
-    out = jac.filter(F.col("jaccard") >= threshold)
+    out = jac.filter(F.col("jaccard") >= 0.6)
     # materialize the (tiny, verified-pairs) result so the persisted
     # candidate frame can be released NOW — returning the lazy plan
     # would leak the cached candidates for the application lifetime,
@@ -385,22 +370,20 @@ def simhash_near_dup_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_len: int = 6,
-    max_hamming: int = 6,
 ) -> DataFrame:
-    """SimHash near-dup: candidates share at least one of the 4
+    """SimHash near-dup over 6-char shingles: candidates share at least one of the 4
     16-bit bands of their 64-bit simhash, verified by exact hamming
     distance. 4-band blocking guarantees recall for hamming ≤ 3
     (pigeonhole: 3 flipped bits can't touch all 4 bands); beyond that
     it's the standard heuristic blocking — add rotated tables for
     guarantees at higher radii. Returns (id_a, id_b, hamming) with
-    hamming ≤ ``max_hamming`` among band-sharing pairs.
+    hamming ≤ 6 among band-sharing pairs.
 
     Scale note: 16-bit bands give 4×65536 buckets (vs 4×256 for the
     old 32-bit/byte-band scheme) — expected bucket occupancy drops
     256×, which is what keeps the within-bucket self-join from going
     quadratic on a billion-doc corpus."""
-    sh = char_shingles(df, id_col, text_col, n=shingle_len)
+    sh = char_shingles(df, id_col, text_col)
     sims = simhash64(sh, id_col)
     bands_df = sims.select(
         F.col(id_col),
@@ -439,7 +422,7 @@ def simhash_near_dup_pairs(
             "hamming",
             F.expr("bit_count(lo_a ^ lo_b) + bit_count(hi_a ^ hi_b)").cast("int"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 6)
         .select("id_a", "id_b", "hamming")
     )
 
@@ -448,9 +431,6 @@ def dedup_lines_global(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    sep: str = "\n",
-    min_match_chars: int = 1,
-    drop_empty_docs: bool = False,
 ) -> DataFrame:
     """Corpus-wide line-level exact dedup with document reconstruction
     (the C4 `remove duplicate lines` / RefinedWeb line-dedup step —
@@ -461,12 +441,11 @@ def dedup_lines_global(
     order (lowest ``(id, line_pos)``) — every later occurrence of the
     same normalized line (lower + trim) anywhere in the corpus is
     removed. Documents are reassembled from their surviving lines in
-    original order. Lines whose normalized form is shorter than
-    ``min_match_chars`` (e.g. blank separators) are exempt: they never
-    match anything and are always kept.
+    original order. Blank lines (empty once normalized) are exempt:
+    they never match anything and are always kept.
 
     Returns (id, text, n_lines, n_lines_kept) — ``text`` rebuilt with
-    ``sep``; empty docs kept as '' unless ``drop_empty_docs``.
+    newlines; a doc that loses every line is kept as ''.
 
     Plan shape (the 100 TB design):
 
@@ -483,9 +462,8 @@ def dedup_lines_global(
     Two shuffles total — the floor for "global first-wins + per-doc
     reassembly" (duplicates must meet once; a doc's lines must meet
     once)."""
-    import re as _re
-
-    pat = _re.escape(sep)  # F.split takes a REGEX pattern string
+    # F.split takes a REGEX pattern: the newline, escaped
+    sep, pat = "\n", "\\\n"
     row_w = F.struct(F.col("__id").alias("id"), F.col("__pos").alias("pos"))
     lines = df.select(
         F.col(id_col).alias("__id"),
@@ -494,7 +472,7 @@ def dedup_lines_global(
             "__pos", "__line"
         ),
     ).withColumn("__norm", F.lower(F.trim(F.col("__line"))))
-    eligible = F.length("__norm") >= min_match_chars
+    eligible = F.length("__norm") >= 1
     payload = F.struct(
         F.col("__id").alias("id"),
         F.col("__pos").alias("pos"),
@@ -544,8 +522,6 @@ def dedup_lines_global(
             F.coalesce(F.col("n_lines_kept"), F.lit(0)).alias("n_lines_kept"),
         )
     )
-    if drop_empty_docs:
-        out = out.filter(F.col("n_lines_kept") > 0)
     return out
 
 
@@ -553,16 +529,13 @@ def dedup_lines_within_doc(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    sep: str = "\n",
-    min_match_chars: int = 1,
 ) -> DataFrame:
     """WITHIN-document line-level exact dedup (the Gopher/RefinedWeb
     `remove duplicated lines within document` repetition rule — the
     local complement of :func:`dedup_lines_global`): a line survives
     only at its FIRST occurrence inside its own document; later
     repeats of the same normalized line (lower + trim) in that
-    document are removed. Lines whose normalized form is shorter than
-    ``min_match_chars`` are exempt (blank separators never match).
+    document are removed. Blank lines are exempt (they never match).
 
     Returns (id, text, n_lines, n_lines_kept), same contract as the
     global variant.
@@ -585,9 +558,7 @@ def dedup_lines_within_doc(
     gets deduped across contexts and ``element_at`` indexes the
     wrong (already-filtered) array. Three references to the SAME
     whole struct dedup as identical wholes, which is safe."""
-    import re as _re
-
-    pat = _re.escape(sep)
+    sep, pat = "\n", "\\\n"
     lines = F.split(F.col(text_col), pat, -1)
 
     def _inner(ls):
@@ -595,7 +566,7 @@ def dedup_lines_within_doc(
 
         # keep(i): exempt (too short) OR no earlier occurrence
         def cond(i):
-            return (F.length(F.element_at(nm, i)) < min_match_chars) | (
+            return (F.length(F.element_at(nm, i)) < 1) | (
                 F.array_position(F.slice(nm, 1, i - 1), F.element_at(nm, i)) == 0
             )
 

@@ -27,9 +27,7 @@ Scale notes: indexing is one explode + one (doc, word) aggregation —
 the same two steps every query over raw text pays, paid once here;
 appends touch only the new batch's words' buckets (CAS-merged, so
 untouched buckets keep their dir lists verbatim); the stats update
-rides an atomic single-row replace. A replayed streaming batch is
-guarded by ``text_last_batch_id`` riding the SAME manifest commit as
-the posting dirs (the additive-append guard, like the ANN store).
+rides the SAME manifest commit as the posting dirs.
 """
 
 from __future__ import annotations
@@ -96,17 +94,14 @@ def append_text_index(
     id_col: str,
     text_col: str,
     table: str,
-    batch_id: int | None = None,
-) -> bool:
+) -> None:
     """Fold new documents in: the batch's postings CAS-append into
     their words' buckets (untouched buckets keep their dir lists
     verbatim — a query for other terms never pays for this append),
     and the corpus stats combine exactly in the SAME manifest commit
-    (counts and token sums add as extras). Because data, stats, and
-    the ``text_last_batch_id`` replay marker all ride one atomic
-    commit, there is no crash window where one landed without the
-    others — a replay after any crash resumes from a consistent
-    state. Returns False when the batch was already applied.
+    (counts and token sums add as extras). Because data and stats
+    ride one atomic commit, there is no crash window where one landed
+    without the other.
 
     Stats accumulation assumes one writer per index (the streaming
     bridge's model); concurrent appends still CAS-merge their
@@ -115,10 +110,6 @@ def append_text_index(
     manifest = catalog.latest_manifest(table)
     if manifest is None:
         raise ValueError(f"table {table} is not a text index (write first)")
-    if batch_id is not None:
-        last = manifest.get("text_last_batch_id")
-        if last is not None and last >= batch_id:
-            return False
     n_buckets = manifest["n_buckets"]
     post = _postings(batch, id_col, text_col)
     words = F.filter(F.split(F.col(text_col), " "), lambda w: F.length(w) > 0)
@@ -130,8 +121,6 @@ def append_text_index(
         "ti_n_docs": int(manifest.get("ti_n_docs", 0)) + int(st["n_docs"]),
         "ti_sum_dl": int(manifest.get("ti_sum_dl", 0)) + int(st["sum_dl"] or 0),
     }
-    if batch_id is not None:
-        extras["text_last_batch_id"] = int(batch_id)
     catalog.append_bucketed(
         post,
         table,
@@ -139,19 +128,14 @@ def append_text_index(
         ["word"],
         extras_update=extras,
     )
-    return True
 
 
 def text_index_search(
     catalog: ManifestCatalog,
     table: str,
     queries: DataFrame,
-    query_id: str = "query_id",
-    word_col: str = "word",
-    k: int = 10,
-    max_df_frac: float = 0.5,
 ) -> tuple[DataFrame, list[int]]:
-    """BM25 top-``k`` per query against the stored index, reading
+    """BM25 top-10 per query against the stored index, reading
     ONLY the query terms' bucket dirs. ``queries`` is a
     (query_id, word) term table — small, model-input scale; it
     broadcasts everywhere it appears. Returns ``(result,
@@ -160,15 +144,13 @@ def text_index_search(
 
     df is computed from the read buckets' postings (a term's whole
     posting list lives in its bucket), the stopword cap drops terms
-    with df > ``max_df_frac``·N before the scoring join, and the
+    with df > 0.5·N before the scoring join, and the
     per-query top-k goes through WindowGroupLimit partial top-k."""
     manifest = catalog.latest_manifest(table)
     if manifest is None:
         raise ValueError(f"table {table} is not a text index (write first)")
     n_buckets = manifest["n_buckets"]
-    qterms = queries.select(
-        F.col(query_id).alias("query_id"), F.col(word_col).alias("word")
-    ).distinct()
+    qterms = queries.select("query_id", "word").distinct()
     uniq = qterms.select("word").distinct()
     buckets = sorted(
         r["b"]
@@ -194,7 +176,7 @@ def text_index_search(
         post.join(F.broadcast(df_t), "word")
         .withColumn("n_docs", F.lit(n_docs).cast("long"))
         .withColumn("avgdl", F.lit(sum_dl / n_docs if n_docs else 0.0))
-        .filter(F.col("df") <= max_df_frac * F.col("n_docs"))
+        .filter(F.col("df") <= 0.5 * F.col("n_docs"))
         .join(F.broadcast(qterms), "word")
         .withColumn(
             "w",
@@ -213,7 +195,7 @@ def text_index_search(
     )
     result = (
         agg.withColumn("__rk", F.row_number().over(wk))
-        .filter(F.col("__rk") <= k)
+        .filter(F.col("__rk") <= 10)
         .select("query_id", "doc_id", "bm25")
     )
     return result, buckets
@@ -283,20 +265,18 @@ def purge_text_index_tombstones(catalog: ManifestCatalog, table: str) -> int:
     )
 
 
-def maybe_purge_text_index(
-    catalog: ManifestCatalog, table: str, max_tombstones: int = 1024
-) -> int:
+def maybe_purge_text_index(catalog: ManifestCatalog, table: str) -> int:
     """Tombstone-pressure policy, the deletion counterpart of
     ``ManifestCatalog.maybe_optimize``: purge only once the tombstone
-    list exceeds ``max_tombstones`` — below that, the read-time
-    filter is cheaper than a full-bucket rewrite, and the manifest
-    stays model-parameter-sized.  Call at the same cadence as
-    compaction (e.g. from a streaming bridge after N batches).
+    list exceeds 1,024 ids — below that, the read-time filter is
+    cheaper than a full-bucket rewrite, and the manifest stays
+    model-parameter-sized.  Call at the same cadence as compaction
+    (e.g. from a streaming bridge after N batches).
     Returns posting rows purged (0 = below threshold or nothing
     marked)."""
     manifest = catalog.latest_manifest(table)
     if manifest is None or "ti_n_docs" not in manifest:
         raise ValueError(f"table {table} is not a text index (write first)")
-    if len(manifest.get("ti_deleted_ids") or []) <= max_tombstones:
+    if len(manifest.get("ti_deleted_ids") or []) <= 1024:
         return 0
     return purge_text_index_tombstones(catalog, table)

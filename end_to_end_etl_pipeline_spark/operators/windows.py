@@ -42,15 +42,12 @@ def top_k_per_group(
     partition_by: Sequence[str],
     order_by: Sequence[Column],
     k: int,
-    rank_col: str = "rn",
 ) -> DataFrame:
-    """Top-k per group via row_number — Spark plans this as a per-
+    """Top-k per group via row_number (kept as ``rn``) — Spark plans this as a per-
     partition TopK (WindowGroupLimit) rather than a full sort when the
     filter is on row_number, so it survives wide groups."""
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(
-        F.col(rank_col) <= k
-    )
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
 def funnel_stages(

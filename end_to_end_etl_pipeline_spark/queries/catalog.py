@@ -126,6 +126,34 @@ def land_pinned(df: DataFrame, landing: str, mtime: int) -> None:
             os.utime(os.path.join(landing, f), (mtime, mtime))
 
 
+def drain_to_parquet(stream: DataFrame, root: str, output_mode: str) -> DataFrame:
+    """Run ``stream`` into a parquet sink under ``root`` with
+    ``availableNow``, wait for it, and return the sink's rows
+    (checkpointed, so the scratch lake may go). A stateful operator's
+    partition count freezes into the checkpoint at first start —
+    under a plain driver session that is 200 tasks per micro-batch
+    for a few thousand rows — so shuffle partitions are 8 for the
+    stream and restored after (a concurrent query in THIS session
+    would see 8; fine under the driver's serial runner)."""
+    spark = stream.sparkSession
+    sink = f"file://{root}/out"
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        (
+            stream.writeStream.format("parquet")
+            .option("path", sink)
+            .outputMode(output_mode)
+            .option("checkpointLocation", f"file://{root}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        return spark.read.parquet(sink).localCheckpoint(eager=True)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 # Import side-effect modules that populate REGISTRY.
 from end_to_end_etl_pipeline_spark.queries import core  # noqa: E402,F401
 from end_to_end_etl_pipeline_spark.queries import scans  # noqa: E402,F401

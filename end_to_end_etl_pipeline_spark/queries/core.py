@@ -29,6 +29,7 @@ from end_to_end_etl_pipeline_spark.operators.dq import apply_rules, bounds_rule,
 from end_to_end_etl_pipeline_spark.operators.joins import equi_join
 from end_to_end_etl_pipeline_spark.operators.windows import lag_growth, top_k_per_group
 from end_to_end_etl_pipeline_spark.queries.catalog import (
+    drain_to_parquet,
     land_pinned,
     load,
     register,
@@ -68,9 +69,9 @@ ANCHOR = "1998-12-01"  # fixed anchor instead of current_date: deterministic
 #: promo_revenue_ratio 1.38) sits at the exact-sum floor.
 
 
-def _cents(col, digits: int = 2):
-    """Exact integer scaling of a fixed-``digits``-decimal money/rate
-    column stored as double: x*100 + signum(x)*0.5 in DOUBLE,
+def _cents(col):
+    """Exact integer scaling of a 2-decimal money/rate column stored
+    as double: x*100 + signum(x)*0.5 in DOUBLE,
     truncated by the long cast (truncation is toward zero, so adding
     half AWAY from zero rounds half-away-from-zero — exact for BOTH
     signs). Exact because a 2dp value v is stored as v(1+e),
@@ -89,22 +90,22 @@ def _cents(col, digits: int = 2):
     materializes a java.math.BigDecimal per row). sum_charge kernel:
     0.50 s this form vs 0.88 s round-scaling vs 1.00 s r09 decimal
     vs 0.38 s inexact double (warm, sf0.1, same session)."""
-    scaled = col * (10 ** digits)
+    scaled = col * 100
     return (scaled + F.signum(scaled) * F.lit(0.5)).cast("long")
 
 
-def _rev(price: str = "l_extendedprice", disc: str = "l_discount"):
-    """Per-row revenue term price*(1-discount) — a LONG at 1e4 scale
-    (exact: 2dp x 2dp has exactly 4dp). Always aggregate through
-    :func:`_sum_rev` / :func:`_sum_rev_raw` (scale=10000)."""
-    return _cents(F.col(price)) * (100 - _cents(F.col(disc)))
+def _rev():
+    """Per-row revenue term l_extendedprice*(1-l_discount) — a LONG at
+    1e4 scale (exact: 2dp x 2dp has exactly 4dp). Always aggregate
+    through :func:`_sum_rev` / :func:`_sum_rev_raw`."""
+    return _cents(F.col("l_extendedprice")) * (100 - _cents(F.col("l_discount")))
 
 
-def _charge(tax: str = "l_tax"):
+def _charge():
     """Per-row charge term price*(1-disc)*(1+tax) — LONG at 1e6 scale
     (exact 6dp; <= ~1.1e11 per row at the TPC-H price cap). Aggregate
     with scale=1000000."""
-    return _rev() * (100 + _cents(F.col(tax)))
+    return _rev() * (100 + _cents(F.col("l_tax")))
 
 
 def _rev_zero():
@@ -138,22 +139,22 @@ def _merge_exact(colname: str, scale: int):
     return F.sum(_overflow_guard(colname).cast("decimal(28,0)")) / scale
 
 
-def _sum_rev(expr, dp: int = 2, scale: int = 10000):
-    """Order-free exact money sum, rounded to ``dp`` and returned as
-    DOUBLE (the oracle-matched output type): sums the scaled-long
-    rows as compact decimal(18,0) — long-fast-path adds, overflow-
-    safe to 1e28 via the buffer's BigDecimal fallback — then divides
-    the one result row back by ``scale`` in exact decimal."""
+def _sum_rev(expr):
+    """Order-free exact sum of 1e4-scaled money, rounded to 2dp and
+    returned as DOUBLE (the oracle-matched output type): sums the
+    scaled-long rows as compact decimal(18,0) — long-fast-path adds,
+    overflow-safe to 1e28 via the buffer's BigDecimal fallback — then
+    divides the one result row back by 10000 in exact decimal."""
     return F.round(
-        (F.sum(expr.cast("decimal(18,0)")) / scale).cast("decimal(38,6)"),
-        dp,
+        (F.sum(expr.cast("decimal(18,0)")) / 10000).cast("decimal(38,6)"),
+        2,
     ).cast("double")
 
 
-def _sum_rev_raw(expr, scale: int = 10000):
-    """Unrounded exact money sum as DOUBLE — for ratios of sums
-    (divide once, in double, after both sums are exact)."""
-    return (F.sum(expr.cast("decimal(18,0)")) / scale).cast("double")
+def _sum_rev_raw(expr):
+    """Unrounded exact sum of 1e4-scaled money as DOUBLE — for ratios
+    of sums (divide once, in double, after both sums are exact)."""
+    return (F.sum(expr.cast("decimal(18,0)")) / 10000).cast("double")
 
 
 @register(
@@ -350,7 +351,7 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
     )
     return joined.groupBy("n_name").agg(
-        _sum_rev(F.col("__rev"), 2).alias("revenue"),
+        _sum_rev(F.col("__rev")).alias("revenue"),
         F.countDistinct("c_custkey").alias("n_customers"),
     )
 
@@ -794,7 +795,7 @@ def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(customer, orders.o_custkey == customer.c_custkey)
     )
     agg = joined.groupBy("l_orderkey", "o_orderdate", "o_orderpriority").agg(
-        _sum_rev(_rev(), 2).alias(
+        _sum_rev(_rev()).alias(
             "revenue"
         )
     )
@@ -998,7 +999,6 @@ def purchase_view_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "v_ts",
         before_seconds=1800,
-        after_seconds=0,
         how="left",
     )
     return j.groupBy("event_id", "user_id").agg(
@@ -1095,7 +1095,7 @@ def local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nations_in_region), supplier.s_nationkey == F.col("n_nationkey"))
     )
     return joined.groupBy("n_name").agg(
-        _sum_rev(_rev(), 2).alias(
+        _sum_rev(_rev()).alias(
             "revenue"
         )
     )
@@ -1139,7 +1139,7 @@ def returned_item_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
     )
     agg = joined.groupBy("c_custkey", "c_name", "c_acctbal", "n_name").agg(
-        _sum_rev(_rev(), 2).alias(
+        _sum_rev(_rev()).alias(
             "revenue"
         )
     )
@@ -1210,10 +1210,10 @@ def salted_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # salt from l_partkey (row-varying within an orderkey): a hot
     # order's line items hash to different salts and genuinely spread
-    joined = salted_join(li, orders, ["l_orderkey"], salt_col="l_partkey", n_salt=8)
+    joined = salted_join(li, orders, ["l_orderkey"], salt_col="l_partkey")
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_items"),
-        _sum_rev(_rev(), 2).alias(
+        _sum_rev(_rev()).alias(
             "revenue"
         ),
     )
@@ -1277,7 +1277,7 @@ def nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cust_nation",
         F.year("l_shipdate").cast("int").alias("l_year"),
     ).agg(
-        _sum_rev(_rev(), 2).alias("revenue")
+        _sum_rev(_rev()).alias("revenue")
     )
 
 
@@ -1670,7 +1670,7 @@ def product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy(
         "supp_nation", F.year("o_orderdate").cast("int").alias("o_year")
-    ).agg(_sum_rev(profit, 2).alias("profit"))
+    ).agg(_sum_rev(profit).alias("profit"))
 
 
 @register(
@@ -1949,7 +1949,7 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        _sum_rev(_rev(), 2).alias(
+        _sum_rev(_rev()).alias(
             "total_revenue"
         )
     )
@@ -2002,7 +2002,7 @@ def discounted_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(part, (li.l_partkey == part.p_partkey) & pred)
         .agg(
-            _sum_rev(_rev(), 2).alias("revenue"),
+            _sum_rev(_rev()).alias("revenue"),
             F.count("*").alias("n_lines"),
         )
     )
@@ -2189,10 +2189,10 @@ def nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
         .agg(
-            _sum_rev(_rev(), 2).alias("w")
+            _sum_rev(_rev()).alias("w")
         )
     )
-    return pagerank(edges, iterations=3)
+    return pagerank(edges)
 
 
 @register(
@@ -2743,7 +2743,6 @@ def streaming_priority_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["o_orderpriority"],
         sum_cols=["o_totalprice"],
         checkpoint_dir=f"file://{root}/ckpt",
-        available_now=True,
     )
     q.awaitTermination()
     out = cat.read("st.rev").select(
@@ -2835,28 +2834,8 @@ def streaming_late_data_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("win.start").alias("window_start"), "n", "sum_total")
     )
-    sink = f"file://{root}/out"
-    # a stateful operator's partition count is frozen into the
-    # checkpoint at first start — under a plain driver session that
-    # is 200 tasks per micro-batch for a few thousand rows. Scope it
-    # down for the stream (self-configuring, like load()'s nanos
-    # conf) and restore so later queries see the session unchanged.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", sink)
-            .outputMode("append")  # emit each window once, finalized
-            .option("checkpointLocation", f"file://{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.read.parquet(sink).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return out
+    # append: emit each window once, finalized
+    return drain_to_parquet(agg, root, "append")
 
 
 @register(
@@ -2978,27 +2957,7 @@ def streaming_join_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="71 hours", max_delay_seconds=48 * 3600,
     ).select("user_id", "view_id", "view_ts", "purchase_id", "purchase_ts", "value")
 
-    sink = f"file://{root}/out"
-    # stateful-operator partition count freezes into the checkpoint at
-    # first start; scope it down for the stream and restore after (a
-    # concurrent query in THIS session would see 8 — fine under the
-    # driver's serial runner)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"file://{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.read.parquet(sink).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return out
+    return drain_to_parquet(joined, root, "append")
 
 
 @register(
@@ -3082,25 +3041,9 @@ def streaming_view_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(f"file://{landing}")
     )
     sessions = sessionize(
-        stream, "user_id", "ts", gap_minutes=30, watermark="127 minutes"
+        stream, "user_id", "ts", watermark="127 minutes"
     )
-    sink = f"file://{root}/out"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            sessions.writeStream.format("parquet")
-            .option("path", sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"file://{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.read.parquet(sink).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return out
+    return drain_to_parquet(sessions, root, "append")
 
 
 @register(
@@ -3890,7 +3833,7 @@ def purchase_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     touches = range_join(
         purchases, views, ["user_id"], "__pts", "__vts",
-        before_seconds=1800, after_seconds=0, how="inner",
+        before_seconds=1800, how="inner",
     )
     wrk = Window.partitionBy("purchase_event_id").orderBy(
         F.col("__vts").asc(), F.col("touch_event_id").asc()
@@ -4117,7 +4060,7 @@ def zorder_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = ManifestCatalog(spark, f"file://{root}")
     cat.replace_atomic(li, "z.li")
     cat.optimize_zorder(
-        "z.li", ["l_quantity", "l_extendedprice"], n_dirs=8,
+        "z.li", ["l_quantity", "l_extendedprice"],
         stats_cols=["l_quantity", "l_extendedprice"],
     )
     banded = cat.read_range("z.li", "l_quantity", 10, 20).filter(
@@ -4177,7 +4120,7 @@ def orders_time_travel_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     v1 = agg(cat.read("tt.o", version=1), "v1").localCheckpoint(eager=True)
     latest = agg(cat.read("tt.o"), "latest").localCheckpoint(eager=True)
-    cat.vacuum("tt.o", keep_versions=1, min_age_seconds=0)
+    cat.vacuum("tt.o", min_age_seconds=0)
     post = agg(cat.read("tt.o"), "post_vacuum").localCheckpoint(eager=True)
     return v1.unionByName(latest).unionByName(post)
 
@@ -4244,7 +4187,7 @@ def priority_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return target_encode_oof(
         orders, "priority", "price_dec",
-        fold_expr=F.col("o_orderkey") % 5, smoothing=20.0,
+        fold_expr=F.col("o_orderkey") % 5,
     )
 
 

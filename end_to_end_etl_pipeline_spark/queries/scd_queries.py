@@ -326,7 +326,6 @@ def streaming_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
         tracked=["order_cnt", "total_spent"],
         as_of_col="__as_of",
         checkpoint_dir=f"file://{root}/ckpt",
-        available_now=True,
     )
     q.awaitTermination()
     out = cat.read("dim.cust").select(

@@ -126,13 +126,13 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _nibble_int(col: str, start: int, width: int = 8) -> str:
-    """SQL for interpreting md5-hex chars [start, start+width) as an
+def _nibble_int(col: str, start: int) -> str:
+    """SQL for interpreting md5-hex chars [start, start+8) as an
     integer (DuckDB has no conv(); Spark-side uses conv — both yield
     the same value)."""
     terms = [
-        f"(strpos('{HEX}', substring({col}, {start + j}, 1)) - 1) * {16 ** (width - 1 - j)}"
-        for j in range(width)
+        f"(strpos('{HEX}', substring({col}, {start + j}, 1)) - 1) * {16 ** (7 - j)}"
+        for j in range(8)
     ]
     return "(" + " + ".join(terms) + ")"
 
@@ -223,7 +223,7 @@ def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     corpus = _variant_corpus(docs)
     out = minhash_near_dup_pairs(
-        corpus, "doc_id", "text", shingle_len=6, num_hashes=_K, bands=_B, threshold=0.6
+        corpus, "doc_id", "text", num_hashes=_K, bands=_B
     )
     return out.select(
         F.col("id_a").alias("doc_a"),
@@ -298,7 +298,7 @@ def _simhash_oracle() -> str:
 def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     corpus = _variant_corpus(docs)
-    out = simhash_near_dup_pairs(corpus, "doc_id", "text", shingle_len=6, max_hamming=6)
+    out = simhash_near_dup_pairs(corpus, "doc_id", "text")
     return out.select(
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "hamming"
     )
@@ -342,7 +342,7 @@ def ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    shd = word_shingles(docs, "doc_id", "text", n=3, distinct=True).join(
+    shd = word_shingles(docs, "doc_id", "text", distinct=True).join(
         docs.select("doc_id", "lang"), "doc_id"
     )
     sizes = shd.groupBy("doc_id").agg(F.count("*").alias("n"))
@@ -472,7 +472,7 @@ def doc_fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _spread(load(spark, sf_dir, "documents"))
-    return winnow_fingerprint_stats(docs, "doc_id", "text", kgram=8, window=4)
+    return winnow_fingerprint_stats(docs, "doc_id", "text")
 
 
 @register(
@@ -549,7 +549,7 @@ def wav_pcm_decode_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     payloads = orders.select(
         F.col("o_orderkey").alias("payload_id"),
-        pcm16_wav_blob(samples, sample_rate=8000).alias("wav"),
+        pcm16_wav_blob(samples).alias("wav"),
     )
     decoded = decode_wav_stats(payloads, "payload_id", "wav")
     return decoded.select(
@@ -748,9 +748,9 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     corpus = _variant_corpus(docs)
     pairs = minhash_near_dup_pairs(
-        corpus, "doc_id", "text", shingle_len=6, num_hashes=_K, bands=_B, threshold=0.6
+        corpus, "doc_id", "text", num_hashes=_K, bands=_B
     )
-    cc = connected_components(pairs, src="id_a", dst="id_b")
+    cc = connected_components(pairs)
     return cc.select(F.col("node").alias("doc_id"), "cluster_id")
 
 
@@ -792,7 +792,7 @@ def boilerplate_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _spread(load(spark, sf_dir, "documents"))
-    fps = winnow_fingerprints(docs, "doc_id", "text", kgram=8, window=4).persist()
+    fps = winnow_fingerprints(docs, "doc_id", "text").persist()
     common = (
         fps.groupBy("fp")
         .agg(F.count("*").alias("__n"))
@@ -1040,7 +1040,7 @@ def doc_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     payloads = with_binary_payload(docs, "text").select("doc_id", "payload")
-    frames = sample_frames(payloads, "doc_id", "payload", frame_bytes=64, stride=4)
+    frames = sample_frames(payloads, "doc_id", "payload")
     return frames.select(
         "doc_id", "frame_idx", F.md5(F.col("frame")).alias("frame_md5")
     )
@@ -1162,7 +1162,7 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
     exploded = docs.select(
         "doc_id",
-        F.posexplode(sliding_chunks("text", chunk_words=30, overlap_words=5)).alias(
+        F.posexplode(sliding_chunks("text")).alias(
             "chunk_idx", "ch"
         ),
     )
@@ -1785,7 +1785,7 @@ def doc_span_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     corpus = _variant_corpus(load(spark, sf_dir, "documents"))
-    fps = winnow_fingerprints(corpus, "doc_id", "text", kgram=8, window=4)
+    fps = winnow_fingerprints(corpus, "doc_id", "text")
     kept = (
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("__df"))
@@ -1996,9 +1996,9 @@ def near_dup_pruned_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = _variant_corpus(load(spark, sf_dir, "documents"))
     pairs = minhash_near_dup_pairs(
-        corpus, "doc_id", "text", shingle_len=6, num_hashes=_K, bands=_B, threshold=0.6
+        corpus, "doc_id", "text", num_hashes=_K, bands=_B
     )
-    cc = connected_components(pairs, src="id_a", dst="id_b")
+    cc = connected_components(pairs)
     survivors = cc.groupBy("cluster_id").agg(F.min("node").alias("keep_id"))
     dupes = (
         cc.join(survivors, cc.node == survivors.keep_id, "left_anti")
@@ -2383,7 +2383,7 @@ def line_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     relined = _spread(
         docs.select("doc_id", F.array_join(lines, "\n").alias("text"))
     )
-    return dedup_lines_global(relined, "doc_id", "text", sep="\n")
+    return dedup_lines_global(relined, "doc_id", "text")
 
 
 @register(
@@ -2462,7 +2462,7 @@ def within_doc_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     relined = docs.select(
         "doc_id", F.array_join(planted, "\n").alias("text")
     )
-    return dedup_lines_within_doc(relined, "doc_id", "text", sep="\n")
+    return dedup_lines_within_doc(relined, "doc_id", "text")
 
 
 def _cms_bucket_sql(row_expr: str, key_expr: str, width: int) -> str:
@@ -2539,8 +2539,8 @@ def word_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__rn") <= 20)
         .drop("__rn")
     )
-    sketch = cms_build(tok, "word", depth=4, width=256)
-    est = cms_estimate(sketch, top.select("word"), "word", depth=4, width=256)
+    sketch = cms_build(tok, "word")
+    est = cms_estimate(sketch, top.select("word"), "word")
     return top.join(est, "word").select(
         "word",
         "exact_cnt",
@@ -3693,7 +3693,7 @@ def bm25_store_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "query_id bigint, word string",
     )
-    res, _buckets = text_index_search(cat, "idx.bm25", qterms, k=10)
+    res, _buckets = text_index_search(cat, "idx.bm25", qterms)
     return res.localCheckpoint(eager=True)
 
 
@@ -3776,7 +3776,7 @@ def doc_shared_span_extent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     corpus = _variant_corpus(load(spark, sf_dir, "documents")).persist()
-    fps = winnow_fingerprints(corpus, "doc_id", "text", kgram=8, window=4)
+    fps = winnow_fingerprints(corpus, "doc_id", "text")
     keptf = (
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("__df"))
@@ -3911,7 +3911,7 @@ def crossencoder_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = cand.join(F.broadcast(q), "query_id")
     return cross_encoder_rerank(
         pairs, "query_id", "doc_id", "qtext", "text",
-        scorer=overlap_f1_scorer, topk=10,
+        scorer=overlap_f1_scorer,
     )
 
 
@@ -4068,10 +4068,10 @@ def crossencoder_trained_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1.0 / (2.0 * n_neg))
         ),
     )
-    w = train_pairwise_logreg(feats, "y", iters=3, lr=2.0, weight_col="wt")
+    w = train_pairwise_logreg(feats, "y", weight_col="wt")
     return cross_encoder_rerank(
         pairs, "query_id", "doc_id", "qtext", "text",
-        scorer=trained_linear_scorer(w), topk=10,
+        scorer=trained_linear_scorer(w),
     )
 
 
@@ -4238,7 +4238,7 @@ def dsir_importance_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _spread(load(spark, sf_dir, "documents"))
     return dsir_logratio_scores(
-        docs, "doc_id", "text", target=F.col("lang") == "en", dim=1024
+        docs, "doc_id", "text", target=F.col("lang") == "en"
     )
 
 

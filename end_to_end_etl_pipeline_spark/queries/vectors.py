@@ -151,8 +151,6 @@ def cosine_topk_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         "label",
-        k=5,
-        nprobe=2,
         dim=_dim(emb),
     )
 
@@ -203,9 +201,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
     )
     corpus = emb.unionByName(variants)
-    return sign_lsh_near_dup_pairs(
-        corpus, "vec_id", "embedding", num_planes=8, threshold=0.9999
-    )
+    return sign_lsh_near_dup_pairs(corpus, "vec_id", "embedding")
 
 
 # 16 subspaces x 8 centroids: 64-dim -> 16 3-bit codes/vector. K=8
@@ -301,7 +297,7 @@ def pq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     cb = pq_train(
         emb, "vec_id", "embedding",
-        num_subspaces=_PQ_M, num_centroids=_PQ_K, iters=1,
+        num_subspaces=_PQ_M, num_centroids=_PQ_K,
     )
     encoded = pq_encode(emb, "embedding", cb)
     return pq_topk_rerank(
@@ -312,8 +308,6 @@ def pq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         cb,
-        k=5,
-        shortlist_factor=5,
     )
 
 
@@ -342,7 +336,7 @@ def embedding_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     pooled = emb.select(
-        "vec_id", downsample_vector("embedding", factor=2).alias("pooled_vec")
+        "vec_id", downsample_vector("embedding").alias("pooled_vec")
     )
     return pooled.select(
         "vec_id", F.posexplode("pooled_vec").alias("pos", "pooled")
@@ -494,9 +488,7 @@ def semantic_pruned_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") + 1000000).alias("vec_id"), "embedding", "label"
     )
     corpus = emb.unionByName(variants)
-    return semantic_dedup_prune(
-        corpus, "vec_id", "embedding", "label", threshold=0.995
-    )
+    return semantic_dedup_prune(corpus, "vec_id", "embedding", "label")
 
 
 # The IVFADC oracle CTE chain (training -> routing -> restricted ADC
@@ -616,7 +608,7 @@ def ivfpq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     cb = pq_train(
         emb, "vec_id", "embedding",
-        num_subspaces=_PQ_M, num_centroids=_PQ_K, iters=1,
+        num_subspaces=_PQ_M, num_centroids=_PQ_K,
     )
     encoded = pq_encode(emb, "embedding", cb)
     return ivfpq_topk(
@@ -628,9 +620,6 @@ def ivfpq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         "label",
         cb,
-        k=5,
-        nprobe=2,
-        shortlist_factor=5,
         dim=_dim(emb),
     )
 
@@ -676,7 +665,7 @@ def ann_store_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # production shape: quantizer fixed, data streams in)
     cb = pq_train(
         emb, "vec_id", "embedding",
-        num_subspaces=_PQ_M, num_centroids=_PQ_K, iters=1,
+        num_subspaces=_PQ_M, num_centroids=_PQ_K,
     )
     cat = ManifestCatalog(spark, f"file://{root}")
     write_ivfpq_store(
@@ -700,7 +689,7 @@ def ann_store_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     res, _probed = ivfpq_store_topk(
         cat, "ann.pq",
         emb.filter(F.col("vec_id") < 10),
-        "vec_id", "embedding", k=5, nprobe=2, shortlist_factor=5,
+        "vec_id", "embedding", nprobe=2,
     )
     # eager: the scratch store may be reaped by the next invocation
     res = res.localCheckpoint(eager=True)
@@ -770,7 +759,7 @@ def _streaming_ann_ingest_restart_body(
     dim = _dim(emb)
     cb = pq_train(
         emb, "vec_id", "embedding",
-        num_subspaces=_PQ_M, num_centroids=_PQ_K, iters=1,
+        num_subspaces=_PQ_M, num_centroids=_PQ_K,
     )
     cat = ManifestCatalog(spark, f"file://{root}/lake")
     write_ivfpq_store(
@@ -840,7 +829,7 @@ def _streaming_ann_ingest_restart_body(
     # with the same id, the marker refuses it, batch 2 drains
     q2 = foreach_batch_ann_ingest(
         _read_stream(), cat, "ann.pq",
-        checkpoint_dir=ckpt, cell_col="label", available_now=True,
+        checkpoint_dir=ckpt, cell_col="label",
     )
     assert q2.awaitTermination(120), "run-2 stream still running after 120s"
     assert cat.latest_manifest("ann.pq").get("ann_last_batch_id") == 2
@@ -848,7 +837,7 @@ def _streaming_ann_ingest_restart_body(
     res, _probed = ivfpq_store_topk(
         cat, "ann.pq",
         emb.filter(F.col("vec_id") < 10),
-        "vec_id", "embedding", k=5, nprobe=2, shortlist_factor=5,
+        "vec_id", "embedding", nprobe=2,
     )
     # eager: the scratch store may be reaped by the next invocation
     return res.localCheckpoint(eager=True)
@@ -916,7 +905,7 @@ def ann_store_rebalanced_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = emb.count()
     cb = pq_train(
         emb, "vec_id", "embedding",
-        num_subspaces=_PQ_M, num_centroids=_PQ_K, iters=1,
+        num_subspaces=_PQ_M, num_centroids=_PQ_K,
     )
     cat = ManifestCatalog(spark, f"file://{root}")
     # a deliberately skewed layout: cell 0 = label 0 only, cell 1 =
@@ -935,7 +924,7 @@ def ann_store_rebalanced_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     res, _probed = ivfpq_store_topk(
         cat, "ann.rb",
         emb.filter(F.col("vec_id") < 10),
-        "vec_id", "embedding", k=5, nprobe=64, shortlist_factor=5,
+        "vec_id", "embedding", nprobe=64,
     )
     return res.localCheckpoint(eager=True)
 
@@ -959,7 +948,7 @@ def _exact_l2_top5(emb: DataFrame, queries: DataFrame) -> DataFrame:
     )
     return (
         c.join(F.broadcast(q), F.col("match_id") != F.col("query_id"))
-        .withColumn("l2sq", _fold_l2sq(F.col("__qv"), F.col("__cv"), 6))
+        .withColumn("l2sq", _fold_l2sq(F.col("__qv"), F.col("__cv")))
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= 5)
         .select("query_id", "match_id")
@@ -1034,12 +1023,12 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 10)
     cb = pq_train(
         emb, "vec_id", "embedding",
-        num_subspaces=_PQ_M, num_centroids=_PQ_K, iters=1,
+        num_subspaces=_PQ_M, num_centroids=_PQ_K,
     )
     approx = ivfpq_topk(
         queries, emb, pq_encode(emb, "embedding", cb),
         "vec_id", "vec_id", "embedding", "label", cb,
-        k=5, nprobe=2, shortlist_factor=5, dim=_dim(emb),
+        dim=_dim(emb),
     ).select("query_id", F.col("match_id").alias("a_match"))
     return _recall_frame(_exact_l2_top5(emb, queries), approx)
 
@@ -1122,11 +1111,11 @@ def embedding_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     cb = pq_train(
-        emb, "vec_id", "embedding", num_subspaces=1, num_centroids=16, iters=1
+        emb, "vec_id", "embedding", num_subspaces=1, num_centroids=16
     )
     enc = pq_encode(emb, "embedding", cb)
     # distance to own centroid: the M=1 ADC table indexed by the code
-    dt = _query_dtable("embedding", cb, 6)
+    dt = _query_dtable("embedding", cb)
     enc = enc.withColumn(
         "l2sq_to_centroid",
         F.element_at(
@@ -1225,21 +1214,21 @@ def ann_recall_trained_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 10)
 
     coarse = pq_train(
-        emb, "vec_id", "embedding", num_subspaces=1, num_centroids=16, iters=1
+        emb, "vec_id", "embedding", num_subspaces=1, num_centroids=16
     )
     cells = pq_encode(emb, "embedding", coarse).select(
         "vec_id", F.element_at("pq_codes", 1).alias("cell")
     )
     fine = pq_train(
         emb, "vec_id", "embedding",
-        num_subspaces=_PQ_M, num_centroids=_PQ_K, iters=1,
+        num_subspaces=_PQ_M, num_centroids=_PQ_K,
     )
     fenc = pq_encode(emb, "embedding", fine).select("vec_id", "pq_codes")
 
     # route: nearest-2 TRAINED centroids by exact rounded L2 (tie ->
     # lowest code), ranking only surviving codes — the dense ADC
     # table's 0.0 filler slots must not win the argmin
-    cdt = F.element_at(_query_dtable("embedding", coarse, 6), 1)
+    cdt = F.element_at(_query_dtable("embedding", coarse), 1)
     surviving = [code for code, _ in coarse[0]]
     cand = F.array(
         *[
@@ -1260,7 +1249,7 @@ def ann_recall_trained_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", F.col("c.cell").alias("cell"))
     )
 
-    fdt = _query_dtable("embedding", fine, 6)
+    fdt = _query_dtable("embedding", fine)
     q = queries.select(F.col("vec_id").alias("query_id"), fdt.alias("__dt"))
     qp = probe.join(q, "query_id")
     c = fenc.join(cells, "vec_id").select(
@@ -1282,7 +1271,7 @@ def ann_recall_trained_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = _exact_rerank(
         short, queries.withColumnRenamed("vec_id", "query_id"),
         emb.withColumnRenamed("vec_id", "match_id"),
-        "query_id", "match_id", "embedding", 5, 6,
+        "query_id", "match_id", "embedding",
     ).select("query_id", F.col("match_id").alias("a_match"))
     return _recall_frame(_exact_l2_top5(emb, queries), approx)
 
@@ -1428,10 +1417,7 @@ def hybrid_doc_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id bigint, word string",
     )
     lex = bm25_scores(d, qterms)
-    return rrf_fuse(
-        [(dense, "cosine"), (lex, "bm25")],
-        query_col="query_id", id_col="doc_id", k=60, arm_topk=20, topk=10,
-    )
+    return rrf_fuse([(dense, "cosine"), (lex, "bm25")])
 
 
 def _mmr_ctes(k: int, lam: float) -> str:
@@ -1543,9 +1529,7 @@ def mmr_diverse_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from end_to_end_etl_pipeline_spark.operators.retrieval import mmr_select
 
     candv = _mmr_candidates(spark, sf_dir)
-    out = mmr_select(
-        candv, "query_id", "match_id", "embedding", "cosine", k=5, lam=0.7
-    )
+    out = mmr_select(candv, "query_id", "match_id", "embedding", "cosine")
     return out.select(
         "query_id", F.col("match_id").alias("doc_id"), "mmr_rank",
         F.col("cosine").alias("rel"),
@@ -1576,7 +1560,7 @@ def mmr_diverse_rerank_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     candv = _mmr_candidates(spark, sf_dir)
     out = mmr_select_grouped(
-        candv, "query_id", "match_id", "embedding", "cosine", k=5, lam=0.7
+        candv, "query_id", "match_id", "embedding", "cosine"
     )
     return out.select(
         "query_id", F.col("match_id").alias("doc_id"), "mmr_rank",
@@ -1624,7 +1608,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     return hard_negatives(
         emb.filter(F.col("vec_id") < 10), emb,
-        "vec_id", "vec_id", "embedding", "label", k=5,
+        "vec_id", "vec_id", "embedding", "label",
     )
 
 
@@ -1697,7 +1681,6 @@ def cosine_topk_ivf_adaptive_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         "label",
-        k=5,
         min_candidates=100,
         dim=_dim(emb),
     )
@@ -1870,7 +1853,7 @@ def rag_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     cand = top.join(docs, top["match_id"] == docs["doc_id"]).select(
         "query_id", "match_id", "cosine",
-        F.posexplode(sliding_chunks("text", chunk_words=30, overlap_words=5))
+        F.posexplode(sliding_chunks("text"))
         .alias("chunk_idx", "ch"),
     )
     chunked = cand.select(

@@ -17,8 +17,9 @@ defects fixed (SURVEY.md §2.11-1):
   are path-addressed ``ManifestCatalog`` commits.
 
 On a real cluster the same factory is used with ``master=None`` (defer
-to spark-submit) and a larger ``shuffle_partitions`` (rule of thumb:
-2-3× total executor cores, then let AQE coalesce down).
+to spark-submit) and a larger ``spark.sql.shuffle.partitions`` through
+``extra_conf`` (rule of thumb: 2-3× total executor cores, then let AQE
+coalesce down).
 """
 
 from __future__ import annotations
@@ -35,7 +36,6 @@ def _local_cores() -> int:
 def create_spark_session(
     app_name: str = "end_to_end_etl_pipeline_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Create (or get) a SparkSession tuned for this engine.
@@ -53,7 +53,7 @@ def create_spark_session(
     cores = _local_cores()
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores))
+        .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

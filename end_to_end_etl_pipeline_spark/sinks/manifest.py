@@ -346,8 +346,19 @@ class ManifestCatalog:
         """Compare-and-swap publish: claim exactly version
         ``expected_base + 1``. Returns the version on success, None if
         another writer got there first — the caller re-reads the new
-        latest, rebases its content, and retries."""
-        self.fs.mkdirs(self._manifest_dir(name))
+        latest, rebases its content, and retries.
+
+        A base whose manifest is gone was vacuumed, so it is no longer
+        the latest: refuse before claiming. Without this a writer that
+        fell two versions behind could re-claim a slot :meth:`vacuum`
+        just emptied, and readers scanning forward from the hint would
+        stop at that stale version."""
+        mdir = self._manifest_dir(name)
+        self.fs.mkdirs(mdir)
+        if expected_base and not self.fs.exists(
+            f"{mdir}/{_MANIFEST_FMT.format(expected_base)}"
+        ):
+            return None
         version = expected_base + 1
         return version if self._try_publish(name, manifest, version) else None
 
@@ -731,14 +742,13 @@ class ManifestCatalog:
         )
         return [(r["__pos"] // 32, r["__pos"] % 32) for r in rows]
 
-    def bloom_pruned_dirs(
-        self, name: str, col: str, value, version: int | None = None
-    ) -> list[str]:
-        """Data dirs whose bloom for ``col`` MIGHT contain ``value``.
+    def bloom_pruned_dirs(self, name: str, col: str, value) -> list[str]:
+        """Latest-version data dirs whose bloom for ``col`` MIGHT
+        contain ``value``.
         Dirs without a bloom are kept — skipping is an IO optimization
         and must never change results. NULL probes keep every dir
         (equality on NULL matches nothing anyway)."""
-        manifest = self._require_manifest(name, version)
+        manifest = self._require_manifest(name)
         col_type = self._column_type(name, col, manifest)
         return self._bloom_pruned_dirs_resolved(manifest, col, value, col_type)
 
@@ -850,14 +860,12 @@ class ManifestCatalog:
             return self.read(name).filter(F.lit(False))
         return self._read_dirs(dirs).filter(F.col(col) == F.lit(value))
 
-    def pruned_dirs(
-        self, name: str, col: str, lo, hi, version: int | None = None
-    ) -> list[str]:
-        """Data dirs whose [min,max] stats for ``col`` overlap
-        [lo, hi]. Dirs without stats (or with an all-NULL column) are
+    def pruned_dirs(self, name: str, col: str, lo, hi) -> list[str]:
+        """Latest-version data dirs whose [min,max] stats for ``col``
+        overlap [lo, hi]. Dirs without stats (or with an all-NULL column) are
         kept — skipping is an IO optimization and must never change
         results; the caller still applies the row filter."""
-        manifest = self._require_manifest(name, version)
+        manifest = self._require_manifest(name)
         stats = manifest.get("stats") or {}
         kept = []
         for d in self._dirs(manifest):
@@ -953,8 +961,8 @@ class ManifestCatalog:
         return inserts.unionByName(deletes).unionByName(pre).unionByName(post)
 
     def replace_atomic(
-        self, df: DataFrame, name: str, partition_by=None, stats_cols=None,
-        base_version: int | None = None, bloom_cols=None,
+        self, df: DataFrame, name: str, partition_by=None,
+        base_version: int | None = None,
     ) -> int | None:
         """K1 — full refresh as one manifest commit (readers see old or
         new, never between; crash leaves old manifest current).
@@ -985,14 +993,6 @@ class ManifestCatalog:
         manifest = {"dirs": [data_dir], "bucket_dirs": None, "n_buckets": None}
         if not partition_by:
             manifest["schema"] = df.schema.json()
-        if stats_cols:
-            manifest["stats"] = {
-                data_dir: self._dir_stats(data_dir, stats_cols, df.schema)
-            }
-        if bloom_cols:
-            manifest["blooms"] = {
-                data_dir: self._dir_blooms(data_dir, bloom_cols, df.schema)
-            }
         if base_version is None:
             version = self._commit(name, manifest)
         else:
@@ -1272,12 +1272,10 @@ class ManifestCatalog:
             manifest["version"],
         ) is not None
 
-    def shallow_clone(
-        self, src: str, dst: str, version: int | None = None
-    ) -> int:
+    def shallow_clone(self, src: str, dst: str) -> int:
         """Zero-copy snapshot publication (Delta's ``SHALLOW CLONE``):
         commit a new table whose manifest references the SOURCE's
-        data dirs at ``version`` (default latest) — no bytes move, so
+        latest data dirs — no bytes move, so
         cloning a 100-TB table is one JSON write.  The clone then
         evolves independently (appends/deletes land in its own dirs;
         the shared dirs are immutable by design).
@@ -1290,7 +1288,7 @@ class ManifestCatalog:
         clones, or re-materialize (``replace_atomic(read(clone),
         ...)``) to sever the dependency — the deep-clone equivalent.
         Returns the committed clone version (always 1)."""
-        manifest = self._require_manifest(src, version)
+        manifest = self._require_manifest(src)
         if self.latest_manifest(dst) is not None:
             raise ValueError(f"table {dst} already exists")
         clone = {k: v for k, v in manifest.items() if k != "version"}
@@ -1615,21 +1613,20 @@ class ManifestCatalog:
         self,
         name: str,
         cols: Sequence[str],
-        bits: int = 8,
-        n_dirs: int = 8,
         stats_cols: Sequence[str] | None = None,
     ) -> None:
         """K8, the interleaved-bit version: rewrite the table
-        clustered on the Morton key of ``cols`` (see
-        :mod:`sinks.zorder`), split into ``n_dirs`` key-range data
-        dirs, each with min/max stats on ``stats_cols`` (default: the
-        clustered columns). Unlike ``optimize(cluster_by=...)``'s
-        linear sort — which skips on the leading column only — every
-        clustered column gets manifest-level data skipping via
+        clustered on the 8-bit-per-column Morton key of ``cols`` (see
+        :mod:`sinks.zorder`), split into 8 key-range data dirs, each
+        with min/max stats on ``stats_cols`` (default: the clustered
+        columns). Unlike ``optimize(cluster_by=...)``'s linear sort —
+        which skips on the leading column only — every clustered
+        column gets manifest-level data skipping via
         :meth:`read_range` / :meth:`pruned_dirs`. Not for bucketed
         tables (their dir layout is the bucket map)."""
-        from end_to_end_etl_pipeline_spark.sinks.zorder import zorder_key
+        from end_to_end_etl_pipeline_spark.sinks.zorder import BITS, zorder_key
 
+        n_dirs = 8
         # CAS on the base version, like optimize(): the rewrite's
         # content IS the base version's rows, so a concurrent append
         # must force a rebase, not be silently dropped
@@ -1641,8 +1638,8 @@ class ManifestCatalog:
                 )
             base = manifest["version"]
             df = self.read(name, version=base)
-            z = zorder_key(df, cols, bits=bits)
-            key_space = 1 << (bits * len(cols))
+            z = zorder_key(df, cols)
+            key_space = 1 << (BITS * len(cols))
             zb = F.least(
                 F.lit(n_dirs - 1),
                 F.floor(z / F.lit(key_space / n_dirs)).cast("int"),
@@ -1669,15 +1666,13 @@ class ManifestCatalog:
             if self._commit_if(name, new, base):
                 return
 
-    def vacuum(
-        self, name: str, keep_versions: int = 1, min_age_seconds: int = 3600
-    ) -> list[str]:
-        """Garbage-collect data dirs referenced by no retained
-        manifest (superseded rewrites AND crash orphans that never
-        got a manifest), plus manifests older than the retention
-        window. Returns deleted data-dir paths.
+    def vacuum(self, name: str, min_age_seconds: int = 3600) -> list[str]:
+        """Garbage-collect data dirs the latest manifest does not
+        reference (superseded rewrites AND crash orphans that never
+        got a manifest), plus every older manifest. Returns deleted
+        data-dir paths.
 
-        Committed retained versions can never be collected, so vacuum
+        The latest version can never be collected, so vacuum
         never races a reader. ``min_age_seconds`` protects in-flight
         *writers*: a concurrent commit's data dir exists before its
         manifest does and would otherwise look like an orphan — only
@@ -1690,7 +1685,7 @@ class ManifestCatalog:
         versions = self._versions(name)
         if not versions:
             return []
-        retained = versions[-keep_versions:]
+        retained = versions[-1:]
         referenced: set[str] = set()
         for v in retained:
             m = json.loads(

@@ -14,41 +14,23 @@ published by one catalog commit — see there for the scale discussion.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 
 
-def write_csv(
-    df: DataFrame,
-    path: str,
-    header: bool = True,
-    mode: str = "overwrite",
-    partition_by: Sequence[str] | None = None,
-) -> None:
-    """K7 — headered CSV sink (reference exports intermediate frames
-    to CSV in ``aws/y_finance_raw_ingestion.ipynb`` cells 4/6/8).
+def write_csv(df: DataFrame, path: str) -> None:
+    """K7 — headered CSV sink, overwriting ``path`` (reference exports
+    intermediate frames to CSV in ``aws/y_finance_raw_ingestion.ipynb``
+    cells 4/6/8).
 
     Distributed write — one file per partition, no driver collect.
     CSV is untyped on disk; pair with :func:`sources.readers.read_csv`
     and an explicit schema for a lossless round-trip (proved by the
     ``csv_scan_roundtrip`` oracle query)."""
-    writer = df.write.mode(mode).option("header", header)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.csv(path)
+    df.write.mode("overwrite").option("header", True).csv(path)
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: Sequence[str] | None = None,
-) -> None:
-    """ORC sink — typed columnar output with the same distributed
-    write path as parquet (round-trip proved by the
+def write_orc(df: DataFrame, path: str) -> None:
+    """ORC sink, overwriting ``path`` — typed columnar output with the
+    same distributed write path as parquet (round-trip proved by the
     ``orc_scan_roundtrip`` oracle query)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.format("orc").save(path)
+    df.write.mode("overwrite").format("orc").save(path)

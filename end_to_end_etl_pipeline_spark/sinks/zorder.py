@@ -26,16 +26,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def zorder_key(
-    df: DataFrame, cols: Sequence[str], bits: int = 8
-) -> Column:
+#: quantization bits per clustered column
+BITS = 8
+
+
+def zorder_key(df: DataFrame, cols: Sequence[str]) -> Column:
     """Morton key over min-max-quantized columns as a LongType
-    expression: each column scales to ``[0, 2^bits)`` and bit ``i`` of
+    expression: each column scales to ``[0, 2^BITS)`` and bit ``i`` of
     column ``c`` lands at position ``i * ncols + c`` of the key.
     Quantization bounds come from one driver-collected aggregate
     (constant fold into the plan, like a broadcast scalar);
-    ``bits * len(cols)`` must stay under 63.
+    ``BITS * len(cols)`` must stay under 63.
     """
+    bits = BITS
     if bits * len(cols) > 62:
         raise ValueError(f"zorder key overflows long: {bits} bits x {len(cols)} cols")
     row = df.agg(

@@ -83,36 +83,31 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def with_file_metadata(df: DataFrame, col_name: str = "file_path") -> DataFrame:
-    """S4 — file-metadata virtual column: source path per row.
+def with_file_metadata(df: DataFrame) -> DataFrame:
+    """S4 — file-metadata virtual column: source path per row, as
+    ``file_path``.
 
     Uses the ``_metadata`` hidden column (OSS Spark ≥3.2 for file
     sources) rather than ``input_file_name()`` — same choice as the
     reference (``medallion/bronze/ds2b_company_house.py:63``).
     """
-    return df.withColumn(col_name, F.col("_metadata.file_path"))
+    return df.withColumn("file_path", F.col("_metadata.file_path"))
 
 
 def with_path_key(
     df: DataFrame,
     key_name: str,
     pattern: str = r"/([0-9A-Z]+)/[^/]+$",
-    path_col: str = "file_path",
 ) -> DataFrame:
-    """S5 — derive a business key from the directory layout
-    (reference ``medallion/bronze/ds2b_company_house.py:64-67``)."""
-    return df.withColumn(key_name, F.regexp_extract(F.col(path_col), pattern, 1))
+    """S5 — derive a business key from the ``file_path`` directory
+    layout (reference ``medallion/bronze/ds2b_company_house.py:64-67``)."""
+    return df.withColumn(key_name, F.regexp_extract(F.col("file_path"), pattern, 1))
 
 
-def read_text_lines(
-    spark: SparkSession, path: str, whole: bool = False
-) -> DataFrame:
-    """Raw text source: one row per line (``value string``), or one
-    row per FILE with ``wholetext`` — the landing format for corpus
-    dumps that predate any schema (the step before a documents table
-    exists). Splits parallelize per file/line range exactly like any
-    file scan; downstream parsing is ordinary column work."""
-    reader = spark.read
-    if whole:
-        reader = reader.option("wholetext", "true")
-    return reader.text(path)
+def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
+    """Raw text source: one row per line (``value string``) — the
+    landing format for corpus dumps that predate any schema (the step
+    before a documents table exists). Splits parallelize per
+    file/line range exactly like any file scan; downstream parsing is
+    ordinary column work."""
+    return spark.read.text(path)

@@ -33,7 +33,6 @@ def sessionize(
     events: DataFrame,
     user_col: str,
     ts_col: str,
-    gap_minutes: int = 30,
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Custom stateful operator: gap-based sessionization via
@@ -42,7 +41,7 @@ def sessionize(
     ``session_window`` covers plain gap windows; this shape is where
     custom per-key state logic plugs in).
 
-    Per user, consecutive events ≤ ``gap_minutes`` apart form a
+    Per user, consecutive events ≤ 30 minutes apart form a
     session; a longer gap closes it. Closed sessions emit immediately
     (in-batch gaps) or via event-time timeout once the watermark
     passes the open session's deadline — so state per key is one
@@ -52,7 +51,7 @@ def sessionize(
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    gap_ms = gap_minutes * 60 * 1000
+    gap_ms = 30 * 60 * 1000
     user_type = events.schema[user_col].dataType.simpleString()
     out_schema = (
         f"{user_col} {user_type}, session_start timestamp, "
@@ -115,9 +114,8 @@ def stream_stream_join(
     right_time: str,
     watermark: str = "1 hour",
     max_delay_seconds: int = 3600,
-    how: str = "inner",
 ) -> DataFrame:
-    """Stream-stream equi-join with an event-time band: a left row
+    """Stream-stream inner equi-join with an event-time band: a left row
     matches right rows of the same key with ``right_time`` in
     ``[left_time, left_time + max_delay]`` — the attribution shape
     (impression→conversion, order→shipment).
@@ -131,8 +129,7 @@ def stream_stream_join(
     memory, not just semantics.
 
     Column names must be disjoint apart from ``keys`` (pre-alias).
-    ``how``: inner joins emit as matches arrive; outer variants emit
-    NULL-padded rows only after watermark expiry.
+    Matches emit as they arrive.
     """
     lw = left.withWatermark(left_time, watermark)
     rw = right.withWatermark(right_time, watermark)
@@ -146,7 +143,7 @@ def stream_stream_join(
         & (rt >= lt)
         & (rt <= lt + F.expr(f"INTERVAL {max_delay_seconds} SECONDS"))
     )
-    joined = lw.join(rw, cond, how)
+    joined = lw.join(rw, cond, "inner")
     # drop the right-side duplicate key columns
     return joined.drop(*[rw[k] for k in keys])
 
@@ -158,7 +155,6 @@ def foreach_batch_agg_maintenance(
     keys: Sequence[str],
     sum_cols: Sequence[str],
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Streaming materialized view: keep a grouped sum/count state
     table current by merging each micro-batch as an insert-only CDC
@@ -177,19 +173,25 @@ def foreach_batch_agg_maintenance(
     after a crash-between-commit-and-checkpoint is detected and
     skipped instead of double-counted.
 
-    Returns the started ``StreamingQuery`` (caller awaits)."""
+    Runs with ``availableNow``; returns the started ``StreamingQuery``
+    (caller awaits)."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_agg_batch(catalog, table, keys, sum_cols, batch_df, batch_id)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
+    return _start_available_now(stream_df, _apply, checkpoint_dir)
+
+
+def _start_available_now(stream_df: DataFrame, apply_fn, checkpoint_dir: str):
+    """Start a ``foreachBatch(apply_fn)`` append stream that drains the
+    input available now, then stops."""
+    return (
+        stream_df.writeStream.foreachBatch(apply_fn)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def apply_agg_batch(
@@ -236,7 +238,6 @@ def foreach_batch_scd2(
     tracked: Sequence[str],
     as_of_col: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """Streaming dimension history: each micro-batch SCD2-merges into
     a catalog table through ``operators/scd.SCDEngine.apply_scd2``,
@@ -249,7 +250,8 @@ def foreach_batch_scd2(
     replay-convergent without a batch-id guard, like the dedup-store
     bridge and unlike additive aggregates.
 
-    Returns the started ``StreamingQuery`` (caller awaits)."""
+    Runs with ``availableNow``; returns the started ``StreamingQuery``
+    (caller awaits)."""
     from end_to_end_etl_pipeline_spark.operators.dedup import dedup_by_key
     from end_to_end_etl_pipeline_spark.operators.scd import SCDEngine
 
@@ -274,14 +276,7 @@ def foreach_batch_scd2(
             latest.drop(as_of_col), table, keys, tracked, as_of=as_of
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_available_now(stream_df, _apply, checkpoint_dir)
 
 
 def foreach_batch_ann_ingest(
@@ -290,7 +285,6 @@ def foreach_batch_ann_ingest(
     table: str,
     checkpoint_dir: str,
     cell_col: str | None = None,
-    available_now: bool = True,
     auto_compact_max_dirs: int | None = None,
 ):
     """Continuous ANN-index maintenance: every micro-batch of new
@@ -322,8 +316,8 @@ def foreach_batch_ann_ingest(
     only once the WORST cell exceeds the threshold (optimize
     preserves the identity-bucketed cell layout and custom manifest
     metadata, pytest-proven), so probe-time read amplification stays
-    bounded forever. Returns the started ``StreamingQuery`` (caller
-    awaits)."""
+    bounded forever. Runs with ``availableNow``; returns the started
+    ``StreamingQuery`` (caller awaits)."""
     from end_to_end_etl_pipeline_spark.operators.ivf_store import (
         append_ivfpq_store,
     )
@@ -337,11 +331,4 @@ def foreach_batch_ann_ingest(
         if auto_compact_max_dirs is not None:
             catalog.maybe_optimize(table, max_dirs=auto_compact_max_dirs)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_available_now(stream_df, _apply, checkpoint_dir)

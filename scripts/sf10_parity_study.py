@@ -524,10 +524,10 @@ def store_dedup_conformance(spark, sf_dir: str) -> dict:
         t0 = time.perf_counter()
         K, BANDS, ROWS, T = 16, 4, 4, 0.6
         sig_store = minhash_signatures_cw(
-            char_shingles(docs, "doc_id", "text", n=6), "doc_id", K
+            char_shingles(docs, "doc_id", "text"), "doc_id", K
         )
         sig_batch = minhash_signatures_cw(
-            char_shingles(batch, "doc_id", "text", n=6), "doc_id", K
+            char_shingles(batch, "doc_id", "text"), "doc_id", K
         )
         sigarr = F.array(*[F.col(f"m{k}") for k in range(K)])
 

@@ -58,11 +58,9 @@ def test_adaptive_probe_full_floor_equals_brute_force(spark):
     queries = corpus.filter("vec_id in (0, 8)")
     adaptive = cosine_topk_ivf(
         queries, corpus, "vec_id", "vec_id", "embedding", "label",
-        k=3, min_candidates=10_000,
+        min_candidates=10_000,
     )
-    brute = cosine_topk(
-        queries, corpus, "vec_id", "vec_id", "embedding", k=3,
-    )
+    brute = cosine_topk(queries, corpus, "vec_id", "vec_id", "embedding")
     assert sorted(map(tuple, adaptive.collect())) == sorted(
         map(tuple, brute.collect())
     )
@@ -79,10 +77,8 @@ def test_adaptive_probe_small_floor_probes_one_cell(spark):
 
 def test_store_cell_counts_metadata_and_adaptive_probe(spark, tmp_path):
     """The persisted IVFADC store keeps exact per-cell counts in the
-    manifest (write + every CAS append), and min_candidates probing
-    consumes ONLY that metadata: floor satisfied per query, and with
-    a corpus-sized floor the adaptive query equals the probe-all
-    fixed-nprobe query exactly."""
+    manifest (write + every CAS append), and a probe-all query reads
+    every counted cell."""
     from end_to_end_etl_pipeline_spark.operators.ivf_store import (
         append_ivfpq_store,
         ivfpq_store_topk,
@@ -111,45 +107,11 @@ def test_store_cell_counts_metadata_and_adaptive_probe(spark, tmp_path):
     assert m1["cell_counts"] == want_all
 
     queries = emb.orderBy("vec_id").limit(3)
-    total = emb.count()
-    got, probed = ivfpq_store_topk(
-        cat, "ann.pq", queries, "vec_id", "embedding", k=3,
-        min_candidates=total,
+    got, probed_all = ivfpq_store_topk(
+        cat, "ann.pq", queries, "vec_id", "embedding", nprobe=m1["n_buckets"],
     )
-    want, probed_all = ivfpq_store_topk(
-        cat, "ann.pq", queries, "vec_id", "embedding", k=3,
-        nprobe=m1["n_buckets"],
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    assert sorted(probed) == sorted(probed_all)
-    # small floor: probed cells per query satisfy the floor by counts
-    floor = 60
-    _, probed_small = ivfpq_store_topk(
-        cat, "ann.pq", queries, "vec_id", "embedding", k=3,
-        min_candidates=floor,
-    )
-    assert len(probed_small) < m1["n_buckets"]
-
-    # a store written before counts existed fails loudly, not wrongly
-    legacy = {k: v for k, v in m1.items() if k not in ("cell_counts", "version")}
-    cat._commit("ann.pq", legacy)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="cell_counts"):
-        ivfpq_store_topk(cat, "ann.pq", queries, "vec_id", "embedding",
-                         k=3, min_candidates=10)
-
-
-def test_adaptive_cut_rule():
-    from end_to_end_etl_pipeline_spark.operators.ivf_store import _adaptive_cut
-
-    pairs = [(0, 5), (0, 2), (0, 9), (1, 2), (1, 5)]
-    counts = {"5": 40, "2": 30, "9": 100}
-    # q0: prev 0<60 -> take 5 (cum 40); 40<60 -> take 2 (cum 70); stop
-    # q1: prev 0<60 -> take 2 (cum 30); 30<60 -> take 5 (cum 70)
-    assert _adaptive_cut(pairs, counts, 60) == [(0, 5), (0, 2), (1, 2), (1, 5)]
-    # unknown cell counts as 0 (never blocks later cells)
-    assert _adaptive_cut([(0, 7), (0, 5)], counts, 10) == [(0, 7), (0, 5)]
+    assert sorted(probed_all) == sorted(int(c) for c in m1["cell_counts"])
+    assert got.count() == 3 * 5
 
 
 def test_ivf_store_delete_is_change_proportional_and_exact(spark, tmp_path):
@@ -199,9 +161,9 @@ def test_ivf_store_delete_is_change_proportional_and_exact(spark, tmp_path):
     once.replace_atomic(cat.read("ann.pq__centroids"), "ann.pq__centroids")
     queries = emb.orderBy("vec_id").limit(3)
     got, _ = ivfpq_store_topk(cat, "ann.pq", queries, "vec_id", "embedding",
-                              k=3, nprobe=3)
+                              nprobe=3)
     want, _ = ivfpq_store_topk(once, "ann.pq", queries, "vec_id", "embedding",
-                               k=3, nprobe=3)
+                               nprobe=3)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
     # deleted ids never come back
     assert not set(r["match_id"] for r in got.collect()) & set(victims)
@@ -243,8 +205,8 @@ def test_text_index_tombstone_delete_and_purge(spark, tmp_path):
     fresh = ManifestCatalog(spark, f"file://{tmp_path}/b")
     write_text_index(fresh, docs.filter("doc_id <> 2"), "doc_id", "text",
                      "idx", n_buckets=8)
-    got, _ = text_index_search(cat, "idx", queries, k=10)
-    want, _ = text_index_search(fresh, "idx", queries, k=10)
+    got, _ = text_index_search(cat, "idx", queries)
+    want, _ = text_index_search(fresh, "idx", queries)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
     purged = purge_text_index_tombstones(cat, "idx")
@@ -252,7 +214,7 @@ def test_text_index_tombstone_delete_and_purge(spark, tmp_path):
     m2 = cat.latest_manifest("idx")
     assert m2["ti_deleted_ids"] == []
     assert cat.read("idx").filter("doc_id = 2").count() == 0
-    got2, _ = text_index_search(cat, "idx", queries, k=10)
+    got2, _ = text_index_search(cat, "idx", queries)
     assert sorted(map(tuple, got2.collect())) == sorted(map(tuple, want.collect()))
     # idempotent re-delete is a no-op
     assert delete_from_text_index(cat, "idx", [2]) == 0
@@ -297,17 +259,18 @@ def test_maybe_purge_text_index_threshold(spark, tmp_path):
     from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
     docs = spark.createDataFrame(
-        [(i, f"word{i} common text") for i in range(6)],
+        [(i, f"word{i} common text") for i in range(1030)],
         "doc_id bigint, text string",
     )
     cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
     write_text_index(cat, docs, "doc_id", "text", "idx", n_buckets=4)
     delete_from_text_index(cat, "idx", [0, 1])
-    # under threshold: no rewrite, tombstones remain
-    assert maybe_purge_text_index(cat, "idx", max_tombstones=5) == 0
+    # under the 1,024-tombstone threshold: no rewrite, tombstones remain
+    assert maybe_purge_text_index(cat, "idx") == 0
     assert cat.latest_manifest("idx")["ti_deleted_ids"] == [0, 1]
-    # over threshold: physical purge, list cleared
-    assert maybe_purge_text_index(cat, "idx", max_tombstones=1) > 0
+    # over threshold (1,025 tombstones): physical purge, list cleared
+    delete_from_text_index(cat, "idx", list(range(2, 1025)))
+    assert maybe_purge_text_index(cat, "idx") > 0
     m = cat.latest_manifest("idx")
     assert m["ti_deleted_ids"] == []
-    assert cat.read("idx").filter("doc_id in (0, 1)").count() == 0
+    assert cat.read("idx").filter("doc_id < 1025").count() == 0

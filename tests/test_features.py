@@ -31,17 +31,16 @@ def test_oof_exclusion_and_smoothing(spark):
     out = {
         (r["cat"], r["fold"]): (r["te"], r["n_oof"])
         for r in target_encode_oof(
-            _df(spark, rows), "cat", "y", F.col("k") % 2,
-            smoothing=2.0,
+            _df(spark, rows), "cat", "y", F.col("k") % 2
         ).collect()
     }
     # cat a fold0: excl stats from fold1 only: sum=40, n=1;
     # prior_excl = fold1 global mean = 40/1 = 40
-    # te = (40 + 2*40)/(1+2) = 40
+    # te = (40 + 20*40)/(1+20) = 40 (smoothing m = 20)
     assert out[("a", 0)] == (40.0, 1)
     # cat a fold1: excl sum=30, n=2; prior_excl = (10+20+100)/3
     prior = (10 + 20 + 100) / 3
-    te = round((30 + 2 * prior) / (2 + 2), 6)
+    te = round((30 + 20 * prior) / (2 + 20), 6)
     assert out[("a", 1)] == (te, 2)
     # cat b seen ONLY in fold0: n_excl=0 -> fallback to prior_excl
     # (fold1 global mean = 40)

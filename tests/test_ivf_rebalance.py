@@ -49,7 +49,7 @@ def _skewed_store(spark, tmp_path, n=60):
         rows.append((i, vec, 1))
     emb = _emb(spark, rows)
     cb = pq_train(emb, "vec_id", "embedding", num_subspaces=2,
-                  num_centroids=4, iters=1)
+                  num_centroids=4)
     cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
     write_ivfpq_store(cat, emb.withColumn("cell", F.col("label")),
                       "vec_id", "embedding", "cell", cb, "rb.t", dim=4)
@@ -96,7 +96,7 @@ def test_split_shrinks_probe_reads_same_results_on_full_probe(spark, tmp_path):
     queries = emb.filter(F.col("vec_id") < 4)
     pre, probed_pre = ivfpq_store_topk(
         cat, "rb.t", queries, "vec_id", "embedding",
-        k=3, nprobe=16, shortlist_factor=5,
+        nprobe=16,
     )
     pre_rows = sorted(map(tuple, pre.collect()))
     m0 = cat.latest_manifest("rb.t")
@@ -104,7 +104,7 @@ def test_split_shrinks_probe_reads_same_results_on_full_probe(spark, tmp_path):
     m1 = cat.latest_manifest("rb.t")
     post, probed_post = ivfpq_store_topk(
         cat, "rb.t", queries, "vec_id", "embedding",
-        k=3, nprobe=16, shortlist_factor=5,
+        nprobe=16,
     )
     # full probe → identical results before and after the split
     assert sorted(map(tuple, post.collect())) == pre_rows
@@ -120,7 +120,7 @@ def test_unsplittable_duplicate_cell_is_left_alone(spark, tmp_path):
     rows += [(100 + i, [0.0, 1.0, 0.0, float(i % 3)], 1) for i in range(5)]
     emb = _emb(spark, rows)
     cb = pq_train(emb, "vec_id", "embedding", num_subspaces=2,
-                  num_centroids=2, iters=1)
+                  num_centroids=2)
     cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
     write_ivfpq_store(cat, emb.withColumn("cell", F.col("label")),
                       "vec_id", "embedding", "cell", cb, "rb.dup", dim=4)
@@ -146,12 +146,12 @@ def test_maybe_rebalance_loops_until_balanced_and_is_idempotent(spark, tmp_path)
     cat, emb = _skewed_store(spark, tmp_path, n=86)  # hot cell: 80 rows
     # threshold 25: one split leaves ~40-row halves (still hot), so
     # the policy must take MULTIPLE passes to settle
-    splits = maybe_rebalance(cat, "rb.t", max_cell_rows=25, max_passes=6)
+    splits = maybe_rebalance(cat, "rb.t", max_cell_rows=25)
     assert len(splits) >= 2
     m = cat.latest_manifest("rb.t")
     counts = {int(k): int(v) for k, v in m["cell_counts"].items()}
     assert sum(counts.values()) == 86
-    assert max(counts.values()) <= 25 or len(splits) == 6
+    assert max(counts.values()) <= 25
     # quiet store: second call is a no-op (one manifest read, no commit)
     v = m["version"]
     assert maybe_rebalance(cat, "rb.t", max_cell_rows=max(counts.values())) == {}
@@ -172,7 +172,7 @@ def test_crash_between_commit_and_refresh_is_recoverable(
     queries = emb.filter(F.col("vec_id") < 4)
     pre, _ = ivfpq_store_topk(
         cat, "rb.t", queries, "vec_id", "embedding",
-        k=3, nprobe=16, shortlist_factor=5,
+        nprobe=16,
     )
     pre_rows = sorted(map(tuple, pre.collect()))
 
@@ -194,7 +194,7 @@ def test_crash_between_commit_and_refresh_is_recoverable(
     # overlays the patch, so cell 2's rows stay visible
     post, probed = ivfpq_store_topk(
         cat, "rb.t", queries, "vec_id", "embedding",
-        k=3, nprobe=16, shortlist_factor=5,
+        nprobe=16,
     )
     assert sorted(map(tuple, post.collect())) == pre_rows
     assert 2 in probed
@@ -380,21 +380,20 @@ def test_maybe_rebalance_racing_appends(spark, tmp_path):
     )
     raced, _ = ivfpq_store_topk(
         reader, "rb.t", queries, "vec_id", "embedding",
-        k=5, nprobe=n_cells,
+        nprobe=n_cells,
     )
     cb = _codebook_from_manifest(m)
     cat_fresh = ManifestCatalog(spark, f"file://{tmp_path}/fresh")
     cent = _routing_centroids(reader, "rb.t", m)
     all_rows = stored.select("vec_id", "embedding")
-    assigned = ivf_assign_cells(cent, all_rows, "vec_id", "embedding",
-                                out_col="cell")
+    assigned = ivf_assign_cells(cent, all_rows, "vec_id", "embedding")
     write_ivfpq_store(
         cat_fresh, assigned, "vec_id", "embedding", "cell", cb,
         "rb.fresh", dim=4,
     )
     fresh, _ = ivfpq_store_topk(
         cat_fresh, "rb.fresh", queries, "vec_id", "embedding",
-        k=5, nprobe=len(cat_fresh.latest_manifest("rb.fresh")["cell_counts"]),
+        nprobe=len(cat_fresh.latest_manifest("rb.fresh")["cell_counts"]),
     )
     key = lambda r: (r["query_id"], r["match_id"])  # noqa: E731
     assert sorted((r.asDict() for r in raced.collect()), key=key) == \

@@ -90,7 +90,7 @@ def test_optimize_compacts_and_vacuum_collects(spark, cat):
     assert len(cat.latest_manifest("t")["dirs"]) == 1
     assert sorted(r.k for r in cat.read("t").collect()) == [1, 2, 3]
 
-    deleted = cat.vacuum("t", keep_versions=1, min_age_seconds=0)
+    deleted = cat.vacuum("t", min_age_seconds=0)
     # 3 superseded dirs + 1 orphan gone, compacted dir retained
     assert len(deleted) == 4
     assert sorted(r.k for r in cat.read("t").collect()) == [1, 2, 3]
@@ -113,7 +113,7 @@ def test_optimize_preserves_buckets(spark, cat):
     assert m["n_buckets"] == 4
     # every bucket now points at exactly one (compacted) dir
     assert all(len(ds) == 1 for ds in m["bucket_dirs"].values())
-    cat.vacuum("d", keep_versions=1, min_age_seconds=0)
+    cat.vacuum("d", min_age_seconds=0)
     assert _rows(cat, "d") == before
 
 
@@ -125,13 +125,13 @@ def test_vacuum_safe_on_schemeless_root_and_young_dirs(spark, tmp_path):
     cat = ManifestCatalog(spark, str(tmp_path / "lake2"))  # no scheme
     cat.replace_atomic(_df(spark, [(1, "a")]), "t")
     cat.replace_atomic(_df(spark, [(2, "b")]), "t")
-    deleted = cat.vacuum("t", keep_versions=1, min_age_seconds=0)
+    deleted = cat.vacuum("t", min_age_seconds=0)
     assert len(deleted) == 1  # only the superseded v1 dir
     assert sorted(r.k for r in cat.read("t").collect()) == [2]
     # the default age floor protects a young in-flight writer's dir
     inflight = cat._new_data_dir("t")
     _df(spark, [(9, "z")]).write.parquet(inflight)  # not yet committed
-    assert cat.vacuum("t", keep_versions=1) == []
+    assert cat.vacuum("t") == []
     assert cat.fs.exists(inflight)
 
 
@@ -141,7 +141,7 @@ def test_time_travel_reads(spark, cat):
     assert sorted(r.k for r in cat.read("t").collect()) == [2, 3]
     assert sorted(r.k for r in cat.read("t", version=1).collect()) == [1]
     # vacuumed versions are gone (data dirs collected)
-    cat.vacuum("t", keep_versions=1, min_age_seconds=0)
+    cat.vacuum("t", min_age_seconds=0)
     import pytest as _pytest
 
     with _pytest.raises(Exception):
@@ -301,20 +301,21 @@ def test_diff_versions_replays_old_to_new(spark, cat):
 def test_zorder_key_interleaves_bits(spark):
     from end_to_end_etl_pipeline_spark.sinks.zorder import zorder_key
 
-    # 2-bit quantization over [0,3]x[0,3]: the Morton codes of the
-    # corners are hand-computable (x bits even positions, y bits odd).
+    # 8-bit quantization over [0,3]x[0,3] (0 -> 0, 1 -> 85, 2 -> 170,
+    # 3 -> 255): the Morton codes are hand-computable (x bits at even
+    # positions, y bits at odd ones).
     df = spark.createDataFrame(
         [(0, 0), (3, 0), (0, 3), (3, 3), (2, 1)], "x int, y int"
     )
     z = {(r.x, r.y): r.z for r in df.withColumn(
-        "z", zorder_key(df, ["x", "y"], bits=2)).collect()}
+        "z", zorder_key(df, ["x", "y"])).collect()}
     assert z[(0, 0)] == 0
-    assert z[(3, 0)] == 0b0101       # x=11 at bits 0,2
-    assert z[(0, 3)] == 0b1010       # y=11 at bits 1,3
-    assert z[(3, 3)] == 0b1111
-    assert z[(2, 1)] == 0b0110       # x=10 -> bit2, y=01 -> bit1
+    assert z[(3, 0)] == 0x5555       # x=11111111 at the even bits
+    assert z[(0, 3)] == 0xAAAA       # y=11111111 at the odd bits
+    assert z[(3, 3)] == 0xFFFF
+    assert z[(2, 1)] == 0x6666       # x=10101010, y=01010101
     with pytest.raises(ValueError, match="overflows"):
-        zorder_key(df, ["x", "y"], bits=32)
+        zorder_key(df, ["x", "y"] * 4)  # 8 bits x 8 cols > 62
 
 
 def test_zorder_rewrite_prunes_both_dimensions(spark, cat):
@@ -327,14 +328,14 @@ def test_zorder_rewrite_prunes_both_dimensions(spark, cat):
         (F2.col("id") / 32).cast("int").alias("y"),
     )
     cat.replace_atomic(grid, "z.t")
-    cat.optimize_zorder("z.t", ["x", "y"], bits=5, n_dirs=16)
+    cat.optimize_zorder("z.t", ["x", "y"])
     # every dimension prunes: a 4-wide slab on either axis must skip
-    # most of the 16 dirs (16x16 Morton quadrants -> a 4-wide slab
-    # touches a 1/8 band of the key space on either axis).
+    # at least half of the 8 dirs (the dirs split the key on its top
+    # three bits: y's top two and x's top one).
     x_dirs = cat.pruned_dirs("z.t", "x", 0, 3)
     y_dirs = cat.pruned_dirs("z.t", "y", 0, 3)
-    assert len(x_dirs) <= 8, f"x slab hit {len(x_dirs)} of 16 dirs"
-    assert len(y_dirs) <= 8, f"y slab hit {len(y_dirs)} of 16 dirs"
+    assert len(x_dirs) <= 4, f"x slab hit {len(x_dirs)} of 8 dirs"
+    assert len(y_dirs) <= 4, f"y slab hit {len(y_dirs)} of 8 dirs"
     # pruning never changes results
     got = sorted(
         (r.x, r.y) for r in cat.read_range("z.t", "y", 0, 3).collect()
@@ -1014,7 +1015,7 @@ def test_update_where_rewrites_only_bloomed_dirs(spark, tmp_path):
 
 def test_delete_then_vacuum_completes_erasure(spark, tmp_path):
     """The GDPR end-state: delete_where removes the rows from the
-    LIVE version, and vacuum(keep_versions=1) then physically
+    LIVE version, and vacuum then physically
     reclaims every pre-delete data dir — after which no retained
     version can produce the deleted keys and the bytes are gone from
     disk. (Until vacuum, the prior version deliberately still reads
@@ -1035,7 +1036,7 @@ def test_delete_then_vacuum_completes_erasure(spark, tmp_path):
     # audit window: prior version still reads the deleted rows
     assert cat.read("t", version=v_pre).filter("k in (101, 103)").count() == 2
 
-    deleted_dirs = cat.vacuum("t", keep_versions=1, min_age_seconds=0)
+    deleted_dirs = cat.vacuum("t", min_age_seconds=0)
     # the rewritten dir (which held 101/103) was reclaimed; the
     # untouched dir survives
     rewritten = [d for d in dirs0 if d not in cat.latest_manifest("t")["dirs"]]
@@ -1076,12 +1077,10 @@ def test_shallow_clone_zero_copy_and_divergence(spark, tmp_path):
     cat.delete_where("snap", "k", [1])
     assert sorted(r.k for r in cat.read("src").collect()) == [1, 2, 3, 4]
     assert sorted(r.k for r in cat.read("snap").collect()) == [2, 3]
-    # cloning onto an existing table is refused; versioned clone works
+    # cloning onto an existing table is refused
     import pytest as _pytest
     with _pytest.raises(ValueError, match="exists"):
         cat.shallow_clone("src", "snap")
-    cat.shallow_clone("src", "snap_v1", version=1)
-    assert sorted(r.k for r in cat.read("snap_v1").collect()) == [1, 2]
 
 
 def test_latest_manifest_hint_is_advisory(spark, cat):
@@ -1118,7 +1117,7 @@ def test_latest_manifest_hint_is_advisory(spark, cat):
     assert sorted(r.k for r in cat.read("h.t").collect()) == [1, 2, 3, 4]
 
     # vacuum keeps the hint consistent with the retained tail
-    cat.vacuum("h.t", keep_versions=1, min_age_seconds=0)
+    cat.vacuum("h.t", min_age_seconds=0)
     assert cat.latest_manifest("h.t")["version"] == 4
 
 
@@ -1135,8 +1134,9 @@ def test_column_type_cache_invalidated_on_replace(spark, cat):
 
     cat.replace_atomic(
         spark.createDataFrame([("7", "a"), ("zz", "b")], "key string, v string"),
-        "retype.t", bloom_cols=["key"],
+        "retype.t",
     )
+    cat.optimize("retype.t", bloom_cols=["key"])
     got = cat.read_point("retype.t", "key", "zz").collect()
     assert [r.key for r in got] == ["zz"]
     assert [r.key for r in cat.read_point("retype.t", "key", "7").collect()] == ["7"]
@@ -1339,10 +1339,8 @@ def test_schema_kept_only_by_same_row_rewrites(spark, tmp_path, run_counted):
         return "schema" in m
 
     rows = [(i, f"v{i}") for i in range(20)]
-    cat.replace_atomic(
-        spark.createDataFrame(rows, "k bigint, v string"), "t",
-        stats_cols=["k"], bloom_cols=["k"],
-    )
+    cat.replace_atomic(spark.createDataFrame(rows, "k bigint, v string"), "t")
+    cat.optimize("t", stats_cols=["k"], bloom_cols=["k"])
     assert has("t")
     # a bloom probe takes the column type from the recorded schema
     dirs, jobs, _ = run_counted(lambda: cat.bloom_pruned_dirs("t", "k", 5))
@@ -1401,7 +1399,7 @@ def test_plain_rewrite_rebases_on_concurrent_append(spark, cat, op):
     latest, so the appended rows survive and the rewrite applies to
     them too."""
     schema = "k bigint, v string"
-    cat.replace_atomic(
+    cat.append(
         spark.createDataFrame([(i, f"v{i}") for i in range(6)], schema), "rw",
         stats_cols=["k"], bloom_cols=["k"],
     )

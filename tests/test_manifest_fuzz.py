@@ -18,9 +18,9 @@ Fuzzed semantics the model pins:
   classify as "wholly inside" the range;
 * update_where applies set expressions to matching rows only, and
   may touch a stats/bloom column without breaking later pruning;
-* optimize/vacuum never change visible content; vacuum(keep_versions)
-  keeps every retained version time-travelable and byte-identical to
-  the model snapshot taken when that version committed;
+* optimize/vacuum never change visible content; vacuum keeps the
+  latest version time-travelable and byte-identical to the model
+  snapshot taken when that version committed;
 * stats/bloom attachment is randomized per append, so every mutation
   runs both its pruned path and its conservative rewrite-everything
   fallback.
@@ -186,12 +186,11 @@ def _run_sequence(spark, cat: ManifestCatalog, tbl: str, seed: int) -> None:
             )
             oplog.append(f"optimize(meta={with_meta})")
         elif op == "vacuum":
-            keep = rng.randint(1, 3)
-            cat.vacuum(tbl, keep_versions=keep, min_age_seconds=0)
-            retained = set(cat._versions(tbl)[-keep:])
+            cat.vacuum(tbl, min_age_seconds=0)
+            retained = set(cat._versions(tbl)[-1:])
             for v in [v for v in snapshots if v not in retained]:
                 del snapshots[v]
-            oplog.append(f"vacuum(keep={keep})")
+            oplog.append("vacuum")
         elif op == "timetravel" and snapshots:
             v = rng.choice(sorted(snapshots))
             oplog.append(f"timetravel({v})")
@@ -297,12 +296,11 @@ def _run_bucketed_sequence(spark, cat: ManifestCatalog, tbl: str, seed: int):
             cat.optimize(tbl)
             oplog.append("optimize")
         elif op == "vacuum":
-            keep = rng.randint(1, 3)
-            cat.vacuum(tbl, keep_versions=keep, min_age_seconds=0)
-            retained = set(cat._versions(tbl)[-keep:])
+            cat.vacuum(tbl, min_age_seconds=0)
+            retained = set(cat._versions(tbl)[-1:])
             for v in [v for v in snapshots if v not in retained]:
                 del snapshots[v]
-            oplog.append(f"vacuum(keep={keep})")
+            oplog.append("vacuum")
         elif op == "timetravel" and snapshots:
             v = rng.choice(sorted(snapshots))
             oplog.append(f"timetravel({v})")
@@ -585,7 +583,7 @@ def test_maintenance_race_fuzz(spark, tmp_path_factory, shard):
                     elif op == "maybe_optimize":
                         cats[1].maybe_optimize(tbl, max_dirs=1)
                     else:
-                        cats[1].vacuum(tbl, keep_versions=2)
+                        cats[1].vacuum(tbl)
             except Exception as e:
                 errors.append(("maint", e))
 
@@ -622,7 +620,7 @@ def test_maintenance_race_fuzz(spark, tmp_path_factory, shard):
             assert got_p == [probe], f"seed={seed} probe={probe} got={got_p}"
         # quiesced full GC: everything the latest manifest references
         # must survive an aggressive vacuum, and content be unchanged
-        reader.vacuum(tbl, keep_versions=1, min_age_seconds=0)
+        reader.vacuum(tbl, min_age_seconds=0)
         got2 = sorted(
             r["id"] for r in reader.read(tbl).select("id").collect()
         )
@@ -682,7 +680,7 @@ def test_maintenance_race_bucketed_fuzz(spark, tmp_path_factory, shard):
                     elif op == "maybe_optimize":
                         cats[1].maybe_optimize(tbl, max_dirs=1)
                     else:
-                        cats[1].vacuum(tbl, keep_versions=2)
+                        cats[1].vacuum(tbl)
             except Exception as e:
                 errors.append(("maint", e))
 
@@ -710,7 +708,7 @@ def test_maintenance_race_bucketed_fuzz(spark, tmp_path_factory, shard):
             for r in reader.read(tbl, buckets=[cell]).select("id").collect()
         )
         assert got_c == [k for k in want if k % N_CELLS == cell], f"seed={seed}"
-        reader.vacuum(tbl, keep_versions=1, min_age_seconds=0)
+        reader.vacuum(tbl, min_age_seconds=0)
         got2 = sorted(
             r["id"] for r in reader.read(tbl).select("id").collect()
         )

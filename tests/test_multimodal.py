@@ -1,7 +1,6 @@
 """Multimodal binary-column plumbing: stats built-ins, frame
 sampling and the PNG/BMP/WAV codecs."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.operators.multimodal import (
@@ -30,21 +29,16 @@ def test_sample_frames_chunking_and_stride(spark):
     from end_to_end_etl_pipeline_spark.operators.multimodal import sample_frames
 
     df = spark.createDataFrame(
-        [(1, b"a" * 10), (2, None), (3, b"xyz")], "id long, payload binary"
+        [(1, b"a" * 530), (2, None), (3, b"xyz")], "id long, payload binary"
     )
-    out = sample_frames(df, "id", "payload", frame_bytes=4, stride=2).collect()
+    out = sample_frames(df, "id", "payload").collect()
     got = {(r.id, r.frame_idx): bytes(r.frame) for r in out}
-    # id=1: 10 bytes -> frames 0..2 (4,4,2 bytes), stride 2 keeps 0 and 2
-    # id=2: null payload -> no rows; id=3: one short frame
-    assert got == {(1, 0): b"aaaa", (1, 2): b"aa", (3, 0): b"xyz"}
-
-
-def test_sample_frames_real_backend_not_wired(spark):
-    from end_to_end_etl_pipeline_spark.operators.multimodal import sample_frames
-
-    df = spark.createDataFrame([(1, b"x")], "id long, payload binary")
-    with pytest.raises(NotImplementedError, match="ffmpeg|codecs"):
-        sample_frames(df, "id", "payload", backend="ffmpeg")
+    # id=1: 530 bytes -> 64-byte frames 0..8 (the last 18 bytes),
+    # stride 4 keeps 0, 4 and 8; id=2: null payload -> no rows;
+    # id=3: one short frame
+    assert got == {
+        (1, 0): b"a" * 64, (1, 4): b"a" * 64, (1, 8): b"a" * 18, (3, 0): b"xyz"
+    }
 
 
 def test_wav_blob_is_spec_exact_and_decoder_rejects_malformed(spark):

@@ -121,13 +121,13 @@ def test_cents_scaling_is_sign_exact(spark):
     assert bad == 0, f"{bad} signed cent values mis-scaled"
     # rates at 2dp through the 4dp product path (price * (1-disc))
     prod = spark.range(-10000, 10001).select(
-        (F.col("id") / 100.0).alias("p"), F.lit(-0.04).alias("d")
+        "id",
+        (F.col("id") / 100.0).alias("l_extendedprice"),
+        F.lit(-0.04).alias("l_discount"),
     )
     from end_to_end_etl_pipeline_spark.queries.core import _rev
 
-    bad2 = prod.filter(
-        _rev("p", "d") != F.col("id") * 104
-    ).count()
+    bad2 = prod.filter(_rev() != F.col("id") * 104).count()
     assert bad2 == 0, f"{bad2} signed products mis-scaled"
 
 

@@ -75,15 +75,15 @@ def test_accuracy_rescale_survives_tiny_cap(spark, monkeypatch):
     built-in, and (b) the built-in fallback was NOT taken."""
     import end_to_end_etl_pipeline_spark.operators.percentiles as P
 
-    df = spark.range(0, 40_000).select(F.col("id").cast("double").alias("v"))
+    df = spark.range(0, 800_000).select(F.col("id").cast("double").alias("v"))
     ps = [0.25, 0.75]
     ref = _builtin(df, "v", ps)
 
-    # accuracy=2000 on n=40k all-distinct: each bracket spans ~80-120
-    # ranks (= distinct values), ×2 percentiles ≈ 160-240 histogram
-    # rows — fine against the real 500k cap, but overfills a 64-row
-    # cap, forcing the rescale branch (acc' = ceil(4·n·2/32) = 10000,
-    # shrinking each bracket to ≤24 rows; 48 total ≤ 64).
+    # accuracy=100000 on n=800k all-distinct: each bracket spans
+    # ~32-48 ranks (= distinct values), ×2 percentiles ≈ 64-96
+    # histogram rows — fine against the real 500k cap, but overfills a
+    # 64-row cap, forcing the rescale branch (acc' = ceil(4·n·2/32) =
+    # 200000, shrinking each bracket to ≤24 rows; 48 total ≤ 64).
     monkeypatch.setattr(P, "_COLLECT_CAP", 64)
     calls = []
     orig = P._builtin
@@ -93,7 +93,7 @@ def test_accuracy_rescale_survives_tiny_cap(spark, monkeypatch):
         return orig(*a, **k)
 
     monkeypatch.setattr(P, "_builtin", spying_builtin)
-    got = P.exact_percentiles(df, "v", ps, accuracy=2000)
+    got = P.exact_percentiles(df, "v", ps)
     assert got == ref, (got, ref)
     assert not calls, (
         "rescale must keep the bounded-histogram path alive — the "
@@ -113,13 +113,13 @@ def test_nondeterministic_input_degrades_to_builtin(spark):
         (F.col("id") % 1000).cast("double").alias("v")
     )
     ps = [0.5]
-    assert exact_percentiles(det, "v", ps, accuracy=1000) == _builtin(
+    assert exact_percentiles(det, "v", ps) == _builtin(
         det, "v", ps
     )
     nondet = spark.range(0, 300_000).filter(F.rand(seed=None) < 0.8).select(
         F.col("id").cast("double").alias("v")
     )
-    out = exact_percentiles(nondet, "v", ps, accuracy=1000)
+    out = exact_percentiles(nondet, "v", ps)
     assert len(out) == 1 and out[0] is not None
 
 

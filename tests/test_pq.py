@@ -27,7 +27,7 @@ def emb(spark):
 
 @pytest.fixture(scope="module")
 def cb(spark, emb):
-    return pq_train(emb, "vec_id", "embedding", num_subspaces=M, num_centroids=K, iters=1)
+    return pq_train(emb, "vec_id", "embedding", num_subspaces=M, num_centroids=K)
 
 
 @pytest.fixture(scope="module")
@@ -69,7 +69,7 @@ def _recall(approx_rows, truth) -> float:
 
 
 def test_train_deterministic(spark, emb, cb):
-    again = pq_train(emb, "vec_id", "embedding", num_subspaces=M, num_centroids=K, iters=1)
+    again = pq_train(emb, "vec_id", "embedding", num_subspaces=M, num_centroids=K)
     assert cb == again
     assert len(cb) == M
     for cb_m in cb:
@@ -103,12 +103,12 @@ def test_adc_recall_vs_exact_l2(spark, emb, cb, exact_top10):
 
 
 def test_rerank_recall_vs_exact_l2(spark, emb, cb, exact_top10):
-    """ADC shortlist x10 + exact re-rank: the production retrieval
-    shape. Observed 0.935; floor set with margin."""
+    """ADC shortlist of 25 + exact re-rank to the top-5: the
+    production retrieval shape. Floor set with margin."""
     enc = pq_encode(emb, "embedding", cb)
     queries = emb.filter(F.col("vec_id") < 20)
     approx = pq_topk_rerank(
-        queries, emb, enc, "vec_id", "vec_id", "embedding", cb, k=10, shortlist_factor=10
+        queries, emb, enc, "vec_id", "vec_id", "embedding", cb
     ).collect()
-    assert len(approx) == 20 * 10
+    assert len(approx) == 20 * 5
     assert _recall(approx, exact_top10) >= 0.8

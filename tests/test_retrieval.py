@@ -23,7 +23,7 @@ def test_rrf_two_arm_sum_and_n_arms(spark):
     b = _arm(spark, [(0, 2, 5.0), (0, 3, 4.0)])
     out = {
         r["doc_id"]: (r["rrf"], r["n_arms"])
-        for r in rrf_fuse([(a, "score"), (b, "score")], k=60).collect()
+        for r in rrf_fuse([(a, "score"), (b, "score")]).collect()
     }
     assert out[1] == (round(1 / 61, 6), 1)
     assert out[2] == (round(1 / 62 + 1 / 61, 6), 2)
@@ -33,22 +33,25 @@ def test_rrf_two_arm_sum_and_n_arms(spark):
 
 
 def test_rrf_arm_topk_truncation(spark):
-    # with arm_topk=1 only each arm's best doc contributes
-    a = _arm(spark, [(0, 1, 0.9), (0, 2, 0.8)])
-    b = _arm(spark, [(0, 2, 5.0), (0, 3, 4.0)])
+    # only each arm's top-20 contributes: doc 21 is arm A's 21st and
+    # only arm B's 2nd, so it fuses from arm B alone
+    a = _arm(spark, [(0, d, 100.0 - d) for d in range(1, 22)])
+    b = _arm(spark, [(0, 50, 5.0), (0, 21, 4.0)])
     out = {
-        r["doc_id"]: r["n_arms"]
-        for r in rrf_fuse([(a, "score"), (b, "score")], arm_topk=1).collect()
+        r["doc_id"]: (r["rrf"], r["n_arms"])
+        for r in rrf_fuse([(a, "score"), (b, "score")]).collect()
     }
-    assert out == {1: 1, 2: 1}
+    assert out[50] == (round(1 / 61, 6), 1)
+    assert out[21] == (round(1 / 62, 6), 1)
 
 
 def test_rrf_tie_breaks_to_lowest_id(spark):
-    # equal scores inside an arm rank by doc_id asc; equal fused
-    # scores order by doc_id asc in the final top-k
-    a = _arm(spark, [(0, 7, 1.0), (0, 3, 1.0)])
-    rows = rrf_fuse([(a, "score")], topk=1).collect()
-    assert [(r["doc_id"], r["rrf"]) for r in rows] == [(3, round(1 / 61, 6))]
+    # equal scores inside an arm rank by doc_id asc, so the fused
+    # top-10 of eleven tied docs drops the highest id
+    a = _arm(spark, [(0, d, 1.0) for d in range(11, 0, -1)])
+    rows = rrf_fuse([(a, "score")]).collect()
+    got = sorted((r["doc_id"], r["rrf"]) for r in rows)
+    assert got == [(d, round(1 / (60 + d), 6)) for d in range(1, 11)]
 
 
 def test_rrf_per_query_isolation(spark):
@@ -75,15 +78,15 @@ def test_topk_ranks_partial_topk_plan(spark):
 
 
 def test_mmr_diversifies_over_pure_relevance(spark):
-    # 2-d candidates, lam=0.5, hand-computable: c2 duplicates c1's
-    # direction (sim=1) so despite rel .8 it must sink to LAST while
+    # 2-d candidates at lam=0.7, hand-computable: c2 duplicates c1's
+    # direction (sim=1) so despite rel .6 it must sink to LAST while
     # the orthogonal c3 (rel .5) and the oblique c4 (rel .7,
     # sim .6/.8) are picked first — the exact failure mode MMR
-    # exists to fix (relevance-only would return c1, c2, c4, c3).
+    # exists to fix (relevance-only would return c1, c4, c2, c3).
     cand = spark.createDataFrame(
         [
             (0, 1, [1.0, 0.0], 0.9),
-            (0, 2, [1.0, 0.0], 0.8),
+            (0, 2, [1.0, 0.0], 0.6),
             (0, 3, [0.0, 1.0], 0.5),
             (0, 4, [0.6, 0.8], 0.7),
         ],
@@ -91,12 +94,10 @@ def test_mmr_diversifies_over_pure_relevance(spark):
     )
     from end_to_end_etl_pipeline_spark.operators.retrieval import mmr_select
 
-    rows = mmr_select(
-        cand, "query_id", "doc_id", "v", "rel", k=5, lam=0.5
-    ).collect()
+    rows = mmr_select(cand, "query_id", "doc_id", "v", "rel").collect()
     order = [r["doc_id"] for r in sorted(rows, key=lambda r: r["mmr_rank"])]
     assert order == [1, 3, 4, 2]
-    # k exceeded the candidate count: exactly 4 picks, ranks 1..4
+    # k=5 exceeded the candidate count: exactly 4 picks, ranks 1..4
     assert sorted(r["mmr_rank"] for r in rows) == [1, 2, 3, 4]
     # rel rides through unchanged
     assert {r["doc_id"]: r["rel"] for r in rows}[3] == 0.5
@@ -113,7 +114,7 @@ def test_mmr_per_query_isolation(spark):
     )
     from end_to_end_etl_pipeline_spark.operators.retrieval import mmr_select
 
-    rows = mmr_select(cand, "query_id", "doc_id", "v", "rel", k=2).collect()
+    rows = mmr_select(cand, "query_id", "doc_id", "v", "rel").collect()
     assert {(r["query_id"], r["doc_id"], r["mmr_rank"]) for r in rows} == {
         (0, 1, 1), (0, 2, 2), (1, 7, 1),
     }
@@ -155,20 +156,21 @@ def test_cross_encoder_rerank_plumbing(spark):
         [
             (0, 10, "a b c", "a b c"),   # F1 = 1.0
             (0, 11, "a b c", "a x y"),   # F1 = 2/6
-            (0, 12, "a b c", "z z z"),   # F1 = 0.0
+            *[(0, d, "a b c", "z z z") for d in range(12, 21)],  # F1 = 0.0
             (1, 10, "q r", "q r"),
         ],
         "query_id bigint, doc_id bigint, qtext string, dtext string",
     )
     out = cross_encoder_rerank(
         pairs, "query_id", "doc_id", "qtext", "dtext",
-        scorer=overlap_f1_scorer, topk=2,
+        scorer=overlap_f1_scorer,
     )
     rows = {(r["query_id"], r["rank"]): (r["doc_id"], r["ce_score"])
             for r in out.collect()}
     assert rows[(0, 1)] == (10, 1.0)
     assert rows[(0, 2)] == (11, round(2 / 6, 6))
-    assert (1, 1) in rows and len(rows) == 3  # topk=2 dropped doc 12
+    assert rows[(0, 10)] == (19, 0.0)  # the top-10 dropped doc 20
+    assert (1, 1) in rows and len(rows) == 11
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan and "BatchEvalPython" not in plan
 
@@ -189,25 +191,11 @@ def test_hard_negatives_excludes_same_label(spark):
     )
     rows = hard_negatives(
         emb.filter("vec_id = 0"), emb, "vec_id", "vec_id",
-        "embedding", "label", k=2,
+        "embedding", "label",
     ).collect()
     got = [(r["match_id"], r["neg_label"]) for r in
            sorted(rows, key=lambda r: -r["cosine"])]
     assert got == [(2, 2), (3, 2)]  # 1 excluded despite cosine 1.0
-
-
-def test_rrf_weights_scale_arm_contributions(spark):
-    a = _arm(spark, [(0, 1, 0.9)])
-    b = _arm(spark, [(0, 2, 5.0)])
-    out = {
-        r["doc_id"]: r["rrf"]
-        for r in rrf_fuse(
-            [(a, "score"), (b, "score")], weights=[2.0, 0.5]
-        ).collect()
-    }
-    assert out == {1: round(2.0 / 61, 6), 2: round(0.5 / 61, 6)}
-    with pytest.raises(ValueError, match="weights"):
-        rrf_fuse([(a, "score")], weights=[1.0, 2.0])
 
 
 def test_retrieval_stack_invariants_randomized(spark):
@@ -225,7 +213,7 @@ def test_retrieval_stack_invariants_randomized(spark):
         for d in rng.sample(range(100), 12)
     ]
     arm = _arm(spark, rows)
-    fused = rrf_fuse([(arm, "score")], arm_topk=12, topk=12).collect()
+    fused = rrf_fuse([(arm, "score")]).collect()
     by_rank = {}
     for r in fused:
         # rrf = 1/(60+rank) is strictly decreasing in rank: invert it
@@ -234,7 +222,7 @@ def test_retrieval_stack_invariants_randomized(spark):
 
     expect = {
         (r["query_id"], r["doc_id"]): r["__rnk"]
-        for r in topk_ranks(arm, "query_id", "doc_id", "score", 12).collect()
+        for r in topk_ranks(arm, "query_id", "doc_id", "score", 10).collect()
     }
     for q, lst in by_rank.items():
         fused_order = [d for _, d in sorted(lst, key=lambda t: (-t[0], t[1]))]
@@ -251,7 +239,7 @@ def test_retrieval_stack_invariants_randomized(spark):
         ],
         "query_id bigint, doc_id bigint, v array<double>, rel double",
     )
-    picks = mmr_select(cand, "query_id", "doc_id", "v", "rel", k=4).collect()
+    picks = mmr_select(cand, "query_id", "doc_id", "v", "rel").collect()
     cand_ids = {(q, d) for q, d, _ in rows}
     best = {}
     for q, d, s in rows:
@@ -265,7 +253,7 @@ def test_retrieval_stack_invariants_randomized(spark):
         seen.add(key)
         if r["mmr_rank"] == 1:
             assert r["doc_id"] == best[r["query_id"]][0]
-    assert len(picks) == 3 * 4
+    assert len(picks) == 3 * 5
 
 
 def _mmr_random_candidates(spark, seed: int):
@@ -285,7 +273,7 @@ def _mmr_random_candidates(spark, seed: int):
     )
 
 
-def _mmr_twins(cand, k: int, lam: float = 0.7):
+def _mmr_twins(cand):
     """Both strategies' picks on the same candidates, sorted rows."""
     from end_to_end_etl_pipeline_spark.operators.retrieval import (
         mmr_select,
@@ -293,8 +281,7 @@ def _mmr_twins(cand, k: int, lam: float = 0.7):
     )
 
     return [
-        sorted(map(tuple, fn(cand, "query_id", "doc_id", "v", "rel",
-                             k=k, lam=lam).collect()))
+        sorted(map(tuple, fn(cand, "query_id", "doc_id", "v", "rel").collect()))
         for fn in (mmr_select, mmr_select_grouped)
     ]
 
@@ -303,48 +290,39 @@ def test_mmr_grouped_differential_matches_plan_flat(spark):
     """The grouped-map strategy must replay the JVM-aggregate picks
     EXACTLY — same ids, ranks, and rel doubles — on a randomized
     fixed-seed candidate set big enough to exercise real greedy
-    interaction (3 queries x 25 candidates, k=6 > some tie room)."""
-    f, g = _mmr_twins(_mmr_random_candidates(spark, 13), k=6)
+    interaction (3 queries x 25 candidates, k=5)."""
+    f, g = _mmr_twins(_mmr_random_candidates(spark, 13))
     assert f == g
-    assert len(f) == 3 * 6
+    assert len(f) == 3 * 5
 
 
 @pytest.mark.parametrize("seed", [7, 29])
 def test_mmr_twins_differential_more_seeds(spark, seed):
-    f, g = _mmr_twins(_mmr_random_candidates(spark, seed), k=6)
+    f, g = _mmr_twins(_mmr_random_candidates(spark, seed))
     assert f == g
-    assert len(f) == 3 * 6
+    assert len(f) == 3 * 5
 
 
 _MMR_SCHEMA = "query_id bigint, doc_id bigint, v array<double>, rel double"
 
-#: (candidate rows, k, expected (query_id, doc_id, mmr_rank) picks)
+#: (candidate rows, expected (query_id, doc_id, mmr_rank) picks)
 _MMR_EDGES = {
-    "empty": ([], 3, []),
+    "empty": ([], []),
     # duplicate vectors and equal rel: every score tie breaks on the
     # lowest id — 3 first, the orthogonal 4 next (its best_sim is 0,
     # the duplicates' is 1), then the duplicates 5 and 9 in id order
     "ties_to_lowest_id": (
         [(0, 9, [1.0, 0.0], 0.5), (0, 5, [1.0, 0.0], 0.5),
          (0, 3, [1.0, 0.0], 0.5), (0, 4, [0.0, 1.0], 0.5)],
-        4,
         [(0, 3, 1), (0, 4, 2), (0, 5, 3), (0, 9, 4)],
     ),
     "single_candidate": (
         [(0, 1, [0.6, 0.8], 0.4), (1, 2, [1.0, 0.0], 0.9),
          (1, 3, [0.0, 1.0], 0.8)],
-        3,
         [(0, 1, 1), (1, 2, 1), (1, 3, 2)],
-    ),
-    "k_1": (
-        [(0, 1, [1.0, 0.0], 0.2), (0, 2, [0.0, 1.0], 0.9),
-         (1, 5, [1.0, 0.0], 0.7), (1, 4, [0.0, 1.0], 0.7)],
-        1,
-        [(0, 2, 1), (1, 4, 1)],
     ),
     "k_past_n": (
         [(0, 1, [1.0, 0.0], 0.9), (0, 2, [0.6, 0.8], 0.3)],
-        10,
         [(0, 1, 1), (0, 2, 2)],
     ),
 }
@@ -359,27 +337,19 @@ def test_mmr_twins_edge_contract(spark, case):
         mmr_select_grouped,
     )
 
-    rows, k, want = _MMR_EDGES[case]
+    rows, want = _MMR_EDGES[case]
     cand = spark.createDataFrame(rows, _MMR_SCHEMA)
-    f, g = _mmr_twins(cand, k=k)
+    f, g = _mmr_twins(cand)
     assert f == g
     assert [r[:3] for r in f] == sorted(want)
     rel = {(q, d): r for q, d, _, r in rows}
     assert all(r == rel[(q, d)] for q, d, _, r in f)
     for fn in (mmr_select, mmr_select_grouped):
-        out = fn(cand, "query_id", "doc_id", "v", "rel", k=k)
+        out = fn(cand, "query_id", "doc_id", "v", "rel")
         assert [(x.name, x.dataType.simpleString()) for x in out.schema] == [
             ("query_id", "bigint"), ("doc_id", "bigint"),
             ("mmr_rank", "int"), ("rel", "double"),
         ]
-
-
-def test_mmr_select_rejects_k_below_one(spark):
-    from end_to_end_etl_pipeline_spark.operators.retrieval import mmr_select
-
-    cand = spark.createDataFrame([(0, 1, [1.0, 0.0], 0.5)], _MMR_SCHEMA)
-    with pytest.raises(ValueError, match="k >= 1"):
-        mmr_select(cand, "query_id", "doc_id", "v", "rel", k=0)
 
 
 def test_mmr_grouped_handles_k_past_candidates_and_plan(spark):
@@ -390,14 +360,14 @@ def test_mmr_grouped_handles_k_past_candidates_and_plan(spark):
     cand = spark.createDataFrame(
         [
             (0, 1, [1.0, 0.0], 0.9),
-            (0, 2, [1.0, 0.0], 0.8),
+            (0, 2, [1.0, 0.0], 0.6),
             (0, 3, [0.0, 1.0], 0.5),
             (0, 4, [0.6, 0.8], 0.7),
             (1, 7, [1.0, 0.0], 0.4),
         ],
         "query_id bigint, doc_id bigint, v array<double>, rel double",
     )
-    out = mmr_select_grouped(cand, "query_id", "doc_id", "v", "rel", k=5, lam=0.5)
+    out = mmr_select_grouped(cand, "query_id", "doc_id", "v", "rel")
     rows = out.collect()
     # query 0: same hand-computed order as the mmr_select unit test;
     # query 1: a single candidate, no sim pairs at all
@@ -478,8 +448,8 @@ def test_mmr_grouped_preserves_non_double_rel_type(spark):
         [(0, 1, [1.0, 0.0], 0.5), (0, 2, [0.0, 1.0], 0.25)],
         "query_id bigint, doc_id bigint, v array<double>, rel double",
     ).withColumn("rel", F.col("rel").cast("float"))
-    flat = mmr_select(cand, "query_id", "doc_id", "v", "rel", k=2)
-    grp = mmr_select_grouped(cand, "query_id", "doc_id", "v", "rel", k=2)
+    flat = mmr_select(cand, "query_id", "doc_id", "v", "rel")
+    grp = mmr_select_grouped(cand, "query_id", "doc_id", "v", "rel")
     # dtype parity (nullability differs benignly: Arrow-map output
     # columns are always nullable, the JVM aggregate's rank is not)
     assert [(f.name, f.dataType) for f in grp.schema.fields] == [
@@ -542,7 +512,7 @@ def test_train_pairwise_logreg_learns_separable_pairs(spark):
     feats = pairwise_ce_features(df, "q", "d").withColumn(
         "wt", F.when(F.col("y") == 1.0, 1.0 / 16.0).otherwise(1.0 / 48.0)
     )
-    w = train_pairwise_logreg(feats, "y", iters=5, lr=2.0, weight_col="wt")
+    w = train_pairwise_logreg(feats, "y", weight_col="wt")
     scorer = trained_linear_scorer(w)
 
     def loss(weights):

@@ -54,7 +54,7 @@ def test_sessionize_stateful(spark, tmp_path):
         {"event_id": 5, "ts": "2026-01-01T03:00:00Z", "user_id": 2, "event_type": "view", "value": 1.0},
     ])
     stream = spark.readStream.schema(SCHEMA).json(d)
-    sessions = sessionize(stream, "user_id", "ts", gap_minutes=30)
+    sessions = sessionize(stream, "user_id", "ts")
     q = (sessions.writeStream.format("memory").queryName("sessions")
          .outputMode("append")
          .option("checkpointLocation", str(tmp_path / "ck4"))
@@ -105,61 +105,6 @@ def test_stream_stream_join_attribution(spark, tmp_path):
     q.awaitTermination(120)
     got = {(r.view_id, r.purchase_id) for r in spark.table("attrib").collect()}
     assert got == {(1, 10), (2, 10)}
-
-
-def test_stream_stream_left_outer_emits_null_after_eviction(spark, tmp_path):
-    """leftOuter stream-stream join: an unmatched LEFT row emits its
-    NULL-padded result only once the watermark proves no match can
-    still arrive (state eviction), while rows still inside the state
-    window emit nothing — the semantics axis the inner-join test
-    can't see. Two pinned-mtime batches: data, then a far-future
-    spacer that advances the watermark past the unmatched view's
-    eviction bound; the spacer's own rows stay in live state and must
-    NOT emit."""
-    from end_to_end_etl_pipeline_spark.streaming import stream_stream_join
-
-    vd, pd_ = str(tmp_path / "views"), str(tmp_path / "purch")
-    _write_batch(vd, "a.json", [
-        {"view_id": 1, "vts": "2026-01-01T00:00:00Z", "user_id": 1},
-        {"view_id": 2, "vts": "2026-01-01T00:10:00Z", "user_id": 2},  # no match
-    ])
-    _write_batch(pd_, "a.json", [
-        {"purchase_id": 10, "pts": "2026-01-01T00:30:00Z", "user_id": 1},
-    ])
-    _write_batch(vd, "b.json", [
-        {"view_id": 9, "vts": "2026-01-01T12:00:00Z", "user_id": 9},  # spacer
-    ])
-    _write_batch(pd_, "b.json", [
-        {"purchase_id": 80, "pts": "2026-01-01T12:00:00Z", "user_id": 8},
-    ])
-    for d in (vd, pd_):
-        os.utime(os.path.join(d, "a.json"), (1_000_000, 1_000_000))
-        os.utime(os.path.join(d, "b.json"), (2_000_000, 2_000_000))
-
-    views = (
-        spark.readStream.schema("view_id bigint, vts timestamp, user_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .json(vd)
-    )
-    purch = (
-        spark.readStream.schema("purchase_id bigint, pts timestamp, user_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .json(pd_)
-    )
-    joined = stream_stream_join(
-        views, purch, ["user_id"], "vts", "pts",
-        watermark="2 hours", max_delay_seconds=3600, how="leftOuter",
-    )
-    q = (joined.writeStream.format("memory").queryName("attrib_outer")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck_ssj_outer"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {(r.view_id, r.purchase_id) for r in
-           spark.table("attrib_outer").collect()}
-    # view 2: evicted by the spacer-advanced watermark -> NULL row;
-    # view 9 (spacer): still inside live state -> absent
-    assert got == {(1, 10), (2, None)}
 
 
 def test_windowed_counts_drops_late_events_in_append(spark, tmp_path):
@@ -511,29 +456,23 @@ def test_file_source_batching_contract(spark, tmp_path):
 
 
 def test_index_ingest_bridges_survive_midstream_crash(spark, tmp_path):
-    """Mid-stream CRASH-RESTART for the lexical and dedup stores fed
-    by a plain ``foreachBatch`` ingest — the pytest twins of the
-    registered ``streaming_ann_ingest_restart`` query. Each run 1 performs
-    the store's real commit for micro-batch 1 and then dies BEFORE the
-    checkpoint's batch commit (an injected failure after the append
+    """Mid-stream CRASH-RESTART for the dedup store fed by a plain
+    ``foreachBatch`` ingest — the pytest twin of the registered
+    ``streaming_ann_ingest_restart`` query. Run 1 performs the store's
+    real commit for micro-batch 1 and then dies BEFORE the
+    checkpoint's batch commit (an injected failure after the ingest
     returns — exactly the at-least-once window); run 2 restarts from
     the same checkpoint, so Structured Streaming replays batch 1 with
-    the same id. ``append_text_index`` must refuse the replay via its
-    CAS-riding ``text_last_batch_id`` marker; ``MinHashDedupStore`` has
-    no marker and must converge STRUCTURALLY (replayed docs meet their
-    own signatures at estimated Jaccard 1.0 and are rejected). Both
-    final stores must equal a one-shot build over the union."""
+    the same id. ``MinHashDedupStore`` has no replay marker and must
+    converge STRUCTURALLY (replayed docs meet their own signatures at
+    estimated Jaccard 1.0 and are rejected): the final store must
+    equal a one-shot build over the union."""
     import json as _json
 
     from pyspark.errors import StreamingQueryException
 
     from end_to_end_etl_pipeline_spark.operators.dedup_store import (
         MinHashDedupStore,
-    )
-    from end_to_end_etl_pipeline_spark.operators.text_index import (
-        append_text_index,
-        text_index_search,
-        write_text_index,
     )
 
     docs = (
@@ -580,30 +519,6 @@ def test_index_ingest_bridges_survive_midstream_crash(spark, tmp_path):
         with pytest.raises(StreamingQueryException, match="injected-crash"):
             q.awaitTermination(120)
 
-    # --- lexical index: marker-guarded replay -------------------------
-    cat = ManifestCatalog(spark, f"file://{tmp_path}/lex")
-    write_text_index(cat, base, "doc_id", "text", "idx.t", n_buckets=8)
-    ck = str(tmp_path / "ck_lex")
-    def append(b, i):
-        append_text_index(cat, b, "doc_id", "text", "idx.t", batch_id=i)
-
-    ingest(ck, append, crash=True)
-    assert cat.latest_manifest("idx.t")["text_last_batch_id"] == 1
-    ingest(ck, append, crash=False)
-    m = cat.latest_manifest("idx.t")
-    assert m["text_last_batch_id"] == 2
-    once = ManifestCatalog(spark, f"file://{tmp_path}/lex_once")
-    write_text_index(once, docs, "doc_id", "text", "idx.t", n_buckets=8)
-    mo = once.latest_manifest("idx.t")
-    assert (m["ti_n_docs"], m["ti_sum_dl"]) == (mo["ti_n_docs"], mo["ti_sum_dl"])
-    queries = spark.createDataFrame(
-        [(0, "dup"), (1, "batch")], "query_id bigint, word string"
-    )
-    got, _ = text_index_search(cat, "idx.t", queries, k=5)
-    want, _ = text_index_search(once, "idx.t", queries, k=5)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    # --- dedup store: structural replay convergence -------------------
     dcat = ManifestCatalog(spark, f"file://{tmp_path}/ded")
     store = MinHashDedupStore(dcat, "dd.sigs")
     store.ingest(base, "text")
