@@ -27,7 +27,8 @@ interface kept identical). Key-bucketing the dimension does not help
 at a ~1% restatement rate: nearly every bucket holds a changed key.
 The *plan* itself scales either way: one shuffle on the
 business key (source ⋈ current), map-side hash compare, union of
-disjoint legs — no collects, no driver loops, no second pass over the
+disjoint legs, and the duplicate-key guard as a window over that same
+partitioning — no collects, no driver loops, no second pass over the
 source (the reference reads the source twice: MERGE + anti-join).
 """
 
@@ -38,7 +39,8 @@ import functools
 import operator
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.errors import PySparkException
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.operators.joins import anti_join
@@ -50,6 +52,10 @@ from end_to_end_etl_pipeline_spark.operators.hashing import with_row_hash
 # 9999-12-31 sentinel raises OutOfBoundsDatetime there.
 MAX_TS = "2200-12-31 23:59:59"
 
+# the raise_error message of a duplicate-key source; SCDEngine turns a
+# failed write that carries it back into a ValueError
+_DUP_KEYS = "SCD source batch has duplicate business keys"
+
 
 def prepare_scd_source(src: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Guard a merge source batch before any SCD apply.
@@ -59,31 +65,30 @@ def prepare_scd_source(src: DataFrame, keys: Sequence[str]) -> DataFrame:
       rows forever (ADVICE r1). Callers wanting them must split them
       off upstream; no pipeline config lands them in a quarantine
       table yet.
-    * **Duplicate business keys fail fast.** A dup-key batch
-      multiplies the current⟕source join and breaks the
+    * **Duplicate business keys fail the apply's write job.** A dup-key
+      batch multiplies the current⟕source join and breaks the
       one-current-row-per-key invariant — the reference's Delta MERGE
       raises on multi-match (``utils/scd/scd.py:55``); a silent engine
-      must not do worse. The uniqueness probe is one narrow agg job
-      over (keys).
+      must not do worse. The check rides in the apply's own plan, as
+      MERGE's does: a per-key ``count(1) OVER (PARTITION BY keys)``
+      whose rows > 1 hit ``raise_error``. The window needs the
+      partitioning the SCD join needs anyway: a source that arrives
+      hash-partitioned on the keys (a spine deduped on them) moves no
+      further, and any other source shuffles once for both. The
+      failing job is the write, so nothing is committed
+      (:class:`SCDEngine` re-raises it as ``ValueError``).
     """
     keys = list(keys)
     src = src.filter(
         functools.reduce(operator.and_, [F.col(k).isNotNull() for k in keys])
     )
-    dup = (
-        src.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .limit(1)
-        .count()
+    n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    guard = F.when(F.col("__key_rows") > 1, F.raise_error(F.lit(_DUP_KEYS)))
+    return (
+        src.withColumn("__key_rows", n)
+        .filter(guard.otherwise(F.lit(True)))
+        .drop("__key_rows")
     )
-    if dup:
-        raise ValueError(
-            f"SCD source batch has duplicate business keys {keys}; "
-            "dedup it upstream (the medallion's dedup: spec keeps one "
-            "row per key)"
-        )
-    return src
 
 
 class SCDEngine:
@@ -104,13 +109,25 @@ class SCDEngine:
     def _publish(self, table: str, next_state) -> None:
         """Commit ``next_state(target)`` — ``target`` is the table at
         the latest version, or None before the first load — and
-        recompute on a lost compare-and-swap."""
+        recompute on a lost compare-and-swap. A write that fails on the
+        source's duplicate-key guard (:func:`prepare_scd_source`)
+        commits nothing and raises ``ValueError``."""
         cat = self.catalog
         while True:
             manifest = cat.latest_manifest(table)
             base = 0 if manifest is None else manifest["version"]
             target = None if manifest is None else cat.read(table, version=base)
-            if cat.replace_atomic(next_state(target), table, base_version=base):
+            state = next_state(target)
+            try:
+                committed = cat.replace_atomic(state, table, base_version=base)
+            except PySparkException as e:
+                if _DUP_KEYS not in str(e):
+                    raise
+                raise ValueError(
+                    f"{_DUP_KEYS} (table {table}); dedup it upstream (the "
+                    "medallion's dedup: spec keeps one row per key)"
+                ) from e
+            if committed:
                 return
 
     # -- type 1 ---------------------------------------------------------

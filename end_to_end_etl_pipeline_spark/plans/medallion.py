@@ -94,6 +94,11 @@ class MedallionPipeline:
         ``medallion/bronze/ds2b_company_house.py:49-97``)."""
         src = spec["source"]
         fmt = src.get("format", "parquet")
+        if "schema" not in src:
+            raise ValueError(
+                f"bronze spec {spec['table']}: source needs an explicit "
+                f"'schema' (a DDL string) for its {fmt} scan"
+            )
         if fmt == "json":
             df = read_json(
                 self.spark, src["path"], src["schema"], src.get("multiline", True)
@@ -107,7 +112,7 @@ class MedallionPipeline:
                 mode=src.get("mode", "PERMISSIVE"),
             )
         else:
-            df = read_parquet(self.spark, src["path"])
+            df = read_parquet(self.spark, src["path"], src["schema"])
 
         pk = spec.get("path_key")
         # _metadata.file_path works for every file source (json, csv,
@@ -158,7 +163,12 @@ class MedallionPipeline:
             df = df.filter(post_filter)
 
         for feat in spec.get("feature_joins", ()):  # company_master pattern
-            agg_df = self._feature_agg(feat)
+            # a shuffle join: the aggregate arrives hash-partitioned on
+            # its group keys, and a spine deduped on the join keys on
+            # those too, so neither side moves again; a statically
+            # planned broadcast would run the aggregate as a job of its
+            # own
+            agg_df = self._feature_agg(feat).hint("merge")
             df = equi_join(df, agg_df, on=feat["on"], how=feat.get("how", "left"))
 
         scd = spec.get("scd")

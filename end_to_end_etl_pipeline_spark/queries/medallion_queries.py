@@ -17,12 +17,24 @@ from pyspark.sql import DataFrame, SparkSession
 
 from end_to_end_etl_pipeline_spark.queries.catalog import register, scratch_root
 
+# exactly the types a footer read infers: the orders files' timestamps
+# are not UTC-adjusted, so o_orderdate reads as TIMESTAMP_NTZ
+ORDERS_SCHEMA = (
+    "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+    "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+)
+
+
 def _pipeline_config(sf_dir: str) -> dict:
     return {
         "bronze": [
             {
                 "table": "bronze.orders",
-                "source": {"format": "parquet", "path": f"{sf_dir}/orders.parquet"},
+                "source": {
+                    "format": "parquet",
+                    "path": f"{sf_dir}/orders.parquet",
+                    "schema": ORDERS_SCHEMA,
+                },
                 "file_metadata": True,
             }
         ],

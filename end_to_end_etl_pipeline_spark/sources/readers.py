@@ -77,10 +77,14 @@ def read_orc(
     return reader.load(path)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar scan — the engine's default storage (schema travels with
-    the file, so no explicit schema required)."""
-    return spark.read.parquet(path)
+def read_parquet(
+    spark: SparkSession, path: str, schema: StructType | str
+) -> DataFrame:
+    """Columnar scan with explicit schema. Parquet files carry their
+    own, but reading without one runs a footer-inference job before
+    the scan; the declared schema also pins column types against a
+    drifting landing zone."""
+    return spark.read.schema(schema).parquet(path)
 
 
 def with_file_metadata(df: DataFrame) -> DataFrame:

@@ -22,7 +22,8 @@ def _write_config(tmp_path, spark):
         "catalog_root": str(tmp_path / "lake"),
         "bronze": [
             {"table": "bronze.orders",
-             "source": {"format": "parquet", "path": str(src)}}
+             "source": {"format": "parquet", "path": str(src),
+                        "schema": "order_id INT, cust INT, d STRING, amount DOUBLE"}}
         ],
         "silver": [
             {"table": "silver.orders", "from": "bronze.orders",

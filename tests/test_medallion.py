@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.plans.medallion import MedallionPipeline
+from end_to_end_etl_pipeline_spark.queries.medallion_queries import _pipeline_config
 from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
 OVERVIEW_SCHEMA = (
@@ -231,8 +232,10 @@ def test_manifest_batch_stage_budget(spark, tmp_path, fixture_dirs, run_counted)
     manifest-backed lake (ROADMAP aim 1: a speed claim rests on a
     deterministic count). Every table here is an unpartitioned
     ``replace_atomic`` commit, so its manifest records its schema and
-    ``cat.read`` launches no job: the batch's stages are its writes,
-    its source scans and the SCD2 uniqueness probe."""
+    ``cat.read`` launches no job: the batch's stages are its writes and
+    the shuffles inside them. The SCD2 duplicate-key check runs inside
+    the SCD2 write, and the feature join is a shuffle join, not a
+    broadcast job of its own."""
     cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
     pipe = MedallionPipeline(spark, str(tmp_path / "lake"), catalog=cat)
     pipe.run(_config(fixture_dirs, "2026-01-01 00:00:00"))
@@ -240,13 +243,69 @@ def test_manifest_batch_stage_budget(spark, tmp_path, fixture_dirs, run_counted)
     cfg = _config(fixture_dirs, "2026-02-01 00:00:00")
     _, _, stages = run_counted(lambda: pipe.run(cfg))
     # 30 when every catalog read inferred its schema from parquet footers
-    assert stages == 17
+    assert stages == 13
 
     tables = [spec["table"] for layer in cfg.values() for spec in layer]
     for t in tables:
         df, jobs, _ = run_counted(lambda t=t: cat.read(t))
         assert jobs == 0, t
         assert df.schema == spark.read.parquet(*cat.latest_manifest(t)["dirs"]).schema
+
+
+def _restatement_batch(spark, sf_dir, out_dir):
+    """``sf_dir``'s orders with the price of every 40th order changed:
+    a restatement that moves ~2% of (customer, quarter) groups."""
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders.withColumn(
+        "o_totalprice",
+        F.when(F.col("o_orderkey") % 40 == 0, F.col("o_totalprice") + 1.0)
+        .otherwise(F.col("o_totalprice")),
+    ).write.parquet(f"{out_dir}/orders.parquet")
+    return str(out_dir)
+
+
+def test_flagship_bronze_keeps_footer_types(spark, tmp_path, sf_smoke_dir):
+    """The flagship's bronze scan declares its schema instead of
+    inferring it from parquet footers (an inference job per batch).
+    The declared types are exactly the inferred ones, plus the audit
+    columns; a parquet bronze source without a schema is refused."""
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"))
+    pipe.run(_pipeline_config(sf_smoke_dir))
+    bronze = pipe.catalog.read("bronze.orders").schema
+    footer = spark.read.parquet(f"{sf_smoke_dir}/orders.parquet").schema
+    assert bronze.names == footer.names + ["file_path", "last_updated_ts"]
+    assert [bronze[c] for c in footer.names] == list(footer.fields)
+
+    spec = _pipeline_config(sf_smoke_dir)["bronze"][0]
+    del spec["source"]["schema"]
+    with pytest.raises(ValueError, match="explicit 'schema'"):
+        pipe.ingest_bronze(spec)
+
+
+def test_flagship_restatement_stage_budget(spark, tmp_path, sf_smoke_dir, run_counted):
+    """Pinned per-layer stage budget of one restatement batch through
+    the flagship config: bronze is its write (no footer-inference
+    job); silver is the ``orders_q`` write plus the SCD2 write's four
+    stages (spine and feature-aggregate maps, current-target map, the
+    merge; no uniqueness job, no broadcast); gold is its window shuffle
+    and write."""
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"))
+    pipe.run(_pipeline_config(sf_smoke_dir))
+    cfg = _pipeline_config(_restatement_batch(spark, sf_smoke_dir, tmp_path / "b1"))
+    cfg["silver"][1]["scd"]["as_of"] = "2026-02-01 00:00:00"
+    layers = {
+        "bronze": pipe.ingest_bronze,
+        "silver": pipe.build_silver,
+        "gold": pipe.publish_gold,
+    }
+    stages = {}
+    for layer, build in layers.items():
+        _, _, stages[layer] = run_counted(
+            lambda: [build(spec) for spec in cfg[layer]]
+        )
+    assert stages == {"bronze": 1, "silver": 5, "gold": 2}
+    # the batch restated something: the SCD2 merge expired rows
+    assert pipe.catalog.read("silver.cust_quarter").filter(~F.col("is_current")).count()
 
 
 def _rows(cat, table):

@@ -10,7 +10,8 @@ from end_to_end_etl_pipeline_spark.operators.cleaning import (
     sanitize_column_names,
 )
 from end_to_end_etl_pipeline_spark.operators.joins import asof_join
-from end_to_end_etl_pipeline_spark.operators.scd import prepare_scd_source
+from end_to_end_etl_pipeline_spark.operators.scd import SCDEngine
+from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
 
 def test_sanitize_column_names(spark):
@@ -50,16 +51,33 @@ def test_asof_join_backward_and_equal_ts(spark):
     assert got[("u2", "2026-01-05")] is None
 
 
-def test_prepare_scd_source_guards(spark):
-    src = spark.createDataFrame(
-        [(1, "a"), (1, "b"), (None, "c")], "k int, v string"
-    )
-    # duplicate keys fail fast
-    with pytest.raises(ValueError, match="duplicate business keys"):
-        prepare_scd_source(src, ["k"])
-    # null keys always drop
-    out = prepare_scd_source(src.filter(F.col("v") != "b"), ["k"])
-    assert [(r.k, r.v) for r in out.collect()] == [(1, "a")]
+def test_scd_apply_duplicate_keys_commit_nothing(spark, tmp_path):
+    """The duplicate-key guard runs inside each apply's write job: a
+    dup-key batch raises ``ValueError`` and leaves the table's latest
+    version unchanged, on a first load and on a later batch, for SCD
+    types 1, 2 and 3. Null keys drop without failing the apply."""
+    cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
+    eng = SCDEngine(cat)
+    applies = {
+        "t1": lambda df: eng.apply_scd1(df, "t1", ["k"]),
+        "t2": lambda df: eng.apply_scd2(df, "t2", ["k"], ["v"], "2026-01-01 00:00:00"),
+        "t3": lambda df: eng.apply_scd3(df, "t3", ["k"], ["v"]),
+    }
+    dup = spark.createDataFrame([(1, "a"), (1, "b"), (2, "c")], "k int, v string")
+    ok = spark.createDataFrame([(1, "a"), (None, "n")], "k int, v string")
+    for table, apply in applies.items():
+        with pytest.raises(ValueError, match="duplicate business keys"):
+            apply(dup)  # first load
+        assert cat.latest_manifest(table) is None, table
+
+        apply(ok)
+        assert cat.latest_manifest(table)["version"] == 1, table
+        assert [(r.k, r.v) for r in cat.read(table).collect()] == [(1, "a")]
+
+        with pytest.raises(ValueError, match="duplicate business keys"):
+            apply(dup)  # later batch
+        assert cat.latest_manifest(table)["version"] == 1, table
+        assert [(r.k, r.v) for r in cat.read(table).collect()] == [(1, "a")]
 
 
 def test_approx_count_distinct_within_tolerance(spark):

@@ -390,6 +390,41 @@ def _explain_str(spark, df) -> str:
     )
 
 
+def test_scd2_write_is_the_only_job_and_broadcasts_nothing(
+    spark, tmp_path, sf_smoke_dir, run_counted, monkeypatch
+):
+    """The flagship's ``silver.cust_quarter`` SCD2 build runs no job
+    before its write: the duplicate-key check is a window inside the
+    write plan, not an aggregate job over the source. Its feature join
+    is a shuffle join over two sides already partitioned on the join
+    keys, so the write plan has no BroadcastExchange (a broadcast runs
+    the feature aggregate as a job of its own)."""
+    from end_to_end_etl_pipeline_spark.plans.medallion import MedallionPipeline
+    from end_to_end_etl_pipeline_spark.queries.medallion_queries import (
+        _pipeline_config,
+    )
+
+    pipe = MedallionPipeline(spark, str(tmp_path / "lake"))
+    cfg = _pipeline_config(sf_smoke_dir)
+    pipe.run(cfg)  # first load; the build below is a later batch
+    commit = pipe.catalog.replace_atomic
+    write = {}
+
+    def counted_commit(df, name, **kwargs):
+        write["plan"] = _explain_str(spark, df)
+        # a job group of its own, so the outer count keeps only the
+        # jobs that ran before the write
+        out, write["jobs"], _ = run_counted(lambda: commit(df, name, **kwargs))
+        return out
+
+    monkeypatch.setattr(pipe.catalog, "replace_atomic", counted_commit)
+    _, jobs_before_write, _ = run_counted(lambda: pipe.build_silver(cfg["silver"][1]))
+    assert write["jobs"] > 0
+    assert jobs_before_write == 0
+    assert "raise_error" in write["plan"]
+    assert "BroadcastExchange" not in write["plan"]
+
+
 def test_gopher_filter_single_pass_no_shuffle(spark):
     """Every Gopher signal is a higher-order-function projection —
     the plan must contain no Exchange, no Join, no Generate

@@ -1,7 +1,8 @@
 """Repository hygiene: the kept scripts byte-compile, no code, test
 or doc cites a ``scripts/<name>.py`` (or imports a ``scripts.<name>``
-module) that does not exist, no doc recipe cites a missing
-``tests/<name>.py`` or package module (``sinks/<name>.py``), every
+module) that does not exist, no doc recipe or SURVEY.md cites a
+missing ``tests/<name>.py`` (or ``tests/<name>.py::<test>``) or
+package module (``sinks/<name>.py``), every
 package def is reachable from an entry point, and every option (a
 defaulted parameter of a package or ``bench.py`` def) is set by some
 shipped call. Deleted study
@@ -23,7 +24,8 @@ SCRIPTS = sorted(
     f for f in os.listdir(os.path.join(ROOT, "scripts")) if f.endswith(".py")
 )
 #: where a script citation can hide: the package, the bench, the
-#: tests, the scripts themselves, the README and the verify recipe
+#: tests, the scripts themselves, the README, the verify recipe and
+#: the survey
 CITING = [
     "end_to_end_etl_pipeline_spark",
     "bench.py",
@@ -31,14 +33,17 @@ CITING = [
     "scripts",
     "README.md",
     ".claude/skills/verify/SKILL.md",
+    "SURVEY.md",
 ]
 CITE = re.compile(
     r"scripts/([A-Za-z0-9_]+)\.py|(?:from|import) scripts\.([A-Za-z0-9_]+)"
 )
-#: the doc recipes, which also cite test files: ``tests/<name>.py``,
-#: or a glob such as ``tests/test_scd*.py`` that must match a file
-RECIPES = ["README.md", ".claude/skills/verify/SKILL.md"]
-TEST_CITE = re.compile(r"(?<![\w/])tests/([A-Za-z0-9_*?]+)\.py")
+#: the docs that also cite test files: ``tests/<name>.py``, or a glob
+#: such as ``tests/test_scd*.py`` that must match a file; a
+#: ``::<test>`` suffix must start the name of a def in it (a trailing
+#: ``_`` or ``*`` cites a family, and a name may wrap at ``_``)
+RECIPES = ["README.md", ".claude/skills/verify/SKILL.md", "SURVEY.md"]
+TEST_CITE = re.compile(r"(?<![\w/])tests/([A-Za-z0-9_*?]+)\.py(?:::(\w+))?")
 #: the package's subpackages; the recipes cite their modules either
 #: package-relative (``sinks/manifest.py``) or in full
 #: (``end_to_end_etl_pipeline_spark/session.py``)
@@ -71,6 +76,11 @@ def test_script_byte_compiles(name):
         compile(f.read(), path, "exec")
 
 
+def _defines(path, prefix):
+    with open(path, encoding="utf-8") as f:
+        return re.search(rf"^def {prefix}", f.read(), re.M) is not None
+
+
 def test_cited_scripts_exist():
     dangling = []
     for path in _citing_files():
@@ -85,8 +95,13 @@ def test_cited_scripts_exist():
                     continue
                 for m in TEST_CITE.finditer(line):
                     cited = f"tests/{m.group(1)}.py"
-                    if not glob.glob(os.path.join(ROOT, cited)):
+                    files = glob.glob(os.path.join(ROOT, cited))
+                    if not files:
                         dangling.append(f"{rel}:{lineno}: {cited}")
+                    elif m.group(2) and not any(
+                        _defines(f, m.group(2)) for f in files
+                    ):
+                        dangling.append(f"{rel}:{lineno}: {cited}::{m.group(2)}")
                 for m in MODULE_CITE.finditer(line):
                     cited = f"{PACKAGE}/{m.group(1) or m.group(2)}"
                     if not os.path.isfile(os.path.join(ROOT, cited)):
