@@ -23,6 +23,10 @@ O(batch + collisions):
   store width bounded. Precision is governed by K (σ ≈ √(J(1−J)/K));
   callers needing exact-Jaccard confirmation can re-verify the
   (tiny) rejected-pair list against raw text upstream.
+* :meth:`probe` and :meth:`ingest` share one lazy decision plan
+  (:meth:`_decide`): one band join of the batch against batch + store,
+  one window marking store-rejected docs, one aggregate per rejected
+  doc — no action and no checkpoint.
 * Accepted signatures are appended through the catalog's CAS commit
   (:meth:`ManifestCatalog.append`), so concurrent ingests don't lose
   updates, and the decision + append are reproducible.
@@ -42,6 +46,7 @@ LLM-pipeline extension the brief calls for, in its incremental form.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.operators.text_dedup import (
@@ -117,30 +122,6 @@ class MinHashDedupStore:
             ],
         )
 
-    def _est_collisions(self, bands_a: DataFrame, bands_b: DataFrame) -> DataFrame:
-        """(id_a, id_b, est_jaccard) for every band collision, scored
-        inline from the carried signatures. Deliberately NOT
-        distinct'd: a pair colliding in k bands appears k (≤ bands)
-        times, and every downstream consumer is a groupBy/anti-join
-        that absorbs duplicates (min/max aggregates are
-        multiplicity-invariant, decisions bit-identical) — while the
-        distinct would cost a full extra exchange on every ingest.
-        The duplicate factor is bounded by ``bands``, so the
-        estimator re-evaluation it admits is a constant-factor array
-        fold, not a scale risk."""
-        a = bands_a.select(
-            "band", "band_hash",
-            F.col(self.id_col).alias("id_a"), F.col("__sig").alias("__sig_a"),
-        )
-        b = bands_b.select(
-            "band", "band_hash",
-            F.col(self.id_col).alias("id_b"), F.col("__sig").alias("__sig_b"),
-        )
-        return a.join(b, ["band", "band_hash"]).select(
-            "id_a", "id_b",
-            self._est_pair(F.col("__sig_a"), F.col("__sig_b")).alias("est_jaccard"),
-        )
-
     # -- API -------------------------------------------------------------
     def probe(self, docs: DataFrame, text_col: str) -> tuple[DataFrame, DataFrame]:
         """Read-only dedup decision: classify ``docs`` against the
@@ -156,23 +137,13 @@ class MinHashDedupStore:
         same schemas and the same deterministic decision rule as
         :meth:`ingest`.
 
-        No store mutation and no driver-sized state — but not fully
-        lazy (r13, VERDICT r12 #6): the batch signatures and the
-        store-leg rejections are eagerly ``localCheckpoint``-ed.
-        Both are batch-bounded (K longs per batch doc; one row per
-        collision survivor), and without the checkpoint the lazy
-        plan re-executed the batch scan→repartition→MinHash subtree
-        FOUR times (store leg, both within-batch sides, and the
-        store-leg recompute feeding the anti-join) — ReuseExchange
-        never fires across those branches. Measured on the bench
-        probe (sf0.1, interleaved A/B): 23→17 executed stages, wall
-        min −1.5..16%, median −11..34% depending on box load; the
-        decision frames are bit-identical (MinHash is deterministic
-        md5 arithmetic, checkpointing only changes where rows are
-        re-read from)."""
-        _sig_new, _accepted_sigs, rejected = self._decide(
-            docs, text_col, cache=False, checkpoint=True
-        )
+        No store mutation, no driver-sized state and no Spark job:
+        both frames are lazy plans over :meth:`_decide`, with nothing
+        checkpointed or persisted. A noop write of ``rejected`` runs 6
+        stages on the perfbench probe batch (4 cores); the
+        eager-checkpoint plan it replaced ran 12, 5 of them in two
+        ``localCheckpoint`` jobs inside this call."""
+        rejected = self._decide(self._signatures(docs, text_col))
         # accepted mirrors ingest exactly: docs that HAVE a signature
         # (text long enough to shingle — shingle-less docs appear in
         # NEITHER frame, same as ingest, which cannot store a
@@ -194,19 +165,26 @@ class MinHashDedupStore:
         earlier (lower-id) batch survivor.
 
         Decision rule (deterministic): a new doc is rejected iff some
-        band-colliding counterpart — already stored, or a lower-id
-        accepted batch doc — has estimated Jaccard ≥ threshold.
-        Within-batch chains resolve like connected components under
-        "lowest id survives": rejects are removed from the candidate
-        set before they can reject anyone else (a doc similar only to
-        a rejected doc stays, mirroring greedy MinHash dedup).
+        band-colliding counterpart with estimated Jaccard ≥ threshold
+        is already stored, or is a lower-id batch doc the store does
+        not reject. That is one hop: a batch doc rejected only by a
+        lower batch mate still rejects its own higher neighbours,
+        while a store-rejected doc rejects no one. ``dup_of`` is the
+        smallest qualifying id of the winning leg and ``est_jaccard``
+        that leg's largest estimate; the leg with the smaller
+        ``dup_of`` wins, and the store leg wins a tie (a batch that
+        re-uses a stored id for new content).
 
         Shingle-less docs (text shorter than ``shingle_len``, or
         NULL) have no signature to store or match, so they appear in
         NEITHER frame — unclassifiable, by contract (:meth:`probe`
         matches). Filter or pad such docs upstream if they must be
         retained."""
-        sig_new, accepted_sigs, rejected = self._decide(docs, text_col)
+        # persisted, not eagerly counted: the append fills the cache,
+        # and every later read of the decision plan reuses it
+        sig_new = self._signatures(docs, text_col).persist()
+        rejected = self._decide(sig_new)
+        accepted_sigs = sig_new.join(rejected, self.id_col, "left_anti")
         if self.catalog.exists(self.table):
             self.catalog.append(accepted_sigs, self.table)
         else:
@@ -232,99 +210,75 @@ class MinHashDedupStore:
             return 0
         return self.catalog.delete_where(self.table, self.id_col, ids)
 
-    def _decide(
-        self,
-        docs: DataFrame,
-        text_col: str,
-        cache: bool = True,
-        checkpoint: bool = False,
-    ) -> tuple[DataFrame, DataFrame, DataFrame]:
-        """Shared decision plan for :meth:`probe`/:meth:`ingest`:
-        returns (sig_new [persisted when ``cache`` — caller
-        unpersists], accepted_sigs, rejected). ``checkpoint`` (the
-        probe mode) eagerly ``localCheckpoint``-s the two batch-
-        bounded frames every branch fans out from — see
-        :meth:`probe` for the measured stage accounting."""
-        sig_new = self._signatures(docs, text_col)
-        if cache:
-            # persisted, not eagerly counted: the first consumer (the
-            # append) fills the cache; every later join reads it — one
-            # fewer Spark job per call
-            sig_new = sig_new.persist()
-        elif checkpoint:
-            # one job computes the batch MinHash once; the four
-            # downstream branches read the checkpointed rows instead
-            # of re-running scan→repartition→shingle→MinHash each
-            sig_new = sig_new.localCheckpoint(eager=True)
+    def _decide(self, sig_new: DataFrame) -> DataFrame:
+        """The one decision plan :meth:`probe` and :meth:`ingest`
+        share: ``rejected`` (id, dup_of, est_jaccard) for the batch
+        signatures ``sig_new``, with no action and no checkpoint.
+
+        One join of the batch bands against the batch bands unioned
+        with the store bands, on (band, band_hash). Rows are kept at
+        est ≥ threshold that hit a store doc or a higher-id batch doc.
+        A pair colliding in k bands yields k rows; the min/max below
+        are multiplicity-invariant, so no distinct (no extra exchange).
+        One window, ``max(is_store) OVER (PARTITION BY id_a)``, marks
+        the batch docs the store rejects: only store-clean docs reject
+        batch mates (the one-hop rule). One aggregate per rejected doc
+        takes min(dup_of) / max(est_jaccard) per leg and keeps the leg
+        with the smaller dup_of, the store leg on a tie.
+
+        Unpersisted (the probe), the batch MinHash runs once per join
+        side, both sides reading one shared repartition exchange;
+        ``ingest`` persists ``sig_new``, since its append re-reads it."""
         bands_new = self._bands_with_sig(sig_new)
-
-        rejected_vs_store = None
+        right = bands_new.withColumn("is_store", F.lit(False))
         if self.catalog.exists(self.table):
-            bands_old = self._bands_with_sig(self.catalog.read(self.table))
-            est = self._est_collisions(bands_new, bands_old)
-            rejected_vs_store = (
-                est.filter(F.col("est_jaccard") >= self.threshold)
-                .groupBy("id_a")
-                .agg(
-                    F.min("id_b").alias("dup_of"),
-                    F.max("est_jaccard").alias("est_jaccard"),
-                )
-                .select(
-                    F.col("id_a").alias(self.id_col), "dup_of", "est_jaccard"
-                )
+            right = right.unionByName(
+                self._bands_with_sig(self.catalog.read(self.table))
+                .withColumn("is_store", F.lit(True))
             )
-            if checkpoint:
-                # consumed twice (the anti-join's id list AND the
-                # rejected union) — collision-survivor-sized, so the
-                # eager materialization is one tiny job that halves
-                # the store-leg subtree executions
-                rejected_vs_store = rejected_vs_store.localCheckpoint(
-                    eager=True
-                )
-
-        # within-batch: lower id survives; rejects can't reject others.
-        # Iterative-free formulation: doc X is rejected iff it has a
-        # qualifying neighbor Y < X that is itself store-clean and has
-        # no store-clean qualifying neighbor Z < Y... — the exact
-        # chain rule needs iteration; the standard (and deterministic)
-        # one-pass greedy used by corpus dedup keeps a doc iff it has
-        # no qualifying SURVIVING lower neighbor. One candidate hop is
-        # resolved here; longer chains are rare at LSH thresholds and
-        # resolve over subsequent ingests. We implement the one-hop
-        # rule: reject X iff ∃ Y < X with est ≥ t and Y not rejected
-        # vs the store.
-        est_nn = self._est_collisions(bands_new, bands_new).filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.col("est_jaccard") >= self.threshold)
+        a = bands_new.select(
+            "band", "band_hash",
+            F.col(self.id_col).alias("id_a"), F.col("__sig").alias("__sig_a"),
         )
-        if rejected_vs_store is not None:
-            store_rejected_ids = rejected_vs_store.select(
-                F.col(self.id_col).alias("id_a")
-            )
-            est_nn = est_nn.join(store_rejected_ids, "id_a", "left_anti")
-        rejected_in_batch = (
-            est_nn.groupBy("id_b")
-            .agg(
-                F.min("id_a").alias("dup_of"),
-                F.max("est_jaccard").alias("est_jaccard"),
-            )
-            .select(F.col("id_b").alias(self.id_col), "dup_of", "est_jaccard")
+        b = right.select(
+            "band", "band_hash", "is_store",
+            F.col(self.id_col).alias("id_b"), F.col("__sig").alias("__sig_b"),
         )
-
-        rejected = (
-            rejected_in_batch
-            if rejected_vs_store is None
-            else rejected_vs_store.unionByName(rejected_in_batch)
-            # a doc dup'd against both store and batch: keep one row,
-            # deterministically (smallest dup_of id)
-            .groupBy(self.id_col)
-            .agg(
-                F.min_by(
-                    F.struct("dup_of", "est_jaccard"), "dup_of"
-                ).alias("__m")
+        is_store = F.col("is_store")
+        hits = (
+            a.join(b, ["band", "band_hash"])
+            .select(
+                "id_a", "id_b", "is_store",
+                self._est_pair(F.col("__sig_a"), F.col("__sig_b"))
+                .alias("est_jaccard"),
             )
-            .select(self.id_col, "__m.dup_of", "__m.est_jaccard")
+            .filter(
+                (F.col("est_jaccard") >= self.threshold)
+                & (is_store | (F.col("id_a") < F.col("id_b")))
+            )
+            .withColumn(
+                "a_rejected",
+                F.max(is_store).over(Window.partitionBy("id_a")),
+            )
+            .filter(is_store | ~F.col("a_rejected"))
         )
-
-        accepted_sigs = sig_new.join(rejected, self.id_col, "left_anti")
-        return sig_new, accepted_sigs, rejected
+        # store rows reject id_a; batch rows (store-clean id_a) reject
+        # id_b, cast back to the batch id type the union may have widened
+        legs = hits.groupBy(
+            F.when(is_store, F.col("id_a"))
+            .otherwise(F.col("id_b"))
+            .cast(sig_new.schema[self.id_col].dataType)
+            .alias(self.id_col)
+        ).agg(
+            F.min(F.when(is_store, F.col("id_b"))).alias("s_dup"),
+            F.max(F.when(is_store, F.col("est_jaccard"))).alias("s_est"),
+            F.min(F.when(~is_store, F.col("id_a"))).alias("b_dup"),
+            F.max(F.when(~is_store, F.col("est_jaccard"))).alias("b_est"),
+        )
+        s_dup, b_dup = F.col("s_dup"), F.col("b_dup")
+        store_wins = s_dup.isNotNull() & (b_dup.isNull() | (s_dup <= b_dup))
+        return legs.select(
+            self.id_col,
+            F.when(store_wins, s_dup).otherwise(b_dup).alias("dup_of"),
+            F.when(store_wins, F.col("s_est")).otherwise(F.col("b_est")).alias("est_jaccard"),
+        )

@@ -975,6 +975,9 @@ class ManifestCatalog:
         returns None when another writer got there first — the caller
         re-reads the new latest and recomputes (``operators.scd.SCDEngine``).
 
+        A write that raises, or a lost race, deletes its data dir, so
+        ``data/`` holds no dir that no manifest lists.
+
         Refuses to overwrite a bucketed table: that would silently
         discard its bucket layout and metadata (IVF-PQ store, text
         index); ``drop`` it first."""
@@ -989,7 +992,11 @@ class ManifestCatalog:
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
+        try:
+            writer.parquet(data_dir)
+        except Exception:
+            self.fs.delete(data_dir)  # no manifest will ever list it
+            raise
         manifest = {"dirs": [data_dir], "bucket_dirs": None, "n_buckets": None}
         if not partition_by:
             manifest["schema"] = df.schema.json()
@@ -997,6 +1004,8 @@ class ManifestCatalog:
             version = self._commit(name, manifest)
         else:
             version = self._commit_if(name, manifest, base_version)
+            if version is None:
+                self.fs.delete(data_dir)  # lost the race: the caller recomputes
         # A wholesale rewrite can legally land a different type for an
         # existing column name (no schema-merge guard spans versions) —
         # a stale cached type would hash bloom probes wrongly and

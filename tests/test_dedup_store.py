@@ -207,3 +207,158 @@ def test_append_bucketed_layout_guard(spark, tmp_path):
     with pytest.raises(ValueError, match="unbucketed"):
         cat.replace_atomic(df, "t.plain")
         cat.append_bucketed(df, "t.plain", n_buckets=8, bucket_keys=["band_hash"])
+
+
+# -- the decision rule, replayed in pure Python --------------------------
+
+
+def _sig_map(rows, k: int) -> dict:
+    return {r.doc_id: [r[f"m{i}"] for i in range(k)] for r in rows}
+
+
+def _est(x, y, store):
+    """The estimate of a qualifying pair, else None: the pair collides
+    when some band's components are all equal, and scores the fraction
+    of equal components."""
+    k, r = store.num_hashes, store.rows
+    if not any(x[i:i + r] == y[i:i + r] for i in range(0, k, r)):
+        return None
+    e = sum(p == q for p, q in zip(x, y)) / k
+    return e if e >= store.threshold else None
+
+
+def _replay_legs(batch: dict, stored: dict, store) -> dict:
+    """Per batch doc, the qualifying ``(min dup_of, max est)`` of each
+    leg, from the signature arrays alone. The store leg rejects any
+    batch doc with a qualifying stored pair; the batch leg lets a
+    lower-id batch doc the store does not reject reject a higher one
+    (one hop)."""
+    legs: dict = {}
+
+    def add(doc, leg, dup, e):
+        d0, e0 = legs.setdefault(doc, {}).get(leg, (dup, e))
+        legs[doc][leg] = (min(d0, dup), max(e0, e))
+
+    for a, sa in batch.items():
+        for s, ss in stored.items():
+            if (e := _est(sa, ss, store)) is not None:
+                add(a, "store", s, e)
+    for a, sa in batch.items():
+        if "store" in legs.get(a, {}):
+            continue
+        for b, sb in batch.items():
+            if a < b and (e := _est(sa, sb, store)) is not None:
+                add(b, "batch", a, e)
+    return legs
+
+
+def _replay(legs: dict) -> set:
+    """(doc_id, dup_of, est_jaccard) per rejected doc: the leg with the
+    smaller dup_of, the store leg on a tie."""
+    out = set()
+    for doc, leg in legs.items():
+        s, b = leg.get("store"), leg.get("batch")
+        out.add((doc, *(s if s and (not b or s[0] <= b[0]) else b)))
+    return out
+
+
+def _decisions(acc, rej) -> tuple:
+    return (
+        {r.doc_id for r in acc.collect()},
+        {(r.doc_id, r.dup_of, r.est_jaccard) for r in rej.collect()},
+    )
+
+
+def _words(rng, n: int) -> list[str]:
+    return ["".join(rng.choice("abcdefghijklmnopqrstuvwxyz")
+                    for _ in range(rng.randint(3, 8))) for _ in range(n)]
+
+
+def _slide(words: list[str], step: int) -> str:
+    """40 words from ``6 * step`` on: neighbouring steps share ~0.72 of
+    their shingles (near-dups at 0.6), steps two apart ~0.5."""
+    return " ".join(words[6 * step: 6 * step + 40])
+
+
+@pytest.mark.parametrize("seed", [3, 17])
+def test_probe_and_ingest_follow_the_replayed_rule(spark, cat, seed):
+    """Random batches against a store: probe and ingest reject exactly
+    the ``(doc_id, dup_of, est_jaccard)`` a pure-Python replay of the
+    documented rule derives from the signature arrays, and accept the
+    rest of the shingled docs. Each batch holds multi-band collisions,
+    a 3-doc within-batch chain, a doc whose lower-id neighbour the
+    store rejects, and shingle-less / NULL texts."""
+    import random
+
+    rng = random.Random(seed)
+    # 128 hashes in 32 bands (σ ≈ 0.04): a 0.72 pair collides and
+    # scores ≥ 0.6 reliably, a 0.5 one does not, so the named cases hold
+    store = MinHashDedupStore(
+        cat, f"dedup.rule{seed}", num_hashes=128, bands=32, threshold=0.6
+    )
+    k = store.num_hashes
+    fams = [_words(rng, 80) for _ in range(4)]
+
+    # store: step 0 of families 0-1, plus a few near-dup chains of its own
+    base = [(1, _slide(fams[0], 0)), (2, _slide(fams[1], 0))]
+    base += [(3 + i, _slide(fams[2], rng.randint(0, 4))) for i in range(4)]
+    b0 = _docs(spark, base)
+    sig0 = _sig_map(store._signatures(b0, "text").collect(), k)
+    want0 = _replay(_replay_legs(sig0, {}, store))
+    assert _decisions(*store.ingest(b0, "text"))[1] == want0
+    stored = _sig_map(cat.read(store.table).collect(), k)
+
+    rows = [
+        (20, _slide(fams[0], 0)),  # all bands: duplicate of stored 1
+        (21, _slide(fams[0], 1)),  # store rejects 21 (via 1) ...
+        (22, _slide(fams[0], 2)),  # ... so 21 cannot reject 22
+        (30, _slide(fams[3], 0)),  # chain 30 → 31 → 32 (one hop:
+        (31, _slide(fams[3], 1)),  # 31 is batch-rejected yet still
+        (32, _slide(fams[3], 2)),  # rejects 32)
+        (40, "abc"),               # shingle-less
+        (41, None),                # NULL
+    ]
+    rows += [
+        (50 + i, _slide(fams[rng.randint(1, 3)], rng.randint(0, 4)))
+        for i in range(8)
+    ]
+    rng.shuffle(rows)
+    batch = _docs(spark, rows)
+    sigs = _sig_map(store._signatures(batch, "text").collect(), k)
+    assert set(sigs) == {d for d, t in rows if t and len(t) >= store.shingle_len}
+    legs = _replay_legs(sigs, stored, store)
+    want = _replay(legs)
+    # the named cases are present, so the comparison is not vacuous
+    assert legs[20]["store"] == (1, 1.0) and "store" in legs[21]
+    assert _est(sigs[21], sigs[22], store) is not None
+    assert legs.get(22, {}).get("batch", (None,))[0] != 21
+    assert legs[31]["batch"][0] == 30 and legs[32]["batch"][0] == 31
+
+    expected = (set(sigs) - {d for d, *_ in want}, want)
+    assert _decisions(*store.probe(batch, "text")) == expected
+    assert _decisions(*store.ingest(batch, "text")) == expected
+
+
+def test_store_leg_wins_a_same_dup_of_tie(spark, cat):
+    """A batch that re-uses stored id 5 for new content: doc 7 is a
+    near-dup of stored 5 AND of the (store-clean) batch 5, so both legs
+    name dup_of 5 with different estimates. The store leg wins."""
+    import random
+
+    words = _words(random.Random(5), 80)
+    store = MinHashDedupStore(
+        cat, "dedup.tie", num_hashes=64, bands=16, threshold=0.6
+    )
+    store.ingest(_docs(spark, [(5, " ".join(words[0:40]))]), "text")
+    stored = _sig_map(cat.read(store.table).collect(), store.num_hashes)
+    batch = _docs(
+        spark, [(5, " ".join(words[14:54])), (7, " ".join(words[6:46]))]
+    )
+    sigs = _sig_map(store._signatures(batch, "text").collect(), store.num_hashes)
+    legs = _replay_legs(sigs, stored, store)
+    assert 5 not in legs  # batch 5 is store-clean
+    s, b = legs[7]["store"], legs[7]["batch"]
+    assert s[0] == b[0] == 5 and s[1] != b[1]
+    want = {(7, 5, s[1])}
+    assert _decisions(*store.probe(batch, "text"))[1] == want
+    assert _decisions(*store.ingest(batch, "text"))[1] == want

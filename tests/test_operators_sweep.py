@@ -55,7 +55,9 @@ def test_scd_apply_duplicate_keys_commit_nothing(spark, tmp_path):
     """The duplicate-key guard runs inside each apply's write job: a
     dup-key batch raises ``ValueError`` and leaves the table's latest
     version unchanged, on a first load and on a later batch, for SCD
-    types 1, 2 and 3. Null keys drop without failing the apply."""
+    types 1, 2 and 3, and deletes the failed write's data dir, so the
+    table's ``data/`` holds only committed dirs. Null keys drop without
+    failing the apply."""
     cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
     eng = SCDEngine(cat)
     applies = {
@@ -65,10 +67,20 @@ def test_scd_apply_duplicate_keys_commit_nothing(spark, tmp_path):
     }
     dup = spark.createDataFrame([(1, "a"), (1, "b"), (2, "c")], "k int, v string")
     ok = spark.createDataFrame([(1, "a"), (None, "n")], "k int, v string")
+
+    def data_dirs(table) -> list:
+        d = tmp_path / "lake" / table / "data"
+        return sorted(p.name for p in d.iterdir()) if d.exists() else []
+
+    def committed_dirs(table) -> list:
+        m = cat.latest_manifest(table)
+        return sorted(d.rsplit("/", 1)[-1] for d in (m["dirs"] if m else []))
+
     for table, apply in applies.items():
         with pytest.raises(ValueError, match="duplicate business keys"):
             apply(dup)  # first load
         assert cat.latest_manifest(table) is None, table
+        assert data_dirs(table) == [], table  # the failed write left nothing
 
         apply(ok)
         assert cat.latest_manifest(table)["version"] == 1, table
@@ -78,6 +90,7 @@ def test_scd_apply_duplicate_keys_commit_nothing(spark, tmp_path):
             apply(dup)  # later batch
         assert cat.latest_manifest(table)["version"] == 1, table
         assert [(r.k, r.v) for r in cat.read(table).collect()] == [(1, "a")]
+        assert data_dirs(table) == committed_dirs(table), table
 
 
 def test_approx_count_distinct_within_tolerance(spark):

@@ -202,6 +202,14 @@ def test_scd_apply_rebases_on_concurrent_commit(spark, catalog, tmp_path, scd_ty
     assert {r[0] for r in got} == {"C1", "C2", "C3"}
     assert got == _state(serial, "silver.dim")
     assert catalog.latest_manifest("silver.dim")["version"] == 3
+    # the publish that lost the race deleted its data dir
+    listed = {
+        d.rsplit("/", 1)[-1]
+        for v in (1, 2, 3)
+        for d in catalog.manifest_at("silver.dim", v)["dirs"]
+    }
+    on_disk = {p.name for p in (tmp_path / "lake/silver/dim/data").iterdir()}
+    assert on_disk == listed
 
 
 @pytest.mark.parametrize("scd_type", [1, 2, 3])
