@@ -180,19 +180,18 @@ class MinHashDedupStore:
         NEITHER frame — unclassifiable, by contract (:meth:`probe`
         matches). Filter or pad such docs upstream if they must be
         retained."""
-        # persisted, not eagerly counted: the append fills the cache,
-        # and every later read of the decision plan reuses it
+        # persisted, not eagerly counted: the decision plan fills the
+        # cache, and the append re-reads it
         sig_new = self._signatures(docs, text_col).persist()
-        rejected = self._decide(sig_new)
+        # the decision plan runs once; the append and ``accepted`` both
+        # derive from its checkpoint, which survives sig_new's unpersist
+        rejected = self._decide(sig_new).localCheckpoint(eager=True)
         accepted_sigs = sig_new.join(rejected, self.id_col, "left_anti")
         if self.catalog.exists(self.table):
             self.catalog.append(accepted_sigs, self.table)
         else:
             self.catalog.replace_atomic(accepted_sigs, self.table)
-        accepted = accepted_sigs.select(self.id_col)
-        # decision frames must survive sig_new's unpersist
-        accepted = accepted.localCheckpoint(eager=True)
-        rejected = rejected.localCheckpoint(eager=True)
+        accepted = accepted_sigs.select(self.id_col).localCheckpoint(eager=True)
         sig_new.unpersist()
         return accepted, rejected
 

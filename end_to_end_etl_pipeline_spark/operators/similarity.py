@@ -65,7 +65,8 @@ def _scored_pairs(q: DataFrame, c: DataFrame) -> DataFrame:
     (Spark yields NULL, DuckDB inf/nan): excluded on both sides
     rather than letting NULL-scored rows occupy top-k slots.  The
     single home of the determinism contract (6dp round) shared by
-    cosine_topk and hard_negatives."""
+    cosine_topk, hard_negatives and the MMR candidate build
+    (``queries/vectors.py:_mmr_candidates``)."""
     return (
         c.join(F.broadcast(q), F.lit(True))
         .filter((F.col("__qv_norm") > 0) & (F.col("__cv_norm") > 0))

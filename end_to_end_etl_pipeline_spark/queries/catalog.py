@@ -66,6 +66,42 @@ def register(name: str, oracle: str | None, doc: str = "", tags: tuple = ()):
     return deco
 
 
+#: The lake's table schemas, exactly the types a footer read infers
+#: (the files' timestamps are not UTC-adjusted, so they read as
+#: TIMESTAMP_NTZ). Declared, not inferred: a schema-less read runs a
+#: one-task footer job per ``load``.
+TABLE_SCHEMAS: dict[str, str] = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, "
+        "c_acctbal DOUBLE, c_mktsegment STRING"
+    ),
+    "supplier": (
+        "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE"
+    ),
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+        "p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+        "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, "
+        "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, "
+        "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, "
+        "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "documents": (
+        "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
+    ),
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
+#: tables whose timestamp precision varies by file generation, so the
+#: read must look at the footer types (see ``load``)
 NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
@@ -73,7 +109,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     path = f"{sf_dir.rstrip('/')}/{table}.parquet"
     nanos_cols = NANOS_TS_COLS.get(table)
     if not nanos_cols:
-        return spark.read.parquet(path)
+        return spark.read.schema(TABLE_SCHEMAS[table]).parquet(path)
     # Nanosecond-precision parquet timestamps are illegal for Spark's
     # vectorized reader; read them as raw int64 nanos and truncate to
     # microsecond timestamps (exactly what DuckDB/Arrow consumers do).

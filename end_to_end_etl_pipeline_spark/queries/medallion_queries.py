@@ -15,13 +15,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from end_to_end_etl_pipeline_spark.queries.catalog import register, scratch_root
-
-# exactly the types a footer read infers: the orders files' timestamps
-# are not UTC-adjusted, so o_orderdate reads as TIMESTAMP_NTZ
-ORDERS_SCHEMA = (
-    "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
-    "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+from end_to_end_etl_pipeline_spark.queries.catalog import (
+    TABLE_SCHEMAS,
+    register,
+    scratch_root,
 )
 
 
@@ -33,7 +30,7 @@ def _pipeline_config(sf_dir: str) -> dict:
                 "source": {
                     "format": "parquet",
                     "path": f"{sf_dir}/orders.parquet",
-                    "schema": ORDERS_SCHEMA,
+                    "schema": TABLE_SCHEMAS["orders"],
                 },
                 "file_metadata": True,
             }

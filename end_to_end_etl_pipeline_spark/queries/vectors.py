@@ -19,6 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.operators.similarity import (
+    _prep,
+    _scored_pairs,
+    _topk_by_cosine,
     cosine_topk,
     cosine_topk_ivf,
     sign_lsh_near_dup_pairs,
@@ -1491,18 +1494,17 @@ _MMR_ORACLE = f"""
 
 def _mmr_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared candidate build for both MMR conformance queries: 5
-    query vectors, exact-cosine top-20 each, vectors re-joined for
-    the pairwise-sim step."""
+    query vectors, exact-cosine top-20 each (query_id, match_id,
+    cosine, __cv). Each candidate keeps the corpus vector it was
+    scored with (``__cv``, array<double>) through the top-k, so the
+    pairwise-sim step needs no second read of ``embeddings``."""
     emb = load(spark, sf_dir, "embeddings")
     qvecs = emb.filter(F.col("vec_id").between(100, 104)).select(
         (F.col("vec_id") - 100).alias("query_id"), "embedding"
     )
-    cand = cosine_topk(
-        qvecs, emb, "query_id", "vec_id", "embedding", k=20, exclude_self=False
-    )
-    return cand.join(
-        emb.select(F.col("vec_id").alias("match_id"), "embedding"), "match_id"
-    )
+    q = _prep(qvecs, "query_id", "embedding", "query_id", "__qv")
+    c = _prep(emb, "vec_id", "embedding", "match_id", "__cv")
+    return _topk_by_cosine(_scored_pairs(q, c), 20, extra=("__cv",))
 
 
 @register(
@@ -1529,7 +1531,7 @@ def mmr_diverse_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from end_to_end_etl_pipeline_spark.operators.retrieval import mmr_select
 
     candv = _mmr_candidates(spark, sf_dir)
-    out = mmr_select(candv, "query_id", "match_id", "embedding", "cosine")
+    out = mmr_select(candv, "query_id", "match_id", "__cv", "cosine")
     return out.select(
         "query_id", F.col("match_id").alias("doc_id"), "mmr_rank",
         F.col("cosine").alias("rel"),
@@ -1559,9 +1561,7 @@ def mmr_diverse_rerank_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     candv = _mmr_candidates(spark, sf_dir)
-    out = mmr_select_grouped(
-        candv, "query_id", "match_id", "embedding", "cosine"
-    )
+    out = mmr_select_grouped(candv, "query_id", "match_id", "__cv", "cosine")
     return out.select(
         "query_id", F.col("match_id").alias("doc_id"), "mmr_rank",
         F.col("cosine").alias("rel"),

@@ -10,11 +10,17 @@ These assert plan *structure*, not timings — stable across machines.
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
-from end_to_end_etl_pipeline_spark.queries.catalog import REGISTRY
+from end_to_end_etl_pipeline_spark.queries.catalog import (
+    REGISTRY,
+    TABLE_SCHEMAS,
+    load,
+)
+from tests.conftest import TESTDATA
 
-SF = "/root/testdata/sf0.01"
+SF = f"{TESTDATA}/sf0.01"
 
 
 def _plan(spark, name: str) -> str:
@@ -168,8 +174,8 @@ def test_mmr_diverse_rerank_runs_no_stage_past_its_candidates(
     spark, run_counted
 ):
     """Stage pin: the whole re-rank adds no stage to the candidate
-    build it consumes (5 and 5 at 4 cores; the k checkpointed greedy
-    steps it replaced ran 44)."""
+    build it consumes (3 and 3; the k checkpointed greedy steps it
+    replaced ran 44)."""
     from end_to_end_etl_pipeline_spark.queries.vectors import _mmr_candidates
 
     _, _, cand = run_counted(lambda: _noop_write(_mmr_candidates(spark, SF)))
@@ -177,6 +183,22 @@ def test_mmr_diverse_rerank_runs_no_stage_past_its_candidates(
         lambda: _noop_write(REGISTRY["mmr_diverse_rerank"].spark(spark, SF))
     )
     assert full <= cand, (full, cand)
+
+
+def test_mmr_diverse_rerank_runs_three_stages_and_no_vector_rejoin(
+    spark, run_counted
+):
+    """Stage pin: the sf0.01 noop write runs exactly 3 stages, and the
+    optimized plan joins nothing on ``match_id``: each candidate keeps
+    the corpus vector it was scored with through the top-k, so the
+    pairwise-sim step re-reads no embedding (the broadcast re-join of
+    ``embeddings`` plus the footer read it replaced ran 5)."""
+    df = REGISTRY["mmr_diverse_rerank"].spark(spark, SF)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    joins = [ln for ln in plan.splitlines() if "Join" in ln]
+    assert joins and not any("match_id" in ln for ln in joins), joins
+    _, _, stages = run_counted(lambda: _noop_write(df))
+    assert stages == 3, stages
 
 
 def test_mmr_diverse_rerank_leaves_no_persisted_rdds(spark):
@@ -266,12 +288,79 @@ def test_dedup_store_probe_leaves_no_persisted_rdds(spark, tmp_path):
     assert persisted() - before == set()
 
 
+def test_dedup_store_ingest_runs_its_decision_plan_once(
+    spark, tmp_path, run_counted
+):
+    """Stage pin: ``ingest`` checkpoints ``rejected`` first and derives
+    the append and ``accepted`` from it, so the band join, window and
+    aggregate run once, not once per action: at most 11 stages into an
+    empty store and into a non-empty one (18 each when the append and
+    both returned frames re-ran the plan)."""
+    from end_to_end_etl_pipeline_spark.operators.dedup_store import (
+        MinHashDedupStore,
+    )
+    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
+
+    cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
+    store = MinHashDedupStore(cat, "i.sigs", threshold=0.6)
+    dup = "alpha beta gamma delta epsilon zeta eta theta"
+    for rows, want_acc, want_rej in (
+        # empty store: 2 duplicates 1
+        (f"(1, '{dup}'), (2, '{dup}'), (3, 'other words here')", [1, 3], [2]),
+        # non-empty store: 10 duplicates the stored 1
+        (f"(10, '{dup}'), (11, 'fresh text, unseen')", [11], [10]),
+    ):
+        batch = spark.sql(
+            f"SELECT * FROM VALUES {rows} AS t(doc_id, text)"
+        ).repartition(2)
+        (acc, rej), _, stages = run_counted(lambda: store.ingest(batch, "text"))
+        assert sorted(r.doc_id for r in acc.collect()) == want_acc
+        assert sorted(r.doc_id for r in rej.collect()) == want_rej
+        assert stages <= 11, (rows, stages)
+
+
 def test_grouped_map_uses_arrow_not_row_udf(spark):
     """The applyInPandas escape hatch must plan as Arrow grouped-map
     (FlatMapGroupsInPandas), never the row-at-a-time Python UDF."""
     plan = _plan(spark, "event_type_value_trend")
     assert "FlatMapGroupsInPandas" in plan
     assert "BatchEvalPython" not in plan
+
+
+@pytest.fixture(scope="module")
+def generated_lake(tmp_path_factory):
+    """The lake the benchmark generator writes, at a small scale."""
+    from perfbench import gen
+
+    lake = tmp_path_factory.mktemp("generated_lake")
+    for name, table in gen.lake_tables(11, 0.005).items():
+        gen.write_parquet(table, f"{lake}/{name}.parquet")
+    return str(lake)
+
+
+@pytest.mark.parametrize("table", sorted(TABLE_SCHEMAS))
+def test_load_reads_the_declared_footer_schema_without_a_job(
+    spark, run_counted, generated_lake, table
+):
+    """``load`` reads a declared table with its declared schema: the
+    schema a footer read infers, in every testdata lake and in the
+    generated one, and no job (a schema-less read runs a footer
+    job per call)."""
+    for lake in (
+        f"{TESTDATA}/sf0.001", f"{TESTDATA}/sf0.01", f"{TESTDATA}/sf0.1",
+        generated_lake,
+    ):
+        df, jobs, _ = run_counted(lambda: load(spark, lake, table))
+        assert jobs == 0, (lake, jobs)
+        footer = spark.read.parquet(f"{lake}/{table}.parquet").schema
+        assert df.schema == footer, (lake, df.schema, footer)
+
+
+def test_load_refuses_an_undeclared_table(spark, tmp_path):
+    """An undeclared table never falls back to footer inference."""
+    spark.range(3).write.parquet(f"{tmp_path}/extra.parquet")
+    with pytest.raises(KeyError):
+        load(spark, str(tmp_path), "extra")
 
 
 def test_scan_prunes_columns(spark):
@@ -287,8 +376,6 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     # a filter on the partition column must become PartitionFilters
     # (directory pruning — zero IO for excluded partitions), not a
     # post-scan Filter over all data
-    from end_to_end_etl_pipeline_spark.queries.catalog import load
-
     orders = load(spark, SF, "orders").withColumn("o_year", F.year("o_orderdate"))
     dest = str(tmp_path / "orders_by_year")
     orders.write.partitionBy("o_year").parquet(dest)
@@ -335,8 +422,6 @@ def test_dynamic_partition_pruning_on_fact_dim_join(spark, tmp_path):
     # 100 TB this is the difference between scanning one nation's
     # partitions and scanning the whole fact table. The plan shows a
     # dynamicpruning subquery inside the scan's PartitionFilters.
-    from end_to_end_etl_pipeline_spark.queries.catalog import load
-
     cust = load(spark, SF, "customer")
     dest = str(tmp_path / "cust_by_nation")
     cust.write.partitionBy("c_nationkey").parquet(dest)
