@@ -20,7 +20,7 @@ default) or salt upstream.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -30,21 +30,36 @@ def dedup_by_key(
     df: DataFrame,
     keys: Sequence[str],
     order_by: Sequence[Column | str] | None = None,
+    aggs: Mapping[str, str] | None = None,
 ) -> DataFrame:
     """P7 (fixed) — one row per key, deterministic keep-policy.
 
     ``order_by`` decides which duplicate survives (first under the
     ordering). Without it, falls back to Spark's ``dropDuplicates``
     (reference-faithful nondeterminism, cheaper: partial agg map-side).
+
+    ``aggs`` (name → SQL aggregate over all the key's rows) rides the
+    same shuffle: the window is followed by one ``groupBy(keys)``
+    keeping the spine row as ``min_by(struct(non-key cols), rank)``,
+    which reads the window's partitioning (no exchange, no join) and
+    keeps any ASC/DESC mix. Columns: keys, spine, aggregates. Unlike a
+    left-joined feature aggregate, a NULL-key group gets its real
+    aggregates. ``aggs`` needs ``order_by`` (else ``ValueError``).
     """
     if order_by is None:
+        if aggs:
+            raise ValueError("dedup_by_key: aggs need an order_by keep-policy")
         return df.dropDuplicates(list(keys))
     w = Window.partitionBy(*keys).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    ranked = df.withColumn("__rn", F.row_number().over(w))
+    if not aggs:
+        return ranked.filter(F.col("__rn") == 1).drop("__rn")
+    spine = [c for c in df.columns if c not in keys]
+    won = ranked.groupBy(*keys).agg(
+        F.min_by(F.struct(*spine), F.col("__rn")).alias("__row"),
+        *[F.expr(e).alias(name) for name, e in aggs.items()],
     )
+    return won.select(*keys, *[F.col(f"__row.{c}").alias(c) for c in spine], *aggs)
 
 
 def dedup_exact_hash(

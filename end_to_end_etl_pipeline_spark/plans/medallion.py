@@ -13,8 +13,9 @@ Layer semantics (same as the reference, defects fixed):
 * **bronze** — explicit-schema file scan (+ optional file-path key,
   nested-array explode), audit columns, full-refresh overwrite.
 * **silver** — DQ gates (not-null keys, column-scoped bounds),
-  cleaning exprs, deterministic dedup, feature aggregation + left
-  join (company_master pattern), or SCD2 hash-diff merge.
+  cleaning exprs, deterministic dedup + its per-key aggregates in one
+  shuffle, cross-table feature aggregation + left join
+  (company_master pattern), or SCD2 hash-diff merge.
 * **gold** — promote (strip technical cols), dimension (current
   snapshot), fact (derived KPIs incl. lag-window growth), partitioned
   + clustered publication.
@@ -156,18 +157,19 @@ class MedallionPipeline:
         dedup = spec.get("dedup")
         if dedup:
             order = [_order_expr(e) for e in dedup.get("order_by", [])] or None
-            df = dedup_by_key(df, dedup["keys"], order_by=order)
+            df = dedup_by_key(
+                df, dedup["keys"], order_by=order, aggs=dedup.get("aggs")
+            )
 
         post_filter = spec.get("filter")
         if post_filter:
             df = df.filter(post_filter)
 
         for feat in spec.get("feature_joins", ()):  # company_master pattern
-            # a shuffle join: the aggregate arrives hash-partitioned on
-            # its group keys, and a spine deduped on the join keys on
-            # those too, so neither side moves again; a statically
-            # planned broadcast would run the aggregate as a job of its
-            # own
+            # another table's features (same-table ones are dedup
+            # aggs) by shuffle join: both sides arrive hash-partitioned
+            # on the keys, so neither moves again; a broadcast would
+            # run the aggregate as a job of its own
             agg_df = self._feature_agg(feat).hint("merge")
             df = equi_join(df, agg_df, on=feat["on"], how=feat.get("how", "left"))
 

@@ -240,73 +240,71 @@ from end_to_end_etl_pipeline_spark.queries import dedup_store_queries  # noqa: E
 # tests/test_oracle_parity.py keep the constant tied to the files on
 # disk).
 #
-# r13 arithmetic (judge-facing): evidence-age histogram after r12
-# (recomputed from CORRECTNESS_r01-r12): r09=29, r10=50, r11=50,
-# r12=50 (Σ=179). Floor = 13 - 2 = 11 ⇒ 22 families exempt (all
-# listed members green at r11/r12), 21 non-exempt.
-# 0 new registrations + 21 family slots (no cross-family dedup
-# needed this round — every slot query covers exactly one
-# non-exempt family) + 29 globally-oldest fillers = 50. The fillers
-# take all 26 remaining r09 rows (the three other r09 rows —
-# min_cost_supplier, png_image_decode_stats, winsorized_price_stats
-# — already hold family slots) plus the three alphabetically-first
-# r10 rows — post-r13 the oldest evidence anywhere in the registry
-# is r10, beating the r12 bar "oldest ≥ r09".
-WINDOW_ROTATION_ROUND: int = 13
+# r14 arithmetic: evidence-age histogram after r13 (recomputed from
+# CORRECTNESS_r01-r13): r10=29, r11=49, r12=50, r13=50 (Σ=178).
+# Floor = 14 - 2 = 12 ⇒ 1 family exempt (incremental-dedup: its one
+# member green at r12/r13), 42 non-exempt.
+# 0 new registrations + 42 family slots deduped to 41
+# (streaming_scd2_dimension covers both scd2 and streaming-bridge) +
+# 9 globally-oldest fillers = 50. Every family slot takes its
+# oldest-evidence member (9 of them r10 rows, the rest r11); the
+# fillers take the nine alphabetically-first of the 20 remaining r10
+# rows. Post-r14 the r10 tail shrinks from 29 rows to 11.
+WINDOW_ROTATION_ROUND: int = 14
 
 DRIVER_WINDOW: tuple[str, ...] = (
-    # --- family slots, oldest-evidence member per family (21) ---
-    "ann_recall_at_k",               # ann (r10)
-    "purchase_next_view_asof",       # asof (r10)
-    "bpe_token_freqs",               # bpe (r10)
-    "min_cost_supplier",             # core-joins (r09)
-    "clean_corpus",                  # curation-lineage (r10)
-    "within_doc_line_dedup",         # exact-dedup (r10)
-    "embedding_int8_quantize",       # kmeans-vectors (r10)
-    "bm25_store_search",             # lexical-retrieval (r10)
-    "png_image_decode_stats",        # multimodal (r09)
-    "doc_shared_span_extent",        # near-dedup (r10)
-    "doc_packed_bins",               # packing-chunking (r10)
-    "winsorized_price_stats",        # profiling (r09)
-    "doc_repetition_ratio",          # quality-classifier (r10)
-    "crossencoder_rerank_topk",      # rerank-seam (r10)
-    "weighted_doc_sample",           # sampling (r10)
-    "scd2_transition",               # scd2 (r10)
-    "daily_uniques_bitmap",          # sketch (r10)
-    "split_contamination",           # splits-contamination (r10)
-    "orders_change_data_feed",       # storage-engine (r10)
-    "streaming_ann_ingest_restart",  # streaming-bridge (r10)
-    "boilerplate_ratio",             # text-analysis (r10)
-    # --- globally-oldest fillers (29) ---
-    "large_volume_orders",           # r09
-    "latest_order_per_customer",     # r09
-    "lineitem_cube",                 # r09
-    "lineitem_grouping_sets",        # r09
-    "lone_returned_supplier",        # r09
-    "monthly_segment_growth",        # r09
-    "nation_market_share",           # r09
-    "nation_pagerank",               # r09
-    "order_date_features",           # r09
-    "order_lineitem_reconciliation", # r09
-    "order_price_histogram",         # r09
-    "order_priority_pivot",          # r09
-    "part_string_features",          # r09
-    "price_quantity_regression",     # r09
-    "pricing_summary",               # r09
-    "priority_order_returns",        # r09
-    "product_profit",                # r09
-    "promo_revenue_ratio",           # r09
-    "purchase_view_window",          # r09
-    "region_rollup",                 # r09
-    "returnflag_metrics_melt",       # r09
-    "revenue_by_nation",             # r09
-    "rolling_segment_revenue",       # r09
-    "salted_order_revenue",          # r09
-    "segment_customer_setops",       # r09
-    "small_quantity_revenue",        # r09
-    "ann_store_incremental_topk",    # r10
-    "corpus_funnel_audit",           # r10
-    "cosine_topk_ivf",               # r10
+    # --- family slots, oldest-evidence member per family (41) ---
+    "daily_event_anomaly",           # profiling (r10)
+    "doc_fingerprints",              # text-analysis (r10)
+    "doc_frame_samples",             # multimodal (r10)
+    "embedding_near_dup",            # near-dedup (r10)
+    "important_part_value",          # core-joins (r10)
+    "ivfpq_topk",                    # ann (r10)
+    "orders_time_travel_vacuum",     # storage-engine (r10)
+    "streaming_scd2_dimension",      # scd2 + streaming-bridge (r10)
+    "word_heavy_hitters_cms",        # sketch (r10)
+    "bm25_ndcg_eval",                # retrieval-eval (r11)
+    "bpe_merge_rules_batched",       # bpe (r11)
+    "c4_line_filtered_corpus",       # curation-lineage (r11)
+    "crossencoder_trained_rerank",   # rerank-seam (r11)
+    "csv_scan_roundtrip",            # csv-scan (r11)
+    "customer_kanonymity",           # privacy (r11)
+    "customer_record_linkage",       # entity-resolution (r11)
+    "decontaminated_train_split",    # splits-contamination (r11)
+    "dsir_importance_scores",        # importance-selection (r11)
+    "embedding_kmeans_clusters",     # kmeans-vectors (r11)
+    "event_type_value_trend",        # grouped-models (r11)
+    "hard_negative_mining",          # hard-negatives (r11)
+    "hybrid_doc_retrieval",          # hybrid-retrieval (r11)
+    "json_scan_roundtrip",           # json-scan (r11)
+    "keyword_doc_similarity",        # lexical-retrieval (r11)
+    "lang_temperature_mix",          # sampling (r11)
+    "line_dedup_corpus",             # exact-dedup (r11)
+    "medallion_gold_fact",           # medallion-e2e (r11)
+    "mmr_diverse_rerank_grouped",    # diversified-retrieval (r11)
+    "orc_scan_roundtrip",            # orc-scan (r11)
+    "preference_pair_mining",        # preference-pairs (r11)
+    "priority_target_encoding",      # feature-prep (r11)
+    "purchase_last_view_asof",       # asof (r11)
+    "purchase_touch_attribution",    # basket-attribution (r11)
+    "quality_classifier_trained",    # quality-classifier (r11)
+    "rag_context_pack",              # packing-chunking (r11)
+    "semantic_split_contamination",  # semantic-dedup (r11)
+    "streaming_join_view_purchase",  # stream-stream-join (r11)
+    "streaming_late_data_revenue",   # streaming-watermark (r11)
+    "streaming_priority_revenue",    # ivm (r11)
+    "streaming_view_sessions",       # streaming-stateful (r11)
+    "vocab_drift_psi",               # vocab (r11)
+    # --- globally-oldest fillers (9) ---
+    "customer_master",               # r10
+    "doc_normalized",                # r10
+    "doc_pii_redacted",              # r10
+    "doc_script_profile",            # r10
+    "doc_token_stats",               # r10
+    "forecast_revenue_change",       # r10
+    "gopher_quality_filter",         # r10
+    "idle_rich_customers",           # r10
+    "lang_id",                       # r10
 )
 
 

@@ -47,25 +47,19 @@ def _pipeline_config(sf_dir: str) -> dict:
                 },
             },
             {
-                # company_master pattern: deduped spine + feature agg
-                # join, then first-load SCD2 at a fixed as_of
+                # company_master pattern: deduped spine + its quarterly
+                # features in one shuffle (same-table aggregates need
+                # no feature join), then SCD2 at a fixed as_of
                 "table": "silver.cust_quarter",
                 "from": "silver.orders_q",
                 "dedup": {
                     "keys": ["o_custkey", "quarter"],
                     "order_by": ["o_orderdate DESC", "o_orderkey ASC"],
+                    "aggs": {
+                        "total_revenue": "round(sum(o_totalprice), 2)",
+                        "n_orders": "count(1)",
+                    },
                 },
-                "feature_joins": [
-                    {
-                        "from": "silver.orders_q",
-                        "group_by": ["o_custkey", "quarter"],
-                        "on": ["o_custkey", "quarter"],
-                        "aggs": {
-                            "total_revenue": "round(sum(o_totalprice), 2)",
-                            "n_orders": "count(1)",
-                        },
-                    }
-                ],
                 "scd": {
                     "type": 2,
                     "business_keys": ["o_custkey", "quarter"],
@@ -135,10 +129,11 @@ def _pipeline_config(sf_dir: str) -> dict:
     """,
     doc="Medallion e2e flagship (plans/medallion.py): bronze parquet "
     "ingest with audit cols, silver DQ gate + quarter derive + deduped "
-    "spine + feature-agg join + first-load SCD2 (fixed as_of), gold "
-    "fact with current snapshot, lag-window QoQ growth and guarded "
-    "derived ratios - the reference's main.py:29-40 orchestration and "
-    "s2g.py:126-141 KPI semantics as one driver-checkable query. Runs "
+    "spine with its per-key aggregates in one shuffle + first-load SCD2 "
+    "(fixed as_of), gold fact with current snapshot, lag-window QoQ "
+    "growth and guarded derived ratios - the reference's main.py:29-40 "
+    "orchestration and s2g.py:126-141 KPI semantics as one "
+    "driver-checkable query. Runs "
     "through ManifestCatalog (single-rename manifest commits), i.e. "
     "the object-store-portable publication path, not a test shim.",
     tags=("medallion", "scd", "north-star"),

@@ -285,10 +285,11 @@ def test_flagship_bronze_keeps_footer_types(spark, tmp_path, sf_smoke_dir):
 def test_flagship_restatement_stage_budget(spark, tmp_path, sf_smoke_dir, run_counted):
     """Pinned per-layer stage budget of one restatement batch through
     the flagship config: bronze is its write (no footer-inference
-    job); silver is the ``orders_q`` write plus the SCD2 write's four
-    stages (spine and feature-aggregate maps, current-target map, the
-    merge; no uniqueness job, no broadcast); gold is its window shuffle
-    and write."""
+    job); silver is the ``orders_q`` write plus the SCD2 write's three
+    stages: the source map (one shuffle for the spine dedup, its
+    per-key aggregates and the duplicate-key window; no feature
+    join), the current-target map, and the merge (no uniqueness job,
+    no broadcast); gold is its window shuffle and write."""
     pipe = MedallionPipeline(spark, str(tmp_path / "lake"))
     pipe.run(_pipeline_config(sf_smoke_dir))
     cfg = _pipeline_config(_restatement_batch(spark, sf_smoke_dir, tmp_path / "b1"))
@@ -303,9 +304,91 @@ def test_flagship_restatement_stage_budget(spark, tmp_path, sf_smoke_dir, run_co
         _, _, stages[layer] = run_counted(
             lambda: [build(spec) for spec in cfg[layer]]
         )
-    assert stages == {"bronze": 1, "silver": 5, "gold": 2}
+    assert stages == {"bronze": 1, "silver": 4, "gold": 2}
     # the batch restated something: the SCD2 merge expired rows
     assert pipe.catalog.read("silver.cust_quarter").filter(~F.col("is_current")).count()
+
+
+def _feature_join_shape(cfg):
+    """``cfg`` with ``silver.cust_quarter``'s dedup aggregates moved
+    back into a ``feature_joins`` self-join of ``silver.orders_q``."""
+    spec = cfg["silver"][1]
+    keys = spec["dedup"]["keys"]
+    spec["feature_joins"] = [{
+        "from": spec["from"], "group_by": keys, "on": keys,
+        "aggs": spec["dedup"].pop("aggs"),
+    }]
+    return cfg
+
+
+def test_flagship_batches_past_first_load_match_feature_join_shape(
+    spark, tmp_path, sf_smoke_dir, monkeypatch
+):
+    """The flagship through a first load and two restatement batches,
+    once with ``dedup.aggs`` and once with the feature-join shape it
+    replaced, each into its own lake: ``silver.cust_quarter`` is the
+    same in both on every column, spine (``o_orderkey``,
+    ``o_orderdate``, ``file_path``) and SCD2 columns included. Batch 1
+    adds a ``(o_custkey, quarter)`` group the first load lacked;
+    batch 2 moves a group's latest order to the quarter's start and
+    restates its price, so another order becomes its spine row."""
+    # one audit timestamp for both lakes: the spine carries bronze's
+    # last_updated_ts, and a real clock would differ between them
+    ts = F.lit("2026-03-01 00:00:00").cast("timestamp")
+    monkeypatch.setattr(F, "current_timestamp", lambda: ts)
+    q = F.expr("CAST(date_trunc('quarter', o_orderdate) AS DATE)")
+    orders = spark.read.parquet(f"{sf_smoke_dir}/orders.parquet")
+    sizes = orders.groupBy("o_custkey", q.alias("quarter")).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max_by("o_orderkey", F.struct("o_orderdate", -F.col("o_orderkey"))).alias("latest"),
+    )
+    new_cust, new_q = sizes.filter("n = 1").orderBy("o_custkey", "quarter").first()[:2]
+    latest = sizes.filter("n > 2").orderBy("o_custkey", "quarter").first().latest
+
+    is_new = (F.col("o_custkey") == new_cust) & (q == F.lit(new_q))
+    moved = F.col("o_orderkey") == latest
+    batches = [
+        orders.filter(~is_new),
+        orders,
+        orders.withColumns({
+            "o_orderdate": F.when(
+                moved, F.expr("CAST(date_trunc('quarter', o_orderdate) AS TIMESTAMP_NTZ)")
+            ).otherwise(F.col("o_orderdate")),
+            "o_totalprice": F.when(moved, F.col("o_totalprice") + 1.0)
+            .otherwise(F.col("o_totalprice")),
+        }),
+    ]
+    lakes = {
+        "aggs": MedallionPipeline(spark, str(tmp_path / "aggs")),
+        "feature_join": MedallionPipeline(spark, str(tmp_path / "feature_join")),
+    }
+    for i, batch in enumerate(batches):
+        batch.write.parquet(str(tmp_path / f"b{i}" / "orders.parquet"))
+        for shape, pipe in lakes.items():
+            cfg = _pipeline_config(str(tmp_path / f"b{i}"))
+            cfg["silver"][1]["scd"]["as_of"] = f"2026-0{i + 1}-01 00:00:00"
+            pipe.run(cfg if shape == "aggs" else _feature_join_shape(cfg))
+
+    silver = {
+        shape: pipe.catalog.read("silver.cust_quarter")
+        for shape, pipe in lakes.items()
+    }
+    assert silver["aggs"].columns == silver["feature_join"].columns
+    got = _rows(lakes["aggs"].catalog, "silver.cust_quarter")
+    assert got == _rows(lakes["feature_join"].catalog, "silver.cust_quarter")
+
+    new_rows = [r for r in got if (r.o_custkey, r.quarter) == (new_cust, new_q)]
+    assert [str(r.effective_from) for r in new_rows] == ["2026-02-01 00:00:00"]
+    [(cust, quarter)] = {
+        (r.o_custkey, r.quarter) for r in got if r.o_orderkey == latest
+    }
+    versions = sorted(
+        (r for r in got if (r.o_custkey, r.quarter) == (cust, quarter)),
+        key=lambda r: r.effective_from,
+    )
+    assert [r.o_orderkey == latest for r in versions] == [True, False]
+    assert [r.is_current for r in versions] == [False, True]
+    assert ["/b0/" in versions[0].file_path, "/b2/" in versions[1].file_path] == [True, True]
 
 
 def _rows(cat, table):

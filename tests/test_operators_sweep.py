@@ -93,6 +93,78 @@ def test_scd_apply_duplicate_keys_commit_nothing(spark, tmp_path):
         assert data_dirs(table) == committed_dirs(table), table
 
 
+def test_dedup_by_key_aggs_match_window_dedup_plus_feature_join(spark):
+    """``dedup_by_key(..., aggs=)`` equals the plan it replaces: the
+    window dedup, a ``groupBy`` of the same table on the keys, and a
+    left join of the two. Covered: a mixed ``DESC``/``ASC`` keep-policy
+    with ties on ``a`` broken by ``b``, null ``a`` (NULLS LAST under
+    DESC) and null ``b`` (NULLS FIRST under ASC), one-row groups, and
+    the column order (keys, spine columns in input order, aggregates).
+    The folded plan shuffles once and joins nothing.
+
+    Contracts: a NULL-key group gets its real aggregates, where the
+    left join gave it NULL features; ``aggs`` without ``order_by``
+    raises ``ValueError``."""
+    import random
+
+    from end_to_end_etl_pipeline_spark.operators.dedup import dedup_by_key
+
+    rows = [
+        # p, k1, a, k2, b, v
+        ("tie-b2", "x", 5, 1, 2, 1.0),
+        ("tie-b1", "x", 5, 1, 1, 2.0),   # tie on a: lower b wins
+        ("older", "x", 3, 1, 0, 4.0),
+        ("null-a", "y", None, 1, 0, 1.5),  # NULLS LAST under DESC
+        ("a-wins", "y", 1, 1, 9, 2.5),
+        ("b-set", "z", 7, 2, 4, 3.0),
+        ("null-b", "z", 7, 2, None, 5.0),  # NULLS FIRST under ASC
+        ("alone", "w", None, 3, None, 7.0),  # one-row group
+        ("nk-1", None, 2, 1, 1, 10.0),   # NULL-key group
+        ("nk-2", None, 4, 1, 0, 20.0),
+    ]
+    rng = random.Random(7)
+    rows += [
+        (f"r{i}", rng.choice("stuv"), rng.choice([None, 1, 2, 3]),
+         rng.randint(1, 4), 100 + i, float(rng.randint(0, 9)))
+        for i in range(200)
+    ]
+    df = spark.createDataFrame(
+        rows, "p string, k1 string, a int, k2 int, b int, v double"
+    )
+    keys = ["k1", "k2"]
+    order = [F.col("a").desc(), F.col("b").asc()]
+    aggs = {"total": "sum(v)", "n": "count(1)", "top_p": "max(p)"}
+
+    out = dedup_by_key(df, keys, order_by=order, aggs=aggs)
+    plan = out._jdf.queryExecution().executedPlan().toString()  # unexecuted
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Join" not in plan, plan
+    ref = dedup_by_key(df, keys, order_by=order).join(
+        df.groupBy(*keys).agg(*[F.expr(e).alias(n) for n, e in aggs.items()]),
+        keys, "left",
+    )
+    assert out.columns == ref.columns == [
+        "k1", "k2", "p", "a", "b", "v", "total", "n", "top_p"
+    ]
+    got = out.collect()
+    assert len(got) == ref.count()
+    keyed = [r for r in got if r.k1 is not None]
+    assert sorted(keyed) == sorted(r for r in ref.collect() if r.k1 is not None)
+    spine = {(r.k1, r.k2): r.p for r in keyed}
+    assert spine[("x", 1)] == "tie-b1"
+    assert spine[("y", 1)] == "a-wins"
+    assert spine[("z", 2)] == "null-b"
+    assert spine[("w", 3)] == "alone"
+
+    (nk,) = [r for r in got if r.k1 is None]
+    assert (nk.p, nk.total, nk.n, nk.top_p) == ("nk-2", 30.0, 2, "nk-2")
+    (nk_ref,) = [r for r in ref.collect() if r.k1 is None]
+    assert nk_ref.p == "nk-2" and nk_ref.total is None
+
+    with pytest.raises(ValueError, match="order_by"):
+        dedup_by_key(df, keys, aggs=aggs)
+
+
 def test_approx_count_distinct_within_tolerance(spark):
     """The documented scale-out variant of exact countDistinct (A2):
     HLL sketch, mergeable map-side, no exact-distinct shuffle."""

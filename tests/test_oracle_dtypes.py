@@ -22,21 +22,13 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from end_to_end_etl_pipeline_spark.queries.catalog import (
-    DRIVER_WINDOW,
-    REGISTRY,
-)
+from end_to_end_etl_pipeline_spark.queries.catalog import REGISTRY
 from tests.oracle import run_oracle
 
 ORACLE_QUERIES = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
 
-# default run sweeps the driver window; the rest is FULL_SUITE-gated
-# (r13, VERDICT r12 #1 — same split as tests/test_oracle_parity.py)
-_WINDOW = set(DRIVER_WINDOW)
-DTYPE_PARAMS = [
-    n if n in _WINDOW else pytest.param(n, marks=pytest.mark.full_suite)
-    for n in ORACLE_QUERIES
-]
+# every oracle query runs by default (as in tests/test_oracle_parity.py),
+# so a window rotation moves no dtype row out of the default run
 
 
 def _col_kind(series: pd.Series) -> str:
@@ -74,7 +66,7 @@ def _col_kind(series: pd.Series) -> str:
     return k
 
 
-@pytest.mark.parametrize("name", DTYPE_PARAMS)
+@pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_pandas_dtypes_match(spark, sf_smoke_dir, name):
     q = REGISTRY[name]
     s_df = q.spark(spark, sf_smoke_dir).toPandas()

@@ -10,27 +10,18 @@ from __future__ import annotations
 
 import pytest
 
-from end_to_end_etl_pipeline_spark.queries.catalog import (
-    DRIVER_WINDOW,
-    REGISTRY,
-)
+from end_to_end_etl_pipeline_spark.queries.catalog import REGISTRY
 from tests.oracle import compare
 
 ORACLE_QUERIES = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
 ROWS_ONLY_QUERIES = sorted(n for n, q in REGISTRY.items() if q.oracle is None)
 
-# r13 (VERDICT r12 #1): by default sweep exactly the 50 queries the
-# driver's correctness gate reads (DRIVER_WINDOW) — the other ~129
-# registry queries run under SPARK_GRAFT_FULL_SUITE=1 (mandatory
-# in-round before any operator-library change ships; see conftest).
-_WINDOW = set(DRIVER_WINDOW)
-PARITY_PARAMS = [
-    n if n in _WINDOW else pytest.param(n, marks=pytest.mark.full_suite)
-    for n in ORACLE_QUERIES
-]
+# Every oracle query runs by default, not only the 50 of the
+# DRIVER_WINDOW: the window rotates every round, and a default run
+# that followed it would drop the rotated-out queries' parity rows.
 
 
-@pytest.mark.parametrize("name", PARITY_PARAMS)
+@pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_parity(spark, sf_correctness_dir, name):
     q = REGISTRY[name]
     df = q.spark(spark, sf_correctness_dir)

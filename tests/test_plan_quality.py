@@ -489,10 +489,12 @@ def test_scd2_write_is_the_only_job_and_broadcasts_nothing(
 ):
     """The flagship's ``silver.cust_quarter`` SCD2 build runs no job
     before its write: the duplicate-key check is a window inside the
-    write plan, not an aggregate job over the source. Its feature join
-    is a shuffle join over two sides already partitioned on the join
-    keys, so the write plan has no BroadcastExchange (a broadcast runs
-    the feature aggregate as a job of its own)."""
+    write plan, not an aggregate job over the source. The spine dedup
+    and its per-key aggregates share one shuffle, so the write plan
+    hash-partitions exactly twice (the source on its keys, the current
+    target) and joins once (the SCD2 full outer join): no feature
+    self-join, and no BroadcastExchange (a broadcast runs its side as a
+    job of its own)."""
     from end_to_end_etl_pipeline_spark.plans.medallion import MedallionPipeline
     from end_to_end_etl_pipeline_spark.queries.medallion_queries import (
         _pipeline_config,
@@ -517,6 +519,9 @@ def test_scd2_write_is_the_only_job_and_broadcasts_nothing(
     assert jobs_before_write == 0
     assert "raise_error" in write["plan"]
     assert "BroadcastExchange" not in write["plan"]
+    shuffles = re.findall(r"^Arguments: hashpartitioning\(", write["plan"], re.M)
+    joins = re.findall(r"^\(\d+\) \w*Join\b", write["plan"], re.M)
+    assert (len(shuffles), len(joins)) == (2, 1), write["plan"]
 
 
 def test_gopher_filter_single_pass_no_shuffle(spark):
