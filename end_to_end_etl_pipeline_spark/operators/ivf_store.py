@@ -12,8 +12,8 @@ dim rows, `replace_atomic`). Query = rank cells against the stored
 centroids, collect the probed cell ids (queries × nprobe ints —
 model-parameter scale, like the PQ codebooks), manifest-read exactly
 those bucket dirs, ADC on the stored codes, exact re-rank. Append,
-delete, compaction and rebalance keep the layout through the
-catalog's bucket helpers.
+compaction and rebalance keep the layout through the catalog's
+bucket helpers.
 """
 
 from __future__ import annotations
@@ -470,7 +470,7 @@ def rebalance_ivfpq_store(
 ) -> dict[int, list[int]]:
     """Split hot cells — the maintenance leg that keeps probed-cell
     pruning effective as appends concentrate (write → append → compact
-    → delete → REBALANCE): every cell whose manifest ``cell_counts``
+    → REBALANCE): every cell whose manifest ``cell_counts``
     exceeds ``max_cell_rows`` is 2-means-split
     (``pq_train(num_subspaces=1, num_centroids=2)`` over JUST that
     cell's rows — deterministic id%2 init + one Lloyd step,
@@ -495,7 +495,8 @@ def rebalance_ivfpq_store(
     append) reads centroids through :func:`_routing_centroids`, which
     overlays any pending patch — so a crash (or a failed refresh job)
     between the two commits leaves the new sub-cell fully routable,
-    and the next :func:`maybe_rebalance` folds the patch in. The only
+    and the next call folds the patch in on entry, before its hot-cell
+    check (one manifest read when nothing is pending). The only
     window is mid-commit concurrency: a query BETWEEN the CAS and its
     own manifest read routes by the old snapshot and simply never
     probes the NEW sub-cell id (an approximate-recall blip, the same
@@ -510,6 +511,9 @@ def rebalance_ivfpq_store(
     split (empty dict = nothing to do)."""
     from end_to_end_etl_pipeline_spark.operators.pq import pq_train
 
+    # the repair point for a predecessor that died between its data
+    # commit and its __centroids refresh
+    _apply_centroid_patch(catalog, table)
     while True:
         manifest = catalog.latest_manifest(table)
         if manifest is None or manifest.get("bucket_fn") != "identity":
@@ -619,7 +623,7 @@ def rebalance_ivfpq_store(
             return {}
         committed = catalog._commit_if(
             table,
-            catalog._carried(manifest, keep_schema=False)
+            catalog._carried(manifest)
             | {
                 "dirs": None,
                 "bucket_dirs": bucket_dirs,
@@ -641,38 +645,6 @@ def rebalance_ivfpq_store(
         # clear the marker (idempotent; overlay covers any crash here)
         _apply_centroid_patch(catalog, table)
         return split_map
-
-
-def maybe_rebalance(
-    catalog: ManifestCatalog,
-    table: str,
-    max_cell_rows: int,
-) -> dict[int, list[int]]:
-    """Rebalance POLICY (the :meth:`ManifestCatalog.maybe_optimize`
-    of cell balance): call after ingest (or from a foreachBatch) and
-    hot cells split until none exceeds ``max_cell_rows`` or four
-    passes ran — each pass at most halves the worst cell, so the pass
-    cap bounds the rewrite budget per ingest while quiet stores never
-    pay anything (the check is one manifest read).
-    Unsplittable cells (duplicate vectors) stop looping via the empty
-    split map. Returns the union of all passes' split maps: a cell
-    that splits in several passes accumulates every id it shed
-    ({5: [5, 9]} then a pass-2 resplit of 5 → {5: [5, 9, 12]}).
-
-    Also the REPAIR point for a crashed predecessor: a pending
-    ``centroid_patch`` left by a rebalance that died between its data
-    commit and its ``__centroids`` refresh is folded in first (one
-    manifest read when there is nothing pending)."""
-    _apply_centroid_patch(catalog, table)
-    out: dict[int, list[int]] = {}
-    for _ in range(4):
-        split = rebalance_ivfpq_store(catalog, table, max_cell_rows)
-        if not split:
-            break
-        for c, ids in split.items():
-            cur = out.setdefault(c, [c])
-            cur.extend(i for i in ids if i not in cur)
-    return out
 
 
 def _codebook_from_manifest(manifest: dict):
@@ -775,32 +747,3 @@ def ivfpq_store_topk(
         .select("query_id", "match_id", "l2sq")
     )
     return result, cells
-
-
-def delete_from_ivfpq_store(
-    catalog: ManifestCatalog, table: str, ids: list
-) -> int:
-    """Remove vectors from the persisted IVFADC index — the delete
-    leg of index maintenance (write → append → compact → DELETE):
-    a change-proportional bucket rewrite via
-    :meth:`ManifestCatalog.delete_bucketed_where` (deleting k ids
-    rewrites at most k cells' dirs; untouched cells survive
-    byte-for-byte), with the manifest's ``cell_counts`` decremented
-    in the SAME commit so the adaptive probe's metadata stays exact.
-    Centroids and codebook stay frozen, like append — the quantizer
-    never moves under existing rows.  Returns vectors removed."""
-    manifest = catalog.latest_manifest(table)
-    if manifest is None or manifest.get("bucket_fn") != "identity":
-        raise ValueError(
-            f"table {table} is not an IVF store (write_ivfpq_store first)"
-        )
-    id_col = manifest["ivf_id_col"]
-
-    def _dec(cur: dict, deleted_by_bucket: dict) -> dict:
-        counts = dict(cur.get("cell_counts") or {})
-        for b, c in deleted_by_bucket.items():
-            k = str(b)
-            counts[k] = max(0, int(counts.get(k, 0)) - int(c))
-        return {"cell_counts": counts}
-
-    return catalog.delete_bucketed_where(table, id_col, ids, extras_fn=_dec)

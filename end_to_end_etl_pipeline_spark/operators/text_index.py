@@ -161,12 +161,6 @@ def text_index_search(
     post = catalog.read(table, buckets=buckets).join(
         F.broadcast(uniq), "word", "left_semi"
     )
-    # tombstoned documents (delete_from_text_index) are filtered at
-    # read time — df is then derived from the SURVIVING postings, so
-    # scores are consistent with the decremented manifest stats
-    deleted = manifest.get("ti_deleted_ids") or []
-    if deleted:
-        post = post.filter(~F.col("doc_id").isin([int(d) for d in deleted]))
     # corpus stats live in the manifest (committed atomically with
     # the posting dirs) — two literals, no side-table read
     n_docs = int(manifest["ti_n_docs"])
@@ -199,84 +193,3 @@ def text_index_search(
         .select("query_id", "doc_id", "bm25")
     )
     return result, buckets
-
-
-def delete_from_text_index(
-    catalog: ManifestCatalog, table: str, doc_ids: list
-) -> int:
-    """Remove documents from the index — Lucene's two-phase model
-    (delete = MARK, merge = PURGE), because a doc's words hash into
-    every bucket: a physical delete would rewrite the whole index
-    for one document, while a tombstone is a metadata-only CAS
-    commit.  The doc ids join the manifest's ``ti_deleted_ids`` and
-    the corpus stats (n_docs, sum_dl) decrement by the docs ACTUALLY
-    present — one bucket-wide but column-pruned discovery scan —
-    in the SAME commit, so BM25's idf/avgdl stay exact immediately.
-    Queries filter tombstoned postings at read time; call
-    :func:`purge_text_index_tombstones` at compaction cadence (the
-    tombstone list is manifest metadata and should stay
-    model-parameter-sized between purges).  Single writer per index,
-    like append.  Returns documents removed."""
-    while True:
-        manifest = catalog.latest_manifest(table)
-        if manifest is None or "ti_n_docs" not in manifest:
-            raise ValueError(f"table {table} is not a text index (write first)")
-        already = {int(d) for d in (manifest.get("ti_deleted_ids") or [])}
-        todo = [int(i) for i in doc_ids if int(i) not in already]
-        if not todo:
-            return 0
-        per_doc = (
-            catalog.read(table)
-            .filter(F.col("doc_id").isin(todo))
-            .groupBy("doc_id")
-            .agg(F.first("dl").alias("dl"))
-            .collect()
-        )
-        if not per_doc:
-            return 0
-        n_rm = len(per_doc)
-        dl_rm = sum(int(r["dl"]) for r in per_doc)
-        extras = {k: v for k, v in manifest.items() if k != "version"}
-        extras["ti_deleted_ids"] = sorted(
-            already | {int(r["doc_id"]) for r in per_doc}
-        )
-        extras["ti_n_docs"] = int(manifest["ti_n_docs"]) - n_rm
-        extras["ti_sum_dl"] = int(manifest["ti_sum_dl"]) - dl_rm
-        if catalog._commit_if(table, extras, manifest["version"]):
-            return n_rm
-
-
-def purge_text_index_tombstones(catalog: ManifestCatalog, table: str) -> int:
-    """Physically drop tombstoned documents' postings (the MERGE half
-    of Lucene's delete model) and clear the tombstone list — run at
-    compaction cadence, when the one-time full-bucket rewrite is
-    being paid anyway.  Stats are already correct (decremented at
-    mark time); the rewrite only reclaims bytes and resets the
-    read-time filter.  Returns posting rows purged."""
-    manifest = catalog.latest_manifest(table)
-    if manifest is None or "ti_n_docs" not in manifest:
-        raise ValueError(f"table {table} is not a text index (write first)")
-    deleted = [int(d) for d in (manifest.get("ti_deleted_ids") or [])]
-    if not deleted:
-        return 0
-    return catalog.delete_bucketed_where(
-        table, "doc_id", deleted,
-        extras_fn=lambda cur, _by_bucket: {"ti_deleted_ids": []},
-    )
-
-
-def maybe_purge_text_index(catalog: ManifestCatalog, table: str) -> int:
-    """Tombstone-pressure policy, the deletion counterpart of
-    ``ManifestCatalog.maybe_optimize``: purge only once the tombstone
-    list exceeds 1,024 ids — below that, the read-time filter is
-    cheaper than a full-bucket rewrite, and the manifest stays
-    model-parameter-sized.  Call at the same cadence as compaction
-    (e.g. from a streaming bridge after N batches).
-    Returns posting rows purged (0 = below threshold or nothing
-    marked)."""
-    manifest = catalog.latest_manifest(table)
-    if manifest is None or "ti_n_docs" not in manifest:
-        raise ValueError(f"table {table} is not a text index (write first)")
-    if len(manifest.get("ti_deleted_ids") or []) <= 1024:
-        return 0
-    return purge_text_index_tombstones(catalog, table)

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,15 +32,17 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from end_to_end_etl_pipeline_spark.queries.catalog import load, register
+from end_to_end_etl_pipeline_spark.queries.catalog import (
+    load,
+    register,
+    scratch_root,
+)
 from end_to_end_etl_pipeline_spark.sources.readers import (
     read_csv,
     read_json,
     with_file_metadata,
     with_path_key,
 )
-
-SCRATCH = "/root/repo/.scratch/scan_fixtures"
 
 NATION_SCHEMA = StructType(
     [
@@ -65,8 +66,7 @@ def _json_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write nation as per-key multiline JSON:
     ``base/ingestion_date=2026-01-01/key=<nationkey>/data.json`` —
     the reference's S3 layout (``aws/ ch_ingest_company_overview_raw.py:62-67``)."""
-    base = os.path.join(SCRATCH, os.path.basename(sf_dir.rstrip("/")), "nation_json")
-    shutil.rmtree(base, ignore_errors=True)
+    base = os.path.join(scratch_root("scan_fixtures"), "nation_json")
     rows = load(spark, sf_dir, "nation").collect()  # 25-row dim: bounded
     for r in rows:
         d = os.path.join(base, "ingestion_date=2026-01-01", f"key={r.n_nationkey}")
@@ -118,9 +118,7 @@ def json_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("parity", "scans"),
 )
 def csv_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = os.path.join(
-        SCRATCH, os.path.basename(sf_dir.rstrip("/")), "supplier_csv"
-    )
+    base = os.path.join(scratch_root("scan_fixtures"), "supplier_csv")
     from end_to_end_etl_pipeline_spark.sinks.writers import write_csv
 
     supplier = load(spark, sf_dir, "supplier")
@@ -141,7 +139,7 @@ def orc_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from end_to_end_etl_pipeline_spark.sinks.writers import write_orc
     from end_to_end_etl_pipeline_spark.sources.readers import read_orc
 
-    base = os.path.join(SCRATCH, os.path.basename(sf_dir.rstrip("/")), "part_orc")
+    base = os.path.join(scratch_root("scan_fixtures"), "part_orc")
     part = load(spark, sf_dir, "part")
     write_orc(part, base)
     return read_orc(spark, base, part.schema)
@@ -164,9 +162,7 @@ def orc_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from end_to_end_etl_pipeline_spark.sources.readers import read_text_lines
 
-    base = os.path.join(
-        SCRATCH, os.path.basename(sf_dir.rstrip("/")), "documents_txt"
-    )
+    base = os.path.join(scratch_root("scan_fixtures"), "documents_txt")
     docs = load(spark, sf_dir, "documents").select("text")
     docs.write.mode("overwrite").text(base)
     lines = read_text_lines(spark, base)

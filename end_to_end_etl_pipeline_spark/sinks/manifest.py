@@ -215,11 +215,11 @@ class ManifestCatalog:
 
     Carry-forward rule (:meth:`_carried`): a commit derived from the
     previous version re-derives the dir layout (``dirs`` /
-    ``bucket_dirs``) and the per-dir metadata keyed by it (``stats``,
-    ``blooms``), and keeps every other key verbatim — bucket contract,
-    ``cloned_from``, store extras (``cell_counts``, ``ti_*``, replay
-    markers, ...). ``schema`` survives only a rewrite that cannot
-    retype a column.
+    ``bucket_dirs``), the per-dir metadata keyed by it (``stats``,
+    ``blooms``) and ``schema``, and keeps every other key verbatim —
+    bucket contract, ``cloned_from``, store extras (``cell_counts``,
+    ``ti_*``, replay markers, ...). Only a rewrite that cannot retype
+    a column records ``schema`` again.
     ``replace_atomic`` and ``optimize_zorder`` write their manifest
     whole; ``shallow_clone`` copies its source's.
 
@@ -394,16 +394,16 @@ class ManifestCatalog:
         return manifest
 
     #: keys every derived commit re-derives (see the class docstring)
-    _REDERIVED = ("version", "dirs", "bucket_dirs", "stats", "blooms")
+    _REDERIVED = ("version", "dirs", "bucket_dirs", "stats", "blooms", "schema")
 
     @classmethod
-    def _carried(cls, manifest: dict, keep_schema: bool) -> dict:
+    def _carried(cls, manifest: dict) -> dict:
         """The keys a commit derived from ``manifest`` carries forward.
-        ``keep_schema`` only when the rewrite holds the same rows under
-        the same types; a bucketed layout never records one (bucket
-        subdir reads drop the bucket column)."""
-        drop = cls._REDERIVED if keep_schema else (*cls._REDERIVED, "schema")
-        return {k: v for k, v in manifest.items() if k not in drop}
+        A rewrite that holds the same rows under the same types sets
+        ``schema`` again (:meth:`_commit_rewrite`); a bucketed layout
+        never records one (bucket subdir reads drop the bucket
+        column)."""
+        return {k: v for k, v in manifest.items() if k not in cls._REDERIVED}
 
     def _write_buckets(
         self,
@@ -1134,7 +1134,7 @@ class ManifestCatalog:
                 bucket_dirs.setdefault(b, []).extend(ds)
             if self._commit_if(
                 name,
-                self._carried(manifest, keep_schema=False)
+                self._carried(manifest)
                 | {"dirs": None, "bucket_dirs": bucket_dirs}
                 | (extras_update or {})
                 | (extras_fn(manifest) if extras_fn else {}),
@@ -1209,7 +1209,7 @@ class ManifestCatalog:
                 return 0  # blooms overapproved; nothing actually matched
             if self._commit_rewrite(
                 name, manifest, keep, affected,
-                kept_rows if after > 0 else None, keep_schema=True,
+                kept_rows if after > 0 else None, manifest.get("schema"),
             ):
                 return before - after
 
@@ -1240,14 +1240,15 @@ class ManifestCatalog:
         keep: Sequence[str],
         replaced: Sequence[str],
         rows: DataFrame | None,
-        keep_schema: bool,
+        schema: str | None,
     ) -> bool:
         """The plain-table row-rewrite commit (:meth:`delete_where`,
-        :meth:`update_where`, :meth:`delete_range`): the ``replaced``
-        dirs leave the manifest with their stats and blooms;
-        ``rows`` (None = nothing survives) land in one fresh
+        :meth:`update_where`, :meth:`delete_range`, :meth:`optimize`):
+        the ``replaced`` dirs leave the manifest with their stats and
+        blooms; ``rows`` (None = nothing survives) land in one fresh
         dir with stats and blooms over the column sets the replaced
-        dirs had; the new version lists ``keep`` + that dir. CAS on
+        dirs had; the new version lists ``keep`` + that dir and
+        records ``schema`` (None = readers infer footers). CAS on
         ``manifest``'s version — False means a concurrent commit won
         and the caller re-plans against the new latest (the written
         dir is an orphan :meth:`vacuum` collects)."""
@@ -1269,17 +1270,15 @@ class ManifestCatalog:
                 blooms[data_dir] = self._dir_blooms(
                     data_dir, bloom_cols, rows.schema
                 )
-        return self._commit_if(
-            name,
-            self._carried(manifest, keep_schema)
-            | {
-                "dirs": dirs,
-                "bucket_dirs": None,
-                "stats": stats or None,
-                "blooms": blooms or None,
-            },
-            manifest["version"],
-        ) is not None
+        new = self._carried(manifest) | {
+            "dirs": dirs,
+            "bucket_dirs": None,
+            "stats": stats or None,
+            "blooms": blooms or None,
+        }
+        if schema is not None:
+            new["schema"] = schema
+        return self._commit_if(name, new, manifest["version"]) is not None
 
     def shallow_clone(self, src: str, dst: str) -> int:
         """Zero-copy snapshot publication (Delta's ``SHALLOW CLONE``):
@@ -1353,7 +1352,7 @@ class ManifestCatalog:
             )
             # a set expression may retype a column: drop the schema
             if self._commit_rewrite(
-                name, manifest, keep, affected, out, keep_schema=False
+                name, manifest, keep, affected, out, schema=None
             ):
                 return updated
 
@@ -1423,108 +1422,22 @@ class ManifestCatalog:
             if deleted == 0:
                 return 0  # nothing matched anywhere; state unchanged
             if self._commit_rewrite(
-                name, manifest, keep, drop + rewrite, rows, keep_schema=True
+                name, manifest, keep, drop + rewrite, rows,
+                manifest.get("schema"),
             ):
                 return deleted
 
-    def delete_bucketed_where(
-        self, name: str, col: str, values: Sequence, extras_fn=None
-    ) -> int:
-        """Targeted row delete on a BUCKETED table (the index-
-        maintenance counterpart of :meth:`delete_where` — e.g.
-        removing vectors from the IVF store or signatures from the
-        dedup store): rewrite ONLY the buckets that actually hold
-        matching rows, replacing each affected bucket's dir list with
-        one compacted dir; every other bucket's dirs survive
-        byte-for-byte.
-
-        Discovery is one column-pruned scan (key columns only) that
-        recomputes each row's bucket from the manifest's bucket
-        contract (``identity`` / ``hash_pmod`` over ``bucket_keys``),
-        so affected buckets and exact per-bucket delete counts come
-        from a single job — deleting k rows then rewrites at most k
-        buckets, change-proportional like every other maintenance op
-        here.
-
-        ``extras_fn(manifest, deleted_by_bucket) -> dict`` merges
-        store-specific metadata into the SAME commit (the IVF store
-        decrements its ``cell_counts`` this way) and is evaluated
-        inside the CAS loop against the current manifest.  If a
-        concurrent append lands in an AFFECTED bucket between read
-        and commit, the whole delete restarts against the new state
-        (replacing that bucket's dirs would silently drop the
-        concurrent rows); appends to other buckets merge fine.
-        Returns rows deleted."""
-        # NULL values cannot match by equality, but a NULL inside an
-        # IN-list poisons the KEEP filter: for every non-matching row
-        # ``x IN (ids..., NULL)`` is NULL, ``~NULL`` is NULL, and the
-        # rewrite would silently drop (nearly) the whole table — so
-        # strip them up front
-        values = [v for v in values if v is not None]
-        if not values:
-            return 0
-        while True:
-            manifest = self._require_manifest(name)
-            if manifest.get("bucket_dirs") is None:
-                raise ValueError(
-                    f"table {name} is unbucketed — use delete_where"
-                )
-            matches = self.read(name).filter(F.col(col).isin(values))
-            per_bucket = {
-                int(r["b"]): int(r["c"])
-                for r in matches.groupBy(bucket_id(*_layout(manifest)).alias("b"))
-                .agg(F.count(F.lit(1)).alias("c"))
-                .collect()
-            }
-            if not per_bucket:
-                return 0
-            affected = sorted(per_bucket)
-            base_lists = {
-                str(b): list(manifest["bucket_dirs"].get(str(b), []))
-                for b in affected
-            }
-            kept = self.read(name, buckets=affected).filter(
-                F.col(col).isNull() | ~F.col(col).isin(values)
-            )
-            written = self._write_buckets(kept, name, *_layout(manifest))
-            while True:
-                cur = self.latest_manifest(name)
-                if any(
-                    list(cur["bucket_dirs"].get(b, [])) != ds
-                    for b, ds in base_lists.items()
-                ):
-                    break  # an affected bucket moved under us: restart
-                bucket_dirs = cur["bucket_dirs"] | {
-                    b: written.get(b, []) for b in base_lists
-                }
-                if self._commit_if(
-                    name,
-                    self._carried(cur, keep_schema=False)
-                    | {"dirs": None, "bucket_dirs": bucket_dirs}
-                    | (extras_fn(cur, per_bucket) if extras_fn else {}),
-                    cur["version"],
-                ):
-                    return sum(per_bucket.values())
-
     # -- maintenance ----------------------------------------------------
-    def optimize(
-        self,
-        name: str,
-        cluster_by: Sequence[str] | None = None,
-        target_partitions: int | None = None,
-        stats_cols: Sequence[str] | None = None,
-        bloom_cols: Sequence[str] | None = None,
-    ) -> None:
-        """K8 — compaction (+ optional clustering): rewrite the
-        current table state into one fresh data dir, sorted within
-        partitions on ``cluster_by`` so parquet row-group min/max
-        stats give data skipping (the OPTIMIZE/ZORDER stand-in,
-        reference ``medallion/gold/s2g.py:98-101``). Readers are
-        never disturbed: old dirs stay referenced by old manifests
-        until :meth:`vacuum`. Per-dir manifest stats are keyed by the
-        (now replaced) old dirs, so pass ``stats_cols`` to recompute
-        them for the compacted dir — otherwise manifest-level data
-        skipping is off until the next stats-producing write.
+    def optimize(self, name: str) -> None:
+        """K8 — compaction: rewrite the current table state into fresh
+        data dirs (one per bucket on a bucketed table, one on a plain
+        table). Readers are never disturbed: old dirs stay referenced
+        by old manifests until :meth:`vacuum`. A plain table's
+        compacted dir gets stats and blooms over the column sets the
+        dirs it replaces had (the :meth:`_commit_rewrite` rule), so
+        manifest-level data skipping survives compaction; a bucketed
+        table skips by bucket pruning. :meth:`optimize_zorder` is the
+        OPTIMIZE/ZORDER stand-in.
 
         Compacted content is exactly the base version's rows, so the
         publish is a compare-and-swap on that base: a concurrent
@@ -1536,58 +1449,28 @@ class ManifestCatalog:
         while True:
             manifest = self._require_manifest(name)
             base = manifest["version"]
-            bucketed = manifest.get("bucket_dirs") is not None
-            if bucketed and (stats_cols or bloom_cols):
-                # bucketed tables skip via bucket pruning, not manifest
-                # stats/blooms (append_bucketed records neither) — a
-                # silently ignored kwarg would read as "skipping is on"
-                raise ValueError(
-                    f"table {name} is bucketed: stats_cols/bloom_cols do "
-                    "not apply (bucket pruning is its data-skipping "
-                    "mechanism)"
-                )
             # pin the scan to the base version: reading "latest" could
             # silently span a concurrent commit and desync from the CAS
             df = self.read(name, version=base)
-            if cluster_by:
-                n = target_partitions or self.spark.sparkContext.defaultParallelism
-                df = df.repartition(n, *cluster_by).sortWithinPartitions(*cluster_by)
-            elif target_partitions:
-                df = df.coalesce(target_partitions)
+            if manifest.get("bucket_dirs") is None:
+                if self._commit_rewrite(
+                    name, manifest, [], self._dirs(manifest), df,
+                    schema=df.schema.json(),
+                ):
+                    return
+                continue
             # the carried bucket contract (bucket_fn, keys) is what
             # re-buckets the rows: bucket subdir reads drop the bucket
             # column, and an identity-bucketed store must not revert
             # to the default hash contract
-            new = self._carried(manifest, keep_schema=False)
-            if bucketed:
-                new["dirs"] = None
-                new["bucket_dirs"] = self._write_buckets(
-                    df, name, *_layout(manifest)
-                )
-            else:
-                data_dir = self._new_data_dir(name)
-                df.write.mode("overwrite").parquet(data_dir)
-                new |= {
-                    "dirs": [data_dir], "bucket_dirs": None, "n_buckets": None,
-                    "schema": df.schema.json(),
-                }
-                if stats_cols:
-                    new["stats"] = {
-                        data_dir: self._dir_stats(data_dir, stats_cols, df.schema)
-                    }
-                if bloom_cols:
-                    new["blooms"] = {
-                        data_dir: self._dir_blooms(data_dir, bloom_cols, df.schema)
-                    }
+            new = self._carried(manifest) | {
+                "dirs": None,
+                "bucket_dirs": self._write_buckets(df, name, *_layout(manifest)),
+            }
             if self._commit_if(name, new, base):
                 return
 
-    def maybe_optimize(
-        self,
-        name: str,
-        max_dirs: int = 16,
-        **optimize_kwargs,
-    ) -> bool:
+    def maybe_optimize(self, name: str, max_dirs: int = 16) -> bool:
         """Compaction POLICY: run :meth:`optimize` only when the table
         has fragmented past ``max_dirs`` — the small-files trigger
         every append-heavy lakehouse table needs (Delta's
@@ -1601,12 +1484,9 @@ class ManifestCatalog:
         Fragmentation measure: plain tables count manifest data dirs;
         bucketed tables count the WORST bucket's dir list (appends
         fragment per touched bucket, and a read probes one bucket —
-        the per-probe cost is what the policy must bound).
-        ``optimize_kwargs`` pass through (cluster_by /
-        target_partitions; stats_cols / bloom_cols for PLAIN tables —
-        optimize refuses them on bucketed tables, whose skipping is
-        bucket pruning). Returns True iff a rewrite ran.
-        Concurrency-safe: the underlying optimize CAS-rebases."""
+        the per-probe cost is what the policy must bound). Returns
+        True iff a rewrite ran. Concurrency-safe: the underlying
+        optimize CAS-rebases."""
         manifest = self._require_manifest(name)
         bucket_dirs = manifest.get("bucket_dirs")
         if bucket_dirs:
@@ -1615,7 +1495,7 @@ class ManifestCatalog:
             frag = len(manifest.get("dirs") or [])
         if frag <= max_dirs:
             return False
-        self.optimize(name, **optimize_kwargs)
+        self.optimize(name)
         return True
 
     def optimize_zorder(
@@ -1628,9 +1508,9 @@ class ManifestCatalog:
         clustered on the 8-bit-per-column Morton key of ``cols`` (see
         :mod:`sinks.zorder`), split into 8 key-range data dirs, each
         with min/max stats on ``stats_cols`` (default: the clustered
-        columns). Unlike ``optimize(cluster_by=...)``'s linear sort —
-        which skips on the leading column only — every clustered
-        column gets manifest-level data skipping via
+        columns). Unlike a linear sort — which skips on the leading
+        column only — every clustered column gets manifest-level data
+        skipping via
         :meth:`read_range` / :meth:`pruned_dirs`. Not for bucketed
         tables (their dir layout is the bucket map)."""
         from end_to_end_etl_pipeline_spark.sinks.zorder import BITS, zorder_key

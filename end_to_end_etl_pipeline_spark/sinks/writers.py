@@ -3,7 +3,7 @@
 The reference writes managed Delta tables on Databricks. Delta's jars
 are not on this classpath, so table commits go through
 ``sinks/manifest.py:ManifestCatalog`` (versioned-manifest commits,
-its ``optimize(cluster_by=…)`` is the K8 OPTIMIZE/ZORDER stand-in).
+its ``optimize_zorder`` is the K8 OPTIMIZE/ZORDER stand-in).
 This module holds the two file exports the scan queries round-trip
 (K7): headered CSV and ORC. Plain overwrite/append/partitioned
 writes need no wrapper — ``df.write`` is the whole operator.

@@ -1,8 +1,8 @@
 """Z-order (Morton) multi-dimensional clustering — the real
 interleaved-bit version of the reference's ``OPTIMIZE ... ZORDER BY``
-(K8, ``medallion/gold/s2g.py:98-101,151-154``), which
-``ManifestCatalog.optimize(cluster_by=...)`` only approximates with a
-linear sort.
+(K8, ``medallion/gold/s2g.py:98-101,151-154``), run by
+``ManifestCatalog.optimize_zorder``. A linear sort only approximates
+it.
 
 Why interleave: a linear sort on (x, y) gives min/max data skipping
 on x but leaves y scattered across every file. Mapping each row to

@@ -114,112 +114,6 @@ def test_store_cell_counts_metadata_and_adaptive_probe(spark, tmp_path):
     assert got.count() == 3 * 5
 
 
-def test_ivf_store_delete_is_change_proportional_and_exact(spark, tmp_path):
-    """Deleting vectors from the IVFADC store rewrites only the cells
-    that held them (other cells' dirs survive verbatim), decrements
-    cell_counts in the same commit, and the store then answers
-    queries exactly like a write-once store built without those
-    vectors (same frozen quantizer)."""
-    from end_to_end_etl_pipeline_spark.operators.ivf_store import (
-        delete_from_ivfpq_store,
-        ivfpq_store_topk,
-        write_ivfpq_store,
-    )
-    from end_to_end_etl_pipeline_spark.operators.pq import pq_train
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    dim = len(emb.first().embedding)
-    cb = pq_train(emb, "vec_id", "embedding", num_subspaces=8, num_centroids=8)
-    cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
-    write_ivfpq_store(cat, emb, "vec_id", "embedding", "label", cb,
-                      "ann.pq", dim=dim)
-    m0 = cat.latest_manifest("ann.pq")
-    # ids from exactly two cells
-    victims = [r["vec_id"] for r in
-               emb.filter(F.col("label").isin(0, 1)).orderBy("vec_id")
-               .limit(4).collect()]
-    victim_cells = {r["label"] for r in
-                    emb.filter(F.col("vec_id").isin(victims)).collect()}
-    n = delete_from_ivfpq_store(cat, "ann.pq", victims)
-    assert n == len(victims)
-    m1 = cat.latest_manifest("ann.pq")
-    for b, ds in m0["bucket_dirs"].items():
-        if int(b) not in victim_cells:
-            assert m1["bucket_dirs"][b] == ds, f"cell {b} rewritten needlessly"
-    # counts decremented exactly
-    per_cell = {str(r["label"]): r["n"] for r in
-                emb.filter(F.col("vec_id").isin(victims))
-                .groupBy("label").agg(F.count("*").alias("n")).collect()}
-    for b, c in per_cell.items():
-        assert m1["cell_counts"][b] == m0["cell_counts"][b] - c
-    # equivalence to a write-once store without the victims, same
-    # frozen quantizer (pin the centroids side table)
-    once = ManifestCatalog(spark, f"file://{tmp_path}/once")
-    write_ivfpq_store(once, emb.filter(~F.col("vec_id").isin(victims)),
-                      "vec_id", "embedding", "label", cb, "ann.pq", dim=dim)
-    once.replace_atomic(cat.read("ann.pq__centroids"), "ann.pq__centroids")
-    queries = emb.orderBy("vec_id").limit(3)
-    got, _ = ivfpq_store_topk(cat, "ann.pq", queries, "vec_id", "embedding",
-                              nprobe=3)
-    want, _ = ivfpq_store_topk(once, "ann.pq", queries, "vec_id", "embedding",
-                               nprobe=3)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    # deleted ids never come back
-    assert not set(r["match_id"] for r in got.collect()) & set(victims)
-
-
-def test_text_index_tombstone_delete_and_purge(spark, tmp_path):
-    """Mark-then-purge deletion on the inverted index: after the mark,
-    search scores equal a fresh index built WITHOUT the docs (stats
-    decremented + read-time filter); after the purge the postings are
-    physically gone, the tombstone list is empty, and results are
-    unchanged."""
-    from end_to_end_etl_pipeline_spark.operators.text_index import (
-        delete_from_text_index,
-        purge_text_index_tombstones,
-        text_index_search,
-        write_text_index,
-    )
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
-
-    docs = spark.createDataFrame(
-        [
-            (1, "spark shuffles data fast"),
-            (2, "spark caches data"),
-            (3, "ducks swim on water"),
-            (4, "spark spark spark streams"),
-        ],
-        "doc_id bigint, text string",
-    )
-    queries = spark.createDataFrame([(0, "spark")], "query_id bigint, word string")
-
-    cat = ManifestCatalog(spark, f"file://{tmp_path}/a")
-    write_text_index(cat, docs, "doc_id", "text", "idx", n_buckets=8)
-    n = delete_from_text_index(cat, "idx", [2, 999])
-    assert n == 1  # 999 absent
-    m = cat.latest_manifest("idx")
-    assert m["ti_deleted_ids"] == [2]
-    assert m["ti_n_docs"] == 3 and m["ti_sum_dl"] == 4 + 4 + 4  # doc2's 3 gone
-
-    fresh = ManifestCatalog(spark, f"file://{tmp_path}/b")
-    write_text_index(fresh, docs.filter("doc_id <> 2"), "doc_id", "text",
-                     "idx", n_buckets=8)
-    got, _ = text_index_search(cat, "idx", queries)
-    want, _ = text_index_search(fresh, "idx", queries)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    purged = purge_text_index_tombstones(cat, "idx")
-    assert purged > 0
-    m2 = cat.latest_manifest("idx")
-    assert m2["ti_deleted_ids"] == []
-    assert cat.read("idx").filter("doc_id = 2").count() == 0
-    got2, _ = text_index_search(cat, "idx", queries)
-    assert sorted(map(tuple, got2.collect())) == sorted(map(tuple, want.collect()))
-    # idempotent re-delete is a no-op
-    assert delete_from_text_index(cat, "idx", [2]) == 0
-
-
 def test_dedup_store_delete_unremembers_docs(spark, tmp_path):
     """Deleting a doc's signatures makes the store accept its
     near-dups again (the un-ingest contract)."""
@@ -248,29 +142,3 @@ def test_dedup_store_delete_unremembers_docs(spark, tmp_path):
     assert acc3.count() == 1 and rej3.count() == 0
     # absent id delete is a no-op
     assert store.delete([999]) == 0
-
-
-def test_maybe_purge_text_index_threshold(spark, tmp_path):
-    from end_to_end_etl_pipeline_spark.operators.text_index import (
-        delete_from_text_index,
-        maybe_purge_text_index,
-        write_text_index,
-    )
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
-
-    docs = spark.createDataFrame(
-        [(i, f"word{i} common text") for i in range(1030)],
-        "doc_id bigint, text string",
-    )
-    cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
-    write_text_index(cat, docs, "doc_id", "text", "idx", n_buckets=4)
-    delete_from_text_index(cat, "idx", [0, 1])
-    # under the 1,024-tombstone threshold: no rewrite, tombstones remain
-    assert maybe_purge_text_index(cat, "idx") == 0
-    assert cat.latest_manifest("idx")["ti_deleted_ids"] == [0, 1]
-    # over threshold (1,025 tombstones): physical purge, list cleared
-    delete_from_text_index(cat, "idx", list(range(2, 1025)))
-    assert maybe_purge_text_index(cat, "idx") > 0
-    m = cat.latest_manifest("idx")
-    assert m["ti_deleted_ids"] == []
-    assert cat.read("idx").filter("doc_id < 1025").count() == 0

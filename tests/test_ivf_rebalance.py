@@ -138,26 +138,6 @@ def test_rebalance_rejects_non_ivf_table(spark, tmp_path):
         rebalance_ivfpq_store(cat, "plain.t", max_cell_rows=1)
 
 
-def test_maybe_rebalance_loops_until_balanced_and_is_idempotent(spark, tmp_path):
-    from end_to_end_etl_pipeline_spark.operators.ivf_store import (
-        maybe_rebalance,
-    )
-
-    cat, emb = _skewed_store(spark, tmp_path, n=86)  # hot cell: 80 rows
-    # threshold 25: one split leaves ~40-row halves (still hot), so
-    # the policy must take MULTIPLE passes to settle
-    splits = maybe_rebalance(cat, "rb.t", max_cell_rows=25)
-    assert len(splits) >= 2
-    m = cat.latest_manifest("rb.t")
-    counts = {int(k): int(v) for k, v in m["cell_counts"].items()}
-    assert sum(counts.values()) == 86
-    assert max(counts.values()) <= 25
-    # quiet store: second call is a no-op (one manifest read, no commit)
-    v = m["version"]
-    assert maybe_rebalance(cat, "rb.t", max_cell_rows=max(counts.values())) == {}
-    assert cat.latest_manifest("rb.t")["version"] == v
-
-
 def test_crash_between_commit_and_refresh_is_recoverable(
     spark, tmp_path, monkeypatch
 ):
@@ -165,7 +145,8 @@ def test_crash_between_commit_and_refresh_is_recoverable(
     __centroids refresh (the ADVICE r06 durable-orphan scenario): the
     new sub-cell id exists only in the manifest + its centroid_patch.
     Queries must still probe it (patch overlay), and the next
-    maybe_rebalance must repair the side table and clear the marker."""
+    rebalance must repair the side table and clear the marker on
+    entry, even when no cell is hot."""
     import end_to_end_etl_pipeline_spark.operators.ivf_store as ivf
 
     cat, emb = _skewed_store(spark, tmp_path)
@@ -220,12 +201,9 @@ def test_crash_between_commit_and_refresh_is_recoverable(
     m2 = cat.latest_manifest("rb.t")
     assert int(m2["cell_counts"][expect]) == int(m["cell_counts"][expect]) + 1
 
-    # repair: maybe_rebalance folds the patch in and clears the marker
-    from end_to_end_etl_pipeline_spark.operators.ivf_store import (
-        maybe_rebalance,
-    )
-
-    maybe_rebalance(cat, "rb.t", max_cell_rows=10_000)
+    # repair: a rebalance with no hot cell still folds the patch in
+    # and clears the marker
+    assert rebalance_ivfpq_store(cat, "rb.t", max_cell_rows=10_000) == {}
     m3 = cat.latest_manifest("rb.t")
     assert not m3.get("centroid_patch")
     healed = {
@@ -294,7 +272,7 @@ def test_concurrent_patch_entries_survive_the_clear(spark, tmp_path, monkeypatch
 def test_maybe_rebalance_racing_appends(spark, tmp_path):
     """VERDICT r08 #6, the third named maintenance op: writer A
     streams append_ivfpq_store batches while writer B loops
-    maybe_rebalance from a SEPARATE catalog instance. Rebalance
+    rebalance_ivfpq_store from a SEPARATE catalog instance. Rebalance
     rewrites hot cells' dirs while appends CAS-merge new dirs into
     the same bucket map — the interleavings that could lose a batch,
     double-apply a split patch, or desync cell_counts. Invariants
@@ -307,7 +285,6 @@ def test_maybe_rebalance_racing_appends(spark, tmp_path):
 
     from end_to_end_etl_pipeline_spark.operators.ivf_store import (
         append_ivfpq_store,
-        maybe_rebalance,
     )
 
     cat_a, emb = _skewed_store(spark, tmp_path, n=60)
@@ -336,7 +313,7 @@ def test_maybe_rebalance_racing_appends(spark, tmp_path):
     def run_rebalance() -> None:
         try:
             for _ in range(3):
-                maybe_rebalance(cat_b, "rb.t", max_cell_rows=20)
+                rebalance_ivfpq_store(cat_b, "rb.t", max_cell_rows=20)
         except Exception as e:
             errors.append(("rebalance", e))
 

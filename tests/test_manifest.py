@@ -86,7 +86,7 @@ def test_optimize_compacts_and_vacuum_collects(spark, cat):
     orphan = cat._new_data_dir("t")
     _df(spark, [(99, "zz")]).write.parquet(orphan)
 
-    cat.optimize("t", cluster_by=["k"], target_partitions=1)
+    cat.optimize("t")
     assert len(cat.latest_manifest("t")["dirs"]) == 1
     assert sorted(r.k for r in cat.read("t").collect()) == [1, 2, 3]
 
@@ -402,11 +402,34 @@ def test_optimize_recomputes_stats(spark, cat):
                                   "k int, v string"),
             "skip.opt", stats_cols=["k"],
         )
-    cat.optimize("skip.opt", cluster_by=["k"], target_partitions=1,
-                 stats_cols=["k"])
+    cat.optimize("skip.opt")
     m = cat.latest_manifest("skip.opt")
     assert m["stats"] and list(m["stats"].values())[0]["k"] == [0, 19]
     assert sorted(r.k for r in cat.read_range("skip.opt", "k", 5, 6).collect()) == [5, 6]
+
+
+def test_optimize_keeps_data_skipping(spark, cat):
+    """A bare compaction builds stats and blooms for its dir over the
+    columns the dirs it replaces had, so range and point reads still
+    prune to the compacted dir."""
+    for lo in (0, 10):
+        cat.append(
+            spark.createDataFrame([(k, f"v{k}") for k in range(lo, lo + 10)],
+                                  "k int, v string"),
+            "skip.keep", stats_cols=["k"], bloom_cols=["k"],
+        )
+    cat.optimize("skip.keep")
+    m = cat.latest_manifest("skip.keep")
+    [d] = m["dirs"]
+    assert m["stats"] == {d: {"k": [0, 19]}}
+    assert list(m["blooms"]) == [d] and list(m["blooms"][d]) == ["k"]
+    assert cat.pruned_dirs("skip.keep", "k", 5, 6) == [d]
+    assert cat.pruned_dirs("skip.keep", "k", 50, 60) == []
+    assert sorted(r.k for r in cat.read_range("skip.keep", "k", 5, 6).collect()) == [5, 6]
+    assert cat.bloom_pruned_dirs("skip.keep", "k", 17) == [d]
+    assert cat.bloom_pruned_dirs("skip.keep", "k", 1000) == []
+    assert [r.v for r in cat.read_point("skip.keep", "k", 17).collect()] == ["v17"]
+    assert cat.read_point("skip.keep", "k", 1000).count() == 0
 
 
 def test_optimize_survives_append_during_data_dir_write(spark, cat):
@@ -434,7 +457,7 @@ def test_optimize_survives_append_during_data_dir_write(spark, cat):
 
     cat._new_data_dir = hook
     try:
-        cat.optimize("t", target_partitions=1)
+        cat.optimize("t")
     finally:
         cat._new_data_dir = orig_new_dir
     assert sorted(r.k for r in cat.read("t").collect()) == [1, 2, 3]
@@ -738,16 +761,12 @@ def test_maybe_optimize_policy_triggers_on_fragmentation(spark, cat):
     m = cat.latest_manifest("mo.b")
     assert all(len(ds) == 1 for ds in m["bucket_dirs"].values() if ds)
     assert cat.read("mo.b").count() == 4
-    # bucketed tables skip via bucket pruning — stats/bloom kwargs are
-    # refused loudly, never silently ignored
-    with pytest.raises(ValueError, match="bucketed"):
-        cat.optimize("mo.b", bloom_cols=["k"])
 
 
 def test_bloom_survives_optimize_recompute(spark, cat):
-    """Compaction drops dir-keyed blooms (dead dirs); passing
-    bloom_cols recomputes them for the compacted dir and point
-    lookups keep pruning correctly."""
+    """Compaction drops the replaced dirs' blooms and builds them over
+    the same columns for the compacted dir, so point lookups keep
+    pruning correctly."""
     for lo in (0, 500):
         cat.append(
             spark.createDataFrame(
@@ -755,7 +774,7 @@ def test_bloom_survives_optimize_recompute(spark, cat):
             ),
             "blo.t", bloom_cols=["key"],
         )
-    cat.optimize("blo.t", bloom_cols=["key"])
+    cat.optimize("blo.t")
     m = cat.latest_manifest("blo.t")
     assert len(m["dirs"]) == 1 and set(m["blooms"]) == set(m["dirs"])
     assert [r.key for r in cat.read_point("blo.t", "key", "k510").collect()] == ["k510"]
@@ -951,18 +970,6 @@ def test_delete_where_null_value_in_list_is_stripped(spark, tmp_path):
     assert cat.delete_where("t", "k", [None]) == 0
 
 
-def test_delete_bucketed_null_value_stripped(spark, tmp_path):
-    from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
-
-    cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
-    df = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(10)], "k bigint, v string"
-    )
-    cat.append_bucketed(df, "t", 4, ["k"])
-    assert cat.delete_bucketed_where("t", "k", [2, None]) == 1
-    assert cat.read("t").count() == 9
-
-
 def test_update_where_rewrites_only_bloomed_dirs(spark, tmp_path):
     """Targeted UPDATE: matching rows get the set-expressions (which
     may reference the row's own columns), non-matching rows and
@@ -1133,10 +1140,13 @@ def test_column_type_cache_invalidated_on_replace(spark, cat):
     assert cat.read_point("retype.t", "key", 7).count() == 1  # caches int
 
     cat.replace_atomic(
-        spark.createDataFrame([("7", "a"), ("zz", "b")], "key string, v string"),
-        "retype.t",
+        spark.createDataFrame([("7", "a")], "key string, v string"), "retype.t"
     )
-    cat.optimize("retype.t", bloom_cols=["key"])
+    cat.append(
+        spark.createDataFrame([("zz", "b")], "key string, v string"),
+        "retype.t", bloom_cols=["key"],
+    )
+    cat.optimize("retype.t")
     got = cat.read_point("retype.t", "key", "zz").collect()
     assert [r.key for r in got] == ["zz"]
     assert [r.key for r in cat.read_point("retype.t", "key", "7").collect()] == ["7"]
@@ -1339,8 +1349,10 @@ def test_schema_kept_only_by_same_row_rewrites(spark, tmp_path, run_counted):
         return "schema" in m
 
     rows = [(i, f"v{i}") for i in range(20)]
-    cat.replace_atomic(spark.createDataFrame(rows, "k bigint, v string"), "t")
-    cat.optimize("t", stats_cols=["k"], bloom_cols=["k"])
+    cat.append(spark.createDataFrame(rows, "k bigint, v string"), "t",
+               stats_cols=["k"], bloom_cols=["k"])
+    assert not has("t")
+    cat.optimize("t")
     assert has("t")
     # a bloom probe takes the column type from the recorded schema
     dirs, jobs, _ = run_counted(lambda: cat.bloom_pruned_dirs("t", "k", 5))
@@ -1364,7 +1376,7 @@ def test_schema_kept_only_by_same_row_rewrites(spark, tmp_path, run_counted):
         assert cat.latest_manifest("snap")["cloned_from"] == origin
     assert cat.update_where("t", "k", [4], {"v": F.upper("v")}) == 1
     assert not has("t")
-    cat.optimize("t", stats_cols=["k"])
+    cat.optimize("t")
     assert has("t")
     assert sorted(r.k for r in cat.read("t").collect()) == [
         k for k in range(15) if k != 3
@@ -1384,7 +1396,6 @@ def test_schema_kept_only_by_same_row_rewrites(spark, tmp_path, run_counted):
     assert not has("bk")
     for rewrite in (
         lambda: cat.append_bucketed(bdf, "bk", 4, ["k"]),
-        lambda: cat.delete_bucketed_where("bk", "k", [1]),
         lambda: cat.optimize("bk"),
     ):
         rewrite()

@@ -18,7 +18,9 @@ Fuzzed semantics the model pins:
   classify as "wholly inside" the range;
 * update_where applies set expressions to matching rows only, and
   may touch a stats/bloom column without breaking later pruning;
-* optimize/vacuum never change visible content; vacuum keeps the
+* optimize/vacuum never change visible content, and optimize keeps
+  the replaced dirs' stats/bloom columns for its compacted dir;
+  vacuum keeps the
   latest version time-travelable and byte-identical to the model
   snapshot taken when that version committed;
 * stats/bloom attachment is randomized per append, so every mutation
@@ -27,11 +29,9 @@ Fuzzed semantics the model pins:
 
 The BUCKETED surface — what the IVF / dedup-store / text-index stores
 sit on — gets its own sequence generator (identity-bucketed on
-cell = id%5): append_bucketed / delete_bucketed_where / optimize /
-vacuum / bucket-pruned reads / time travel against the same model,
-including the NULL-in-values and absent-key delete probes and the
-invariant that a single-bucket read equals the model filtered to that
-cell.
+cell = id%5): append_bucketed / optimize / vacuum / bucket-pruned
+reads / time travel against the same model, including the invariant
+that a single-bucket read equals the model filtered to that cell.
 
 Sequences are Arrow-native (pandas-sourced local frames): a
 Python-list createDataFrame executes through pickled-RDD Python
@@ -177,14 +177,8 @@ def _run_sequence(spark, cat: ManifestCatalog, tbl: str, seed: int) -> None:
             oplog.append(f"update_where({sorted(vs)},+{d})")
             assert n == hit, f"seed={seed} ops={oplog}"
         elif op == "optimize":
-            with_meta = rng.random() < 0.5
-            cat.optimize(
-                tbl,
-                cluster_by=["ts"] if rng.random() < 0.5 else None,
-                stats_cols=["ts"] if with_meta else None,
-                bloom_cols=["id"] if with_meta else None,
-            )
-            oplog.append(f"optimize(meta={with_meta})")
+            cat.optimize(tbl)
+            oplog.append("optimize")
         elif op == "vacuum":
             cat.vacuum(tbl, min_age_seconds=0)
             retained = set(cat._versions(tbl)[-1:])
@@ -226,8 +220,8 @@ def test_manifest_crud_fuzz(spark, tmp_path_factory, shard):
 
 # ---------------------------------------------------------------------------
 # Bucketed surface (what the IVF / dedup / text-index stores sit on):
-# append_bucketed / delete_bucketed_where / optimize / vacuum /
-# bucket-pruned reads / time travel, identity-bucketed on cell = id%5.
+# append_bucketed / optimize / vacuum / bucket-pruned reads / time
+# travel, identity-bucketed on cell = id%5.
 # ---------------------------------------------------------------------------
 
 N_BUCKETED_SEQUENCES = int(os.environ.get("SPARK_GRAFT_FUZZ_BSEQS", "40"))
@@ -273,25 +267,12 @@ def _run_bucketed_sequence(spark, cat: ManifestCatalog, tbl: str, seed: int):
     snap()
     for _ in range(rng.randint(2, 5)):
         op = rng.choices(
-            ["append", "delete", "optimize", "vacuum", "timetravel",
-             "bucket_read", "check"],
-            weights=[28, 20, 10, 10, 8, 14, 10],
+            ["append", "optimize", "vacuum", "timetravel", "bucket_read",
+             "check"],
+            weights=[28, 10, 10, 8, 14, 10],
         )[0]
         if op == "append":
             bappend()
-        elif op == "delete":
-            pool = [r[0] for r in model]
-            vals = rng.sample(pool, min(len(pool), rng.randint(1, 3)))
-            vals += [next_id + 500]  # absent key: deletes nothing
-            if rng.random() < 0.4:
-                vals.append(None)  # must be inert (the r05 bug class)
-            rng.shuffle(vals)
-            n = cat.delete_bucketed_where(tbl, "id", vals)
-            vs = {v for v in vals if v is not None}
-            before = len(model)
-            model = [r for r in model if r[0] not in vs]
-            oplog.append(f"bdelete({sorted(vs)},null={None in vals})")
-            assert n == before - len(model), f"seed={seed} ops={oplog}"
         elif op == "optimize":
             cat.optimize(tbl)
             oplog.append("optimize")
@@ -546,8 +527,7 @@ def test_maintenance_race_fuzz(spark, tmp_path_factory, shard):
             stats_cols=["id"], bloom_cols=["id"],
         )
         maint_ops = [
-            rng.choice(["optimize", "optimize_meta", "maybe_optimize",
-                        "vacuum"])
+            rng.choice(["optimize", "maybe_optimize", "vacuum"])
             for _ in range(rng.randint(3, 5))
         ]
         errors: list = []
@@ -572,14 +552,9 @@ def test_maintenance_race_fuzz(spark, tmp_path_factory, shard):
             try:
                 for op in maint_ops:
                     if op == "optimize":
-                        cats[1].optimize(tbl, cluster_by=["id"])
-                    elif op == "optimize_meta":
-                        # recompute stats+blooms for the compacted dir:
-                        # the rewrite must re-derive skipping metadata
-                        # for content that may include a racing commit
-                        cats[1].optimize(
-                            tbl, stats_cols=["id"], bloom_cols=["id"]
-                        )
+                        # the compacted dir re-derives stats+blooms over
+                        # content that may include a racing commit
+                        cats[1].optimize(tbl)
                     elif op == "maybe_optimize":
                         cats[1].maybe_optimize(tbl, max_dirs=1)
                     else:

@@ -129,16 +129,6 @@ ENTRY_POINTS = [
 KEPT = {
     "png_rgb8_blob": "reference encoder that encode_png_rgb8's tests "
     "compare against",
-    "maybe_rebalance": "IVF-PQ store maintenance; folds into the "
-    "key-delete commit (ROADMAP item 2)",
-    "delete_from_ivfpq_store": "IVF-PQ store delete; folds into the "
-    "key-delete commit (ROADMAP item 2)",
-    "delete_from_text_index": "text-index delete; folds into the "
-    "key-delete commit (ROADMAP item 2)",
-    "purge_text_index_tombstones": "text-index maintenance; folds into "
-    "the key-delete commit (ROADMAP item 2)",
-    "maybe_purge_text_index": "text-index maintenance; folds into the "
-    "key-delete commit (ROADMAP item 2)",
 }
 
 
@@ -341,7 +331,7 @@ KEPT_OPTIONS: dict[str, str] = {
     "with the benchmark",
     "foreach_batch_ann_ingest.auto_compact_max_dirs": "the only shipped "
     "path to ManifestCatalog.maybe_optimize/optimize, the compaction "
-    "the key-delete commit (ROADMAP item 2) folds its deletes into",
+    "the key-delete commit (ROADMAP item 3) folds its deletes into",
 }
 
 
@@ -396,7 +386,10 @@ def _calls(trees):
 
 def _sets(call: ast.Call, positional, param, default) -> bool:
     """Whether ``call`` passes ``param`` a value other than its
-    ``default`` (a ``*args`` or ``**kwargs`` splat may pass anything)."""
+    ``default``. A ``*args`` splat may pass anything; a ``**`` splat
+    passes only the keys of a dict literal (``f(**kw)`` forwards what
+    its own caller passed, and that call is checked against the
+    forwarding def's options, not ``f``'s)."""
     same = ast.dump(default)
     for i, arg in enumerate(call.args):
         if isinstance(arg, ast.Starred):
@@ -404,7 +397,14 @@ def _sets(call: ast.Call, positional, param, default) -> bool:
         if i < len(positional) and positional[i] == param:
             return ast.dump(arg) != same
     for kw in call.keywords:
-        if kw.arg is None or (kw.arg == param and ast.dump(kw.value) != same):
+        if kw.arg is None and isinstance(kw.value, ast.Dict):
+            values = (
+                v for k, v in zip(kw.value.keys, kw.value.values)
+                if isinstance(k, ast.Constant) and k.value == param
+            )
+        else:
+            values = [kw.value] if kw.arg == param else []
+        if any(ast.dump(v) != same for v in values):
             return True
     return False
 
@@ -475,3 +475,23 @@ def test_option_set_only_by_a_shipped_non_default_value():
     assert unset("import pyarrow as pa\npa.op(1, unused_opt=2)") == {
         "op.unused_opt"
     }
+
+
+def test_kwargs_splat_sets_only_the_keys_it_holds():
+    """``g(**kw): f(**kw)`` forwards whatever ``g``'s caller passed, so
+    it sets none of ``f``'s options; a dict-literal splat sets the
+    keys it holds."""
+    package = [ast.parse(
+        "def f(x: int = 1):\n    return x\n"
+        "def g(**kw):\n    return f(**kw)\n"
+    )]
+
+    def unset(call):
+        every, used = _options(package=package, entries=[ast.parse(call)], bench=[])
+        return every - used
+
+    assert unset("g()") == {"f.x"}
+    assert unset("g(x=2)") == {"f.x"}
+    assert unset("f(**{'x': 2})") == set()
+    assert unset("f(**{'x': 1})") == {"f.x"}
+    assert unset("f(**{'z': 2})") == {"f.x"}
