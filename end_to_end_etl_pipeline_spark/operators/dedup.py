@@ -13,9 +13,12 @@ n-gram-Jaccard near-dup live in ``operators/text_dedup.py`` (they are
 text-specific); embedding near-dup in ``operators/similarity.py``.
 
 Scale notes: every variant here is one shuffle on the dedup key (the
-theoretical minimum — duplicates must meet somewhere). No collects, no
-driver loops. For skewed keys enable AQE skew handling (session
-default) or salt upstream.
+theoretical minimum — duplicates must meet somewhere). A dedup that
+feeds an SCD2 merge on the same keys runs inside the merge's own
+shuffle instead (``operators/scd.scd2_next_state`` takes the
+keep-policy; :func:`keep_first` is the one reduction both use), so it
+costs no shuffle of its own. No collects, no driver loops. For skewed
+keys enable AQE skew handling (session default) or salt upstream.
 """
 
 from __future__ import annotations
@@ -55,11 +58,18 @@ def dedup_by_key(
     if not aggs:
         return ranked.filter(F.col("__rn") == 1).drop("__rn")
     spine = [c for c in df.columns if c not in keys]
-    won = ranked.groupBy(*keys).agg(
-        F.min_by(F.struct(*spine), F.col("__rn")).alias("__row"),
-        *[F.expr(e).alias(name) for name, e in aggs.items()],
-    )
+    won = ranked.groupBy(*keys).agg(*keep_first(spine, aggs))
     return won.select(*keys, *[F.col(f"__row.{c}").alias(c) for c in spine], *aggs)
+
+
+def keep_first(spine: Sequence[str], aggs: Mapping[str, str] | None) -> list[Column]:
+    """The keep-policy as aggregate columns over rows ranked by
+    ``__rn``: the first row's ``spine`` as the struct ``__row``, then
+    ``aggs``. Shared with ``operators/scd.scd2_next_state``."""
+    return [
+        F.min_by(F.struct(*spine), F.col("__rn")).alias("__row"),
+        *[F.expr(e).alias(name) for name, e in (aggs or {}).items()],
+    ]
 
 
 def dedup_exact_hash(

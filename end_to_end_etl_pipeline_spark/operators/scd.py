@@ -26,9 +26,10 @@ Scale notes. The parquet path rewrites the table per apply — at
 interface kept identical). Key-bucketing the dimension does not help
 at a ~1% restatement rate: nearly every bucket holds a changed key.
 The *plan* itself scales either way: one shuffle on the
-business key (source ⋈ current), map-side hash compare, union of
-disjoint legs, and the duplicate-key guard as a window over that same
-partitioning — no collects, no driver loops, no second pass over the
+business key for the union of the source batch and the current rows,
+one per-key aggregate over that partitioning (the batch's dedup, its
+per-key aggregates, the duplicate-key guard and the hash compare), and
+no join — no collects, no driver loops, no second pass over the
 source (the reference reads the source twice: MERGE + anti-join).
 """
 
@@ -37,12 +38,13 @@ from __future__ import annotations
 import datetime as _dt
 import functools
 import operator
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.errors import PySparkException
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from end_to_end_etl_pipeline_spark.operators.dedup import keep_first
 from end_to_end_etl_pipeline_spark.operators.joins import anti_join
 from end_to_end_etl_pipeline_spark.operators.hashing import with_row_hash
 
@@ -57,8 +59,14 @@ MAX_TS = "2200-12-31 23:59:59"
 _DUP_KEYS = "SCD source batch has duplicate business keys"
 
 
+def _keys_not_null(keys: Sequence[str]) -> Column:
+    return functools.reduce(operator.and_, [F.col(k).isNotNull() for k in keys])
+
+
 def prepare_scd_source(src: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Guard a merge source batch before any SCD apply.
+    """Guard a merge source batch before an SCD1 or SCD3 apply (the
+    SCD2 merge, :func:`scd2_next_state`, applies the same two rules in
+    its own per-key aggregate).
 
     * **Null business keys are dropped.** They can never equi-match a
       target row, so each apply would re-insert them as fresh "current"
@@ -66,22 +74,17 @@ def prepare_scd_source(src: DataFrame, keys: Sequence[str]) -> DataFrame:
       off upstream; no pipeline config lands them in a quarantine
       table yet.
     * **Duplicate business keys fail the apply's write job.** A dup-key
-      batch multiplies the current⟕source join and breaks the
-      one-current-row-per-key invariant — the reference's Delta MERGE
-      raises on multi-match (``utils/scd/scd.py:55``); a silent engine
-      must not do worse. The check rides in the apply's own plan, as
+      batch multiplies the merge's join and breaks the
+      one-row-per-key invariant — the reference's Delta MERGE raises
+      on multi-match (``utils/scd/scd.py:55``); a silent engine must
+      not do worse. The check rides in the apply's own plan, as
       MERGE's does: a per-key ``count(1) OVER (PARTITION BY keys)``
-      whose rows > 1 hit ``raise_error``. The window needs the
-      partitioning the SCD join needs anyway: a source that arrives
-      hash-partitioned on the keys (a spine deduped on them) moves no
-      further, and any other source shuffles once for both. The
-      failing job is the write, so nothing is committed
-      (:class:`SCDEngine` re-raises it as ``ValueError``).
+      whose rows > 1 hit ``raise_error``. The failing job is the
+      write, so nothing is committed (:class:`SCDEngine` re-raises it
+      as ``ValueError``).
     """
     keys = list(keys)
-    src = src.filter(
-        functools.reduce(operator.and_, [F.col(k).isNotNull() for k in keys])
-    )
+    src = src.filter(_keys_not_null(keys))
     n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
     guard = F.when(F.col("__key_rows") > 1, F.raise_error(F.lit(_DUP_KEYS)))
     return (
@@ -110,8 +113,9 @@ class SCDEngine:
         """Commit ``next_state(target)`` — ``target`` is the table at
         the latest version, or None before the first load — and
         recompute on a lost compare-and-swap. A write that fails on the
-        source's duplicate-key guard (:func:`prepare_scd_source`)
-        commits nothing and raises ``ValueError``."""
+        source's duplicate-key guard (:func:`prepare_scd_source`, or
+        the one in :func:`scd2_next_state`) commits nothing and raises
+        ``ValueError``."""
         cat = self.catalog
         while True:
             manifest = cat.latest_manifest(table)
@@ -152,13 +156,19 @@ class SCDEngine:
         keys: Sequence[str],
         tracked: Sequence[str],
         as_of: _dt.datetime | str | None = None,
+        order_by: Sequence[Column | str] | None = None,
+        aggs: Mapping[str, str] | None = None,
+        drop: Sequence[str] = (),
     ) -> None:
         """K5+K2+J2 — expire changed current rows, insert new versions,
-        as one atomic publish (merge logic: :func:`scd2_next_state`)."""
-        source = prepare_scd_source(source, keys)
+        as one atomic publish (merge logic: :func:`scd2_next_state`,
+        which also runs the source's dedup keep-policy ``order_by`` /
+        ``aggs`` / ``drop`` in its own shuffle)."""
         self._publish(
             table,
-            lambda target: scd2_next_state(target, source, keys, tracked, as_of),
+            lambda target: scd2_next_state(
+                target, source, keys, tracked, as_of, order_by, aggs, drop
+            ),
         )
 
     # -- type 3 ---------------------------------------------------------
@@ -223,10 +233,13 @@ def scd2_next_state(
     keys: Sequence[str],
     tracked: Sequence[str],
     as_of: _dt.datetime | str | None = None,
+    order_by: Sequence[Column | str] | None = None,
+    aggs: Mapping[str, str] | None = None,
+    drop: Sequence[str] = (),
 ) -> DataFrame:
     """Pure SCD2 merge: given the current versioned table state (or
-    ``None`` on first load) and a key-unique source batch, return the
-    complete next state as one DataFrame plan.
+    ``None`` on first load) and a source batch, return the complete
+    next state as one DataFrame plan.
 
     Next state = history (non-current, untouched)
                ∪ current-unchanged (source hash equal, or key absent
@@ -234,93 +247,102 @@ def scd2_next_state(
                ∪ current-expired   (source hash differs → close out)
                ∪ new-versions      (new key, or changed hash)
 
-    Being a pure ``DataFrame → DataFrame`` function (no storage), this
-    is directly testable under the DuckDB oracle and bindable to any
-    catalog/commit strategy. One shuffle on the business key for each
-    join leg; the reference instead runs MERGE-expire + anti-join +
-    append as separate passes (``medallion/silver/b2s_yfinance.py:140-186``).
+    The source is reduced to one row per key inside the merge, by
+    ``operators/dedup.dedup_by_key``'s keep-policy: the first row under
+    ``order_by``, minus the ``drop`` columns only ``order_by`` reads,
+    plus ``aggs`` (name → SQL aggregate) over all the key's rows.
+    NULL-key rows are dropped; with no ``order_by``, a key with more
+    than one row fails the plan on ``raise_error`` (``_DUP_KEYS``).
+
+    Plan: one shuffle on the business key for the union of the source
+    rows and the current rows, a per-key aggregate, and one explode;
+    no join, no second pass over the source (the reference runs
+    MERGE-expire + anti-join + append as separate passes,
+    ``medallion/silver/b2s_yfinance.py:140-186``).
     """
     keys = list(keys)
-    as_of_ts = _as_ts(as_of)
-    src = with_row_hash(source, tracked).select(
-        *keys, *[c for c in source.columns if c not in keys], "row_hash"
+    aggs = aggs or {}
+    as_of_ts = F.lit(_as_ts(as_of)).cast("timestamp")
+    spine = [c for c in source.columns if c not in keys and c not in drop]
+    rows = source.filter(_keys_not_null(keys)).withColumn("__side", F.lit(0))
+    if target is not None:
+        history = target.filter(~F.col("is_current"))
+        cur_rows = target.filter(F.col("is_current")).select(
+            *keys,
+            F.lit(1).alias("__side"),
+            F.struct(*target.columns).alias("__cur"),
+        )
+        rows = rows.unionByName(cur_rows, allowMissingColumns=True)
+
+    # the window's partitioning on the keys is the one shuffle (none
+    # when both sides arrive partitioned on them); the source rows
+    # (side 0) rank ahead of the current row (side 1). Without a
+    # keep-policy every source row ranks first, so the guard counts
+    # them all
+    side = F.col("__side")
+    w = Window.partitionBy(*keys).orderBy(side, *(order_by or ()))
+    rank = F.row_number() if order_by else F.rank()
+    ranked = rows.withColumn("__rn", rank.over(w))
+    # the aggs see batch rows only: the source side's reduction
+    # is its own (keys, side) group, read by the (keys) group above it
+    reduced = F.struct(
+        *keep_first(spine, aggs), F.count_if(F.col("__rn") == 1).alias("__n")
     )
-    stamped_new = (
-        src.withColumn("effective_from", F.lit(as_of_ts).cast("timestamp"))
+    by_side = [F.when(side == 0, reduced).alias("__src")]
+    by_key = [F.min_by("__src", side).alias("__src")]
+    if target is not None:
+        by_side.append(F.min_by("__cur", "__rn").alias("__cur"))
+        by_key.append(F.max_by("__cur", side).alias("__cur"))
+    per_key = (
+        ranked.groupBy(*keys, "__side").agg(*by_side).groupBy(*keys).agg(*by_key)
+    )
+    guard = F.when(F.col("__src.__n") > 1, F.raise_error(F.lit(_DUP_KEYS)))
+    new = with_row_hash(
+        per_key.filter(guard.otherwise(F.lit(True))).select(
+            *keys,
+            *[F.col("__src.__row")[c].alias(c) for c in spine],
+            *[F.col("__src")[a].alias(a) for a in aggs],
+            *(["__cur"] if target is not None else []),
+            F.col("__src.__n").isNotNull().alias("__has_src"),
+        ),
+        tracked,
+    )
+    new = (
+        new.withColumn("effective_from", as_of_ts)
         .withColumn("effective_to", F.lit(MAX_TS).cast("timestamp"))
         .withColumn("is_current", F.lit(True))
     )
     if target is None:
-        return stamped_new
+        return new.drop("__has_src")
 
-    history = target.filter(~F.col("is_current"))
-    current = target.filter(F.col("is_current"))
-
-    # ONE full-outer join of current ⟷ source on the business key
-    # (r12): the previous form ran two left joins (current→source and
-    # source→current) and unioned four filtered branches — Spark could
-    # not prove the slightly-differently-projected subtrees identical,
-    # so every upstream scan/aggregation was recomputed once per
-    # branch (the scd2_transition plan scanned orders SIX times).
-    # Here each matched/unmatched row emits its 1-2 output rows
-    # (carried-or-expired current version, and/or the new version)
-    # from a single array-of-structs explode; both whens live inside
-    # ONE expression, the safe Spark-4.1 codegen dedup pattern.
-    # Output rows are value-identical to the four-branch form
-    # (tests/test_scd.py pins the semantics; every SCD consumer is
-    # oracle-verified).
-    cols = list(current.columns)
-    cur_p = current.select(
-        *keys, F.struct(*[F.col(c) for c in cols]).alias("__cur")
-    )
-    src_p = stamped_new.select(
-        *keys, F.struct(*[F.col(c) for c in cols]).alias("__new")
-    )
-    j = cur_p.join(src_p, keys, "full")
-    cur_f, new_f = F.col("__cur"), F.col("__new")
+    cur_f, has_src = F.col("__cur"), F.col("__has_src")
     # Precondition (ADVICE r12): row_hash is NON-NULL by construction
     # on both sides — sha2(concat_ws(...coalesce...)) from
     # hashing.row_hash_col never yields null (the source side is
-    # stamped above; the target side was written by this same
+    # hashed above; the target side was written by this same
     # machinery). A null row_hash would make `changed` null → treated
-    # as unchanged (current row passes through, new row suppressed),
-    # which differs from the pre-r12 four-branch form (both branches
-    # dropped such a row) — unreachable today, documented so a future
-    # hand-built target doesn't quietly pick one behavior.
+    # as unchanged (current row passes through, new row suppressed) —
+    # unreachable today, documented so a future hand-built target
+    # doesn't quietly pick one behavior.
     changed = (
-        cur_f.isNotNull()
-        & new_f.isNotNull()
-        & (cur_f["row_hash"] != new_f["row_hash"])
+        cur_f.isNotNull() & has_src & (cur_f["row_hash"] != F.col("row_hash"))
     )
-
-    def _cur_out() -> F.Column:
-        # the current version, expired in place when the source hash
-        # differs (unchanged rows — including keys absent from the
-        # source — pass through untouched)
-        fields = []
-        for c in cols:
-            if c == "effective_to":
-                fields.append(
-                    F.when(changed, F.lit(as_of_ts).cast("timestamp"))
-                    .otherwise(cur_f[c]).alias(c)
-                )
-            elif c == "is_current":
-                fields.append(
-                    F.when(changed, F.lit(False)).otherwise(cur_f[c]).alias(c)
-                )
-            else:
-                fields.append(cur_f[c].alias(c))
-        return F.when(cur_f.isNotNull(), F.struct(*fields))
-
+    # the current version (NULL for a new key), expired in place when
+    # the source hash differs; unchanged rows, including keys absent
+    # from the source, pass through untouched
+    cur_out = cur_f.withField(
+        "effective_to", F.when(changed, as_of_ts).otherwise(cur_f["effective_to"])
+    ).withField(
+        "is_current", F.when(changed, F.lit(False)).otherwise(cur_f["is_current"])
+    )
     new_out = F.when(
-        new_f.isNotNull() & (cur_f.isNull() | changed),
-        F.struct(*[new_f[c].alias(c) for c in cols]),
+        has_src & (cur_f.isNull() | changed), F.struct(*target.columns)
     )
-    merged = j.select(
+    # both whens live inside ONE expression, the safe Spark-4.1
+    # codegen dedup pattern
+    merged = new.select(
         F.explode(
-            F.filter(
-                F.array(_cur_out(), new_out), lambda x: x.isNotNull()
-            )
+            F.filter(F.array(cur_out, new_out), lambda x: x.isNotNull())
         ).alias("__r")
     ).select("__r.*")
     return history.unionByName(merged)

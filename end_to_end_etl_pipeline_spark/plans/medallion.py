@@ -15,7 +15,10 @@ Layer semantics (same as the reference, defects fixed):
 * **silver** — DQ gates (not-null keys, column-scoped bounds),
   cleaning exprs, deterministic dedup + its per-key aggregates in one
   shuffle, cross-table feature aggregation + left join
-  (company_master pattern), or SCD2 hash-diff merge.
+  (company_master pattern), or SCD2 hash-diff merge. A dedup on the
+  SCD2 business keys with nothing between it and the merge runs
+  inside the merge's own shuffle (the merge takes its keep-policy),
+  so dedup + merge cost one shuffle together.
 * **gold** — promote (strip technical cols), dimension (current
   snapshot), fact (derived KPIs incl. lag-window growth), partitioned
   + clustered publication.
@@ -154,12 +157,20 @@ class MedallionPipeline:
         if derive:
             df = derive_columns(df, derive)
 
-        dedup = spec.get("dedup")
+        dedup, scd = spec.get("dedup"), spec.get("scd")
+        order = aggs = None
         if dedup:
             order = [_order_expr(e) for e in dedup.get("order_by", [])] or None
-            df = dedup_by_key(
-                df, dedup["keys"], order_by=order, aggs=dedup.get("aggs")
-            )
+            aggs = dedup.get("aggs")
+            # a keep-policy on the SCD2 keys that no step separates from
+            # the merge runs in the merge's own shuffle
+            if not (
+                order and scd and scd.get("type", 2) == 2
+                and set(dedup["keys"]) == set(scd["business_keys"])
+                and not spec.get("filter") and not spec.get("feature_joins")
+            ):
+                df = dedup_by_key(df, dedup["keys"], order_by=order, aggs=aggs)
+                order = aggs = None
 
         post_filter = spec.get("filter")
         if post_filter:
@@ -173,7 +184,6 @@ class MedallionPipeline:
             agg_df = self._feature_agg(feat).hint("merge")
             df = equi_join(df, agg_df, on=feat["on"], how=feat.get("how", "left"))
 
-        scd = spec.get("scd")
         if scd:
             # every configured SCD type must dispatch to its engine —
             # falling through to a full overwrite would DELETE target
@@ -184,6 +194,7 @@ class MedallionPipeline:
                 self.scd.apply_scd2(
                     df, spec["table"], keys=keys,
                     tracked=scd["tracked_columns"], as_of=scd.get("as_of"),
+                    order_by=order, aggs=aggs,
                 )
             elif scd_type == 1:
                 self.scd.apply_scd1(df, spec["table"], keys=keys)

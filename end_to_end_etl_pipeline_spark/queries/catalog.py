@@ -98,33 +98,16 @@ TABLE_SCHEMAS: dict[str, str] = {
         "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
     ),
     "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, "
+        "value DOUBLE, props STRING"
+    ),
 }
-
-#: tables whose timestamp precision varies by file generation, so the
-#: read must look at the footer types (see ``load``)
-NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     path = f"{sf_dir.rstrip('/')}/{table}.parquet"
-    nanos_cols = NANOS_TS_COLS.get(table)
-    if not nanos_cols:
-        return spark.read.schema(TABLE_SCHEMAS[table]).parquet(path)
-    # Nanosecond-precision parquet timestamps are illegal for Spark's
-    # vectorized reader; read them as raw int64 nanos and truncate to
-    # microsecond timestamps (exactly what DuckDB/Arrow consumers do).
-    # Integer `div` — double division would lose precision at 1e18 ns.
-    # Files written with us-precision timestamps read as timestamps
-    # directly, so only convert columns that actually come back int64.
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in nanos_cols:
-        if isinstance(df.schema[c].dataType, LongType):
-            df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
-    return df
+    return spark.read.schema(TABLE_SCHEMAS[table]).parquet(path)
 
 
 def scratch_root(tag: str) -> str:

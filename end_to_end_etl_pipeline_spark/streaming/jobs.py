@@ -252,7 +252,6 @@ def foreach_batch_scd2(
 
     Runs with ``availableNow``; returns the started ``StreamingQuery``
     (caller awaits)."""
-    from end_to_end_etl_pipeline_spark.operators.dedup import dedup_by_key
     from end_to_end_etl_pipeline_spark.operators.scd import SCDEngine
 
     engine = SCDEngine(catalog)
@@ -266,14 +265,12 @@ def foreach_batch_scd2(
         # break on the tracked column VALUES (the partition keys are
         # constant within a window partition, so they can't break a
         # tie) — same batch content always picks the same winner,
-        # which the replay-convergence contract above depends on
-        latest = dedup_by_key(
-            batch_df,
-            keys,
-            order_by=[F.col(as_of_col).desc(), *[F.col(c) for c in tracked]],
-        )
+        # which the replay-convergence contract above depends on. The
+        # merge runs this dedup in its own shuffle
         engine.apply_scd2(
-            latest.drop(as_of_col), table, keys, tracked, as_of=as_of
+            batch_df, table, keys, tracked, as_of=as_of,
+            order_by=[F.col(as_of_col).desc(), *[F.col(c) for c in tracked]],
+            drop=[as_of_col],
         )
 
     return _start_available_now(stream_df, _apply, checkpoint_dir)

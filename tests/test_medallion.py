@@ -234,7 +234,8 @@ def test_manifest_batch_stage_budget(spark, tmp_path, fixture_dirs, run_counted)
     ``replace_atomic`` commit, so its manifest records its schema and
     ``cat.read`` launches no job: the batch's stages are its writes and
     the shuffles inside them. The SCD2 duplicate-key check runs inside
-    the SCD2 write, and the feature join is a shuffle join, not a
+    the SCD2 write, which shuffles the batch and the current target
+    once, together, and the feature join is a shuffle join, not a
     broadcast job of its own."""
     cat = ManifestCatalog(spark, f"file://{tmp_path}/lake")
     pipe = MedallionPipeline(spark, str(tmp_path / "lake"), catalog=cat)
@@ -242,8 +243,9 @@ def test_manifest_batch_stage_budget(spark, tmp_path, fixture_dirs, run_counted)
     _write_second_batch(fixture_dirs)
     cfg = _config(fixture_dirs, "2026-02-01 00:00:00")
     _, _, stages = run_counted(lambda: pipe.run(cfg))
-    # 30 when every catalog read inferred its schema from parquet footers
-    assert stages == 13
+    # 30 when every catalog read inferred its schema from parquet
+    # footers; 13 while the SCD2 merge shuffled source and target apart
+    assert stages == 12
 
     tables = [spec["table"] for layer in cfg.values() for spec in layer]
     for t in tables:
@@ -285,11 +287,12 @@ def test_flagship_bronze_keeps_footer_types(spark, tmp_path, sf_smoke_dir):
 def test_flagship_restatement_stage_budget(spark, tmp_path, sf_smoke_dir, run_counted):
     """Pinned per-layer stage budget of one restatement batch through
     the flagship config: bronze is its write (no footer-inference
-    job); silver is the ``orders_q`` write plus the SCD2 write's three
-    stages: the source map (one shuffle for the spine dedup, its
-    per-key aggregates and the duplicate-key window; no feature
-    join), the current-target map, and the merge (no uniqueness job,
-    no broadcast); gold is its window shuffle and write."""
+    job); silver is the ``orders_q`` write plus the SCD2 write's two
+    stages: one map over the batch rows and the current target rows
+    (one shuffle for the spine dedup, its per-key aggregates, the
+    duplicate-key guard and the merge; no join), and the merge (no
+    uniqueness job, no broadcast); gold is its window shuffle and
+    write."""
     pipe = MedallionPipeline(spark, str(tmp_path / "lake"))
     pipe.run(_pipeline_config(sf_smoke_dir))
     cfg = _pipeline_config(_restatement_batch(spark, sf_smoke_dir, tmp_path / "b1"))
@@ -304,7 +307,7 @@ def test_flagship_restatement_stage_budget(spark, tmp_path, sf_smoke_dir, run_co
         _, _, stages[layer] = run_counted(
             lambda: [build(spec) for spec in cfg[layer]]
         )
-    assert stages == {"bronze": 1, "silver": 4, "gold": 2}
+    assert stages == {"bronze": 1, "silver": 3, "gold": 2}
     # the batch restated something: the SCD2 merge expired rows
     assert pipe.catalog.read("silver.cust_quarter").filter(~F.col("is_current")).count()
 

@@ -488,13 +488,14 @@ def test_scd2_write_is_the_only_job_and_broadcasts_nothing(
     spark, tmp_path, sf_smoke_dir, run_counted, monkeypatch
 ):
     """The flagship's ``silver.cust_quarter`` SCD2 build runs no job
-    before its write: the duplicate-key check is a window inside the
-    write plan, not an aggregate job over the source. The spine dedup
-    and its per-key aggregates share one shuffle, so the write plan
-    hash-partitions exactly twice (the source on its keys, the current
-    target) and joins once (the SCD2 full outer join): no feature
-    self-join, and no BroadcastExchange (a broadcast runs its side as a
-    job of its own)."""
+    before its write: the duplicate-key check is a ``raise_error``
+    inside the write plan, not an aggregate job over the source. The
+    spine dedup, its per-key aggregates and the SCD2 merge share one
+    shuffle, so the write plan hash-partitions exactly once (the union
+    of the batch and the current target, on the keys) and joins
+    nothing: no full outer join, no feature self-join, and no
+    BroadcastExchange (a broadcast runs its side as a job of its
+    own)."""
     from end_to_end_etl_pipeline_spark.plans.medallion import MedallionPipeline
     from end_to_end_etl_pipeline_spark.queries.medallion_queries import (
         _pipeline_config,
@@ -521,7 +522,7 @@ def test_scd2_write_is_the_only_job_and_broadcasts_nothing(
     assert "BroadcastExchange" not in write["plan"]
     shuffles = re.findall(r"^Arguments: hashpartitioning\(", write["plan"], re.M)
     joins = re.findall(r"^\(\d+\) \w*Join\b", write["plan"], re.M)
-    assert (len(shuffles), len(joins)) == (2, 1), write["plan"]
+    assert (len(shuffles), len(joins)) == (1, 0), write["plan"]
 
 
 def test_gopher_filter_single_pass_no_shuffle(spark):

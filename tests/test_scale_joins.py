@@ -77,20 +77,24 @@ def test_aqe_splits_skewed_join_partitions(spark):
         # default AQE treats as disqualifying; allow it (the split's
         # win on the hot partition dwarfs the extra small exchange)
         "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
+        # pinned, not the session's one-per-core: skew is judged against
+        # the median partition, and at two partitions the hot one IS the
+        # median
+        "spark.sql.shuffle.partitions": "8",
     }
     old = {k: spark.conf.get(k, None) for k in confs}
     try:
         for k, v in confs.items():
             spark.conf.set(k, v)
         # 200k rows on ONE key vs 2k spread keys: one hot partition
-        fact = spark.range(202_000).select(
+        fact = spark.range(0, 202_000, numPartitions=8).select(
             F.when(F.col("id") < 200_000, F.lit(7))
             .otherwise(F.col("id") % 1000)
             .cast("long")
             .alias("k"),
             F.sha2(F.col("id").cast("string"), 256).alias("payload"),
         )
-        dim = spark.range(1000).select(
+        dim = spark.range(0, 1000, numPartitions=8).select(
             F.col("id").alias("k"), F.col("id").alias("attr")
         )
         # aggregate over payload so column pruning can't drop it: the

@@ -18,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from end_to_end_etl_pipeline_spark.operators.hashing import row_hash_col
-from end_to_end_etl_pipeline_spark.operators.scd import SCDEngine, current_snapshot
+from end_to_end_etl_pipeline_spark.operators.scd import MAX_TS, SCDEngine, current_snapshot
 from end_to_end_etl_pipeline_spark.sinks.manifest import ManifestCatalog
 
 SCHEMA = "company_number string, name string, status string, market_cap long"
@@ -278,3 +278,144 @@ def test_scd2_close_keys_contract(spark):
     # replay converges: closing again changes nothing
     s4 = scd2_close_keys(s3, del_keys, ["k"], "2026-04-01 00:00:00")
     assert sorted(map(tuple, s4.collect())) == sorted(map(tuple, s3.collect()))
+
+
+# -- the batch's dedup inside the SCD2 merge ---------------------------
+
+_ROW = "k int, v string, o int, w int"
+_AGGS = {"n": "count(1)", "tot": "sum(w)"}
+_T = ["2026-01-01 00:00:00", "2026-02-01 00:00:00", "2026-03-01 00:00:00"]
+
+
+def _order(desc=True):
+    """The keep-policy: the latest ``o`` wins (or the earliest, whose
+    ascending order sorts the current rows' NULL ``o`` first)."""
+    return [F.col("o").desc() if desc else F.col("o").asc()]
+
+
+# hand-written cases (key: rows), per batch, named for the latest-``o``
+# keep-policy; ties on ``o`` are identical rows, so every run of a
+# keep-policy keeps the same values
+_CASES = [
+    {1: [("a", 1, 1), ("b", 2, 2)],               # several rows
+     2: [(None, 1, 5)],                           # NULL tracked value
+     3: [("c", 3, 1), ("c", 3, 1), ("z", 1, 9)],  # tie at the top
+     4: [("d", 1, 1)]},
+    {1: [("b", 5, 0), ("q", 1, 0)],               # unchanged (b, 2 rows)
+     2: [("x", 1, 1)],                            # NULL → x
+     4: [("d", 1, 1), ("d", 0, 1)],               # n 1 → 2; 3 absent
+     5: [(None, 2, 3)],                           # new key
+     None: [("n", 1, 1)]},                        # NULL key: dropped
+    {1: [("b", 1, 0), ("b", 1, 0)],               # unchanged again
+     2: [(None, 7, 1), ("y", 6, 1)],              # x → NULL
+     5: [(None, 1, 3)],                           # unchanged NULL
+     6: [("e", 9, 1), ("f", 2, 2), ("g", 2, 3)]}, # tie below the winner
+]
+
+
+def _seeded_batches(seed=7, keys=range(100, 115)):
+    """Three random batches over ``keys``: 1-4 rows a key, ``o`` in
+    0..3; ``v`` and ``w`` are drawn per (batch, key, o), so a tie on
+    ``o`` is a tie of identical rows."""
+    import random
+
+    rng = random.Random(seed)
+    out = []
+    for b in range(3):
+        batch = {}
+        for k in keys:
+            if rng.random() < 0.3:
+                continue  # absent from this batch
+            rows = []
+            for _ in range(rng.randint(1, 4)):
+                o = rng.randint(0, 3)
+                r = random.Random(f"{seed}/{b}/{k}/{o}")
+                rows.append((r.choice(["p", "q", None]), o, r.randint(0, 2)))
+            batch[k] = rows
+        out.append(batch)
+    return out
+
+
+def _model_next(state, batch, t, desc):
+    """The SCD2 next state of a plain-Python model: ``state`` rows are
+    dicts; each key keeps its max-``o`` row (min-``o`` unless
+    ``desc``), with ``n``/``tot`` over all its rows, and a version
+    changes when ``(v, n)`` does."""
+    reduced = {}
+    for k, rows in batch.items():
+        if k is None:
+            continue
+        v, o, w = (max if desc else min)(rows, key=lambda r: r[1])
+        reduced[k] = dict(k=k, v=v, o=o, w=w, n=len(rows), tot=sum(r[2] for r in rows))
+    out, seen = [], set()
+    for row in state:
+        new = reduced.get(row["k"]) if row["is_current"] else None
+        if row["is_current"]:
+            seen.add(row["k"])
+        if new is not None and (new["v"], new["n"]) != (row["v"], row["n"]):
+            out.append({**row, "effective_to": t, "is_current": False})
+            out.append({**new, "effective_from": t, "effective_to": MAX_TS, "is_current": True})
+        else:
+            out.append(row)
+    for k, new in reduced.items():
+        if k not in seen:
+            out.append({**new, "effective_from": t, "effective_to": MAX_TS, "is_current": True})
+    return out
+
+
+def _rows(state):
+    cols = ["k", "v", "o", "w", "n", "tot", "effective_from", "effective_to", "is_current"]
+    if isinstance(state, list):
+        got = [tuple(str(r[c]) for c in cols) for r in state]
+    else:
+        got = [tuple(str(r[c]) for c in cols) for r in state.collect()]
+    return sorted(got)
+
+
+@pytest.mark.parametrize("desc", [True, False])
+def test_scd2_reduce_in_merge_matches_dedup_then_merge_and_model(spark, desc):
+    """Fixed-seed differential over three batches: the SCD2 merge that
+    runs the batch's dedup keep-policy in its own shuffle equals
+    ``dedup_by_key`` followed by the merge, and both equal a
+    plain-Python model of the SCD2 state. Covered: several rows a key
+    (ties on ``o`` included), changed, unchanged, new and absent keys,
+    a NULL tracked value and a NULL key."""
+    from end_to_end_etl_pipeline_spark.operators.dedup import dedup_by_key
+    from end_to_end_etl_pipeline_spark.operators.scd import scd2_next_state
+
+    seeded = _seeded_batches()
+    batches = [{**case, **rand} for case, rand in zip(_CASES, seeded)]
+    keys, tracked = ["k"], ["v", "n"]
+    in_merge = two_step = None
+    model = []
+    for batch, t in zip(batches, _T):
+        df = spark.createDataFrame(
+            [(k, *r) for k, rows in batch.items() for r in rows], _ROW
+        )
+        in_merge = scd2_next_state(
+            in_merge, df, keys, tracked, t, order_by=_order(desc), aggs=_AGGS
+        ).localCheckpoint()
+        deduped = dedup_by_key(df, keys, order_by=_order(desc), aggs=_AGGS)
+        two_step = scd2_next_state(two_step, deduped, keys, tracked, t).localCheckpoint()
+        model = _model_next(model, batch, t, desc)
+        assert _rows(in_merge) == _rows(two_step), t
+        assert _rows(in_merge) == _rows(model), t
+    hashes = {(r.k, str(r.effective_from)): r.row_hash for r in two_step.collect()}
+    assert {(r.k, str(r.effective_from)): r.row_hash for r in in_merge.collect()} == hashes
+    # the chain reached every case at least once
+    assert {r["is_current"] for r in model} == {True, False}
+
+
+def test_scd2_keep_policy_commits_a_duplicate_key_batch(spark, catalog):
+    """The same duplicate-key batch raises ``ValueError`` and commits
+    nothing without a keep-policy, and commits its kept rows with
+    one."""
+    eng = SCDEngine(catalog)
+    dup = spark.createDataFrame([(1, "a", 1, 0), (1, "b", 2, 0), (2, "c", 1, 0)], _ROW)
+    with pytest.raises(ValueError, match="duplicate business keys"):
+        eng.apply_scd2(dup, "silver.d", ["k"], ["v"], _T[0])
+    assert catalog.latest_manifest("silver.d") is None
+    eng.apply_scd2(dup, "silver.d", ["k"], ["v"], _T[0], order_by=_order(), drop=["o"])
+    out = catalog.read("silver.d")
+    assert "o" not in out.columns
+    assert sorted((r.k, r.v) for r in out.collect()) == [(1, "b"), (2, "c")]

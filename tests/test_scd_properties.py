@@ -36,19 +36,20 @@ def test_scd2_invariants_over_batch_chains(spark, batches):
         state = scd2_next_state(state, _df(spark, batch), ["k"], ["x", "y"], t)
     if state is None:
         return
-    rows = state.collect()
-
-    # exactly one current row per key
-    cur = [r for r in rows if r.is_current]
-    assert len({r.k for r in cur}) == len(cur)
-    assert all(str(r.effective_to) == MAX_TS for r in cur)
-
     # current value = the LAST batch that contained the key
     expect = {}
     for batch in batches:
         for k, v in batch.items():
             expect[k] = v
-    assert {r.k: (r.x, r.y) for r in cur} == expect
+    _check_chain(state.collect(), expect, lambda r: (r.x, r.y))
+
+
+def _check_chain(rows, expect, value):
+    # exactly one current row per key
+    cur = [r for r in rows if r.is_current]
+    assert len({r.k for r in cur}) == len(cur)
+    assert all(str(r.effective_to) == MAX_TS for r in cur)
+    assert {r.k: value(r) for r in cur} == expect
 
     # validity windows per key: contiguous, non-overlapping, ordered
     by_key = {}
@@ -60,6 +61,44 @@ def test_scd2_invariants_over_batch_chains(spark, batches):
             assert str(a.effective_to) <= str(b.effective_from)
             assert not a.is_current  # only the newest version is current
         assert versions[-1].is_current
+
+
+#: several rows a key; a row's position is its ``o``, so the last wins
+MULTI_BATCH = st.dictionaries(
+    st.integers(1, 6), st.lists(st.tuples(VALUES, VALUES), min_size=1, max_size=3),
+    max_size=6,
+)
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@pytest.mark.full_suite  # fuzz/sweep tier (r13, VERDICT r12 #1)
+@given(batches=st.tuples(MULTI_BATCH, MULTI_BATCH, MULTI_BATCH))
+def test_scd2_keep_policy_invariants_over_multi_row_batch_chains(spark, batches):
+    """The same invariants with the batch's dedup inside the merge:
+    the keep-policy keeps each key's last row, and the tracked ``n``
+    (a per-key aggregate) counts the batch's rows of the key."""
+    state = None
+    for batch, t in zip(batches, T):
+        if not batch:
+            continue
+        rows = [(k, x, y, o) for k, vs in sorted(batch.items()) for o, (x, y) in enumerate(vs)]
+        df = spark.createDataFrame(rows, "k int, x string, y string, o int")
+        state = scd2_next_state(
+            state, df, ["k"], ["x", "y", "n"], t,
+            order_by=[F.col("o").desc()], aggs={"n": "count(1)"}, drop=["o"],
+        )
+    if state is None:
+        return
+    expect = {}
+    for batch in batches:
+        for k, vs in batch.items():
+            expect[k] = (*vs[-1], len(vs))
+    assert "o" not in state.columns
+    _check_chain(state.collect(), expect, lambda r: (r.x, r.y, r.n))
 
 
 @settings(
